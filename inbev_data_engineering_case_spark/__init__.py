@@ -10,7 +10,10 @@ declarative DataFrame plans that Catalyst/Tungsten optimize — and extends it
 with the operators a large-scale (100 TB design point) training-data pipeline
 needs: joins, window functions, event-time windowing, deduplication
 (exact/MinHash-LSH/SimHash/n-gram-Jaccard), embedding similarity search,
-text analysis, and multimodal-column plumbing.
+text analysis, and multimodal-column plumbing (binary payload columns with
+a text stand-in featurizer, byte-chunk frame sampling, perceptual image
+near-dup, and opt-in stdlib decoders for the lossless image, Y4M, WAV
+and FLAC formats; lossy and codec-bound payloads dead-letter).
 
 Modules
 -------
@@ -20,7 +23,6 @@ Modules
 - ``operators``   The operator library: normalize, aggregate, joins, windows,
                   dedup, similarity, textops, multimodal.
 - ``functions``   Reusable Column expression helpers (portable hash, vector ops).
-- ``plans``       Plan-inspection utilities (pushdown/broadcast assertions).
 - ``streaming``   Structured Streaming variants of the event-window operators.
 - ``layers``      Medallion sinks + snapshot catalog (latest/_SUCCESS resolver).
 - ``pipeline``    Plain-Python stage driver replacing the reference's Airflow DAGs.

@@ -706,7 +706,6 @@ def dedup_components_with_stats(
     max_iter: int = 25,
     reliable_checkpoint: bool | None = None,
     require_convergence: bool = False,
-    broadcast_node_limit: int = COMPONENTS_BROADCAST_NODE_LIMIT,
 ) -> tuple[DataFrame, int]:
     """Connected components of the near-dup pair graph → ((node, comp),
     rounds_run) with comp = min node id reachable.
@@ -832,7 +831,7 @@ def dedup_components_with_stats(
     # count is EXACT (measured by the init aggregate), so the gate is
     # data-adaptive: a billion-node production graph keeps the shuffle
     # joins untouched.
-    small = n_nodes is not None and n_nodes <= broadcast_node_limit
+    small = n_nodes is not None and n_nodes <= COMPONENTS_BROADCAST_NODE_LIMIT
 
     def maybe_broadcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df

@@ -240,7 +240,6 @@ def multi_source_bfs(
     dst_col: str = "dst",
     directed: bool = False,
     reliable_checkpoint: bool | None = None,
-    broadcast_node_limit: int | None = None,
 ) -> DataFrame:
     """Level-synchronous multi-source BFS → ``(node, dist)`` for every
     node within ``max_hops`` of ANY seed (``dist`` = hops to the
@@ -315,13 +314,10 @@ def multi_source_bfs(
         COMPONENTS_BROADCAST_NODE_LIMIT,
     )
 
-    if broadcast_node_limit is None:
-        broadcast_node_limit = COMPONENTS_BROADCAST_NODE_LIMIT
-
     def maybe_broadcast(df: DataFrame, n: int | None) -> DataFrame:
         return (
             F.broadcast(df)
-            if n is not None and n <= broadcast_node_limit
+            if n is not None and n <= COMPONENTS_BROADCAST_NODE_LIMIT
             else df
         )
 

@@ -1,43 +1,39 @@
-"""Multimodal-column plumbing: images/audio/video as opaque ``binary``
-columns with typed metadata, processed through Arrow-batched ``mapInPandas``.
+"""Multimodal columns: media payloads as opaque ``binary`` columns with a
+typed metadata struct, processed through Arrow-batched ``mapInPandas``.
 
-The Spark-side machinery here is real and tested — schema, partitioning,
-UDF signature, batch shape. Decoding is REAL for every format the stdlib
-can express: WAV (one native RIFF parse — integer/float PCM incl. the
-extensible container, G.711 A-law/µ-law via formula-generated
-companding tables), FLAC (``operators/flac.py`` — native
-RFC 9639: fixed/LPC prediction, Rice partitions, stereo
-decorrelation, CRC + MD5 verification), BMP/binary-PNM (``struct``+numpy), PNG
-(``zlib`` inflate + scanline unfiltering), GIF (87a/89a LZW + interlace),
-baseline-sequential AND progressive JPEG (native huffman+IDCT decoder,
-``_jpeg_decode`` — SOF0/SOF1/SOF2, together the overwhelming majority
-of any web image crawl), lossless WebP
-(``webp.vp8l_decode`` — full RFC 9649 VP8L: transforms, color cache,
-meta groups, LZ77), Y4M video
-(header+frame demux), and Motion-JPEG AVI (native RIFF demux + the
-native JPEG decoder — real COMPRESSED video content on a bare
-cluster); lossy WebP VP8 and VP8X stills decode through
-the system libwebp when the ctypes probe resolves it
-(``operators/libwebp.py``). Remaining codec-bound formats
-(arithmetic/lossless JPEG, H.264/VP9 containers; animated WebP
-decodes frame 1 natively) raise
-a clearly-marked ``NotImplementedError`` from the inner decoders —
-they need PIL/ffmpeg; swapping one in changes only
-the inner function. At the OPERATOR level decode errors are
-dead-lettered, not raised (``decode_ok``/``error`` columns; opt back
-into raising with ``strict=True``): one corrupt or codec-bound asset in
-a 100 TB corpus must flag its row, not kill the job. The distributed
-plumbing is already the production shape:
+The surface the catalog and the curation gate use:
 
-- **Arrow batches, not rows**: ``mapInPandas`` streams pandas DataFrames of
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; payload bytes move
-  driver-free from the JVM columnar buffers into Python once per batch.
-- **Partition sizing**: media payloads are large — callers should
-  ``repartition`` so a partition's payload sum fits executor memory
-  (``target_rows_per_partition`` helper); the transform itself is
-  shuffle-free.
-- **Typed metadata travels with the payload** (struct column), so
-  downstream filters (width ≥ X, duration ≤ Y) prune *before* decode.
+- ``assets_from_documents`` lands the documents' text as ``text/plain``
+  payloads; ``decode_features`` featurizes them with a deterministic
+  byte-sum stand-in (checksum plus ``[n_bytes, mean, first, last]``)
+  that the ``q_multimodal_features`` oracle reproduces in SQL.
+- ``sample_frames`` is the 1→N explode: each payload is cut into
+  fixed-size byte chunks and every n-th chunk is kept
+  (``q_frame_sample``).
+- ``image_dhash`` computes a 64-bit perceptual difference hash over a
+  decoded raster; ``image_near_dup_pairs`` and ``image_near_dup_keep``
+  bucket those hashes into Hamming near-dup pairs and min-id survivors
+  (``q_image_dedup`` and ``curate_corpus(asset_near_dup=...)``).
+  ``pnm_assets_from_documents`` builds the deterministic PNM fixture
+  those queries run on.
+
+``real_decoder=True`` (``decode_features``, ``sample_frames``,
+``resize_assets``) swaps the stand-in for decoders built from the
+stdlib and numpy, covering the lossless formats only: BMP, binary PNM,
+PNG and GIF images, uncompressed YUV4MPEG2 video, and WAV (integer and
+float PCM, G.711) and FLAC (``operators/flac.py``) audio. Lossy and
+codec-bound formats (JPEG, WebP, HEIF/AVIF, MP4/WebM, mp3, ...) raise
+``NotImplementedError``. At the operator level every decode error is
+dead-lettered, not raised: the row keeps ``decode_ok=false``, the
+message in ``error`` and, for features, a ``reason`` code
+(``decoder_gap`` for a deliberately unsupported format, ``corrupt``
+for a malformed payload); ``strict=True`` raises instead. One
+undecodable asset flags its row rather than failing the job.
+
+The distributed shape is the production one: Arrow batches move
+payload bytes from the JVM columnar buffers into Python once per
+batch, the transforms are shuffle-free, and the metadata struct
+travels with the payload so filters can prune before any decode.
 """
 
 from __future__ import annotations
@@ -80,31 +76,33 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
+FRAME_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType(), False),
+        T.StructField("frame_idx", T.LongType(), False),
+        T.StructField("frame", T.BinaryType(), True),
+        T.StructField("n_bytes", T.LongType(), True),
+        T.StructField("decode_ok", T.BooleanType(), False),
+        T.StructField("error", T.StringType(), True),
+    ]
+)
+
 
 def _dead_letter_reason(e: BaseException) -> str:
-    """Machine-usable dead-letter reason code, distinguishing the two
-    very different failure populations a corpus QA report must size
-    separately:
+    """Machine-usable dead-letter reason code, separating the two failure
+    populations a corpus QA report sizes apart:
 
-    - ``decoder_gap`` — a format the native decoders DELIBERATELY
-      refuse (every capability-gated ``NotImplementedError``:
-      arithmetic/lossless JPEG, codec-bound video — and lossy VP8 or
-      a lossy animation first frame only where no system libwebp
-      resolved —
-      exotic bit depths). These are recoverable by investing in a decoder or a
-      PIL/ffmpeg runtime — their corpus share is the business case for
-      the next decoder (the way SOF2 support was sized, then built, in
-      r9).
+    - ``decoder_gap`` — a format the native decoders deliberately refuse
+      (every ``NotImplementedError``: lossy/codec-bound images, audio
+      and video, table-bound WAV tags, exotic bit depths). A decoder
+      investment recovers these.
     - ``corrupt`` — a malformed payload (anything else). No decoder
-      investment recovers these; they are junk-data telemetry.
+      investment recovers these.
 
-    The human-readable detail stays in ``error``;
-    ``decode_reason_report`` groups the two into per-kind shares."""
+    The human-readable detail stays in ``error``."""
     return (
         "decoder_gap" if isinstance(e, NotImplementedError) else "corrupt"
     )
-
-FEATURE_DIM = 4
 
 
 def assets_from_documents(documents: DataFrame) -> DataFrame:
@@ -215,88 +213,6 @@ def _featurize_pnm(payload: bytes) -> tuple[int, list[float]]:
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color_type -> samples/px
-
-# Capability probes for OPTIONAL codec backends. Probed lazily, cached per
-# interpreter (each Python worker probes once, then every Arrow batch
-# reuses the answer). When the backend is present, codec-bound formats
-# (lossy WebP via the system libwebp — operators/libwebp.py — or PIL;
-# mp4/webm/... via ffmpeg) decode for real; when
-# absent, the stdlib decoders still cover BMP/PNM/PNG/GIF/JPEG/VP8L/
-# WAV/Y4M and
-# codec-bound assets fall through to the dead-letter path — capability
-# changes coverage, never control flow.
-_UNPROBED = object()
-_PIL_IMAGE = _UNPROBED
-_FFMPEG = _UNPROBED
-
-
-def _optional_pil():
-    """``PIL.Image`` if importable, else None."""
-    global _PIL_IMAGE
-    if _PIL_IMAGE is _UNPROBED:
-        try:
-            from PIL import Image
-
-            _PIL_IMAGE = Image
-        except ImportError:
-            _PIL_IMAGE = None
-    return _PIL_IMAGE
-
-
-def _optional_ffmpeg():
-    """Path to an ffmpeg binary if one is on PATH, else None."""
-    global _FFMPEG
-    if _FFMPEG is _UNPROBED:
-        import shutil
-
-        _FFMPEG = shutil.which("ffmpeg")
-    return _FFMPEG
-
-
-def _pil_decode_pixels(payload: bytes):
-    """Decode a codec-bound image through PIL to the same normalized
-    (h, w, c) uint8 raster shape the stdlib decoders produce: grayscale
-    stays 1-channel, everything else converts to RGB (alpha dropped, like
-    the PNG path)."""
-    import io
-
-    import numpy as np
-
-    image_mod = _optional_pil()
-    with image_mod.open(io.BytesIO(payload)) as im:
-        if im.mode != "L":
-            im = im.convert("RGB")
-        arr = np.asarray(im, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    return np.ascontiguousarray(arr)
-
-
-def _ffmpeg_to_y4m(payload: bytes) -> bytes:
-    """Demux/decode a compressed video container to uncompressed
-    YUV4MPEG2 through the probed ffmpeg binary (stdin→stdout, no temp
-    files), so every downstream consumer reuses the native Y4M path."""
-    import subprocess
-
-    proc = subprocess.run(
-        [
-            _optional_ffmpeg(),
-            "-v", "error",
-            "-i", "pipe:0",
-            "-f", "yuv4mpegpipe",
-            "-pix_fmt", "yuv420p",
-            "pipe:1",
-        ],
-        input=payload,
-        capture_output=True,
-        check=False,
-    )
-    if proc.returncode != 0 or not proc.stdout:
-        raise ValueError(
-            "ffmpeg demux failed: "
-            + proc.stderr.decode("utf-8", "replace")[:200]
-        )
-    return proc.stdout
 
 
 _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))  # (start, step)
@@ -617,1499 +533,6 @@ def _featurize_png(payload: bytes) -> tuple[int, list[float]]:
     return checksum, [float(w), float(h), float(channels), mean_px]
 
 
-# ---------------------------------------------------------------------------
-# JPEG: native baseline + progressive DCT decoder + minimal encoders
-# (ITU-T T.81). JPEG is the majority format of any web image crawl, so a
-# bare environment (no PIL) must still decode it for the corpus-QA path:
-# SOF0/SOF1 8-bit huffman streams — interleaved OR fully
-# non-interleaved (one scan per component), restart intervals, any
-# integer chroma subsampling (444/422/420), JFIF YCbCr /
-# Adobe-transform-0 RGB / grayscale — decode natively, and
-# SOF2 progressive streams decode natively too (Annex G: spectral
-# selection, successive approximation, EOB runs, per-scan restarts).
-# 4-component CMYK/YCCK (Adobe APP14 transforms 0/2) decodes to the
-# stored-sample 4-channel raster (r10; _jpeg_cmyk_to_rgb composites),
-# DNL-deferred heights resolve via a marker-aware pre-scan (r10), and
-# the MJPEG implied-default-table convention decodes DHT-less frames
-# (mjpeg_default_huff — the Motion-JPEG AVI path uses it).
-# Arithmetic coding, 12-bit, and lossless
-# payloads raise NotImplementedError → the dead-letter path
-# (PIL handles them when the capability probe finds it; PIL also takes
-# the whole JPEG fast path when importable — the native decoder is the
-# fallback that keeps a bare cluster decoding, not a PIL replacement).
-# The encoder exists so fixtures/thumbnails can be produced without PIL
-# and so the decoder is round-trip-testable in this container.
-# ---------------------------------------------------------------------------
-
-# zigzag scan position -> natural (row-major u*8+v) coefficient index
-_JPEG_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-_JPEG_UNSUPPORTED_SOF = {
-    0xC3: "lossless",
-    0xC5: "differential sequential",
-    0xC6: "differential progressive",
-    0xC7: "differential lossless",
-    0xC9: "arithmetic-coded sequential",
-    0xCA: "arithmetic-coded progressive",
-    0xCB: "arithmetic-coded lossless",
-    0xCD: "differential arithmetic sequential",
-    0xCE: "differential arithmetic progressive",
-    0xCF: "differential arithmetic lossless",
-    0xDE: "hierarchical",
-}
-
-
-def _jpeg_dct_matrix():
-    """Orthonormal 8-point DCT-II matrix M (M @ M.T == I): forward DCT is
-    ``M @ block @ M.T``, inverse is ``M.T @ coeffs @ M``."""
-    import numpy as np
-
-    x = np.arange(8)
-    m = np.cos((2 * x[None, :] + 1) * np.arange(8)[:, None] * np.pi / 16)
-    m[0] *= 1 / np.sqrt(2)
-    return m * 0.5
-
-
-def _build_jpeg_huff(counts, vals):
-    """DHT BITS/HUFFVAL lists -> canonical ``(length, code) -> symbol``
-    decode map (T.81 C.2 code assignment)."""
-    table = {}
-    code = k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = vals[k]
-            k += 1
-            code += 1
-        code <<= 1
-    return table
-
-
-class _JpegBits:
-    """MSB-first bit reader over one entropy-coded (restart) segment with
-    byte stuffing already removed. At most 7 trailing pad bits are served
-    (the byte-alignment padding F.1.2.3 allows); needing an 8th means the
-    stream was truncated mid-MCU."""
-
-    __slots__ = ("data", "pos", "acc", "n", "padded")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-        self.padded = 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.pos < len(self.data):
-                self.acc = self.data[self.pos]
-                self.pos += 1
-                self.n = 8
-            else:
-                self.padded += 1
-                if self.padded > 7:
-                    raise ValueError("JPEG entropy data truncated")
-                return 1
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def receive(self, k: int) -> int:
-        v = 0
-        for _ in range(k):
-            v = (v << 1) | self.bit()
-        return v
-
-    def huff(self, table) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG huffman code")
-
-
-def _jpeg_extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map an s-bit magnitude to its signed value."""
-    return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
-
-
-def _jpeg_decode_block(bits, dc_table, ac_table, pred, out):
-    """Huffman-decode one 8x8 block into ``out`` (natural order, already
-    zeroed); returns the new DC predictor."""
-    s = bits.huff(dc_table)
-    if s:
-        pred += _jpeg_extend(bits.receive(s), s)
-    out[0] = pred
-    k = 1
-    while k < 64:
-        rs = bits.huff(ac_table)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL: 16 zeros
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run past block end")
-        out[_JPEG_ZIGZAG[k]] = _jpeg_extend(bits.receive(s), s)
-        k += 1
-    return pred
-
-
-def _jpeg_split_entropy(payload: bytes, pos: int) -> tuple[list[bytes], int]:
-    """Split the entropy-coded data starting at ``pos`` into restart
-    segments, removing 0xFF00 byte stuffing; stops at the first real
-    marker (EOI / next header). Returns ``(segments, end_pos)`` where
-    ``end_pos`` is the offset of that next marker's 0xFF — progressive
-    streams keep parsing scans from there."""
-    segs: list[bytes] = []
-    cur = bytearray()
-    n = len(payload)
-    while pos < n:
-        b = payload[pos]
-        if b != 0xFF:
-            cur.append(b)
-            pos += 1
-            continue
-        nxt = payload[pos + 1] if pos + 1 < n else 0xD9
-        if nxt == 0x00:
-            cur.append(0xFF)
-            pos += 2
-        elif 0xD0 <= nxt <= 0xD7:  # RSTn
-            segs.append(bytes(cur))
-            cur = bytearray()
-            pos += 2
-        elif nxt == 0xFF:  # fill byte
-            pos += 1
-        else:
-            break
-    segs.append(bytes(cur))
-    return segs, min(pos, n)
-
-
-def _jpeg_find_dnl(payload: bytes):
-    """Marker-aware scan for the DNL segment (0xFFDC) -> its NL line
-    count, or None. T.81 B.2.5 places DNL at the end of the first
-    scan; byte stuffing guarantees a bare 0xFF + non-(0x00/RSTn/fill)
-    inside entropy data IS the next marker, so the walk is exact —
-    a 0xFFDC byte pair inside an APPn/COM body is never mistaken for
-    it (segments are skipped by their length fields)."""
-    import struct
-
-    pos, n = 2, len(payload)
-    in_entropy = False
-    while pos + 1 < n:
-        if not in_entropy:
-            if payload[pos] != 0xFF:
-                return None  # corrupt; let the real parser diagnose
-            while pos + 1 < n and payload[pos + 1] == 0xFF:
-                pos += 1
-            if pos + 1 >= n:
-                return None
-            marker = payload[pos + 1]
-            pos += 2
-            if marker == 0xD9:
-                return None
-            if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                continue
-            if pos + 2 > n:
-                return None
-            seglen = struct.unpack_from(">H", payload, pos)[0]
-            if marker == 0xDC:
-                if seglen < 4 or pos + 4 > n:
-                    return None
-                return struct.unpack_from(">H", payload, pos + 2)[0]
-            if seglen < 2:
-                return None
-            if marker == 0xDA:
-                in_entropy = True
-            pos += seglen
-        else:
-            # entropy-coded bytes: the next true marker is 0xFF
-            # followed by anything but 0x00 (stuffing), 0xFF (fill),
-            # or RSTn (in-scan restarts)
-            nxt = payload.find(b"\xff", pos)
-            if nxt < 0 or nxt + 1 >= n:
-                return None
-            code = payload[nxt + 1]
-            if code == 0xFF:
-                # fill byte: the NEXT 0xFF may start the real marker —
-                # advancing by 2 would desync on odd-length fill runs
-                pos = nxt + 1
-                continue
-            if code == 0x00 or 0xD0 <= code <= 0xD7:
-                pos = nxt + 2
-                continue
-            in_entropy = False
-            pos = nxt
-    return None
-
-
-def _jpeg_decode(payload: bytes, mjpeg_default_huff: bool = False):
-    """Native baseline/extended-sequential JPEG decoder -> (h, w, c)
-    uint8 raster (grayscale stays 1-channel, color converts to RGB),
-    the same normalized shape every other image decoder here produces.
-    Bit-exact deterministic across environments (integer coefficients,
-    one float64 IDCT + one rounding), so JPEG fingerprints/dhashes are
-    stable regardless of which libjpeg a cluster ships.
-
-    ``mjpeg_default_huff`` pre-seeds the Annex-K default Huffman
-    tables (luma as id 0, chroma as id 1) — the Motion-JPEG
-    convention (OpenDML): AVI frames routinely omit DHT entirely and
-    imply the standard tables. A frame that DOES carry DHT still
-    overrides them, so conforming frames are unaffected."""
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    qt: dict[int, object] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    if mjpeg_default_huff:
-        huff_dc = {
-            0: _build_jpeg_huff(*_JPEG_STD_DC_LUMA),
-            1: _build_jpeg_huff(*_JPEG_STD_DC_CHROMA),
-        }
-        huff_ac = {
-            0: _build_jpeg_huff(*_JPEG_STD_AC_LUMA),
-            1: _build_jpeg_huff(*_JPEG_STD_AC_CHROMA),
-        }
-    frame = None
-    progressive = False
-    seq_scanned: set[int] = set()
-    restart_interval = 0
-    adobe_transform = None
-    scan = None
-    pos, n = 2, len(payload)
-    while pos + 1 < n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        while pos + 1 < n and payload[pos + 1] == 0xFF:
-            pos += 1  # optional fill bytes before the marker code
-        if pos + 1 >= n:
-            break
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue  # standalone markers carry no length
-        if pos + 2 > n:
-            raise ValueError("JPEG segment header truncated")
-        seglen = struct.unpack_from(">H", payload, pos)[0]
-        body = payload[pos + 2 : pos + seglen]
-        if seglen < 2 or len(body) != seglen - 2:
-            raise ValueError("JPEG segment truncated")
-        nxt_pos = pos + seglen
-        if marker == 0xDB:  # DQT (may hold several tables)
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0x0F
-                i += 1
-                count = 64 * (2 if pq else 1)
-                raw = body[i : i + count]
-                if len(raw) < count:
-                    raise ValueError("DQT truncated")
-                i += count
-                vals = np.frombuffer(raw, dtype=">u2" if pq else np.uint8)
-                table = np.zeros(64, np.int32)
-                table[list(_JPEG_ZIGZAG)] = vals.astype(np.int32)
-                qt[tq] = table  # natural order
-        elif marker in (0xC0, 0xC1, 0xC2):  # huffman seq. / progressive
-            if frame is not None:
-                raise ValueError("multiple SOF markers")
-            progressive = marker == 0xC2
-            if body[0] != 8:
-                raise NotImplementedError(
-                    f"{body[0]}-bit JPEG precision (only 8-bit decodes "
-                    "natively; route through PIL)"
-                )
-            height, width = struct.unpack_from(">HH", body, 1)
-            if height == 0:
-                # DNL-deferred height (T.81 B.2.5: the NL field of the
-                # DNL marker closing the FIRST scan holds the true
-                # line count). Resolve it with a marker-aware pre-scan
-                # so every scan decodes against real geometry
-                height = _jpeg_find_dnl(payload)
-                if not height:  # absent OR NL=0 (illegal per T.81,
-                    # valid range 1-65535): corrupt either way — a
-                    # zero height would 'decode' to an empty raster
-                    # with decode_ok=true and pollute fingerprints
-                    raise ValueError(
-                        "JPEG declares height 0 (DNL-deferred) but "
-                        "carries no DNL marker with a non-zero line "
-                        "count"
-                    )
-            ncomp = body[5]
-            if ncomp not in (1, 3, 4):
-                raise NotImplementedError(
-                    f"{ncomp}-component JPEG (route through PIL)"
-                )
-            comps = []
-            for c in range(ncomp):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                comps.append([cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]])
-            frame = (height, width, comps)
-        elif marker in _JPEG_UNSUPPORTED_SOF:
-            raise NotImplementedError(
-                f"{_JPEG_UNSUPPORTED_SOF[marker]} JPEG is not supported "
-                "by the native baseline decoder (route through PIL)"
-            )
-        elif marker == 0xC4:  # DHT (may hold several tables)
-            i = 0
-            while i + 17 <= len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                counts = body[i + 1 : i + 17]
-                total = sum(counts)
-                vals = body[i + 17 : i + 17 + total]
-                if len(vals) < total:
-                    raise ValueError("DHT truncated")
-                i += 17 + total
-                target = huff_dc if tc == 0 else huff_ac
-                target[th] = _build_jpeg_huff(counts, vals)
-        elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack_from(">H", body, 0)[0]
-        elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
-            adobe_transform = body[11]
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
-            sel = {}
-            for c in range(ns):
-                sel[body[1 + 2 * c]] = (
-                    body[2 + 2 * c] >> 4,
-                    body[2 + 2 * c] & 0x0F,
-                )
-            if not progressive:
-                if ns == len(frame[2]):
-                    scan = _jpeg_decode_scan(
-                        payload, nxt_pos, frame, sel, huff_dc, huff_ac,
-                        restart_interval,
-                    )
-                    break
-                if ns != 1:
-                    raise NotImplementedError(
-                        "partially interleaved sequential JPEG scan "
-                        "(a strict subset of >1 components; route "
-                        "through PIL)"
-                    )
-                # fully non-interleaved sequential: one component per
-                # scan over its own 8x8 grid (A.2.2), accumulated like
-                # the progressive path; parsing continues to the next
-                # scan (DHT/DRI may be redefined between scans)
-                if scan is None:
-                    scan = _jpeg_alloc_coef(frame)
-                seq_scanned.update(sel)
-                pos = _jpeg_decode_seq_single_scan(
-                    payload, nxt_pos, frame, sel, huff_dc, huff_ac,
-                    restart_interval, scan,
-                )
-                continue
-            # progressive: one scan of many — spectral selection +
-            # successive approximation ride the SOS tail; coefficients
-            # accumulate across scans into one array per component
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-            if scan is None:
-                scan = _jpeg_alloc_coef(frame)
-            pos = _jpeg_decode_progressive_scan(
-                payload, nxt_pos, frame, sel, ss, se, ah, al,
-                huff_dc, huff_ac, restart_interval, scan,
-            )
-            continue  # keep parsing: DHT/DRI may precede the next scan
-        pos = nxt_pos
-    if frame is None or scan is None:
-        raise ValueError("JPEG has no SOF/SOS (truncated header)")
-    if seq_scanned:
-        # the non-interleaved sequential path: UNLIKE progressive
-        # (where a coarse partial render is valid), a sequential frame
-        # component with no scan at all means the file was truncated —
-        # decoding the zeroed plane would return a color-shifted
-        # raster with decode_ok=true instead of a dead-letter
-        missing = [c[0] for c in frame[2] if c[0] not in seq_scanned]
-        if missing:
-            raise ValueError(
-                "JPEG entropy data truncated: non-interleaved "
-                f"sequential stream is missing scan(s) for component(s)"
-                f" {missing}"
-            )
-
-    height, width, _ = frame
-    comps, hmax, vmax = _jpeg_frame_geometry(frame)
-    m = _jpeg_dct_matrix()
-    planes = []
-    for cid, hs, vs, tq in comps:
-        if tq not in qt:
-            raise ValueError("JPEG references a missing quantization table")
-        blocks = scan[cid].astype(np.float64) * qt[tq].astype(np.float64)
-        by, bx = blocks.shape[:2]
-        blocks = blocks.reshape(by, bx, 8, 8)
-        spatial = np.einsum("uy,nbuv,vx->nbyx", m, blocks, m)
-        plane = spatial.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
-        plane = np.clip(np.round(plane) + 128.0, 0.0, 255.0)
-        # crop to the component's true size, then replicate up to full res
-        comp_h = -(-height * vs // vmax)
-        comp_w = -(-width * hs // hmax)
-        plane = plane[:comp_h, :comp_w]
-        if vmax % vs or hmax % hs:
-            raise NotImplementedError(
-                f"fractional chroma sampling {hs}x{vs}/{hmax}x{vmax}"
-            )
-        plane = np.repeat(
-            np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1
-        )[:height, :width]
-        planes.append(plane)
-
-    if len(planes) == 1:
-        return planes[0].astype(np.uint8)[:, :, None]
-    if len(planes) == 4:
-        # Adobe CMYK/YCCK (APP14, Adobe TN 5116): transform 2 (YCCK)
-        # stores the first three planes YCbCr-converted — invert with
-        # the same BT.601 math as the 3-component path — while
-        # transform 0 / no marker stores the four samples directly.
-        # Adobe writers keep the samples INVERTED (255 = no ink); the
-        # raster returned is the stored-sample CMYK (what a
-        # CMYK-aware pipeline, and PIL's 'CMYK' mode, consume);
-        # ``_jpeg_cmyk_to_rgb`` composites it for RGB-only consumers.
-        if adobe_transform == 2:
-            y, cb, cr, k = planes
-            planes = [
-                y + 1.402 * (cr - 128.0),
-                y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
-                y + 1.772 * (cb - 128.0),
-                k,
-            ]
-        return np.clip(np.round(np.stack(planes, axis=-1)), 0, 255).astype(
-            np.uint8
-        )
-    comp_ids = [c[0] for c in comps]
-    if adobe_transform == 0 or comp_ids == [0x52, 0x47, 0x42]:  # 'R','G','B'
-        rgb = np.stack(planes, axis=-1)
-    else:  # JFIF YCbCr (BT.601)
-        y, cb, cr = planes
-        rgb = np.stack(
-            [
-                y + 1.402 * (cr - 128.0),
-                y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
-                y + 1.772 * (cb - 128.0),
-            ],
-            axis=-1,
-        )
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def _jpeg_decode_scan(
-    payload, pos, frame, sel, huff_dc, huff_ac, restart_interval
-):
-    """Entropy-decode the (single, sequential) scan: returns
-    ``{component_id: (blocks_y, blocks_x, 64) int32 coefficients}`` in
-    natural order. Handles interleaved MCUs, the single-component MCU
-    rule (A.2.2: sampling factors ignored, plain 8x8 grid), and restart
-    intervals (predictor reset + segment switch)."""
-    import numpy as np
-
-    height, width, _ = frame
-    comps, hmax, vmax = _jpeg_frame_geometry(frame)
-    mcus_x = -(-width // (8 * hmax))
-    mcus_y = -(-height // (8 * vmax))
-    blocks = {
-        cid: np.zeros((mcus_y * vs, mcus_x * hs, 64), np.int32)
-        for cid, hs, vs, _tq in comps
-    }
-    for cid, _hs, _vs, _tq in comps:
-        if cid not in sel:
-            raise ValueError("JPEG scan omits a frame component")
-        td, ta = sel[cid]
-        if td not in huff_dc or ta not in huff_ac:
-            raise ValueError("JPEG references a missing huffman table")
-    segs = iter(_jpeg_split_entropy(payload, pos)[0])
-    bits = _JpegBits(next(segs))
-    preds = {c[0]: 0 for c in comps}
-    interval = restart_interval or (mcus_x * mcus_y)
-    in_interval = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if in_interval == interval:
-                try:
-                    bits = _JpegBits(next(segs))
-                except StopIteration:
-                    raise ValueError("JPEG missing restart segment") from None
-                preds = {cid: 0 for cid in preds}
-                in_interval = 0
-            for cid, hs, vs, _tq in comps:
-                td, ta = sel[cid]
-                for by in range(vs):
-                    for bx in range(hs):
-                        preds[cid] = _jpeg_decode_block(
-                            bits,
-                            huff_dc[td],
-                            huff_ac[ta],
-                            preds[cid],
-                            blocks[cid][my * vs + by, mx * hs + bx],
-                        )
-            in_interval += 1
-    return blocks
-
-
-def _jpeg_frame_geometry(frame):
-    """The ONE place frame sampling geometry is interpreted:
-    ``(comps, hmax, vmax)`` with the single-component remap applied
-    (a one-component frame's declared sampling factors are ignored —
-    plain 8x8 grid, A.2.2; ``jpegtran -grayscale`` famously keeps the
-    luma factors at 2x2). Every consumer — sequential scan,
-    progressive alloc/scan, block-grid math — reads geometry through
-    here, so the remap cannot silently diverge between them again."""
-    height, width, comps = frame
-    if len(comps) == 1:
-        comps = [[comps[0][0], 1, 1, comps[0][3]]]
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-        raise ValueError("JPEG sampling factors out of range")
-    return comps, hmax, vmax
-
-
-def _jpeg_alloc_coef(frame):
-    """Zeroed coefficient store for a progressive frame, same layout as
-    ``_jpeg_decode_scan`` returns: ``{cid: (blocks_y, blocks_x, 64)}``
-    int32 in natural order, MCU-padded (single-component frames use the
-    plain 8x8 grid, A.2.2)."""
-    import numpy as np
-
-    height, width, _ = frame
-    comps, hmax, vmax = _jpeg_frame_geometry(frame)
-    mcus_x = -(-width // (8 * hmax))
-    mcus_y = -(-height // (8 * vmax))
-    return {
-        cid: np.zeros((mcus_y * vs, mcus_x * hs, 64), np.int32)
-        for cid, hs, vs, _tq in comps
-    }
-
-
-def _jpeg_comp_blocks(frame, hs, vs):
-    """Non-interleaved block-grid dims (blocks_y, blocks_x) of one
-    component: ceil-of-8 of the component's scaled size (A.2.2 — NOT
-    padded to MCU multiples). ``hs``/``vs`` must come from the
-    REMAPPED comps (``_jpeg_frame_geometry``), whose hmax/vmax are
-    used here — so a single-component frame's declared-but-ignored
-    sampling can't shrink the walked grid."""
-    height, width, _ = frame
-    _, hmax, vmax = _jpeg_frame_geometry(frame)
-    comp_h = -(-height * vs // vmax)
-    comp_w = -(-width * hs // hmax)
-    return -(-comp_h // 8), -(-comp_w // 8)
-
-
-def _jpeg_decode_seq_single_scan(
-    payload, pos, frame, sel, huff_dc, huff_ac, restart_interval, coef
-):
-    """One NON-INTERLEAVED sequential scan (a fully non-interleaved
-    baseline JPEG carries one such scan per component): full DC+AC
-    blocks over the component's own ceil-of-8 grid (A.2.2), written
-    into the shared ``coef`` store. Returns the payload offset of the
-    marker that ended the scan's entropy data."""
-    comps, _hmax, _vmax = _jpeg_frame_geometry(frame)
-    ((cid, (td, ta)),) = sel.items()
-    matching = [c for c in comps if c[0] == cid]
-    if not matching:
-        raise ValueError("JPEG scan references an unknown component")
-    _, hs, vs, _tq = matching[0]
-    if td not in huff_dc or ta not in huff_ac:
-        raise ValueError("JPEG references a missing huffman table")
-    segs, end = _jpeg_split_entropy(payload, pos)
-    segs = iter(segs)
-    bits = _JpegBits(next(segs))
-    bh, bw = _jpeg_comp_blocks(frame, hs, vs)
-    interval = restart_interval or (bh * bw)
-    pred = 0
-    done = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if done == interval:
-                try:
-                    bits = _JpegBits(next(segs))
-                except StopIteration:
-                    raise ValueError(
-                        "JPEG missing restart segment"
-                    ) from None
-                pred = 0
-                done = 0
-            pred = _jpeg_decode_block(
-                bits, huff_dc[td], huff_ac[ta], pred, coef[cid][by, bx]
-            )
-            done += 1
-    return end
-
-
-def _jpeg_ac_first_block(bits, ac_table, blk, ss, se, al, eobrun):
-    """Decode one block of an AC 'first' progressive scan (T.81 G.2.2:
-    spectral band [ss, se], values shifted up by the point transform
-    ``al``, EOB runs spanning blocks). Returns the remaining eobrun."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = bits.huff(ac_table)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r != 15:
-                eobrun = 1 << r
-                if r:
-                    eobrun += bits.receive(r)
-                return eobrun - 1  # this block is part of the run
-            k += 16  # ZRL
-            continue
-        k += r
-        if k > se:
-            raise ValueError("JPEG AC run past spectral band end")
-        blk[_JPEG_ZIGZAG[k]] = _jpeg_extend(bits.receive(s), s) << al
-        k += 1
-    return 0
-
-
-def _jpeg_ac_refine_block(bits, ac_table, blk, ss, se, al, eobrun):
-    """Decode one block of an AC refinement scan (T.81 G.2.3): newly
-    nonzero coefficients arrive as ±2^al, every already-nonzero
-    coefficient in the band consumes a correction bit (appended to its
-    magnitude if set), and EOB runs carry correction bits for the run's
-    blocks. Returns the remaining eobrun."""
-    p1 = 1 << al
-    m1 = -1 << al
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = bits.huff(ac_table)
-            r, s = rs >> 4, rs & 0x0F
-            if s == 0:
-                if r != 15:
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += bits.receive(r)
-                    break
-                val = 0  # ZRL: skip 16 zero-history coefficients
-            else:
-                if s != 1:
-                    raise ValueError(
-                        "JPEG AC refinement magnitude must be 1"
-                    )
-                val = p1 if bits.bit() else m1
-            # advance over r zero-history coefficients, serving a
-            # correction bit to every nonzero-history one on the way
-            while k <= se:
-                z = _JPEG_ZIGZAG[k]
-                if blk[z] != 0:
-                    if bits.bit() and not (blk[z] & p1):
-                        blk[z] += p1 if blk[z] >= 0 else m1
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if val:
-                if k > se:
-                    raise ValueError("JPEG AC refinement past band end")
-                blk[_JPEG_ZIGZAG[k]] = val
-            k += 1
-    if eobrun > 0:
-        # the EOB-run tail still refines this block's nonzero history
-        while k <= se:
-            z = _JPEG_ZIGZAG[k]
-            if blk[z] != 0:
-                if bits.bit() and not (blk[z] & p1):
-                    blk[z] += p1 if blk[z] >= 0 else m1
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _jpeg_decode_progressive_scan(
-    payload, pos, frame, sel, ss, se, ah, al,
-    huff_dc, huff_ac, restart_interval, coef,
-):
-    """Entropy-decode ONE progressive scan into the accumulated ``coef``
-    store; returns the payload offset of the marker that ended the
-    scan's entropy data. DC scans (ss==0) may interleave several
-    components over the MCU grid; AC scans are single-component over
-    that component's own block raster (G.2). Restart intervals reset
-    the DC predictors / the EOB run and switch segments, exactly as in
-    the sequential scan."""
-    height, width, _ = frame
-    comps, _hmax, _vmax = _jpeg_frame_geometry(frame)
-    scan_comps = [c for c in comps if c[0] in sel]
-    if len(scan_comps) != len(sel):
-        raise ValueError("JPEG scan references an unknown component")
-    if ah > 13 or al > 13:
-        raise ValueError("JPEG successive-approximation out of range")
-    segs, end = _jpeg_split_entropy(payload, pos)
-    segs = iter(segs)
-    bits = _JpegBits(next(segs))
-
-    def next_segment():
-        try:
-            return _JpegBits(next(segs))
-        except StopIteration:
-            raise ValueError("JPEG missing restart segment") from None
-
-    if ss == 0:  # DC scan (first or refinement)
-        if se != 0:
-            raise ValueError(
-                "progressive JPEG scan mixes DC and AC coefficients"
-            )
-        if ah == 0:
-            for cid in sel:
-                if sel[cid][0] not in huff_dc:
-                    raise ValueError(
-                        "JPEG references a missing huffman table"
-                    )
-        preds = {c[0]: 0 for c in scan_comps}
-
-        def dc_block(blk, cid):
-            if ah == 0:
-                s = bits.huff(huff_dc[sel[cid][0]])
-                if s:
-                    preds[cid] += _jpeg_extend(bits.receive(s), s)
-                blk[0] = preds[cid] << al
-            elif bits.bit():
-                blk[0] |= 1 << al
-
-        if len(scan_comps) > 1:  # interleaved over the MCU grid
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcus_x = -(-width // (8 * hmax))
-            mcus_y = -(-height // (8 * vmax))
-            interval = restart_interval or (mcus_x * mcus_y)
-            done = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if done == interval:
-                        bits = next_segment()
-                        preds = {cid: 0 for cid in preds}
-                        done = 0
-                    for cid, hs, vs, _tq in scan_comps:
-                        for by in range(vs):
-                            for bx in range(hs):
-                                dc_block(
-                                    coef[cid][my * vs + by, mx * hs + bx],
-                                    cid,
-                                )
-                    done += 1
-        else:  # single component: its own block raster
-            cid, hs, vs, _tq = scan_comps[0]
-            bh, bw = _jpeg_comp_blocks(frame, hs, vs)
-            interval = restart_interval or (bh * bw)
-            done = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if done == interval:
-                        bits = next_segment()
-                        preds = {cid: 0}
-                        done = 0
-                    dc_block(coef[cid][by, bx], cid)
-                    done += 1
-        return end
-
-    # AC scan: single component, spectral band [ss, se]
-    if len(scan_comps) != 1:
-        raise ValueError(
-            "progressive JPEG AC scan must be single-component"
-        )
-    if se < ss or se > 63:
-        raise ValueError("JPEG spectral selection out of range")
-    cid, hs, vs, _tq = scan_comps[0]
-    ta = sel[cid][1]
-    if ta not in huff_ac:
-        raise ValueError("JPEG references a missing huffman table")
-    block_fn = _jpeg_ac_first_block if ah == 0 else _jpeg_ac_refine_block
-    bh, bw = _jpeg_comp_blocks(frame, hs, vs)
-    interval = restart_interval or (bh * bw)
-    done = 0
-    eobrun = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if done == interval:
-                bits = next_segment()
-                eobrun = 0
-                done = 0
-            eobrun = block_fn(
-                bits, huff_ac[ta], coef[cid][by, bx], ss, se, al, eobrun
-            )
-            done += 1
-    return end
-
-
-# Annex K.1/K.3 default tables (public spec constants): quantization in
-# natural row-major order; huffman as (BITS, HUFFVAL).
-_JPEG_STD_LUMA_Q = (
-    16, 11, 10, 16, 24, 40, 51, 61,
-    12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56,
-    14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77,
-    24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101,
-    72, 92, 95, 98, 112, 100, 103, 99,
-)
-_JPEG_STD_CHROMA_Q = (
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-)
-_JPEG_STD_DC_LUMA = (
-    (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
-    tuple(range(12)),
-)
-_JPEG_STD_DC_CHROMA = (
-    (0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0),
-    tuple(range(12)),
-)
-_JPEG_STD_AC_LUMA = (
-    (0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D),
-    (
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-        0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-        0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-        0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-        0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-        0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-        0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-        0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-        0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-        0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-        0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-        0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-        0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-        0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-        0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-        0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-        0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-        0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-        0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-        0xF9, 0xFA,
-    ),
-)
-_JPEG_STD_AC_CHROMA = (
-    (0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77),
-    (
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-        0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-        0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-        0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-        0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-        0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-        0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-        0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-        0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-        0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-        0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-        0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-        0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-        0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-        0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-        0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-        0xF9, 0xFA,
-    ),
-)
-
-
-def _huff_code_map(counts, vals):
-    """(BITS, HUFFVAL) -> ``symbol -> (code, length)`` encode map (same
-    canonical assignment as _build_jpeg_huff, inverted)."""
-    codes = {}
-    code = k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            codes[vals[k]] = (code, length)
-            k += 1
-            code += 1
-        code <<= 1
-    return codes
-
-
-class _JpegBitWriter:
-    """MSB-first bit writer with 0xFF byte stuffing and 1-bit padding."""
-
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.buf.append(self.acc)
-                if self.acc == 0xFF:
-                    self.buf.append(0x00)
-                self.acc = 0
-                self.n = 0
-
-    def flush(self) -> None:
-        while self.n:
-            self.write(1, 1)
-
-
-def _jpeg_scale_q(table, quality: int):
-    """libjpeg-compatible quality scaling of an Annex-K base table."""
-    import numpy as np
-
-    quality = min(max(int(quality), 1), 100)
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    q = (np.asarray(table, np.int64) * scale + 50) // 100
-    return np.clip(q, 1, 255).astype(np.int32)
-
-
-def _jpeg_encode_block(writer, zz, pred, dc_codes, ac_codes) -> int:
-    """Huffman-encode one zigzag-ordered quantized block; returns the new
-    DC predictor."""
-    diff = int(zz[0]) - pred
-    s = abs(diff).bit_length()
-    code, length = dc_codes[s]
-    writer.write(code, length)
-    if s:
-        writer.write(diff if diff > 0 else diff + (1 << s) - 1, s)
-    run = 0
-    for k in range(1, 64):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            writer.write(*ac_codes[0xF0])  # ZRL
-            run -= 16
-        s = abs(v).bit_length()
-        writer.write(*ac_codes[(run << 4) | s])
-        writer.write(v if v > 0 else v + (1 << s) - 1, s)
-        run = 0
-    if run:
-        writer.write(*ac_codes[0x00])  # EOB
-    return int(zz[0])
-
-
-def _jpeg_plane_coeffs(plane, q, m):
-    """Pad a float64 plane to 8-multiples (edge replication), forward-DCT
-    every 8x8 block, quantize -> (blocks_y, blocks_x, 64) int32 zigzag."""
-    import numpy as np
-
-    h, w = plane.shape
-    plane = np.pad(plane, ((0, (-h) % 8), (0, (-w) % 8)), mode="edge")
-    by, bx = plane.shape[0] // 8, plane.shape[1] // 8
-    f = plane.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3) - 128.0
-    coeffs = np.einsum("uy,nbyx,vx->nbuv", m, f, m)
-    quant = np.round(coeffs / q.reshape(8, 8)).astype(np.int32)
-    return quant.reshape(by, bx, 64)[:, :, list(_JPEG_ZIGZAG)]
-
-
-def _jpeg_prepare_encode(pixels, quality: int, subsample: bool):
-    """Shared encoder front half (baseline + progressive): color
-    convert, optionally subsample chroma, forward-DCT + quantize.
-    Returns ``(h, w, gray, samplings, quants, coeffs, mcus)`` with
-    ``coeffs`` zigzag-ordered per block."""
-    import numpy as np
-
-    pixels = np.asarray(pixels, np.uint8)
-    if pixels.ndim == 2:
-        pixels = pixels[:, :, None]
-    h, w, c = pixels.shape
-    if h == 0 or w == 0 or c not in (1, 3):
-        raise ValueError("encoder needs a non-empty (h, w, 1|3) raster")
-    gray = c == 1
-    p = pixels.astype(np.float64)
-    if gray:
-        planes = [p[:, :, 0]]
-    else:
-        r, g, b = p[..., 0], p[..., 1], p[..., 2]
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
-            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
-        ]
-    hs = vs = 2 if (subsample and not gray) else 1
-    if not gray and (hs, vs) != (1, 1):
-        # box-average chroma down to the subsampled grid
-        sub = []
-        for plane in planes[1:]:
-            padded = np.pad(
-                plane, ((0, (-h) % vs), (0, (-w) % hs)), mode="edge"
-            )
-            sh, sw = padded.shape[0] // vs, padded.shape[1] // hs
-            sub.append(
-                padded.reshape(sh, vs, sw, hs).mean(axis=(1, 3))
-            )
-        planes = [planes[0], *sub]
-
-    m = _jpeg_dct_matrix()
-    q_luma = _jpeg_scale_q(_JPEG_STD_LUMA_Q, quality)
-    q_chroma = _jpeg_scale_q(_JPEG_STD_CHROMA_Q, quality)
-    samplings = [(hs, vs)] + [(1, 1)] * (len(planes) - 1)
-    quants = [q_luma] + [q_chroma] * (len(planes) - 1)
-    # luma plane must tile the MCU grid exactly so chroma/luma block
-    # counts line up in the interleave
-    mcus_x = -(-w // (8 * hs))
-    mcus_y = -(-h // (8 * vs))
-    luma = np.pad(
-        planes[0],
-        ((0, mcus_y * vs * 8 - h), (0, mcus_x * hs * 8 - w)),
-        mode="edge",
-    )
-    coeffs = [_jpeg_plane_coeffs(luma, q_luma, m)] + [
-        _jpeg_plane_coeffs(pl, q_chroma, m) for pl in planes[1:]
-    ]
-    return h, w, gray, samplings, quants, coeffs, (mcus_x, mcus_y)
-
-
-def _jpeg_std_maps(ncomp: int):
-    """(dc_maps, ac_maps) encode maps from the Annex-K default tables:
-    luma tables for component 0, chroma for the rest — the one map
-    construction both encoders share."""
-    dc = [_huff_code_map(*_JPEG_STD_DC_LUMA)] + [
-        _huff_code_map(*_JPEG_STD_DC_CHROMA)
-    ] * (ncomp - 1)
-    ac = [_huff_code_map(*_JPEG_STD_AC_LUMA)] + [
-        _huff_code_map(*_JPEG_STD_AC_CHROMA)
-    ] * (ncomp - 1)
-    return dc, ac
-
-
-def _jpeg_header_segments(
-    h, w, gray, samplings, quants, sof_marker, restart_interval
-):
-    """SOI through DHT/DRI (everything before the first SOS), shared by
-    the baseline and progressive encoders."""
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
-
-    zz = list(_JPEG_ZIGZAG)
-    ncomp = 1 if gray else 3
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0]) + bytes(int(quants[0][i]) for i in zz))
-    if not gray:
-        out += seg(0xDB, bytes([1]) + bytes(int(quants[1][i]) for i in zz))
-    sof = bytearray(struct.pack(">BHHB", 8, h, w, ncomp))
-    for ci, (chs, cvs) in enumerate(samplings):
-        sof += bytes([ci + 1, (chs << 4) | cvs, 0 if ci == 0 else 1])
-    out += seg(sof_marker, bytes(sof))
-    for tc_th, (counts, vals) in (
-        (0x00, _JPEG_STD_DC_LUMA),
-        (0x10, _JPEG_STD_AC_LUMA),
-        *(
-            ()
-            if gray
-            else (
-                (0x01, _JPEG_STD_DC_CHROMA),
-                (0x11, _JPEG_STD_AC_CHROMA),
-            )
-        ),
-    ):
-        out += seg(0xC4, bytes([tc_th]) + bytes(counts) + bytes(vals))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    return out
-
-
-def _jpeg_encode_baseline(
-    pixels,
-    quality: int = 75,
-    subsample: bool = False,
-    restart_interval: int = 0,
-):
-    """Minimal baseline JPEG ENCODER (SOF0, Annex-K default huffman
-    tables; grayscale or YCbCr 4:4:4 / 4:2:0; optional DRI restart
-    markers): real .jpg payloads for fixtures, round-trip decoder tests,
-    and thumbnails in environments without PIL. Input: (h, w, 1|3)
-    uint8 raster."""
-    import struct
-
-    h, w, gray, samplings, quants, coeffs, (mcus_x, mcus_y) = (
-        _jpeg_prepare_encode(pixels, quality, subsample)
-    )
-    planes = coeffs
-
-    dc_maps, ac_maps = _jpeg_std_maps(len(planes))
-    writer = _JpegBitWriter()
-    preds = [0] * len(planes)
-    mcu_idx = rst_idx = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                writer.flush()
-                writer.buf += bytes([0xFF, 0xD0 + (rst_idx % 8)])
-                rst_idx += 1
-                preds = [0] * len(planes)
-            for ci, (chs, cvs) in enumerate(samplings):
-                for by in range(cvs):
-                    for bx in range(chs):
-                        preds[ci] = _jpeg_encode_block(
-                            writer,
-                            coeffs[ci][my * cvs + by, mx * chs + bx],
-                            preds[ci],
-                            dc_maps[ci],
-                            ac_maps[ci],
-                        )
-            mcu_idx += 1
-    writer.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
-
-    out = _jpeg_header_segments(
-        h, w, gray, samplings, quants, 0xC0, restart_interval
-    )
-    sos = bytearray([len(planes)])
-    for ci in range(len(planes)):
-        sos += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
-    sos += b"\x00\x3f\x00"  # Ss=0 Se=63 Ah/Al=0
-    out += seg(0xDA, bytes(sos))
-    out += writer.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def _jpeg_cmyk_to_rgb(arr):
-    """Stored-sample (Adobe-inverted: 255 = no ink) CMYK raster → RGB
-    composite, the libjpeg/PIL quick conversion: ``channel * K / 255``
-    on the stored samples. Lossy-render only — pipelines that need the
-    ink channels consume the 4-channel raster directly."""
-    import numpy as np
-
-    a = arr.astype(np.float64)
-    k = a[..., 3:4]
-    return np.clip(np.round(a[..., :3] * k / 255.0), 0, 255).astype(
-        np.uint8
-    )
-
-
-def _jpeg_encode_cmyk(pixels, quality: int = 90, transform: int = 0):
-    """Minimal 4-component JPEG fixture encoder (SOF0, 4:4:4, the
-    Annex-K luma tables for every component, an Adobe APP14 carrying
-    ``transform``): real CMYK (transform 0) / YCCK (transform 2)
-    payloads for decoder tests without PIL. Input: stored-sample
-    (Adobe-inverted) (h, w, 4) uint8 raster — exactly what
-    ``_jpeg_decode`` returns for these files, so round-trips compare
-    directly."""
-    import struct
-
-    import numpy as np
-
-    if transform not in (0, 2):
-        raise ValueError("transform must be 0 (CMYK) or 2 (YCCK)")
-    pixels = np.asarray(pixels, np.uint8)
-    if pixels.ndim != 3 or pixels.shape[2] != 4 or not pixels.size:
-        raise ValueError("encoder needs a non-empty (h, w, 4) raster")
-    h, w = pixels.shape[:2]
-    p = pixels.astype(np.float64)
-    planes = [p[..., i] for i in range(4)]
-    if transform == 2:
-        c_, m_, y_, k_ = planes
-        planes = [
-            0.299 * c_ + 0.587 * m_ + 0.114 * y_,
-            128.0 - 0.168736 * c_ - 0.331264 * m_ + 0.5 * y_,
-            128.0 + 0.5 * c_ - 0.418688 * m_ - 0.081312 * y_,
-            k_,
-        ]
-    q = _jpeg_scale_q(_JPEG_STD_LUMA_Q, quality)
-    m = _jpeg_dct_matrix()
-    coeffs = [_jpeg_plane_coeffs(pl, q, m) for pl in planes]
-    dc_map = _huff_code_map(*_JPEG_STD_DC_LUMA)
-    ac_map = _huff_code_map(*_JPEG_STD_AC_LUMA)
-    writer = _JpegBitWriter()
-    preds = [0] * 4
-    by, bx = coeffs[0].shape[:2]
-    for my in range(by):
-        for mx in range(bx):
-            for ci in range(4):
-                preds[ci] = _jpeg_encode_block(
-                    writer, coeffs[ci][my, mx], preds[ci], dc_map, ac_map
-                )
-    writer.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
-
-    zz = list(_JPEG_ZIGZAG)
-    out = bytearray(b"\xff\xd8")
-    # APP14 body: "Adobe" + 2-byte version + 2x2-byte flags + transform
-    # (12 bytes total — the decoder reads the transform at body[11])
-    out += seg(
-        0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform)
-    )
-    out += seg(0xDB, bytes([0]) + bytes(int(q[i]) for i in zz))
-    sof = bytearray(struct.pack(">BHHB", 8, h, w, 4))
-    for ci in range(4):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += seg(0xC0, bytes(sof))
-    for tc_th, (counts, vals) in (
-        (0x00, _JPEG_STD_DC_LUMA),
-        (0x10, _JPEG_STD_AC_LUMA),
-    ):
-        out += seg(0xC4, bytes([tc_th]) + bytes(counts) + bytes(vals))
-    sos = bytearray([4])
-    for ci in range(4):
-        sos += bytes([ci + 1, 0x00])
-    sos += b"\x00\x3f\x00"
-    out += seg(0xDA, bytes(sos))
-    out += writer.buf
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _jpeg_encode_progressive(
-    pixels,
-    quality: int = 75,
-    subsample: bool = False,
-    restart_interval: int = 0,
-    scans: list[tuple] | None = None,
-):
-    """Progressive JPEG ENCODER (SOF2): the multi-scan fixture source
-    the native decoder round-trips against, built on the same DCT/
-    quantization front half as the baseline encoder — so a progressive
-    and a baseline encode of the same raster at the same quality carry
-    IDENTICAL quantized coefficients, and both decodes must produce the
-    same pixels (the round-trip test's cross-check).
-
-    ``scans`` is a list of ``(component_indices, ss, se, ah, al)``;
-    the default script mirrors libjpeg's simple progression: coarse DC
-    for all components, spectral-band AC firsts at reduced precision,
-    then DC and AC refinement passes down to full precision. EOB runs
-    are emitted per-block (EOB1 only) so the Annex-K default huffman
-    tables suffice — multi-block EOBn decoding is pinned separately by
-    hand-built streams in the tests."""
-    import struct
-
-    h, w, gray, samplings, quants, coeffs, (mcus_x, mcus_y) = (
-        _jpeg_prepare_encode(pixels, quality, subsample)
-    )
-    ncomp = 1 if gray else 3
-    if scans is None:
-        if gray:
-            scans = [
-                ([0], 0, 0, 0, 1),
-                ([0], 1, 5, 0, 2),
-                ([0], 6, 63, 0, 2),
-                ([0], 0, 0, 1, 0),
-                ([0], 1, 63, 2, 1),
-                ([0], 1, 63, 1, 0),
-            ]
-        else:
-            scans = [
-                ([0, 1, 2], 0, 0, 0, 1),
-                ([0], 1, 5, 0, 2),
-                ([1], 1, 63, 0, 1),
-                ([2], 1, 63, 0, 1),
-                ([0], 6, 63, 0, 2),
-                ([0, 1, 2], 0, 0, 1, 0),
-                ([0], 1, 63, 2, 1),
-                ([1], 1, 63, 1, 0),
-                ([2], 1, 63, 1, 0),
-                ([0], 1, 63, 1, 0),
-            ]
-    dc_maps, ac_maps = _jpeg_std_maps(ncomp)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
-
-    out = _jpeg_header_segments(
-        h, w, gray, samplings, quants, 0xC2, restart_interval
-    )
-    for comp_idx, ss, se, ah, al in scans:
-        sos = bytearray([len(comp_idx)])
-        for ci in comp_idx:
-            td_ta = 0x00 if ci == 0 else 0x11
-            sos += bytes([ci + 1, td_ta])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, bytes(sos))
-        out += _jpeg_encode_progressive_scan(
-            coeffs, samplings, comp_idx, ss, se, ah, al,
-            dc_maps, ac_maps, (mcus_x, mcus_y), restart_interval,
-            (h, w),
-        )
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def _jpeg_encode_progressive_scan(
-    coeffs, samplings, comp_idx, ss, se, ah, al,
-    dc_maps, ac_maps, mcus, restart_interval, dims,
-):
-    """Entropy data of one progressive scan (the encode mirror of
-    ``_jpeg_decode_progressive_scan``, EOB1-only). Non-interleaved
-    scans cover exactly the component's ceil-of-8 block grid (A.2.2) —
-    NOT the MCU-padded coefficient array — so the block walk must use
-    the true image dims."""
-    writer = _JpegBitWriter()
-    mcus_x, mcus_y = mcus
-    h, w = dims
-    hmax = max(s[0] for s in samplings)
-    vmax = max(s[1] for s in samplings)
-
-    def comp_grid(ci):
-        chs, cvs = samplings[ci]
-        comp_h = -(-(h * cvs) // vmax)
-        comp_w = -(-(w * chs) // hmax)
-        return -(-comp_h // 8), -(-comp_w // 8)
-
-    rst_idx = 0
-    state = {"done": 0, "preds": dict.fromkeys(comp_idx, 0)}
-
-    def maybe_restart():
-        nonlocal rst_idx
-        if restart_interval and state["done"] == restart_interval:
-            writer.flush()
-            writer.buf += bytes([0xFF, 0xD0 + (rst_idx % 8)])
-            rst_idx += 1
-            state["done"] = 0
-            state["preds"] = dict.fromkeys(comp_idx, 0)
-
-    if ss == 0:  # DC scan
-        def dc_block(zz, ci):
-            if ah == 0:
-                v = int(zz[0]) >> al  # arithmetic shift, G.1.2.1
-                diff = v - state["preds"][ci]
-                state["preds"][ci] = v
-                s = abs(diff).bit_length()
-                writer.write(*dc_maps[ci][s])
-                if s:
-                    writer.write(
-                        diff if diff > 0 else diff + (1 << s) - 1, s
-                    )
-            else:
-                writer.write((int(zz[0]) >> al) & 1, 1)
-
-        if len(comp_idx) > 1:  # interleaved over the MCU grid
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for ci in comp_idx:
-                        chs, cvs = samplings[ci]
-                        for by in range(cvs):
-                            for bx in range(chs):
-                                dc_block(
-                                    coeffs[ci][
-                                        my * cvs + by, mx * chs + bx
-                                    ],
-                                    ci,
-                                )
-                    state["done"] += 1
-        else:
-            ci = comp_idx[0]
-            bh, bw = comp_grid(ci)
-            for by in range(bh):
-                for bx in range(bw):
-                    maybe_restart()
-                    dc_block(coeffs[ci][by, bx], ci)
-                    state["done"] += 1
-        writer.flush()
-        return writer.buf
-
-    # AC scan: single component
-    (ci,) = comp_idx
-    ac = ac_maps[ci]
-    bh, bw = comp_grid(ci)
-    for by in range(bh):
-        for bx in range(bw):
-            maybe_restart()
-            zz = coeffs[ci][by, bx]
-            if ah == 0:  # AC first: magnitudes shifted toward zero
-                run = 0
-                for k in range(ss, se + 1):
-                    v = int(zz[k])
-                    t = abs(v) >> al
-                    if t == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        writer.write(*ac[0xF0])  # ZRL
-                        run -= 16
-                    if v < 0:
-                        t = -t
-                    s = abs(t).bit_length()
-                    writer.write(*ac[(run << 4) | s])
-                    writer.write(t if t > 0 else t + (1 << s) - 1, s)
-                    run = 0
-                if run:
-                    writer.write(*ac[0x00])  # EOB1
-            else:  # AC refinement (the encode mirror of G.2.3)
-                absv = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
-                eob = ss - 1  # band position of the last NEW coefficient
-                for i, t in enumerate(absv):
-                    if t == 1:
-                        eob = ss + i
-                run = 0
-                pending: list[int] = []
-                for k in range(ss, se + 1):
-                    t = absv[k - ss]
-                    if t == 0:
-                        run += 1
-                        continue
-                    # ZRLs only when a new coefficient still follows;
-                    # trailing zeros fold into the EOB instead
-                    while run > 15 and k <= eob:
-                        writer.write(*ac[0xF0])
-                        run -= 16
-                        for b in pending:
-                            writer.write(b, 1)
-                        pending = []
-                    if t > 1:  # nonzero history: buffered correction bit
-                        pending.append(t & 1)
-                        continue
-                    # newly nonzero: symbol, sign, then the buffered
-                    # correction bits of the history coefs just crossed
-                    writer.write(*ac[(run << 4) | 1])
-                    writer.write(0 if int(zz[k]) < 0 else 1, 1)
-                    for b in pending:
-                        writer.write(b, 1)
-                    pending = []
-                    run = 0
-                if run or pending:  # block tail: EOB1 + its corrections
-                    writer.write(*ac[0x00])
-                    for b in pending:
-                        writer.write(b, 1)
-            state["done"] += 1
-    writer.flush()
-    return writer.buf
-
-
-def _featurize_jpeg(payload: bytes) -> tuple[int, list[float]]:
-    """Native JPEG featurization, same output contract as the PIL route
-    ([width, height, bit depth, mean pixel], crc32-of-raster checksum) so
-    the two decode paths are directly cross-checkable."""
-    import zlib
-
-    import numpy as np
-
-    pixels = _jpeg_decode(payload)
-    h, w, c = pixels.shape
-    checksum = zlib.crc32(pixels.tobytes()) % 1_000_003
-    mean_px = float(pixels.astype(np.float64).mean()) if pixels.size else 0.0
-    return checksum, [float(w), float(h), float(8 * c), mean_px]
-
-
 def _parse_y4m(payload: bytes):
     """Demux an uncompressed YUV4MPEG2 stream with the stdlib: parse the
     parameter line (W/H/C tags; chroma defaults to 420), then split the
@@ -2156,63 +579,6 @@ def _parse_y4m(payload: bytes):
     return width, height, frames
 
 
-def _featurize_via_pil(payload: bytes) -> tuple[int, list[float]]:
-    """The PIL fallback featurizer — one definition for the general
-    codec-capability path and the HEIF branch's pillow-heif attempt."""
-    import zlib
-
-    import numpy as np
-
-    pixels = _pil_decode_pixels(payload)
-    h, w, c = pixels.shape
-    checksum = zlib.crc32(pixels.tobytes()) % 1_000_003
-    mean_px = (
-        float(pixels.astype(np.float64).mean()) if pixels.size else 0.0
-    )
-    return checksum, [float(w), float(h), float(8 * c), mean_px]
-
-
-def _featurize_heif(payload: bytes) -> tuple[int, list[float]]:
-    """AVIF/HEIC still image through the system libheif (capability
-    probe — the libwebp discipline): real AV1/HEVC intra decode via the
-    dav1d/aom/libde265 plugins, feature contract identical to the
-    other image featurizers ([w, h, bits, mean pixel], crc32 checksum
-    over the decoded RGB raster). Raises NotImplementedError when
-    libheif or the payload's codec plugin is absent (decoder_gap) —
-    the brand names which plugin — and ValueError for a bitstream
-    libheif itself rejects (corrupt)."""
-    import zlib
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators import libheif
-
-    if not libheif.available():
-        raise NotImplementedError(
-            "AVIF/HEIC decoding requires the system libheif "
-            "(capability probe libheif.available found none)"
-        )
-    brand = payload[8:12]
-    needed = (
-        (libheif.COMPRESSION_AV1, "AV1 (dav1d/aom)")
-        if brand in (b"avif", b"avis")
-        else (libheif.COMPRESSION_HEVC, "HEVC (libde265)")
-        if brand in (b"heic", b"heix", b"heim", b"heis", b"hevc", b"hevx")
-        else None  # mif1/msf1: codec-agnostic brand — attempt decides
-    )
-    if needed is not None and not libheif.have_decoder(needed[0]):
-        raise NotImplementedError(
-            f"libheif has no {needed[1]} decoder plugin for "
-            f"{brand.decode('ascii', 'replace')} (capability probe "
-            "libheif.have_decoder)"
-        )
-    pixels = libheif.decode_rgb(payload)
-    h, w, c = pixels.shape
-    checksum = zlib.crc32(pixels.tobytes()) % 1_000_003
-    mean_px = float(pixels.astype(np.float64).mean()) if pixels.size else 0.0
-    return checksum, [float(w), float(h), float(8 * c), mean_px]
-
-
 def _featurize_y4m(payload: bytes) -> tuple[int, list[float]]:
     """Real (uncompressed) video featurization: demux, then
     [width, height, n_frames, mean luma] with the mean taken over each
@@ -2239,249 +605,6 @@ def _featurize_y4m(payload: bytes) -> tuple[int, list[float]]:
         float(len(frames)),
         mean_luma,
     ]
-
-
-def _parse_avi_mjpeg(payload: bytes, require_mjpeg: bool = True):
-    """Demux a Motion-JPEG AVI with the stdlib → (width, height,
-    fps, [jpeg frame bytes], n_streams). RIFF walk: 'avih' carries
-    the frame period and (advisory — some capture muxers write 0)
-    canvas dims, the FIRST video 'strh' must declare the MJPG handler
-    (any other codec — including field-interlaced MJPA, whose chunks
-    are half-height field pairs — raises NotImplementedError: that is
-    ffmpeg's job, and the reason-coded dead-letter without it), and
-    that stream's '##dc'/'##db' chunks (including ones nested in
-    'rec ' groups, and in OpenDML 'RIFF AVIX' extension segments
-    beyond the first ~1 GB) are the frames — each a complete JPEG
-    bitstream per the OpenDML convention, possibly without DHT (the
-    decoder's ``mjpeg_default_huff`` handles that). Chunks of OTHER
-    streams (audio '##wb', secondary video) are skipped by their
-    2-digit stream prefix, so frame counts and durations are the
-    primary video stream's. ``require_mjpeg=False`` demuxes ANY AVI's
-    container facts — the metadata-only pass (``video_metadata``)
-    gates on resolution/duration regardless of codec; only content
-    decode is MJPG-bound."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI (RIFF/'AVI ') payload")
-
-    width = height = None
-    usec_per_frame = 0
-    video_prefix = None  # b'00'… of the FIRST video stream
-    stream_types: list[bytes] = []
-    frames: list[bytes] = []
-
-    def walk(buf: bytes, pos: int, end: int) -> None:
-        nonlocal width, height, usec_per_frame, video_prefix
-        while pos + 8 <= end:
-            tag = buf[pos : pos + 4]
-            size = struct.unpack_from("<I", buf, pos + 4)[0]
-            body_at = pos + 8
-            if body_at + size > end:
-                raise ValueError("AVI chunk exceeds its parent")
-            if tag == b"LIST":
-                # list type occupies the first 4 body bytes
-                walk(buf, body_at + 4, body_at + size)
-            elif tag == b"RIFF" and buf[body_at : body_at + 4] == b"AVIX":
-                # OpenDML extension segment: more movi data past the
-                # first segment's 32-bit size horizon — walk it, or
-                # every frame beyond ~1 GB silently vanishes
-                walk(buf, body_at + 4, body_at + size)
-            elif tag == b"avih" and size >= 40:
-                usec_per_frame = struct.unpack_from("<I", buf, body_at)[0]
-                width, height = struct.unpack_from(
-                    "<II", buf, body_at + 32
-                )
-            elif tag == b"strh" and size >= 8:
-                fcc_type = buf[body_at : body_at + 4]
-                if fcc_type == b"vids" and video_prefix is None:
-                    handler = buf[body_at + 4 : body_at + 8]
-                    if handler.upper() != b"MJPG" and require_mjpeg:
-                        raise NotImplementedError(
-                            "AVI video codec "
-                            f"{handler!r} needs ffmpeg (capability "
-                            "probe); Motion-JPEG (MJPG) demuxes "
-                            "and decodes natively"
-                        )
-                    video_prefix = b"%02d" % len(stream_types)
-                stream_types.append(fcc_type)
-            elif (
-                len(tag) == 4
-                and tag[2:4] in (b"dc", b"db")
-                and video_prefix is not None
-                and tag[:2] == video_prefix
-            ):
-                frames.append(bytes(buf[body_at : body_at + size]))
-            pos = body_at + size + (size & 1)
-
-    walk(payload, 12, len(payload))
-    if video_prefix is None:
-        raise ValueError("AVI carries no video stream header")
-    if not frames:
-        raise ValueError("AVI carries no frames for its video stream")
-    fps = 1e6 / usec_per_frame if usec_per_frame else 0.0
-    return (
-        int(width or 0),
-        int(height or 0),
-        fps,
-        frames,
-        len(stream_types),
-    )
-
-
-def _jpeg_sof_dimensions(frame: bytes) -> tuple[int, int]:
-    """Header-only (height, width) of a JPEG bitstream: marker walk to
-    the first SOFn, no entropy decode. A DNL-deferred height (SOF
-    height 0) is recovered from the DNL segment — unambiguous to scan
-    for because 0xFF inside entropy-coded data is always stuffed
-    (0xFF00) or a restart marker (0xFFD0-D7), never 0xFFDC. The cheap
-    probe ``video_metadata`` uses when a capture muxer wrote avih
-    canvas dims of 0 (``_parse_avi_mjpeg`` documents them as
-    advisory), so the metadata surface agrees with the decode surface
-    (``_featurize_avi_mjpeg``), which always trusts SOF."""
-    import struct
-
-    if frame[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG bitstream (no SOI)")
-    pos, w = 2, None  # only w carries SOF state to the SOS branch
-    while pos + 4 <= len(frame):
-        if frame[pos] != 0xFF:
-            raise ValueError("JPEG marker walk desynchronized")
-        # ISO/IEC 10918-1 B.1.1.2: any marker may be preceded by 0xFF
-        # fill bytes — step over the run so the marker byte is never a
-        # fill byte misread as a marker
-        while pos + 4 <= len(frame) and frame[pos + 1] == 0xFF:
-            pos += 1
-        if pos + 4 > len(frame):
-            break
-        marker = frame[pos + 1]
-        if marker in (0x01, *range(0xD0, 0xD8)):  # TEM/RSTn: bare
-            pos += 2
-            continue
-        size = struct.unpack_from(">H", frame, pos + 2)[0]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            h, w = struct.unpack_from(">HH", frame, pos + 5)
-            if h:
-                return h, w
-            # DNL-deferred height: keep walking to SOS — the raw FF DC
-            # byte-search is only unambiguous INSIDE entropy-coded data
-            # (0xFF there is always stuffed or a restart marker); a
-            # DHT/DQT/APPn payload between SOF and SOS may contain the
-            # pair by coincidence, so it must be stepped over, not
-            # scanned
-        elif marker == 0xDA:  # SOS: entropy data follows its header
-            if w is None:
-                raise ValueError("SOS before any SOF marker")
-            at = frame.find(b"\xff\xdc", pos + 2 + size)
-            if at < 0 or at + 6 > len(frame):
-                raise ValueError("SOF height 0 and no DNL segment")
-            return struct.unpack_from(">H", frame, at + 4)[0], w
-        pos += 2 + size
-    raise ValueError("no SOF marker before end of data")
-
-
-def _featurize_avi_mjpeg(payload: bytes) -> tuple[int, list[float]]:
-    """Real COMPRESSED-video featurization on a bare cluster: demux
-    the Motion-JPEG AVI, decode every frame through the native JPEG
-    decoder (Annex-K default tables implied when a frame omits DHT —
-    the MJPEG convention), and report the ``_featurize_y4m`` contract
-    [width, height, n_frames, mean luma] with the checksum over the
-    concatenated DECODED rasters (the decoder is bit-exact, so the
-    fingerprint is environment-stable; compressed bytes vary by
-    encoder whim for identical pixels). The JPEG SOF dimensions are
-    authoritative (capture muxers routinely write avih dims of 0 or
-    stale values); frames must agree with EACH OTHER."""
-    import zlib
-
-    import numpy as np
-
-    _aw, _ah, _fps, frames, _n = _parse_avi_mjpeg(payload)
-    crc = 0
-    total, count = 0.0, 0
-    width = height = None
-    for frame in frames:
-        px = _jpeg_decode(frame, mjpeg_default_huff=True)
-        if width is None:
-            height, width = px.shape[:2]
-        elif px.shape[1] != width or px.shape[0] != height:
-            raise ValueError(
-                "AVI frames disagree on dimensions "
-                f"({px.shape[1]}x{px.shape[0]} vs {width}x{height})"
-            )
-        crc = zlib.crc32(px.tobytes(), crc)
-        # luma per BT.601 for color frames; the plane itself for gray.
-        # A 4-channel frame (Adobe CMYK/YCCK MJPEG) is stored-inverted
-        # ink, not RGB — composite it first or the BT.601 weights land
-        # on C/M/Y planes and silently skew the feature. The CRC stays
-        # over the decoded stored samples (the decoder contract).
-        if px.shape[2] == 1:
-            luma = px[:, :, 0].astype(np.float64)
-        else:
-            if px.shape[2] == 4:
-                px = _jpeg_cmyk_to_rgb(px)
-            p = px.astype(np.float64)
-            luma = 0.299 * p[..., 0] + 0.587 * p[..., 1] + 0.114 * p[..., 2]
-        total += float(luma.sum())
-        count += luma.size
-    return crc % 1_000_003, [
-        float(width),
-        float(height),
-        float(len(frames)),
-        total / count if count else 0.0,
-    ]
-
-
-def _avi_encode_mjpeg(frames, quality: int = 85, fps: int = 10) -> bytes:
-    """Minimal Motion-JPEG AVI fixture encoder: (h, w, 1|3) uint8
-    rasters → RIFF/'AVI ' with avih + MJPG strh + a movi LIST of
-    '00dc' JPEG chunks (each through ``_jpeg_encode_baseline``) —
-    genuine compressed-video payloads for tests without ffmpeg."""
-    import struct
-
-    import numpy as np
-
-    if not frames:
-        raise ValueError("need at least one frame")
-    first = np.asarray(frames[0])
-    h, w = first.shape[:2]
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps, 0, 0, 0x10, len(frames), 0, 1, 0, w, h,
-        0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MJPG" + struct.pack(
-            "<IHHIIIIIIIIhhhh", 0, 0, 0, 0, 1, fps, 0, len(frames),
-            0, 0, 0, 0, 0, w, h,
-        )
-    )
-    strf = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24,
-        int.from_bytes(b"MJPG", "little"), w * h * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(
-        b"movi",
-        b"".join(
-            chunk(b"00dc", _jpeg_encode_baseline(f, quality=quality))
-            for f in frames
-        ),
-    )
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
 
 
 def _parse_wav_raw(payload: bytes):
@@ -2653,50 +776,32 @@ def _featurize_wav(payload: bytes) -> tuple[int, list[float]]:
 
 
 def _stdlib_featurize(media_type: str, payload: bytes) -> tuple[int, list[float]]:
-    """REAL decoders built from the stdlib, so the mapInPandas plumbing is
-    exercised end-to-end by genuine decoding (not the deterministic fake):
+    """Real decoders built from the stdlib and numpy, dispatched on the
+    top-level media type and then on the payload magic (a mislabeled
+    subtype still decodes):
 
-    - ``audio/*``: dispatched on the payload magic — WAV decodes
-      through one native RIFF parse (``_featurize_wav``; no stdlib
-      ``wave`` on the hot path — it refuses non-PCM and, before
-      Python 3.12, the extensible container): integer PCM at every
-      width, IEEE float, and G.711 A-law/µ-law via the
-      formula-generated companding tables (``_g711_table``); FLAC
-      decodes natively (``operators/flac.py``, full RFC 9639:
-      fixed/LPC prediction, Rice partitions, stereo decorrelation,
-      CRC + MD5 verification); feature = [duration_s, framerate,
-      n_channels, mean |amplitude|] over the decoded PCM frames,
-      checksum = crc32 of the interleaved little-endian PCM (a WAV
-      and a FLAC of the same PCM fingerprint identically; G.711
-      fingerprints its EXPANDED linear samples — the companded bytes
-      are a wire format). Other audio codecs (mp3/ogg/opus/aac, and
-      table-bound WAV tags like ADPCM) raise → ``decoder_gap``.
-    - ``image/*``: BMP (BI_RGB 8/24/32bpp), binary PNM (P5/P6), PNG
-      (8-bit non-interlaced, zlib inflate + full unfilter), GIF
-      (87a/89a LZW, interlace, palette expansion), baseline JPEG
-      (huffman sequential DCT, ``_jpeg_decode``), and lossless WebP
-      (``webp.vp8l_decode``, full VP8L) decode for real — dispatched
-      on the payload magic so mislabeled subtypes still decode; lossy
-      WebP decodes via the system libwebp when its probe resolves,
-      AVIF/HEIC via the system libheif (dav1d/aom/libde265 plugins).
-      Remaining codec-bound formats (arithmetic/lossless JPEG)
-      need PIL and raise; animated WebP yields frame 1 (the GIF
-      discipline).
-    - ``video/*``: uncompressed YUV4MPEG2 demuxes natively (frame split +
-      luma stats) and Motion-JPEG AVI decodes natively (every frame
-      through the bit-exact JPEG decoder); other compressed
-      containers (mp4/webm/...) need ffmpeg —
-      not installed here — and raise (the remaining honest stub).
-    - anything else: treated as opaque binary — crc32 checksum and
-      compressibility features (zlib ratio), the standard corpus-QA signal.
-    """
+    - ``audio/*``: WAV through one native RIFF parse (``_featurize_wav``:
+      integer PCM at every width, IEEE float, G.711 A-law/µ-law via the
+      formula-generated companding tables) and FLAC natively
+      (``operators/flac.py``); feature = [duration_s, framerate,
+      n_channels, mean |amplitude|], checksum = crc32 of the canonical
+      little-endian PCM, so a WAV and a FLAC of the same audio
+      fingerprint identically.
+    - ``image/*``: BMP, binary PNM, PNG and GIF decode to a normalized
+      raster; feature = [width, height, depth, mean pixel], checksum =
+      crc32 of the raster, so one image stored in any of them
+      fingerprints identically.
+    - ``video/*``: uncompressed YUV4MPEG2 demuxes natively (frame split
+      + luma stats).
+    - anything else: opaque binary — crc32 checksum and compressibility
+      features (zlib ratio), the standard corpus-QA signal.
+
+    Any other audio, image or video container raises
+    ``NotImplementedError`` (the ``decoder_gap`` reason)."""
     import zlib
 
-    if media_type.partition("/")[0] == "audio":
-        # magic dispatch, like images: a mislabeled subtype still
-        # decodes, an unrecognized audio container is a decoder_gap
-        # (mp3/ogg/opus/aac need a codec library), and a recognized
-        # container that fails to parse stays `corrupt`
+    kind = media_type.partition("/")[0]
+    if kind == "audio":
         if payload[:4] == b"fLaC":
             from inbev_data_engineering_case_spark.operators.flac import (
                 featurize_flac,
@@ -2704,19 +809,13 @@ def _stdlib_featurize(media_type: str, payload: bytes) -> tuple[int, list[float]
 
             return featurize_flac(payload)
         if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            # one RIFF parse for every WAV flavor: integer PCM
-            # (extensible container included — stdlib wave rejects it
-            # before 3.12), IEEE float, and G.711 A-law/µ-law via the
-            # formula-generated companding tables; table-bound tags
-            # (ADPCM/GSM) raise NotImplementedError → decoder_gap
             return _featurize_wav(payload)
         raise NotImplementedError(
-            "audio codec decoding beyond WAV and FLAC requires a "
-            "codec library the capability probes did not find; WAV "
-            "(integer/float PCM + G.711, _featurize_wav) and FLAC "
-            "(operators/flac.py, full RFC 9639) decode natively."
+            "audio decoding beyond WAV and FLAC requires a codec "
+            "library; WAV (integer/float PCM, G.711) and FLAC decode "
+            "natively"
         )
-    if media_type.partition("/")[0] == "image":
+    if kind == "image":
         if payload[:2] == b"BM":
             return _featurize_bmp(payload)
         if payload[:2] in (b"P5", b"P6"):
@@ -2725,128 +824,16 @@ def _stdlib_featurize(media_type: str, payload: bytes) -> tuple[int, list[float]
             return _featurize_png(payload)
         if payload[:4] == b"GIF8":
             return _featurize_gif(payload)
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-            from inbev_data_engineering_case_spark.operators.webp import (
-                featurize_webp,
-            )
-
-            try:
-                # lossless VP8L decodes natively (full RFC 9649
-                # feature set); lossy VP8 / VP8X stills decode via
-                # the system libwebp when its probe resolves
-                return featurize_webp(payload)
-            except NotImplementedError:
-                if _optional_pil() is None:
-                    # no libwebp AND no PIL for a lossy still or a
-                    # lossy animation first frame → decoder_gap
-                    raise
-                # PIL available: fall through to it
-        else:
-            from inbev_data_engineering_case_spark.operators.libheif import (
-                is_heif,
-            )
-
-            if is_heif(payload):
-                # AVIF/HEIC through the system libheif (dav1d/aom/
-                # libde265 plugins); absent lib or plugin →
-                # decoder_gap unless PIL can take it (pillow-heif).
-                # Stock Pillow CANNOT decode HEIF — if it fails too,
-                # the CAPABILITY gap is the true reason, not corrupt
-                # data (the G.711 misfiling lesson)
-                try:
-                    return _featurize_heif(payload)
-                except NotImplementedError as gap:
-                    if _optional_pil() is None:
-                        raise
-                    try:
-                        return _featurize_via_pil(payload)
-                    except Exception:
-                        raise gap from None
-        if _optional_pil() is not None:
-            return _featurize_via_pil(payload)
-        if payload[:2] == b"\xff\xd8":
-            # no PIL: baseline/extended-sequential/progressive/CMYK
-            # JPEG decodes natively; arithmetic/12-bit/lossless
-            # variants raise -> dead-letter
-            return _featurize_jpeg(payload)
         raise NotImplementedError(
-            "codec-bound image decoding requires a codec library the "
-            "capability probes did not find (_optional_pil; lossy WebP "
-            "also tries the system libwebp via libwebp.available, "
-            "AVIF/HEIC the system libheif via libheif.available); "
-            "BMP, binary PNM, PNG, GIF, baseline JPEG, and lossless "
-            "WebP (VP8L) decode natively — see _featurize_bmp/"
-            "_featurize_pnm/_featurize_png/_featurize_gif/"
-            "_featurize_jpeg/webp.featurize_webp."
+            "codec-bound image decoding requires a codec library; BMP, "
+            "binary PNM, PNG and GIF decode natively"
         )
-    if media_type.partition("/")[0] == "video":
+    if kind == "video":
         if payload[:9] == b"YUV4MPEG2":
             return _featurize_y4m(payload)
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            try:
-                # Motion-JPEG AVI: native demux + the native JPEG
-                # decoder — real compressed-video content on a bare
-                # cluster, deterministic-fingerprint reference
-                return _featurize_avi_mjpeg(payload)
-            except NotImplementedError:
-                if _optional_ffmpeg() is None:
-                    raise  # non-MJPEG AVI codec → decoder_gap
-            except ValueError:
-                # the strict native parser/decoder rejected it; a
-                # more tolerant ffmpeg may still decode (pre-AVI-path
-                # behavior) — without one, corrupt stands
-                if _optional_ffmpeg() is None:
-                    raise
-        if len(payload) >= 12 and payload[4:8] == b"ftyp":
-            try:
-                # AV1-in-MP4: first sync sample re-boxed as a one-item
-                # AVIF through the libheif dav1d/aom plugin (the
-                # first-frame discipline); no av01 track or no plugin
-                # → decoder_gap unless ffmpeg can take the container
-                return _featurize_mp4_av1(payload)
-            except NotImplementedError:
-                if _optional_ffmpeg() is None:
-                    raise
-            except ValueError as exc:
-                # the strict native demuxer rejected it; unlike the
-                # AVI branch (whose native decoder is COMPLETE for
-                # MJPEG, so its ValueError means truly malformed),
-                # this path is PARTIAL — a fragmented MP4 keeps
-                # samples in moof and raises here while being a
-                # perfectly valid file. With ffmpeg, fall through;
-                # without, the honest verdict is capability gap, not
-                # corrupt (the G.711 misfiling lesson)
-                if _optional_ffmpeg() is None:
-                    raise NotImplementedError(
-                        f"MP4 native demux covers flat AV1 tracks only"
-                        f" ({exc}); other layouts/codecs need ffmpeg"
-                        " (capability probe _optional_ffmpeg)"
-                    ) from exc
-        if payload[:4] == b"\x1aE\xdf\xa3":
-            try:
-                # AV1-in-WebM: EBML demux, same re-box path
-                return _featurize_webm_av1(payload)
-            except NotImplementedError:
-                if _optional_ffmpeg() is None:
-                    raise
-            except ValueError as exc:
-                # same partial-parser honesty as the MP4 branch
-                if _optional_ffmpeg() is None:
-                    raise NotImplementedError(
-                        f"WebM native demux covers simple AV1 layouts"
-                        f" only ({exc}); other layouts/codecs need"
-                        " ffmpeg (capability probe _optional_ffmpeg)"
-                    ) from exc
-        if _optional_ffmpeg() is not None:
-            return _featurize_y4m(_ffmpeg_to_y4m(payload))
         raise NotImplementedError(
-            "compressed video decoding requires ffmpeg (capability probe "
-            "_optional_ffmpeg found none on PATH) or pyav; uncompressed "
-            "YUV4MPEG2 demuxes natively (_featurize_y4m/_parse_y4m), "
-            "Motion-JPEG AVI decodes natively (_featurize_avi_mjpeg), "
-            "and AV1 in MP4 or WebM decodes its first sync sample "
-            "through the system libheif (_featurize_mp4_av1 / "
-            "_featurize_webm_av1)."
+            "compressed video decoding requires a codec library such "
+            "as ffmpeg; uncompressed YUV4MPEG2 demuxes natively"
         )
     checksum = zlib.crc32(payload) % 1_000_003
     n = len(payload)
@@ -2861,19 +848,17 @@ def decode_features(
 ) -> DataFrame:
     """Decode/feature-extract each asset via Arrow-batched ``mapInPandas``.
 
-    ``real_decoder=True`` routes to the stdlib decoders in
-    ``_stdlib_featurize`` (real WAV/BMP/PNM/PNG/Y4M decoding, crc32/zlib
-    features for opaque binary; only codec-bound formats — JPEG, mp4 —
-    still need PIL/ffmpeg). The default fake featurizer stays the
-    oracle-checked path — its output is reproducible in SQL, the
-    crc32/PCM decoders' is not.
+    The default is the deterministic byte-sum stand-in
+    ``_fake_featurize``: its output is reproducible in SQL, which is what
+    the ``q_multimodal_features`` oracle checks. ``real_decoder=True``
+    routes to the stdlib decoders in ``_stdlib_featurize`` (lossless
+    images, YUV4MPEG2 video, WAV and FLAC audio; crc32/zlib features
+    for opaque binary).
 
     Decode failures are **dead-lettered, not raised**: a corrupt or
-    codec-bound asset yields its row with ``decode_ok=false``, null
-    checksum/feature, and the error message in ``error`` — at corpus
-    scale one bad JPEG in 100 TB must not kill the job after task
-    retries. ``strict=True`` restores the raise (debugging / hard
-    quality gates)."""
+    unsupported asset yields its row with ``decode_ok=false``, null
+    checksum/feature, the message in ``error`` and a ``reason`` code
+    (``_dead_letter_reason``). ``strict=True`` raises instead."""
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -2906,7 +891,10 @@ def decode_features(
                 {
                     "asset_id": batch["asset_id"],
                     "media_type": batch["media_type"],
-                    "n_bytes": [len(bytes(p)) if p is not None else 0 for p in batch["payload"]],
+                    "n_bytes": [
+                        len(bytes(p)) if p is not None else 0
+                        for p in batch["payload"]
+                    ],
                     "checksum": pd.array(checksums, dtype="Int64"),
                     "feature": features,
                     "decode_ok": oks,
@@ -2918,44 +906,6 @@ def decode_features(
     return assets.mapInPandas(featurize, schema=FEATURE_SCHEMA)
 
 
-def decode_reason_report(features: DataFrame) -> DataFrame:
-    """Corpus QA report over ``decode_features`` output: one row per
-    (media_type, reason, detail) with exact counts and integer-ppm
-    corpus share — the 'how big is this decoder gap' question answered
-    BEFORE anyone invests in the decoder (exactly how SOF2 support was
-    sized in r8, then built in r9), with decoder gaps (recoverable by a
-    decoder/runtime investment) never lumped in with corrupt junk.
-
-    ``detail`` strips the error message at the first parenthesis (the
-    routing hint), so each distinct gap kind — arithmetic JPEG, lossy
-    WebP VP8, codec video — sizes as its own line while
-    corrupt messages with variable specifics still group usefully.
-    Decoded-ok rows aggregate under reason ``ok``. Share denominator
-    rides as a broadcast 1-row aggregate; the grouped table is
-    kinds-sized, KB at any corpus size.
-    """
-    total = features.agg(F.count("*").alias("_total"))
-    kinds = features.groupBy(
-        "media_type",
-        F.coalesce(F.col("reason"), F.lit("ok")).alias("reason"),
-        F.when(
-            F.col("error").isNotNull(),
-            F.trim(F.regexp_replace(F.col("error"), r"\(.*$", "")),
-        ).alias("detail"),
-    ).agg(F.count("*").alias("n_assets"))
-    return (
-        kinds.join(F.broadcast(total))
-        .select(
-            "media_type",
-            "reason",
-            "detail",
-            "n_assets",
-            F.expr("(n_assets * 1000000) div _total").alias("share_ppm"),
-        )
-        .orderBy("media_type", "reason", "detail")
-    )
-
-
 RESIZE_SCHEMA = T.StructType(
     list(ASSET_SCHEMA.fields)
     + [
@@ -2964,27 +914,15 @@ RESIZE_SCHEMA = T.StructType(
     ]
 )
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("frame_idx", T.LongType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("decode_ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
 
 def _decode_image_pixels(payload: bytes):
-    """Decode any natively-supported image payload to an (h, w, c) uint8
-    pixel array in RGB/grayscale order: BMP rows are flipped to top-down
-    and BGR(A) reordered to RGB; PNG alpha is dropped (resize targets don't
-    carry it through PNM); PNM is already raster-ordered; baseline JPEG
-    decodes through ``_jpeg_decode``; WebP through
-    ``webp.webp_decode`` (alpha dropped like PNG; lossy VP8 rides the
-    system-libwebp probe inside it). Raises NotImplementedError for
-    the remaining codec-bound formats (arithmetic JPEG, ...)."""
+    """Decode a BMP, binary PNM, PNG or GIF payload to an (h, w, c) uint8
+    raster in RGB/grayscale order: BMP rows are flipped to top-down,
+    BGR(A) reordered to RGB and 8-bit palettes expanded; PNG alpha is
+    dropped; PNM is already raster-ordered; GIF yields its first frame.
+    Any other payload raises ``NotImplementedError``: no lossy or
+    codec-bound image decoder ships with the engine, and callers
+    dead-letter the row."""
     import struct
 
     import numpy as np
@@ -3051,49 +989,9 @@ def _decode_image_pixels(payload: bytes):
         return np.ascontiguousarray(pixels)
     if payload[:4] == b"GIF8":
         return _gif_decode_pixels(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from inbev_data_engineering_case_spark.operators.webp import (
-            webp_decode,
-        )
-
-        try:
-            pixels = webp_decode(payload)
-            return np.ascontiguousarray(pixels[:, :, :3])  # drop alpha
-        except NotImplementedError:
-            if _optional_pil() is None:
-                raise  # lossy VP8 stays the capability gap
-    else:
-        from inbev_data_engineering_case_spark.operators.libheif import (
-            decode_rgb,
-            is_heif,
-        )
-
-        if is_heif(payload):
-            try:  # AVIF/HEIC via the system libheif
-                return np.ascontiguousarray(decode_rgb(payload))
-            except NotImplementedError as gap:
-                if _optional_pil() is None:
-                    raise
-                # stock Pillow cannot decode HEIF; if it also fails,
-                # the capability gap is the true reason (decoder_gap,
-                # not corrupt)
-                try:
-                    return _pil_decode_pixels(payload)
-                except Exception:
-                    raise gap from None
-    if _optional_pil() is not None:
-        return _pil_decode_pixels(payload)
-    if payload[:2] == b"\xff\xd8":
-        pixels = _jpeg_decode(payload)
-        if pixels.shape[2] == 4:  # CMYK/YCCK: composite for resizing
-            pixels = _jpeg_cmyk_to_rgb(pixels)
-        return pixels
     raise NotImplementedError(
-        "codec-bound image resizing requires a codec library the "
-        "capability probes did not find; BMP, binary PNM, PNG, GIF, "
-        "baseline/progressive/CMYK JPEG, WebP (VP8L natively, "
-        "VP8 via the system libwebp), and AVIF/HEIC (via the system "
-        "libheif) resize natively."
+        "codec-bound image decoding requires a codec library; BMP, "
+        "binary PNM, PNG and GIF decode natively"
     )
 
 
@@ -3112,7 +1010,7 @@ def _encode_pnm(pixels) -> tuple[bytes, str]:
 
 
 def _resize_image(payload: bytes, target_bytes: int) -> tuple[bytes, str]:
-    """Real image resize: decode (BMP/PNM/PNG) → nearest-neighbor
+    """Real image resize: decode (BMP/PNM/PNG/GIF) → nearest-neighbor
     downsample so the raster fits ``target_bytes`` → re-encode as binary
     PNM. Never upsamples; aspect ratio is preserved."""
     import numpy as np
@@ -3224,7 +1122,7 @@ def resize_assets(
     """Resize each asset payload (1→1 binary transform, asset schema plus
     the ``decode_ok``/``error`` dead-letter columns out). The real branch
     decodes → resamples → re-encodes with the stdlib decoders: images
-    (BMP/PNM/PNG) are nearest-neighbor downsampled and re-encoded as
+    (BMP/PNM/PNG/GIF) are nearest-neighbor downsampled and re-encoded as
     binary PNM (media_type updated to match), WAV and FLAC audio are
     frame-decimated with duration preserved (FLAC re-encodes through
     the native encoder). Opaque binary — and everything under the
@@ -3262,9 +1160,8 @@ def resize_assets(
                             mtype = "audio/wav"
                         else:
                             raise NotImplementedError(
-                                "audio codec resize beyond WAV and FLAC "
-                                "requires a codec library the capability "
-                                "probes did not find"
+                                "audio resize beyond WAV and FLAC "
+                                "requires a codec library"
                             )
                     else:
                         resized = b[:target_bytes].ljust(target_bytes, b"\0")
@@ -3307,22 +1204,20 @@ def sample_frames(
     real_decoder: bool = False,
     strict: bool = False,
 ) -> DataFrame:
-    """Frame-sample each asset (1→N explode: one output row per kept frame).
-    Under ``real_decoder=True``, video payloads are genuinely demuxed:
-    uncompressed YUV4MPEG2 streams split at FRAME markers and every n-th
-    raw planar frame is emitted with its ORIGINAL frame index (so
-    downstream timing math stays honest). Non-video payloads — and
-    everything under the default stub — are treated as fixed-size byte
-    chunks. The distributed shape is the production one either way:
-    ``mapInPandas`` may yield more rows than it consumes, frames inherit
-    the asset id for downstream joins, and no shuffle happens until
-    something groups on asset_id.
+    """Frame-sample each asset (1→N explode: one output row per kept
+    frame). Payloads are cut into ``frame_bytes``-sized chunks and every
+    ``every_n``-th chunk is emitted with its original index, so
+    downstream timing math stays honest. Under ``real_decoder=True``,
+    video payloads are demuxed instead: uncompressed YUV4MPEG2 streams
+    split at FRAME markers into raw planar frames, and any other video
+    container raises. ``mapInPandas`` may yield more rows than it
+    consumes, frames inherit the asset id for downstream joins, and no
+    shuffle happens until something groups on asset_id.
 
-    A demux failure (compressed container — needs ffmpeg, absent here —
-    or corrupt stream) dead-letters the asset as ONE marker row:
+    A demux failure dead-letters the asset as ONE marker row:
     ``frame_idx=-1``, null frame, ``decode_ok`` false, message in
-    ``error`` — so the asset stays visible downstream (counts, quarantine
-    routing) instead of killing the job. ``strict=True`` raises."""
+    ``error``, so the asset stays visible downstream instead of killing
+    the job. ``strict=True`` raises."""
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -3333,36 +1228,13 @@ def sample_frames(
                 b = bytes(payload) if payload is not None else b""
                 try:
                     if real_decoder and media_type.partition("/")[0] == "video":
-                        if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                            # Motion-JPEG AVI: the natural frame unit
-                            # IS the per-frame JPEG payload — sampled
-                            # without decoding (decode happens where
-                            # a consumer needs pixels). A non-MJPEG
-                            # codec OR a container the strict native
-                            # parser rejects falls through to ffmpeg
-                            # when present (the pre-AVI-path route).
-                            try:
-                                _w, _h, _fps, chunks, _n = (
-                                    _parse_avi_mjpeg(b)
-                                )
-                            except (NotImplementedError, ValueError):
-                                if _optional_ffmpeg() is None:
-                                    raise
-                                _w, _h, chunks = _parse_y4m(
-                                    _ffmpeg_to_y4m(b)
-                                )
-                        else:
-                            if b[:9] != b"YUV4MPEG2":
-                                if _optional_ffmpeg() is not None:
-                                    b = _ffmpeg_to_y4m(b)
-                                else:
-                                    raise NotImplementedError(
-                                        "compressed video demux requires "
-                                        "ffmpeg (capability probe found "
-                                        "none) or pyav; YUV4MPEG2 and "
-                                        "Motion-JPEG AVI demux natively."
-                                    )
-                            _w, _h, chunks = _parse_y4m(b)
+                        if b[:9] != b"YUV4MPEG2":
+                            raise NotImplementedError(
+                                "compressed video demux requires a "
+                                "codec library such as ffmpeg; "
+                                "YUV4MPEG2 demuxes natively"
+                            )
+                        _w, _h, chunks = _parse_y4m(b)
                     else:
                         chunks = [
                             b[o : o + frame_bytes]
@@ -3400,14 +1272,6 @@ def sample_frames(
     return assets.mapInPandas(sample, schema=FRAME_SCHEMA)
 
 
-def target_rows_per_partition(
-    avg_payload_bytes: int, budget_bytes: int = 256 * 1024 * 1024
-) -> int:
-    """Rows per partition so a partition's payloads fit the memory budget —
-    the repartition hint for large media (e.g. 2 MB images → ~128 rows)."""
-    return max(1, budget_bytes // max(avg_payload_bytes, 1))
-
-
 # ---------------------------------------------------------------------------
 # Perceptual image near-dup: dHash (difference hash) over the stdlib
 # decoders, bridging the multimodal family to the dedup machinery — exact
@@ -3428,17 +1292,13 @@ DHASH_SCHEMA = T.StructType(
 
 
 def _dhash64(pixels) -> int:
-    """64-bit difference hash: luma → nearest-neighbor 9×8 downsample →
-    horizontal gradient signs. Resolution/re-encode invariant by
-    construction (any decode path yielding the same pixels — or a
+    """64-bit difference hash of an (h, w, c) raster: luma →
+    nearest-neighbor 9×8 downsample → horizontal gradient signs.
+    Resolution/re-encode invariant by construction (any decode path yielding the same pixels — or a
     resampled version of them — yields the same gradient signs)."""
     import numpy as np
 
-    gray = (
-        pixels.astype(np.float64).mean(axis=2)
-        if pixels.ndim == 3
-        else pixels.astype(np.float64)
-    )
+    gray = pixels.astype(np.float64).mean(axis=2)
     h, w = gray.shape
     ys = (np.arange(8) * h) // 8
     xs = (np.arange(9) * w) // 9
@@ -3452,10 +1312,11 @@ def _dhash64(pixels) -> int:
 
 def image_dhash(assets: DataFrame, strict: bool = False) -> DataFrame:
     """Perceptual hash per image asset via Arrow-batched ``mapInPandas``
-    (same batch shape and dead-letter contract as ``decode_features``):
-    ``(asset_id, media_type, dhash, decode_ok, error)``. Non-image and
-    codec-bound payloads dead-letter unless PIL is importable (the
-    capability-detected path inside ``_decode_image_pixels``)."""
+    (same batch shape as ``decode_features``):
+    ``(asset_id, media_type, dhash, decode_ok, error)``. Payloads that are
+    not BMP, binary PNM, PNG or GIF, and malformed ones, dead-letter with
+    ``decode_ok=false`` and the message in ``error``; ``strict=True``
+    raises instead."""
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
@@ -3576,8 +1437,8 @@ def image_near_dup_keep(
     representative is a smaller id drops, exactly the near-dup survivor
     policy ``curate_corpus`` applies to text. Undecodable assets
     (dead-lettered by ``image_dhash``) cannot pair, so they always
-    survive this gate — route them through ``decode_features``' error
-    column if they should be dropped instead."""
+    survive this gate — filter on ``image_dhash``'s ``decode_ok`` column
+    if they should be dropped instead."""
     from inbev_data_engineering_case_spark.operators.dedup import (
         dedup_components,
     )
@@ -3618,601 +1479,3 @@ def pnm_assets_from_documents(
             F.encode(F.substring(text_col, 1, 72), "utf-8"),
         ).alias("payload"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Video metadata extraction (ISO BMFF box walk — no codec required)
-# ---------------------------------------------------------------------------
-
-VIDEO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("n_tracks", T.IntegerType(), True),
-        T.StructField("meta_ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def _iter_boxes(buf: bytes, start: int, end: int):
-    """Yield (box_type, body_start, body_end) over an ISO BMFF box range,
-    handling 64-bit largesize and size-0 (extends-to-end) boxes."""
-    import struct
-
-    pos = start
-    while pos + 8 <= end:
-        size = struct.unpack_from(">I", buf, pos)[0]
-        btype = buf[pos + 4 : pos + 8]
-        body = pos + 8
-        if size == 1:
-            if pos + 16 > end:
-                raise ValueError("BMFF largesize truncated")
-            size = struct.unpack_from(">Q", buf, pos + 8)[0]
-            body = pos + 16
-        elif size == 0:
-            size = end - pos
-        if size < body - pos or pos + size > end:
-            raise ValueError(f"BMFF box {btype!r} overruns its container")
-        yield btype, body, pos + size
-        pos += size
-
-
-def _parse_mp4_metadata(payload: bytes) -> tuple[int, int, int, int]:
-    """(width, height, duration_ms, n_tracks) from an MP4/MOV container's
-    ``moov`` structure: ``mvhd`` carries timescale+duration, each
-    ``trak``'s ``tkhd`` carries the 16.16 fixed-point display size (audio
-    tracks report 0x0; the max over tracks is the video size). Only box
-    headers and two leaf payloads are read — no sample data, no codec."""
-    import struct
-
-    moov = None
-    for btype, body, bend in _iter_boxes(payload, 0, len(payload)):
-        if btype == b"moov":
-            moov = (body, bend)
-            break
-    if moov is None:
-        raise ValueError("no moov box (not an MP4/MOV, or metadata-last "
-                         "file truncated before its moov)")
-    width = height = n_tracks = 0
-    duration_ms = None
-    for btype, body, bend in _iter_boxes(payload, *moov):
-        if btype == b"mvhd":
-            version = payload[body]
-            if bend - body < (32 if version == 1 else 20):
-                raise ValueError("mvhd truncated")
-            if version == 1:
-                timescale = struct.unpack_from(">I", payload, body + 20)[0]
-                duration = struct.unpack_from(">Q", payload, body + 24)[0]
-            else:
-                timescale = struct.unpack_from(">I", payload, body + 12)[0]
-                duration = struct.unpack_from(">I", payload, body + 16)[0]
-            if timescale:
-                duration_ms = duration * 1000 // timescale
-        elif btype == b"trak":
-            n_tracks += 1
-            for t2, b2, e2 in _iter_boxes(payload, body, bend):
-                if t2 == b"tkhd":
-                    # display size: the final 8 bytes, 16.16 fixed point.
-                    # A real tkhd body is >=84 bytes (v0); anything
-                    # shorter would make e2-8 reach back into the
-                    # preceding sibling and report garbage dimensions
-                    # with meta_ok=true — dead-letter it instead
-                    if e2 - b2 < 84:
-                        raise ValueError("tkhd truncated")
-                    w = struct.unpack_from(">I", payload, e2 - 8)[0] >> 16
-                    h = struct.unpack_from(">I", payload, e2 - 4)[0] >> 16
-                    width, height = max(width, w), max(height, h)
-    if duration_ms is None:
-        raise ValueError("moov has no mvhd")
-    return width, height, duration_ms, n_tracks
-
-
-def _mp4_av1_keyframe(payload: bytes) -> tuple[bytes, int, int, bytes]:
-    """Demux the first SYNC sample of an AV1 (``av01``) video track out
-    of an ISO BMFF container → ``(av1C box bytes, width, height, sample
-    bytes)``.
-
-    Pure header walk over the existing ``_iter_boxes`` machinery: the
-    ``stsd`` VisualSampleEntry carries the coded dimensions and the
-    ``av1C`` configuration box (copied VERBATIM — it is the decoder's
-    sequence-header source), ``stss`` names the first sync sample
-    (absent table = every sample is sync, take 1), and the
-    ``stsc``/``stsz``/``stco``(``co64``) tables resolve that sample's
-    absolute byte range. No bitstream parsing — the OBUs hand off to
-    the AV1 decoder untouched. Raises NotImplementedError when no
-    ``av01`` track exists (a different codec's MP4 — the honest
-    decoder_gap reason) and ValueError for malformed sample tables."""
-    import struct
-
-    def children(rng):
-        return list(_iter_boxes(payload, *rng))
-
-    moov = next(
-        (
-            (b, e)
-            for t, b, e in _iter_boxes(payload, 0, len(payload))
-            if t == b"moov"
-        ),
-        None,
-    )
-    if moov is None:
-        raise ValueError("no moov box")
-    for t_trak, b_trak, e_trak in _iter_boxes(payload, *moov):
-        if t_trak != b"trak":
-            continue
-        stbl = None
-        walk = (b_trak, e_trak)
-        for want in (b"mdia", b"minf", b"stbl"):
-            nxt = next(
-                (
-                    (b, e)
-                    for t, b, e in _iter_boxes(payload, *walk)
-                    if t == want
-                ),
-                None,
-            )
-            if nxt is None:
-                break
-            walk = nxt
-        else:
-            stbl = walk
-        if stbl is None:
-            continue
-        boxes = {t: (b, e) for t, b, e in children(stbl)}
-        if b"stsd" not in boxes:
-            continue
-        sb, se = boxes[b"stsd"]
-        entry = next(
-            (
-                (b, e)
-                for t, b, e in _iter_boxes(payload, sb + 8, se)
-                if t == b"av01"
-            ),
-            None,
-        )
-        if entry is None:
-            continue
-        eb, ee = entry
-        if ee - eb < 78:
-            raise ValueError("av01 sample entry truncated")
-        width, height = struct.unpack_from(">HH", payload, eb + 24)
-        av1c = next(
-            (
-                payload[b - 8 : e]
-                for t, b, e in _iter_boxes(payload, eb + 78, ee)
-                if t == b"av1C"
-            ),
-            None,
-        )
-        if av1c is None:
-            raise ValueError("av01 sample entry has no av1C box")
-
-        def full(name, min_len):
-            if name not in boxes:
-                raise ValueError(f"av01 stbl has no {name.decode()} box")
-            b, e = boxes[name]
-            if e - b < min_len:
-                raise ValueError(f"{name.decode()} truncated")
-            return b, e
-
-        # first sync sample (1-based); no stss table = all sync. Every
-        # table read below is bounded to its declaring box — a lying
-        # entry_count must raise, never read an adjacent box's bytes
-        # as sample data (silent wrong features)
-        sync = 1
-        if b"stss" in boxes:
-            b, e = full(b"stss", 8)
-            if struct.unpack_from(">I", payload, b + 4)[0] >= 1:
-                if b + 12 > e:
-                    raise ValueError("stss table truncated")
-                sync = struct.unpack_from(">I", payload, b + 8)[0]
-        b, e_stsz = full(b"stsz", 12)
-        fixed_size, n_samples = struct.unpack_from(">II", payload, b + 4)
-        if sync < 1 or sync > n_samples:
-            raise ValueError("sync sample out of range")
-        if not fixed_size and b + 12 + 4 * n_samples > e_stsz:
-            raise ValueError("stsz table truncated")
-
-        def sample_size(i):  # 1-based; i <= n_samples checked above
-            if fixed_size:
-                return fixed_size
-            return struct.unpack_from(">I", payload, b + 12 + 4 * (i - 1))[0]
-
-        cb, ce = full(b"stsc", 8)
-        n_runs = struct.unpack_from(">I", payload, cb + 4)[0]
-        if cb + 8 + 12 * n_runs > ce:
-            raise ValueError("stsc table truncated")
-        runs = [
-            struct.unpack_from(">III", payload, cb + 8 + 12 * i)
-            for i in range(n_runs)
-        ]
-        if b"stco" in boxes:
-            ob, oe = full(b"stco", 8)
-            n_chunks = struct.unpack_from(">I", payload, ob + 4)[0]
-            if ob + 8 + 4 * n_chunks > oe:
-                raise ValueError("stco table truncated")
-
-            def chunk_offset(c):  # 1-based
-                if not 1 <= c <= n_chunks:
-                    raise ValueError("stsc names a chunk past stco")
-                return struct.unpack_from(">I", payload, ob + 8 + 4 * (c - 1))[0]
-
-        else:
-            ob, oe = full(b"co64", 8)
-            n_chunks = struct.unpack_from(">I", payload, ob + 4)[0]
-            if ob + 8 + 8 * n_chunks > oe:
-                raise ValueError("co64 table truncated")
-
-            def chunk_offset(c):
-                if not 1 <= c <= n_chunks:
-                    raise ValueError("stsc names a chunk past co64")
-                return struct.unpack_from(">Q", payload, ob + 8 + 8 * (c - 1))[0]
-
-        # walk the stsc runs to the chunk holding sample `sync`
-        seen = 0  # samples before the current chunk
-        for i, (first_chunk, per_chunk, _sdi) in enumerate(runs):
-            last_chunk = (
-                runs[i + 1][0] - 1 if i + 1 < len(runs) else n_chunks
-            )
-            run_total = (last_chunk - first_chunk + 1) * per_chunk
-            if sync <= seen + run_total:
-                idx_in_run = sync - seen - 1
-                chunk = first_chunk + idx_in_run // per_chunk
-                first_in_chunk = (
-                    seen + (chunk - first_chunk) * per_chunk + 1
-                )
-                off = chunk_offset(chunk)
-                for s in range(first_in_chunk, sync):
-                    off += sample_size(s)
-                size = sample_size(sync)
-                if off + size > len(payload):
-                    raise ValueError("av01 sample overruns the file")
-                return av1c, width, height, payload[off : off + size]
-            seen += run_total
-        raise ValueError("stsc runs do not cover the sync sample")
-    raise NotImplementedError(
-        "MP4 container has no AV1 (av01) video track — other MP4 "
-        "codecs (h264/h265/vp9) need ffmpeg/pyav (capability probe "
-        "_optional_ffmpeg)"
-    )
-
-
-def _avif_from_av1_sample(
-    av1c: bytes, width: int, height: int, sample: bytes
-) -> bytes:
-    """Wrap one AV1 keyframe (OBUs + its verbatim ``av1C`` config box)
-    as a minimal single-item AVIF so the existing libheif path decodes
-    it — container re-boxing only, zero bitstream work. Emits
-    ftyp(avif) + meta(hdlr/pitm/iloc/iinf/iprp) + mdat; the ``iloc``
-    extent points at the mdat body (lengths are fixed-width, so the
-    meta is built once with a placeholder offset and once patched)."""
-    import struct
-
-    def box(t: bytes, body: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(body)) + t + body
-
-    ftyp = box(b"ftyp", b"avif" + b"\x00" * 4 + b"avifmif1miaf")
-    hdlr = box(
-        b"hdlr", b"\x00" * 8 + b"pict" + b"\x00" * 12 + b"\x00"
-    )
-    pitm = box(b"pitm", b"\x00" * 4 + struct.pack(">H", 1))
-    iinf = box(
-        b"iinf",
-        b"\x00" * 4
-        + struct.pack(">H", 1)
-        + box(
-            b"infe",
-            b"\x02"  # version 2
-            + b"\x00" * 3
-            + struct.pack(">HH", 1, 0)
-            + b"av01"
-            + b"\x00",
-        ),
-    )
-    ispe = box(
-        b"ispe", b"\x00" * 4 + struct.pack(">II", width, height)
-    )
-    pixi = box(b"pixi", b"\x00" * 4 + bytes([3, 8, 8, 8]))
-    iprp = box(
-        b"iprp",
-        box(b"ipco", av1c + ispe + pixi)
-        + box(
-            b"ipma",
-            b"\x00" * 4
-            + struct.pack(">I", 1)
-            + struct.pack(">H", 1)
-            # av1C essential, then ispe, pixi (1-based ipco indices)
-            + bytes([3, 0x81, 0x02, 0x03]),
-        ),
-    )
-
-    def iloc(offset: int) -> bytes:
-        return box(
-            b"iloc",
-            b"\x00" * 4
-            + bytes([0x44, 0x00])  # 4-byte offsets/lengths, no base
-            + struct.pack(">H", 1)
-            + struct.pack(">HH", 1, 0)
-            + struct.pack(">H", 1)
-            + struct.pack(">II", offset, len(sample)),
-        )
-
-    def assemble(offset: int) -> bytes:
-        meta = box(
-            b"meta",
-            b"\x00" * 4 + hdlr + pitm + iloc(offset) + iinf + iprp,
-        )
-        return ftyp + meta + box(b"mdat", sample), len(ftyp) + len(meta) + 8
-
-    _, mdat_body = assemble(0)
-    out, check = assemble(mdat_body)
-    assert check == mdat_body  # fixed-width offset: sizes stable
-    return out
-
-
-def _featurize_mp4_av1(payload: bytes) -> tuple[int, list[float]]:
-    """AV1-in-MP4 video content: demux the first sync sample
-    (``_mp4_av1_keyframe``), re-box it as a one-item AVIF, and decode
-    through the system libheif's dav1d/aom plugin — the GIF/animated-
-    WebP first-frame discipline applied to video. Same feature
-    contract as the image featurizers."""
-    return _featurize_heif(_avif_from_av1_sample(*_mp4_av1_keyframe(payload)))
-
-
-def _ebml_read_vint(buf: bytes, pos: int, keep_marker: bool):
-    """(value, next_pos) of an EBML variable-length integer at ``pos``.
-    ``keep_marker=True`` returns the raw bytes-with-marker as an int
-    (element IDs compare that way); False strips the length-marker bit
-    (sizes, block track numbers). An all-ones data field with the
-    marker stripped is the reserved 'unknown size' → None."""
-    if pos >= len(buf):
-        raise ValueError("EBML varint at end of buffer")
-    first = buf[pos]
-    if first == 0:
-        raise ValueError("EBML varint with >8-octet length")
-    n = 1
-    while not first & (0x100 >> n):
-        n += 1
-    if pos + n > len(buf):
-        raise ValueError("EBML varint truncated")
-    raw = int.from_bytes(buf[pos : pos + n], "big")
-    if keep_marker:
-        return raw, pos + n
-    val = raw & ((1 << (7 * n)) - 1)
-    if val == (1 << (7 * n)) - 1:
-        return None, pos + n  # reserved: unknown size
-    return val, pos + n
-
-
-def _ebml_iter(buf: bytes, start: int, end: int):
-    """Yield (element_id, body_start, body_end) over an EBML master
-    element's children; an unknown-size child extends to ``end`` (the
-    streaming-Segment convention) and terminates the iteration."""
-    pos = start
-    while pos < end:
-        eid, p = _ebml_read_vint(buf, pos, keep_marker=True)
-        size, p = _ebml_read_vint(buf, p, keep_marker=False)
-        body_end = end if size is None else p + size
-        if body_end > end:
-            raise ValueError("EBML element overruns its container")
-        yield eid, p, body_end
-        pos = body_end
-
-
-# Matroska/WebM element IDs (with marker bits, the on-disk form)
-_MKV_SEGMENT = 0x18538067
-_MKV_TRACKS = 0x1654AE6B
-_MKV_TRACK_ENTRY = 0xAE
-_MKV_TRACK_NUMBER = 0xD7
-_MKV_CODEC_ID = 0x86
-_MKV_CODEC_PRIVATE = 0x63A2
-_MKV_VIDEO = 0xE0
-_MKV_PIXEL_WIDTH = 0xB0
-_MKV_PIXEL_HEIGHT = 0xBA
-_MKV_CLUSTER = 0x1F43B675
-_MKV_SIMPLE_BLOCK = 0xA3
-_MKV_BLOCK_GROUP = 0xA0
-_MKV_BLOCK = 0xA1
-_MKV_REFERENCE_BLOCK = 0xFB
-
-
-def _webm_av1_keyframe(payload: bytes) -> tuple[bytes, int, int, bytes]:
-    """Demux the first keyframe of an AV1 (``V_AV1``) track out of a
-    WebM/Matroska container → ``(av1C box bytes, width, height, frame
-    bytes)`` — the EBML twin of ``_mp4_av1_keyframe``.
-
-    Matroska's ``CodecPrivate`` for AV1 IS the
-    AV1CodecConfigurationRecord (the ``av1C`` box body), so the config
-    hands to the AVIF re-boxer with just a box header prepended. The
-    keyframe comes from the first Cluster's first keyframe-flagged
-    ``SimpleBlock`` of that track (or a ``BlockGroup`` whose Block has
-    no ``ReferenceBlock`` sibling). Laced blocks are refused with the
-    honest reason code (video muxers do not lace; implementing the
-    three lacing schemes for a case that does not occur would be dead
-    code). Raises NotImplementedError when no ``V_AV1`` track exists
-    (h264/vp8/vp9 WebM — a different codec gap)."""
-    if payload[:4] != b"\x1aE\xdf\xa3":
-        raise ValueError("not an EBML/WebM stream")
-    segment = None
-    for eid, b, e in _ebml_iter(payload, 0, len(payload)):
-        if eid == _MKV_SEGMENT:
-            segment = (b, e)
-            break
-    if segment is None:
-        raise ValueError("EBML stream has no Segment element")
-    track_num = None
-    av1c = width = height = None
-    for eid, b, e in _ebml_iter(payload, *segment):
-        if eid == _MKV_TRACKS and track_num is None:
-            for tid, tb, te in _ebml_iter(payload, b, e):
-                if tid != _MKV_TRACK_ENTRY:
-                    continue
-                num = codec = private = None
-                w = h = 0
-                for fid, fb, fe in _ebml_iter(payload, tb, te):
-                    if fid == _MKV_TRACK_NUMBER:
-                        num = int.from_bytes(payload[fb:fe], "big")
-                    elif fid == _MKV_CODEC_ID:
-                        codec = payload[fb:fe].rstrip(b"\x00")
-                    elif fid == _MKV_CODEC_PRIVATE:
-                        private = payload[fb:fe]
-                    elif fid == _MKV_VIDEO:
-                        for vid, vb, ve in _ebml_iter(payload, fb, fe):
-                            if vid == _MKV_PIXEL_WIDTH:
-                                w = int.from_bytes(payload[vb:ve], "big")
-                            elif vid == _MKV_PIXEL_HEIGHT:
-                                h = int.from_bytes(payload[vb:ve], "big")
-                if codec == b"V_AV1" and num is not None:
-                    if private is None:
-                        raise ValueError(
-                            "V_AV1 track has no CodecPrivate (av1C)"
-                        )
-                    if not (w and h):
-                        raise ValueError("V_AV1 track has no pixel dims")
-                    track_num, width, height = num, w, h
-                    av1c = (
-                        (8 + len(private)).to_bytes(4, "big")
-                        + b"av1C"
-                        + private
-                    )
-                    break
-        elif eid == _MKV_CLUSTER and track_num is not None:
-            for cid, cb, ce in _ebml_iter(payload, b, e):
-                frame = None
-                if cid == _MKV_SIMPLE_BLOCK:
-                    tn, p = _ebml_read_vint(payload, cb, keep_marker=False)
-                    if tn != track_num:
-                        continue
-                    flags = payload[p + 2]
-                    if not flags & 0x80:  # not a keyframe
-                        continue
-                    frame = (p + 3, ce, flags)
-                elif cid == _MKV_BLOCK_GROUP:
-                    block, has_ref = None, False
-                    for gid, gb, ge in _ebml_iter(payload, cb, ce):
-                        if gid == _MKV_BLOCK:
-                            block = (gb, ge)
-                        elif gid == _MKV_REFERENCE_BLOCK:
-                            has_ref = True
-                    if block is None or has_ref:
-                        continue  # keyframes reference nothing
-                    tn, p = _ebml_read_vint(
-                        payload, block[0], keep_marker=False
-                    )
-                    if tn != track_num:
-                        continue
-                    frame = (p + 3, block[1], payload[p + 2])
-                if frame is None:
-                    continue
-                fstart, fend, flags = frame
-                if flags & 0x06:
-                    raise NotImplementedError(
-                        "laced Matroska block on the AV1 track — "
-                        "lacing is an audio-muxing feature; no "
-                        "video muxer emits it (reason-coded, not "
-                        "implemented as dead code)"
-                    )
-                return av1c, width, height, payload[fstart:fend]
-    if track_num is None:
-        raise NotImplementedError(
-            "WebM container has no AV1 (V_AV1) video track — other "
-            "WebM codecs (vp8/vp9/h264) need ffmpeg/libvpx "
-            "(capability probe _optional_ffmpeg)"
-        )
-    raise ValueError("V_AV1 track has no keyframe block in any Cluster")
-
-
-def _featurize_webm_av1(payload: bytes) -> tuple[int, list[float]]:
-    """AV1-in-WebM video content: first keyframe through the same
-    AVIF re-box + libheif dav1d path as ``_featurize_mp4_av1``."""
-    return _featurize_heif(
-        _avif_from_av1_sample(*_webm_av1_keyframe(payload))
-    )
-
-
-def video_metadata(assets: DataFrame, strict: bool = False) -> DataFrame:
-    """Per-asset video metadata WITHOUT decoding: MP4/MOV through the
-    ISO BMFF box walk (``_parse_mp4_metadata``), uncompressed Y4M through
-    the existing demux header. The corpus-QA pre-filter: resolution and
-    duration gates run over a metadata-only pass — box headers, not
-    sample data — so the expensive decode/featurize stage only ever sees
-    assets that survived them. Same Arrow-batch + dead-letter contract
-    as ``decode_features`` (``meta_ok=false`` + error per bad asset;
-    ``strict=True`` raises)."""
-
-    def meta_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            widths, heights, durs, tracks, oks, errors = [], [], [], [], [], []
-            for payload in batch["payload"]:
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    if payload[:9] == b"YUV4MPEG2":
-                        w, h, frames = _parse_y4m(payload)
-                        d, n = None, 1
-                    elif (
-                        payload[:4] == b"RIFF"
-                        and payload[8:12] == b"AVI "
-                    ):
-                        # header-only pass would suffice for w/h, but
-                        # the frame count needs the chunk walk anyway;
-                        # frames are the PRIMARY video stream's only,
-                        # so duration is per-stream correct and
-                        # n_tracks counts every strh like the MP4 path
-                        w, h, fps, frames, n = _parse_avi_mjpeg(
-                            payload, require_mjpeg=False
-                        )
-                        if (not w or not h) and frames:
-                            # avih canvas dims are advisory (capture
-                            # muxers write 0/stale); recover real dims
-                            # from the first frame's SOF header — the
-                            # authority _featurize_avi_mjpeg uses — so
-                            # the two surfaces agree. Non-JPEG frames
-                            # (non-MJPG codecs) fail the SOI check and
-                            # keep the advisory values.
-                            try:
-                                h, w = _jpeg_sof_dimensions(frames[0])
-                            except ValueError:
-                                pass
-                        d = (
-                            int(len(frames) * 1000 / fps) if fps else None
-                        )
-                    else:
-                        # no magic allowlist: ISO BMFF files may lead
-                        # with styp/skip/pnot/mdat/...; the box walk
-                        # itself validates structure and raises cleanly
-                        # on non-BMFF payloads
-                        w, h, d, n = _parse_mp4_metadata(payload)
-                except Exception as e:  # noqa: BLE001 — dead-letter path
-                    if strict:
-                        raise
-                    widths.append(None)
-                    heights.append(None)
-                    durs.append(None)
-                    tracks.append(None)
-                    oks.append(False)
-                    errors.append(f"{type(e).__name__}: {e}")
-                else:
-                    widths.append(w)
-                    heights.append(h)
-                    durs.append(d)
-                    tracks.append(n)
-                    oks.append(True)
-                    errors.append(None)
-            yield pd.DataFrame(
-                {
-                    "asset_id": batch["asset_id"],
-                    "media_type": batch["media_type"],
-                    "width": pd.array(widths, dtype="Int32"),
-                    "height": pd.array(heights, dtype="Int32"),
-                    "duration_ms": pd.array(durs, dtype="Int64"),
-                    "n_tracks": pd.array(tracks, dtype="Int32"),
-                    "meta_ok": oks,
-                    "error": errors,
-                }
-            )
-
-    return assets.mapInPandas(meta_batch, VIDEO_META_SCHEMA)

@@ -4020,8 +4020,9 @@ _SQL_BYTESUM = (
     """,
     doc="multimodal plumbing: documents' text bytes stand in for media "
     "payloads (binary column + typed metadata struct); features extracted "
-    "through Arrow-batched mapInPandas — the real decoder integration point "
-    "is stubbed (operators/multimodal.py), the distributed path is live. "
+    "through Arrow-batched mapInPandas by a deterministic byte-sum "
+    "stand-in featurizer (operators/multimodal.py; its opt-in stdlib "
+    "decoders are not SQL-reproducible, so the oracle checks the stand-in). "
     "Oracle valid because the fixture corpus is pure ASCII (byte == char).",
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:

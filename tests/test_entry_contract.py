@@ -10,6 +10,8 @@ would kill the SparkContext for every later test.
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import subprocess
 import sys
 
@@ -53,7 +55,7 @@ _SCRIPT_FULL = _SCRIPT_HEAD.replace("NAMES_STMT", "qs.items()")
 
 # The fast default gate drives entry() + the conf-sensitive surfaces on
 # the vanilla session (ANSI casts, TIMESTAMP(NANOS) events, streaming
-# drain, curate composition, embedding/codec paths); the full 161-query
+# drain, curate composition, embedding/multimodal paths); the full 161-query
 # sweep (~5 min) runs under the `slow` marker and in every full-suite run.
 _SMOKE = (
     "q_gold_agg", "q_agg_pricing", "q_window_events", "q_asof_join",
@@ -112,3 +114,54 @@ def test_driver_window_rotation_invariants():
             f"{demoted}'s family stand-ins {missing} are not in the "
             f"first {DRIVER_WINDOW} entries"
         )
+
+
+_PKG = "inbev_data_engineering_case_spark"
+_ENTRY_MODULES = ("queries", "pipeline", "session", "testing")
+
+
+def test_every_package_module_is_reachable():
+    """Static (no Spark): every module of the package is reachable in the
+    AST import graph — function-local imports included — from the
+    package ``__init__`` and the entry modules. A subpackage counts as
+    reached when any of its modules is. An unreachable module is code
+    no catalog query, pipeline stage or session path can run."""
+    root = pathlib.Path(__file__).resolve().parent.parent / _PKG
+    modules = {}
+    for path in root.rglob("*.py"):
+        parts = path.relative_to(root.parent).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        modules[".".join(parts)] = path
+
+    def imports(name: str) -> set[str]:
+        path = modules[name]
+        package = name if path.name == "__init__.py" else name.rpartition(".")[0]
+        found = set()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    anchor = package.rsplit(".", node.level - 1)[0]
+                    base = f"{anchor}.{base}" if base else anchor
+                targets = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            found.update(t for t in targets if t in modules)
+        return found
+
+    seen = set()
+    todo = [_PKG] + [f"{_PKG}.{m}" for m in _ENTRY_MODULES]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        # importing a module runs its package's __init__, so reaching
+        # any module of a subpackage reaches the subpackage too
+        parent = name.rpartition(".")[0]
+        todo.extend(imports(name) | ({parent} if parent in modules else set()))
+    unreachable = sorted(set(modules) - seen)
+    assert not unreachable, f"modules nothing imports: {unreachable}"

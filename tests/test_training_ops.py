@@ -17,7 +17,6 @@ from inbev_data_engineering_case_spark.operators.multimodal import (
     decode_features,
     resize_assets,
     sample_frames,
-    target_rows_per_partition,
 )
 from inbev_data_engineering_case_spark.operators.similarity import (
     ann_bucketed_topk,
@@ -168,11 +167,6 @@ def test_multimodal_plumbing(spark, docs):
         for r in decode_features(assets, real_decoder=True).collect()
     }
     assert real[1]["checksum"] == zlib.crc32(payload) % 1_000_003
-
-
-def test_target_rows_per_partition():
-    assert target_rows_per_partition(2 * 1024 * 1024) == 128
-    assert target_rows_per_partition(0) >= 1
 
 
 def test_resize_assets_pads_and_truncates(spark, docs):
@@ -619,9 +613,11 @@ def test_stdlib_png_decoder():
     )
     with _pytest.raises(ValueError, match="bit_depth"):
         _stdlib_featurize("image/png", bytes(bad_depth))
-    # JPEG now routes to the native decoder: a corrupt stream fails loud
-    # (ValueError -> dead-letter), not as a capability gap
-    with _pytest.raises(ValueError, match="truncated|marker"):
+    # JPEG is codec-bound: no native decoder ships, so even a corrupt
+    # stream is a capability gap (NotImplementedError -> decoder_gap)
+    with _pytest.raises(
+        NotImplementedError, match="requires a codec library"
+    ):
         _stdlib_featurize("image/jpeg", b"\xff\xd8\xff\xe0 not decodable")
 
 
@@ -2523,29 +2519,22 @@ def test_hot_bucket_guard_simhash_star_links(spark):
 
 
 def test_decode_errors_dead_letter_not_raise(spark):
-    """A codec-bound (JPEG) or corrupt asset must survive as a flagged row
+    """A codec-bound (JPEG, mp4) asset must survive as a flagged row
     — null features, decode_ok=false, message in `error` — instead of
-    killing the job; strict=True restores the raise. The expected error
-    class depends on the capability probes: with no PIL/ffmpeg the
-    decoders refuse with NotImplementedError; with a backend present
-    these deliberately-corrupt payloads fail inside it instead — either
-    way the row is dead-lettered, never raised."""
+    killing the job; strict=True restores the raise. Neither format has
+    a native decoder, so both refuse with NotImplementedError and the
+    row is dead-lettered, never raised."""
     import pytest as _pytest
     from pyspark.errors import PythonException
 
     from inbev_data_engineering_case_spark.operators.multimodal import (
-        _optional_ffmpeg,
         decode_features,
         resize_assets,
         sample_frames,
     )
 
-    # the corrupt JPEG now always fails INSIDE a decoder (native baseline
-    # or PIL), so a ValueError/OSError — matched by "Error" — either way
-    img_err = "Error"
-    vid_err = (
-        "NotImplementedError" if _optional_ffmpeg() is None else "Error"
-    )
+    img_err = "NotImplementedError"
+    vid_err = "NotImplementedError"
 
     bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
     jpeg = b"\xff\xd8\xff\xe0 not decodable"
@@ -2586,684 +2575,6 @@ def test_decode_errors_dead_letter_not_raise(spark):
 
     with _pytest.raises(PythonException, match="Error"):
         decode_features(assets, real_decoder=True, strict=True).collect()
-
-
-def test_decode_reason_codes_size_the_decoder_gap(spark):
-    """Reason-coded dead-letters: an ARITHMETIC-CODED JPEG (real
-    baseline stream re-marked SOF0->SOF9 — structurally valid header;
-    the decoder refuses at the SOF before entropy decode) lands as
-    reason='decoder_gap', a corrupt stream as reason='corrupt', a good
-    asset as reason NULL — so a corpus QA report can size the decoder
-    gap separately from junk data. A PROGRESSIVE (SOF2) stream, the
-    gap this report sized in r8, now DECODES natively (r9) — its row
-    is reason NULL. decode_reason_report turns the rest into per-kind
-    exact-ppm corpus shares, arithmetic JPEG on its own line."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-        decode_features,
-        decode_reason_report,
-    )
-
-    baseline = _jpeg_encode_baseline(_jpeg_gradient(16, 16), quality=90)
-    assert b"\xff\xc0" in baseline
-    arithmetic = baseline.replace(b"\xff\xc0", b"\xff\xc9", 1)
-    progressive = _jpeg_encode_progressive(
-        _jpeg_gradient(16, 16), quality=90
-    )
-    corrupt = b"\xff\xd8\xff\xe0 not decodable"
-    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
-    assets = spark.createDataFrame(
-        [
-            (1, "image/jpeg", arithmetic, {"n_bytes": len(arithmetic), "source": "t"}),
-            (2, "image/jpeg", corrupt, {"n_bytes": len(corrupt), "source": "t"}),
-            (3, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
-            (4, "image/jpeg", baseline, {"n_bytes": len(baseline), "source": "t"}),
-            (5, "image/jpeg", progressive, {"n_bytes": len(progressive), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    feats = decode_features(assets, real_decoder=True)
-    rows = {r["asset_id"]: r for r in feats.collect()}
-    assert rows[1]["reason"] == "decoder_gap"
-    assert "arithmetic" in rows[1]["error"]
-    assert rows[2]["reason"] == "corrupt"
-    assert rows[3]["reason"] is None and rows[3]["decode_ok"]
-    assert rows[4]["reason"] is None and rows[4]["decode_ok"]
-    assert rows[5]["reason"] is None and rows[5]["decode_ok"]
-
-    report = decode_reason_report(feats).collect()
-    by_key = {(r["media_type"], r["reason"]): r for r in report}
-    gap = by_key[("image/jpeg", "decoder_gap")]
-    assert gap["n_assets"] == 1 and gap["share_ppm"] == 200_000
-    assert "arithmetic" in gap["detail"]
-    assert by_key[("image/jpeg", "corrupt")]["share_ppm"] == 200_000
-    assert by_key[("image/bmp", "ok")]["n_assets"] == 1
-    assert by_key[("image/jpeg", "ok")]["n_assets"] == 2
-    assert by_key[("image/jpeg", "ok")]["detail"] is None
-    assert sum(r["n_assets"] for r in report) == 5
-
-
-def test_jpeg_featurize_through_pil_when_available(spark):
-    """Capability-routed codec decode: with PIL importable a real JPEG
-    featurizes (and resizes) through the same mapInPandas plumbing, same
-    normalized-raster feature shape as the stdlib decoders. Skips where
-    PIL is absent — there the dead-letter test above covers the fallback
-    arm of the same probe."""
-    import io
-
-    image_mod = pytest.importorskip(
-        "PIL.Image", reason="PIL not installed; stdlib fallback covered "
-        "by test_decode_errors_dead_letter_not_raise"
-    )
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        decode_features,
-        resize_assets,
-    )
-
-    im = image_mod.new("RGB", (6, 4), (10, 20, 30))
-    buf = io.BytesIO()
-    im.save(buf, "JPEG")
-    jpeg = buf.getvalue()
-    assets = spark.createDataFrame(
-        [(1, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-
-    r = decode_features(assets, real_decoder=True).collect()[0]
-    assert r["decode_ok"] and r["error"] is None
-    w, h, bpp, mean_px = r["feature"]
-    assert (w, h, bpp) == (6.0, 4.0, 24.0)
-    assert 0.0 < mean_px < 255.0
-
-    rz = resize_assets(assets, 2000, real_decoder=True).collect()[0]
-    assert rz["decode_ok"]  # decoded via PIL, re-encoded to PNM
-
-
-def _jpeg_gradient(h, w):
-    """Smooth RGB gradient — JPEG-friendly content with a known mean."""
-    import numpy as np
-
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.stack(
-        [
-            xx * 255 // max(w - 1, 1),
-            yy * 255 // max(h - 1, 1),
-            (xx + yy) * 255 // max(w + h - 2, 1),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-
-
-def test_jpeg_native_roundtrip_444():
-    """Native encoder → native decoder at 4:4:4: non-multiple-of-8
-    dimensions, high quality — every pixel within a few quantization
-    levels, dimensions exact."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(41, 53)
-    out = _jpeg_decode(_jpeg_encode_baseline(img, quality=95))
-    assert out.shape == img.shape
-    diff = np.abs(out.astype(int) - img.astype(int))
-    assert diff.max() <= 6 and diff.mean() < 1.5
-
-
-def test_jpeg_native_roundtrip_420_restarts_identical():
-    """4:2:0 chroma subsampling decodes (upsample path), and restart
-    intervals are pure framing: the decoded raster with DRI 1/3/7 is
-    bit-identical to the no-restart stream of the same coefficients."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(37, 61)
-    base = _jpeg_decode(_jpeg_encode_baseline(img, quality=90))
-    for ri in (1, 3, 7):
-        out = _jpeg_decode(
-            _jpeg_encode_baseline(img, quality=90, restart_interval=ri)
-        )
-        assert np.array_equal(out, base)
-    sub = _jpeg_decode(
-        _jpeg_encode_baseline(
-            img, quality=90, subsample=True, restart_interval=2
-        )
-    )
-    assert sub.shape == img.shape
-    assert np.abs(sub.astype(int) - img.astype(int)).max() <= 30
-
-
-def test_jpeg_native_grayscale_single_component_scan():
-    """1-component JPEG exercises the A.2.2 single-component MCU rule
-    (plain 8x8 grid) and stays 1-channel like every other gray decode."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    gray = _jpeg_gradient(21, 34)[:, :, 0]
-    out = _jpeg_decode(_jpeg_encode_baseline(gray, quality=95))
-    assert out.shape == (21, 34, 1)
-    assert np.abs(out[:, :, 0].astype(int) - gray.astype(int)).max() <= 4
-
-
-def test_jpeg_native_unsupported_variants_fail_loud():
-    """Arithmetic-coded (SOF9) raises NotImplementedError (the PIL-or-
-    dead-letter arm); truncated entropy data and corrupt headers raise
-    ValueError — never garbage pixels with decode_ok semantics. A
-    baseline stream re-marked SOF2 is NOT a valid progressive stream
-    (its sequential Ss=0/Se=63 scan mixes DC and AC), so it must fail
-    loud as corrupt rather than decode garbage."""
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    payload = bytearray(_jpeg_encode_baseline(_jpeg_gradient(16, 16)))
-    sof_at = payload.index(b"\xff\xc0")
-    arithmetic = bytes(
-        payload[:sof_at] + b"\xff\xc9" + payload[sof_at + 2 :]
-    )
-    with _pytest.raises(NotImplementedError, match="arithmetic"):
-        _jpeg_decode(arithmetic)
-    fake_progressive = bytes(
-        payload[:sof_at] + b"\xff\xc2" + payload[sof_at + 2 :]
-    )
-    with _pytest.raises(ValueError, match="mixes DC and AC"):
-        _jpeg_decode(fake_progressive)
-    with _pytest.raises(ValueError, match="truncated"):
-        _jpeg_decode(bytes(payload[: len(payload) // 2]))
-    with _pytest.raises(ValueError, match="SOI"):
-        _jpeg_decode(b"\x89PNG not a jpeg")
-
-
-def test_jpeg_progressive_round_trip_matches_baseline():
-    """Progressive (SOF2) decodes natively: a progressive and a
-    baseline encode of the same raster at the same quality carry
-    IDENTICAL quantized coefficients, so the two decodes must be
-    BIT-IDENTICAL — across grayscale/color, 4:2:0 subsampling,
-    non-multiple-of-8 dims, per-scan restart intervals, and a custom
-    scan script with multiple successive-approximation levels."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-    )
-
-    rng = np.random.RandomState(11)
-    cases = [
-        ((16, 16, 3), {}),
-        ((20, 24, 3), {"subsample": True}),
-        ((17, 9, 1), {}),
-        ((16, 16, 3), {"restart_interval": 2}),
-        ((24, 16, 3), {"subsample": True, "restart_interval": 1}),
-    ]
-    for shape, kw in cases:
-        img = rng.randint(0, 256, shape, dtype=np.uint8)
-        base = _jpeg_decode(_jpeg_encode_baseline(img, quality=80, **kw))
-        prog = _jpeg_decode(
-            _jpeg_encode_progressive(img, quality=80, **kw)
-        )
-        assert np.array_equal(base, prog), (shape, kw)
-
-    # deeper successive approximation (3 levels on luma AC) + a DC
-    # refinement chain, still bit-identical to the one-shot baseline
-    img = rng.randint(0, 256, (16, 24, 3), dtype=np.uint8)
-    scans = [
-        ([0, 1, 2], 0, 0, 0, 2),
-        ([0, 1, 2], 0, 0, 1, 1),
-        ([0], 1, 63, 0, 3),
-        ([1], 1, 63, 0, 0),
-        ([2], 1, 63, 0, 0),
-        ([0], 1, 63, 3, 2),
-        ([0, 1, 2], 0, 0, 1, 0),
-        ([0], 1, 63, 2, 1),
-        ([0], 1, 63, 1, 0),
-    ]
-    base = _jpeg_decode(_jpeg_encode_baseline(img, quality=70))
-    prog = _jpeg_decode(
-        _jpeg_encode_progressive(img, quality=70, scans=scans)
-    )
-    assert np.array_equal(base, prog)
-
-
-def test_jpeg_sequential_non_interleaved_scans_decode():
-    """A fully NON-INTERLEAVED sequential JPEG (one scan per component
-    — a real libjpeg output mode) decodes natively and matches the
-    interleaved encode of the same raster bit for bit (identical
-    quantized coefficients, only the scan layout differs); a partially
-    interleaved scan subset stays honestly NIE-routed. Also pins the
-    per-scan restart-interval reset on the non-interleaved walk."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators import (
-        multimodal as M,
-    )
-
-    def encode_non_interleaved(img, quality, subsample, restart=0):
-        h, w, gray, samplings, quants, coeffs, _ = (
-            M._jpeg_prepare_encode(img, quality, subsample)
-        )
-        ncomp = 1 if gray else 3
-        dc_maps, ac_maps = M._jpeg_std_maps(ncomp)
-        out = M._jpeg_header_segments(
-            h, w, gray, samplings, quants, 0xC0, restart
-        )
-        frame = (h, w, [[ci + 1, *samplings[ci], 0] for ci in range(ncomp)])
-        for ci in range(ncomp):
-            bh, bw = M._jpeg_comp_blocks(frame, *samplings[ci])
-            sos = bytes(
-                [1, ci + 1, 0x00 if ci == 0 else 0x11, 0, 63, 0]
-            )
-            out += struct.pack(">BBH", 0xFF, 0xDA, 2 + len(sos)) + sos
-            wtr = M._JpegBitWriter()
-            pred = 0
-            done = 0
-            rst = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if restart and done == restart:
-                        wtr.flush()
-                        wtr.buf += bytes([0xFF, 0xD0 + (rst % 8)])
-                        rst += 1
-                        pred = 0
-                        done = 0
-                    pred = M._jpeg_encode_block(
-                        wtr, coeffs[ci][by, bx], pred,
-                        dc_maps[ci], ac_maps[ci],
-                    )
-                    done += 1
-            wtr.flush()
-            out += wtr.buf
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    rng = np.random.RandomState(17)
-    for shape, subsample, restart in (
-        ((16, 16, 3), False, 0),
-        ((20, 12, 3), True, 0),
-        ((16, 16, 3), False, 2),
-    ):
-        img = rng.randint(0, 256, shape, dtype=np.uint8)
-        want = M._jpeg_decode(
-            M._jpeg_encode_baseline(img, quality=85, subsample=subsample)
-        )
-        got = M._jpeg_decode(
-            encode_non_interleaved(img, 85, subsample, restart)
-        )
-        assert np.array_equal(got, want), (shape, subsample, restart)
-
-    # a stream TRUNCATED between component scans must fail loud — the
-    # zeroed Cb/Cr planes would otherwise decode to a color-shifted
-    # raster with decode_ok=true (the r9 second-review catch)
-    img = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
-    full = encode_non_interleaved(img, 85, False)
-    sos_offsets = []
-    at = -1
-    while True:
-        at = full.find(b"\xff\xda", at + 1)
-        if at < 0:
-            break
-        sos_offsets.append(at)
-    assert len(sos_offsets) == 3
-    truncated = full[: sos_offsets[2]] + b"\xff\xd9"
-    with _pytest.raises(ValueError, match="missing scan"):
-        M._jpeg_decode(truncated)
-
-    # a 2-of-3-component scan stays honestly capability-gated
-    img = rng.randint(0, 256, (8, 8, 3), dtype=np.uint8)
-    payload = bytearray(M._jpeg_encode_baseline(img, quality=85))
-    at = payload.index(b"\xff\xda")
-    # rewrite the SOS header to claim 2 components (structurally valid
-    # header; the decoder must refuse before entropy decode)
-    seglen = (payload[at + 2] << 8) | payload[at + 3]
-    sos = bytes([2]) + bytes(payload[at + 5 : at + 9]) + bytes(
-        payload[at + 2 + seglen - 3 : at + 2 + seglen]
-    )
-    two_comp = (
-        bytes(payload[:at])
-        + struct.pack(">BBH", 0xFF, 0xDA, 2 + len(sos))
-        + sos
-        + bytes(payload[at + 2 + seglen :])
-    )
-    with _pytest.raises(NotImplementedError, match="partially"):
-        M._jpeg_decode(two_comp)
-
-
-def test_jpeg_codec_round_trip_property():
-    """Hypothesis fuzz over the whole codec surface: ANY dims (down to
-    1x1 and single-row/column rasters), quality, grayscale/color,
-    4:2:0, and restart intervals — the progressive decode must equal
-    the baseline decode of the same raster bit for bit (identical
-    quantized coefficients by construction), and both decoders must
-    return the exact input shape."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-    )
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        h=st.integers(1, 24),
-        w=st.integers(1, 24),
-        gray=st.booleans(),
-        quality=st.integers(30, 95),
-        subsample=st.booleans(),
-        restart=st.sampled_from([0, 1, 3]),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    def prop(h, w, gray, quality, subsample, restart, seed):
-        rng = np.random.RandomState(seed)
-        img = rng.randint(
-            0, 256, (h, w, 1 if gray else 3), dtype=np.uint8
-        )
-        base = _jpeg_decode(
-            _jpeg_encode_baseline(
-                img, quality, subsample=subsample,
-                restart_interval=restart,
-            )
-        )
-        prog = _jpeg_decode(
-            _jpeg_encode_progressive(
-                img, quality, subsample=subsample,
-                restart_interval=restart,
-            )
-        )
-        assert base.shape == img.shape
-        assert np.array_equal(base, prog)
-
-    prop()
-
-
-def test_jpeg_grayscale_declared_sampling_factors_ignored():
-    """A one-component frame's declared sampling factors are IGNORED
-    (T.81 A.2.2 — `jpegtran -grayscale` output famously keeps the luma
-    factors at 2x2): both the sequential and the progressive decoder
-    must produce the identical raster when the SOF sampling byte says
-    2x2. The r9 review caught the progressive path walking only
-    ceil(h/16) blocks here — 191/256 pixels silently flat-gray with
-    decode_ok=true — because one of three geometry-math copies skipped
-    the remap; geometry now flows through _jpeg_frame_geometry."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-    )
-
-    rng = np.random.RandomState(13)
-    img = rng.randint(0, 256, (16, 16, 1), dtype=np.uint8)
-    for encode, sof_marker in (
-        (_jpeg_encode_baseline, b"\xff\xc0"),
-        (_jpeg_encode_progressive, b"\xff\xc2"),
-    ):
-        payload = bytearray(encode(img, quality=85))
-        at = payload.index(sof_marker)
-        # FF Cx | len(2) | prec(1) h(2) w(2) ncomp(1) | cid(1) hv(1) ...
-        assert payload[at + 11] == 0x11
-        want = _jpeg_decode(bytes(payload))
-        payload[at + 11] = 0x22  # declare 2x2 sampling on the only comp
-        got = _jpeg_decode(bytes(payload))
-        assert np.array_equal(got, want), sof_marker
-
-
-def test_jpeg_progressive_hand_built_eob_runs_and_refinement():
-    """Pin the Annex-G entropy semantics with a HAND-BUILT stream,
-    independent of this repo's progressive encoder (the encoder emits
-    only EOB1, so multi-block EOB runs are only pinned here): a 3-block
-    grayscale SOF2 stream whose AC-first scan carries an EOB2-with-
-    extension run (eobrun=3 spans block 0's tail plus blocks 1-2) and
-    whose refinement scan orders bits exactly as G.2.3 requires —
-    huffman symbol, sign bit, then the buffered correction bits of the
-    nonzero-history coefficients crossed on the way."""
-    import struct
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators import (
-        multimodal as M,
-    )
-
-    def seg(marker, body):
-        return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
-
-    def dht(tc, th, lengths):  # {symbol: code_len} -> DHT body, 1-bit codes
-        counts = [0] * 16
-        for _sym, ln in lengths.items():
-            counts[ln - 1] += 1
-        # canonical order: by length then insertion — all length-1 here
-        vals = [s for s, ln in lengths.items()]
-        return seg(
-            0xC4, bytes([(tc << 4) | th]) + bytes(counts) + bytes(vals)
-        )
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes([1] * 64))  # identity quant
-    out += seg(
-        0xC2, struct.pack(">BHHB", 8, 8, 24, 1) + bytes([1, 0x11, 0])
-    )
-
-    # scan 1: DC first (Al=0), diffs 4, 4, -12 -> sizes {3, 4}
-    out += dht(0, 0, {3: 1, 4: 1})
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00]))
-    w = M._JpegBitWriter()
-    w.write(0, 1)  # size 3 (code 0)
-    w.write(4, 3)  # DC block0 = 4
-    w.write(0, 1)
-    w.write(4, 3)  # diff 4 -> DC block1 = 8
-    w.write(1, 1)  # size 4 (code 1)
-    w.write(-12 + 15, 4)  # diff -12 -> DC block2 = -4
-    w.flush()
-    out += w.buf
-
-    # scan 2: AC first, band 1-63, Al=1 — block0 gets t=3 at zigzag
-    # k=1 (final value 6 before refinement), then EOB2+ext covering
-    # block0's tail AND blocks 1-2 (eobrun = 2 + receive(1) = 3)
-    out += dht(1, 0, {0x02: 1, 0x10: 1})
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x01]))
-    w = M._JpegBitWriter()
-    w.write(0, 1)  # symbol 0x02 (r=0, s=2)
-    w.write(3, 2)  # t = +3 -> coef 3<<1 = 6
-    w.write(1, 1)  # symbol 0x10 (EOB2)
-    w.write(1, 1)  # extension bit -> eobrun = 3
-    w.flush()
-    out += w.buf
-
-    # scan 3: AC refinement Ah=1 -> Al=0 — block0 refines k=1 from 6
-    # to 7 (correction bit 1) and adds a NEW coefficient -1 at k=3
-    # after one zero-history zero (r=1): bit order must be symbol
-    # 0x11, sign 0, THEN the buffered correction bit; EOB2+ext again
-    # spans the rest
-    out += dht(1, 0, {0x11: 1, 0x10: 1})
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x10]))
-    w = M._JpegBitWriter()
-    w.write(0, 1)  # symbol 0x11 (skip r=1 zero-history, new coef s=1)
-    w.write(0, 1)  # sign: negative -> -1 at k=3
-    w.write(1, 1)  # correction bit for the k=1 history coef: 6 -> 7
-    w.write(1, 1)  # symbol 0x10 (EOB2)
-    w.write(1, 1)  # extension -> eobrun = 3
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"
-
-    got = M._jpeg_decode(bytes(out))
-
-    # expected raster from the pinned coefficients through the same
-    # orthonormal IDCT contract the sequential tests pin
-    m = M._jpeg_dct_matrix()
-    expect = np.zeros((8, 24), np.float64)
-    for b, dc in enumerate((4, 8, -4)):
-        c = np.zeros(64)
-        c[0] = dc
-        if b == 0:
-            c[M._JPEG_ZIGZAG[1]] = 7.0   # 6 + correction
-            c[M._JPEG_ZIGZAG[3]] = -1.0  # newly nonzero in refinement
-        spatial = m.T @ c.reshape(8, 8) @ m
-        expect[:, b * 8 : (b + 1) * 8] = spatial
-    expect = np.clip(np.round(expect) + 128.0, 0, 255).astype(np.uint8)
-    assert got.shape == (8, 24, 1)
-    assert np.array_equal(got[:, :, 0], expect)
-
-
-def test_jpeg_decodes_through_spark_without_pil(spark):
-    """The round-6 'Done' criterion: a real .jpg payload decodes with
-    decode_ok=true and featurizes through the mapInPandas plumbing with
-    no PIL in the environment; dhash and resize consume the same native
-    path; a progressive variant still dead-letters."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_encode_baseline,
-        decode_features,
-        image_dhash,
-        resize_assets,
-    )
-
-    img = _jpeg_gradient(24, 32)
-    jpeg = _jpeg_encode_baseline(img, quality=95)
-    payload = bytearray(jpeg)
-    sof_at = payload.index(b"\xff\xc0")
-    progressive = bytes(
-        payload[:sof_at] + b"\xff\xc2" + payload[sof_at + 2 :]
-    )
-    assets = spark.createDataFrame(
-        [
-            (1, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"}),
-            (
-                2,
-                "image/jpeg",
-                progressive,
-                {"n_bytes": len(progressive), "source": "t"},
-            ),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-
-    feats = {
-        r["asset_id"]: r
-        for r in decode_features(assets, real_decoder=True).collect()
-    }
-    ok = feats[1]
-    assert ok["decode_ok"] and ok["error"] is None
-    w, h, bpp, mean_px = ok["feature"]
-    assert (w, h, bpp) == (32.0, 24.0, 24.0)
-    assert abs(mean_px - float(img.mean())) < 3.0
-    bad = feats[2]
-    assert not bad["decode_ok"] and "progressive" in bad["error"]
-
-    hashes = {r["asset_id"]: r for r in image_dhash(assets).collect()}
-    assert hashes[1]["decode_ok"] and hashes[1]["dhash"] is not None
-    assert not hashes[2]["decode_ok"]
-
-    rz = {
-        r["asset_id"]: r
-        for r in resize_assets(assets, 500, real_decoder=True).collect()
-    }
-    assert rz[1]["decode_ok"]  # decoded natively, re-encoded to PNM
-    assert not rz[2]["decode_ok"]
-    assert bytes(rz[2]["payload"]) == progressive  # kept for a PIL retry
-
-
-def test_jpeg_native_matches_pil_decode(spark):
-    """Cross-implementation check against a REAL codec where available:
-    PIL's decode of our encoder's stream and our decode of PIL's stream
-    must agree within a few levels (IDCT implementations legitimately
-    differ by rounding). Skips where PIL is absent (this container)."""
-    import io
-
-    import numpy as np
-
-    image_mod = pytest.importorskip(
-        "PIL.Image", reason="PIL not installed; round-trip tests above "
-        "cover the native decoder against the native encoder"
-    )
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(40, 48)
-    # our encoder -> PIL decoder
-    with image_mod.open(io.BytesIO(_jpeg_encode_baseline(img, 95))) as im:
-        pil_pixels = np.asarray(im.convert("RGB"), dtype=np.uint8)
-    ours = _jpeg_decode(_jpeg_encode_baseline(img, 95))
-    assert np.abs(
-        pil_pixels.astype(int) - ours.astype(int)
-    ).max() <= 4
-    # PIL encoder -> our decoder
-    buf = io.BytesIO()
-    image_mod.fromarray(img).save(buf, "JPEG", quality=95)
-    theirs_decoded = _jpeg_decode(buf.getvalue())
-    with image_mod.open(io.BytesIO(buf.getvalue())) as im:
-        pil_own = np.asarray(im.convert("RGB"), dtype=np.uint8)
-    assert np.abs(
-        theirs_decoded.astype(int) - pil_own.astype(int)
-    ).max() <= 4
-
-
-def test_compressed_video_through_ffmpeg_when_available(spark):
-    """Capability-routed video demux: with ffmpeg on PATH a compressed
-    container round-trips (y4m → mp4 via ffmpeg, then featurize + frame
-    sample through _ffmpeg_to_y4m). Skips where ffmpeg is absent."""
-    import shutil
-    import subprocess
-
-    if shutil.which("ffmpeg") is None:
-        pytest.skip("ffmpeg not on PATH; dead-letter fallback covered "
-                    "by test_decode_errors_dead_letter_not_raise")
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        decode_features,
-        sample_frames,
-    )
-
-    y4m = _make_y4m(4, 2, lumas=[0, 100, 200])
-    proc = subprocess.run(
-        ["ffmpeg", "-v", "error", "-f", "yuv4mpegpipe", "-i", "pipe:0",
-         "-f", "mp4", "-movflags", "frag_keyframe+empty_moov", "pipe:1"],
-        input=y4m, capture_output=True, check=True,
-    )
-    mp4 = proc.stdout
-    assets = spark.createDataFrame(
-        [(1, "video/mp4", mp4, {"n_bytes": len(mp4), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-
-    r = decode_features(assets, real_decoder=True).collect()[0]
-    assert r["decode_ok"] and r["error"] is None
-    # feature = [width, height, n_frames, mean_luma]
-    assert r["feature"][:3] == [4.0, 2.0, 3.0]
-
-    frames = sample_frames(assets, real_decoder=True).collect()
-    assert all(f["decode_ok"] for f in frames)
-    assert len(frames) >= 1
 
 
 def test_paletted_bmp_matches_paletted_png_fingerprint(spark):
@@ -3369,12 +2680,20 @@ def test_bpe_tokenize_cache_cap_preserves_output(spark):
     assert big == tiny
 
 
+def _make_pnm(pixels) -> bytes:
+    """Binary P6 PNM from an (h, w, 3) uint8 RGB array."""
+    h, w, _ = pixels.shape
+    return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
+
+
 def test_image_dhash_perceptual_near_dup(spark):
     """dHash perceptual near-dup: the SAME picture at a different
     resolution (2x nearest upsample) hashes identically (hamming 0); a
     slightly-edited copy lands within the hamming radius; an unrelated
-    image does not pair; undecodable payloads dead-letter."""
+    image does not pair; undecodable payloads (a non-PNM image, a PNM
+    with a truncated raster or a malformed header) dead-letter."""
     import numpy as np
+    from pyspark.errors import PythonException
 
     from inbev_data_engineering_case_spark.operators.multimodal import (
         _dhash64,
@@ -3391,25 +2710,30 @@ def test_image_dhash_perceptual_near_dup(spark):
     edited[0, 0] = [255, 255, 255]  # tiny edit -> small hamming
     other = rng.randint(0, 256, size=(16, 18, 3)).astype("uint8")
 
-    def bmp(px):
-        # _make_bmp takes row-major BGR tuples
-        return _make_bmp(
-            [[tuple(int(v) for v in p[::-1]) for p in row] for row in px]
-        )
-
+    ppm = "image/x-portable-pixmap"
     assets = spark.createDataFrame(
         [
-            (1, "image/bmp", bytearray(bmp(base))),
-            (2, "image/bmp", bytearray(bmp(up))),
-            (3, "image/bmp", bytearray(bmp(edited))),
-            (4, "image/bmp", bytearray(bmp(other))),
+            (1, ppm, bytearray(_make_pnm(base))),
+            (2, ppm, bytearray(_make_pnm(up))),
+            (3, ppm, bytearray(_make_pnm(edited))),
+            (4, ppm, bytearray(_make_pnm(other))),
             (5, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
+            (6, ppm, bytearray(_make_pnm(base)[:-1])),
+            (7, ppm, bytearray(b"P6\n18 x16\n255\n" + base.tobytes())),
         ],
         "asset_id long, media_type string, payload binary",
     )
     hashes = {r["asset_id"]: r for r in image_dhash(assets).collect()}
     assert hashes[1]["dhash"] == hashes[2]["dhash"]
-    assert hashes[5]["decode_ok"] is False and hashes[5]["error"]
+    assert hashes[5]["decode_ok"] is False
+    assert "NotImplementedError" in hashes[5]["error"]
+    assert hashes[6]["decode_ok"] is False
+    assert "PNM raster truncated" in hashes[6]["error"]
+    assert hashes[7]["decode_ok"] is False
+    assert "malformed PNM header" in hashes[7]["error"]
+    assert all(hashes[i]["dhash"] is None for i in (5, 6, 7))
+    with pytest.raises(PythonException, match="NotImplementedError"):
+        image_dhash(assets.filter(F.col("asset_id") == 5), strict=True).collect()
 
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
@@ -3456,18 +2780,13 @@ def test_curate_corpus_asset_near_dup_gate(spark):
     edited = base.copy()
     edited[0, 0] = [255, 255, 255]
 
-    def bmp(px):
-        return _make_bmp(
-            [[tuple(int(v) for v in p[::-1]) for p in row] for row in px]
-        )
-
     # doc 2's image near-dups doc 1's (texts are unrelated — the gate
     # is pixel-space, not text-space); doc 3's asset is undecodable
     # junk (dead-letter → survives the gate); doc 4 is text-only
     assets = spark.createDataFrame(
         [
-            (1, "image/bmp", bytearray(bmp(base))),
-            (2, "image/bmp", bytearray(bmp(edited))),
+            (1, "image/x-portable-pixmap", bytearray(_make_pnm(base))),
+            (2, "image/x-portable-pixmap", bytearray(_make_pnm(edited))),
             (3, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
         ],
         "asset_id long, media_type string, payload binary",
@@ -3817,110 +3136,6 @@ def test_gif_decoder_matches_pil_when_available():
     assert (got == want).all()
 
 
-def _box(btype: bytes, body: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", 8 + len(body)) + btype + body
-
-
-def _make_mp4(width=320, height=240, timescale=1000, duration=2500,
-              audio_track=True, largesize_mdat=False):
-    """Minimal ISO BMFF fixture: ftyp + (optional 64-bit-size mdat) +
-    moov[mvhd + video trak + optional audio trak]."""
-    import struct
-
-    mvhd = _box(
-        b"mvhd",
-        bytes(1) + bytes(3)  # version 0 + flags
-        + struct.pack(">II", 0, 0)  # creation, modification
-        + struct.pack(">II", timescale, duration)
-        + bytes(80),  # rate/volume/reserved/matrix/predefines/next id
-    )
-
-    def tkhd(w, h):
-        return _box(
-            b"tkhd",
-            bytes(4) + struct.pack(">IIII", 0, 0, 1, 0)
-            + struct.pack(">I", duration) + bytes(52)
-            + struct.pack(">II", w << 16, h << 16),
-        )
-
-    traks = _box(b"trak", tkhd(width, height))
-    if audio_track:
-        traks += _box(b"trak", tkhd(0, 0))
-    moov = _box(b"moov", mvhd + traks)
-    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
-    mdat = b""
-    if largesize_mdat:
-        payload = b"\x00" * 24
-        mdat = (
-            struct.pack(">I", 1) + b"mdat"
-            + struct.pack(">Q", 16 + len(payload)) + payload
-        )
-    return ftyp + mdat + moov
-
-
-def test_video_metadata_box_walk(spark):
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        video_metadata,
-    )
-
-    rows = [
-        (1, "video/mp4", _make_mp4()),
-        (2, "video/mp4", _make_mp4(width=1920, height=1080, timescale=600,
-                                   duration=1200, audio_track=False,
-                                   largesize_mdat=True)),
-        (3, "video/y4m", _make_y4m(4, 2, [10, 200])),
-        (4, "video/mp4", b"\x00\x00\x00\x08ftyp"),  # no moov -> dead-letter
-    ]
-    df = spark.createDataFrame(
-        rows, "asset_id long, media_type string, payload binary"
-    )
-    out = {r["asset_id"]: r for r in video_metadata(df).collect()}
-    assert (out[1]["width"], out[1]["height"]) == (320, 240)
-    assert out[1]["duration_ms"] == 2500  # 2500 ticks @ 1000 ticks/s
-    assert out[1]["n_tracks"] == 2  # audio trak counted, its 0x0 ignored
-    assert (out[2]["width"], out[2]["height"]) == (1920, 1080)
-    assert out[2]["duration_ms"] == 2000  # 1200 ticks @ 600 ticks/s
-    assert out[2]["n_tracks"] == 1  # 64-bit mdat skipped correctly
-    assert (out[3]["width"], out[3]["height"]) == (4, 2)
-    assert out[3]["meta_ok"] and out[3]["duration_ms"] is None
-    assert not out[4]["meta_ok"] and "moov" in out[4]["error"]
-    # strict mode raises instead of dead-lettering
-    import pytest
-
-    with pytest.raises(Exception, match="moov"):
-        video_metadata(df, strict=True).collect()
-
-
-def test_video_metadata_truncated_tkhd_dead_letters(spark):
-    """A tkhd whose body is shorter than the 84-byte v0 layout must
-    dead-letter, not read its display size from the preceding sibling's
-    bytes and report garbage dimensions with meta_ok=true."""
-    import struct
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        video_metadata,
-    )
-
-    mvhd = _box(
-        b"mvhd",
-        bytes(1) + bytes(3) + struct.pack(">II", 0, 0)
-        + struct.pack(">II", 1000, 2500) + bytes(80),
-    )
-    stub_tkhd = _box(b"tkhd", bytes(4) + struct.pack(">III", 0, 0, 1))
-    moov = _box(b"moov", mvhd + _box(b"trak", stub_tkhd))
-    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
-    short_mvhd = _box(b"moov", _box(b"mvhd", bytes(4)))
-    df = spark.createDataFrame(
-        [(1, "video/mp4", ftyp + moov), (2, "video/mp4", ftyp + short_mvhd)],
-        "asset_id long, media_type string, payload binary",
-    )
-    out = {r["asset_id"]: r for r in video_metadata(df).collect()}
-    assert not out[1]["meta_ok"] and "tkhd" in out[1]["error"]
-    assert not out[2]["meta_ok"] and "mvhd" in out[2]["error"]
-
-
 def test_semantic_decontaminate_drops_paraphrase_neighbors(spark):
     """A corpus vector nearly parallel to a benchmark vector is flagged
     and its document dropped; orthogonal vectors survive. The n-gram
@@ -4033,29 +3248,6 @@ def test_gif_offset_frame_composes_onto_logical_screen():
     assert (pixels[0, 0] == bg).all() and (pixels[2, 3] == bg).all()
     assert (pixels[1, 1] == np.array(pal[0], np.uint8)).all()
     assert (pixels[1, 2] == np.array(pal[2], np.uint8)).all()
-
-
-def test_video_metadata_accepts_styp_and_mdat_first(spark):
-    """BMFF files needn't lead with ftyp: fragmented streams lead with
-    styp and legacy MOVs can be mdat-first — the box walk, not a magic
-    allowlist, decides."""
-    import struct
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        video_metadata,
-    )
-
-    base = _make_mp4(width=640, height=480)
-    styp_first = _box(b"styp", b"msdh" + bytes(4)) + base
-    # mdat-first: move a tiny mdat ahead of everything
-    mdat_first = _box(b"mdat", b"\x00" * 8) + base
-    df = spark.createDataFrame(
-        [(1, "video/mp4", styp_first), (2, "video/quicktime", mdat_first)],
-        "asset_id long, media_type string, payload binary",
-    )
-    out = {r["asset_id"]: r for r in video_metadata(df).collect()}
-    assert out[1]["meta_ok"] and (out[1]["width"], out[1]["height"]) == (640, 480)
-    assert out[2]["meta_ok"] and (out[2]["width"], out[2]["height"]) == (640, 480)
 
 
 def test_weighted_sample_scales_with_weight(spark):
@@ -6397,427 +5589,6 @@ def test_incremental_embedding_normalized_native_parity(spark):
             vectors, buckets, new, threshold=0.9, num_planes=8,
             n_probes=3,
         ).collect()
-
-
-def _cmyk_gradient(h, w):
-    """Smooth stored-sample (Adobe-inverted) CMYK raster."""
-    import numpy as np
-
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.stack(
-        [
-            255 - xx * 255 // max(w - 1, 1),
-            255 - yy * 255 // max(h - 1, 1),
-            255 - (xx + yy) * 128 // max(w + h - 2, 1),
-            200 + yy * 55 // max(h - 1, 1),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-
-
-def test_jpeg_cmyk_and_ycck_roundtrip():
-    """4-component JPEG decodes natively: a CMYK stream (Adobe APP14
-    transform 0) round-trips to the stored samples within quantization
-    tolerance, the YCCK form (transform 2) of the SAME raster decodes
-    to nearly the same samples (the color transform is the encoder's
-    internal affair), and the RGB composite helper renders it."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_cmyk_to_rgb,
-        _jpeg_decode,
-        _jpeg_encode_cmyk,
-    )
-
-    img = _cmyk_gradient(37, 29)  # non-multiple-of-8 dims
-    for transform in (0, 2):
-        out = _jpeg_decode(_jpeg_encode_cmyk(img, 95, transform))
-        assert out.shape == img.shape == (37, 29, 4)
-        diff = np.abs(out.astype(int) - img.astype(int))
-        assert diff.max() <= 12 and diff.mean() < 2.5, (
-            transform, diff.max(), diff.mean(),
-        )
-    rgb = _jpeg_cmyk_to_rgb(out)
-    assert rgb.shape == (37, 29, 3) and rgb.dtype == np.uint8
-
-
-def test_jpeg_cmyk_featurizes_and_reason_report_flips(spark):
-    """End to end: a CMYK asset lands decode_ok with 32-bit depth (4
-    channels × 8) through decode_features — the r10 flip of the
-    '4-component JPEG' decoder_gap line — and resize_assets composites
-    it to RGB rather than refusing."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_encode_cmyk,
-        decode_features,
-    )
-
-    payload = _jpeg_encode_cmyk(_cmyk_gradient(24, 16), 90, 2)
-    assets = spark.createDataFrame(
-        [(1, "image/jpeg", payload, {"n_bytes": len(payload), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    row = decode_features(assets, real_decoder=True).collect()[0]
-    assert row["decode_ok"] and row["reason"] is None
-    assert row["feature"][:3] == [16.0, 24.0, 32.0]
-
-
-def test_jpeg_dnl_deferred_height_decodes():
-    """A DNL-deferred stream (SOF height 0; the true line count in the
-    0xFFDC segment closing the first scan, per T.81 B.2.5) decodes
-    bit-identically to its plain twin — including with restart markers
-    in the entropy data (the marker-aware DNL scan must not trip on
-    RSTn or stuffed 0xFF00 bytes) — and a height-0 stream WITHOUT a
-    DNL is corrupt, not a gap."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(21, 33)
-    for ri in (0, 3):
-        plain = _jpeg_encode_baseline(img, quality=90, restart_interval=ri)
-        want = _jpeg_decode(plain)
-        # defer the height: zero the SOF field, append DNL before EOI
-        sof_at = plain.index(b"\xff\xc0")
-        patched = bytearray(plain)
-        struct.pack_into(">H", patched, sof_at + 5, 0)
-        assert patched.endswith(b"\xff\xd9")
-        dnl = b"\xff\xdc\x00\x04" + struct.pack(">H", 21)
-        payload = bytes(patched[:-2]) + dnl + b"\xff\xd9"
-        got = _jpeg_decode(payload)
-        assert np.array_equal(got, want), ri
-        # T.81 B.1.1.2 fill bytes may pad ANY marker: an odd run of
-        # 0xFF before the DNL must not desync the marker-aware scan
-        filled = bytes(patched[:-2]) + b"\xff" + dnl + b"\xff\xd9"
-        assert np.array_equal(_jpeg_decode(filled), want), ri
-
-    with pytest.raises(ValueError, match="DNL"):
-        _jpeg_decode(bytes(patched))  # height 0, no DNL segment
-    with pytest.raises(ValueError, match="DNL"):
-        # NL=0 is illegal (valid range 1-65535): corrupt, never a
-        # decode_ok zero-pixel raster
-        zero_dnl = b"\xff\xdc\x00\x04" + struct.pack(">H", 0)
-        _jpeg_decode(bytes(patched[:-2]) + zero_dnl + b"\xff\xd9")
-
-
-def test_avi_mjpeg_native_video_decode():
-    """Motion-JPEG AVI — the first COMPRESSED video format whose
-    content decodes natively: demux finds every '00dc' JPEG frame,
-    the featurizer reports the Y4M contract [w, h, n_frames, mean
-    luma] with a checksum over the bit-exact decoded rasters, a frame
-    stripped of its DHT segments still decodes (the MJPEG implied
-    Annex-K default-table convention), and a non-MJPEG AVI raises the
-    capability NotImplementedError rather than decoding garbage."""
-    import numpy as np
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _featurize_avi_mjpeg,
-        _jpeg_decode,
-        _parse_avi_mjpeg,
-    )
-
-    f0 = _jpeg_gradient(24, 32)
-    f1 = np.roll(f0, 5, axis=1)
-    f2 = np.roll(f0, 11, axis=0)
-    payload = _avi_encode_mjpeg([f0, f1, f2], quality=92, fps=8)
-
-    w, h, fps, frames, n_streams = _parse_avi_mjpeg(payload)
-    assert (w, h, len(frames), n_streams) == (32, 24, 3, 1)
-    assert abs(fps - 8.0) < 1e-6
-    assert all(fr[:2] == b"\xff\xd8" for fr in frames)
-
-    checksum, feats = _featurize_avi_mjpeg(payload)
-    assert feats[:3] == [32.0, 24.0, 3.0]
-    assert 0.0 < feats[3] < 255.0
-
-    # MJPEG convention: strip DHT (0xFFC4) segments from a frame —
-    # the implied Annex-K tables must decode it IDENTICALLY to the
-    # tables the encoder actually wrote (they are the same tables)
-    import struct as _struct
-
-    def strip_dht(jpeg: bytes) -> bytes:
-        out, pos = bytearray(jpeg[:2]), 2
-        while pos + 4 <= len(jpeg):
-            if jpeg[pos] != 0xFF:
-                out += jpeg[pos:]
-                break
-            marker = jpeg[pos + 1]
-            if marker == 0xDA:
-                out += jpeg[pos:]
-                break
-            seglen = _struct.unpack_from(">H", jpeg, pos + 2)[0]
-            if marker != 0xC4:
-                out += jpeg[pos : pos + 2 + seglen]
-            pos += 2 + seglen
-        return bytes(out)
-
-    bare = strip_dht(frames[0])
-    assert b"\xff\xc4" not in bare[: bare.index(b"\xff\xda")]
-    with pytest.raises(ValueError):
-        _jpeg_decode(bare)  # a PLAIN jpeg without DHT is corrupt
-    assert np.array_equal(
-        _jpeg_decode(bare, mjpeg_default_huff=True),
-        _jpeg_decode(frames[0]),
-    )
-
-    # foreign codec: honest capability gap, not garbage — including
-    # field-interlaced MJPA, whose chunks are half-height field pairs
-    for fourcc in (b"XVID", b"MJPA"):
-        foreign = payload.replace(b"vidsMJPG", b"vids" + fourcc, 1)
-        with pytest.raises(NotImplementedError, match="ffmpeg"):
-            _parse_avi_mjpeg(foreign)
-
-    # avih dims are ADVISORY (capture muxers write 0) — the JPEG SOF
-    # dims are authoritative for featurization
-    import struct as _st
-
-    zeroed = bytearray(payload)
-    at = payload.index(b"avih") + 8
-    _st.pack_into("<II", zeroed, at + 32, 0, 0)
-    checksum0, feats0 = _featurize_avi_mjpeg(bytes(zeroed))
-    assert feats0 == feats and checksum0 == checksum
-
-
-def test_avi_mjpeg_cmyk_frame_luma_composites():
-    """A 4-channel (Adobe CMYK) MJPEG frame is stored-inverted ink —
-    the featurizer must composite through _jpeg_cmyk_to_rgb before the
-    BT.601 luma, not weight the C/M/Y planes as if they were RGB."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators import multimodal
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _featurize_avi_mjpeg,
-        _jpeg_cmyk_to_rgb,
-        _jpeg_decode,
-        _jpeg_encode_cmyk,
-    )
-
-    # K=128 makes composite != stored C/M/Y planes, so the two luma
-    # formulas disagree by a wide margin
-    cmyk = np.zeros((16, 16, 4), np.uint8)
-    cmyk[..., 0], cmyk[..., 1], cmyk[..., 2], cmyk[..., 3] = (
-        200, 100, 50, 128,
-    )
-    frame = _jpeg_encode_cmyk(cmyk, quality=95)
-
-    orig = multimodal._jpeg_encode_baseline
-    multimodal._jpeg_encode_baseline = lambda f, quality=85: frame
-    try:
-        payload = _avi_encode_mjpeg([cmyk[..., :3]], quality=95, fps=4)
-    finally:
-        multimodal._jpeg_encode_baseline = orig
-
-    decoded = _jpeg_decode(frame)
-    assert decoded.shape[2] == 4
-    rgb = _jpeg_cmyk_to_rgb(decoded).astype(np.float64)
-    want = float(
-        (0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2])
-        .mean()
-    )
-    raw = decoded.astype(np.float64)
-    wrong = float(
-        (0.299 * raw[..., 0] + 0.587 * raw[..., 1] + 0.114 * raw[..., 2])
-        .mean()
-    )
-    assert abs(want - wrong) > 30  # the bug would be a silent skew
-
-    _, feats = _featurize_avi_mjpeg(payload)
-    assert feats[:3] == [16.0, 16.0, 1.0]
-    assert abs(feats[3] - want) < 1e-9
-
-
-def test_video_metadata_avi_recovers_dims_from_sof(spark):
-    """video_metadata's AVI branch must not report the advisory avih
-    canvas dims when a capture muxer wrote 0s — the first frame's SOF
-    header (a cheap marker walk, no entropy decode) is the authority
-    the featurize surface already uses, so both report the same
-    resolution."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _jpeg_sof_dimensions,
-        video_metadata,
-    )
-
-    f0 = _jpeg_gradient(24, 32)
-    payload = _avi_encode_mjpeg([f0, np.roll(f0, 3, 1)], quality=90, fps=5)
-    zeroed = bytearray(payload)
-    struct.pack_into("<II", zeroed, payload.index(b"avih") + 8 + 32, 0, 0)
-
-    # the probe itself: header-only dims, garbage rejected loudly
-    frames_at = payload.index(b"\xff\xd8")
-    assert _jpeg_sof_dimensions(payload[frames_at:]) == (24, 32)
-    with pytest.raises(ValueError, match="SOI"):
-        _jpeg_sof_dimensions(b"\x00\x01\x02\x03")
-
-    # DNL-deferred height with an FF DC byte pair INSIDE a COM segment
-    # payload between SOF and SOS: the probe must step over marker
-    # segments and only byte-search the post-SOS entropy region (where
-    # 0xFF is always stuffed or a restart marker)
-    com = b"\xff\xfe" + struct.pack(">H", 6) + b"\xff\xdc\x99\x99"
-    sof0 = b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, 0, 32, 1) + bytes(
-        [1, 0x11, 0]
-    )
-    sos = b"\xff\xda" + struct.pack(">H", 8) + bytes(
-        [1, 1, 0x00, 0, 63, 0]
-    )
-    entropy = b"\x12\x34\x56\x78"
-    dnl = b"\xff\xdc" + struct.pack(">HH", 4, 24)
-    fake = b"\xff\xd8" + com + sof0 + sos + entropy + dnl + b"\xff\xd9"
-    assert _jpeg_sof_dimensions(fake) == (24, 32)
-
-    # ISO/IEC 10918-1 B.1.1.2: markers may be padded with 0xFF fill
-    # bytes — a run before SOF must be stepped over, not parsed as a
-    # marker whose "length" bytes desynchronize the walk
-    padded = b"\xff\xd8" + b"\xff\xff\xff" + sof0[1:] + sos + entropy
-    assert _jpeg_sof_dimensions(padded + dnl) == (24, 32)
-
-    df = spark.createDataFrame(
-        [(1, "video", bytes(zeroed))],
-        "asset_id long, media_type string, payload binary",
-    )
-    row = video_metadata(df).collect()[0]
-    assert row["meta_ok"] and (row["width"], row["height"]) == (32, 24)
-
-
-def test_avi_mjpeg_through_spark_featurize_and_frame_sample(spark):
-    """End to end through the Arrow operators: an MJPEG AVI asset
-    lands decode_ok through decode_features (video family), and
-    sample_frames emits its per-frame JPEG payloads with original
-    indices (every_n honored)."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        decode_features,
-        sample_frames,
-    )
-
-    frames = [
-        np.roll(_jpeg_gradient(16, 16), k, axis=1) for k in range(5)
-    ]
-    payload = _avi_encode_mjpeg(frames, quality=90, fps=4)
-    assets = spark.createDataFrame(
-        [(1, "video/x-msvideo", payload,
-          {"n_bytes": len(payload), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    row = decode_features(assets, real_decoder=True).collect()[0]
-    assert row["decode_ok"] and row["reason"] is None
-    assert row["feature"][:3] == [16.0, 16.0, 5.0]
-
-    out = sample_frames(assets, every_n=2, real_decoder=True).collect()
-    kept = sorted(r["frame_idx"] for r in out)
-    assert kept == [0, 2, 4]
-    assert all(bytes(r["frame"])[:2] == b"\xff\xd8" for r in out)
-
-
-def test_video_metadata_covers_avi(spark):
-    """The metadata-only pass parses AVI container facts regardless
-    of codec (resolution/duration gates are codec-agnostic), while
-    content DECODE stays MJPG-bound."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        video_metadata,
-    )
-
-    frames = [np.roll(_jpeg_gradient(12, 20), k, axis=0) for k in range(4)]
-    mjpg = _avi_encode_mjpeg(frames, quality=85, fps=4)
-    xvid = mjpg.replace(b"vidsMJPG", b"vidsXVID", 1)
-    assets = spark.createDataFrame(
-        [
-            (1, "video/x-msvideo", mjpg, {"n_bytes": len(mjpg), "source": "t"}),
-            (2, "video/x-msvideo", xvid, {"n_bytes": len(xvid), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    rows = {r["asset_id"]: r for r in video_metadata(assets).collect()}
-    for rid in (1, 2):  # codec-agnostic container facts
-        assert rows[rid]["meta_ok"]
-        assert (rows[rid]["width"], rows[rid]["height"]) == (20, 12)
-        assert rows[rid]["duration_ms"] == 1000  # 4 frames at 4 fps
-
-
-def test_avi_opendml_avix_and_multistream():
-    """OpenDML 'RIFF AVIX' extension segments are walked (frames past
-    the first segment count), and chunks of NON-primary streams are
-    excluded by their stream prefix — an audio stream raises
-    n_streams without inflating the frame count or duration."""
-    import struct
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _featurize_avi_mjpeg,
-        _jpeg_encode_baseline,
-        _parse_avi_mjpeg,
-    )
-
-    def chunk(tag, body):
-        return tag + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    def lst(t, body):
-        return chunk(b"LIST", t + body)
-
-    frames = [np.roll(_jpeg_gradient(16, 16), k, axis=1) for k in range(2)]
-    base = _avi_encode_mjpeg(frames, quality=90, fps=4)
-
-    # append an AVIX segment carrying a third frame
-    extra = _jpeg_encode_baseline(_jpeg_gradient(16, 16), quality=90)
-    avix = chunk(
-        b"RIFF", b"AVIX" + lst(b"movi", chunk(b"00dc", extra))
-    )
-    w, h, fps, got, n = _parse_avi_mjpeg(base + avix)
-    assert len(got) == 3 and got[2] == extra
-    _checksum, feats = _featurize_avi_mjpeg(base + avix)
-    assert feats[2] == 3.0
-
-    # inject an audio strl AFTER the video strl, and an '01wb' audio
-    # chunk into movi: n_streams=2, frames still the video stream's
-    strh_aud = b"auds" + b"\x00" * 48
-    audio_strl = lst(b"strl", chunk(b"strh", strh_aud))
-    # rebuild: insert the audio strl right before the movi LIST
-    movi_at = base.index(b"movi") - 8
-    with_audio = bytearray(
-        base[:movi_at] + audio_strl + base[movi_at:]
-    )
-    struct.pack_into(  # fix the outer RIFF size
-        "<I", with_audio, 4, len(with_audio) - 8
-    )
-    # smuggle an audio data chunk into movi too
-    movi_at2 = bytes(with_audio).index(b"movi") - 8
-    movi_size = struct.unpack_from("<I", with_audio, movi_at2 + 4)[0]
-    audio_chunk = chunk(b"01wb", b"\x00" * 10)
-    insert_at = movi_at2 + 8 + movi_size
-    out = bytearray(
-        bytes(with_audio[:insert_at])
-        + audio_chunk
-        + bytes(with_audio[insert_at:])
-    )
-    struct.pack_into("<I", out, movi_at2 + 4, movi_size + len(audio_chunk))
-    struct.pack_into("<I", out, 4, len(out) - 8)
-    w2, h2, fps2, frames2, n2 = _parse_avi_mjpeg(bytes(out))
-    assert n2 == 2 and len(frames2) == 2  # audio chunk not a "frame"
 
 
 def test_leakage_safe_split_cluster_coherent(spark):
