@@ -22,7 +22,7 @@ Scale shape (the industrial one, cf. the original BPE formulation):
   (like multimodal decode): left-to-right greedy pair merging is
   sequential within a word, which Spark's higher-order array functions
   can't express. Batches are vocab rows (small), never corpus rows.
-- Lineage is truncated per round (``_materialize``), exactly like the
+- Lineage is truncated per round (``session.materialize``), exactly like the
   components loop — round N's plan must not replay rounds 1..N-1.
 - Tokenizing a corpus afterward is a single ``mapInPandas`` pass with the
   learned merge list shipped in the task closure (it is a model artifact
@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import tokens
-from inbev_data_engineering_case_spark.operators.dedup import _materialize
+from inbev_data_engineering_case_spark.session import materialize
 
 EOW = "</w>"
 
@@ -156,13 +156,14 @@ def train_bpe_with_stats(
     the number of (pair-count aggregation + merge application) Spark-job
     cycles, the quantity batching exists to cut."""
     vocab = build_word_vocab(docs, text_col)
-    syms = _materialize(
+    syms = materialize(
         vocab.select(
             F.concat(
                 F.split(F.col("word"), ""), F.array(F.lit(EOW))
             ).alias("syms"),
             "n",
-        )
+        ),
+        eager=False,
     )
     merges: list[tuple[str, str]] = []
     rounds = 0
@@ -195,7 +196,7 @@ def train_bpe_with_stats(
             break
         batch = _select_batch(top, k)
         merges.extend(batch)
-        syms = _materialize(_apply_merges(syms, batch))
+        syms = materialize(_apply_merges(syms, batch), eager=False)
     return merges, rounds
 
 

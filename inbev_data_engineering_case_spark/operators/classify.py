@@ -43,6 +43,7 @@ from inbev_data_engineering_case_spark.functions import (
     portable_hash64,
     tokens,
 )
+from inbev_data_engineering_case_spark.session import materialize
 
 # special model rows (real buckets are 60-bit non-negative hashes):
 BIAS_BUCKET = -1  # class-prior log-odds, micro-units
@@ -160,7 +161,7 @@ def bow_weights_from_counts(
     sizes merged)."""
     import math
 
-    cached = counts.localCheckpoint(eager=True)
+    cached = materialize(counts, eager=True)
     special_rows = cached.filter(F.col("bucket") < 0).collect()
     metas = sum(1 for r in special_rows if r["bucket"] == META_BUCKET)
     specials = {r["bucket"]: r for r in special_rows}
@@ -496,7 +497,6 @@ def classifier_threshold_sweep(
     label_col: str = "label",
     score_col: str = "score_micro",
     approx: bool = False,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """The precision/recall CURVE ``evaluate_bow_classifier`` samples
     at one point: one row per candidate threshold — ``(cut_idx,
@@ -514,20 +514,16 @@ def classifier_threshold_sweep(
     1-row bounds aggregate, then the per-cut rows unfold from an
     in-row array. The evaluation frame has TWO consumers (the bounds
     pass and the counting pass) and carries the whole upstream
-    scoring plan, so it is pinned via ``dedup._materialize`` — the
+    scoring plan, so it is pinned via ``session.materialize`` — the
     curate.py 'read it twice → materialize first' discipline. Same
     integrity guards and exact-int-ppm discipline as the point
     evaluator; rates are NULL on empty denominators (a one-class
     holdout still sweeps)."""
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
-    )
-
     if n_cuts < 1:
         raise ValueError("classifier_threshold_sweep: n_cuts must be >= 1")
-    joined = _materialize(
+    joined = materialize(
         _guarded_eval_frame(scored, labels, id_col, label_col, score_col),
-        materialize_mode,
+        eager=False,
     )
     qs = [i / (n_cuts + 1) for i in range(1, n_cuts + 1)]
     fn = "approx_percentile" if approx else "percentile"
@@ -695,7 +691,7 @@ def multiclass_bow_weights_from_counts(
     aggregates (model-metadata-sized, the ``score_bow_classifier``
     discipline); totals and priors stay plan-side as broadcast
     class-cardinality aggregates."""
-    cached = counts.localCheckpoint(eager=True)
+    cached = materialize(counts, eager=True)
     # ONE validation job over the cached counts (it is read again by
     # the weight/total/prior projections below, so every extra action
     # here is a full re-scan): META cardinality + value, class count,
@@ -809,7 +805,6 @@ def score_bow_multiclass(
     model: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_mode: str = "local",
     doc_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Score every document against a ``train_bow_multiclass`` model
@@ -831,10 +826,9 @@ def score_bow_multiclass(
     the corpus. The only collect is the one-row META read (hash-space
     guard, the binary scorer's discipline).
 
-    ``materialize_mode`` ('local' | 'checkpoint' | 'table:<dir>', see
-    ``dedup._materialize``) selects how the per-(doc, bucket) count
-    table is shared between its two consumers (token totals + matched
-    partials) — one corpus tokenization instead of two.
+    The per-(doc, bucket) count table is materialized once and shared
+    between its two consumers (token totals + matched partials) — one
+    corpus tokenization instead of two.
 
     ``doc_buckets`` (default None) lets a composed caller hand in the
     per-(doc, bucket) count table — ``(id_col, bucket, _n)``, already
@@ -901,18 +895,14 @@ def score_bow_multiclass(
     # consumers read the (far smaller) counts table — without this the
     # corpus tokenization ran twice per scoring call (r15 optimization
     # round, guide §1.2: repeated-subtree evaluation).
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
-    )
-
     if doc_buckets is not None:
         occ_n = doc_buckets.select(id_col, "bucket", "_n")
     else:
-        occ_n = _materialize(
+        occ_n = materialize(
             _doc_buckets(docs, text_col, id_col, n_buckets)
             .groupBy(id_col, "bucket")
             .agg(F.count("*").alias("_n")),
-            materialize_mode,
+            eager=False,
         )
     tok_tot = occ_n.groupBy(id_col).agg(F.sum("_n").alias("_ntok"))
     matched = (
@@ -970,7 +960,6 @@ def train_and_score_bow_multiclass(
     id_col: str = "doc_id",
     n_buckets: int = DEFAULT_N_BUCKETS,
     alpha: float = 1.0,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Train the multi-class model on ``labeled`` and score the SAME
     corpus with it, tokenizing ONCE total (r15 optimization round,
@@ -1003,15 +992,12 @@ def train_and_score_bow_multiclass(
     base = labeled.select(
         F.col(id_col), F.col(text_col), cls.alias("_cls")
     )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
-    )
 
-    occ_dcb = _materialize(
+    occ_dcb = materialize(
         _doc_buckets(base, text_col, id_col, n_buckets, extra=("_cls",))
         .groupBy(id_col, "_cls", "bucket")
         .agg(F.count("*").alias("_n")),
-        materialize_mode,
+        eager=False,
     )
     counts = occ_dcb.groupBy("_cls", "bucket").agg(
         F.sum("_n").alias("c")
@@ -1038,7 +1024,6 @@ def train_and_score_bow_multiclass(
         model,
         text_col=text_col,
         id_col=id_col,
-        materialize_mode=materialize_mode,
         doc_buckets=occ_dcb,
     )
 

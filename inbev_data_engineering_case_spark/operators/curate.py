@@ -29,7 +29,6 @@ from inbev_data_engineering_case_spark.operators.dedup import (
     DEFAULT_SHINGLE_WORDS,
     _band_keys,
     _ensure_parallelism,
-    _materialize,
     dedup_components,
     dedup_components_incremental,
     exact_dedup,
@@ -39,6 +38,7 @@ from inbev_data_engineering_case_spark.operators.dedup import (
 from inbev_data_engineering_case_spark.operators.textops import (
     score_documents,
 )
+from inbev_data_engineering_case_spark.session import materialize
 
 
 def _resolve_bloom_bits(
@@ -99,7 +99,7 @@ def _drop_anti(
     anti join, false negatives cannot exist).
 
     The anti form evaluates ``left`` twice (cleared + might
-    branches); every pipeline call site feeds a ``_materialize``\\ d
+    branches); every pipeline call site feeds a materialized
     frame, and ``bloom_anti_join``'s ``pin_lineage="auto"`` guard
     additionally pins any nondeterministic lineage it is handed — the
     dual-consumer determinism requirement documented at its
@@ -124,7 +124,6 @@ def curate_corpus(
     benchmark: DataFrame | None = None,
     decontaminate_ngram: int = 8,
     min_avg_logprob: float | None = None,
-    materialize_mode: str = "local",
     strip_html: bool = False,
     corpus_embeddings: DataFrame | None = None,
     benchmark_embeddings: DataFrame | None = None,
@@ -201,11 +200,10 @@ def curate_corpus(
     The LM trains on the already-filtered eligible set — the standard
     ordering, so junk the cheap filters caught doesn't pollute the model.
 
-    ``materialize_mode`` ('local' | 'checkpoint' | 'table:<dir>', see
-    ``dedup._materialize``) selects how the scored-eligible corpus and the
-    near-dedup signature table are shared across their consumers — the
+    The scored-eligible corpus and the near-dedup signature table are
+    shared across their consumers through ``session.materialize``: the
     cluster-safe swap (parquet scratch table instead of executor-local
-    blocks) is a config value, not a code edit.
+    blocks) is the session's checkpoint dir, not a code edit.
 
     ``strip_html=True`` prepends the crawl-extraction stage
     (``textops.html_to_text``): raw page markup is reduced to prose
@@ -341,7 +339,6 @@ def curate_corpus(
             asset_near_dup,
             max_hamming=asset_max_hamming,
             bucket_bits=asset_bucket_bits,
-            materialize_mode=materialize_mode,
         )
         asset_drop = (
             dedup_components(asset_pairs.select("id_a", "id_b"))
@@ -378,7 +375,7 @@ def curate_corpus(
             # appear as nodes in the pipeline's own pair graph. The
             # report is a second consumer of `eligible` — materialize
             # first (the classifier/LM stages' discipline).
-            eligible = _materialize(eligible, materialize_mode)
+            eligible = materialize(eligible, eager=False)
             pre_materialized = True
             halo_seeds = contamination_report(
                 eligible, benchmark, n=decontaminate_ngram,
@@ -420,7 +417,7 @@ def curate_corpus(
         # at or above ``min_score_micro``. Scoring + the keep-join
         # read `eligible` twice — materialize first, the LM stage's
         # discipline.
-        eligible = _materialize(eligible, materialize_mode)
+        eligible = materialize(eligible, eager=False)
         keep_clf = (
             score_bow_classifier(
                 eligible.select(id_col, text_col),
@@ -443,7 +440,7 @@ def curate_corpus(
         # LM training + scoring reads `eligible` several times (bigram
         # counts, unigram counts, vocab, scoring join) — materialize
         # first so those are table reads, not repeated corpus scans.
-        eligible = _materialize(eligible, materialize_mode)
+        eligible = materialize(eligible, eager=False)
         keep_lm = (
             bigram_lm_scores(eligible, id_col=id_col, text_col=text_col)
             .filter(F.col("avg_logprob") >= min_avg_logprob)
@@ -457,8 +454,6 @@ def curate_corpus(
     # near-dedup signatures, final keep anti-join): without materializing
     # it once, each consumer re-runs the full corpus scan + lang/quality
     # scoring (+ decontamination) — three 100 TB passes instead of one.
-    # materialize_mode selects the sharing mechanism (local blocks /
-    # reliable checkpoint / parquet scratch table).
     if split_threshold is not None:
         if split_weights is None:
             raise ValueError(
@@ -473,9 +468,9 @@ def curate_corpus(
                 " loose split graph must CONTAIN the dedup graph"
             )
     if not pre_materialized:  # the halo stage may have done it already
-        eligible = _materialize(eligible, materialize_mode)
+        eligible = materialize(eligible, eager=False)
     _, final, split_clusters, dedup_pairs = _dedup_chain(
-        eligible, text_col, id_col, near_dup_threshold, materialize_mode,
+        eligible, text_col, id_col, near_dup_threshold,
         bloom_prefilter_bits=bloom_prefilter_bits,
         require_convergence=split_weights is not None,
         # the validation above already rejected split_threshold
@@ -545,7 +540,6 @@ def curate_corpus(
                 cost_col="_tb_cost",
                 quality_col="quality",
                 id_col=id_col,
-                materialize_mode=materialize_mode,
             ).drop("_tb_cost")
         else:
             final = select_within_budget(
@@ -554,7 +548,6 @@ def curate_corpus(
                 cost_col="_tb_cost",
                 quality_col="quality",
                 id_col=id_col,
-                materialize_mode=materialize_mode,
             ).drop("_tb_cost")
     if split_weights is not None:
         # No clobber guard needed here: the scoring projection already
@@ -600,7 +593,6 @@ def _dedup_chain(
     text_col: str,
     id_col: str,
     near_dup_threshold: float,
-    materialize_mode: str,
     bloom_prefilter_bits: int | str | None = None,
     require_convergence: bool = False,
     split_threshold: float | None = None,
@@ -632,9 +624,9 @@ def _dedup_chain(
     exact_keep = exact_dedup(eligible, text_col, id_col).select(
         F.col("keep_id").alias(id_col)
     )
-    after_exact = _materialize(
+    after_exact = materialize(
         _keep_semi(eligible, exact_keep, id_col, bloom_prefilter_bits),
-        materialize_mode,
+        eager=False,
     )
 
     # near-dedup: drop every cluster member except the component id
@@ -643,7 +635,6 @@ def _dedup_chain(
     )
     pairs = minhash_dedup_pairs(
         after_exact, text_col, id_col, threshold=pair_thresh,
-        materialize_mode=materialize_mode,
     )
     if split_threshold is None:
         split_clusters = None
@@ -651,12 +642,12 @@ def _dedup_chain(
             # a second consumer (the halo BFS) will read the pair
             # graph beside the components run — 24-byte rows,
             # materialize once (the split branch's discipline)
-            pairs = _materialize(pairs, materialize_mode)
+            pairs = materialize(pairs, eager=False)
         dedup_pairs = pairs
     else:
         # two consumers (dedup subset + loose split graph): pair rows
         # are 24 bytes, materialize once
-        pairs = _materialize(pairs, materialize_mode)
+        pairs = materialize(pairs, eager=False)
         dedup_pairs = pairs.filter(
             F.col("est_jaccard") >= near_dup_threshold
         )
@@ -670,7 +661,7 @@ def _dedup_chain(
         F.col("node").alias(id_col)
     )
     # the drop side of the prefilter family: after_exact is
-    # _materialize'd above, satisfying bloom_anti_join's dual-consumer
+    # materialized above, satisfying bloom_anti_join's dual-consumer
     # determinism requirement
     final = _drop_anti(after_exact, drop, id_col, bloom_prefilter_bits)
     return after_exact, final, split_clusters, dedup_pairs
@@ -721,7 +712,6 @@ def curate_incremental(
     near_dup_threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_mode: str = "local",
     bloom_prefilter_bits: int | str | None = None,
     classifier_model: DataFrame | None = None,
     min_score_micro: int = 0,
@@ -919,12 +909,12 @@ def curate_incremental(
         delta, text_col, id_col,
         extra_cols=((source_col,) if needs_source else ()),
     )
-    eligible = _materialize(
+    eligible = materialize(
         scored.filter(
             F.col("lang").isin(*languages)
             & (F.col("quality") >= min_quality)
         ),
-        materialize_mode,
+        eager=False,
     )
     halo_seeds = None
     if halo_benchmark is not None:
@@ -956,9 +946,9 @@ def curate_incremental(
             .filter(F.col("score_micro") >= min_score_micro)
             .select(id_col)
         )
-        eligible = _materialize(
+        eligible = materialize(
             _keep_semi(eligible, keep_clf, id_col, bloom_prefilter_bits),
-            materialize_mode,
+            eager=False,
         )
 
     # exact dedup: against the stored corpus (anti-join on the 8-byte
@@ -970,11 +960,11 @@ def curate_incremental(
         stored_fps.select("fp").distinct(), on="fp", how="left_anti"
     )
     exact_keep = fps.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    eligible = _materialize(
+    eligible = materialize(
         eligible.join(
             exact_keep.select(id_col), on=id_col, how="left_semi"
         ),
-        materialize_mode,
+        eager=False,
     )
 
     # near-dedup vs stored signatures + within the delta; drop every
@@ -986,13 +976,12 @@ def curate_incremental(
         text_col=text_col,
         id_col=id_col,
         threshold=near_dup_threshold,
-        materialize_mode=materialize_mode,
     )
     if artifacts_out is not None or halo_benchmark is not None:
         # further consumers (the artifact advance, the halo walk) will
         # read the pair table beside the drop decision — 24-byte rows,
         # materialize once (the _dedup_chain discipline)
-        pairs = _materialize(pairs, materialize_mode)
+        pairs = materialize(pairs, eager=False)
         if artifacts_out is not None:
             artifacts_out["pairs"] = pairs
     if stored_components is None:
@@ -1028,7 +1017,7 @@ def curate_incremental(
             .select(F.col("node").alias(id_col))
         )
     # same prefilter family as the batch pipeline's drop join;
-    # `eligible` is _materialize'd above (dual-consumer requirement)
+    # `eligible` is materialized above (dual-consumer requirement)
     kept = _drop_anti(eligible, drop, id_col, bloom_prefilter_bits)
     if halo_benchmark is not None:
         # advance the halo memory over the SAME pair delta the dedup
@@ -1072,7 +1061,6 @@ def curate_incremental(
                 cost_col="_tb_cost",
                 quality_col="quality",
                 id_col=id_col,
-                materialize_mode=materialize_mode,
             ).drop("_tb_cost")
         else:
             kept = select_within_budget(
@@ -1081,7 +1069,6 @@ def curate_incremental(
                 cost_col="_tb_cost",
                 quality_col="quality",
                 id_col=id_col,
-                materialize_mode=materialize_mode,
             ).drop("_tb_cost")
     return kept
 
@@ -1351,7 +1338,6 @@ def leakage_safe_split(
     salt: str = "split",
     buckets: int = 10_000,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """``hash_split`` with the eval-contamination guard: near-duplicate
     documents NEVER straddle splits.
@@ -1386,7 +1372,7 @@ def leakage_safe_split(
     ``max_iter``; pointer jumping covers diameter ~2^max_iter).
     """
     keyed, _ = _component_keyed(
-        documents, pairs, id_col, max_iter, reliable_checkpoint,
+        documents, pairs, id_col, max_iter,
         "leakage_safe_split",
         # same symmetry as the incremental twin: a pre-existing
         # 'split' column would be silently clobbered by hash_split's
@@ -1404,7 +1390,6 @@ def _component_keyed(
     pairs: DataFrame,
     id_col: str,
     max_iter: int,
-    reliable_checkpoint: bool | None,
     op_name: str,
     reserved: tuple[str, ...] = ("_split_key",),
 ) -> tuple[DataFrame, DataFrame]:
@@ -1423,7 +1408,6 @@ def _component_keyed(
     comp = dedup_components(
         pairs,
         max_iter=max_iter,
-        reliable_checkpoint=reliable_checkpoint,
         require_convergence=True,
     )
     keyed = docs.join(
@@ -1446,7 +1430,6 @@ def incremental_leakage_split(
     salt: str = "split",
     buckets: int = 10_000,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """``leakage_safe_split``'s delta twin: assign splits to a NEW crawl
     batch without touching — or re-splitting — history.
@@ -1499,7 +1482,7 @@ def incremental_leakage_split(
             " their frozen split; feed only genuinely new ids"
         )
     keyed, comp = _component_keyed(
-        new_docs, pairs, id_col, max_iter, reliable_checkpoint,
+        new_docs, pairs, id_col, max_iter,
         "incremental_leakage_split",
         reserved=(
             "_split_key", "split", "n_linked_splits",
@@ -1650,7 +1633,6 @@ def incremental_minhash_pairs(
     band_size: int = DEFAULT_BAND_SIZE,
     shingle_words: int = DEFAULT_SHINGLE_WORDS,
     threshold: float = 0.5,
-    materialize_mode: str = "local",
     new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against itself AND against an existing
@@ -1673,18 +1655,18 @@ def incremental_minhash_pairs(
     Must be ``minhash_signatures`` output over exactly ``new_docs``
     with the SAME (num_hashes, shingle_words) geometry as
     ``stored_sigs``, and the CALLER owns its materialization (it
-    feeds both banding branches — pass it pinned, e.g.
-    localCheckpointed, or its lineage re-runs per branch)."""
+    feeds both banding branches — pass it pinned, e.g. through
+    ``session.materialize``, or its lineage re-runs per branch)."""
     if new_sigs is None:
         # parallelism guard like minhash_dedup_pairs: a small delta
         # arriving as 1-2 scan splits would pin the compute-bound
         # shingle+hash stage to 1-2 cores
-        new_sigs = _materialize(
+        new_sigs = materialize(
             minhash_signatures(
                 _ensure_parallelism(new_docs), text_col, id_col,
                 num_hashes, shingle_words,
             ),
-            materialize_mode,
+            eager=False,
         )
 
     def banded(sigs: DataFrame) -> DataFrame:
@@ -1747,7 +1729,6 @@ def curation_report(
     near_dup_threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_mode: str = "local",
     benchmark: DataFrame | None = None,
     decontaminate_ngram: int = 8,
     halo_hops: int | None = None,
@@ -1779,8 +1760,7 @@ def curation_report(
     identical parameters, so its counts are STRUCTURALLY the
     cardinalities of ``curate_corpus``'s intermediate frames — the
     final row always equals ``curate_corpus(...)`` with the same
-    arguments ``.count()``. The scored corpus materializes once (same
-    ``materialize_mode`` contract) and the three filter-stage counts
+    arguments ``.count()``. The scored corpus materializes once and the three filter-stage counts
     come from ONE conditional aggregation over it; invoked standalone
     it costs roughly one curation run (it IS the pipeline,
     instrumented).
@@ -1790,8 +1770,8 @@ def curation_report(
             "curation_report: halo_hops requires benchmark (the halo"
             " seeds are the direct n-gram contamination flags)"
         )
-    scored = _materialize(
-        score_documents(documents, text_col, id_col), materialize_mode
+    scored = materialize(
+        score_documents(documents, text_col, id_col), eager=False
     )
     lang_ok = F.col("lang").isin(*languages)
     quality_ok = lang_ok & (F.col("quality") >= min_quality)
@@ -1801,7 +1781,7 @@ def curation_report(
         F.count(F.when(quality_ok, 1)).alias("_quality"),
     )
 
-    eligible = _materialize(scored.filter(quality_ok), materialize_mode)
+    eligible = materialize(scored.filter(quality_ok), eager=False)
     r = head.first()
     stages: list[tuple[str, int]] = [
         ("input", r["_input"]),
@@ -1817,12 +1797,12 @@ def curation_report(
 
         if halo_hops is None:
             # the plain pipeline drops directly at this spot
-            eligible = _materialize(
+            eligible = materialize(
                 decontaminate(
                     eligible, benchmark, n=decontaminate_ngram,
                     id_col=id_col, text_col=text_col,
                 ),
-                materialize_mode,
+                eager=False,
             )
             stages.append(("decontaminate", eligible.count()))
         else:
@@ -1834,7 +1814,7 @@ def curation_report(
                 id_col=id_col, text_col=text_col,
             ).select(id_col)
     after_exact, final, _, dedup_pairs = _dedup_chain(
-        eligible, text_col, id_col, near_dup_threshold, materialize_mode,
+        eligible, text_col, id_col, near_dup_threshold,
         materialize_pairs=halo_seeds is not None,
     )
     stages.append(("exact_dedup", after_exact.count()))

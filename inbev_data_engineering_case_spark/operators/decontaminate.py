@@ -35,6 +35,7 @@ from inbev_data_engineering_case_spark.functions import (
     portable_hash64,
     word_ngrams,
 )
+from inbev_data_engineering_case_spark.session import materialize
 
 DEFAULT_NGRAM_WORDS = 8
 
@@ -137,7 +138,6 @@ def boilerplate_report(
     text_col: str = "text",
     portable: bool = True,
     broadcast_hot: bool = True,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Cross-corpus boilerplate profiling (C4/RefinedWeb-style hygiene —
     headers, footers, license blurbs shared verbatim across pages): for
@@ -161,24 +161,22 @@ def boilerplate_report(
     AQE aligns them.
 
     The gram stream has TWO consumers (hot-set aggregation + the
-    per-doc join), so it is materialized once via ``materialize_mode``
-    (see ``dedup._materialize``: 'local' | 'checkpoint' |
-    'table:<dir>') — without this the tokenize→shingle→hash subtree,
-    the dominant cost, runs twice (measured 10.1s → 4.5s at sf0.1).
+    per-doc join), so it is materialized once — without this the
+    tokenize→shingle→hash subtree, the dominant cost, runs twice
+    (measured 10.1s → 4.5s at sf0.1).
     """
     from inbev_data_engineering_case_spark.operators.dedup import (
         _ensure_parallelism,
-        _materialize,
     )
 
-    grams = _materialize(
+    grams = materialize(
         _ensure_parallelism(documents).select(
             F.col(id_col),
             F.explode(
                 F.array_distinct(word_ngrams(F.lower(F.col(text_col)), n))
             ).alias("gram"),
         ).select(id_col, _gram_hash("gram", portable).alias("gram_h")),
-        materialize_mode,
+        eager=False,
     )
     hot = (
         grams.groupBy("gram_h")

@@ -53,6 +53,7 @@ from inbev_data_engineering_case_spark.operators.textops import (
     fingerprint,
     normalize_for_fingerprint,
 )
+from inbev_data_engineering_case_spark.session import materialize
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
@@ -66,96 +67,6 @@ DEFAULT_SHINGLE_WORDS = 3
 # ``_split_hot_buckets``). 10k² /2 = 5e7 comparisons is the most any
 # single bucket may cost before the fallback engages.
 DEFAULT_MAX_BUCKET_SIZE = 10_000
-
-
-def _parse_materialize_mode(mode: str) -> tuple[str, str | None]:
-    """Split a materialize-mode string into (kind, path).
-
-    Accepted: ``"local"``, ``"checkpoint"``, ``"table:<dir>"``. One string
-    so deployments can carry it in a single config value."""
-    if mode in ("local", "checkpoint"):
-        return mode, None
-    if mode.startswith("table:") and len(mode) > len("table:"):
-        return "table", mode[len("table:"):]
-    raise ValueError(
-        f"materialize_mode must be 'local', 'checkpoint', or "
-        f"'table:<dir>'; got {mode!r}"
-    )
-
-
-def _materialize(df: DataFrame, mode: str = "local") -> DataFrame:
-    """Compute an intermediate (signature table, scored corpus) once and
-    share it across every downstream consumer. Without this, e.g. the a/b
-    branches of a self-join each re-evaluate the whole shingle+hash
-    subtree — doubling the dominant cost.
-
-    This is the REPO-WIDE sharing helper: ``curate`` and ``quality``
-    import it too (the underscore marks it internal to the package,
-    not to this module), so the cluster-safety trade stays one config
-    value everywhere.
-
-    ``mode`` selects the cluster-safety/speed trade as CONFIG, not a code
-    edit:
-
-    - ``"local"`` (default): lazy ``localCheckpoint`` — executor-block
-      storage, fastest, but blocks are lost with their executor, so a
-      cluster job fails on executor loss. The single-node/test fast path.
-    - ``"checkpoint"``: eager fault-tolerant ``checkpoint()`` to the
-      session's checkpoint dir (requires ``sc.setCheckpointDir``; put it
-      on HDFS/object store on a cluster — survives executor loss).
-    - ``"table:<dir>"``: write parquet under ``<dir>`` and read it back —
-      fault-tolerant, spillable, survives the session, and the rescan
-      gets a fresh file-source plan (size stats for AQE/broadcast
-      decisions). The 100 TB production setting; point it at the job's
-      scratch prefix (swap for Delta by writing a table instead).
-
-    Cleanup contract for ``table:`` mode: scratch tables are CALLER-owned.
-    Each call writes a fresh uuid-named directory under ``<dir>`` and
-    nothing deletes it automatically (a composed pipeline may still be
-    reading an earlier scratch when a later one is written, so no safe
-    auto-TTL exists inside this helper). Every created path is recorded in
-    ``scratch_table_paths(spark)``; call ``cleanup_scratch_tables(spark)``
-    after the job's terminal action, or point ``<dir>`` at a job-scoped
-    prefix your orchestrator deletes — the reference's Airflow pattern —
-    and skip per-path bookkeeping entirely."""
-    kind, path = _parse_materialize_mode(mode)
-    if kind == "local":
-        return df.localCheckpoint(eager=False)
-    if kind == "checkpoint":
-        return df.checkpoint(eager=True)
-    import uuid
-
-    target = f"{path.rstrip('/')}/mat_{uuid.uuid4().hex}"
-    df.write.parquet(target)
-    spark = df.sparkSession
-    scratch_table_paths(spark).append(target)
-    return spark.read.parquet(target)
-
-
-def scratch_table_paths(spark) -> list[str]:
-    """The session-lived registry of ``table:`` scratch directories written
-    by ``_materialize`` (oldest first). Mutating it is allowed — cleanup
-    removes entries it deletes."""
-    if not hasattr(spark, "_graft_scratch_tables"):
-        spark._graft_scratch_tables = []
-    return spark._graft_scratch_tables
-
-
-def cleanup_scratch_tables(spark) -> list[str]:
-    """Delete every registered ``table:`` scratch directory and return the
-    paths removed. Uses the Hadoop FileSystem API so it works on whatever
-    store the scratch prefix lives on (local, HDFS, s3a, ...). Call only
-    after the job's terminal action — scratch tables back live plans."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    registry = scratch_table_paths(spark)
-    removed = []
-    for target in list(registry):
-        p = jvm.org.apache.hadoop.fs.Path(target)
-        p.getFileSystem(hconf).delete(p, True)
-        registry.remove(target)
-        removed.append(target)
-    return removed
 
 
 def _estimate_scan_splits(df: DataFrame) -> int | None:
@@ -232,7 +143,6 @@ def _split_hot_buckets(
     rows: DataFrame,
     keys: list[str],
     max_bucket_size: int,
-    materialize_mode: str = "local",
 ) -> tuple[DataFrame, DataFrame | None]:
     """Split bucketed rows into (cold, hot) by per-bucket row count;
     ``hot`` is None on the (common) empty fast path so callers keep the
@@ -261,9 +171,9 @@ def _split_hot_buckets(
     # isEmpty — ONE extra job running just the count aggregate, map-side
     # partial so the exchange carries one row per distinct bucket per
     # task, take(1)-bounded on the read side, and NO materialization (in
-    # table:<dir> mode an unconditional _materialize would write a
-    # scratch parquet table per banded join just to discover it is
-    # empty). When empty, return the rows untouched so the downstream
+    # a session with a checkpoint dir an unconditional materialize would
+    # write a scratch parquet table per banded join just to discover it
+    # is empty). When empty, return the rows untouched so the downstream
     # self-join keeps the exact unguarded plan (no flag join on either
     # side, no empty star branch). Only corpora that actually have
     # oversized buckets materialize: the counts once (recomputing the
@@ -277,9 +187,9 @@ def _split_hot_buckets(
     )
     if counts.isEmpty():
         return rows, None
-    counts = _materialize(counts, materialize_mode)
-    flagged = _materialize(
-        rows.join(counts, keys, "left"), materialize_mode
+    counts = materialize(counts, eager=False)
+    flagged = materialize(
+        rows.join(counts, keys, "left"), eager=False
     )
     cold = flagged.filter(F.col("_bucket_n").isNull()).drop("_bucket_n")
     hot = flagged.filter(F.col("_bucket_n").isNotNull()).drop("_bucket_n")
@@ -466,7 +376,6 @@ def minhash_dedup_pairs(
     shingle_words: int = DEFAULT_SHINGLE_WORDS,
     threshold: float = 0.5,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded candidates →
     signature-similarity filter ≥ threshold.
@@ -491,14 +400,13 @@ def minhash_dedup_pairs(
     linear. Star pairs pass the SAME signature-similarity threshold. None
     disables the guard (exact parity with the unguarded pipeline).
 
-    ``materialize_mode`` picks how the signature table is shared between
-    the self-join's sides (see ``_materialize``): 'local' | 'checkpoint' |
-    'table:<dir>' — the cluster-safe swap is a config value."""
-    sigs = _materialize(
+    The signature table is shared between the self-join's sides through
+    ``session.materialize``."""
+    sigs = materialize(
         minhash_signatures(
             _ensure_parallelism(df), text_col, id_col, num_hashes, shingle_words
         ),
-        materialize_mode,
+        eager=False,
     )
     bands = sigs.select(
         "id",
@@ -521,7 +429,6 @@ def minhash_dedup_pairs(
     if max_bucket_size is not None:
         cold, hot = _split_hot_buckets(
             bands, ["band_idx", "band_key"], max_bucket_size,
-            materialize_mode,
         )
     else:
         cold, hot = bands, None
@@ -666,28 +573,6 @@ def simhash(text: Column | str, bits: int = 60) -> Column:
     return simhash_from_hashes(token_hashes(text), bits)
 
 
-def _truncate_lineage(
-    df: DataFrame, reliable: bool, eager: bool = True
-) -> DataFrame:
-    """Cut the plan between iterations so it doesn't grow per round.
-    ``reliable=True`` → fault-tolerant ``checkpoint()`` to the session's
-    checkpoint dir (HDFS/object store on a cluster — survives executor
-    loss); ``False`` → ``localCheckpoint`` (executor-block storage: fast,
-    no filesystem, but recomputes-from-nothing on executor failure — the
-    local/test fast path). EAGER by default: an r15 A/B tried a lazy cut
-    for an intermediate whose first consumer references it TWICE in one
-    plan (the jump join) and measured a 2× loss — under AQE each
-    reference of a not-yet-materialized lazy checkpoint recomputes the
-    subtree instead of sharing blocks. ``eager=False`` is correct ONLY
-    when a single-reference action (e.g. the convergence aggregate)
-    runs immediately after and materializes the blocks for every later
-    consumer — that fuses the materialization barrier into an action
-    the loop pays anyway (r15 wave 3)."""
-    if reliable:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
 # Per-round label tables at/below this row count take an explicit
 # broadcast hint in the components loop (r16, guide §3.1 — "pick the
 # join strategy deliberately"): a localCheckpoint-backed relation has no
@@ -704,7 +589,6 @@ COMPONENTS_BROADCAST_NODE_LIMIT = 2_000_000
 def dedup_components_with_stats(
     pairs: DataFrame,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
     require_convergence: bool = False,
 ) -> tuple[DataFrame, int]:
     """Connected components of the near-dup pair graph → ((node, comp),
@@ -720,19 +604,13 @@ def dedup_components_with_stats(
     (the 100 TB failure mode: organic near-dup chains through shared
     boilerplate can be arbitrarily long; with jumping, 25 iterations cover
     diameter ~2^25). Each round is two shuffle joins + one groupBy, with
-    lineage truncated per round.
-
-    ``reliable_checkpoint``: None → auto (reliable iff the SparkContext has
-    a checkpoint dir configured); True forces ``checkpoint()`` (cluster
-    mode, requires ``sc.setCheckpointDir``); False forces
-    ``localCheckpoint`` (single-node fast path).
+    lineage truncated per round (``session.materialize``: fault-tolerant
+    scratch tables when the session has a checkpoint dir, executor-local
+    blocks otherwise).
 
     This is the canonical iterative-algorithm shape Spark SQL cannot express
     in one query; the DuckDB oracle uses a recursive CTE instead.
     """
-    if reliable_checkpoint is None:
-        sc = pairs.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -745,7 +623,7 @@ def dedup_components_with_stats(
     #
     # r16 restructure — ONE action per round instead of two, with every
     # cut LAZY and materialized by the convergence aggregate the loop
-    # already pays (the r15 ``_truncate_lineage(eager=)`` contract,
+    # already pays (the r15 ``materialize(eager=)`` contract,
     # applied everywhere by making every intermediate single-reference
     # at materialization time):
     #
@@ -773,7 +651,7 @@ def dedup_components_with_stats(
     #   blocks; the lazy jumped cut from round r is computed exactly
     #   once inside round r+1's sum (single reference), after which its
     #   blocks back the jump join's two references in round r+1's plan.
-    edges = _truncate_lineage(
+    edges = materialize(
         edges.unionByName(
             edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -785,7 +663,6 @@ def dedup_components_with_stats(
             )
         )
         .distinct(),
-        reliable_checkpoint,
         eager=False,
     )
     # Fused first propagation (r15 optimization round): under identity
@@ -797,11 +674,10 @@ def dedup_components_with_stats(
     # only selects among them) and the monotone convergence argument is
     # unchanged. Lazy cut: the init label-sum right below is the
     # materializing action (single reference).
-    labels = _truncate_lineage(
+    labels = materialize(
         edges.select(F.col("dst").alias("node"), F.col("src").alias("comp"))
         .groupBy("node")
         .agg(F.min("comp").alias("comp")),
-        reliable_checkpoint,
         eager=False,
     )
 
@@ -852,12 +728,11 @@ def dedup_components_with_stats(
         # (self-loops supply the self term). Lazy cut, materialized by
         # this round's sum — the only action the round pays.
         lab = maybe_broadcast(labels)
-        neighbor_min = _truncate_lineage(
+        neighbor_min = materialize(
             edges.join(lab, edges["src"] == lab["node"])
             .select(F.col("dst").alias("node"), "comp")
             .groupBy("node")
             .agg(F.min("comp").alias("comp")),
-            reliable_checkpoint,
             eager=False,
         )
         cur_sum, _ = label_sum(neighbor_min)
@@ -880,14 +755,13 @@ def dedup_components_with_stats(
                 F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
             )
         )
-        jumped = _truncate_lineage(
+        jumped = materialize(
             neighbor_min.join(
                 jump_to, neighbor_min["comp"] == jump_to["jnode"], "left"
             ).select(
                 "node",
                 F.coalesce("jcomp", "comp").alias("comp"),
             ),
-            reliable_checkpoint,
             eager=False,
         )
         labels = jumped
@@ -907,13 +781,12 @@ def dedup_components_with_stats(
 def dedup_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
     require_convergence: bool = False,
 ) -> DataFrame:
     """See ``dedup_components_with_stats`` — this is the DataFrame-only
     convenience wrapper."""
     labels, _ = dedup_components_with_stats(
-        pairs, max_iter, reliable_checkpoint, require_convergence
+        pairs, max_iter, require_convergence
     )
     return labels
 
@@ -922,7 +795,6 @@ def dedup_components_incremental(
     stored_labels: DataFrame,
     new_pairs: DataFrame,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Delta maintenance of a ``dedup_components`` labeling → the full
     updated ``(node, comp)`` table, row-identical to re-running the
@@ -962,9 +834,6 @@ def dedup_components_incremental(
     node-sized store — no full-graph work anywhere. Same output
     contract as ``dedup_components``: one row per node that appears
     in (stored ∪ delta)."""
-    if reliable_checkpoint is None:
-        sc = new_pairs.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
     lab_a = stored_labels.select(
         F.col("node").alias("_na"), F.col("comp").alias("_ca")
     )
@@ -974,12 +843,12 @@ def dedup_components_incremental(
     # the delta edges feed four plan sites (two label joins, both
     # new-node projections): truncate once so a caller handing raw
     # pair-generation lineage (an LSH band self-join) never re-runs it
-    e = _truncate_lineage(
+    e = materialize(
         new_pairs.select(
             F.col("id_a").cast("long").alias("id_a"),
             F.col("id_b").cast("long").alias("id_b"),
         ),
-        reliable_checkpoint,
+        eager=True,
     )
     mapped = (
         e.join(lab_a, e["id_a"] == lab_a["_na"], "left")
@@ -991,12 +860,11 @@ def dedup_components_incremental(
     )
     # the meta closure is delta-sized: strict convergence costs
     # nothing. Its result is already materialized (every components
-    # round ends in _truncate_lineage, honoring reliable_checkpoint),
+    # round ends in a materialize cut),
     # so both consumers below read it without extra pinning.
     meta = dedup_components(
         mapped,
         max_iter=max_iter,
-        reliable_checkpoint=reliable_checkpoint,
         require_convergence=True,
     )
     remap = F.broadcast(
@@ -1027,7 +895,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     n_probes: int = 1,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Embedding-cosine near-dup: (id_a, id_b, sim) for same-sign-LSH-bucket
     pairs with cosine ≥ threshold. The bucket equi-join keeps the pair space
@@ -1059,7 +926,7 @@ def embedding_near_dup_pairs(
     dim = _vec_dim(emb, vec_col)
     per_probe = []
     for seed in range(n_probes):
-        sigs = _materialize(
+        sigs = materialize(
             base.select(
                 F.col(id_col).alias("id"),
                 F.col(vec_col).alias("v"),
@@ -1067,11 +934,11 @@ def embedding_near_dup_pairs(
                     vec_col, num_planes, seed=seed, dim=dim
                 ).alias("bucket"),
             ),
-            materialize_mode,
+            eager=False,
         )
         if max_bucket_size is not None:
             cold, hot = _split_hot_buckets(
-                sigs, ["bucket"], max_bucket_size, materialize_mode
+                sigs, ["bucket"], max_bucket_size
             )
         else:
             cold, hot = sigs, None
@@ -1318,7 +1185,6 @@ def incremental_embedding_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Daily-crawl embedding near-dup — the delta form of
     ``embedding_near_dup_pairs``: only the NEW vectors hash; the
@@ -1344,11 +1210,11 @@ def incremental_embedding_near_dup(
     """
     from inbev_data_engineering_case_spark.functions import cosine
 
-    new_sigs = _materialize(
+    new_sigs = materialize(
         build_embedding_sig_table(
             new_emb, num_planes, n_probes, id_col, vec_col
         ).select("seed", "id", "v", "bucket"),
-        materialize_mode,
+        eager=False,
     )
     new_ids = new_emb.select(F.col(id_col).alias("id"))
     stored_guarded = stored_sigs.select(
@@ -1364,7 +1230,7 @@ def incremental_embedding_near_dup(
     )
     per_probe = []
     for seed in range(n_probes):
-        sigs = _materialize(
+        sigs = materialize(
             stored_guarded.filter(F.col("seed") == seed)
             .select("id", "v", "bucket")
             .unionByName(
@@ -1372,11 +1238,11 @@ def incremental_embedding_near_dup(
                     "id", "v", "bucket"
                 )
             ),
-            materialize_mode,
+            eager=False,
         )
         if max_bucket_size is not None:
             cold, hot = _split_hot_buckets(
-                sigs, ["bucket"], max_bucket_size, materialize_mode
+                sigs, ["bucket"], max_bucket_size
             )
         else:
             cold, hot = sigs, None
@@ -1430,7 +1296,6 @@ def incremental_embedding_near_dup_normalized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """``incremental_embedding_near_dup`` consuming the NORMALIZED
     ``(vectors, buckets)`` state pair natively — no reassembly join,
@@ -1489,15 +1354,15 @@ def incremental_embedding_near_dup_normalized(
     )
     per_probe = []
     for seed in range(n_probes):
-        rows = _materialize(
+        rows = materialize(
             stored_guarded.filter(F.col("seed") == seed)
             .select("id", "bucket")
             .unionByName(new_b[seed].select("id", "bucket")),
-            materialize_mode,
+            eager=False,
         )
         if max_bucket_size is not None:
             cold, hot = _split_hot_buckets(
-                rows, ["bucket"], max_bucket_size, materialize_mode
+                rows, ["bucket"], max_bucket_size
             )
         else:
             cold, hot = rows, None
@@ -1582,7 +1447,6 @@ def simhash_near_pairs(
     bits: int = 60,
     bucket_bits: int = 8,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: bucket on the top ``bucket_bits`` bits
     (signature bits ``bits-bucket_bits``..``bits-1``, so the self-join is
@@ -1597,14 +1461,14 @@ def simhash_near_pairs(
     hashed = _ensure_parallelism(df).select(
         F.col(id_col).alias("id"), token_hashes(text_col).alias("th")
     )
-    sigs = _materialize(
+    sigs = materialize(
         hashed.select("id", simhash_from_hashes("th", bits).alias("sh"))
         .withColumn("bucket", F.shiftright("sh", bits - bucket_bits)),
-        materialize_mode,
+        eager=False,
     )
     if max_bucket_size is not None:
         cold, hot = _split_hot_buckets(
-            sigs, ["bucket"], max_bucket_size, materialize_mode
+            sigs, ["bucket"], max_bucket_size
         )
     else:
         cold, hot = sigs, None
@@ -1681,7 +1545,6 @@ def incremental_simhash_near_pairs(
     bits: int = 60,
     bucket_bits: int = 8,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Daily-crawl SimHash near-dup — the delta form of
     ``simhash_near_pairs``: only the NEW crawl tokenizes and hashes;
@@ -1701,11 +1564,11 @@ def incremental_simhash_near_pairs(
     geometry columns ride the state): a silent mismatch would shift
     every stored bucket and lose recall without any error.
     """
-    new_sigs = _materialize(
+    new_sigs = materialize(
         build_simhash_table(
             new_docs, text_col, id_col, bits, bucket_bits
         ).select("id", "sh", "bucket"),
-        materialize_mode,
+        eager=False,
     )
     stored_guarded = stored_sigs.select(
         "id",
@@ -1717,14 +1580,14 @@ def incremental_simhash_near_pairs(
         ),
         "bucket",
     )
-    sigs = _materialize(
+    sigs = materialize(
         stored_guarded.select("id", "sh", "bucket").unionByName(new_sigs),
-        materialize_mode,
+        eager=False,
     )
     new_ids = new_docs.select(F.col(id_col).alias("id"))
     if max_bucket_size is not None:
         cold, hot = _split_hot_buckets(
-            sigs, ["bucket"], max_bucket_size, materialize_mode
+            sigs, ["bucket"], max_bucket_size
         )
     else:
         cold, hot = sigs, None
@@ -1946,7 +1809,6 @@ def incremental_containment_pairs(
     max_gram_df: int | None = 100,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize_mode: str = "local",
     broadcast_hot: bool = True,
     portable: bool = True,
 ) -> DataFrame:
@@ -1988,12 +1850,12 @@ def incremental_containment_pairs(
     # the file-metadata estimator cannot distinguish from the full
     # scan) — force-spreading it across every core pins the whole
     # incremental join chain at full task count for no compute win
-    new_grams = _materialize(
+    new_grams = materialize(
         build_gram_table(
             new_documents, n, id_col, text_col, portable,
             parallelism_guard=False,
         ).select(id_col, "gram_h"),
-        materialize_mode,
+        eager=False,
     )
     stored_guarded = stored_grams.select(
         id_col,
@@ -2008,7 +1870,7 @@ def incremental_containment_pairs(
             all_grams, max_gram_df, broadcast_hot
         )
     # three consumers (sizes, both join sides) — share one evaluation
-    informative = _materialize(all_grams, materialize_mode)
+    informative = materialize(all_grams, eager=False)
     new_ids = new_documents.select(F.col(id_col))
     new_inf = informative.join(new_ids, id_col, "left_semi")
     sizes = informative.groupBy(id_col).agg(F.count("*").alias("n_grams"))
@@ -2079,7 +1941,6 @@ def containment_pairs(
     max_gram_df: int | None = 100,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize_mode: str = "local",
     broadcast_hot: bool = True,
     portable: bool = True,
 ) -> DataFrame:
@@ -2110,7 +1971,7 @@ def containment_pairs(
     the join and inflate containment between unrelated templated
     pages). ``max_gram_df=None`` is the exact-all-grams form for small
     corpora. The gram stream has three consumers (hot counts, sizes,
-    the join), so it materializes once via ``materialize_mode``.
+    the join), so it materializes once.
     ``portable=False`` swaps the oracle-replayable md5 gram hash for
     xxhash64 (identical pairs, ~1.1-1.7× cheaper hashing — the
     decontaminate family's production setting).
@@ -2130,11 +1991,11 @@ def containment_pairs(
         raise ValueError(
             "containment_pairs: threshold_ppm must be in (0, 1e6]"
         )
-    grams = _materialize(
+    grams = materialize(
         build_gram_table(documents, n, id_col, text_col, portable).select(
             id_col, "gram_h"
         ),
-        materialize_mode,
+        eager=False,
     )
     if max_gram_df is not None:
         # the FILTERED gram table has three consumers (sizes, both join
@@ -2145,9 +2006,9 @@ def containment_pairs(
         # shape itself lives in _informative_grams so the plan locks
         # can still assert it (materialization replaces the subtree
         # with an RDD scan in the final plan).
-        grams = _materialize(
+        grams = materialize(
             _informative_grams(grams, max_gram_df, broadcast_hot),
-            materialize_mode,
+            eager=False,
         )
     sizes = grams.groupBy(id_col).agg(F.count("*").alias("n_grams"))
     a = grams.select(

@@ -22,7 +22,7 @@ Spark-first shape (vs the reference's single-process Python DAGs,
   hash-for-hash: ``r·wppm ≤ 1e12`` and ``d·Σcontrib ≤ 8.5e11`` both
   sit far inside int64 — no float summation anywhere;
 - lineage is bounded: with ``checkpoint_every`` set, the node-sized
-  rank table is materialized every k iterations (``localCheckpoint``),
+  rank table is materialized every k iterations (``session.materialize``),
   the standard guard against O(iterations) plan growth on long runs.
 
 Dangling nodes (no out-edges) lose their mass by default — ranks then
@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from inbev_data_engineering_case_spark.session import materialize
 
 
 def pagerank(
@@ -157,10 +159,10 @@ def pagerank(
         # reference) — measured 61s/48s/29s for plain / rank-only
         # checkpoint / full materialization at 16 iterations on the
         # probe graph (tools/graph_scale_probe.py)
-        wppm = wppm.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
+        wppm = materialize(wppm, eager=True)
+        nodes = materialize(nodes, eager=True)
         if dang is not None:
-            dang = dang.localCheckpoint(eager=True)
+            dang = materialize(dang, eager=True)
     n_agg = nodes.agg(F.count("*").alias("_n"))
     ranks = nodes.join(F.broadcast(n_agg)).select(
         "node", F.expr(f"{unit} div _n").alias("r")
@@ -186,7 +188,7 @@ def pagerank(
             # while halving the per-iteration job overhead; the rank
             # table is node-sized, so each job is tiny, and this is
             # lineage truncation, not a driver data path.
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks, eager=True)
         contrib = (
             wppm.join(ranks, wppm["src"] == ranks["node"])
             .select(
@@ -228,7 +230,7 @@ def pagerank(
                 ).alias("r"),
             )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks, eager=True)
     return ranks.select("node", F.col("r").alias("rank_ppm"))
 
 
@@ -239,7 +241,6 @@ def multi_source_bfs(
     src_col: str = "src",
     dst_col: str = "dst",
     directed: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Level-synchronous multi-source BFS → ``(node, dist)`` for every
     node within ``max_hops`` of ANY seed (``dist`` = hops to the
@@ -258,10 +259,10 @@ def multi_source_bfs(
     frontier×edges equi-join (shuffle sized by the frontier's
     adjacency, not the graph) plus an anti-join against the visited
     set (node-sized); the visited table is the only state that grows,
-    and lineage is truncated per round (``dedup._truncate_lineage`` —
-    executor-local by default, reliable checkpoint when a checkpoint
-    dir is set, the components loop's discipline). Rounds are bounded
-    by ``max_hops`` with early exit on an empty frontier (one
+    and lineage is truncated per round (``session.materialize`` —
+    executor-local by default, a fault-tolerant scratch table when a
+    checkpoint dir is set, the components loop's discipline). Rounds
+    are bounded by ``max_hops`` with early exit on an empty frontier (one
     ``take(1)`` driver action per round, the same per-round action
     budget as the components loop's convergence aggregate). BFS level
     order IS minimal distance, so no min-relaxation pass is needed —
@@ -270,15 +271,8 @@ def multi_source_bfs(
     ``directed=False`` (default) symmetrizes the edge list once up
     front — pair graphs (id_a < id_b canonical) are undirected.
     """
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _truncate_lineage,
-    )
-
     if max_hops < 0:
         raise ValueError("multi_source_bfs: max_hops must be >= 0")
-    if reliable_checkpoint is None:
-        sc = edges.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
     sym = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
@@ -301,7 +295,7 @@ def multi_source_bfs(
     # count fully materializes the frontier's blocks, so the next hop's
     # two references (frontier join + dist union) read blocks instead
     # of racing to recompute straggler partitions.
-    sym = _truncate_lineage(sym.distinct(), reliable_checkpoint, eager=False)
+    sym = materialize(sym.distinct(), eager=False)
 
     # Deliberate join strategy (guide §3.1, the components loop's gate):
     # the frontier and visited tables are checkpoint-backed (no size
@@ -322,11 +316,11 @@ def multi_source_bfs(
         )
 
     seed_col = seeds.columns[0]
-    dist = _truncate_lineage(
+    dist = materialize(
         seeds.select(F.col(seed_col).cast("long").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0)),
-        reliable_checkpoint,
+        eager=True,
     )
     # one count over the just-materialized seed blocks: the size fact
     # both hop-1 join gates need
@@ -339,22 +333,19 @@ def multi_source_bfs(
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        new = _truncate_lineage(
+        new = materialize(
             reached.join(
                 maybe_broadcast(dist.select("node"), dist_n),
                 on="node",
                 how="left_anti",
             ).withColumn("dist", F.lit(hop)),
-            reliable_checkpoint,
             eager=False,
         )
         frontier_n = new.count()  # the hop's one action; materializes `new`
         if frontier_n == 0:
             break
         dist_n += frontier_n
-        dist = _truncate_lineage(
-            dist.unionByName(new), reliable_checkpoint, eager=False
-        )
+        dist = materialize(dist.unionByName(new), eager=False)
         frontier = new.select("node")
     return dist
 
@@ -368,7 +359,6 @@ def multi_source_bfs_incremental(
     src_col: str = "src",
     dst_col: str = "dst",
     directed: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Delta maintenance of a ``multi_source_bfs`` result → the full
     updated ``(node, dist)`` table, row-identical to re-running the
@@ -411,17 +401,10 @@ def multi_source_bfs_incremental(
     (improvements re-visit nodes, so level order alone no longer
     encodes distance — this is unit-weight min-relaxation, the
     textbook incremental-BFS shape)."""
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _truncate_lineage,
-    )
-
     if max_hops < 0:
         raise ValueError(
             "multi_source_bfs_incremental: max_hops must be >= 0"
         )
-    if reliable_checkpoint is None:
-        sc = all_edges.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
 
     def _raw(edges: DataFrame) -> DataFrame:
         return edges.select(
@@ -442,11 +425,11 @@ def multi_source_bfs_incremental(
     # stored artifact would otherwise get silently stale distances).
     # ONE distinct over the raw union — the stored edge set (the big
     # side) is shuffled exactly once, not once per symmetrized input
-    sym = _truncate_lineage(
+    sym = materialize(
         _symmetrize(
             _raw(all_edges).unionByName(_raw(new_edges))
         ).distinct(),
-        reliable_checkpoint,
+        eager=True,
     )
     seed_col = new_seeds.columns[0]
     seeds0 = (
@@ -460,11 +443,11 @@ def multi_source_bfs_incremental(
     )
     # dist₀: stored ∪ new seeds, min per node (a re-flagged old node
     # takes 0). One node-sized aggregation.
-    dist = _truncate_lineage(
+    dist = materialize(
         stored.unionByName(seeds0)
         .groupBy("node")
         .agg(F.min("dist").alias("dist")),
-        reliable_checkpoint,
+        eager=True,
     )
     # change frontier: new seeds + new-edge endpoints that already
     # carry a distance (their dist may now propagate across the delta)
@@ -474,11 +457,11 @@ def multi_source_bfs_incremental(
         .distinct()
         .join(dist, on="node")
     )
-    frontier = _truncate_lineage(
+    frontier = materialize(
         seeds0.unionByName(touched)
         .groupBy("node")
         .agg(F.min("dist").alias("dist")),
-        reliable_checkpoint,
+        eager=True,
     )
     for _ in range(max_hops):
         cand = (
@@ -491,20 +474,20 @@ def multi_source_bfs_incremental(
             .groupBy("node")
             .agg(F.min("_cand").alias("_cand"))
         )
-        improved = _truncate_lineage(
+        improved = materialize(
             cand.join(dist, on="node", how="left")
             .filter(
                 F.col("dist").isNull() | (F.col("_cand") < F.col("dist"))
             )
             .select("node", F.col("_cand").alias("dist")),
-            reliable_checkpoint,
+            eager=True,
         )
         if not improved.take(1):
             break
-        dist = _truncate_lineage(
+        dist = materialize(
             dist.join(improved.select("node"), on="node", how="left_anti")
             .unionByName(improved),
-            reliable_checkpoint,
+            eager=True,
         )
         frontier = improved
     return dist

@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inbev_data_engineering_case_spark.session import materialize
+
 _log = logging.getLogger(__name__)
 
 
@@ -767,10 +769,11 @@ def bloom_anti_join(
 
     ``pin_lineage`` enforces that requirement instead of trusting the
     docstring: ``"auto"`` (default) inspects the analyzed plan and
-    lazily ``localCheckpoint``\\ s ``fact`` when any expression is
-    nondeterministic (a ``rand()``-derived filter, for example) — both
-    branches then read the one materialized row set, and an executor
-    loss fails the job loudly instead of silently recomputing
+    lazily pins ``fact`` (``session.materialize``) when any expression
+    is nondeterministic (a ``rand()``-derived filter, for example) —
+    both branches then read the one materialized row set, and an
+    executor loss fails the job loudly (or, with a checkpoint dir set,
+    reads the durable scratch table) instead of silently recomputing
     different rows. ``True`` always pins (the right call for hazards
     the plan walk cannot see: ``limit`` over unordered input, inputs
     that may recompute after executor loss); ``False`` asserts the
@@ -806,12 +809,12 @@ def bloom_anti_join(
         if pin_lineage == "auto":
             _log.warning(
                 "bloom_anti_join: fact has nondeterministic lineage —"
-                " pinning with a lazy localCheckpoint so the cleared and"
+                " pinning it with a lazy materialize so the cleared and"
                 " might-match branches read the same rows (pass a"
                 " persisted input or pin_lineage=False to manage this"
                 " yourself)"
             )
-        fact = fact.localCheckpoint(eager=False)
+        fact = materialize(fact, eager=False)
     bloom = bloom_filter_build(
         drop_keys.select(key_col), key_col, num_bits, num_hashes, bank_bits
     )

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from inbev_data_engineering_case_spark.session import materialize
+
 ASSET_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -1351,7 +1353,6 @@ def image_near_dup_pairs(
     max_hamming: int = 6,
     bucket_bits: int = 12,
     max_bucket_size: int | None = None,
-    materialize_mode: str = "local",
     hashes: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate image pairs: dHash the decodable assets once
@@ -1368,11 +1369,10 @@ def image_near_dup_pairs(
     output over exactly these assets and the decode pass — the
     dominant cost — runs once, not twice."""
     from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
         _split_hot_buckets,
     )
 
-    sigs = _materialize(
+    sigs = materialize(
         (hashes if hashes is not None else image_dhash(assets))
         .filter(F.col("decode_ok"))
         .select(
@@ -1380,11 +1380,11 @@ def image_near_dup_pairs(
             F.col("dhash").alias("sh"),
         )
         .withColumn("bucket", F.shiftrightunsigned("sh", 64 - bucket_bits)),
-        materialize_mode,
+        eager=False,
     )
     if max_bucket_size is not None:
         cold, hot = _split_hot_buckets(
-            sigs, ["bucket"], max_bucket_size, materialize_mode
+            sigs, ["bucket"], max_bucket_size
         )
     else:
         cold, hot = sigs, None
@@ -1428,7 +1428,6 @@ def image_near_dup_keep(
     max_hamming: int = 6,
     bucket_bits: int = 12,
     max_bucket_size: int | None = None,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """The asset-level twin of the text dedup keep decision: dHash →
     Hamming-bucketed pairs (``image_near_dup_pairs``) → connected
@@ -1448,7 +1447,6 @@ def image_near_dup_keep(
         max_hamming=max_hamming,
         bucket_bits=bucket_bits,
         max_bucket_size=max_bucket_size,
-        materialize_mode=materialize_mode,
     )
     comps = dedup_components(pairs.select("id_a", "id_b"))
     drop = comps.filter(F.col("node") != F.col("comp")).select(

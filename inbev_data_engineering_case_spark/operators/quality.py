@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from inbev_data_engineering_case_spark.session import materialize
+
 
 def dq_profile(df: DataFrame, rules: list[tuple[str, Column]]) -> DataFrame:
     """Profile violation counts for every rule in one aggregation pass.
@@ -225,7 +227,6 @@ def distribution_drift(
     value_col: str,
     n_cuts: int = 15,
     approx: bool = False,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Two-sample DISTRIBUTION drift — the KS-style ECDF comparison that
     catches what ``curate.curation_drift``'s count alarms cannot: a
@@ -243,11 +244,10 @@ def distribution_drift(
     Scale shape: the probe boundaries are ONE row — exact
     ``F.percentile`` for oracle parity or the mergeable GK sketch
     (``approx=True``, the 100 TB setting; rank error ≤ N/10000,
-    property-tested) — computed ONCE (pinned via ``_materialize``:
+    property-tested) — computed ONCE (pinned via ``materialize``:
     the 1-row result is referenced by three joins, and without
     pinning it each reference re-ran the full reference-side scan —
-    5 scans in the physical plan instead of 3; ``materialize_mode``
-    is the repo-wide cluster-safety config) and broadcast into each
+    5 scans in the physical plan instead of 3) and broadcast into each
     side's single codegen'd indicator-sum pass. Total: the two indicator scans plus
     the one bounds pass, no sort, no data-sized shuffle, in BOTH
     modes (plan-tested). CDF numerators and denominators count
@@ -256,7 +256,7 @@ def distribution_drift(
     """
     if n_cuts < 1:
         raise ValueError("distribution_drift: n_cuts must be >= 1")
-    bounds = _drift_bounds(ref, value_col, n_cuts, approx, materialize_mode)
+    bounds = _drift_bounds(ref, value_col, n_cuts, approx)
     one = (
         _ecdf_counts(ref, bounds, value_col, n_cuts, "_r")
         .join(F.broadcast(_ecdf_counts(cur, bounds, value_col, n_cuts, "_c")))
@@ -270,7 +270,6 @@ def _drift_bounds(
     value_col: str,
     n_cuts: int,
     approx: bool,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """The 1-row probe-boundary frame (reference quantiles), pinned.
 
@@ -278,23 +277,18 @@ def _drift_bounds(
     independent ones: in approx mode each row would otherwise update
     n_cuts separate GK sketches (~n_cuts x the sketch CPU and buffer
     memory); the array form computes every cut from a single pass.
-    Pinned via ``dedup._materialize`` because several consumers
+    Pinned via ``session.materialize`` because several consumers
     reference the frame; without pinning each re-evaluates the
     aggregate — i.e. re-scans the full reference corpus (measured: 5
-    file scans vs 3). ``materialize_mode`` selects the cluster-safety
-    trade as config (the repo-wide contract): the 'local' default is
-    the lazy single-node fast path; use 'checkpoint'/'table:<dir>' on
-    a dynamic-allocation cluster where an executor-local block could
-    be decommissioned between the bounds pass and the indicator scans.
+    file scans vs 3). On a dynamic-allocation cluster, where an
+    executor-local block could be decommissioned between the bounds
+    pass and the indicator scans, the session's checkpoint dir makes
+    the pin a fault-tolerant scratch table.
     """
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
-    )
-
     qs = [i / (n_cuts + 1) for i in range(1, n_cuts + 1)]
     fn = "approx_percentile" if approx else "percentile"
     arr = ", ".join(repr(q) for q in qs)
-    return _materialize(
+    return materialize(
         ref.agg(F.expr(f"{fn}({value_col}, array({arr}))").alias("_bs"))
         .select(
             *[
@@ -302,7 +296,7 @@ def _drift_bounds(
                 for i in range(n_cuts)
             ]
         ),
-        materialize_mode,
+        eager=False,
     )
 
 
@@ -368,7 +362,6 @@ def drift_bound_values(
     value_col: str,
     n_cuts: int = 15,
     approx: bool = False,
-    materialize_mode: str = "local",
 ) -> list[float]:
     """The probe boundaries as plain floats — the form a STREAM embeds
     as plan literals (the boundaries are fixed for the stream's
@@ -376,7 +369,7 @@ def drift_bound_values(
     reference every trigger). The 1-row collect is model-sized, the
     ``bpe``/centroid exception pattern."""
     row = _drift_bounds(
-        ref, value_col, n_cuts, approx, materialize_mode
+        ref, value_col, n_cuts, approx
     ).collect()[0]
     return [row[f"_b{i}"] for i in range(n_cuts)]
 
@@ -387,7 +380,6 @@ def drift_from_partials(
     value_col: str,
     n_cuts: int = 15,
     approx: bool = False,
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """``distribution_drift`` with the CURRENT side supplied as
     streamed indicator partials (``streaming.events.
@@ -404,7 +396,7 @@ def drift_from_partials(
     """
     if n_cuts < 1:
         raise ValueError("drift_from_partials: n_cuts must be >= 1")
-    bounds = _drift_bounds(ref, value_col, n_cuts, approx, materialize_mode)
+    bounds = _drift_bounds(ref, value_col, n_cuts, approx)
     guard = F.when(
         F.col("n_cuts") != n_cuts,
         F.raise_error(

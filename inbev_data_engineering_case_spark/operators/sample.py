@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import portable_hash64
+from inbev_data_engineering_case_spark.session import materialize
 
 SAMPLE_BUCKETS = 1_000_000
 
@@ -145,8 +146,7 @@ def _guarded_micro_quality(
     ).otherwise(F.round(F.col(quality_col) * 1_000_000).cast("bigint"))
 
 
-def _staged_budget_base(df: DataFrame, mq: Column, cost: Column,
-                        materialize_mode: str) -> DataFrame:
+def _staged_budget_base(df: DataFrame, mq: Column, cost: Column) -> DataFrame:
     """Stage ``(_mq, _cost)`` onto ``df`` and materialize ONCE for the
     budget family's multiple consumers (r15 optimization round).
 
@@ -155,8 +155,8 @@ def _staged_budget_base(df: DataFrame, mq: Column, cost: Column,
     share the subtree across references — measured 8 source scans per
     run on the mixture form, i.e. eight re-tokenizations of the corpus
     when the quality score rides the input lineage. One materialization
-    (``dedup._materialize`` — same 'local'/'checkpoint'/'table:<dir>'
-    trade as every other multi-consumer stage in the repo) makes every
+    (``session.materialize`` — the same session-wide trade as every
+    other multi-consumer stage in the repo) makes every
     re-reference a table read. The single evaluation also inherits the
     scan-parallelism guard when the input is a plain file scan (the
     metadata-only path — the ``df.rdd`` fallback is deliberately NOT
@@ -164,16 +164,15 @@ def _staged_budget_base(df: DataFrame, mq: Column, cost: Column,
     materialization just to count partitions)."""
     from inbev_data_engineering_case_spark.operators.dedup import (
         _estimate_scan_splits,
-        _materialize,
     )
 
     target = df.sparkSession.sparkContext.defaultParallelism
     splits = _estimate_scan_splits(df)
     if splits is not None and splits < target:
         df = df.repartition(target)
-    return _materialize(
+    return materialize(
         df.withColumn("_mq", mq).withColumn("_cost", cost),
-        materialize_mode,
+        eager=False,
     )
 
 
@@ -183,7 +182,6 @@ def select_within_budget(
     cost_col: str = "n_tokens",
     quality_col: str = "quality",
     id_col: str = "doc_id",
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Budgeted data selection — the FineWeb-style "take the best
     documents until the token budget is spent" step: the kept set is
@@ -237,7 +235,6 @@ def select_within_budget(
         df,
         _guarded_micro_quality("select_within_budget", quality_col, id_col),
         _guarded_cost("select_within_budget", cost_col, id_col),
-        materialize_mode,
     )
     levels = base.groupBy("_mq").agg(F.sum("_cost").alias("_mass"))
     # level-sized table: the unpartitioned window is the point, not an
@@ -246,18 +243,15 @@ def select_within_budget(
         Window.orderBy(F.col("_mq").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
-    )
 
     # two consumers (fully-kept filter + boundary limit) — materialize
     # the LEVEL-sized cumsum table once so the histogram aggregation
     # isn't re-run per consumer (r15 optimization round)
-    lv = _materialize(
+    lv = materialize(
         levels.select(
             "_mq", "_mass", F.sum("_mass").over(wl).alias("_cum")
         ),
-        materialize_mode,
+        eager=False,
     )
     full = lv.filter(F.col("_cum") <= budget).select("_mq")
     boundary = (
@@ -289,7 +283,6 @@ def select_within_budget_by_stratum(
     cost_col: str = "n_tokens",
     quality_col: str = "quality",
     id_col: str = "doc_id",
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """``select_within_budget`` spent PER STRATUM — the shape real
     training pipelines budget in ("30B tokens of code, 10B of forums,
@@ -420,14 +413,12 @@ def select_within_budget_by_stratum(
         df,
         _guarded_micro_quality(fn, quality_col, id_col),
         _guarded_cost(fn, cost_col, id_col),
-        materialize_mode,
     )
     levels = base.groupBy(strata_col, "_mq").agg(
         F.sum("_cost").alias("_mass")
     )
     return _stratum_prefix_from_levels(
         base, levels, budgets, strata_col, id_col, df.columns,
-        materialize_mode,
     )
 
 
@@ -438,7 +429,6 @@ def _stratum_prefix_from_levels(
     strata_col: str,
     id_col: str,
     out_cols: list[str],
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """The by-stratum selection core over a prepared ``base`` (staged
     ``_mq``/``_cost``), its ``(strata, _mq, _mass)`` level histogram,
@@ -451,21 +441,17 @@ def _stratum_prefix_from_levels(
     derivation subtree — on the mixture form that duplication alone
     accounted for 4 of the measured 8 source scans per run (r15
     optimization round)."""
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
-    )
-
     wl = (
         Window.partitionBy(strata_col)
         .orderBy(F.col("_mq").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    lv = _materialize(
+    lv = materialize(
         levels.select(
             strata_col, "_mq", "_mass",
             F.sum("_mass").over(wl).alias("_cum"),
         ).join(F.broadcast(budgets), strata_col),
-        materialize_mode,
+        eager=False,
     )
     full = lv.filter(F.col("_cum") <= F.col("_blim")).select(
         strata_col, "_mq"
@@ -730,7 +716,6 @@ def select_mixture_within_budget(
     cost_col: str = "n_tokens",
     quality_col: str = "quality",
     id_col: str = "doc_id",
-    materialize_mode: str = "local",
 ) -> DataFrame:
     """Budgeted data selection AT the target mixture — the composed
     "curate, then spend a per-stratum token budget on the survivors"
@@ -765,20 +750,16 @@ def select_mixture_within_budget(
         df,
         _guarded_micro_quality(fn, quality_col, id_col),
         _guarded_cost(fn, cost_col, id_col),
-        materialize_mode,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
     )
 
     # the level histogram feeds BOTH the budget derivation (masses →
     # mixture arithmetic) and the selection core's cumsum — materialize
     # the level-sized table once (r15 optimization round)
-    levels = _materialize(
+    levels = materialize(
         base.groupBy(strata_col, "_mq").agg(
             F.sum("_cost").alias("_mass")
         ),
-        materialize_mode,
+        eager=False,
     )
     masses = levels.groupBy(strata_col).agg(
         F.sum("_mass").alias("n_units")
@@ -799,7 +780,6 @@ def select_mixture_within_budget(
     )
     return _stratum_prefix_from_levels(
         base, levels, budgets, strata_col, id_col, df.columns,
-        materialize_mode,
     )
 
 

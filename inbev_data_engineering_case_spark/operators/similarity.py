@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import cosine
+from inbev_data_engineering_case_spark.session import materialize
 
 # Upper bound on K*d for collect()-based Lloyd training: ~32 MB of doubles
 # on the driver per iteration. Above this, the "model" stops being small.
@@ -141,8 +142,10 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
     r15 watch item: each sign-LSH call site paid this driver-side
     action on EVERY run, several per query in the embedding family.
     The key is the analyzed plan's semantic hash (expression-id
-    normalized), so two builds of the same logical frame share one
-    probe while any structurally different frame probes fresh; the
+    normalized) plus the frame's input files, so two builds of the same
+    logical frame share one probe while any structurally different
+    frame — or a rewrite of the same path, whose plan hashes equal but
+    whose files differ — probes fresh; the
     cache lives on the session object (dies with it — nothing persists
     across bench invocations) and an empty-input None is never cached
     (a state table rebuilt under the same path may fill later).
@@ -151,7 +154,7 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
     """
     spark = df.sparkSession
     try:
-        key = (df.semanticHash(), vec_col)
+        key = (df.semanticHash(), tuple(sorted(df.inputFiles())), vec_col)
     except Exception:  # noqa: BLE001 — exotic plan: just probe
         key = None
     cache = getattr(spark, "_graft_vec_dim_cache", None)
@@ -353,7 +356,6 @@ def train_ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     method: str = "auto",
-    materialize_mode: str = "local",
     max_centroid_cells: int = MAX_CENTROID_CELLS,
 ) -> DataFrame:
     """Train IVF centroids with Lloyd iterations expressed as DataFrame ops:
@@ -373,8 +375,7 @@ def train_ivf_centroids(
       ``max_centroid_cells`` (~32 MB of doubles at the default) so the
       "model" stays driver-sized.
     - ``"dataframe"``: no driver round-trip — the means stay a DataFrame,
-      lineage truncated per iteration by ``materialize_mode`` ('local' |
-      'checkpoint' | 'table:<dir>', see ``dedup._materialize``), and the
+      lineage truncated per iteration by ``session.materialize``, and the
       assignment join is left to the planner (the materialized table has
       size stats, so small models still broadcast; a giant one falls back
       to a shuffle join instead of OOMing the driver). The path for K
@@ -388,10 +389,6 @@ def train_ivf_centroids(
     float partial-sum ordering across partitions can't leak into the
     result — both methods produce bit-identical centroids. Cells that
     lose all members drop out (K may shrink)."""
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
-    )
-
     spark = corpus.sparkSession
     # routed through the memoized probe (r16): the double-trained
     # determinism entries and every Lloyd re-train on the same corpus
@@ -433,11 +430,11 @@ def train_ivf_centroids(
         _ensure_parallelism,
     )
 
-    corpus_proj = _materialize(
+    corpus_proj = materialize(
         _ensure_parallelism(corpus).select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v")
         ),
-        materialize_mode,
+        eager=False,
     )
     for _ in range(n_iter):
         assigned = ivf_assign(
@@ -467,7 +464,7 @@ def train_ivf_centroids(
                 "cent_id long, cv array<double>",
             )
         else:
-            cents = _materialize(means, materialize_mode)
+            cents = materialize(means, eager=False)
     return cents
 
 

@@ -45,6 +45,7 @@ from inbev_data_engineering_case_spark.operators.normalize import (
     normalize_location,
     repair_mojibake,
 )
+from inbev_data_engineering_case_spark.session import materialize
 from inbev_data_engineering_case_spark.sources.readers import (
     read_events,
     read_parquet_table,
@@ -3020,9 +3021,8 @@ def q_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = _corpus_near(spark, sf_dir)
-    pairs = minhash_dedup_pairs(corpus).localCheckpoint(
-        eager=True  # two consumers: the old-only subset and the delta
-    )
+    # two consumers: the old-only subset and the delta
+    pairs = materialize(minhash_dedup_pairs(corpus), eager=True)
     old_a = F.col("id_a") % 3 != 0
     old_b = F.col("id_b") % 3 != 0
     stored = dedup_components(
@@ -3351,10 +3351,10 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 50)
     # computed once, consumed by a count and two joins — without the
     # checkpoint the broadcast-NL + ranking window would re-run three times
-    exact = (
+    exact = materialize(
         cosine_topk(emb, q, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+        .select("query_id", "neighbor_id"),
+        eager=True,
     )
     n_exact = exact.count()
 
@@ -3454,10 +3454,10 @@ def q_ann_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 50)
-    exact = (
+    exact = materialize(
         cosine_topk(emb, q, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+        .select("query_id", "neighbor_id"),
+        eager=True,
     )
     n_exact = exact.count()
 
@@ -4181,10 +4181,11 @@ def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the decode is the dominant cost and feeds two consumers (the
     # hash part + the pair join) — paid once, shared
-    hashes = image_dhash(assets).localCheckpoint(eager=True)
-    pairs = image_near_dup_pairs(assets, hashes=hashes).localCheckpoint(
-        eager=True
-    )  # consumers: pair part + closure
+    hashes = materialize(image_dhash(assets), eager=True)
+    # consumers: pair part + closure
+    pairs = materialize(
+        image_near_dup_pairs(assets, hashes=hashes), eager=True
+    )
     drop = dedup_components(pairs.select("id_a", "id_b")).filter(
         F.col("node") != F.col("comp")
     )
@@ -4702,9 +4703,8 @@ def q_halo_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = _corpus_near(spark, sf_dir)
-    pairs = minhash_dedup_pairs(corpus).localCheckpoint(
-        eager=True  # three consumers: old subset, delta subset, union
-    )
+    # three consumers: old subset, delta subset, union
+    pairs = materialize(minhash_dedup_pairs(corpus), eager=True)
     old_a = F.col("id_a") % 3 != 0
     old_b = F.col("id_b") % 3 != 0
     edges = pairs.select(
@@ -4810,9 +4810,10 @@ def q_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(scratch, "ckpt"),
             n_buckets=_BOW_B,
         )
-        return read_classifier_counts(
-            spark, os.path.join(scratch, "state")
-        ).localCheckpoint(eager=True)
+        return materialize(
+            read_classifier_counts(spark, os.path.join(scratch, "state")),
+            eager=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -4877,9 +4878,10 @@ def q_stream_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(scratch, "ckpt"),
             n_buckets=_BOW_B,
         )
-        return read_multiclass_counts(
-            spark, os.path.join(scratch, "state")
-        ).localCheckpoint(eager=True)
+        return materialize(
+            read_multiclass_counts(spark, os.path.join(scratch, "state")),
+            eager=True,
+        )
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -5342,12 +5344,13 @@ def q_daily_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact advance) — materialized since r15 so the corpus is
     # minhashed/fingerprinted once per run, the way production reads
     # these from their stored tables
-    sigs0 = minhash_signatures(d).localCheckpoint(eager=True)
-    fps0 = exact_dedup(d).localCheckpoint(eager=True)
-    pairs0 = minhash_dedup_pairs(d).localCheckpoint(eager=True)
-    comps0 = dedup_components(
-        pairs0, require_convergence=True
-    ).localCheckpoint(eager=True)  # consumers: curation + advance
+    sigs0 = materialize(minhash_signatures(d), eager=True)
+    fps0 = materialize(exact_dedup(d), eager=True)
+    pairs0 = materialize(minhash_dedup_pairs(d), eager=True)
+    # consumers: curation + advance
+    comps0 = materialize(
+        dedup_components(pairs0, require_convergence=True), eager=True
+    )
     seeds0 = d.filter(F.col("doc_id") % 40 == 0).select("doc_id")
     dist0 = multi_source_bfs(
         pairs0.select(
@@ -5471,12 +5474,10 @@ def q_daily_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # budget-derivation pass and the budgeted pass) — materialized
     # since r15 so the corpus is minhashed/fingerprinted once per run,
     # the way production reads these from their stored tables
-    sigs0 = minhash_signatures(d.select("doc_id", "text")).localCheckpoint(
-        eager=True
+    sigs0 = materialize(
+        minhash_signatures(d.select("doc_id", "text")), eager=True
     )
-    fps0 = exact_dedup(d.select("doc_id", "text")).localCheckpoint(
-        eager=True
-    )
+    fps0 = materialize(exact_dedup(d.select("doc_id", "text")), eager=True)
     new = _daily_new_snapshot(d)
     # the budgets are CONFIG (a handful of per-source ints): derived
     # here from a plain pass so the fixture scales with the table —
@@ -5959,10 +5960,10 @@ def q_ann_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     n_corpus = emb.count()
     queries = emb.filter(F.col("vec_id") < 20)
-    exact = (
+    exact = materialize(
         cosine_topk(emb, queries, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+        .select("query_id", "neighbor_id"),
+        eager=True,
     )
     n_exact = exact.count()
 

@@ -16,13 +16,19 @@ pipeline run with the configuration that matters at the 100 TB design point:
 - **Dynamic partition overwrite** so ``mode("overwrite")`` on a partitioned
   table replaces only the partitions being written — the reference is safe
   only because every run writes a fresh snapshot folder (SURVEY.md §7.3).
+
+Session-level intent also covers lineage cuts: ``materialize`` is the one
+place the engine checkpoints an intermediate, and its policy follows the
+checkpoint dir Spark already has (``sc.setCheckpointDir``) — no extra
+setting.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Tuned for the local[N] test harness; on a cluster these are overridden by
 # spark-submit conf. Kept here as the single place that states intent.
@@ -70,3 +76,68 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Cut ``df``'s lineage: compute it once and share it with every
+    downstream consumer. Every operator that shares an intermediate, every
+    iterative loop and the REST completeness check go through here, so the
+    cluster-safety trade is one deployment setting, not a per-call knob.
+
+    The policy follows the session's checkpoint dir:
+
+    - **unset** (local runs, tests): ``localCheckpoint(eager=eager)`` —
+      executor-block storage, fastest, but lost with its executor.
+      ``eager=False`` is right only when a single-reference action runs
+      right after and materializes the blocks for every later consumer;
+      under AQE each reference of a not-yet-materialized lazy checkpoint
+      recomputes the subtree, so an intermediate a plan reads twice
+      before any action must be cut eagerly.
+    - **set** (``sc.setCheckpointDir`` on HDFS/object store): write
+      parquet under ``<checkpointDir>/mat_<uuid>`` and read it back —
+      fault-tolerant (survives executor loss), spillable, and the rescan
+      gets a fresh file-source plan with size statistics for AQE and
+      broadcast decisions. Always eager.
+
+    Scratch tables are CALLER-owned: a composed pipeline may still be
+    reading an earlier one when a later one is written, so nothing here
+    deletes them. Every path is recorded in ``scratch_table_paths(spark)``;
+    call ``cleanup_scratch_tables(spark)`` after the job's terminal action,
+    or let the orchestrator delete the checkpoint dir."""
+    spark = df.sparkSession
+    ckpt = spark.sparkContext.getCheckpointDir()
+    if ckpt is None:
+        return df.localCheckpoint(eager=eager)
+    target = f"{ckpt.rstrip('/')}/mat_{uuid.uuid4().hex}"
+    df.write.parquet(target)
+    scratch_table_paths(spark).append(target)
+    return spark.read.parquet(target)
+
+
+def scratch_table_paths(spark: SparkSession) -> list[str]:
+    """The registry of scratch tables written by ``materialize`` (oldest
+    first). It lives on the SparkContext, like the checkpoint dir, so
+    tables written through a cloned session (a streaming micro-batch's
+    ``foreachBatch`` frame) are registered too. Mutating it is allowed —
+    cleanup removes entries it deletes."""
+    sc = spark.sparkContext
+    if not hasattr(sc, "_graft_scratch_tables"):
+        sc._graft_scratch_tables = []
+    return sc._graft_scratch_tables
+
+
+def cleanup_scratch_tables(spark: SparkSession) -> list[str]:
+    """Delete every registered scratch table and return the paths removed.
+    Uses the Hadoop FileSystem API so it works on whatever store the
+    checkpoint dir lives on (local, HDFS, s3a, ...). Call only after the
+    job's terminal action — scratch tables back live plans."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    registry = scratch_table_paths(spark)
+    removed = []
+    for target in list(registry):
+        p = jvm.org.apache.hadoop.fs.Path(target)
+        p.getFileSystem(hconf).delete(p, True)
+        registry.remove(target)
+        removed.append(target)
+    return removed

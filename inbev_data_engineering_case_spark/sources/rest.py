@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from inbev_data_engineering_case_spark.session import materialize
+
 Transport = Callable[[int], list[dict]]
 
 
@@ -96,11 +98,10 @@ class PagedRestSource:
             # invariant check and every downstream action read the same
             # single fetch — an unmaterialized plan would re-invoke the
             # transport per action, and against a live mutable API the
-            # validated data would not be the data returned. On a cluster,
-            # prefer writing bronze then counting the written files
-            # (pipeline.write_layer does exactly that); localCheckpoint
-            # keeps the no-filesystem fast path here.
-            df = df.localCheckpoint(eager=True)
+            # validated data would not be the data returned. With a
+            # checkpoint dir set the fetch lands in a durable scratch
+            # table; without one it stays on executor-local blocks.
+            df = materialize(df, eager=True)
             got_pages = df.select(F.countDistinct("__page")).first()[0]
             want_pages = -(-self.expected_total // self.per_page)
             if got_pages != want_pages:

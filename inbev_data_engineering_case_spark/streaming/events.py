@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from inbev_data_engineering_case_spark.functions import dsum
+from inbev_data_engineering_case_spark.session import materialize
 
 
 _CLEANUP_REGISTERED: set[str] = set()
@@ -1036,11 +1037,11 @@ def run_stream_index_update(
         # a permanent poison pill. Dropping is the dead-letter
         # equivalent (the doc simply isn't searchable; route a
         # quarantine stream upstream if those docs need accounting).
-        batch = (
+        batch = materialize(
             batch_df.select(id_col, text_col)
             .filter(F.col(text_col).isNotNull())
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)
+            .dropDuplicates([id_col]),
+            eager=True,
         )
         if not batch.take(1):
             return
@@ -1427,13 +1428,13 @@ def backfill_halo_tables(
     )
     # two consumers (the BFS walk and the parquet write) — pay the
     # full-corpus banding pass once
-    hpairs = (
+    hpairs = materialize(
         minhash_dedup_pairs(
             corpus, text_col, id_col,
             threshold=near_dup_threshold, **pair_kw,
         )
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
+        .select("id_a", "id_b"),
+        eager=True,
     )
     seeds = contamination_report(
         corpus, benchmark, n=ngram, id_col=id_col, text_col=text_col
@@ -1621,11 +1622,11 @@ def run_stream_artifact_update(
         )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
+        batch = materialize(
             batch_df.select(id_col, text_col)
             .filter(F.col(text_col).isNotNull())
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)  # file-source batches re-scan
+            .dropDuplicates([id_col]),
+            eager=True,  # file-source batches re-scan
         )
         if not batch.take(1):
             return
@@ -1816,9 +1817,12 @@ def run_stream_artifact_update(
                 minhash_signatures,
             )
 
-            batch_sigs = minhash_signatures(
-                _ensure_parallelism(batch), text_col, id_col, **adv_kw
-            ).localCheckpoint(eager=True)
+            batch_sigs = materialize(
+                minhash_signatures(
+                    _ensure_parallelism(batch), text_col, id_col, **adv_kw
+                ),
+                eager=True,
+            )
         sigs, fps = advance_corpus_artifacts(
             batch, stored_sigs, stored_fps,
             text_col=text_col, id_col=id_col, mode=mode,
@@ -1870,7 +1874,7 @@ def run_stream_artifact_update(
             # loop, the BFS relaxation's two eagerly-truncated edge
             # reads) each re-evaluate their input per reference —
             # materialize the delta-sized table once, unconditionally
-            pairs = pairs.localCheckpoint(eager=True)
+            pairs = materialize(pairs, eager=True)
         if components:
             from inbev_data_engineering_case_spark.operators.dedup import (
                 dedup_components_incremental,
@@ -2028,11 +2032,11 @@ def run_stream_embedding_update(
     spark = emb_stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
+        batch = materialize(
             batch_df.select(id_col, vec_col)
             .filter(F.col(vec_col).isNotNull())
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)  # file-source batches re-scan
+            .dropDuplicates([id_col]),
+            eager=True,  # file-source batches re-scan
         )
         if not batch.take(1):
             return
@@ -2250,11 +2254,11 @@ def _run_stream_counts_update(
         null_guard = cond if null_guard is None else (null_guard & cond)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
+        batch = materialize(
             batch_df.select(*select_cols)
             .filter(null_guard)
-            .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)  # file-source batches re-scan
+            .dropDuplicates([id_col]),
+            eager=True,  # file-source batches re-scan
         )
         if not batch.take(1):
             return

@@ -1,21 +1,24 @@
 """The real daily-crawl loop at bench scale: day-1 full curation of the
-sf0.1 documents table in ``table:<dir>`` materialization mode, artifact
-tables written to and re-read from disk, then a ~1% day-2 delta curated
+sf0.1 documents table with a session checkpoint dir set (one per day), so
+every lineage cut lands in a parquet scratch table; artifact tables
+written to and re-read from disk, then a ~1% day-2 delta curated
 incrementally — asserting the incremental run's scratch I/O is
 delta-sized, not corpus-sized, and that the advanced artifacts are ready
 for day 3.
 
-This is the end-to-end promotion of ``materialize_mode='table:'`` beyond
-identity checks on toy rows: every intermediate the pipeline shares
-across consumers hits parquet, exactly as it would on a cluster scratch
-prefix, and the byte counts on disk are the evidence that day 2 cost
-scales with the delta."""
+This is the end-to-end check of the cluster materialization policy
+(``session.materialize`` with ``sc.setCheckpointDir``) beyond identity
+checks on toy rows: every intermediate the pipeline shares across
+consumers hits parquet, exactly as it would under a cluster checkpoint
+dir, and the byte counts on disk are the evidence that day 2 cost scales
+with the delta."""
 
 from __future__ import annotations
 
-import pytest
-
+import contextlib
 import pathlib
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -24,6 +27,16 @@ SF_DIR = "/root/testdata/sf0.1"
 
 def _du(path: pathlib.Path) -> int:
     return sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
+
+
+@contextlib.contextmanager
+def _checkpoint_dir(spark, path: pathlib.Path):
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(path))
+    try:
+        yield
+    finally:
+        sc.setCheckpointDir(None)
 
 
 @pytest.mark.slow
@@ -45,9 +58,8 @@ def test_two_day_crawl_table_mode_delta_sized(spark, tmp_path):
     n_docs = docs.count()
 
     # ---- day 1: full batch curation, all shared intermediates on disk
-    kept1 = curate_corpus(
-        docs, materialize_mode=f"table:{tmp_path}/scratch_day1"
-    )
+    with _checkpoint_dir(spark, tmp_path / "scratch_day1"):
+        kept1 = curate_corpus(docs)
     kept1.write.parquet(str(tmp_path / "corpus_day1"))
     kept1 = spark.read.parquet(str(tmp_path / "corpus_day1"))
 
@@ -85,13 +97,8 @@ def test_two_day_crawl_table_mode_delta_sized(spark, tmp_path):
     n_delta = delta.count()
     assert n_delta <= 0.02 * n_docs
 
-    kept2 = curate_incremental(
-        docs,
-        snap2,
-        stored_sigs,
-        stored_fps,
-        materialize_mode=f"table:{tmp_path}/scratch_day2",
-    )
+    with _checkpoint_dir(spark, tmp_path / "scratch_day2"):
+        kept2 = curate_incremental(docs, snap2, stored_sigs, stored_fps)
     kept2_ids = sorted(r["doc_id"] for r in kept2.collect())
 
     # near- and exact-dups of kept docs dropped via the DISK artifacts
@@ -100,9 +107,8 @@ def test_two_day_crawl_table_mode_delta_sized(spark, tmp_path):
     assert len(kept2_ids) > 0 and min(kept2_ids) >= 1_000_000
 
     # ---- full rebatch over snap2 for the cost + parity comparison
-    keptF = curate_corpus(
-        snap2, materialize_mode=f"table:{tmp_path}/scratch_full"
-    )
+    with _checkpoint_dir(spark, tmp_path / "scratch_full"):
+        keptF = curate_corpus(snap2)
     keptF_ids = sorted(r["doc_id"] for r in keptF.collect())
 
     kept1_ids = sorted(r["doc_id"] for r in kept1.collect())

@@ -165,3 +165,24 @@ def test_every_package_module_is_reachable():
         todo.extend(imports(name) | ({parent} if parent in modules else set()))
     unreachable = sorted(set(modules) - seen)
     assert not unreachable, f"modules nothing imports: {unreachable}"
+
+
+def test_lineage_cuts_go_through_session_materialize():
+    """Static (no Spark): the package cuts lineage in exactly one place.
+    No module other than ``session.py`` calls ``.localCheckpoint(`` or
+    ``.checkpoint(``; every other site goes through
+    ``session.materialize``, so the session's checkpoint dir decides for
+    all of them whether a cut is executor-local or fault-tolerant."""
+    root = pathlib.Path(__file__).resolve().parent.parent / _PKG
+    raw = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                raw.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not raw, f"raw checkpoint calls outside session.py: {raw}"

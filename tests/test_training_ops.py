@@ -311,9 +311,25 @@ def test_ivf_trained_centroids_recall_holds(spark):
     assert trained >= 0.4
 
 
-def test_dedup_components_reliable_checkpoint_and_rounds(spark, tmp_path):
+def test_lineage_cuts_checkpoint_dir_identical_and_rounds(spark, tmp_path):
+    """Every iterative lineage cut runs on fault-tolerant scratch tables
+    once the session has a checkpoint dir, with results identical to the
+    default (executor-local) session: the components loop, the BFS hop
+    cut, the PageRank cuts and a streaming ``foreachBatch`` cut."""
     from inbev_data_engineering_case_spark.operators.dedup import (
         dedup_components_with_stats,
+    )
+    from inbev_data_engineering_case_spark.operators.graph import (
+        multi_source_bfs,
+        pagerank,
+    )
+    from inbev_data_engineering_case_spark.session import (
+        cleanup_scratch_tables,
+        scratch_table_paths,
+    )
+    from inbev_data_engineering_case_spark.streaming.events import (
+        read_classifier_counts,
+        run_stream_classifier_update,
     )
 
     # path graph 0-1-2-3-4: diameter 4 — the fused init already holds
@@ -330,22 +346,71 @@ def test_dedup_components_reliable_checkpoint_and_rounds(spark, tmp_path):
         [(i, i + 1) for i in range(4)], ["id_a", "id_b"]
     )
     expected = {i: 0 for i in range(5)}
-
-    local_labels, local_rounds = dedup_components_with_stats(
-        pairs, reliable_checkpoint=False
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 0), (2, 4), (5, 2)], ["src", "dst"]
     )
-    assert {r["node"]: r["comp"] for r in local_labels.collect()} == expected
-    assert local_rounds == 3
+    seeds = spark.createDataFrame([(0,)], ["node"])
+    docs = spark.createDataFrame(
+        [
+            (i, f"token{i % 7} shared words batch {i % 3}", i % 2 == 0)
+            for i in range(40)
+        ],
+        ["doc_id", "text", "label"],
+    )
+    docs.coalesce(1).write.parquet(str(tmp_path / "clf_feed"))
 
-    # cluster-safe path: fault-tolerant checkpoint to a checkpoint dir
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    def run_all(tag: str) -> dict:
+        labels, rounds = dedup_components_with_stats(pairs)
+        state = str(tmp_path / f"clf_state_{tag}")
+        run_stream_classifier_update(
+            spark.readStream.schema(docs.schema).parquet(
+                str(tmp_path / "clf_feed")
+            ),
+            state,
+            str(tmp_path / f"clf_ckpt_{tag}"),
+            n_buckets=1 << 12,
+        )
+        return {
+            "components": sorted(map(tuple, labels.collect())),
+            "rounds": rounds,
+            "bfs": sorted(
+                map(tuple, multi_source_bfs(edges, seeds).collect())
+            ),
+            # n_iter >= 2 cuts the loop invariants, the teleport variant
+            # cuts every other iteration, checkpoint_every cuts ranks
+            "pagerank": sorted(
+                map(
+                    tuple,
+                    pagerank(
+                        edges, n_iter=5, checkpoint_every=2,
+                        redistribute_dangling=True,
+                    ).collect(),
+                )
+            ),
+            "stream": sorted(
+                map(tuple, read_classifier_counts(spark, state).collect())
+            ),
+        }
+
+    local = run_all("local")
+    assert dict(local["components"]) == expected
+    assert local["rounds"] == 3
+    assert dict(local["bfs"]) == {0: 0, 1: 1, 2: 2, 3: 1, 4: 3, 5: 3}
+    assert local["stream"]
+
+    # cluster-safe path: every cut writes a scratch table under the
+    # session's checkpoint dir instead of executor-local blocks
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     try:
-        rel_labels, rel_rounds = dedup_components_with_stats(pairs)  # auto
-        assert {r["node"]: r["comp"] for r in rel_labels.collect()} == expected
-        assert rel_rounds == local_rounds
-        import os
-
-        assert os.listdir(str(tmp_path / "ckpt"))  # actually wrote there
+        assert run_all("reliable") == local
+        written = {p.name for p in ckpt.glob("*/mat_*")}
+        assert written  # actually wrote there
+        registered = {p.rsplit("/", 1)[-1] for p in scratch_table_paths(spark)}
+        assert written <= registered
+        cleanup_scratch_tables(spark)
+        assert not list(ckpt.glob("*/mat_*"))
+        assert scratch_table_paths(spark) == []
     finally:
         spark.sparkContext.setCheckpointDir(None)
 
@@ -936,6 +1001,28 @@ def test_signlsh_literal_weights_match_runtime_path(spark):
         ).collect()
 
 
+def test_vec_dim_memo_tracks_a_rewritten_path(spark, tmp_path):
+    """The dim memo must not survive a rewrite of the same parquet path:
+    both reads have equal semantic hashes, but their input files differ,
+    and a stale dim would build plane weights of the wrong geometry."""
+    from inbev_data_engineering_case_spark.operators.similarity import (
+        _vec_dim,
+    )
+
+    path = str(tmp_path / "vecs")
+
+    def write(dim: int) -> None:
+        spark.createDataFrame(
+            [(j, [float(j + i) for i in range(dim)]) for j in range(4)],
+            "vec_id long, embedding array<double>",
+        ).write.mode("overwrite").parquet(path)
+
+    write(3)
+    assert _vec_dim(spark.read.parquet(path), "embedding") == 3
+    write(5)
+    assert _vec_dim(spark.read.parquet(path), "embedding") == 5
+
+
 def test_ann_multiprobe_provably_adds_known_neighbor(spark):
     """Deterministic synthetic fixture where the second probe PROVABLY
     contributes: a neighbor in a different seed-0 bucket than the query
@@ -1193,13 +1280,17 @@ def test_ivf_dataframe_training_matches_collect(spark, tmp_path):
     )
 
     coll = train_ivf_centroids(vecs, 4, n_iter=2, method="collect")
-    for mode in ("local", f"table:{tmp_path}/ivf"):
-        df = train_ivf_centroids(
-            vecs, 4, n_iter=2, method="dataframe", materialize_mode=mode
-        )
-        assert sorted(map(tuple, df.collect())) == sorted(
-            map(tuple, coll.collect())
-        )
+    sc = spark.sparkContext
+    for ckpt in (None, str(tmp_path / "ivf")):
+        sc.setCheckpointDir(ckpt)
+        try:
+            df = train_ivf_centroids(vecs, 4, n_iter=2, method="dataframe")
+            assert sorted(map(tuple, df.collect())) == sorted(
+                map(tuple, coll.collect())
+            )
+        finally:
+            sc.setCheckpointDir(None)
+    assert list((tmp_path / "ivf").glob("*/mat_*"))
 
     # collect path refuses beyond the guard; auto now trains instead
     with pytest.raises(ValueError, match="too large to collect"):
@@ -1475,10 +1566,10 @@ def test_advance_artifacts_update_semantics(spark):
 
 
 @pytest.mark.slow
-def test_curate_corpus_materialize_modes_identical(spark, tmp_path):
-    """The cluster-safe materialization swaps (reliable checkpoint,
-    parquet scratch table) are config values; every mode must produce the
-    byte-identical curated corpus as the executor-local default."""
+def test_curate_corpus_checkpoint_dir_identical(spark, tmp_path):
+    """The cluster-safe materialization swap (parquet scratch tables under
+    the session's checkpoint dir) is a deployment setting; it must produce
+    the byte-identical curated corpus as the executor-local default."""
     from inbev_data_engineering_case_spark.operators.curate import (
         curate_corpus,
     )
@@ -1497,52 +1588,39 @@ def test_curate_corpus_materialize_modes_identical(spark, tmp_path):
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    def snapshot(mode: str) -> list[tuple]:
-        kept = curate_corpus(
-            docs, min_quality=0.3, near_dup_threshold=0.5,
-            materialize_mode=mode,
-        )
+    def snapshot() -> list[tuple]:
+        kept = curate_corpus(docs, min_quality=0.3, near_dup_threshold=0.5)
         return sorted(tuple(r) for r in kept.collect())
 
-    baseline = snapshot("local")
+    baseline = snapshot()
     assert [r[0] for r in baseline] == [1, 6]
 
-    assert snapshot(f"table:{tmp_path}/mat") == baseline
-    # table mode actually wrote its scratch tables
-    assert list((tmp_path / "mat").glob("mat_*")), "no scratch tables written"
+    ckpt = tmp_path / "ckpt"
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        assert snapshot() == baseline
+    finally:
+        sc.setCheckpointDir(None)
+    # a checkpoint dir routes every cut to a parquet scratch table
+    on_disk = {p.name for p in ckpt.glob("*/mat_*")}
+    assert on_disk, "no scratch tables written"
 
     # every scratch path is registered, and bulk cleanup removes them all
     # (caller-owned contract: nothing is auto-deleted while plans may
     # still read them; cleanup is explicit after the terminal action)
-    from inbev_data_engineering_case_spark.operators.dedup import (
+    import os
+
+    from inbev_data_engineering_case_spark.session import (
         cleanup_scratch_tables,
         scratch_table_paths,
     )
 
-    on_disk = {str(p) for p in (tmp_path / "mat").glob("mat_*")}
-    assert on_disk <= set(scratch_table_paths(spark))
+    assert on_disk <= {os.path.basename(p) for p in scratch_table_paths(spark)}
     removed = cleanup_scratch_tables(spark)
-    assert on_disk <= set(removed)
-    assert not list((tmp_path / "mat").glob("mat_*"))
+    assert on_disk <= {os.path.basename(p) for p in removed}
+    assert not list(ckpt.glob("*/mat_*"))
     assert scratch_table_paths(spark) == []
-
-    sc = spark.sparkContext
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        assert snapshot("checkpoint") == baseline
-    finally:
-        sc.setCheckpointDir(None)
-
-
-def test_materialize_mode_rejects_unknown(spark):
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        _parse_materialize_mode,
-    )
-
-    for bad in ("tables", "table:", "delta", ""):
-        with pytest.raises(ValueError):
-            _parse_materialize_mode(bad)
-    assert _parse_materialize_mode("table:/tmp/x") == ("table", "/tmp/x")
 
 
 def test_incremental_pairs_table_mode_identical(spark, tmp_path):
@@ -1562,13 +1640,18 @@ def test_incremental_pairs_table_mode_identical(spark, tmp_path):
         ["doc_id", "text"],
     )
 
-    def pairs(mode: str) -> list[tuple]:
-        out = incremental_minhash_pairs(
-            new, stored, threshold=0.3, materialize_mode=mode
-        )
+    def pairs() -> list[tuple]:
+        out = incremental_minhash_pairs(new, stored, threshold=0.3)
         return sorted(tuple(r) for r in out.collect())
 
-    assert pairs(f"table:{tmp_path}/inc") == pairs("local")
+    local = pairs()
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "inc"))
+    try:
+        assert pairs() == local
+    finally:
+        sc.setCheckpointDir(None)
+    assert list((tmp_path / "inc").glob("*/mat_*"))
 
 
 def test_components_long_chain_converges_logarithmically(spark):
@@ -4882,7 +4965,7 @@ def test_curate_corpus_split_from_same_components_pass(spark):
         F.col("lang").isin("en") & (F.col("quality") >= 0.3)
     ).localCheckpoint()
     after_exact, final, _, _ = _dedup_chain(
-        eligible, "text", "doc_id", 0.5, "local"
+        eligible, "text", "doc_id", 0.5
     )
     pairs = minhash_dedup_pairs(after_exact, "text", "doc_id", threshold=0.5)
     standalone = leakage_safe_split(final, pairs, weights=weights)
@@ -4939,7 +5022,7 @@ def test_curate_split_loose_threshold_guards_subdedup_leaks(spark):
         .localCheckpoint()
     )
     after_exact, _, _, _ = _dedup_chain(
-        eligible, "text", "doc_id", 0.5, "local"
+        eligible, "text", "doc_id", 0.5
     )
     pairs_loose = minhash_dedup_pairs(after_exact, threshold=0.25)
     kept_ids = {r["doc_id"] for r in kept_plain.select("doc_id").collect()}
@@ -6092,7 +6175,7 @@ def test_curate_corpus_halo_composed_parity(spark):
     )
     direct = contamination_report(eligible, bench, n=8).select("doc_id")
     _, final_nb, _, pairs = _dedup_chain(
-        eligible, "text", "doc_id", 0.5, "local"
+        eligible, "text", "doc_id", 0.5
     )
     halo_nodes = multi_source_bfs(
         pairs.select(

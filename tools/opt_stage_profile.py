@@ -33,7 +33,6 @@ def main() -> int:
         contamination_report,
     )
     from inbev_data_engineering_case_spark.operators.dedup import (
-        _materialize,
         dedup_components_with_stats,
         exact_dedup,
         minhash_dedup_pairs,
@@ -43,7 +42,10 @@ def main() -> int:
         score_documents,
     )
     from inbev_data_engineering_case_spark.queries import CATALOG, _corpus_near
-    from inbev_data_engineering_case_spark.session import get_spark
+    from inbev_data_engineering_case_spark.session import (
+        get_spark,
+        materialize,
+    )
 
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     spark = get_spark("opt-stage-profile")
@@ -80,10 +82,11 @@ def main() -> int:
     ).filter(F.col("lang").isin("en") & (F.col("quality") >= 0.3)))
 
     def elig():
-        return _materialize(
+        return materialize(
             score_documents(corpus, "text", "doc_id").filter(
                 F.col("lang").isin("en") & (F.col("quality") >= 0.3)
-            )
+            ),
+            eager=False,
         )
 
     timed("eligible materialized", elig)
