@@ -597,9 +597,12 @@ def snapshot_diff(
 
 def publish_view(spark: SparkSession, df: DataFrame, name: str) -> list[str]:
     """OP-09: register as a global temp view and return the catalog listing
-    (reference gold_data_aggregation.py:53-56)."""
+    (reference gold_data_aggregation.py:53-56): the names
+    ``spark.catalog.listTables("global_temp")`` gives, local temp views
+    included. ``SHOW TABLES`` is a driver-side command whose result is
+    collected without a Spark job; ``listTables`` runs jobs to collect it."""
     df.createOrReplaceGlobalTempView(name)
-    return [t.name for t in spark.catalog.listTables("global_temp")]
+    return [r.tableName for r in spark.sql("SHOW TABLES IN global_temp").collect()]
 
 
 def delete_rows(

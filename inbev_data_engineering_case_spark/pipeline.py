@@ -28,6 +28,7 @@ from inbev_data_engineering_case_spark.operators.medallion import (
 )
 from inbev_data_engineering_case_spark.schemas import (
     BREWERY_BRONZE,
+    BREWERY_SILVER,
     GOLD_PARTITION_KEYS,
     SILVER_PARTITION_KEYS,
 )
@@ -73,7 +74,9 @@ def run_gold(
     spark: SparkSession, silver_dir: str, gold_dir: str, run_id: str
 ) -> tuple[str, list[str]]:
     silver_path = layers.latest_snapshot(silver_dir, require_success=True)
-    silver = spark.read.parquet(silver_path)
+    # The pinned schema skips the footer-inference job and keeps partition
+    # values typed as silver wrote them (``state=01`` stays the string '01').
+    silver = spark.read.schema(BREWERY_SILVER).parquet(silver_path)
     gold = silver_to_gold(silver)
     views = layers.publish_view(spark, gold, "brewery_counts")
     out = layers.snapshot_path(gold_dir, run_id)

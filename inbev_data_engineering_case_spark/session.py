@@ -111,7 +111,8 @@ def materialize(df: DataFrame, *, eager: bool) -> DataFrame:
     target = f"{ckpt.rstrip('/')}/mat_{uuid.uuid4().hex}"
     df.write.parquet(target)
     scratch_table_paths(spark).append(target)
-    return spark.read.parquet(target)
+    # the known schema spares the read-back a footer-inference job
+    return spark.read.schema(df.schema).parquet(target)
 
 
 def scratch_table_paths(spark: SparkSession) -> list[str]:

@@ -14,8 +14,9 @@ transport for the real Open Brewery DB API is provided but constructed only
 on demand (import-guarded; the library is not required for the engine).
 
 Ingestion-completeness invariant (reference README.md:84): pages fetched must
-equal ⌈total/per_page⌉ — enforced in ``to_dataframe`` by counting distinct
-fetched pages, turning the reference's "should always" prose into an assert.
+equal ⌈total/per_page⌉ — enforced in ``to_dataframe`` by an observed count of
+non-empty pages, read from the materialization's own job (no extra action),
+turning the reference's "should always" prose into an assert.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -70,15 +71,20 @@ class PagedRestSource:
         transport = self.transport
         names = [f.name for f in self.schema.fields]
         out_schema = T.StructType(
-            [T.StructField("__page", T.LongType(), False), *self.schema.fields]
+            [T.StructField("__page", T.LongType(), True), *self.schema.fields]
         )
 
         def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for batch in batches:
                 for page in batch["id"]:
                     records = transport(int(page))
+                    # The page id marks only the page's first record, so a
+                    # non-null count of ``__page`` counts non-empty pages.
+                    marker = [None] * len(records)
+                    if records:
+                        marker[0] = int(page)
                     rows = {
-                        "__page": [int(page)] * len(records),
+                        "__page": pd.array(marker, dtype="Int64"),
                         **{
                             name: [rec.get(name) for rec in records]
                             for name in names
@@ -86,23 +92,31 @@ class PagedRestSource:
                     }
                     yield pd.DataFrame(rows, columns=["__page", *names])
 
-        pages = spark.range(0, self.n_pages).repartition(
-            min(self.n_pages, spark.sparkContext.defaultParallelism)
+        # Page ids come pre-split over the fetch tasks: no shuffle.
+        pages = spark.range(
+            0, self.n_pages, 1,
+            min(self.n_pages, spark.sparkContext.defaultParallelism),
         )
         df = pages.mapInPandas(fetch_pages, schema=out_schema)
 
         if self.expected_total is not None:
             # README.md:84 invariant, asserted for real: every page must have
             # produced rows and the page count must cover expected_total.
-            # Materialize FIRST (eager checkpoint truncates lineage), so the
+            # Materialize FIRST (eager cut truncates lineage), so the
             # invariant check and every downstream action read the same
             # single fetch — an unmaterialized plan would re-invoke the
             # transport per action, and against a live mutable API the
-            # validated data would not be the data returned. With a
-            # checkpoint dir set the fetch lands in a durable scratch
+            # validated data would not be the data returned. The page count
+            # is an observed metric of that materialization's own job: each
+            # page id is in exactly one input row and the fetch stage is the
+            # result stage, so the count is exact and costs no extra job.
+            # With a checkpoint dir set the fetch lands in a durable scratch
             # table; without one it stays on executor-local blocks.
-            df = materialize(df, eager=True)
-            got_pages = df.select(F.countDistinct("__page")).first()[0]
+            fetched = Observation("rest_pages")
+            df = materialize(
+                df.observe(fetched, F.count("__page").alias("pages")), eager=True
+            )
+            got_pages = fetched.get["pages"]
             want_pages = -(-self.expected_total // self.per_page)
             if got_pages != want_pages:
                 raise RuntimeError(

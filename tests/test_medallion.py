@@ -3,7 +3,8 @@
 - silver row count == bronze row count (cleansing is row-preserving),
 - gold sum(brewery_count) == silver row count,
 - silver partition layout is country=/state=/ (Hive-style),
-- gold silver schema matches the pinned StructTypes."""
+- gold silver schema matches the pinned StructTypes;
+plus the per-stage Spark job budget of a REST-sourced run."""
 
 from __future__ import annotations
 
@@ -17,11 +18,20 @@ from inbev_data_engineering_case_spark.operators.medallion import (
     bronze_to_silver,
     silver_to_gold,
 )
-from inbev_data_engineering_case_spark.pipeline import run_pipeline
+from inbev_data_engineering_case_spark.pipeline import (
+    run_gold,
+    run_ingest,
+    run_pipeline,
+    run_silver,
+)
 from inbev_data_engineering_case_spark.schemas import (
     BREWERY_BRONZE,
+    BREWERY_GOLD,
+    BREWERY_SILVER,
     SILVER_COLUMNS,
+    SILVER_PARTITION_KEYS,
 )
+from inbev_data_engineering_case_spark.sources.rest import PagedRestSource
 
 BRONZE_COLUMNS = [f.name for f in BREWERY_BRONZE.fields]
 
@@ -101,3 +111,94 @@ def test_gold_agg_shape(spark):
     )
     out = {tuple(r) for r in silver_to_gold(df).collect()}
     assert out == {("micro", "at", "wien", 2), ("nano", "br", "sp", 1)}
+
+
+def test_gold_keeps_numeric_looking_partition_values_as_strings(spark, tmp_path):
+    # Silver partition directories country=1/state=01 and state=02: read
+    # back with partition-type inference they would turn into ints (and
+    # '01' into 1). Gold must see the strings silver wrote.
+    silver_dir, gold_dir = str(tmp_path / "silver"), str(tmp_path / "gold")
+    rows = [
+        ("b1", "One", "micro", "x", "01", "1", None, None),
+        ("b2", "Two", "micro", "y", "01", "1", None, None),
+        ("b3", "Three", "nano", "z", "02", "1", None, None),
+    ]
+    silver = spark.createDataFrame(rows, BREWERY_SILVER)
+    layers.write_layer(
+        silver, layers.snapshot_path(silver_dir, "2024-01-01-00-00"),
+        SILVER_PARTITION_KEYS,
+    )
+    run_gold(spark, silver_dir, gold_dir, "2024-01-01-00-00")
+
+    gold = spark.table("global_temp.brewery_counts")
+    assert [(f.name, f.dataType) for f in gold.schema] == [
+        (f.name, f.dataType) for f in BREWERY_GOLD
+    ]
+    assert {tuple(r) for r in gold.collect()} == {
+        ("micro", "1", "01", 2), ("nano", "1", "02", 1),
+    }
+
+
+def test_publish_view_lists_like_catalog_without_a_job(spark):
+    sc = spark.sparkContext
+    spark.range(1).createOrReplaceTempView("publish_view_local_extra")
+    try:
+        sc.setJobGroup("publish_view", "publish_view listing")
+        views = layers.publish_view(spark, spark.range(2), "publish_view_probe")
+        jobs = len(sc.statusTracker().getJobIdsForGroup("publish_view"))
+        expected = {t.name for t in spark.catalog.listTables("global_temp")}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.dropTempView("publish_view_local_extra")
+        spark.catalog.dropGlobalTempView("publish_view_probe")
+    assert jobs == 0
+    assert {"publish_view_probe", "publish_view_local_extra"} <= expected
+    assert sorted(views) == sorted(expected)
+
+
+def test_pipeline_stage_job_budget(spark, tmp_path):
+    """Per-stage Spark job budget of a REST-sourced run under the default
+    (executor-local) materialize policy: ingest 2 (the eager fetch cut,
+    which also carries the page-count metric, and the CSV write), silver 2,
+    gold 3 (aggregate and write). Jobs that do no data work — a page-id
+    shuffle, a completeness query, a footer probe, a catalog listing — fail
+    this budget."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+
+    def transport(page: int) -> list[dict]:
+        return [
+            {
+                "id": f"{page}-{i}", "name": f"brew {page} {i}",
+                "brewery_type": "micro", "city": "wien", "state": "wien",
+                "country": "Austria" if i % 2 else "Brazil",
+            }
+            for i in range(2)
+        ]
+
+    source = PagedRestSource(
+        transport=transport, schema=BREWERY_BRONZE, n_pages=3, per_page=2,
+        expected_total=6,
+    )
+    dirs = {d: str(tmp_path / d) for d in ("bronze", "silver", "gold")}
+    run_id = "2024-01-01-00-00"
+    stages = {
+        "ingest": lambda: run_ingest(spark, source, dirs["bronze"], run_id),
+        "silver": lambda: run_silver(spark, dirs["bronze"], dirs["silver"], run_id),
+        "gold": lambda: run_gold(spark, dirs["silver"], dirs["gold"], run_id),
+    }
+    jobs, out = {}, {}
+    try:
+        for name, stage in stages.items():
+            group = f"job_budget_{name}"
+            sc.setJobGroup(group, f"medallion {name}")
+            out[name] = stage()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs["ingest"] <= 2, jobs
+    assert jobs["silver"] <= 2, jobs
+    assert jobs["gold"] <= 3, jobs
+    gold_path, _ = out["gold"]
+    gold = spark.read.parquet(gold_path).agg(F.sum("brewery_count"))
+    assert gold.first()[0] == 6

@@ -77,3 +77,65 @@ def test_completeness_invariant_raises(spark):
     )
     with pytest.raises(RuntimeError, match="ingestion incomplete"):
         src.to_dataframe(spark)
+
+
+@pytest.fixture(params=["local", "checkpoint_dir"])
+def materialize_policy(request, spark, tmp_path):
+    """Both ``session.materialize`` policies: executor-local cuts (no
+    checkpoint dir) and parquet scratch tables under a checkpoint dir."""
+    sc = spark.sparkContext
+    if request.param == "checkpoint_dir":
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        yield request.param
+    finally:
+        sc.setCheckpointDir(None)
+
+
+def test_each_page_fetched_exactly_once_per_policy(spark, materialize_policy):
+    calls = spark.sparkContext.accumulator(0)
+    inner = make_fake_transport()
+
+    def counting_transport(page: int) -> list[dict]:
+        calls.add(1)
+        return inner(page)
+
+    src = PagedRestSource(
+        transport=counting_transport, schema=SCHEMA, n_pages=3, per_page=2,
+        expected_total=6,
+    )
+    df = src.to_dataframe(spark)
+    assert calls.value == 3  # validated eagerly, before any caller action
+    assert df.count() == 6
+    assert df.count() == 6
+    assert df.schema == SCHEMA
+    assert calls.value == 3
+
+
+def test_completeness_invariant_raises_per_policy(spark, materialize_policy):
+    src = PagedRestSource(
+        transport=make_fake_transport(), schema=SCHEMA, n_pages=3, per_page=2,
+        expected_total=10,
+    )
+    with pytest.raises(RuntimeError, match="ingestion incomplete"):
+        src.to_dataframe(spark)
+
+
+def test_empty_middle_page_is_incomplete(spark, materialize_policy):
+    # Page 1 of 4 comes back empty: 3 non-empty pages for the 4 that
+    # expected_total needs. The check counts pages that produced rows (the
+    # page marker sits on each page's first record only), not rows.
+    def gappy_transport(page: int) -> list[dict]:
+        if page == 1:
+            return []
+        return [
+            {"id": f"{page}-0", "name": "a", "city": "x"},
+            {"id": f"{page}-1", "name": "b", "city": "y"},
+        ]
+
+    src = PagedRestSource(
+        transport=gappy_transport, schema=SCHEMA, n_pages=4, per_page=2,
+        expected_total=8,
+    )
+    with pytest.raises(RuntimeError, match="fetched 3 pages, expected 4"):
+        src.to_dataframe(spark)

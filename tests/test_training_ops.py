@@ -415,6 +415,33 @@ def test_lineage_cuts_checkpoint_dir_identical_and_rounds(spark, tmp_path):
         spark.sparkContext.setCheckpointDir(None)
 
 
+def test_materialize_scratch_table_one_job_per_cut(spark, tmp_path):
+    """Under a checkpoint dir an eager cut is one Spark job — the scratch
+    table's write — and reads the table back under the frame's own schema
+    (no footer-inference job); the rows round-trip unchanged."""
+    from inbev_data_engineering_case_spark.session import (
+        cleanup_scratch_tables,
+        materialize,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a", [1.5, None], {"k": 2}), (2, None, [], {})],
+        "id long, s string, xs array<double>, m map<string,int>",
+    )
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        sc.setJobGroup("materialize_cut", "one eager scratch-table cut")
+        cut = materialize(df, eager=True)
+        assert len(sc.statusTracker().getJobIdsForGroup("materialize_cut")) == 1
+        assert cut.schema == df.schema
+        assert sorted(map(str, cut.collect())) == sorted(map(str, df.collect()))
+        cleanup_scratch_tables(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setCheckpointDir(None)
+
+
 def test_stdlib_real_decoder_wav_end_to_end(spark):
     import io
     import wave
