@@ -184,6 +184,22 @@ def sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def require_default_string_escapes(spark, caller: str) -> None:
+    """Raise ValueError when the session parses SQL string literals
+    without backslash escapes (``spark.sql.parser.escapedStringLiterals``,
+    the Hive-compatibility mode). ``sql_str`` escapes for the default
+    parser; under that conf the same text parses to different regexes and
+    stopwords, which would silently change tokenization against the
+    Column forms. Call it where ``sql_str`` text reaches the parser."""
+    conf = "spark.sql.parser.escapedStringLiterals"
+    if spark.conf.get(conf, "false").lower() == "true":
+        raise ValueError(
+            f"{caller}: {conf}=true changes how the operator's SQL string "
+            "literals parse (backslashes stay literal); unset it for "
+            "this session"
+        )
+
+
 def tokens_spark_sql(expr: str) -> str:
     """Spark-SQL twin of ``tokens`` over an expression string."""
     return f"split(trim({expr}), {sql_str(WS_RE)})"

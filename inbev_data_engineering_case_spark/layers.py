@@ -27,6 +27,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inbev_data_engineering_case_spark.sources.readers import (
+    read_parquet,
+    write_parquet,
+)
+
 SNAPSHOT_PREFIX = "brewery_data"
 SUCCESS_MARKER = "_SUCCESS"
 
@@ -475,14 +480,14 @@ def compact_parquet(
     n_files = max(
         1, math.ceil(dir_bytes(spark, src) / target_file_bytes)
     )
-    df = spark.read.parquet(src)
+    df = read_parquet(spark, src)
     if sort_cols:
         out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
             *sort_cols
         )
     else:
         out = df.repartition(n_files)
-    out.write.mode("overwrite").parquet(dst)
+    write_parquet(out, dst, "overwrite")
     return n_files
 
 
@@ -541,13 +546,13 @@ def zorder_compact(
     if os.path.abspath(dst) == os.path.abspath(src):
         raise ValueError("zorder_compact: dst must differ from src")
     n_files = max(1, math.ceil(dir_bytes(spark, src) / target_file_bytes))
-    df = add_zorder_key(spark.read.parquet(src), dims, bits)
-    (
+    df = add_zorder_key(read_parquet(spark, src), dims, bits)
+    write_parquet(
         df.repartitionByRange(n_files, "zkey")
         .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("overwrite")
-        .parquet(dst)
+        .drop("zkey"),
+        dst,
+        "overwrite",
     )
     return n_files
 
@@ -711,7 +716,7 @@ def delete_rows(
         # NULL-safe: ~isin(...) is NULL (dropped by filter) for NULL
         # keys, which would silently delete every anonymous row in a
         # rewritten file — keep NULL-keyed rows explicitly
-        kept = spark.read.parquet(*touched).filter(
+        kept = read_parquet(spark, *touched).filter(
             ~F.col(key_col).isin(*key_list) | F.col(key_col).isNull()
         )
         tmp = dst + "._delete_tmp"

@@ -70,10 +70,14 @@ def benchmark_ngram_hashes(
     score_documents/minhash discipline): identical parsed tree, ~10× less
     driver-side py4j plan-build per run."""
     from inbev_data_engineering_case_spark.functions import (
+        require_default_string_escapes,
         sql_ident,
         word_ngrams_spark_sql,
     )
 
+    require_default_string_escapes(
+        benchmark.sparkSession, "benchmark_ngram_hashes"
+    )
     grams = word_ngrams_spark_sql(f"lower({sql_ident(text_col)})", n)
     return (
         benchmark.selectExpr(f"explode({grams}) AS gram")
@@ -103,6 +107,7 @@ def contamination_report(
     vs 0.5s guarded on the sf0.1 fixture); at cluster scan sizes the
     guard is a metadata-only no-op (r15 optimization round, guide §2)."""
     from inbev_data_engineering_case_spark.functions import (
+        require_default_string_escapes,
         sql_ident,
         word_ngrams_spark_sql,
     )
@@ -110,6 +115,9 @@ def contamination_report(
         _ensure_parallelism,
     )
 
+    require_default_string_escapes(
+        documents.sparkSession, "contamination_report"
+    )
     bench = benchmark_ngram_hashes(benchmark, text_col, n, portable)
     grams = word_ngrams_spark_sql(f"lower({sql_ident(text_col)})", n)
     doc_grams = (

@@ -250,10 +250,12 @@ def minhash_signatures(
     ``test_minhash_signatures_expr_parity`` and the oracle sweep)."""
     from inbev_data_engineering_case_spark.functions import (
         portable_hash64_spark_sql,
+        require_default_string_escapes,
         sql_ident,
         word_ngrams_spark_sql,
     )
 
+    require_default_string_escapes(df.sparkSession, "minhash_signatures")
     norm = (
         f"regexp_replace(lower(trim({sql_ident(text_col)})),"
         f" {_sql_str_dedup(WS_RE)}, ' ')"

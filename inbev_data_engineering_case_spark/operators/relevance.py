@@ -34,6 +34,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import tokens
+from inbev_data_engineering_case_spark.sources.readers import (
+    read_parquet,
+    write_parquet,
+)
 
 
 def term_frequencies(
@@ -537,13 +541,13 @@ def build_text_index(
             if cluster_by_term
             else tf
         )
-        out_tf.write.parquet(f"{staging}/tf")
+        write_parquet(out_tf, f"{staging}/tf")
         doclen = (
-            spark.read.parquet(f"{staging}/tf")
+            read_parquet(spark, f"{staging}/tf")
             .groupBy(id_col)
             .agg(F.sum("tf").alias("dl"))
         )
-        doclen.write.parquet(f"{staging}/doclen")
+        write_parquet(doclen, f"{staging}/doclen")
         # N = indexed documents (one doclen row per doc) — the same
         # definition update_text_index maintains from partials. A
         # NULL-text doc would produce NO tf/doclen rows and silently
@@ -557,7 +561,7 @@ def build_text_index(
             F.countDistinct(id_col).alias("_nd"),
         )
         stats = (
-            spark.read.parquet(f"{staging}/doclen")
+            read_parquet(spark, f"{staging}/doclen")
             .agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
             .join(F.broadcast(n_docs))
             .select(
@@ -596,15 +600,15 @@ def build_text_index(
                 "_avgdl",
             )
         )
-        stats.write.parquet(f"{staging}/stats")
+        write_parquet(stats, f"{staging}/stats")
 
     snap = commit_snapshot_with_retry(
         index_dir, TEXT_INDEX_PREFIX, write_fn,
         keep_snapshots=keep_snapshots,
     )
     return {
-        "tf_rows": spark.read.parquet(f"{snap}/tf").count(),
-        "doclen_rows": spark.read.parquet(f"{snap}/doclen").count(),
+        "tf_rows": read_parquet(spark, f"{snap}/tf").count(),
+        "doclen_rows": read_parquet(spark, f"{snap}/doclen").count(),
         "stats_rows": 1,
     }
 
@@ -634,11 +638,11 @@ def bm25_from_index(
     # a concurrent rebuild publishes atomically elsewhere, so tf,
     # doclen, and stats here are always the same generation
     snap = resolve_text_index(index_dir)
-    tf = spark.read.parquet(f"{snap}/tf").filter(
+    tf = read_parquet(spark, f"{snap}/tf").filter(
         F.col("term").isin(terms)
     )
-    doc_len = spark.read.parquet(f"{snap}/doclen")
-    stats = spark.read.parquet(f"{snap}/stats")
+    doc_len = read_parquet(spark, f"{snap}/doclen")
+    stats = read_parquet(spark, f"{snap}/stats")
     return _bm25_rank(tf, doc_len, stats, id_col, k, k1, b)
 
 
@@ -705,7 +709,7 @@ def update_text_index(
     touched = changed_docs.select(id_col)
     if deleted_ids is not None:
         touched = touched.unionByName(deleted_ids.select(id_col))
-    prev_doclen = spark.read.parquet(f"{parent_snap}/doclen")
+    prev_doclen = read_parquet(spark, f"{parent_snap}/doclen")
     # one doc-id-column pass over the doc-sized doclen table decides the
     # physical path; pure-new deltas (overlap 0, no deletes) take the
     # link+append path and never touch stored bytes
@@ -725,15 +729,15 @@ def update_text_index(
                 f"{staging}/doclen"
             )
         else:
-            prev_tf = spark.read.parquet(f"{parent_snap}/tf")
+            prev_tf = read_parquet(spark, f"{parent_snap}/tf")
             merged_tf = prev_tf.join(
                 touched, id_col, "left_anti"
             ).unionByName(delta_tf)
-            merged_tf.write.parquet(f"{staging}/tf")
+            write_parquet(merged_tf, f"{staging}/tf")
             merged_doclen = prev_doclen.join(
                 touched, id_col, "left_anti"
             ).unionByName(delta_doclen)
-            merged_doclen.write.parquet(f"{staging}/doclen")
+            write_parquet(merged_doclen, f"{staging}/doclen")
         # stats recompute from the MERGED doclen partials (doc-sized),
         # never from raw text: N is the doclen row count and avgdl its
         # mean — the same definition build_text_index writes, so delta
@@ -746,7 +750,7 @@ def update_text_index(
         )
         d_idx = delta_doclen.agg(F.count("*").alias("_ndi"))
         stats = (
-            spark.read.parquet(f"{staging}/doclen")
+            read_parquet(spark, f"{staging}/doclen")
             .agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
             .join(F.broadcast(d_docs))
             .join(F.broadcast(d_idx))
@@ -786,7 +790,7 @@ def update_text_index(
                 "_avgdl",
             )
         )
-        stats.write.parquet(f"{staging}/stats")
+        write_parquet(stats, f"{staging}/stats")
 
     snap = commit_snapshot(
         index_dir,
@@ -800,8 +804,8 @@ def update_text_index(
     return {
         "mode": "append" if append_only else "merge",
         "snapshot": snap,
-        "tf_rows": spark.read.parquet(f"{snap}/tf").count(),
-        "doclen_rows": spark.read.parquet(f"{snap}/doclen").count(),
+        "tf_rows": read_parquet(spark, f"{snap}/tf").count(),
+        "doclen_rows": read_parquet(spark, f"{snap}/doclen").count(),
         "stats_rows": 1,
     }
 
@@ -838,13 +842,13 @@ def compact_text_index(
     parent_snap = resolve_text_index(index_dir)
     parent = run_id_of(parent_snap, TEXT_INDEX_PREFIX)
     run_id = next_run_after(parent)
-    tf = spark.read.parquet(f"{parent_snap}/tf")
+    tf = read_parquet(spark, f"{parent_snap}/tf")
 
     def write_fn(staging: str) -> None:
-        (
+        write_parquet(
             tf.repartitionByRange(cluster_by_term, "term")
-            .sortWithinPartitions("term")
-            .write.parquet(f"{staging}/tf")
+            .sortWithinPartitions("term"),
+            f"{staging}/tf",
         )
         link_parquet_files(f"{parent_snap}/doclen", f"{staging}/doclen")
         link_parquet_files(f"{parent_snap}/stats", f"{staging}/stats")
@@ -860,5 +864,5 @@ def compact_text_index(
         prune_snapshots(index_dir, TEXT_INDEX_PREFIX, keep_snapshots)
     return {
         "snapshot": snap,
-        "tf_rows": spark.read.parquet(f"{snap}/tf").count(),
+        "tf_rows": read_parquet(spark, f"{snap}/tf").count(),
     }

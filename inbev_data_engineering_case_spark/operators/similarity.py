@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import cosine
 from inbev_data_engineering_case_spark.session import materialize
+from inbev_data_engineering_case_spark.sources.readers import (
+    read_parquet,
+    write_parquet,
+)
 
 # Upper bound on K*d for collect()-based Lloyd training: ~32 MB of doubles
 # on the driver per iteration. Above this, the "model" stops being small.
@@ -1270,13 +1274,16 @@ def build_ann_index(
     spark = vectors.sparkSession
 
     def write_fn(staging: str) -> None:
-        cents.write.parquet(f"{staging}/centroids")
-        book.write.parquet(f"{staging}/codebook")
-        c_cells.write.parquet(f"{staging}/cells")
-        codes.write.parquet(f"{staging}/codes")
-        spark.createDataFrame(
-            [(m, k, n_centroids)], "m int, k int, n_centroids int"
-        ).write.parquet(f"{staging}/meta")
+        write_parquet(cents, f"{staging}/centroids")
+        write_parquet(book, f"{staging}/codebook")
+        write_parquet(c_cells, f"{staging}/cells")
+        write_parquet(codes, f"{staging}/codes")
+        write_parquet(
+            spark.createDataFrame(
+                [(m, k, n_centroids)], "m int, k int, n_centroids int"
+            ),
+            f"{staging}/meta",
+        )
 
     snap = commit_snapshot_with_retry(
         index_dir, ANN_INDEX_PREFIX, write_fn,
@@ -1284,8 +1291,8 @@ def build_ann_index(
     )
     return {
         "snapshot": snap,
-        "cells_rows": spark.read.parquet(f"{snap}/cells").count(),
-        "codes_rows": spark.read.parquet(f"{snap}/codes").count(),
+        "cells_rows": read_parquet(spark, f"{snap}/cells").count(),
+        "codes_rows": read_parquet(spark, f"{snap}/codes").count(),
     }
 
 
@@ -1336,10 +1343,10 @@ def update_ann_index(
     # generation this delta was NOT computed from
     parent = run_id_of(parent_snap, ANN_INDEX_PREFIX)
     run_id = next_run_after(parent)
-    meta = spark.read.parquet(f"{parent_snap}/meta").collect()[0]
+    meta = read_parquet(spark, f"{parent_snap}/meta").collect()[0]
     m, k = int(meta["m"]), int(meta["k"])
-    cents = spark.read.parquet(f"{parent_snap}/centroids")
-    book = spark.read.parquet(f"{parent_snap}/codebook")
+    cents = read_parquet(spark, f"{parent_snap}/centroids")
+    book = read_parquet(spark, f"{parent_snap}/codebook")
 
     delta_cells = (
         ivf_assign(
@@ -1375,7 +1382,7 @@ def update_ann_index(
         touched = touched.unionByName(
             deleted_ids.select(F.col(id_col).alias("neighbor_id"))
         )
-    prev_cells = spark.read.parquet(f"{parent_snap}/cells")
+    prev_cells = read_parquet(spark, f"{parent_snap}/cells")
     overlap = (
         prev_cells.join(touched, "neighbor_id", "left_semi")
         .limit(1)
@@ -1390,12 +1397,18 @@ def update_ann_index(
             delta_cells.write.mode("append").parquet(f"{staging}/cells")
             delta_codes.write.mode("append").parquet(f"{staging}/codes")
         else:
-            prev_cells.join(
-                touched, "neighbor_id", "left_anti"
-            ).unionByName(delta_cells).write.parquet(f"{staging}/cells")
-            spark.read.parquet(f"{parent_snap}/codes").join(
-                touched, "neighbor_id", "left_anti"
-            ).unionByName(delta_codes).write.parquet(f"{staging}/codes")
+            write_parquet(
+                prev_cells.join(
+                    touched, "neighbor_id", "left_anti"
+                ).unionByName(delta_cells),
+                f"{staging}/cells",
+            )
+            write_parquet(
+                read_parquet(spark, f"{parent_snap}/codes").join(
+                    touched, "neighbor_id", "left_anti"
+                ).unionByName(delta_codes),
+                f"{staging}/codes",
+            )
         # the model tables carry forward byte-identical (hard links):
         # the update contract is "same model, fresher corpus"
         link_parquet_files(
@@ -1416,8 +1429,8 @@ def update_ann_index(
     return {
         "mode": "append" if append_only else "merge",
         "snapshot": snap,
-        "cells_rows": spark.read.parquet(f"{snap}/cells").count(),
-        "codes_rows": spark.read.parquet(f"{snap}/codes").count(),
+        "cells_rows": read_parquet(spark, f"{snap}/cells").count(),
+        "codes_rows": read_parquet(spark, f"{snap}/codes").count(),
     }
 
 
@@ -1444,11 +1457,11 @@ def ann_from_index(
     lesson), so the stored build value is the only source of truth.
     """
     snap = resolve_ann_index(index_dir)
-    meta = spark.read.parquet(f"{snap}/meta").collect()[0]
-    cents = spark.read.parquet(f"{snap}/centroids")
-    book = spark.read.parquet(f"{snap}/codebook")
-    c_cells = spark.read.parquet(f"{snap}/cells")
-    codes = spark.read.parquet(f"{snap}/codes")
+    meta = read_parquet(spark, f"{snap}/meta").collect()[0]
+    cents = read_parquet(spark, f"{snap}/centroids")
+    book = read_parquet(spark, f"{snap}/codebook")
+    c_cells = read_parquet(spark, f"{snap}/cells")
+    codes = read_parquet(spark, f"{snap}/codes")
     return _ivf_pq_probe(
         cents,
         c_cells,

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from inbev_data_engineering_case_spark.functions import (
     WS_RE,
     portable_hash64,
+    require_default_string_escapes,
     sql_ident as _sql_ident,
     sql_str as _sql_str,
     tokens,
@@ -178,6 +179,7 @@ def score_documents(
         _ensure_parallelism,
     )
 
+    require_default_string_escapes(df.sparkSession, "score_documents")
     id_q = _sql_ident(id_col)
     t_q = _sql_ident(text_col)
     extra_q = [_sql_ident(c) for c in extra_cols]

@@ -48,7 +48,9 @@ from inbev_data_engineering_case_spark.operators.normalize import (
 from inbev_data_engineering_case_spark.session import materialize
 from inbev_data_engineering_case_spark.sources.readers import (
     read_events,
+    read_parquet,
     read_parquet_table,
+    write_parquet,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -6308,8 +6310,8 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=["event_id"],
         order_col="ts",
     )
-    return spark.read.parquet(
-        latest_snapshot(f"{work}/snap", prefix="merge=")
+    return read_parquet(
+        spark, latest_snapshot(f"{work}/snap", prefix="merge=")
     ).select("event_id", "event_type", "value")
 
 
@@ -8557,11 +8559,13 @@ def q_containment_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # incremental read then pays for (guide §6 output sizing; the
         # gram_h layout is also build_gram_table's documented
         # bucket-at-scale recommendation)
-        build_gram_table(docs, n=5).repartition("gram_h").write.mode(
-            "overwrite"
-        ).parquet(state_dir)
+        write_parquet(
+            build_gram_table(docs, n=5).repartition("gram_h"),
+            state_dir,
+            "overwrite",
+        )
     return incremental_containment_pairs(
-        spark.read.parquet(state_dir),
+        read_parquet(spark, state_dir),
         frag,
         n=5,
         threshold_ppm=800_000,

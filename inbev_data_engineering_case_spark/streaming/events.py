@@ -26,13 +26,19 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from inbev_data_engineering_case_spark.functions import dsum
 from inbev_data_engineering_case_spark.session import materialize
+from inbev_data_engineering_case_spark.sources.readers import (
+    pin_event_confs,
+    read_parquet,
+    surface_event_ts,
+    write_parquet,
+)
 
 
 _CLEANUP_REGISTERED: set[str] = set()
@@ -59,13 +65,13 @@ def _cleanup_stage_dirs_at_exit(app_id: str) -> None:
 def read_events_stream(spark, sf_dir: str) -> DataFrame:
     """Streaming twin of ``sources.readers.read_events``: file-source
     readStream over the events parquet with the nanosecond timestamp
-    surfaced as a proper (microsecond) TimestampType column. The explicit
-    schema comes from a metadata-only batch read (streaming sources require
-    one; inference is disabled at scale)."""
+    surfaced as a proper (microsecond) TimestampType column. A streaming
+    source needs an explicit schema; it comes from ``read_parquet``'s
+    memo, so only the first read of the file in a session launches a
+    footer-inference job."""
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_event_confs(spark)
     # Stateful streaming parallelism = spark.sql.shuffle.partitions at the
     # stream's FIRST run (state-store layout persists in the checkpoint).
     # AQE does not coalesce stateful exchanges, so an untuned session's 200
@@ -85,12 +91,7 @@ def read_events_stream(spark, sf_dir: str) -> DataFrame:
     if current is not None and current > max(4 * cores, 64):
         spark.conf.set("spark.sql.shuffle.partitions", str(max(cores, 8)))
     path = f"{sf_dir}/events.parquet"
-    batch = spark.read.parquet(path)
-    schema = batch.schema
-    # The fixture has shipped `ts` as TIMESTAMP(NANOS) (surfaced as int64
-    # nanos by the conf above) or TIMESTAMP(MICROS) (TIMESTAMP_NTZ) in
-    # different rounds — adapt like sources.readers.read_events does.
-    ts_is_long = isinstance(schema["ts"].dataType, T.LongType)
+    schema = read_parquet(spark, path).schema
     # The file-stream source only monitors directories; the table is a
     # single read-only parquet file, so stage a symlink directory for it
     # (a real deployment streams from a landing directory anyway). The
@@ -111,12 +112,19 @@ def read_events_stream(spark, sf_dir: str) -> DataFrame:
         os.symlink(path, link)
     except FileExistsError:
         pass  # concurrent creator within the same app won the race; same target
-    stream = spark.readStream.schema(schema).parquet(stage)
-    if ts_is_long:
-        return stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return surface_event_ts(spark.readStream.schema(schema).parquet(stage))
+
+
+def _cut_nonempty(batch_df: DataFrame) -> DataFrame | None:
+    """A micro-batch cut once (a foreachBatch file-source batch re-scans
+    its input files on every action otherwise), or None when it holds no
+    rows. The row count is an observed metric of the eager cut's own job,
+    so the emptiness check launches no job of its own."""
+    rows = Observation("stream_batch_rows")
+    batch = materialize(
+        batch_df.observe(rows, F.count(F.lit(1)).alias("n")), eager=True
+    )
+    return batch if rows.get["n"] else None
 
 
 def query_metrics(q) -> dict[str, int]:
@@ -736,8 +744,8 @@ def merge_upsert_snapshot(
         .drop("_rn")
     )
     try:
-        prev = spark.read.parquet(
-            latest_snapshot(base_dir, prefix="merge=")
+        prev = read_parquet(
+            spark, latest_snapshot(base_dir, prefix="merge=")
         )
     except (FileNotFoundError, ValueError):
         prev = None
@@ -749,7 +757,7 @@ def merge_upsert_snapshot(
         ).unionByName(latest_batch)
     )
     out = os.path.join(base_dir, f"merge={batch_id:020d}")
-    merged.write.mode("overwrite").parquet(out)
+    write_parquet(merged, out, "overwrite")
     return out
 
 
@@ -1037,13 +1045,12 @@ def run_stream_index_update(
         # a permanent poison pill. Dropping is the dead-letter
         # equivalent (the doc simply isn't searchable; route a
         # quarantine stream upstream if those docs need accounting).
-        batch = materialize(
+        batch = _cut_nonempty(
             batch_df.select(id_col, text_col)
             .filter(F.col(text_col).isNotNull())
-            .dropDuplicates([id_col]),
-            eager=True,
+            .dropDuplicates([id_col])
         )
-        if not batch.take(1):
+        if batch is None:
             return
         update_text_index(spark, index_dir, batch, id_col=id_col,
                           text_col=text_col,
@@ -1093,8 +1100,8 @@ def read_corpus_artifacts(
 
     snap = latest_snapshot(state_dir, CORPUS_ARTIFACT_PREFIX)
     out = (
-        spark.read.parquet(os.path.join(snap, "sigs")),
-        spark.read.parquet(os.path.join(snap, "fps")),
+        read_parquet(spark, os.path.join(snap, "sigs")),
+        read_parquet(spark, os.path.join(snap, "fps")),
     )
     if with_grams:
         gram_dir = os.path.join(snap, "grams")
@@ -1105,7 +1112,7 @@ def read_corpus_artifacts(
                 "backfill_gram_table(corpus, state_dir), then re-run "
                 "the stream with gram_n set to keep maintaining it"
             )
-        out = (*out, spark.read.parquet(gram_dir))
+        out = (*out, read_parquet(spark, gram_dir))
     if with_components:
         comps_dir = os.path.join(snap, "comps")
         if not os.path.isdir(comps_dir):
@@ -1116,7 +1123,7 @@ def read_corpus_artifacts(
                 "re-run the stream with components=True to keep "
                 "maintaining it"
             )
-        out = (*out, spark.read.parquet(comps_dir))
+        out = (*out, read_parquet(spark, comps_dir))
     if with_halo:
         hdist_dir = os.path.join(snap, "hdist")
         if not os.path.isdir(hdist_dir):
@@ -1132,9 +1139,9 @@ def read_corpus_artifacts(
         # same way the maintaining stream does
         out = (
             *out,
-            spark.read.parquet(os.path.join(snap, "hpairs")),
-            spark.read.parquet(hdist_dir),
-            spark.read.parquet(os.path.join(snap, "hmeta")),
+            read_parquet(spark, os.path.join(snap, "hpairs")),
+            read_parquet(spark, hdist_dir),
+            read_parquet(spark, os.path.join(snap, "hmeta")),
         )
     return out
 
@@ -1166,7 +1173,7 @@ def _backfill_open(
             f" to backfill; {resume_hint}"
         )
     tables = {
-        name: spark.read.parquet(os.path.join(snap, name))
+        name: read_parquet(spark, os.path.join(snap, name))
         for name in sorted(os.listdir(snap))
         if os.path.isdir(os.path.join(snap, name))
     }
@@ -1240,7 +1247,7 @@ def _backfill_commit(
 
     def write_all(staging: str) -> None:
         for name, table in tables.items():
-            table.write.parquet(os.path.join(staging, name))
+            write_parquet(table, os.path.join(staging, name))
 
     return commit_snapshot(
         state_dir,
@@ -1622,13 +1629,12 @@ def run_stream_artifact_update(
         )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = materialize(
+        batch = _cut_nonempty(
             batch_df.select(id_col, text_col)
             .filter(F.col(text_col).isNotNull())
-            .dropDuplicates([id_col]),
-            eager=True,  # file-source batches re-scan
+            .dropDuplicates([id_col])
         )
-        if not batch.take(1):
+        if batch is None:
             return
         stored_grams = None
         stored_comps = None
@@ -1636,11 +1642,11 @@ def run_stream_artifact_update(
         stored_hdist = None
         try:
             parent_snap = latest_snapshot(state_dir, CORPUS_ARTIFACT_PREFIX)
-            stored_sigs = spark.read.parquet(
-                os.path.join(parent_snap, "sigs")
+            stored_sigs = read_parquet(
+                spark, os.path.join(parent_snap, "sigs")
             )
-            stored_fps = spark.read.parquet(
-                os.path.join(parent_snap, "fps")
+            stored_fps = read_parquet(
+                spark, os.path.join(parent_snap, "fps")
             )
             # signature-geometry refusal (the gram/comps/halo guards'
             # sibling — previously only a caller contract): stored
@@ -1678,7 +1684,7 @@ def run_stream_artifact_update(
                         " sigs/fps in one snapshot), then restart the"
                         " stream (or start a fresh state_dir)"
                     )
-                stored_grams = spark.read.parquet(grams_dir)
+                stored_grams = read_parquet(spark, grams_dir)
                 # geometry refusal before commit (the embedding/
                 # classifier streams' discipline): build_gram_table
                 # rides (n, portable) as state columns, and a resume
@@ -1721,7 +1727,7 @@ def run_stream_artifact_update(
                         " restart the stream (or start a fresh"
                         " state_dir)"
                     )
-                stored_comps = spark.read.parquet(comps_dir)
+                stored_comps = read_parquet(spark, comps_dir)
             if halo_benchmark is not None:
                 hdist_dir = os.path.join(parent_snap, "hdist")
                 if not os.path.isdir(hdist_dir):
@@ -1740,16 +1746,16 @@ def run_stream_artifact_update(
                         " stored corpus, then restart the stream (or"
                         " start a fresh state_dir)"
                     )
-                stored_hpairs = spark.read.parquet(
-                    os.path.join(parent_snap, "hpairs")
+                stored_hpairs = read_parquet(
+                    spark, os.path.join(parent_snap, "hpairs")
                 )
-                stored_hdist = spark.read.parquet(hdist_dir)
+                stored_hdist = read_parquet(spark, hdist_dir)
                 from inbev_data_engineering_case_spark.operators.curate import (  # noqa: E501
                     unpack_halo_meta,
                 )
 
                 stored_geo = unpack_halo_meta(
-                    spark.read.parquet(os.path.join(parent_snap, "hmeta")),
+                    read_parquet(spark, os.path.join(parent_snap, "hmeta")),
                     "run_stream_artifact_update",
                 )
                 if stored_geo != halo_geo:
@@ -1911,16 +1917,16 @@ def run_stream_artifact_update(
             )
 
         def write_pair(staging: str) -> None:
-            sigs.write.parquet(os.path.join(staging, "sigs"))
-            fps.write.parquet(os.path.join(staging, "fps"))
+            write_parquet(sigs, os.path.join(staging, "sigs"))
+            write_parquet(fps, os.path.join(staging, "fps"))
             if grams is not None:
-                grams.write.parquet(os.path.join(staging, "grams"))
+                write_parquet(grams, os.path.join(staging, "grams"))
             if comps is not None:
-                comps.write.parquet(os.path.join(staging, "comps"))
+                write_parquet(comps, os.path.join(staging, "comps"))
             if hdist is not None:
-                hpairs.write.parquet(os.path.join(staging, "hpairs"))
-                hdist.write.parquet(os.path.join(staging, "hdist"))
-                hmeta.write.parquet(os.path.join(staging, "hmeta"))
+                write_parquet(hpairs, os.path.join(staging, "hpairs"))
+                write_parquet(hdist, os.path.join(staging, "hdist"))
+                write_parquet(hmeta, os.path.join(staging, "hmeta"))
 
         commit_snapshot(
             state_dir,
@@ -1962,8 +1968,8 @@ def read_embedding_artifacts(spark: SparkSession, state_dir: str):
 
     snap = latest_snapshot(state_dir, EMBEDDING_ARTIFACT_PREFIX)
     return (
-        spark.read.parquet(os.path.join(snap, "vectors")),
-        spark.read.parquet(os.path.join(snap, "buckets")),
+        read_parquet(spark, os.path.join(snap, "vectors")),
+        read_parquet(spark, os.path.join(snap, "buckets")),
     )
 
 
@@ -2032,23 +2038,22 @@ def run_stream_embedding_update(
     spark = emb_stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = materialize(
+        batch = _cut_nonempty(
             batch_df.select(id_col, vec_col)
             .filter(F.col(vec_col).isNotNull())
-            .dropDuplicates([id_col]),
-            eager=True,  # file-source batches re-scan
+            .dropDuplicates([id_col])
         )
-        if not batch.take(1):
+        if batch is None:
             return
         try:
             parent_snap = latest_snapshot(
                 state_dir, EMBEDDING_ARTIFACT_PREFIX
             )
-            stored_vectors = spark.read.parquet(
-                os.path.join(parent_snap, "vectors")
+            stored_vectors = read_parquet(
+                spark, os.path.join(parent_snap, "vectors")
             )
-            stored_buckets = spark.read.parquet(
-                os.path.join(parent_snap, "buckets")
+            stored_buckets = read_parquet(
+                spark, os.path.join(parent_snap, "buckets")
             )
             parent = run_id_of(parent_snap, EMBEDDING_ARTIFACT_PREFIX)
             head = stored_buckets.select("num_planes", "n_probes").first()
@@ -2087,8 +2092,8 @@ def run_stream_embedding_update(
         buckets = buckets.dropDuplicates(["seed", "id", "bucket"])
 
         def write_pair(staging: str) -> None:
-            vectors.write.parquet(os.path.join(staging, "vectors"))
-            buckets.write.parquet(os.path.join(staging, "buckets"))
+            write_parquet(vectors, os.path.join(staging, "vectors"))
+            write_parquet(buckets, os.path.join(staging, "buckets"))
 
         commit_snapshot(
             state_dir,
@@ -2126,11 +2131,13 @@ def read_classifier_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     classifier-artifact snapshot — feed to
     ``classify.bow_weights_from_counts`` to derive the scoring model
     in one model-sized pass. Raises ``FileNotFoundError`` when no
-    snapshot has ever committed."""
+    snapshot has ever committed. The stream loop records the schema of
+    the counts it writes (``write_parquet``), so in the session that
+    committed the snapshot this read launches no Spark job."""
     from inbev_data_engineering_case_spark.layers import latest_snapshot
 
     snap = latest_snapshot(state_dir, CLASSIFIER_ARTIFACT_PREFIX)
-    return spark.read.parquet(os.path.join(snap, "counts"))
+    return read_parquet(spark, os.path.join(snap, "counts"))
 
 
 def run_stream_classifier_update(
@@ -2230,7 +2237,8 @@ def _run_stream_counts_update(
     """The additive-count artifact streams' ONE guard chain + commit
     loop (binary and multiclass twins delegate here, so checkpoint
     lineage, replay skip, geometry refusal, and snapshot discipline
-    are defined once): per batch — null-filter + per-batch id dedup →
+    are defined once): per batch — null-filter + per-batch id dedup,
+    cut once with its row count observed (an empty batch stops here) →
     checkpoint-lineage refusal → geometry refusal (the stored META
     row's ``meta_count_col`` carries n_buckets) → replay skip →
     train-on-batch → additive merge → one atomic snapshot with the
@@ -2254,13 +2262,12 @@ def _run_stream_counts_update(
         null_guard = cond if null_guard is None else (null_guard & cond)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = materialize(
+        batch = _cut_nonempty(
             batch_df.select(*select_cols)
             .filter(null_guard)
-            .dropDuplicates([id_col]),
-            eager=True,  # file-source batches re-scan
+            .dropDuplicates([id_col])
         )
-        if not batch.take(1):
+        if batch is None:
             return
         # the RAW checkpoint string is the lineage key: abspath would
         # make it cwd-dependent for relative paths and mangle URI
@@ -2270,11 +2277,11 @@ def _run_stream_counts_update(
         ckpt_key = checkpoint
         try:
             parent_snap = latest_snapshot(state_dir, prefix)
-            stored = spark.read.parquet(
-                os.path.join(parent_snap, "counts")
+            stored = read_parquet(
+                spark, os.path.join(parent_snap, "counts")
             )
-            meta_row = spark.read.parquet(
-                os.path.join(parent_snap, "meta")
+            meta_row = read_parquet(
+                spark, os.path.join(parent_snap, "meta")
             ).first()
             if meta_row["checkpoint"] != ckpt_key:
                 raise ValueError(
@@ -2318,8 +2325,8 @@ def _run_stream_counts_update(
         )
 
         def write_all(staging: str) -> None:
-            counts.write.parquet(os.path.join(staging, "counts"))
-            meta.write.parquet(os.path.join(staging, "meta"))
+            write_parquet(counts, os.path.join(staging, "counts"))
+            write_parquet(meta, os.path.join(staging, "meta"))
 
         commit_snapshot(
             state_dir,
@@ -2357,11 +2364,13 @@ def read_multiclass_counts(
     committed snapshot — feed to
     ``classify.multiclass_bow_weights_from_counts`` to derive the
     K-class scoring model in one model-sized pass. Raises
-    ``FileNotFoundError`` when no snapshot has ever committed."""
+    ``FileNotFoundError`` when no snapshot has ever committed. Like
+    ``read_classifier_counts``, it infers no schema in the session that
+    committed the snapshot."""
     from inbev_data_engineering_case_spark.layers import latest_snapshot
 
     snap = latest_snapshot(state_dir, MULTICLASS_ARTIFACT_PREFIX)
-    return spark.read.parquet(os.path.join(snap, "counts"))
+    return read_parquet(spark, os.path.join(snap, "counts"))
 
 
 def run_stream_multiclass_update(

@@ -186,3 +186,44 @@ def test_lineage_cuts_go_through_session_materialize():
             ):
                 raw.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not raw, f"raw checkpoint calls outside session.py: {raw}"
+
+
+def _reader_chain(node: ast.AST) -> list[str]:
+    """Attribute and call names from the root of a call chain to ``node``,
+    e.g. ``["spark", "read", "schema", "parquet"]``."""
+    names = []
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            if isinstance(node, ast.Name):
+                names.append(node.id)
+            return names[::-1]
+
+
+def test_parquet_reads_go_through_the_reader():
+    """Static (no Spark): every parquet read that infers its schema goes
+    through ``sources.readers.read_parquet``, whose memo makes only the
+    first read of a table launch a footer-inference job. A ``.parquet(``
+    call on a ``.read`` chain outside ``sources/readers.py`` fails this
+    test unless the chain pins a schema with ``.schema(...)`` (pinned
+    reads infer nothing)."""
+    root = pathlib.Path(__file__).resolve().parent.parent / _PKG
+    raw = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "sources" / "readers.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+            ):
+                continue
+            chain = _reader_chain(node.func.value)
+            if "read" in chain and "schema" not in chain:
+                raw.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not raw, f"parquet reads outside sources/readers.py: {raw}"

@@ -55,3 +55,39 @@ def test_entry_smoke(spark):
     assert set(e.queries()) == set(CATALOG)
     for name, sql in e.oracle_sql().items():
         assert isinstance(sql, str) and sql.strip().upper().startswith("SELECT") or "WITH" in sql.upper()
+
+
+def _last_job_id(spark) -> int:
+    """The newest job id Spark has recorded, once the listener bus has
+    delivered every event. Job ids are sequential across threads, so the
+    difference of two readings counts every job in between, including a
+    streaming query's micro-batch jobs (they run under the stream's own
+    job group, out of reach of a caller's)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_catalog_build_job_budget(spark):
+    """Spark jobs launched while a benchmark catalog line BUILDS, the
+    second time it is built in a session. The scan lines read parquet
+    through the reader's schema memo, so they launch none: a footer probe,
+    a guard count or any other eager action fails this budget.
+    q_stream_classifier drains a file stream while it builds; 7 is its
+    measured count with no footer-inference job and no separate emptiness
+    probe (the micro-batch cut carries the batch's row count)."""
+    budget = {
+        "q_gold_agg": 0,
+        "q_window_events": 0,
+        "q_heavy_hitters": 0,
+        "q_tfidf_topk": 0,
+        "q_stream_classifier": 7,
+    }
+    jobs = {}
+    for name in budget:
+        CATALOG[name].fn(spark, SF_DIR)  # the first build may infer schemas
+        before = _last_job_id(spark)
+        CATALOG[name].fn(spark, SF_DIR)
+        jobs[name] = _last_job_id(spark) - before
+    assert all(jobs[n] <= b for n, b in budget.items()), jobs

@@ -4,6 +4,7 @@ known-session fixture for the stateful sessionizer."""
 
 from __future__ import annotations
 
+import os
 import time
 from datetime import datetime, timedelta
 
@@ -42,6 +43,29 @@ def stage_batches(spark, src, batches, ddl):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
+
+
+@pytest.fixture(autouse=True)
+def recorded_schemas_match_inference(spark, tmp_path):
+    """After each test: every parquet table under ``tmp_path`` that the
+    reader's schema memo holds (the library recorded it at write time, or
+    read it) must carry exactly the schema Spark infers from its footers,
+    made nullable as every parquet read is. A memo entry that drifted from
+    the files would hand later reads a wrong schema without a job."""
+    import os
+
+    from inbev_data_engineering_case_spark.sources import readers
+
+    yield
+    memo = readers._schema_memo(spark)
+    for d, dirs, names in os.walk(tmp_path):
+        dirs[:] = [n for n in dirs if not readers._hidden(n)]
+        if not any(n.endswith(".parquet") for n in names):
+            continue
+        key = readers._schema_key(spark, (d,))
+        if key in memo:
+            inferred = readers._nullable(spark.read.parquet(d).schema)
+            assert memo[key] == inferred, d
 
 
 @pytest.fixture()
@@ -2249,3 +2273,70 @@ def test_stream_artifact_update_maintains_halo_state(spark, tmp_path):
     assert {
         (r["node"], r["dist"]) for r in hdist2.collect()
     } == want_dist
+
+
+@pytest.mark.parametrize("policy", ["local", "checkpoint_dir"])
+def test_stream_counts_state_matches_batch_twins(spark, tmp_path, policy):
+    """The binary and multiclass count streams share one loop
+    (``_run_stream_counts_update``). Under either materialize policy the
+    drained state equals the batch twin over every non-null streamed doc,
+    row for row. The middle micro-batch holds only NULL-text docs, so the
+    loop's observed row count reads 0 and the batch commits nothing."""
+    from inbev_data_engineering_case_spark.operators.classify import (
+        multiclass_bow_counts,
+        train_bow_counts,
+    )
+    from inbev_data_engineering_case_spark.session import (
+        cleanup_scratch_tables,
+    )
+    from inbev_data_engineering_case_spark.streaming.events import (
+        read_classifier_counts,
+        read_multiclass_counts,
+        run_stream_classifier_update,
+        run_stream_multiclass_update,
+    )
+
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .filter(F.col("doc_id") < 80)
+        .select("doc_id", "text", "lang")
+    )
+    rows = sorted(map(tuple, docs.collect()))
+    batches = [
+        rows[:40],
+        [(9000 + i, None, "en") for i in range(3)],
+        rows[40:],
+    ]
+    ddl = "doc_id bigint, text string, lang string"
+
+    def rows_of(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    buckets = 1 << 10
+    sc = spark.sparkContext
+    if policy == "checkpoint_dir":
+        sc.setCheckpointDir(str(tmp_path / "scratch"))
+    try:
+        src = stage_batches(spark, tmp_path / "feed", batches, ddl)
+        metrics = run_stream_classifier_update(
+            src.select("doc_id", "text", (F.col("lang") == "en").alias("label")),
+            str(tmp_path / "clf"), str(tmp_path / "clf_ckpt"),
+            n_buckets=buckets,
+        )
+        assert metrics["batches"] == 3
+        run_stream_multiclass_update(
+            src.select("doc_id", "text", F.col("lang").alias("label")),
+            str(tmp_path / "mclf"), str(tmp_path / "mclf_ckpt"),
+            n_buckets=buckets,
+        )
+        clf = rows_of(read_classifier_counts(spark, str(tmp_path / "clf")))
+        mclf = rows_of(read_multiclass_counts(spark, str(tmp_path / "mclf")))
+    finally:
+        sc.setCheckpointDir(None)
+        cleanup_scratch_tables(spark)
+    snaps = [n for n in os.listdir(tmp_path / "clf") if n.startswith("clfart")]
+    assert len(snaps) == 2, snaps  # the all-NULL batch committed nothing
+    labeled = docs.select("doc_id", "text", (F.col("lang") == "en").alias("label"))
+    assert clf == rows_of(train_bow_counts(labeled, n_buckets=buckets))
+    classed = docs.select("doc_id", "text", F.col("lang").alias("label"))
+    assert mclf == rows_of(multiclass_bow_counts(classed, n_buckets=buckets))

@@ -7287,3 +7287,37 @@ def test_mixture_rates_weighted_by_units(spark):
         ).collect()
     }
     assert ok == {"b": 1_000_000}
+
+
+def test_sql_text_operators_refuse_escaped_string_literals(spark, docs):
+    """The SQL-text fast paths escape their literals for the default
+    parser. Under spark.sql.parser.escapedStringLiterals=true the same
+    text would parse to different regexes and stopwords, so each entry
+    point raises instead of silently tokenizing differently."""
+    from inbev_data_engineering_case_spark.operators.decontaminate import (
+        benchmark_ngram_hashes,
+        contamination_report,
+    )
+    from inbev_data_engineering_case_spark.operators.dedup import (
+        minhash_signatures,
+    )
+    from inbev_data_engineering_case_spark.operators.textops import (
+        score_documents,
+    )
+
+    conf = "spark.sql.parser.escapedStringLiterals"
+    calls = {
+        "score_documents": lambda: score_documents(docs),
+        "minhash_signatures": lambda: minhash_signatures(docs),
+        "benchmark_ngram_hashes": lambda: benchmark_ngram_hashes(docs),
+        "contamination_report": lambda: contamination_report(docs, docs),
+    }
+    spark.conf.set(conf, "true")
+    try:
+        for name, call in calls.items():
+            with pytest.raises(ValueError, match=f"{name}: {conf}=true"):
+                call()
+    finally:
+        spark.conf.unset(conf)
+    for call in calls.values():
+        call()  # the default parser builds every plan
