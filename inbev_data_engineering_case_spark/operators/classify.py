@@ -88,6 +88,38 @@ def _doc_buckets(
     )
 
 
+def _prior_folded_buckets(
+    docs: DataFrame, text_col: str, n_buckets: int, extra: tuple[str, ...]
+) -> DataFrame:
+    """``(extra..., bucket)`` per token occurrence, as ``_doc_buckets``
+    hashes it, plus one ``BIAS_BUCKET`` row per document: each token
+    array gains a NULL token that routes to the prior bucket. One
+    ``groupBy`` over these rows then yields the per-bucket counts and
+    the per-document priors together, with one exchange instead of a
+    second (global) aggregate for the priors. ``explode_outer`` keeps
+    the prior row of a NULL-text document, whose token array is NULL."""
+    cols = [F.col(c) for c in extra]
+    tok = F.col("_tok")
+    return (
+        docs.select(
+            *cols,
+            F.explode_outer(
+                F.concat(
+                    tokens(F.lower(F.col(text_col))),
+                    F.array(F.lit(None).cast("string")),
+                )
+            ).alias("_tok"),
+        )
+        .filter(tok.isNull() | (tok != ""))
+        .select(
+            *cols,
+            F.when(tok.isNull(), F.lit(BIAS_BUCKET).cast("bigint"))
+            .otherwise(portable_hash64(tok) % n_buckets)
+            .alias("bucket"),
+        )
+    )
+
+
 def train_bow_counts(
     labeled: DataFrame,
     label_col: str = "label",
@@ -108,26 +140,31 @@ def train_bow_counts(
     the historical corpus never re-read or re-tokenized. The same
     incremental-artifact discipline as the minhash signature and
     containment gram tables."""
-    lbl = F.col(label_col).cast("boolean")
-    occ = _doc_buckets(
+    spark = labeled.sparkSession
+    occ = _prior_folded_buckets(
         labeled.select(
-            F.col(id_col), F.col(text_col), lbl.alias("_y")
+            F.col(text_col), F.col(label_col).cast("boolean").alias("_y")
         ),
-        text_col, id_col, n_buckets, extra=("_y",),
+        text_col, n_buckets, extra=("_y",),
     )
-    counts = occ.groupBy("bucket").agg(
+    # a NULL-label prior row counts toward neither class, so this one
+    # literal row changes no count; it keeps the (BIAS, 0, 0) row on an
+    # empty input, which the grouped aggregate alone would not emit. One
+    # partition: a createDataFrame row would spread over every default
+    # slice, each one more map task of the aggregation
+    empty_prior = spark.range(1, numPartitions=1).select(
+        F.lit(None).cast("boolean").alias("_y"),
+        F.lit(BIAS_BUCKET).cast("bigint").alias("bucket"),
+    )
+    counts = occ.unionByName(empty_prior).groupBy("bucket").agg(
         F.count(F.when(F.col("_y"), 1)).alias("cp"),
         F.count(F.when(~F.col("_y"), 1)).alias("cn"),
     )
-    pri = labeled.select(lbl.alias("_y")).agg(
-        F.count(F.when(F.col("_y"), 1)).alias("cp"),
-        F.count(F.when(~F.col("_y"), 1)).alias("cn"),
-    ).select(F.lit(BIAS_BUCKET).cast("bigint").alias("bucket"), "cp", "cn")
-    meta = labeled.sparkSession.createDataFrame(
+    meta = spark.createDataFrame(
         [(META_BUCKET, int(n_buckets), 0)],
         "bucket bigint, cp bigint, cn bigint",
     )
-    return counts.unionByName(pri).unionByName(meta)
+    return counts.unionByName(meta)
 
 
 def merge_bow_counts(stored: DataFrame, delta: DataFrame) -> DataFrame:
@@ -628,24 +665,19 @@ def multiclass_bow_counts(
             )
         ),
     ).otherwise(cls_raw)
-    base = labeled.select(
-        F.col(id_col), F.col(text_col), cls.alias("_cls")
-    )
-    occ = _doc_buckets(base, text_col, id_col, n_buckets, extra=("_cls",))
-    counts = occ.groupBy("_cls", "bucket").agg(F.count("*").alias("c"))
-    pri = base.groupBy("_cls").agg(F.count("*").alias("c")).select(
-        "_cls", F.lit(BIAS_BUCKET).cast("bigint").alias("bucket"), "c"
+    counts = (
+        _prior_folded_buckets(
+            labeled.select(F.col(text_col), cls.alias("_cls")),
+            text_col, n_buckets, extra=("_cls",),
+        )
+        .groupBy("_cls", "bucket")
+        .agg(F.count("*").alias("c"))
     )
     meta = labeled.sparkSession.createDataFrame(
         [(None, META_BUCKET, int(n_buckets))],
         "_cls string, bucket bigint, c bigint",
     )
-    return (
-        counts.select("_cls", "bucket", "c")
-        .unionByName(pri.select("_cls", "bucket", "c"))
-        .unionByName(meta)
-        .withColumnRenamed("_cls", "class")
-    )
+    return counts.unionByName(meta).withColumnRenamed("_cls", "class")
 
 
 def merge_multiclass_bow_counts(

@@ -143,16 +143,24 @@ def tfidf_topk(
     term ASC); ties between equally-weighted terms are deterministic.
 
     The term-frequency table has two consumers (the scoring join and
-    the document-frequency aggregation); it is deliberately NOT
-    materialized (r15 optimization round): the duplicated subtree is a
-    split-only tokenize→count (no per-gram hashing), and the A/B
-    measured the materialization barrier a net LOSS on the tfidf bench
-    line (1.03s → 1.25s) — the barrier costs more than the light
-    re-evaluation it saves. Same verdict for the scan-parallelism
-    guard, whose repartition pins the whole chain at full task count.
+    the document-frequency aggregation) and ONE exchange: the ``df``
+    aggregate reads ``tf`` itself, so both consumers plan the same
+    tf aggregate and AQE reuses its shuffle instead of re-tokenizing
+    the corpus for a second ``(doc, term)`` exchange. It is not
+    materialized: a barrier measured slower than the shared exchange
+    on this split-only tokenize→count. ``df`` stays an aggregate plus a
+    join rather than ``count(*) over (partition by term)``: the window
+    form would save the join's jobs, but it sends every row of a hot
+    term to one task, while the join keeps AQE's skew-join splitting.
     """
     tf = term_frequencies(documents, id_col, text_col)
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    # tf >= 1 on every row, so this counts rows; it names tf because a
+    # count(*) (or count(tf), which the optimizer folds to count(1) as tf
+    # is non-null) lets column pruning drop tf from this branch, and the
+    # pruned aggregate no longer matches the join side's exchange
+    dfreq = tf.groupBy("term").agg(
+        F.count_if(F.col("tf") > 0).alias("df")
+    )
     n_docs = documents.agg(F.count("*").alias("_n"))
     scored = (
         tf.join(dfreq, "term")

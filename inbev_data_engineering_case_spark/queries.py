@@ -4785,7 +4785,9 @@ def _documents_file_stream(spark: SparkSession, sf_dir: str, prefix: str):
     "per invocation; the result frame materializes before the scratch "
     "dirs are removed. The replayed-batch and fresh-checkpoint guards "
     "are pytest-pinned (additive state cannot row-dedup a replay — "
-    "the snapshot records its producing (batch_id, checkpoint)). "
+    "each snapshot records its producing (batch_id, checkpoint, "
+    "n_buckets) in a meta.json sidecar that the guards read without a "
+    "Spark job). "
     "Late-r11 tail debut (family cover: q_stream_cms pins the "
     "in-window streamed-mergeable-partials contract, q_quality_score "
     "the text-scoring family).",
@@ -4854,7 +4856,9 @@ def q_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "META row pinning n_buckets). The binary twin's entire guard "
     "chain is shared (_run_stream_counts_update, defined once): "
     "(batch_id, checkpoint) replay skip, fresh-checkpoint refusal, "
-    "META-geometry refusal before commit. Fresh state/checkpoint per "
+    "n_buckets-geometry refusal before commit, all read from the "
+    "snapshot's meta.json sidecar without a Spark job. Fresh "
+    "state/checkpoint per "
     "invocation; results materialize before the scratch dirs are "
     "removed. R14 debut (family cover: q_stream_classifier runs the "
     "identical shared loop in-window, q_bow_multiclass the count/"

@@ -21,6 +21,7 @@ memory sink.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterator
 from typing import Any
@@ -2163,15 +2164,18 @@ def run_stream_classifier_update(
     containment grams, and the embedding pair.
 
     Replay discipline DIFFERS from the other artifact streams and is
-    the reason for the meta table: counts are ADDITIVE, so a replayed
-    batch (crash between snapshot commit and checkpoint write) cannot
-    be made idempotent by row-level dedup — re-merging would
+    the reason for the ``meta.json`` sidecar: counts are ADDITIVE, so a
+    replayed batch (crash between snapshot commit and checkpoint write)
+    cannot be made idempotent by row-level dedup — re-merging would
     double-count every token. Each snapshot therefore records the
     ``batch_id`` that produced it — together with the CHECKPOINT
     string (as passed, verbatim — keep one stable spelling across
-    runs), which is thereby part of the state's lineage — in a 1-row
-    ``meta`` table. A batch at or below the recorded id under the
-    SAME checkpoint is SKIPPED (its counts are already folded in); a
+    runs), which is thereby part of the state's lineage, and
+    ``n_buckets`` — in a ``meta.json`` file beside ``counts``, published
+    by the same atomic rename. The guards read that file on the
+    driver, so they launch no Spark job: a replayed batch is skipped
+    before its input is even cut. A batch at or below the recorded id
+    under the SAME checkpoint is SKIPPED (its counts are already folded in); a
     DIFFERENT checkpoint against existing state RAISES, because a
     fresh checkpoint restarts batch ids at 0 and the skip guard would
     otherwise silently drop genuinely new batches (the other artifact
@@ -2183,10 +2187,12 @@ def run_stream_classifier_update(
     batch (poison-pill rationale).
 
     Geometry refusal before commit (the embedding stream's
-    discipline): ``n_buckets`` defaults to the stored META row's value
+    discipline): ``n_buckets`` defaults to the sidecar's value
     when state exists (``classify.DEFAULT_N_BUCKETS`` on the first
     generation); passing a different explicit value raises — a silent
-    mismatch would hash every future token into the wrong space.
+    mismatch would hash every future token into the wrong space. A
+    state dir whose latest snapshot has no ``meta.json`` (the older
+    ``meta`` parquet layout) raises ``ValueError`` naming the dir.
 
     One-class batches are fine at the counts level (the priors row
     simply accumulates one side); ``bow_weights_from_counts`` raises
@@ -2213,10 +2219,41 @@ def run_stream_classifier_update(
         id_col=id_col,
         train=train,
         merge=merge_bow_counts,
-        meta_count_col="cp",
         n_buckets=n_buckets,
         keep_snapshots=keep_snapshots,
     )
+
+
+COUNTS_META = "meta.json"
+
+
+def _latest_counts_meta(
+    state_dir: str, prefix: str, fn_name: str
+) -> tuple[str | None, dict | None]:
+    """The latest committed counts snapshot and its
+    ``{"batch_id", "checkpoint", "n_buckets"}`` sidecar, read as a plain
+    file (no Spark job), or ``(None, None)`` before the first commit. A
+    snapshot without the sidecar was written by the older layout (a
+    1-row ``meta`` parquet table); it raises rather than passing for a
+    first generation, which would silently restart the counts from
+    zero."""
+    from inbev_data_engineering_case_spark.layers import latest_snapshot
+
+    try:
+        snap = latest_snapshot(state_dir, prefix)
+    except FileNotFoundError:  # first generation ever
+        return None, None
+    try:
+        with open(os.path.join(snap, COUNTS_META)) as f:
+            return snap, json.load(f)
+    except FileNotFoundError:
+        raise ValueError(
+            f"{fn_name}: state dir {state_dir!r} holds snapshot"
+            f" {os.path.basename(snap)!r} without a {COUNTS_META} sidecar"
+            " (the older layout recorded batch_id/checkpoint in a meta"
+            " parquet table); start a fresh state_dir and re-stream the"
+            " labeled history"
+        ) from None
 
 
 def _run_stream_counts_update(
@@ -2230,29 +2267,28 @@ def _run_stream_counts_update(
     id_col: str,
     train,
     merge,
-    meta_count_col: str,
     n_buckets: int | None,
     keep_snapshots: int | None,
 ) -> dict[str, int]:
     """The additive-count artifact streams' ONE guard chain + commit
     loop (binary and multiclass twins delegate here, so checkpoint
     lineage, replay skip, geometry refusal, and snapshot discipline
-    are defined once): per batch — null-filter + per-batch id dedup,
-    cut once with its row count observed (an empty batch stops here) →
-    checkpoint-lineage refusal → geometry refusal (the stored META
-    row's ``meta_count_col`` carries n_buckets) → replay skip →
-    train-on-batch → additive merge → one atomic snapshot with the
-    ``(batch_id, checkpoint)`` meta row."""
+    are defined once). Per batch: checkpoint-lineage refusal → geometry
+    refusal → replay skip, all read from the parent snapshot's
+    ``meta.json`` sidecar (a file read, no Spark job, so a replayed
+    batch launches none) → null-filter + per-batch id dedup, cut once
+    with its row count observed (an empty batch stops here) →
+    train-on-batch → additive merge → one atomic snapshot holding
+    ``counts`` and the ``{"batch_id", "checkpoint", "n_buckets"}``
+    sidecar, published together by ``commit_snapshot``'s rename."""
     from inbev_data_engineering_case_spark.layers import (
         commit_snapshot,
-        latest_snapshot,
         next_run_after,
         prune_snapshots,
         run_id_of,
     )
     from inbev_data_engineering_case_spark.operators.classify import (
         DEFAULT_N_BUCKETS,
-        META_BUCKET,
     )
 
     spark = labeled_stream.sparkSession
@@ -2262,32 +2298,22 @@ def _run_stream_counts_update(
         null_guard = cond if null_guard is None else (null_guard & cond)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = _cut_nonempty(
-            batch_df.select(*select_cols)
-            .filter(null_guard)
-            .dropDuplicates([id_col])
-        )
-        if batch is None:
-            return
         # the RAW checkpoint string is the lineage key: abspath would
         # make it cwd-dependent for relative paths and mangle URI
         # checkpoints (s3a://...), spuriously refusing valid resumes.
         # Pass the same spelling across runs — the refusal message
         # shows both strings when they differ.
         ckpt_key = checkpoint
-        try:
-            parent_snap = latest_snapshot(state_dir, prefix)
-            stored = read_parquet(
-                spark, os.path.join(parent_snap, "counts")
-            )
-            meta_row = read_parquet(
-                spark, os.path.join(parent_snap, "meta")
-            ).first()
-            if meta_row["checkpoint"] != ckpt_key:
+        parent_snap, meta = _latest_counts_meta(state_dir, prefix, fn_name)
+        if parent_snap is None:
+            stored, parent = None, None
+            buckets = n_buckets or DEFAULT_N_BUCKETS
+        else:
+            if meta["checkpoint"] != ckpt_key:
                 raise ValueError(
                     f"{fn_name}: stored counts were"
                     f" maintained under checkpoint"
-                    f" {meta_row['checkpoint']!r} but this stream runs"
+                    f" {meta['checkpoint']!r} but this stream runs"
                     f" under {ckpt_key!r} — batch ids from a fresh"
                     " checkpoint restart at 0, so the replay guard"
                     " would silently skip new batches; keep the"
@@ -2298,35 +2324,41 @@ def _run_stream_counts_update(
             # with a mismatched explicit n_buckets must raise on its
             # very first (possibly replayed) batch, not only once a
             # genuinely new batch arrives
-            stored_b = stored.filter(
-                F.col("bucket") == META_BUCKET
-            ).first()[meta_count_col]
-            if n_buckets is not None and n_buckets != stored_b:
+            buckets = int(meta["n_buckets"])
+            if n_buckets is not None and n_buckets != buckets:
                 raise ValueError(
                     f"{fn_name}: stored counts were"
-                    f" hashed into n_buckets={stored_b} but this stream"
+                    f" hashed into n_buckets={buckets} but this stream"
                     f" is configured n_buckets={n_buckets} — a silent"
                     " mismatch would hash every future token into the"
                     " wrong space; match the geometry or start a fresh"
                     " state_dir"
                 )
-            if batch_id <= meta_row["batch_id"]:
+            if batch_id <= meta["batch_id"]:
                 return  # replayed batch: its counts are already folded in
+            stored = read_parquet(
+                spark, os.path.join(parent_snap, "counts")
+            )
             parent = run_id_of(parent_snap, prefix)
-            buckets = int(stored_b)
-        except FileNotFoundError:  # first generation ever
-            stored, parent = None, None
-            buckets = n_buckets or DEFAULT_N_BUCKETS
+        batch = _cut_nonempty(
+            batch_df.select(*select_cols)
+            .filter(null_guard)
+            .dropDuplicates([id_col])
+        )
+        if batch is None:
+            return
         delta = train(batch, buckets)
         counts = merge(stored, delta) if stored is not None else delta
-        meta = spark.createDataFrame(
-            [(int(batch_id), ckpt_key)],
-            "batch_id bigint, checkpoint string",
-        )
+        sidecar = {
+            "batch_id": int(batch_id),
+            "checkpoint": ckpt_key,
+            "n_buckets": buckets,
+        }
 
         def write_all(staging: str) -> None:
             write_parquet(counts, os.path.join(staging, "counts"))
-            write_parquet(meta, os.path.join(staging, "meta"))
+            with open(os.path.join(staging, COUNTS_META), "w") as f:
+                json.dump(sidecar, f)
 
         commit_snapshot(
             state_dir,
@@ -2338,6 +2370,8 @@ def _run_stream_counts_update(
         if keep_snapshots:
             prune_snapshots(state_dir, prefix, keep_snapshots)
 
+    # refuse an older-layout state dir before the stream starts
+    _latest_counts_meta(state_dir, prefix, fn_name)
     q = (
         labeled_stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", checkpoint)
@@ -2401,9 +2435,10 @@ def run_stream_multiclass_update(
     cannot row-dedup a replay, so each snapshot records its producing
     ``(batch_id, checkpoint)`` and a batch at or below the recorded id
     under the SAME checkpoint is skipped, while a different checkpoint
-    against existing state raises; the stored META row (NULL class,
-    ``c`` = n_buckets) pins the hash geometry and an explicit mismatch
-    raises before any commit; NULL-text/label rows drop per batch and
+    against existing state raises; the sidecar's ``n_buckets`` pins the
+    hash geometry and an explicit mismatch raises before any commit
+    (the guards read ``meta.json``, not a Spark table, and launch no
+    job); NULL-text/label rows drop per batch and
     duplicate ids within a batch collapse first. New classes simply
     appear as new (class, bucket) rows in the fold — K is data, not
     geometry. One-class history is fine at the counts level;
@@ -2430,7 +2465,6 @@ def run_stream_multiclass_update(
         id_col=id_col,
         train=train,
         merge=merge_multiclass_bow_counts,
-        meta_count_col="c",
         n_buckets=n_buckets,
         keep_snapshots=keep_snapshots,
     )

@@ -4,7 +4,9 @@ known-session fixture for the stateful sessionizer."""
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import time
 from datetime import datetime, timedelta
 
@@ -1709,7 +1711,6 @@ def test_stream_classifier_counts_maintenance(spark, tmp_path):
     # REPLAY (checkpoint committed offsets, state already folded): the
     # check runs before the batch-id skip, so the misconfiguration
     # raises on restart rather than lying dormant until new data
-    import os
     import time
 
     def wait_queries_drained():
@@ -1726,18 +1727,7 @@ def test_stream_classifier_counts_maintenance(spark, tmp_path):
     run_stream_classifier_update(  # drain the pending batch cleanly
         stream(), state, ckpt, n_buckets=1 << 12
     )
-    commits = sorted(
-        f
-        for f in os.listdir(os.path.join(ckpt, "commits"))
-        if not f.startswith(".")
-    )
-    # force a replay: remove the newest commit marker AND its checksum
-    # sidecar (an orphaned .crc makes Spark's checksum filesystem treat
-    # the next commit write as a concurrent query)
-    os.remove(os.path.join(ckpt, "commits", commits[-1]))
-    crc = os.path.join(ckpt, "commits", f".{commits[-1]}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    _drop_last_commit(ckpt)  # force a replay
     with pytest.raises(Exception, match="n_buckets"):
         run_stream_classifier_update(
             stream(), state, ckpt, n_buckets=1 << 13
@@ -2340,3 +2330,96 @@ def test_stream_counts_state_matches_batch_twins(spark, tmp_path, policy):
     assert clf == rows_of(train_bow_counts(labeled, n_buckets=buckets))
     classed = docs.select("doc_id", "text", F.col("lang").alias("label"))
     assert mclf == rows_of(multiclass_bow_counts(classed, n_buckets=buckets))
+
+
+def _last_job_id(spark) -> int:
+    """The newest job id Spark has recorded, once the listener bus has
+    delivered every event; the difference of two readings counts every
+    job in between, a streaming query's micro-batch jobs included."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def _drop_last_commit(ckpt) -> None:
+    """Force the stream to replay its newest micro-batch on restart:
+    remove the newest commit marker and its checksum sidecar (an orphaned
+    .crc makes Spark's checksum filesystem treat the next commit write as
+    a concurrent query)."""
+    commits = os.path.join(ckpt, "commits")
+    newest = max(
+        (f for f in os.listdir(commits) if not f.startswith(".")), key=int
+    )
+    os.remove(os.path.join(commits, newest))
+    crc = os.path.join(commits, f".{newest}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def test_stream_counts_guards_launch_no_job(spark, tmp_path):
+    """The count stream's lineage, geometry and replay guards read the
+    parent snapshot's meta.json sidecar on the driver and run before the
+    batch is cut: a micro-batch that merges into existing state stays
+    within 8 jobs (cut, train, merge and the counts write), and a replayed
+    micro-batch launches no Spark job at all."""
+    from inbev_data_engineering_case_spark.streaming.events import (
+        read_classifier_counts,
+        run_stream_classifier_update,
+    )
+
+    rows = [(i, f"tok{i % 5} word{i % 3}", i % 2 == 0) for i in range(20)]
+    feed = tmp_path / "feed"
+    src = stage_batches(
+        spark, feed, [rows[:10], rows[10:]],
+        "doc_id bigint, text string, label boolean",
+    )
+    held = tmp_path / "held.parquet"
+    os.rename(feed / "file_1.parquet", held)
+    state, ckpt = str(tmp_path / "clf"), tmp_path / "clf_ckpt"
+
+    def run() -> int:
+        before = _last_job_id(spark)
+        run_stream_classifier_update(src, state, str(ckpt), n_buckets=64)
+        return _last_job_id(spark) - before
+
+    run()  # the first generation
+    os.rename(held, feed / "file_1.parquet")
+    assert run() <= 8  # one micro-batch merged into the stored counts
+    snap = max(n for n in os.listdir(state) if n.startswith("clfart"))
+    with open(os.path.join(state, snap, "meta.json")) as f:
+        assert json.load(f) == {
+            "batch_id": 1, "checkpoint": str(ckpt), "n_buckets": 64,
+        }
+    counts = sorted(map(tuple, read_classifier_counts(spark, state).collect()))
+
+    _drop_last_commit(ckpt)
+    assert run() == 0  # the replayed batch is skipped before its cut
+    assert sorted(
+        map(tuple, read_classifier_counts(spark, state).collect())
+    ) == counts
+
+
+def test_stream_counts_refuse_state_without_sidecar(spark, tmp_path):
+    """A state dir whose latest snapshot has no meta.json (the older
+    layout kept batch_id/checkpoint in a ``meta`` parquet table) raises a
+    ValueError naming the dir before the stream starts. Taking it for a
+    first generation would silently restart the counts from zero."""
+    from inbev_data_engineering_case_spark.streaming.events import (
+        run_stream_classifier_update,
+    )
+
+    ddl = "doc_id bigint, text string, label boolean"
+    src = stage_batches(
+        spark, tmp_path / "feed", [[(1, "a b", True), (2, "c", False)]], ddl
+    )
+    state, ckpt = str(tmp_path / "clf"), str(tmp_path / "clf_ckpt")
+    run_stream_classifier_update(src, state, ckpt, n_buckets=64)
+    (snap,) = [n for n in os.listdir(state) if n.startswith("clfart")]
+    os.remove(os.path.join(state, snap, "meta.json"))
+    spark.createDataFrame(
+        [(0, ckpt)], "batch_id bigint, checkpoint string"
+    ).write.parquet(os.path.join(state, snap, "meta"))
+    with pytest.raises(ValueError, match=re.escape(repr(state))):
+        run_stream_classifier_update(src, state, ckpt, n_buckets=64)
+    assert not spark.streams.active

@@ -4934,6 +4934,54 @@ def test_bow_classifier_incremental_counts_parity(spark):
         bow_weights_from_counts(bad)
 
 
+def test_bow_counts_priors_fold_edge_inputs(spark):
+    """Both count twins fold the per-document priors into the bucket
+    aggregation (one NULL token per document routes to BIAS_BUCKET). Edge
+    inputs keep their rows: an empty frame still yields the binary
+    (BIAS, 0, 0) row and the multiclass META row alone; a NULL-text or
+    empty-text document counts in its class prior with no bucket row; a
+    NULL binary label counts in neither class."""
+    from inbev_data_engineering_case_spark.operators.classify import (
+        BIAS_BUCKET,
+        META_BUCKET,
+        multiclass_bow_counts,
+        train_bow_counts,
+    )
+
+    binary = spark.createDataFrame(
+        [(1, "a b", True), (2, None, False), (3, "", True), (4, "b", None)],
+        "doc_id long, text string, label boolean",
+    )
+    rows = {r["bucket"]: (r["cp"], r["cn"]) for r in train_bow_counts(
+        binary, n_buckets=64
+    ).collect()}
+    assert rows.pop(BIAS_BUCKET) == (2, 1)
+    assert rows.pop(META_BUCKET) == (64, 0)
+    assert sum(cp for cp, _ in rows.values()) == 2  # doc 1's two tokens
+    assert sum(cn for _, cn in rows.values()) == 0
+    assert sorted(
+        map(tuple, train_bow_counts(binary.limit(0), n_buckets=64).collect())
+    ) == [(META_BUCKET, 64, 0), (BIAS_BUCKET, 0, 0)]
+
+    multi = spark.createDataFrame(
+        [(1, "a b", "x"), (2, None, "y"), (3, "", "x")],
+        "doc_id long, text string, label string",
+    )
+    got = multiclass_bow_counts(multi, n_buckets=64).collect()
+    priors = {r["class"]: r["c"] for r in got if r["bucket"] == BIAS_BUCKET}
+    assert priors == {"x": 2, "y": 1}
+    real = [r for r in got if r["bucket"] >= 0]
+    assert {r["class"] for r in real} == {"x"}
+    assert sum(r["c"] for r in real) == 2
+    assert [tuple(r) for r in got if r["bucket"] == META_BUCKET] == [
+        (None, META_BUCKET, 64)
+    ]
+    assert [
+        tuple(r)
+        for r in multiclass_bow_counts(multi.limit(0), n_buckets=64).collect()
+    ] == [(None, META_BUCKET, 64)]
+
+
 def test_curate_corpus_split_from_same_components_pass(spark):
     """curate_corpus(split_weights=...) emits the leakage-safe split
     column from the SAME connected-components pass the drop list came

@@ -9,10 +9,18 @@ value hash. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, whatever the working dir: the
+# driver imports it from here, and the Python workers the session starts
+# inherit PYTHONPATH (UDF lines import the package on the executors)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def main() -> int:
