@@ -163,11 +163,14 @@ def commit_snapshot(
     retry racing its original is the realistic case — must not interleave
     snapshot advancement and silently lose one delta.
 
-    Protocol:
+    The primitive under ``advance_snapshot``, which every package
+    writer publishes through. Protocol:
 
     1. The caller reads the CURRENT latest snapshot, computes its new
        state from it, and passes that snapshot's run id as
-       ``expected_parent`` (None for the first snapshot ever).
+       ``expected_parent`` (None for the first snapshot ever) —
+       ``advance_snapshot`` derives it, and the next run id, from the
+       path the writer read.
     2. ``write_fn(staging_dir)`` creates and fills the hidden staging
        dir — a Spark write does both (its default ErrorIfExists mode is
        why the dir is NOT pre-created); plain-file writers
@@ -268,38 +271,40 @@ def commit_snapshot(
     return final
 
 
-def next_snapshot_run(base_dir: str, prefix: str) -> tuple[str | None, str]:
-    """(expected_parent, next run id) for a ``commit_snapshot`` of a
-    rebuild-style artifact (the materialized text/ANN indexes): run ids
-    are zero-padded integers, so lexicographic snapshot order == build
-    order with no wall-clock dependence.
+def advance_snapshot(
+    base_dir: str,
+    prefix: str,
+    parent_snap: str | None,
+    write_fn,
+    keep_snapshots: int | None = None,
+) -> str:
+    """Advance a delta-maintained snapshot chain by one generation — the
+    one place the text/ANN index updaters, the state streams and the
+    backfills publish through.
 
-    Use this ONLY when the staged state is parent-independent (a full
-    rebuild). A delta writer that READ a specific parent snapshot must
-    derive ``expected_parent`` from that path via ``run_id_of`` — a
-    second directory walk here could see a commit that landed after the
-    read, and the expected-parent check would then pass against a
-    parent the delta was NOT computed from (silently dropping the
-    interleaved writer's delta)."""
-    try:
-        parent = _parent_run_id(latest_snapshot(base_dir, prefix), prefix)
-    except FileNotFoundError:
-        parent = None
-    return parent, next_run_after(parent)
-
-
-def run_id_of(snapshot_path: str, prefix: str) -> str:
-    """Run id of a resolved snapshot path — the value a delta writer
-    passes as ``expected_parent`` so the commit is pinned to the exact
-    generation it read (see ``next_snapshot_run``). Delegates to the
-    same parser ``commit_snapshot`` uses for its own parent resolution,
-    so the two can never diverge on snapshot naming."""
-    return _parent_run_id(snapshot_path, prefix)
-
-
-def next_run_after(parent: str | None) -> str:
-    """Next zero-padded integer run id after ``parent``."""
-    return f"{(int(parent) if parent else 0) + 1:012d}"
+    ``parent_snap`` is the snapshot path the writer READ (None for the
+    first generation ever). The expected parent and the next run id both
+    derive from that path, never from a second directory walk: a commit
+    landing between the read and a re-walk would otherwise pass the
+    expected-parent check against a generation this delta was NOT
+    computed from, silently dropping the interleaved writer's delta.
+    A stale ``parent_snap`` (or None on a non-empty chain) therefore
+    raises ``SnapshotConflictError`` — recompute against the new latest
+    and retry. On success, all but the newest ``keep_snapshots``
+    generations are pruned (None keeps all). Run ids are zero-padded
+    integers, so lexicographic snapshot order == commit order with no
+    wall-clock dependence. Returns the published path."""
+    parent = _parent_run_id(parent_snap, prefix)
+    path = commit_snapshot(
+        base_dir,
+        f"{(int(parent) if parent else 0) + 1:012d}",
+        write_fn,
+        expected_parent=parent,
+        prefix=prefix,
+    )
+    if keep_snapshots:
+        prune_snapshots(base_dir, prefix, keep_snapshots)
+    return path
 
 
 def commit_snapshot_with_retry(
@@ -309,29 +314,27 @@ def commit_snapshot_with_retry(
     attempts: int = 3,
     keep_snapshots: int | None = None,
 ) -> str:
-    """``commit_snapshot`` for PARENT-INDEPENDENT publishes (full
+    """``advance_snapshot`` for PARENT-INDEPENDENT publishes (full
     rebuilds): on a lost race the staged state is still valid against
-    the new parent, so just re-resolve and retry with a fresh higher
-    run id. Delta writers must NOT use this — their state depends on
-    the parent they read, so a conflict means recompute, not retry."""
+    the new parent, so just re-resolve the latest snapshot and retry.
+    The only path that re-resolves; delta writers must NOT use it —
+    their state depends on the parent they read, so a conflict means
+    recompute, not retry."""
     for _attempt in range(attempts):
-        parent, run_id = next_snapshot_run(base_dir, prefix)
         try:
-            path = commit_snapshot(
-                base_dir, run_id, write_fn, expected_parent=parent,
-                prefix=prefix,
+            parent_snap = latest_snapshot(base_dir, prefix)
+        except FileNotFoundError:
+            parent_snap = None
+        try:
+            return advance_snapshot(
+                base_dir, prefix, parent_snap, write_fn, keep_snapshots
             )
-            break
         except SnapshotConflictError:
             continue
-    else:
-        raise SnapshotConflictError(
-            f"lost the '{prefix}' commit race {attempts} times under "
-            f"{base_dir}"
-        )
-    if keep_snapshots:
-        prune_snapshots(base_dir, prefix, keep_snapshots)
-    return path
+    raise SnapshotConflictError(
+        f"lost the '{prefix}' commit race {attempts} times under "
+        f"{base_dir}"
+    )
 
 
 def link_parquet_files(src_dir: str, dst_dir: str) -> int:

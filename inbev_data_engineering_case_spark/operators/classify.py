@@ -53,6 +53,13 @@ META_BUCKET = -3  # weight_micro carries n_buckets (scoring guard)
 DEFAULT_N_BUCKETS = 1 << 18
 
 
+def _literal_rows(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """A few literal model rows in ONE partition: ``createDataFrame``
+    parallelizes over every default slice, and each (mostly empty) slice
+    would be one more task of whatever stage the rows are unioned into."""
+    return spark.createDataFrame(rows, schema).coalesce(1)
+
+
 def _doc_buckets(
     docs: DataFrame, text_col: str, id_col: str, n_buckets: int,
     extra: tuple[str, ...] = (),
@@ -160,8 +167,8 @@ def train_bow_counts(
         F.count(F.when(F.col("_y"), 1)).alias("cp"),
         F.count(F.when(~F.col("_y"), 1)).alias("cn"),
     )
-    meta = spark.createDataFrame(
-        [(META_BUCKET, int(n_buckets), 0)],
+    meta = _literal_rows(
+        spark, [(META_BUCKET, int(n_buckets), 0)],
         "bucket bigint, cp bigint, cn bigint",
     )
     return counts.unionByName(meta)
@@ -248,7 +255,8 @@ def bow_weights_from_counts(
         )
         * micro
     )
-    specials_df = counts.sparkSession.createDataFrame(
+    specials_df = _literal_rows(
+        counts.sparkSession,
         [
             (BIAS_BUCKET, int(bias)),
             (DEFAULT_BUCKET, int(default)),
@@ -673,8 +681,8 @@ def multiclass_bow_counts(
         .groupBy("_cls", "bucket")
         .agg(F.count("*").alias("c"))
     )
-    meta = labeled.sparkSession.createDataFrame(
-        [(None, META_BUCKET, int(n_buckets))],
+    meta = _literal_rows(
+        labeled.sparkSession, [(None, META_BUCKET, int(n_buckets))],
         "_cls string, bucket bigint, c bigint",
     )
     return counts.unionByName(meta).withColumnRenamed("_cls", "class")
@@ -798,8 +806,8 @@ def multiclass_bow_weights_from_counts(
             * micro
         ).cast("bigint").alias("weight_micro"),
     )
-    meta_row = counts.sparkSession.createDataFrame(
-        [(None, META_BUCKET, int(n_buckets))],
+    meta_row = _literal_rows(
+        counts.sparkSession, [(None, META_BUCKET, int(n_buckets))],
         "class string, bucket bigint, weight_micro bigint",
     )
     return (
@@ -1040,8 +1048,8 @@ def train_and_score_bow_multiclass(
     pri = base.groupBy("_cls").agg(F.count("*").alias("c")).select(
         "_cls", F.lit(BIAS_BUCKET).cast("bigint").alias("bucket"), "c"
     )
-    meta = labeled.sparkSession.createDataFrame(
-        [(None, META_BUCKET, int(n_buckets))],
+    meta = _literal_rows(
+        labeled.sparkSession, [(None, META_BUCKET, int(n_buckets))],
         "_cls string, bucket bigint, c bigint",
     )
     model = multiclass_bow_weights_from_counts(

@@ -1024,7 +1024,10 @@ def _geometry_guarded(df, expected: dict[str, int], carrier: str, op: str):
     )
 
 
-def _delta_star_links(hot, value_col: str, new_ids, measure, out_name: str):
+def _delta_star_links(
+    hot, new_ids, value_col: str | None = None, measure=None,
+    out_name: str | None = None,
+):
     """Star links of COMBINED-population hot buckets that touch a new
     row — the shared hot-bucket tail of the incremental simhash and
     embedding twins. The representative is the combined min id (so a
@@ -1032,12 +1035,17 @@ def _delta_star_links(hot, value_col: str, new_ids, measure, out_name: str):
     full recompute would), and "touches new" is an OR over two ids —
     expressed as two equi left-joins against a marker frame, never an
     OR-condition join (which would plan as a nested loop).
-    ``measure(rep_val, val)`` produces the emitted similarity/distance
-    column named ``out_name``."""
-    reps = hot.groupBy("bucket").agg(
-        F.min("id").alias("rep_id"),
-        F.min_by(value_col, "id").alias("_rep_val"),
-    )
+    ``measure(rep_val, val)`` over ``value_col`` produces the emitted
+    similarity/distance column named ``out_name``; without a
+    ``value_col`` the links are id-only ``(id_a, id_b)``."""
+    aggs = [F.min("id").alias("rep_id")]
+    out = [F.col("rep_id").alias("id_a"), F.col("id").alias("id_b")]
+    if value_col is not None:
+        aggs.append(F.min_by(value_col, "id").alias("_rep_val"))
+        out.append(
+            measure(F.col("_rep_val"), F.col(value_col)).alias(out_name)
+        )
+    reps = hot.groupBy("bucket").agg(*aggs)
     marks = new_ids.withColumn("_new", F.lit(True))
     hot_m = hot.join(marks, "id", "left").withColumnRenamed(
         "_new", "_member_new"
@@ -1052,66 +1060,8 @@ def _delta_star_links(hot, value_col: str, new_ids, measure, out_name: str):
             F.col("_member_new").isNotNull()
             | F.col("_rep_new").isNotNull()
         )
-        .select(
-            F.col("rep_id").alias("id_a"),
-            F.col("id").alias("id_b"),
-            measure(F.col("_rep_val"), F.col(value_col)).alias(out_name),
-        )
+        .select(*out)
     )
-
-
-def build_embedding_sig_table(
-    emb: DataFrame,
-    num_planes: int = 8,
-    n_probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``(seed, id, v, bucket, num_planes, n_probes)`` — the sign-LSH state
-    ``embedding_near_dup_pairs`` buckets on, one row per (probe seed,
-    vector), with the vector carried so the delta path can run the
-    cosine verify without re-reading the corpus embedding table
-    (``build_gram_table``'s stored-state contract applied to vectors).
-    Persist bucketed by ``(seed, bucket)`` at scale so the daily delta
-    join is bucket-local.
-
-    State size: the vector rides EVERY probe row, so the table is
-    ~``n_probes`` × the embedding bytes. At multi-probe production
-    scale use ``build_embedding_sig_tables_normalized`` (persists
-    ``(id, v)`` once + per-seed ``(seed, id, bucket, …)`` rows) with
-    ``incremental_embedding_near_dup_normalized``, which consumes the
-    pair NATIVELY — candidates form id-only and the vector payload
-    joins only for survivors (parity-tested at ``n_probes>1``;
-    measured 2.7× smaller state and ~120× less candidate-stage
-    shuffle at n_probes=3 — see the normalized builder's and native
-    operator's docstrings). ``join_embedding_sig_tables`` remains for
-    reassembling this denormalized shape when needed."""
-    from inbev_data_engineering_case_spark.operators.similarity import (
-        _vec_dim,
-        signlsh_bucket,
-    )
-
-    dim = _vec_dim(emb, vec_col)  # literal plane weights (r15)
-    per = [
-        emb.select(
-            F.lit(seed).alias("seed"),
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
-            ).alias("bucket"),
-            # build geometry rides the state (the CMS wrong-geometry
-            # discipline): the incremental path raises in-plan on a
-            # mismatch instead of silently losing recall
-            F.lit(num_planes).alias("num_planes"),
-            F.lit(n_probes).alias("n_probes"),
-        )
-        for seed in range(n_probes)
-    ]
-    out = per[0]
-    for p in per[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def build_embedding_sig_tables_normalized(
@@ -1121,24 +1071,24 @@ def build_embedding_sig_tables_normalized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
-    """The multi-probe storage split ``build_embedding_sig_table``'s
-    docstring promises: ``(vectors, buckets)`` where ``vectors`` is
-    ``(id, v)`` — each embedding stored ONCE — and ``buckets`` is the
-    per-seed ``(seed, id, bucket, num_planes, n_probes)`` rows (8-byte
-    bucket + geometry per probe). ``join_embedding_sig_tables`` joins
-    them back into the exact denormalized shape
-    ``incremental_embedding_near_dup`` consumes (parity-tested), so
-    normalization is a storage choice, not an API change.
+    """The stored sign-LSH state ``embedding_near_dup_pairs`` buckets
+    on, as the pair ``incremental_embedding_near_dup_normalized``
+    consumes: ``vectors`` is ``(id, v)`` — each embedding stored ONCE —
+    and ``buckets`` is the per-seed ``(seed, id, bucket, num_planes,
+    n_probes)`` rows (8-byte bucket + geometry per probe; the geometry
+    rides the state so a mismatched delta call raises in-plan instead of
+    silently losing recall). ``build_gram_table``'s stored-state
+    contract applied to vectors: the cosine verify needs no corpus
+    re-read.
 
-    Why: in the denormalized table the vector rides EVERY probe row,
-    so state grows ~linearly in ``n_probes``. Measured on the sf0.01
+    Why two tables: a single table carrying the vector on EVERY probe
+    row grows ~linearly in ``n_probes``. Measured on the sf0.01
     embeddings fixture (500 × 64-float vectors, snappy parquet,
-    n_probes=3): denormalized 0.40 MB vs 0.15 MB normalized (0.13 MB
-    vectors + 0.02 MB buckets) — 2.7× smaller, converging to
-    ~``n_probes``× as probes grow. Persist BOTH tables bucketed by
-    ``id`` so the join-back is bucket-local (no shuffle); the
-    downstream candidate join then exchanges by (seed, bucket) exactly
-    as the denormalized path does."""
+    n_probes=3): 0.40 MB for that one-table form vs 0.15 MB here
+    (0.13 MB vectors + 0.02 MB buckets) — 2.7× smaller, converging to
+    ~``n_probes``× as probes grow. Persist the bucket table bucketed by
+    ``(seed, bucket)`` at scale so the daily delta join is
+    bucket-local."""
     from inbev_data_engineering_case_spark.operators.similarity import (
         _vec_dim,
         signlsh_bucket,
@@ -1166,128 +1116,6 @@ def build_embedding_sig_tables_normalized(
     return vectors, buckets
 
 
-def join_embedding_sig_tables(
-    vectors: DataFrame, buckets: DataFrame
-) -> DataFrame:
-    """Reassemble the normalized ``(vectors, buckets)`` pair into the
-    denormalized ``(seed, id, v, bucket, num_planes, n_probes)`` shape
-    the incremental path consumes. One equi join on ``id`` — bucket
-    both tables by ``id`` at write time and it is co-located."""
-    return buckets.join(vectors, "id").select(
-        "seed", "id", "v", "bucket", "num_planes", "n_probes"
-    )
-
-
-def incremental_embedding_near_dup(
-    stored_sigs: DataFrame,
-    new_emb: DataFrame,
-    threshold: float = 0.9,
-    num_planes: int = 8,
-    n_probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """Daily-crawl embedding near-dup — the delta form of
-    ``embedding_near_dup_pairs``: only the NEW vectors hash; the
-    historical corpus participates through its stored sign-LSH table
-    (``build_embedding_sig_table`` output), and candidates form as
-    (new-side sigs) × (bucket-mates) — the stored×stored quadratic
-    never forms.
-
-    Returns exactly the ``embedding_near_dup_pairs(stored ∪ new)``
-    rows in which at least one side is new (full-batch parity,
-    identity-tested): the hot-bucket guard is evaluated over the
-    COMBINED bucket population, and a hot bucket's star links use the
-    combined min-id representative — precisely as the full recompute
-    would (stale-hot star links not involving a new vector are the
-    full batch's new-free rows and are excluded by definition).
-
-    Ids must be disjoint between stored and new (a re-embedded doc is
-    delete + insert, ``curate_incremental``'s contract). A stored
-    table built with different ``num_planes``/``n_probes`` raises
-    IN-PLAN (the geometry columns ride the state): the seeds are
-    deterministic, so a silent mismatch would mis-bucket every stored
-    row and lose recall without any error.
-    """
-    from inbev_data_engineering_case_spark.functions import cosine
-
-    new_sigs = materialize(
-        build_embedding_sig_table(
-            new_emb, num_planes, n_probes, id_col, vec_col
-        ).select("seed", "id", "v", "bucket"),
-        eager=False,
-    )
-    new_ids = new_emb.select(F.col(id_col).alias("id"))
-    stored_guarded = stored_sigs.select(
-        "seed",
-        "id",
-        "v",
-        _geometry_guarded(
-            stored_sigs,
-            {"num_planes": num_planes, "n_probes": n_probes},
-            "bucket",
-            "incremental_embedding_near_dup",
-        ),
-    )
-    per_probe = []
-    for seed in range(n_probes):
-        sigs = materialize(
-            stored_guarded.filter(F.col("seed") == seed)
-            .select("id", "v", "bucket")
-            .unionByName(
-                new_sigs.filter(F.col("seed") == seed).select(
-                    "id", "v", "bucket"
-                )
-            ),
-            eager=False,
-        )
-        if max_bucket_size is not None:
-            cold, hot = _split_hot_buckets(
-                sigs, ["bucket"], max_bucket_size
-            )
-        else:
-            cold, hot = sigs, None
-        new_cold = cold.join(new_ids, "id", "left_semi")
-        stored_cold = cold.join(new_ids, "id", "left_anti")
-        sim = F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
-        # a new (covers new-new and new<stored), then stored<new —
-        # the containment-incremental direction split, so no pair
-        # double-counts and no stored-stored candidate ever forms
-        pair_cols = [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            sim.alias("sim"),
-        ]
-        p1 = new_cold.alias("a").join(
-            cold.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(*pair_cols)
-        p2 = stored_cold.alias("a").join(
-            new_cold.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(*pair_cols)
-        probe = p1.unionByName(p2)
-        if hot is not None:
-            star = _delta_star_links(
-                hot,
-                "v",
-                new_ids,
-                lambda rv, v: F.round(cosine(rv, v), 6),
-                "sim",
-            )
-            probe = probe.unionByName(star)
-        per_probe.append(probe)
-    pairs = per_probe[0]
-    for p in per_probe[1:]:
-        pairs = pairs.unionByName(p)
-    if n_probes > 1:
-        pairs = pairs.distinct()  # sim is identical across probes
-    return pairs.filter(F.col("sim") >= threshold)
-
-
 def incremental_embedding_near_dup_normalized(
     stored_vectors: DataFrame,
     stored_buckets: DataFrame,
@@ -1299,51 +1127,45 @@ def incremental_embedding_near_dup_normalized(
     vec_col: str = "embedding",
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
-    """``incremental_embedding_near_dup`` consuming the NORMALIZED
-    ``(vectors, buckets)`` state pair natively — no reassembly join,
-    and the vector payload joins ONLY for actual candidates.
+    """Daily-crawl embedding near-dup — the delta form of
+    ``embedding_near_dup_pairs``: only the NEW vectors hash; the
+    historical corpus participates through its stored
+    ``(vectors, buckets)`` pair (``build_embedding_sig_tables_normalized``
+    output), and candidates form as (new-side buckets) × (bucket-mates)
+    — the stored×stored quadratic never forms.
 
-    Same rows as the denormalized path (parity-tested at
-    ``n_probes>1``), different shuffle profile: the denormalized form
-    (or ``join_embedding_sig_tables`` + the denormalized operator)
-    carries every stored vector through every per-seed bucket
-    exchange — ``n_probes`` corpus-sized shuffles of the fattest
-    column before a single candidate exists. Here candidates form on
-    16-byte ``(id, bucket)`` rows per probe, dedup across probes
-    id-only, and the ``(id, v)`` table joins in exactly twice (side a,
-    side b) for the surviving pairs. Measured on the sf0.1 embeddings
-    fixture at n_probes=3 (tools/embedding_norm_probe.py, UI REST
-    stage metrics): 5.1 MB shuffle-written by the
-    reassembled-denormalized plan vs ~0.04 MB here (~120× less) — the
-    vector bytes (3 probes × corpus × 64 doubles) vanish from the
-    bucket exchanges, and at this candidate count the deferred
-    id-keyed vector joins broadcast instead of shuffling at all; at
-    cluster scale they are two exchanges whose pair side is
-    candidate-sized.
+    Returns exactly the ``embedding_near_dup_pairs(stored ∪ new)``
+    rows in which at least one side is new (full-batch parity,
+    identity-tested incl. ``n_probes>1``): the hot-bucket guard is
+    evaluated over the COMBINED bucket population, and a hot bucket's
+    star links use the combined min-id representative — precisely as
+    the full recompute would (stale-hot star links not involving a new
+    vector are the full batch's new-free rows and are excluded by
+    definition).
 
-    Hot buckets, combined-population counting, min-id star
-    representatives, the touches-new two-left-join discipline, and
-    the in-plan geometry raise all match the denormalized twin —
-    the geometry columns ride ``stored_buckets``.
+    Candidates form on 16-byte ``(id, bucket)`` rows per probe, dedup
+    across probes id-only, and the ``(id, v)`` table joins in exactly
+    twice (side a, side b) for the surviving pairs. Measured on the
+    sf0.1 embeddings fixture at n_probes=3 (UI REST stage metrics):
+    5.1 MB shuffle-written by a plan that carries the vector through
+    every per-seed bucket exchange vs ~0.04 MB here (~120× less) — at
+    this candidate count the deferred id-keyed vector joins broadcast
+    instead of shuffling at all; at cluster scale they are two
+    exchanges whose pair side is candidate-sized.
+
+    Ids must be disjoint between stored and new (a re-embedded doc is
+    delete + insert, ``curate_incremental``'s contract). A stored
+    bucket table built with different ``num_planes``/``n_probes``
+    raises IN-PLAN (the geometry columns ride ``stored_buckets``): the
+    seeds are deterministic, so a silent mismatch would mis-bucket
+    every stored row and lose recall without any error.
     """
     from inbev_data_engineering_case_spark.functions import cosine
-    from inbev_data_engineering_case_spark.operators.similarity import (
-        _vec_dim,
-        signlsh_bucket,
-    )
 
     new_ids = new_emb.select(F.col(id_col).alias("id"))
-    dim = _vec_dim(new_emb, vec_col)  # literal plane weights (r15)
-    new_b = [
-        new_emb.select(
-            F.lit(seed).alias("seed"),
-            F.col(id_col).alias("id"),
-            signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
-            ).alias("bucket"),
-        )
-        for seed in range(n_probes)
-    ]
+    new_vectors, new_b = build_embedding_sig_tables_normalized(
+        new_emb, num_planes, n_probes, id_col, vec_col
+    )
     stored_guarded = stored_buckets.select(
         "seed",
         "id",
@@ -1359,7 +1181,9 @@ def incremental_embedding_near_dup_normalized(
         rows = materialize(
             stored_guarded.filter(F.col("seed") == seed)
             .select("id", "bucket")
-            .unionByName(new_b[seed].select("id", "bucket")),
+            .unionByName(
+                new_b.filter(F.col("seed") == seed).select("id", "bucket")
+            ),
             eager=False,
         )
         if max_bucket_size is not None:
@@ -1386,29 +1210,8 @@ def incremental_embedding_near_dup_normalized(
         ).select(*pair_cols)
         probe = p1.unionByName(p2)
         if hot is not None:
-            # id-only star links: same reps (combined min id), same
-            # touches-new two-left-join shape as _delta_star_links,
-            # with the similarity deferred to the shared vector join
-            reps = hot.groupBy("bucket").agg(F.min("id").alias("rep_id"))
-            marks = new_ids.withColumn("_new", F.lit(True))
-            hot_m = hot.join(marks, "id", "left").withColumnRenamed(
-                "_new", "_member_new"
-            )
-            reps_m = reps.join(
-                marks.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-            ).withColumnRenamed("_new", "_rep_new")
-            star = (
-                hot_m.join(reps_m, ["bucket"])
-                .filter(F.col("id") != F.col("rep_id"))
-                .filter(
-                    F.col("_member_new").isNotNull()
-                    | F.col("_rep_new").isNotNull()
-                )
-                .select(
-                    F.col("rep_id").alias("id_a"),
-                    F.col("id").alias("id_b"),
-                )
-            )
+            # id-only: the similarity is deferred to the vector join
+            star = _delta_star_links(hot, new_ids)
             probe = probe.unionByName(star)
         per_probe.append(probe)
     pairs = per_probe[0]
@@ -1416,12 +1219,10 @@ def incremental_embedding_near_dup_normalized(
         pairs = pairs.unionByName(p)
     if n_probes > 1:
         # id-only dedup: sim is deterministic per pair, so deduping
-        # before the vector join is exactly the denormalized path's
-        # post-sim distinct — minus candidate-count × vector bytes
+        # before the vector join equals a post-sim distinct — minus
+        # candidate-count × vector bytes
         pairs = pairs.distinct()
-    all_vecs = stored_vectors.unionByName(
-        new_emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    )
+    all_vecs = stored_vectors.unionByName(new_vectors)
     sim = F.round(cosine(F.col("_va"), F.col("_vb")), 6)
     return (
         pairs.join(
@@ -1624,8 +1425,8 @@ def incremental_simhash_near_pairs(
     if hot is not None:
         star = _delta_star_links(
             hot,
-            "sh",
             new_ids,
+            "sh",
             lambda r, s: F.bit_count(r.bitwiseXOR(s)),
             "hamming",
         ).filter(F.col("hamming") <= max_hamming)

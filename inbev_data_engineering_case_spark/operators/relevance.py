@@ -669,11 +669,10 @@ def update_text_index(
     it to the serving index): only ``changed_docs`` re-tokenize, the
     stored tf/doclen partials merge, and stats recompute from the
     merged doclen partials — never from raw text. Published through
-    the same ``commit_snapshot`` protocol as the full build, with
-    ``expected_parent`` pinned to the snapshot the delta was computed
-    against, so a concurrent refresh cannot silently lose this delta
-    (the loser raises ``SnapshotConflictError``; recompute against the
-    new latest and retry).
+    ``layers.advance_snapshot`` from the snapshot the delta was
+    computed against, so a concurrent refresh cannot silently lose
+    this delta (the loser raises ``SnapshotConflictError``; recompute
+    against the new latest and retry).
 
     Two physical paths, chosen by what the delta touches:
 
@@ -691,21 +690,13 @@ def update_text_index(
     published snapshot path.
     """
     from inbev_data_engineering_case_spark.layers import (
-        commit_snapshot,
+        advance_snapshot,
         link_parquet_files,
-        next_run_after,
-        prune_snapshots,
-        run_id_of,
     )
 
+    # the commit pins its expected parent to THIS path (advance_snapshot),
+    # so an interleaved refresh makes it raise instead of losing a delta
     parent_snap = resolve_text_index(index_dir)
-    # expected_parent derives from the PATH WE READ, never a second
-    # directory walk: a commit landing between the two would otherwise
-    # pass the expected-parent check against a generation this delta
-    # was NOT computed from — silently dropping the interleaved delta,
-    # the exact failure the protocol exists to prevent
-    parent = run_id_of(parent_snap, TEXT_INDEX_PREFIX)
-    run_id = next_run_after(parent)
 
     toks = changed_docs.select(
         F.col(id_col),
@@ -800,15 +791,9 @@ def update_text_index(
         )
         write_parquet(stats, f"{staging}/stats")
 
-    snap = commit_snapshot(
-        index_dir,
-        run_id,
-        write_fn,
-        expected_parent=parent,
-        prefix=TEXT_INDEX_PREFIX,
+    snap = advance_snapshot(
+        index_dir, TEXT_INDEX_PREFIX, parent_snap, write_fn, keep_snapshots
     )
-    if keep_snapshots:
-        prune_snapshots(index_dir, TEXT_INDEX_PREFIX, keep_snapshots)
     return {
         "mode": "append" if append_only else "merge",
         "snapshot": snap,
@@ -838,18 +823,13 @@ def compact_text_index(
     file layout).
     """
     from inbev_data_engineering_case_spark.layers import (
-        commit_snapshot,
+        advance_snapshot,
         link_parquet_files,
-        next_run_after,
-        prune_snapshots,
-        run_id_of,
     )
 
     if cluster_by_term < 1:
         raise ValueError("compact_text_index: cluster_by_term must be >= 1")
     parent_snap = resolve_text_index(index_dir)
-    parent = run_id_of(parent_snap, TEXT_INDEX_PREFIX)
-    run_id = next_run_after(parent)
     tf = read_parquet(spark, f"{parent_snap}/tf")
 
     def write_fn(staging: str) -> None:
@@ -861,15 +841,9 @@ def compact_text_index(
         link_parquet_files(f"{parent_snap}/doclen", f"{staging}/doclen")
         link_parquet_files(f"{parent_snap}/stats", f"{staging}/stats")
 
-    snap = commit_snapshot(
-        index_dir,
-        run_id,
-        write_fn,
-        expected_parent=parent,
-        prefix=TEXT_INDEX_PREFIX,
+    snap = advance_snapshot(
+        index_dir, TEXT_INDEX_PREFIX, parent_snap, write_fn, keep_snapshots
     )
-    if keep_snapshots:
-        prune_snapshots(index_dir, TEXT_INDEX_PREFIX, keep_snapshots)
     return {
         "snapshot": snap,
         "tf_rows": read_parquet(spark, f"{snap}/tf").count(),

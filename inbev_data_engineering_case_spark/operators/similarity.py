@@ -1312,8 +1312,8 @@ def update_ann_index(
     discipline — the coarse/fine model stays fixed between rebuilds,
     so stored codes remain comparable and the probe path is
     untouched); the cells/codes partials merge; centroids, codebook,
-    and meta carry forward unchanged. Published via ``commit_snapshot``
-    with ``expected_parent`` pinned to the generation the delta was
+    and meta carry forward unchanged. Published via
+    ``layers.advance_snapshot`` from the generation the delta was
     computed against.
 
     Physical paths, chosen like the text twin: a pure-new delta
@@ -1329,20 +1329,13 @@ def update_ann_index(
     published snapshot path.
     """
     from inbev_data_engineering_case_spark.layers import (
-        commit_snapshot,
+        advance_snapshot,
         link_parquet_files,
-        next_run_after,
-        prune_snapshots,
-        run_id_of,
     )
 
+    # the commit pins its expected parent to THIS path (advance_snapshot),
+    # so an interleaved refresh makes it raise instead of losing a delta
     parent_snap = resolve_ann_index(index_dir)
-    # expected_parent derives from the PATH WE READ, never a second
-    # directory walk (update_text_index's discipline): a commit landing
-    # between the two would pass the expected-parent check against a
-    # generation this delta was NOT computed from
-    parent = run_id_of(parent_snap, ANN_INDEX_PREFIX)
-    run_id = next_run_after(parent)
     meta = read_parquet(spark, f"{parent_snap}/meta").collect()[0]
     m, k = int(meta["m"]), int(meta["k"])
     cents = read_parquet(spark, f"{parent_snap}/centroids")
@@ -1417,15 +1410,9 @@ def update_ann_index(
         link_parquet_files(f"{parent_snap}/codebook", f"{staging}/codebook")
         link_parquet_files(f"{parent_snap}/meta", f"{staging}/meta")
 
-    snap = commit_snapshot(
-        index_dir,
-        run_id,
-        write_fn,
-        expected_parent=parent,
-        prefix=ANN_INDEX_PREFIX,
+    snap = advance_snapshot(
+        index_dir, ANN_INDEX_PREFIX, parent_snap, write_fn, keep_snapshots
     )
-    if keep_snapshots:
-        prune_snapshots(index_dir, ANN_INDEX_PREFIX, keep_snapshots)
     return {
         "mode": "append" if append_only else "merge",
         "snapshot": snap,

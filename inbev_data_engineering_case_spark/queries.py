@@ -3548,70 +3548,24 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_embedding_incremental",
-    _embedding_dedup_oracle(only_new=True, new_mod=5),
-    doc="daily-crawl embedding near-dup (operators/dedup.py "
-    "incremental_embedding_near_dup): the delta form — only the NEW "
-    "vectors hash; the historical corpus participates through its "
-    "stored sign-LSH table (build_embedding_sig_table, vectors "
-    "carried so the cosine verify needs no corpus re-read), "
-    "candidates form as new-side × bucket-mates so the "
-    "stored×stored quadratic never forms, and the hot-bucket guard "
-    "evaluates over the COMBINED bucket population. Exact full-batch "
-    "parity: returns precisely the embedding_near_dup_pairs(stored ∪ "
-    "new) rows involving a new vector (identity-tested; the oracle "
-    "is the full-batch SQL filtered to new-involving pairs). "
-    "Fixture: perturbed copies of every 5th vector arrive as the new "
-    "crawl — a genuinely delta-sized new side, so the entry prices "
-    "the delta path, not a full recompute. Late-r8 tail debut "
-    "(family cover: q_dedup_embedding runs the same full-batch "
-    "machinery, q_curate_incremental the same delta-vs-stored-state "
-    "shape — both in-window).",
-)
-def q_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        build_embedding_sig_table,
-        incremental_embedding_near_dup,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    stored = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias(
-            "embedding"
-        ),
-    )
-    new = emb.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x.cast("double")
-            * (F.lit(1) + F.lit(0.001) * ((i % 3) - 1)),
-        ).alias("embedding"),
-    )
-    return incremental_embedding_near_dup(
-        build_embedding_sig_table(stored), new, threshold=0.9
-    )
-
-
-@register(
     "q_embedding_incr_norm",
     _embedding_dedup_oracle(only_new=True, new_mod=5),
-    doc="the delta embedding near-dup consuming NORMALIZED state "
-    "natively (operators/dedup.py "
-    "incremental_embedding_near_dup_normalized): the stored (id,v) "
-    "vectors table and the per-seed (seed,id,bucket) rows are "
-    "consumed as-is — no reassembly join — candidates form on "
-    "16-byte id/bucket rows and the vector payload joins ONLY for "
-    "actual candidates (measured ~120x less candidate-stage shuffle "
-    "at n_probes=3, tools/embedding_norm_probe.py). Result identical "
-    "to q_embedding_incremental by construction (parity-tested incl. "
-    "hot buckets and n_probes>1), so the oracle is that entry's SQL "
-    "UNCHANGED — the driver independently verifies the deferred-"
-    "vector-join rewrite end to end. Late-r10 tail debut (family "
-    "cover: q_embedding_incremental is the identical delta machinery "
-    "on denormalized state, q_dedup_embedding the full-batch twin — "
-    "both in-window).",
+    doc="daily-crawl embedding near-dup (operators/dedup.py "
+    "incremental_embedding_near_dup_normalized): the delta form — only "
+    "the NEW vectors hash; the historical corpus participates through "
+    "its stored (id,v) vectors table and per-seed (seed,id,bucket) "
+    "rows (build_embedding_sig_tables_normalized), candidates form on "
+    "16-byte id/bucket rows as new-side × bucket-mates so the "
+    "stored×stored quadratic never forms, the hot-bucket guard "
+    "evaluates over the COMBINED bucket population, and the vector "
+    "payload joins ONLY for actual candidates (measured ~120x less "
+    "candidate-stage shuffle at n_probes=3). Exact full-batch parity: "
+    "returns precisely the embedding_near_dup_pairs(stored ∪ new) rows "
+    "involving a new vector (identity-tested incl. hot buckets and "
+    "n_probes>1; the oracle is the full-batch SQL filtered to "
+    "new-involving pairs). Fixture: perturbed copies of every 5th "
+    "vector arrive as the new crawl — a genuinely delta-sized new "
+    "side, so the entry prices the delta path, not a full recompute.",
 )
 def q_embedding_incr_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inbev_data_engineering_case_spark.operators.dedup import (
@@ -8972,19 +8926,10 @@ _FAMILY_STAND_INS: dict[str, tuple[str, ...]] = {
     # below is driver-green in at least r9+r10 (q_containment since
     # r8), and names in-window same-family cover. Three of the four
     # (q_simhash_incremental, q_containment, q_containment_incremental)
-    # were referenced by no stand-in chain; q_embedding_incremental was
-    # referenced only by the now-promoted q_embedding_incr_norm.
+    # were referenced by no stand-in chain; the fourth (the delta
+    # embedding entry on one-table state) was later deleted, its oracle
+    # SQL kept by q_embedding_incr_norm.
     #
-    # delta embedding near-dup on denormalized state: the full-batch
-    # twin pins the identical sign-LSH bucket machinery in-window, and
-    # the stored-state delta discipline via q_curate_incremental
-    # (rewired r14 when q_embedding_incr_norm itself rotated out; the
-    # deferred-vector-join parity incl. hot buckets stays
-    # pytest-pinned):
-    "q_embedding_incremental": (
-        "q_dedup_embedding",
-        "q_dedup_incremental",  # rewired r15 (stored-state delta family)
-    ),
     # delta simhash near-dup: q_dedup_minhash pins the banded
     # similarity family in-window, and the stored-state delta
     # discipline (new-only hashing against a committed artifact
@@ -9127,10 +9072,9 @@ _FAMILY_STAND_INS: dict[str, tuple[str, ...]] = {
     # (r11-r13): the full-batch embedding twin runs the identical
     # sign-LSH bucket machinery in-window, the stored-state delta
     # discipline (new-only hashing against a committed artifact) is
-    # q_curate_incremental's, and the normalized-vs-denormalized
-    # deferred-join parity stays pytest-pinned; the two chains that
-    # referenced this entry (q_embedding_incremental,
-    # q_simhash_incremental) rewired above in place:
+    # q_curate_incremental's, and the full-batch parity incl. hot
+    # buckets stays pytest-pinned; the chains that referenced this
+    # entry rewired in place:
     "q_embedding_incr_norm": (
         "q_dedup_embedding",
         "q_dedup_incremental",  # rewired r15 (stored-state delta family)

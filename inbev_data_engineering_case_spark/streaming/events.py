@@ -116,16 +116,45 @@ def read_events_stream(spark, sf_dir: str) -> DataFrame:
     return surface_event_ts(spark.readStream.schema(schema).parquet(stage))
 
 
-def _cut_nonempty(batch_df: DataFrame) -> DataFrame | None:
-    """A micro-batch cut once (a foreachBatch file-source batch re-scans
-    its input files on every action otherwise), or None when it holds no
-    rows. The row count is an observed metric of the eager cut's own job,
-    so the emptiness check launches no job of its own."""
+def _cut_nonempty(
+    batch_df: DataFrame, id_col: str, *non_null: str
+) -> DataFrame | None:
+    """A micro-batch's ``id_col`` and ``non_null`` columns, rows with a
+    NULL in any ``non_null`` column dropped and duplicate ids collapsed,
+    cut once (a foreachBatch file-source batch re-scans its input files
+    on every action otherwise), or None when no row is left. The row
+    count is an observed metric of the eager cut's own job, so the
+    emptiness check launches no job of its own.
+
+    NULLs drop rather than raise: inside a replaying stream one bad row
+    would fail the batch before its offset commit, and every restart
+    would replay it — a permanent poison pill. For conflicting rows
+    under one id in one batch the survivor is arbitrary."""
+    keep = F.lit(True)
+    for c in non_null:
+        keep = keep & F.col(c).isNotNull()
     rows = Observation("stream_batch_rows")
     batch = materialize(
-        batch_df.observe(rows, F.count(F.lit(1)).alias("n")), eager=True
+        batch_df.select(id_col, *non_null)
+        .filter(keep)
+        .dropDuplicates([id_col])
+        .observe(rows, F.count(F.lit(1)).alias("n")),
+        eager=True,
     )
     return batch if rows.get["n"] else None
+
+
+def _drain(writer, timeout: int, what: str) -> dict[str, int]:
+    """Run a configured ``DataStreamWriter`` to completion — an
+    ``availableNow`` trigger processes everything currently in the
+    source, then stops — and return its ``query_metrics``. A drain that
+    outlasts ``timeout`` seconds is stopped and raises ``TimeoutError``
+    naming ``what``. Every stream runner of this module drains here."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(f"{what} did not drain in {timeout}s")
+    return query_metrics(q)
 
 
 def query_metrics(q) -> dict[str, int]:
@@ -185,17 +214,13 @@ def run_stream_to_table(
     stop). In production the sink would be Delta/Kafka; the memory sink is
     the harness for batch-parity checks. Returns ``query_metrics`` for the
     drained query — lateness drops included."""
-    q = (
+    return _drain(
         out.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        timeout,
+        f"stream {name}",
     )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(f"stream {name} did not drain in {timeout}s")
-    return query_metrics(q)
 
 
 def run_stream_to_parquet_idempotent(
@@ -227,16 +252,12 @@ def run_stream_to_parquet_idempotent(
             f"{path}/batch_id={batch_id}"
         )
 
-    q = (
+    return _drain(
         out.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        timeout,
+        f"stream to {path}",
     )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(f"stream to {path} did not drain in {timeout}s")
-    return query_metrics(q)
 
 
 def stream_tumbling_counts(
@@ -789,7 +810,7 @@ def run_stream_upsert_parquet(
     One writer per (base_dir, checkpoint): the checkpoint makes restarts
     of THIS query replay-idempotent, but a second concurrent query over
     the same base_dir would interleave snapshot advancement — publish
-    competing batch writers through ``layers.commit_snapshot`` (the
+    competing batch writers through ``layers.advance_snapshot`` (the
     optimistic expected-parent commit) instead."""
     spark = out.sparkSession
 
@@ -798,18 +819,12 @@ def run_stream_upsert_parquet(
             spark, batch_df, batch_id, base_dir, key_cols, order_col
         )
 
-    q = (
+    return _drain(
         out.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        timeout,
+        f"upsert stream to {base_dir}",
     )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"upsert stream to {base_dir} did not drain in {timeout}s"
-        )
-    return query_metrics(q)
 
 
 def stream_sketch_partials(
@@ -1034,42 +1049,103 @@ def run_stream_index_update(
     spark = docs_stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # materialize the micro-batch ONCE: the delta update runs
-        # several actions over it (overlap probe, tf/doclen/stats
-        # writes, audits), and a foreachBatch file-source batch
-        # re-scans its input files per action otherwise (observed 7+
-        # re-reads per batch). NULL-text docs are filtered HERE, not
-        # raised: update_text_index's fail-loud indexability guard is
-        # right for a batch caller who can fix the input, but inside a
-        # replaying stream one unindexable doc would fail the batch
-        # before the offset commit and every restart would replay it —
-        # a permanent poison pill. Dropping is the dead-letter
-        # equivalent (the doc simply isn't searchable; route a
-        # quarantine stream upstream if those docs need accounting).
-        batch = _cut_nonempty(
-            batch_df.select(id_col, text_col)
-            .filter(F.col(text_col).isNotNull())
-            .dropDuplicates([id_col])
-        )
+        # cut the micro-batch ONCE: the delta update runs several
+        # actions over it (overlap probe, tf/doclen/stats writes,
+        # audits). NULL-text docs drop here rather than meet
+        # update_text_index's fail-loud indexability guard, which is
+        # right for a batch caller who can fix the input but a poison
+        # pill inside a replaying stream (the doc simply isn't
+        # searchable; route a quarantine stream upstream if those docs
+        # need accounting).
+        batch = _cut_nonempty(batch_df, id_col, text_col)
         if batch is None:
             return
         update_text_index(spark, index_dir, batch, id_col=id_col,
                           text_col=text_col,
                           keep_snapshots=keep_snapshots)
 
-    q = (
+    return _drain(
         docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        timeout,
+        f"index-update stream to {index_dir}",
     )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"index-update stream to {index_dir} did not drain in "
-            f"{timeout}s"
-        )
-    return query_metrics(q)
+
+
+def _parent_snapshot(state_dir: str, prefix: str) -> str | None:
+    """The latest committed ``prefix`` snapshot under ``state_dir``, or
+    None before the first commit."""
+    from inbev_data_engineering_case_spark.layers import latest_snapshot
+
+    try:
+        return latest_snapshot(state_dir, prefix)
+    except FileNotFoundError:  # first generation ever
+        return None
+
+
+def _publish(
+    state_dir: str,
+    prefix: str,
+    parent_snap: str | None,
+    tables: dict[str, Any],
+    keep_snapshots: int | None = None,
+) -> str:
+    """Publish ``tables`` as the generation after ``parent_snap`` through
+    ``layers.advance_snapshot``: each DataFrame is written as a parquet
+    table under its name, any other value as a JSON file (the counts
+    streams' ``meta.json`` sidecar). One rename publishes them all, so a
+    crash never leaves two tables at different generations."""
+    from inbev_data_engineering_case_spark.layers import advance_snapshot
+
+    def write_all(staging: str) -> None:
+        os.makedirs(staging)
+        for name, table in tables.items():
+            path = os.path.join(staging, name)
+            if isinstance(table, DataFrame):
+                write_parquet(table, path)
+            else:
+                with open(path, "w") as f:
+                    json.dump(table, f)
+
+    return advance_snapshot(
+        state_dir, prefix, parent_snap, write_all, keep_snapshots
+    )
+
+
+def _run_state_stream(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint: str,
+    timeout: int,
+    prefix: str,
+    advance,
+    keep_snapshots: int | None,
+    what: str,
+) -> dict[str, int]:
+    """The state streams' one loop (artifact, embedding and both count
+    streams). Per micro-batch: resolve the parent snapshot, then
+    ``advance(batch_df, batch_id, parent_snap)`` — which runs the
+    stream's guards, cuts the batch (``_cut_nonempty``) and returns the
+    named tables of the next generation, or None to commit nothing (an
+    empty or replayed batch) — then ``_publish`` them from that parent.
+    The commit's expected parent is the snapshot the batch READ, so an
+    interleaved writer makes it raise ``SnapshotConflictError`` instead
+    of silently losing a delta. One writer per ``(state_dir,
+    checkpoint)``; one generation per micro-batch, pruned to
+    ``keep_snapshots`` (None keeps all). Returns ``query_metrics``."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        parent_snap = _parent_snapshot(state_dir, prefix)
+        tables = advance(batch_df, batch_id, parent_snap)
+        if tables is not None:
+            _publish(state_dir, prefix, parent_snap, tables, keep_snapshots)
+
+    return _drain(
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint),
+        timeout,
+        f"{what} to {state_dir}",
+    )
 
 
 CORPUS_ARTIFACT_PREFIX = "corpusart"
@@ -1232,33 +1308,6 @@ def _stored_sig_pair_kw(
     return pair_kw
 
 
-def _backfill_commit(
-    state_dir: str, snap: str, tables: dict[str, DataFrame]
-) -> str:
-    """Commit the carried-forward parent tables plus the backfilled
-    ones as one new snapshot generation, against the parent actually
-    read (the optimistic-concurrency discipline)."""
-    from inbev_data_engineering_case_spark.layers import (
-        commit_snapshot,
-        next_run_after,
-        run_id_of,
-    )
-
-    parent = run_id_of(snap, CORPUS_ARTIFACT_PREFIX)
-
-    def write_all(staging: str) -> None:
-        for name, table in tables.items():
-            write_parquet(table, os.path.join(staging, name))
-
-    return commit_snapshot(
-        state_dir,
-        next_run_after(parent),
-        write_all,
-        expected_parent=parent,
-        prefix=CORPUS_ARTIFACT_PREFIX,
-    )
-
-
 def backfill_gram_table(
     corpus: DataFrame,
     state_dir: str,
@@ -1272,7 +1321,7 @@ def backfill_gram_table(
     output over the full stored corpus's text and commits it as the
     ``grams`` table of a NEW snapshot generation alongside the parent's
     sigs/fps — atomically, through the same optimistic
-    ``commit_snapshot`` the stream uses, so a concurrently-advancing
+    ``layers.advance_snapshot`` the stream uses, so a concurrently-advancing
     stream loses the race loudly (``SnapshotConflictError``) instead of
     interleaving. After the backfill, restart the stream with
     ``gram_n`` set (and the SAME ``gram_portable``) and it advances the
@@ -1309,7 +1358,7 @@ def backfill_gram_table(
     tables["grams"] = build_gram_table(
         corpus, gram_n, id_col, text_col, gram_portable
     ).dropDuplicates([id_col, "gram_h"])
-    return _backfill_commit(state_dir, snap, tables)
+    return _publish(state_dir, CORPUS_ARTIFACT_PREFIX, snap, tables)
 
 
 def backfill_components_table(
@@ -1328,7 +1377,7 @@ def backfill_components_table(
     CONVERGED label closure, committing it as the ``comps`` table of a
     NEW snapshot generation alongside the parent's sigs/fps (and
     grams, when present) — atomically, through the same optimistic
-    ``commit_snapshot`` the stream uses. After the backfill, restart
+    ``layers.advance_snapshot`` the stream uses. After the backfill, restart
     the stream with ``components=True`` (and the same banding
     geometry) and it advances the labels incrementally from there.
 
@@ -1372,7 +1421,7 @@ def backfill_components_table(
         ),
         require_convergence=True,
     )
-    return _backfill_commit(state_dir, snap, tables)
+    return _publish(state_dir, CORPUS_ARTIFACT_PREFIX, snap, tables)
 
 
 def backfill_halo_tables(
@@ -1394,7 +1443,7 @@ def backfill_halo_tables(
     ``ngram``), walks the batch multi-source BFS to ``max_hops``, and
     commits ``hpairs``/``hdist``/``hmeta`` as a NEW snapshot
     generation alongside the parent's tables — atomically, through
-    the same optimistic ``commit_snapshot`` the stream uses. After
+    the same optimistic ``layers.advance_snapshot`` the stream uses. After
     the backfill, restart the stream with ``halo_benchmark`` (and the
     same geometry — the ``hmeta`` row records ``max_hops``, ``ngram``,
     ``near_dup_threshold``, the effective shingle size, AND the
@@ -1463,7 +1512,7 @@ def backfill_halo_tables(
         "max_hops int, ngram int, threshold double, shingle_words int,"
         " num_hashes int",
     )
-    return _backfill_commit(state_dir, snap, tables)
+    return _publish(state_dir, CORPUS_ARTIFACT_PREFIX, snap, tables)
 
 
 def run_stream_artifact_update(
@@ -1489,7 +1538,7 @@ def run_stream_artifact_update(
     reads: each micro-batch of kept documents advances the stored
     minhash-signature and fingerprint tables through
     ``curate.advance_corpus_artifacts``, publishing BOTH under one
-    atomic ``commit_snapshot`` generation — so tomorrow's
+    atomic snapshot generation — so tomorrow's
     ``curate_incremental`` (or the next micro-batch) dedups against
     everything emitted so far without ever re-hashing history, and a
     crash can never leave the two tables at different generations.
@@ -1506,9 +1555,10 @@ def run_stream_artifact_update(
     DROPPED per batch (the index-updater's poison-pill rationale: one
     bad doc must not turn into a permanently replaying failed batch).
 
-    Snapshot discipline: ``expected_parent`` derives from the snapshot
-    path actually READ (``layers.run_id_of``) — never a second
-    directory walk — so an interleaved writer makes the commit raise
+    Snapshot discipline (``_run_state_stream``, the loop the embedding
+    and count streams share): each generation publishes through
+    ``layers.advance_snapshot`` from the snapshot path the batch READ,
+    so an interleaved writer makes the commit raise
     ``SnapshotConflictError`` instead of silently losing a delta. One
     writer per ``(state_dir, checkpoint)``; the stream publishes one
     generation per micro-batch, so ``keep_snapshots`` follows
@@ -1584,23 +1634,13 @@ def run_stream_artifact_update(
 
     Returns ``query_metrics``.
     """
-    from inbev_data_engineering_case_spark.layers import (
-        commit_snapshot,
-        latest_snapshot,
-        next_run_after,
-        prune_snapshots,
-        run_id_of,
-    )
     from inbev_data_engineering_case_spark.operators.curate import (
         advance_corpus_artifacts,
     )
     from inbev_data_engineering_case_spark.operators.dedup import (
-        build_gram_table,
-    )
-
-    from inbev_data_engineering_case_spark.operators.dedup import (
         DEFAULT_NUM_HASHES,
         DEFAULT_SHINGLE_WORDS,
+        build_gram_table,
     )
 
     spark = docs_stream.sparkSession
@@ -1629,20 +1669,15 @@ def run_stream_artifact_update(
             eff_num_hashes,
         )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = _cut_nonempty(
-            batch_df.select(id_col, text_col)
-            .filter(F.col(text_col).isNotNull())
-            .dropDuplicates([id_col])
-        )
+    def advance(batch_df: DataFrame, batch_id: int, parent_snap):
+        batch = _cut_nonempty(batch_df, id_col, text_col)
         if batch is None:
-            return
+            return None
         stored_grams = None
         stored_comps = None
         stored_hpairs = None
         stored_hdist = None
-        try:
-            parent_snap = latest_snapshot(state_dir, CORPUS_ARTIFACT_PREFIX)
+        if parent_snap is not None:
             stored_sigs = read_parquet(
                 spark, os.path.join(parent_snap, "sigs")
             )
@@ -1794,8 +1829,7 @@ def run_stream_artifact_update(
                         f" {flag} (or deliberately start a fresh"
                         " state_dir)"
                     )
-            parent = run_id_of(parent_snap, CORPUS_ARTIFACT_PREFIX)
-        except FileNotFoundError:  # first generation ever
+        else:  # first generation ever
             stored_sigs = spark.createDataFrame(
                 [], "id long, sig array<bigint>"
             )
@@ -1811,7 +1845,6 @@ def run_stream_artifact_update(
                 stored_hdist = spark.createDataFrame(
                     [], "node long, dist int"
                 )
-            parent = None
         batch_sigs = None
         if components or halo_benchmark is not None:
             # the batch is hashed ONCE: these signatures feed both the
@@ -1838,8 +1871,7 @@ def run_stream_artifact_update(
         # replay safety for append mode: an identical re-applied batch
         # contributes only rows that already exist — drop them here
         # (fps already dedup on (fp, keep_id) inside the operator)
-        sigs = sigs.dropDuplicates(["id", "sig"])
-        grams = None
+        tables = {"sigs": sigs.dropDuplicates(["id", "sig"]), "fps": fps}
         if gram_n is not None:
             new_grams = build_gram_table(
                 batch, gram_n, id_col, text_col, gram_portable
@@ -1853,9 +1885,7 @@ def run_stream_artifact_update(
                         batch.select(F.col(id_col)), id_col, "left_anti"
                     )
                 grams = old.unionByName(new_grams)
-            grams = grams.dropDuplicates([id_col, "gram_h"])
-        comps = None
-        pairs = None
+            tables["grams"] = grams.dropDuplicates([id_col, "gram_h"])
         if components or halo_benchmark is not None:
             from inbev_data_engineering_case_spark.operators.curate import (
                 incremental_minhash_pairs,
@@ -1887,8 +1917,9 @@ def run_stream_artifact_update(
                 dedup_components_incremental,
             )
 
-            comps = dedup_components_incremental(stored_comps, pairs)
-        hpairs = hdist = hmeta = None
+            tables["comps"] = dedup_components_incremental(
+                stored_comps, pairs
+            )
         if halo_benchmark is not None:
             from inbev_data_engineering_case_spark.operators.curate import (
                 advance_halo_artifacts,
@@ -1904,56 +1935,25 @@ def run_stream_artifact_update(
                 id_col=id_col,
                 text_col=text_col,
             ).select(id_col)
-            hpairs, hdist = advance_halo_artifacts(
+            tables["hpairs"], tables["hdist"] = advance_halo_artifacts(
                 stored_hpairs,
                 stored_hdist,
                 pairs,
                 new_seeds,
                 max_hops=halo_hops,
             )
-            hmeta = spark.createDataFrame(
+            tables["hmeta"] = spark.createDataFrame(
                 [halo_geo],
                 "max_hops int, ngram int, threshold double,"
                 " shingle_words int, num_hashes int",
             )
+        return tables
 
-        def write_pair(staging: str) -> None:
-            write_parquet(sigs, os.path.join(staging, "sigs"))
-            write_parquet(fps, os.path.join(staging, "fps"))
-            if grams is not None:
-                write_parquet(grams, os.path.join(staging, "grams"))
-            if comps is not None:
-                write_parquet(comps, os.path.join(staging, "comps"))
-            if hdist is not None:
-                write_parquet(hpairs, os.path.join(staging, "hpairs"))
-                write_parquet(hdist, os.path.join(staging, "hdist"))
-                write_parquet(hmeta, os.path.join(staging, "hmeta"))
-
-        commit_snapshot(
-            state_dir,
-            next_run_after(parent),
-            write_pair,
-            expected_parent=parent,
-            prefix=CORPUS_ARTIFACT_PREFIX,
-        )
-        if keep_snapshots:
-            prune_snapshots(
-                state_dir, CORPUS_ARTIFACT_PREFIX, keep_snapshots
-            )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_state_stream(
+        docs_stream, state_dir, checkpoint, timeout,
+        CORPUS_ARTIFACT_PREFIX, advance, keep_snapshots,
+        "artifact-update stream",
     )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"artifact-update stream to {state_dir} did not drain in "
-            f"{timeout}s"
-        )
-    return query_metrics(q)
 
 
 EMBEDDING_ARTIFACT_PREFIX = "embart"
@@ -1993,20 +1993,21 @@ def run_stream_embedding_update(
     of vectors hashes through
     ``build_embedding_sig_tables_normalized`` and advances the
     NORMALIZED ``(vectors, buckets)`` pair, publishing both under one
-    atomic ``commit_snapshot`` generation — so the next crawl's
+    atomic snapshot generation — so the next crawl's
     ``incremental_embedding_near_dup_normalized`` runs against
     everything streamed so far without ever re-hashing history, and a
     crash can never leave the two tables at different generations.
 
-    The disciplines mirror ``run_stream_artifact_update`` exactly:
+    The disciplines — and the loop, ``_run_state_stream`` — are
+    ``run_stream_artifact_update``'s:
     replay idempotence without a marker (vectors dedup on ``(id, v)``,
     buckets on their full row — a re-applied batch recreates identical
     rows; a same-id different-vector row is genuinely new state under
     ``'append'`` and replaces under ``'replace'``, the batch
     operator's delete+insert contract); duplicate ids within a batch
     collapse first; NULL-vector rows drop per batch (the poison-pill
-    rationale); ``expected_parent`` pins the snapshot actually READ
-    (the TOCTOU rule — an interleaved writer raises
+    rationale); each generation publishes from the snapshot actually
+    READ (the TOCTOU rule — an interleaved writer raises
     ``SnapshotConflictError`` instead of losing a delta). The build
     geometry rides the bucket rows; resuming a stream with DIFFERENT
     ``num_planes``/``n_probes`` than the stored state raises before
@@ -2016,13 +2017,6 @@ def run_stream_embedding_update(
 
     Returns ``query_metrics``.
     """
-    from inbev_data_engineering_case_spark.layers import (
-        commit_snapshot,
-        latest_snapshot,
-        next_run_after,
-        prune_snapshots,
-        run_id_of,
-    )
     from inbev_data_engineering_case_spark.operators.dedup import (
         build_embedding_sig_tables_normalized,
     )
@@ -2038,26 +2032,17 @@ def run_stream_embedding_update(
 
     spark = emb_stream.sparkSession
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = _cut_nonempty(
-            batch_df.select(id_col, vec_col)
-            .filter(F.col(vec_col).isNotNull())
-            .dropDuplicates([id_col])
-        )
+    def advance(batch_df: DataFrame, batch_id: int, parent_snap):
+        batch = _cut_nonempty(batch_df, id_col, vec_col)
         if batch is None:
-            return
-        try:
-            parent_snap = latest_snapshot(
-                state_dir, EMBEDDING_ARTIFACT_PREFIX
-            )
-            stored_vectors = read_parquet(
-                spark, os.path.join(parent_snap, "vectors")
-            )
-            stored_buckets = read_parquet(
-                spark, os.path.join(parent_snap, "buckets")
-            )
-            parent = run_id_of(parent_snap, EMBEDDING_ARTIFACT_PREFIX)
-            head = stored_buckets.select("num_planes", "n_probes").first()
+            return None
+        vectors, buckets = build_embedding_sig_tables_normalized(
+            batch, num_planes, n_probes, id_col, vec_col
+        )
+        if parent_snap is not None:
+            old_v = read_parquet(spark, os.path.join(parent_snap, "vectors"))
+            old_b = read_parquet(spark, os.path.join(parent_snap, "buckets"))
+            head = old_b.select("num_planes", "n_probes").first()
             if head is not None and (
                 head["num_planes"] != num_planes
                 or head["n_probes"] != n_probes
@@ -2071,56 +2056,24 @@ def run_stream_embedding_update(
                     " mis-bucket every stored row; rebuild the state or"
                     " match the geometry"
                 )
-        except FileNotFoundError:  # first generation ever
-            stored_vectors = stored_buckets = None
-            parent = None
-        new_vectors, new_buckets = build_embedding_sig_tables_normalized(
-            batch, num_planes, n_probes, id_col, vec_col
-        )
-        if stored_vectors is not None:
-            old_v, old_b = stored_vectors, stored_buckets
             if mode == "replace":
                 ids = batch.select(F.col(id_col).alias("id"))
                 old_v = old_v.join(ids, "id", "left_anti")
                 old_b = old_b.join(ids, "id", "left_anti")
-            vectors = old_v.unionByName(new_vectors)
-            buckets = old_b.unionByName(new_buckets)
-        else:
-            vectors, buckets = new_vectors, new_buckets
+            vectors = old_v.unionByName(vectors)
+            buckets = old_b.unionByName(buckets)
         # replay safety: a re-applied batch contributes only rows that
         # already exist — drop them here
-        vectors = vectors.dropDuplicates(["id", "v"])
-        buckets = buckets.dropDuplicates(["seed", "id", "bucket"])
+        return {
+            "vectors": vectors.dropDuplicates(["id", "v"]),
+            "buckets": buckets.dropDuplicates(["seed", "id", "bucket"]),
+        }
 
-        def write_pair(staging: str) -> None:
-            write_parquet(vectors, os.path.join(staging, "vectors"))
-            write_parquet(buckets, os.path.join(staging, "buckets"))
-
-        commit_snapshot(
-            state_dir,
-            next_run_after(parent),
-            write_pair,
-            expected_parent=parent,
-            prefix=EMBEDDING_ARTIFACT_PREFIX,
-        )
-        if keep_snapshots:
-            prune_snapshots(
-                state_dir, EMBEDDING_ARTIFACT_PREFIX, keep_snapshots
-            )
-
-    q = (
-        emb_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_state_stream(
+        emb_stream, state_dir, checkpoint, timeout,
+        EMBEDDING_ARTIFACT_PREFIX, advance, keep_snapshots,
+        "embedding-artifact stream",
     )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"embedding-artifact stream to {state_dir} did not drain in "
-            f"{timeout}s"
-        )
-    return query_metrics(q)
 
 
 CLASSIFIER_ARTIFACT_PREFIX = "clfart"
@@ -2156,7 +2109,7 @@ def run_stream_classifier_update(
     STATISTICS: each micro-batch of labeled documents trains
     ``classify.train_bow_counts`` on the batch alone and
     ``merge_bow_counts``-folds it into the stored table, publishing
-    one atomic ``commit_snapshot`` generation per batch — so the
+    one atomic snapshot generation per batch — so the
     scoring model re-derives from the latest snapshot at any time
     (``bow_weights_from_counts``, model-sized) while historical text
     is never re-tokenized. The last signature-backed artifact family
@@ -2215,7 +2168,8 @@ def run_stream_classifier_update(
         timeout=timeout,
         fn_name="run_stream_classifier_update",
         prefix=CLASSIFIER_ARTIFACT_PREFIX,
-        select_cols=(id_col, text_col, label_col),
+        text_col=text_col,
+        label_col=label_col,
         id_col=id_col,
         train=train,
         merge=merge_bow_counts,
@@ -2227,25 +2181,15 @@ def run_stream_classifier_update(
 COUNTS_META = "meta.json"
 
 
-def _latest_counts_meta(
-    state_dir: str, prefix: str, fn_name: str
-) -> tuple[str | None, dict | None]:
-    """The latest committed counts snapshot and its
-    ``{"batch_id", "checkpoint", "n_buckets"}`` sidecar, read as a plain
-    file (no Spark job), or ``(None, None)`` before the first commit. A
-    snapshot without the sidecar was written by the older layout (a
-    1-row ``meta`` parquet table); it raises rather than passing for a
-    first generation, which would silently restart the counts from
-    zero."""
-    from inbev_data_engineering_case_spark.layers import latest_snapshot
-
-    try:
-        snap = latest_snapshot(state_dir, prefix)
-    except FileNotFoundError:  # first generation ever
-        return None, None
+def _counts_meta(snap: str, state_dir: str, fn_name: str) -> dict:
+    """The ``{"batch_id", "checkpoint", "n_buckets"}`` sidecar of a
+    committed counts snapshot, read as a plain file (no Spark job). A
+    snapshot without it was written by the older layout (a 1-row
+    ``meta`` parquet table); it raises rather than passing for a first
+    generation, which would silently restart the counts from zero."""
     try:
         with open(os.path.join(snap, COUNTS_META)) as f:
-            return snap, json.load(f)
+            return json.load(f)
     except FileNotFoundError:
         raise ValueError(
             f"{fn_name}: state dir {state_dir!r} holds snapshot"
@@ -2263,58 +2207,46 @@ def _run_stream_counts_update(
     timeout: int,
     fn_name: str,
     prefix: str,
-    select_cols: tuple[str, ...],
+    text_col: str,
+    label_col: str,
     id_col: str,
     train,
     merge,
     n_buckets: int | None,
     keep_snapshots: int | None,
 ) -> dict[str, int]:
-    """The additive-count artifact streams' ONE guard chain + commit
-    loop (binary and multiclass twins delegate here, so checkpoint
-    lineage, replay skip, geometry refusal, and snapshot discipline
-    are defined once). Per batch: checkpoint-lineage refusal → geometry
-    refusal → replay skip, all read from the parent snapshot's
-    ``meta.json`` sidecar (a file read, no Spark job, so a replayed
-    batch launches none) → null-filter + per-batch id dedup, cut once
-    with its row count observed (an empty batch stops here) →
-    train-on-batch → additive merge → one atomic snapshot holding
-    ``counts`` and the ``{"batch_id", "checkpoint", "n_buckets"}``
-    sidecar, published together by ``commit_snapshot``'s rename."""
-    from inbev_data_engineering_case_spark.layers import (
-        commit_snapshot,
-        next_run_after,
-        prune_snapshots,
-        run_id_of,
-    )
+    """The additive-count artifact streams' ONE guard chain (binary and
+    multiclass twins delegate here, so checkpoint lineage, replay skip
+    and geometry refusal are defined once), run on ``_run_state_stream``.
+    Per batch: checkpoint-lineage refusal → geometry refusal → replay
+    skip, all read from the parent snapshot's ``meta.json`` sidecar (a
+    file read, no Spark job, so a replayed batch launches none) →
+    null-filter + per-batch id dedup, cut once with its row count
+    observed (an empty batch stops here) → train-on-batch → additive
+    merge → one snapshot holding ``counts`` and the sidecar."""
     from inbev_data_engineering_case_spark.operators.classify import (
         DEFAULT_N_BUCKETS,
     )
 
     spark = labeled_stream.sparkSession
-    null_guard = None
-    for c in select_cols[1:]:  # id nulls are legal to the hash; text/label not
-        cond = F.col(c).isNotNull()
-        null_guard = cond if null_guard is None else (null_guard & cond)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def advance(batch_df: DataFrame, batch_id: int, parent_snap):
         # the RAW checkpoint string is the lineage key: abspath would
         # make it cwd-dependent for relative paths and mangle URI
         # checkpoints (s3a://...), spuriously refusing valid resumes.
         # Pass the same spelling across runs — the refusal message
         # shows both strings when they differ.
-        ckpt_key = checkpoint
-        parent_snap, meta = _latest_counts_meta(state_dir, prefix, fn_name)
         if parent_snap is None:
-            stored, parent = None, None
+            stored = None
             buckets = n_buckets or DEFAULT_N_BUCKETS
         else:
-            if meta["checkpoint"] != ckpt_key:
+            meta = _counts_meta(parent_snap, state_dir, fn_name)
+            if meta["checkpoint"] != checkpoint:
                 raise ValueError(
                     f"{fn_name}: stored counts were"
                     f" maintained under checkpoint"
                     f" {meta['checkpoint']!r} but this stream runs"
-                    f" under {ckpt_key!r} — batch ids from a fresh"
+                    f" under {checkpoint!r} — batch ids from a fresh"
                     " checkpoint restart at 0, so the replay guard"
                     " would silently skip new batches; keep the"
                     " original checkpoint (availableNow re-runs pick"
@@ -2335,56 +2267,32 @@ def _run_stream_counts_update(
                     " state_dir"
                 )
             if batch_id <= meta["batch_id"]:
-                return  # replayed batch: its counts are already folded in
+                return None  # replayed: its counts are already folded in
             stored = read_parquet(
                 spark, os.path.join(parent_snap, "counts")
             )
-            parent = run_id_of(parent_snap, prefix)
-        batch = _cut_nonempty(
-            batch_df.select(*select_cols)
-            .filter(null_guard)
-            .dropDuplicates([id_col])
-        )
+        # id nulls are legal to the hash; text/label nulls are not
+        batch = _cut_nonempty(batch_df, id_col, text_col, label_col)
         if batch is None:
-            return
+            return None
         delta = train(batch, buckets)
-        counts = merge(stored, delta) if stored is not None else delta
-        sidecar = {
-            "batch_id": int(batch_id),
-            "checkpoint": ckpt_key,
-            "n_buckets": buckets,
+        return {
+            "counts": merge(stored, delta) if stored is not None else delta,
+            COUNTS_META: {
+                "batch_id": int(batch_id),
+                "checkpoint": checkpoint,
+                "n_buckets": buckets,
+            },
         }
 
-        def write_all(staging: str) -> None:
-            write_parquet(counts, os.path.join(staging, "counts"))
-            with open(os.path.join(staging, COUNTS_META), "w") as f:
-                json.dump(sidecar, f)
-
-        commit_snapshot(
-            state_dir,
-            next_run_after(parent),
-            write_all,
-            expected_parent=parent,
-            prefix=prefix,
-        )
-        if keep_snapshots:
-            prune_snapshots(state_dir, prefix, keep_snapshots)
-
     # refuse an older-layout state dir before the stream starts
-    _latest_counts_meta(state_dir, prefix, fn_name)
-    q = (
-        labeled_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    parent_snap = _parent_snapshot(state_dir, prefix)
+    if parent_snap is not None:
+        _counts_meta(parent_snap, state_dir, fn_name)
+    return _run_state_stream(
+        labeled_stream, state_dir, checkpoint, timeout, prefix, advance,
+        keep_snapshots, f"counts-artifact stream ({prefix})",
     )
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"counts-artifact stream ({prefix}) to {state_dir} did not"
-            f" drain in {timeout}s"
-        )
-    return query_metrics(q)
 
 
 MULTICLASS_ARTIFACT_PREFIX = "mclfart"
@@ -2461,7 +2369,8 @@ def run_stream_multiclass_update(
         timeout=timeout,
         fn_name="run_stream_multiclass_update",
         prefix=MULTICLASS_ARTIFACT_PREFIX,
-        select_cols=(id_col, text_col, class_col),
+        text_col=text_col,
+        label_col=class_col,
         id_col=id_col,
         train=train,
         merge=merge_multiclass_bow_counts,

@@ -227,3 +227,34 @@ def test_parquet_reads_go_through_the_reader():
             if "read" in chain and "schema" not in chain:
                 raw.append(f"{path.relative_to(root)}:{node.lineno}")
     assert not raw, f"parquet reads outside sources/readers.py: {raw}"
+
+
+def test_snapshot_chains_advance_through_layers():
+    """Static (no Spark): every snapshot chain advances through one
+    commit path and every stream drains through one loop. No package
+    module other than ``layers.py`` calls ``commit_snapshot(`` — writers
+    go through ``layers.advance_snapshot``, which derives the expected
+    parent and the next run id from the snapshot they read — and only
+    ``streaming/events.py``'s ``_drain`` calls ``.awaitTermination(``."""
+    root = pathlib.Path(__file__).resolve().parent.parent / _PKG
+    raw = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        tree = ast.parse(path.read_text())
+        drains = set()  # ids of the nodes inside events.py's _drain
+        if rel == pathlib.Path("streaming", "events.py"):
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "_drain":
+                    drains.update(id(node) for node in ast.walk(fn))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = func.attr if isinstance(func, ast.Attribute) else (
+                func.id if isinstance(func, ast.Name) else None
+            )
+            if name == "commit_snapshot" and path != root / "layers.py":
+                raw.append(f"{rel}:{node.lineno} commit_snapshot")
+            if name == "awaitTermination" and id(node) not in drains:
+                raw.append(f"{rel}:{node.lineno} awaitTermination")
+    assert not raw, f"snapshot commits or drains outside their helper: {raw}"

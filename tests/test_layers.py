@@ -435,6 +435,65 @@ def test_commit_snapshot_rejects_duplicate_run_id_and_breaks_stale_lock(
     assert _advance(tmp_path, "2024-01-05-00-00", {3}) is None
 
 
+def _write_marker(text):
+    """A plain-file ``write_fn`` staging one ``ids.txt``."""
+
+    def write(staging):
+        os.makedirs(staging)
+        with open(os.path.join(staging, "ids.txt"), "w") as f:
+            f.write(text)
+
+    return write
+
+
+def test_advance_snapshot_first_generation_and_prune(tmp_path):
+    """Parent None on an empty dir publishes run 000000000001; each
+    advance from the snapshot it read takes the next zero-padded run id,
+    and ``keep_snapshots`` prunes all but the newest generations."""
+    from inbev_data_engineering_case_spark.layers import (
+        advance_snapshot,
+        latest_snapshot,
+    )
+
+    base = str(tmp_path / "chain")
+    first = advance_snapshot(base, "idx", None, _write_marker("1"))
+    assert os.path.basename(first) == "idx_000000000001"
+    snap = first
+    for i in range(2, 5):
+        snap = advance_snapshot(
+            base, "idx", snap, _write_marker(str(i)), keep_snapshots=2
+        )
+    assert os.path.basename(snap) == "idx_000000000004"
+    assert latest_snapshot(base, "idx") == snap
+    assert sorted(n for n in os.listdir(base) if n.startswith("idx_")) == [
+        "idx_000000000003", "idx_000000000004",
+    ]
+
+
+def test_advance_snapshot_refuses_a_stale_parent(tmp_path):
+    """A writer that read a generation another writer has since advanced
+    past raises SnapshotConflictError and publishes nothing: the newer
+    generation stays latest. Parent None on a non-empty chain is stale
+    the same way."""
+    from inbev_data_engineering_case_spark.layers import (
+        SnapshotConflictError,
+        advance_snapshot,
+        latest_snapshot,
+    )
+
+    base = str(tmp_path / "chain")
+    read = advance_snapshot(base, "idx", None, _write_marker("1"))
+    newer = advance_snapshot(base, "idx", read, _write_marker("2"))
+    with pytest.raises(SnapshotConflictError, match="expected parent"):
+        advance_snapshot(base, "idx", read, _write_marker("stale"))
+    with pytest.raises(SnapshotConflictError, match="expected parent"):
+        advance_snapshot(base, "idx", None, _write_marker("stale"))
+    assert latest_snapshot(base, "idx") == newer
+    with open(os.path.join(newer, "ids.txt")) as f:
+        assert f.read() == "2"
+    assert not [n for n in os.listdir(base) if n.startswith(".staging")]
+
+
 def test_link_parquet_files_falls_back_to_copy(tmp_path, monkeypatch):
     """Filesystems without hard-link support (FUSE object-store mounts,
     NFS with links disabled) raise OSError from os.link; the delta

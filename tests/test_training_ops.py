@@ -5426,15 +5426,16 @@ def test_distribution_drift_approx_cuts_within_gk_rank_error(spark):
 
 @pytest.mark.slow
 def test_incremental_embedding_near_dup_full_batch_parity(spark):
-    """incremental_embedding_near_dup(stored sig table, new vectors)
-    must return EXACTLY the embedding_near_dup_pairs(stored ∪ new)
-    rows involving a new vector — including when a bucket crosses the
-    hot cap only once the delta lands (combined-population guard and
-    combined min-id star representative), and under multi-probe."""
+    """incremental_embedding_near_dup_normalized(stored (vectors,
+    buckets), new vectors) must return EXACTLY the
+    embedding_near_dup_pairs(stored ∪ new) rows involving a new vector —
+    including when a bucket crosses the hot cap only once the delta
+    lands (combined-population guard and combined min-id star
+    representative), and under multi-probe."""
     from inbev_data_engineering_case_spark.operators.dedup import (
-        build_embedding_sig_table,
+        build_embedding_sig_tables_normalized,
         embedding_near_dup_pairs,
-        incremental_embedding_near_dup,
+        incremental_embedding_near_dup_normalized,
     )
 
     emb = spark.read.parquet(
@@ -5477,17 +5478,14 @@ def test_incremental_embedding_near_dup_full_batch_parity(spark):
                 ).collect(),
             )
         )
+        vectors, buckets = build_embedding_sig_tables_normalized(
+            stored, num_planes=kw["num_planes"], n_probes=kw["n_probes"]
+        )
         got = sorted(
             map(
                 tuple,
-                incremental_embedding_near_dup(
-                    build_embedding_sig_table(
-                        stored,
-                        num_planes=kw["num_planes"],
-                        n_probes=kw["n_probes"],
-                    ),
-                    new,
-                    **kw,
+                incremental_embedding_near_dup_normalized(
+                    vectors, buckets, new, **kw
                 ).collect(),
             )
         )
@@ -5495,56 +5493,47 @@ def test_incremental_embedding_near_dup_full_batch_parity(spark):
 
 
 def test_embedding_sig_table_normalized_storage_parity(spark):
-    """The multi-probe storage split: build_embedding_sig_tables_
-    normalized + join_embedding_sig_tables must reassemble EXACTLY the
-    denormalized build_embedding_sig_table rows at n_probes>1, and the
-    incremental path must return identical pairs when fed the
-    reassembled form — normalization is a storage choice, not a
-    semantics change."""
+    """The stored embedding state at n_probes>1: ``vectors`` holds each
+    input embedding ONCE as (id, v), and ``buckets`` holds one
+    (seed, id, bucket) row per probe whose bucket is that seed's
+    ``signlsh_bucket`` of the input vector (computed here by the
+    runtime-weight form, independently of the builder's literal
+    weights), with the build geometry on every row."""
     from inbev_data_engineering_case_spark.operators.dedup import (
-        build_embedding_sig_table,
         build_embedding_sig_tables_normalized,
-        incremental_embedding_near_dup,
-        join_embedding_sig_tables,
+    )
+    from inbev_data_engineering_case_spark.operators.similarity import (
+        signlsh_bucket,
     )
 
-    emb = spark.read.parquet(
+    stored = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias(
             "embedding"
         ),
-    )
-    stored = emb.filter(F.col("vec_id") < 80)
-    new = stored.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x * (F.lit(1) + F.lit(0.001) * ((i % 3) - 1)),
-        ).alias("embedding"),
-    )
+    ).filter(F.col("vec_id") < 80)
 
-    denorm = build_embedding_sig_table(stored, num_planes=6, n_probes=3)
     vectors, buckets = build_embedding_sig_tables_normalized(
         stored, num_planes=6, n_probes=3
     )
-    joined = join_embedding_sig_tables(vectors, buckets)
-    assert joined.columns == denorm.columns
-    key = lambda r: (r["seed"], r["id"])  # noqa: E731
-    assert sorted(map(tuple, joined.collect()), key=lambda t: t[:2]) == \
-        sorted(map(tuple, denorm.collect()), key=lambda t: t[:2])
-    # each embedding is stored once; each probe contributes one bucket row
-    assert vectors.count() == stored.count()
-    assert buckets.count() == 3 * stored.count()
-    assert "v" not in buckets.columns and "bucket" not in vectors.columns
-
-    kw = dict(threshold=0.9, num_planes=6, n_probes=3, max_bucket_size=10)
-    want = sorted(map(tuple, incremental_embedding_near_dup(
-        denorm, new, **kw).collect()))
-    got = sorted(map(tuple, incremental_embedding_near_dup(
-        joined, new, **kw).collect()))
-    assert got == want and got
+    assert vectors.columns == ["id", "v"]
+    assert buckets.columns == ["seed", "id", "bucket", "num_planes",
+                               "n_probes"]
+    assert sorted(map(tuple, vectors.collect())) == sorted(
+        map(tuple, stored.collect())
+    )
+    want = sorted(
+        (seed, r["vec_id"], r["bucket"], 6, 3)
+        for seed in range(3)
+        for r in stored.select(
+            "vec_id",
+            signlsh_bucket("embedding", 6, seed=seed).alias("bucket"),
+        ).collect()
+    )
+    assert sorted(map(tuple, buckets.collect())) == want
+    assert len(want) == 3 * stored.count()
 
 
 def test_incremental_simhash_full_batch_parity(spark):
@@ -5610,11 +5599,11 @@ def test_incremental_state_geometry_guards_raise_in_plan(spark):
     bucket (lost recall) — the CMS wrong-geometry discipline applied
     to the delta paths."""
     from inbev_data_engineering_case_spark.operators.dedup import (
-        build_embedding_sig_table,
+        build_embedding_sig_tables_normalized,
         build_gram_table,
         build_simhash_table,
         incremental_containment_pairs,
-        incremental_embedding_near_dup,
+        incremental_embedding_near_dup_normalized,
         incremental_simhash_near_pairs,
     )
 
@@ -5667,8 +5656,10 @@ def test_incremental_state_geometry_guards_raise_in_plan(spark):
         (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
     )
     with pytest.raises(Exception, match="geometry mismatch"):
-        incremental_embedding_near_dup(
-            build_embedding_sig_table(emb, num_planes=8, n_probes=1),
+        incremental_embedding_near_dup_normalized(
+            *build_embedding_sig_tables_normalized(
+                emb, num_planes=8, n_probes=1
+            ),
             new_emb,
             num_planes=6,
             n_probes=1,
@@ -5678,16 +5669,16 @@ def test_incremental_state_geometry_guards_raise_in_plan(spark):
 @pytest.mark.slow
 def test_incremental_embedding_normalized_native_parity(spark):
     """incremental_embedding_near_dup_normalized consumes the
-    (vectors, buckets) pair directly — no reassembly join, vectors
-    joining only for candidates — and must return EXACTLY the
-    denormalized path's pairs at n_probes>1, including when identical
-    vectors flood one bucket past the hot cap (combined-population
+    (vectors, buckets) pair directly — vectors joining only for
+    candidates — and must return EXACTLY the
+    embedding_near_dup_pairs(stored ∪ new) rows involving a new vector
+    at n_probes>1, including when identical vectors flood one bucket
+    past the hot cap in the stored AND the new side (combined-population
     guard + min-id star representative, id-only until the deferred
     vector join)."""
     from inbev_data_engineering_case_spark.operators.dedup import (
-        build_embedding_sig_table,
         build_embedding_sig_tables_normalized,
-        incremental_embedding_near_dup,
+        embedding_near_dup_pairs,
         incremental_embedding_near_dup_normalized,
     )
 
@@ -5721,25 +5712,24 @@ def test_incremental_embedding_normalized_native_parity(spark):
         .select(F.col("id").alias("vec_id"), "embedding")
     )
 
-    kw = dict(threshold=0.9, num_planes=6, n_probes=3, max_bucket_size=10)
-    denorm = build_embedding_sig_table(stored, num_planes=6, n_probes=3)
+    new_ids = {r["vec_id"] for r in new.select("vec_id").collect()}
     vectors, buckets = build_embedding_sig_tables_normalized(
         stored, num_planes=6, n_probes=3
     )
-    want = sorted(map(tuple, incremental_embedding_near_dup(
-        denorm, new, **kw).collect()))
-    got = sorted(map(tuple, incremental_embedding_near_dup_normalized(
-        vectors, buckets, new, **kw).collect()))
-    assert got == want and got
-    # no-hot-guard form agrees too (the cold-only plan)
-    kw2 = dict(threshold=0.9, num_planes=6, n_probes=3,
-               max_bucket_size=None)
-    want2 = sorted(map(tuple, incremental_embedding_near_dup(
-        denorm, new, **kw2).collect()))
-    got2 = sorted(map(tuple, incremental_embedding_near_dup_normalized(
-        vectors, buckets, new, **kw2).collect()))
-    assert got2 == want2 and got2
-    # geometry mismatch raises in-plan, same as the denormalized twin
+    # with and without the hot guard (the cold-only plan)
+    for max_bucket_size in (10, None):
+        kw = dict(threshold=0.9, num_planes=6, n_probes=3,
+                  max_bucket_size=max_bucket_size)
+        want = sorted(
+            t
+            for t in map(tuple, embedding_near_dup_pairs(
+                stored.unionByName(new), **kw).collect())
+            if t[0] in new_ids or t[1] in new_ids
+        )
+        got = sorted(map(tuple, incremental_embedding_near_dup_normalized(
+            vectors, buckets, new, **kw).collect()))
+        assert got == want and got, kw
+    # geometry mismatch raises in-plan
     import pytest
 
     with pytest.raises(Exception, match="num_planes"):

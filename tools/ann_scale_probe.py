@@ -19,10 +19,11 @@ Usage: python tools/ann_scale_probe.py [multiplier ...]   (default: 1 4 10)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -23,10 +23,11 @@ Usage: python tools/graph_scale_probe.py [n_nodes]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _edges(spark, n_nodes: int):

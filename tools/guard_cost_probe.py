@@ -13,11 +13,12 @@ Usage: python tools/guard_cost_probe.py [sf_dir]   (default /root/testdata/sf0.1
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 RUNS = 5
 

@@ -18,11 +18,12 @@ Usage: python tools/index_probe.py [sf_dir] [n_queries]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 QUERIES = [
     ["customer", "order"],

@@ -22,11 +22,12 @@ Usage: python tools/pq_scale_probe.py [m k ...]   (default: "4 16 8 64")
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

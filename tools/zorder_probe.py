@@ -13,11 +13,12 @@ Usage: python tools/zorder_probe.py [n_files]   (default 16)
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _scan_output_rows(df) -> int:
