@@ -12,8 +12,8 @@ needs: joins, window functions, event-time windowing, deduplication
 (exact/MinHash-LSH/SimHash/n-gram-Jaccard), embedding similarity search,
 text analysis, and multimodal-column plumbing (binary payload columns with
 a text stand-in featurizer, byte-chunk frame sampling, perceptual image
-near-dup, and opt-in stdlib decoders for the lossless image, Y4M, WAV
-and FLAC formats; lossy and codec-bound payloads dead-letter).
+near-dup, and opt-in stdlib decoders for the lossless image formats and
+WAV; video and every other codec-bound payload dead-letter).
 
 Modules
 -------

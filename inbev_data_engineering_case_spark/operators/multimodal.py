@@ -17,18 +17,17 @@ The surface the catalog and the curation gate use:
   ``pnm_assets_from_documents`` builds the deterministic PNM fixture
   those queries run on.
 
-``real_decoder=True`` (``decode_features``, ``sample_frames``,
-``resize_assets``) swaps the stand-in for decoders built from the
-stdlib and numpy, covering the lossless formats only: BMP, binary PNM,
-PNG and GIF images, uncompressed YUV4MPEG2 video, and WAV (integer and
-float PCM, G.711) and FLAC (``operators/flac.py``) audio. Lossy and
-codec-bound formats (JPEG, WebP, HEIF/AVIF, MP4/WebM, mp3, ...) raise
-``NotImplementedError``. At the operator level every decode error is
-dead-lettered, not raised: the row keeps ``decode_ok=false``, the
-message in ``error`` and, for features, a ``reason`` code
-(``decoder_gap`` for a deliberately unsupported format, ``corrupt``
-for a malformed payload); ``strict=True`` raises instead. One
-undecodable asset flags its row rather than failing the job.
+``decode_features(real_decoder=True)`` swaps the stand-in for decoders
+built from the stdlib and numpy, covering the lossless formats only:
+BMP, binary PNM, PNG and GIF images and WAV audio (integer and float
+PCM, G.711). Every other image or audio format and all video (JPEG,
+WebP, FLAC, mp3, YUV4MPEG2, MP4, ...) raise ``NotImplementedError``.
+At the operator level every decode error is dead-lettered, not raised:
+the row keeps ``decode_ok=false``, the message in ``error`` and, for
+features, a ``reason`` code (``decoder_gap`` for a deliberately
+unsupported format, ``corrupt`` for a malformed payload);
+``strict=True`` raises instead. One undecodable asset flags its row
+rather than failing the job.
 
 The distributed shape is the production one: Arrow batches move
 payload bytes from the JVM columnar buffers into Python once per
@@ -84,8 +83,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame_idx", T.LongType(), False),
         T.StructField("frame", T.BinaryType(), True),
         T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("decode_ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
     ]
 )
 
@@ -160,8 +157,8 @@ def _featurize_bmp(payload: bytes) -> tuple[int, list[float]]:
 def _pnm_header(payload: bytes) -> tuple[int, int, int, int]:
     """Parse a binary PNM (P5/P6) header → (width, height, channels,
     raster_offset). Whitespace/comment-tolerant; raises ValueError on any
-    malformation (shared by featurize and resize so both fail loud the
-    same way)."""
+    malformation (shared by featurize and ``_decode_image_pixels`` so
+    both fail loud the same way)."""
     magic = payload[:2]
     channels = {b"P6": 3, b"P5": 1}.get(magic)
     if channels is None:
@@ -191,6 +188,11 @@ def _pnm_header(payload: bytes) -> tuple[int, int, int, int]:
     if not 0 < maxval < 256:
         raise ValueError(f"unsupported PNM maxval {maxval} (8-bit only)")
     # exactly ONE whitespace byte separates maxval from the raster
+    if payload[i : i + 1] not in (b" ", b"\t", b"\r", b"\n"):
+        raise ValueError(
+            f"malformed PNM header at byte {i} (whitespace expected "
+            "after maxval)"
+        )
     return width, height, channels, i + 1
 
 
@@ -535,80 +537,6 @@ def _featurize_png(payload: bytes) -> tuple[int, list[float]]:
     return checksum, [float(w), float(h), float(channels), mean_px]
 
 
-def _parse_y4m(payload: bytes):
-    """Demux an uncompressed YUV4MPEG2 stream with the stdlib: parse the
-    parameter line (W/H/C tags; chroma defaults to 420), then split the
-    byte stream at FRAME markers into fixed-size raw planar frames.
-    Returns ``(width, height, frames)`` — each frame is the raw plane
-    bytes, luma first."""
-    if not payload.startswith(b"YUV4MPEG2"):
-        raise ValueError("not a YUV4MPEG2 payload")
-    nl = payload.find(b"\n")
-    if nl < 0:
-        raise ValueError("Y4M header line unterminated")
-    width = height = 0
-    chroma = "420"
-    for param in payload[9:nl].split():
-        tag, val = param[:1], param[1:]
-        if tag == b"W":
-            width = int(val)
-        elif tag == b"H":
-            height = int(val)
-        elif tag == b"C":
-            chroma = val.decode("ascii")
-    if width <= 0 or height <= 0:
-        raise ValueError("Y4M header missing W/H")
-    if chroma.startswith("420"):
-        frame_size = width * height * 3 // 2
-    elif chroma.startswith("422"):
-        frame_size = width * height * 2
-    elif chroma.startswith("444"):
-        frame_size = width * height * 3
-    elif chroma.startswith("mono"):
-        frame_size = width * height
-    else:
-        raise ValueError(f"unsupported Y4M chroma subsampling {chroma!r}")
-    frames: list[bytes] = []
-    pos = nl + 1
-    while pos < len(payload):
-        if payload[pos : pos + 5] != b"FRAME":
-            raise ValueError(f"Y4M FRAME marker expected at byte {pos}")
-        fnl = payload.find(b"\n", pos)
-        if fnl < 0 or fnl + 1 + frame_size > len(payload):
-            raise ValueError("Y4M frame truncated")
-        frames.append(payload[fnl + 1 : fnl + 1 + frame_size])
-        pos = fnl + 1 + frame_size
-    return width, height, frames
-
-
-def _featurize_y4m(payload: bytes) -> tuple[int, list[float]]:
-    """Real (uncompressed) video featurization: demux, then
-    [width, height, n_frames, mean luma] with the mean taken over each
-    frame's luma plane (first w*h bytes — valid for every supported chroma
-    layout); checksum = crc32 over the concatenated frame payloads, so
-    header cosmetics (frame-rate tag, param order) don't perturb it."""
-    import zlib
-
-    import numpy as np
-
-    width, height, frames = _parse_y4m(payload)
-    crc = 0
-    luma_total, luma_count = 0.0, 0
-    n_luma = width * height
-    for frame in frames:
-        crc = zlib.crc32(frame, crc)
-        luma = np.frombuffer(frame, dtype=np.uint8, count=n_luma)
-        luma_total += float(luma.sum())
-        luma_count += n_luma
-    mean_luma = luma_total / luma_count if luma_count else 0.0
-    return crc % 1_000_003, [
-        float(width),
-        float(height),
-        float(len(frames)),
-        mean_luma,
-    ]
-
-
 def _parse_wav_raw(payload: bytes):
     """Minimal RIFF/WAVE chunk walk → (format_tag, n_channels,
     sample_rate, bits_per_sample, data bytes). Chunks are
@@ -690,8 +618,8 @@ def _wav_linear(tag: int, bits: int, data: bytes):
     """Decode one WAV data chunk to linear samples → ``(samples,
     canon)``: the sample array plus the canonical little-endian bytes
     the fingerprint hashes. Integer PCM canonicalizes to SIGNED LE at
-    every width (WAV 8-bit is unsigned, offset 128) so a WAV and a
-    FLAC of the same audio hash identically; G.711 expands through the
+    every width (WAV 8-bit is unsigned, offset 128, and hashes as the
+    signed samples it stores); G.711 expands through the
     formula-generated tables and fingerprints the EXPANDED int16 (the
     companded bytes are a wire format, not the audio); float PCM
     (tag 3) fingerprints its native [-1, 1] samples. Table-bound tags
@@ -734,7 +662,7 @@ def _wav_linear(tag: int, bits: int, data: bytes):
             raise ValueError("wav: unsupported float bit depth %d" % bits)
         # NaN/Inf are valid IEEE encodings but junk audio: letting
         # them through poisons the feature column (NaN mean) with
-        # decode_ok=true — the integer/FLAC paths can never emit a
+        # decode_ok=true — the integer paths can never emit a
         # non-finite feature, so neither may this one
         if samples.size and not np.isfinite(samples).all():
             raise ValueError("wav: non-finite float samples")
@@ -784,38 +712,28 @@ def _stdlib_featurize(media_type: str, payload: bytes) -> tuple[int, list[float]
 
     - ``audio/*``: WAV through one native RIFF parse (``_featurize_wav``:
       integer PCM at every width, IEEE float, G.711 A-law/µ-law via the
-      formula-generated companding tables) and FLAC natively
-      (``operators/flac.py``); feature = [duration_s, framerate,
-      n_channels, mean |amplitude|], checksum = crc32 of the canonical
-      little-endian PCM, so a WAV and a FLAC of the same audio
-      fingerprint identically.
+      formula-generated companding tables); feature = [duration_s,
+      framerate, n_channels, mean |amplitude|], checksum = crc32 of the
+      canonical little-endian PCM.
     - ``image/*``: BMP, binary PNM, PNG and GIF decode to a normalized
       raster; feature = [width, height, depth, mean pixel], checksum =
       crc32 of the raster, so one image stored in any of them
       fingerprints identically.
-    - ``video/*``: uncompressed YUV4MPEG2 demuxes natively (frame split
-      + luma stats).
-    - anything else: opaque binary — crc32 checksum and compressibility
-      features (zlib ratio), the standard corpus-QA signal.
+    - anything else but ``video/*``: opaque binary — crc32 checksum and
+      compressibility features (zlib ratio), the standard corpus-QA
+      signal.
 
-    Any other audio, image or video container raises
+    Every other audio or image container and all video raise
     ``NotImplementedError`` (the ``decoder_gap`` reason)."""
     import zlib
 
     kind = media_type.partition("/")[0]
     if kind == "audio":
-        if payload[:4] == b"fLaC":
-            from inbev_data_engineering_case_spark.operators.flac import (
-                featurize_flac,
-            )
-
-            return featurize_flac(payload)
         if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
             return _featurize_wav(payload)
         raise NotImplementedError(
-            "audio decoding beyond WAV and FLAC requires a codec "
-            "library; WAV (integer/float PCM, G.711) and FLAC decode "
-            "natively"
+            "audio decoding beyond WAV requires a codec library; WAV "
+            "(integer/float PCM, G.711) decodes natively"
         )
     if kind == "image":
         if payload[:2] == b"BM":
@@ -831,11 +749,8 @@ def _stdlib_featurize(media_type: str, payload: bytes) -> tuple[int, list[float]
             "binary PNM, PNG and GIF decode natively"
         )
     if kind == "video":
-        if payload[:9] == b"YUV4MPEG2":
-            return _featurize_y4m(payload)
         raise NotImplementedError(
-            "compressed video decoding requires a codec library such "
-            "as ffmpeg; uncompressed YUV4MPEG2 demuxes natively"
+            "video decoding requires a codec library such as ffmpeg"
         )
     checksum = zlib.crc32(payload) % 1_000_003
     n = len(payload)
@@ -854,8 +769,9 @@ def decode_features(
     ``_fake_featurize``: its output is reproducible in SQL, which is what
     the ``q_multimodal_features`` oracle checks. ``real_decoder=True``
     routes to the stdlib decoders in ``_stdlib_featurize`` (lossless
-    images, YUV4MPEG2 video, WAV and FLAC audio; crc32/zlib features
-    for opaque binary).
+    images and WAV audio; crc32/zlib features for opaque binary; video
+    and every other audio or image format dead-letter as
+    ``decoder_gap``).
 
     Decode failures are **dead-lettered, not raised**: a corrupt or
     unsupported asset yields its row with ``decode_ok=false``, null
@@ -906,15 +822,6 @@ def decode_features(
             )
 
     return assets.mapInPandas(featurize, schema=FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    list(ASSET_SCHEMA.fields)
-    + [
-        T.StructField("decode_ok", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
 
 
 def _decode_image_pixels(payload: bytes):
@@ -997,277 +904,39 @@ def _decode_image_pixels(payload: bytes):
     )
 
 
-def _encode_pnm(pixels) -> tuple[bytes, str]:
-    """Re-encode an (h, w, c) uint8 array as binary PNM — P5 for 1
-    channel, P6 for 3 — returning (payload, media_type). PNM is the
-    deterministic stdlib-writable target: no compressor choices, so two
-    identical pixel arrays always serialize identically."""
-    h, w, c = pixels.shape
-    magic, mtype = (
-        (b"P6", "image/x-portable-pixmap")
-        if c == 3
-        else (b"P5", "image/x-portable-graymap")
-    )
-    return magic + b"\n%d %d\n255\n" % (w, h) + pixels.tobytes(), mtype
-
-
-def _resize_image(payload: bytes, target_bytes: int) -> tuple[bytes, str]:
-    """Real image resize: decode (BMP/PNM/PNG/GIF) → nearest-neighbor
-    downsample so the raster fits ``target_bytes`` → re-encode as binary
-    PNM. Never upsamples; aspect ratio is preserved."""
-    import numpy as np
-
-    pixels = _decode_image_pixels(payload)
-    h, w, c = pixels.shape
-    scale = min(1.0, (target_bytes / max(pixels.size, 1)) ** 0.5)
-    new_h, new_w = max(1, int(h * scale)), max(1, int(w * scale))
-    ys = (np.arange(new_h) * h) // new_h
-    xs = (np.arange(new_w) * w) // new_w
-    return _encode_pnm(np.ascontiguousarray(pixels[ys][:, xs]))
-
-
-def _decimated_rate(framerate: int, n_frames: int, n_kept: int) -> int:
-    """New sample rate after keeping ``n_kept`` of ``n_frames`` frames,
-    ROUNDED so duration is preserved to the nearest representable
-    integer rate — ``framerate // k`` floors to 1 under aggressive
-    decimation (k > rate) and then reports arbitrarily wrong durations
-    (32 samples at 1 Hz = '32 s' for a 20 s clip)."""
-    if n_frames <= 0 or n_kept <= 0:
-        return max(1, framerate)
-    return max(1, (n_kept * framerate + n_frames // 2) // n_frames)
-
-
-def _assemble_wav(
-    tag: int, nch: int, rate: int, bits: int, frames: bytes
-) -> bytes:
-    """Canonical-layout RIFF/WAVE assembly (fmt + data)."""
-    import struct
-
-    block = max(1, nch * (bits // 8))
-    fmt = struct.pack("<HHIIHH", tag, nch, rate, rate * block, block, bits)
-    body = b"WAVE"
-    body += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(frames)) + frames
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _resize_wav(payload: bytes, target_bytes: int) -> bytes:
-    """Real audio downsample for every WAV flavor: decimate frames by
-    the smallest integer factor that fits ``target_bytes`` (of the
-    OUTPUT frames), rate re-derived from the kept-frame count so
-    duration is preserved to integer-rate rounding
-    (``_decimated_rate``). Integer and float PCM keep their format tag
-    and bit depth; G.711 expands to plain PCM16 — re-companding the
-    decimated signal would stack a second lossy pass. Table-bound tags
-    raise ``NotImplementedError`` → honest dead-letter."""
-    tag, nch, rate, bits, data = _parse_wav_raw(payload)
-    # _wav_linear validates EVERY flavor up front (bit depths, bound
-    # tags → NotImplementedError, non-finite floats): without it a
-    # 12-bit PCM or 16-bit float would resize 'successfully' into a
-    # file the pipeline's own decoder rejects — worse, 12-bit would
-    # decimate mid-sample
-    _samples, canon = _wav_linear(tag, bits, data)
-    if tag in (6, 7):
-        data, tag, bits = canon, 1, 16  # expand: PCM16 out
-    frame_size = max(1, nch * max(1, bits // 8))
-    if len(data) % frame_size:
-        raise ValueError("wav: data chunk truncated mid-frame")
-    n_frames = len(data) // frame_size
-    k = max(1, -(-len(data) // max(target_bytes, frame_size)))
-    kept = b"".join(
-        data[i : i + frame_size]
-        for i in range(0, len(data), frame_size * k)
-    )
-    return _assemble_wav(
-        tag, nch,
-        _decimated_rate(rate, n_frames, len(kept) // frame_size),
-        bits, kept,
-    )
-
-
-def _resize_flac(payload: bytes, target_bytes: int) -> bytes:
-    """The ``_resize_wav`` rule for FLAC: decimate PCM frames by the
-    smallest integer factor that fits the DECODED frames under the
-    byte budget (compressed output typically lands below it; for loud
-    high-bit-depth audio the encoder's verbatim fallback adds
-    container overhead ABOVE the PCM budget — the budget sizes the
-    decimation, it is not a hard output ceiling), re-derive the sample
-    rate from the kept-frame count so duration is preserved, re-encode
-    FLAC (fixed order 1 — the re-encode is real, not a container
-    rewrite)."""
-    from inbev_data_engineering_case_spark.operators.flac import (
-        flac_decode,
-        flac_encode,
-    )
-
-    rate, nch, bps, samples = flac_decode(payload)
-    frame_size = nch * ((bps + 7) // 8)
-    n_frames = samples.shape[0]
-    k = max(1, -(-n_frames * frame_size // max(1, target_bytes)))
-    kept = samples[::k]
-    return flac_encode(
-        kept,
-        _decimated_rate(rate, n_frames, kept.shape[0]),
-        bps=bps,
-        block_size=max(16, min(4096, kept.shape[0] or 16)),
-        subframe="fixed",
-        fixed_order=1,
-    )
-
-
-def resize_assets(
-    assets: DataFrame,
-    target_bytes: int = 64,
-    real_decoder: bool = False,
-    strict: bool = False,
-) -> DataFrame:
-    """Resize each asset payload (1→1 binary transform, asset schema plus
-    the ``decode_ok``/``error`` dead-letter columns out). The real branch
-    decodes → resamples → re-encodes with the stdlib decoders: images
-    (BMP/PNM/PNG/GIF) are nearest-neighbor downsampled and re-encoded as
-    binary PNM (media_type updated to match), WAV and FLAC audio are
-    frame-decimated with duration preserved (FLAC re-encodes through
-    the native encoder). Opaque binary — and everything under the
-    default stub — truncates / zero-pads to ``target_bytes``:
-    deterministic, and it exercises the exact production plumbing either
-    way (binary in, binary out, metadata recomputed from the new payload).
-
-    A failed decode dead-letters the row — ORIGINAL payload and metadata
-    kept (so a later pass with a real codec can retry it), ``decode_ok``
-    false, message in ``error`` — unless ``strict=True``, which raises."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out_types, out_payloads, metas, oks, errors = [], [], [], [], []
-            for media_type, payload, meta in zip(
-                batch["media_type"], batch["payload"], batch["meta"]
-            ):
-                b = bytes(payload) if payload is not None else b""
-                mtype = media_type
-                kind = media_type.partition("/")[0]
-                try:
-                    if real_decoder and kind == "image":
-                        resized, mtype = _resize_image(b, target_bytes)
-                    elif real_decoder and kind == "audio":
-                        # magic dispatch, matching decode_features: a
-                        # mislabeled WAV/FLAC still resizes for real;
-                        # an unrecognized audio container dead-letters
-                        # honestly instead of being silently truncated
-                        # to garbage with decode_ok=true
-                        if b[:4] == b"fLaC":
-                            resized = _resize_flac(b, target_bytes)
-                            mtype = "audio/flac"
-                        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                            resized = _resize_wav(b, target_bytes)
-                            mtype = "audio/wav"
-                        else:
-                            raise NotImplementedError(
-                                "audio resize beyond WAV and FLAC "
-                                "requires a codec library"
-                            )
-                    else:
-                        resized = b[:target_bytes].ljust(target_bytes, b"\0")
-                except Exception as e:  # noqa: BLE001 — dead-letter path
-                    if strict:
-                        raise
-                    out_types.append(media_type)
-                    out_payloads.append(b)
-                    metas.append(
-                        {"n_bytes": len(b), "source": meta["source"]}
-                    )
-                    oks.append(False)
-                    errors.append(f"{type(e).__name__}: {e}")
-                else:
-                    out_types.append(mtype)
-                    out_payloads.append(resized)
-                    metas.append(
-                        {"n_bytes": len(resized), "source": meta["source"]}
-                    )
-                    oks.append(True)
-                    errors.append(None)
-            yield pd.DataFrame(
-                {
-                    "asset_id": batch["asset_id"],
-                    "media_type": out_types,
-                    "payload": out_payloads,
-                    "meta": metas,
-                    "decode_ok": oks,
-                    "error": errors,
-                }
-            )
-
-    return assets.mapInPandas(resize, schema=RESIZE_SCHEMA)
-
-
 def sample_frames(
-    assets: DataFrame,
-    frame_bytes: int = 32,
-    every_n: int = 2,
-    real_decoder: bool = False,
-    strict: bool = False,
+    assets: DataFrame, frame_bytes: int = 32, every_n: int = 2
 ) -> DataFrame:
     """Frame-sample each asset (1→N explode: one output row per kept
     frame). Payloads are cut into ``frame_bytes``-sized chunks and every
     ``every_n``-th chunk is emitted with its original index, so
-    downstream timing math stays honest. Under ``real_decoder=True``,
-    video payloads are demuxed instead: uncompressed YUV4MPEG2 streams
-    split at FRAME markers into raw planar frames, and any other video
-    container raises. ``mapInPandas`` may yield more rows than it
-    consumes, frames inherit the asset id for downstream joins, and no
-    shuffle happens until something groups on asset_id.
+    downstream timing math stays honest. ``mapInPandas`` may yield more
+    rows than it consumes, frames inherit the asset id for downstream
+    joins, and no shuffle happens until something groups on asset_id.
 
-    A demux failure dead-letters the asset as ONE marker row:
-    ``frame_idx=-1``, null frame, ``decode_ok`` false, message in
-    ``error``, so the asset stays visible downstream instead of killing
-    the job. ``strict=True`` raises."""
+    Both sizes must be at least 1; anything else raises ``ValueError``
+    here, before a plan is built."""
+    if frame_bytes < 1 or every_n < 1:
+        raise ValueError(
+            "sample_frames needs frame_bytes >= 1 and every_n >= 1, got "
+            f"frame_bytes={frame_bytes}, every_n={every_n}"
+        )
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            ids, idxs, frames, oks, errors = [], [], [], [], []
-            for asset_id, media_type, payload in zip(
-                batch["asset_id"], batch["media_type"], batch["payload"]
-            ):
+            ids, idxs, frames = [], [], []
+            for asset_id, payload in zip(batch["asset_id"], batch["payload"]):
                 b = bytes(payload) if payload is not None else b""
-                try:
-                    if real_decoder and media_type.partition("/")[0] == "video":
-                        if b[:9] != b"YUV4MPEG2":
-                            raise NotImplementedError(
-                                "compressed video demux requires a "
-                                "codec library such as ffmpeg; "
-                                "YUV4MPEG2 demuxes natively"
-                            )
-                        _w, _h, chunks = _parse_y4m(b)
-                    else:
-                        chunks = [
-                            b[o : o + frame_bytes]
-                            for o in range(0, len(b), frame_bytes)
-                        ]
-                except Exception as e:  # noqa: BLE001 — dead-letter path
-                    if strict:
-                        raise
+                for o in range(0, len(b), frame_bytes * every_n):
                     ids.append(asset_id)
-                    idxs.append(-1)
-                    frames.append(None)
-                    oks.append(False)
-                    errors.append(f"{type(e).__name__}: {e}")
-                    continue
-                for i in range(0, len(chunks), every_n):
-                    ids.append(asset_id)
-                    idxs.append(i)
-                    frames.append(chunks[i])
-                    oks.append(True)
-                    errors.append(None)
+                    idxs.append(o // frame_bytes)
+                    frames.append(b[o : o + frame_bytes])
             yield pd.DataFrame(
                 {
                     "asset_id": ids,
                     "frame_idx": idxs,
                     "frame": frames,
-                    "n_bytes": pd.array(
-                        [len(f) if f is not None else None for f in frames],
-                        dtype="Int64",
-                    ),
-                    "decode_ok": oks,
-                    "error": errors,
+                    "n_bytes": [len(f) for f in frames],
                 }
             )
 

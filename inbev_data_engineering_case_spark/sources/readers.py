@@ -254,70 +254,6 @@ def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_parquet_table(spark, sf_dir, t) for t in STAR_TABLES}
 
 
-# file-extension -> media_type for the binary-asset landing scan. Content
-# magic still wins at decode time (operators/multimodal.py dispatches on
-# payload bytes), this only routes the metadata.
-_EXT_MEDIA_TYPES = {
-    "bmp": "image/bmp",
-    "png": "image/png",
-    "ppm": "image/x-portable-pixmap",
-    "pgm": "image/x-portable-graymap",
-    "wav": "audio/wav",
-    "flac": "audio/flac",
-    "gif": "image/gif",
-    "webp": "image/webp",
-    "y4m": "video/x-y4m",
-    "avi": "video/x-msvideo",
-    "jpg": "image/jpeg",
-    "jpeg": "image/jpeg",
-    "mp4": "video/mp4",
-}
-
-
-def read_binary_assets(
-    spark: SparkSession, path_glob: str, max_bytes: int | None = None
-) -> DataFrame:
-    """Multimodal landing scan: Spark's ``binaryFile`` source over an
-    object-store glob, mapped to the multimodal asset schema
-    (``operators.multimodal.ASSET_SCHEMA``): asset_id = 60-bit portable
-    hash of the path (stable across re-runs and listing order), media_type
-    from the file extension, payload = raw bytes, metadata struct carrying
-    size + source path.
-
-    Scale notes: ``binaryFile`` never splits a file, so parallelism is
-    file-granular — right for media corpora (many files, each far under a
-    partition budget). ``max_bytes`` pushes a LENGTH filter into the
-    source (``pathGlobFilter``'s sibling pushdown: length and path are
-    read from the file index, so oversized payloads are skipped before a
-    single content byte is read — the pruning that matters when a crawl
-    directory mixes 4 KB thumbnails with 4 GB videos)."""
-    from inbev_data_engineering_case_spark.functions import portable_hash64
-
-    df = spark.read.format("binaryFile").load(path_glob)
-    if max_bytes is not None:
-        df = df.filter(F.col("length") <= max_bytes)
-    # extension of the BASENAME (a dot in a directory name must not leak
-    # into the media-type routing)
-    basename = F.element_at(F.split(F.col("path"), "/"), -1)
-    ext = F.lower(F.element_at(F.split(basename, r"\."), -1))
-    media_type = F.coalesce(
-        *[
-            F.when(ext == e, F.lit(t))
-            for e, t in _EXT_MEDIA_TYPES.items()
-        ],
-        F.lit("application/octet-stream"),
-    )
-    return df.select(
-        portable_hash64("path").alias("asset_id"),
-        media_type.alias("media_type"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.col("length").cast("long").alias("n_bytes"),
-            F.col("path").alias("source"),
-        ).alias("meta"),
-    )
-
-
 def read_parquet_evolving(
     spark: SparkSession,
     paths: list[str],

@@ -116,7 +116,20 @@ def test_driver_window_rotation_invariants():
         )
 
 
-_PKG = "inbev_data_engineering_case_spark"
+def test_rotation_ledger_matches_its_generator():
+    """ROTATION.md is generated, never hand-edited: the committed file
+    equals ``python tools/rotation_report.py`` output, so the ledger
+    cannot drift from the catalog or the CORRECTNESS_r*.json artifacts."""
+    from tools.rotation_report import render
+
+    committed = pathlib.Path(__file__).resolve().parent.parent / "ROTATION.md"
+    assert committed.read_text() == render(), (
+        "ROTATION.md is stale: run `python tools/rotation_report.py > "
+        "ROTATION.md`"
+    )
+
+
+_PKG ="inbev_data_engineering_case_spark"
 _ENTRY_MODULES = ("queries", "pipeline", "session", "testing")
 
 

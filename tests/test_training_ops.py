@@ -15,7 +15,6 @@ from inbev_data_engineering_case_spark.operators.dedup import (
 from inbev_data_engineering_case_spark.operators.multimodal import (
     assets_from_documents,
     decode_features,
-    resize_assets,
     sample_frames,
 )
 from inbev_data_engineering_case_spark.operators.similarity import (
@@ -169,26 +168,6 @@ def test_multimodal_plumbing(spark, docs):
     assert real[1]["checksum"] == zlib.crc32(payload) % 1_000_003
 
 
-def test_resize_assets_pads_and_truncates(spark, docs):
-    documents = docs.withColumn("source", F.lit("unit")).withColumn(
-        "lang", F.lit("en")
-    ).withColumn("n_chars", F.length("text"))
-    assets = assets_from_documents(documents)
-    out = {r["asset_id"]: r for r in resize_assets(assets, target_bytes=16).collect()}
-    for r in out.values():
-        assert len(bytes(r["payload"])) == 16
-        assert r["meta"]["n_bytes"] == 16
-    long_text = docs.filter(F.col("doc_id") == 1).first()["text"]
-    assert bytes(out[1]["payload"]) == long_text.encode()[:16]  # truncated
-    # the real branch treats non-media payloads the same way (no decoder
-    # to apply): truncate/pad, metadata recomputed
-    real = {
-        r["asset_id"]: r
-        for r in resize_assets(assets, target_bytes=16, real_decoder=True).collect()
-    }
-    assert bytes(real[1]["payload"]) == long_text.encode()[:16]
-
-
 def test_sample_frames_is_one_to_many(spark, docs):
     documents = docs.withColumn("source", F.lit("unit")).withColumn(
         "lang", F.lit("en")
@@ -204,6 +183,11 @@ def test_sample_frames_is_one_to_many(spark, docs):
     assert [r["frame_idx"] for r in frames] == list(range(0, n_chunks, 2))
     assert bytes(frames[0]["frame"]) == text[:10]
     assert all(r["n_bytes"] == len(bytes(r["frame"])) for r in frames)
+    # non-positive sizes fail on the driver, before any plan is built
+    for bad in ({"frame_bytes": 0}, {"frame_bytes": -4}, {"every_n": 0},
+                {"every_n": -1}):
+        with pytest.raises(ValueError, match="sample_frames needs"):
+            sample_frames(assets, **bad)
 
 
 def test_dedup_components_chain_and_singleton(spark):
@@ -755,166 +739,6 @@ def test_png_roundtrip_property():
         assert np.array_equal(decoded, want)
 
     check()
-
-
-def _make_y4m(width: int, height: int, lumas: list[int]) -> bytes:
-    """Assemble a C420 YUV4MPEG2 stream: one constant-luma frame per entry
-    (chroma planes fixed at 128)."""
-    head = b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 C420\n" % (width, height)
-    n_luma = width * height
-    n_chroma = n_luma // 2
-    return head + b"".join(
-        b"FRAME\n" + bytes([y]) * n_luma + bytes([128]) * n_chroma
-        for y in lumas
-    )
-
-
-def test_y4m_demux_featurize_and_frame_sample(spark):
-    """Uncompressed video decodes for real: the Y4M featurizer reports
-    true dimensions/frame-count/mean-luma, and sample_frames' real branch
-    demuxes at FRAME boundaries keeping original frame indices."""
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-        sample_frames,
-    )
-
-    y4m = _make_y4m(4, 2, lumas=[0, 100, 200, 50, 250])
-    checksum, feat = _stdlib_featurize("video/x-y4m", y4m)
-    assert feat == [4.0, 2.0, 5.0, (0 + 100 + 200 + 50 + 250) / 5]
-
-    assets = spark.createDataFrame(
-        [(7, "video/x-y4m", y4m, {"n_bytes": len(y4m), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    frames = sorted(
-        sample_frames(assets, every_n=2, real_decoder=True).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert [r["frame_idx"] for r in frames] == [0, 2, 4]
-    # each kept frame is the raw planar payload: 8 luma + 4 chroma bytes
-    assert all(r["n_bytes"] == 4 * 2 * 3 // 2 for r in frames)
-    assert bytes(frames[1]["frame"])[:8] == bytes([200]) * 8
-
-    with _pytest.raises(ValueError, match="FRAME marker"):
-        _stdlib_featurize("video/x-y4m", y4m + b"JUNK")
-    with _pytest.raises(NotImplementedError, match="ffmpeg"):
-        _stdlib_featurize("video/mp4", b"\x00\x00\x00 ftypisom")
-
-
-def test_resize_assets_real_decoders(spark):
-    """The real resize branch decodes → resamples → re-encodes: images
-    come back as smaller PNM rasters (media_type updated), WAV comes back
-    frame-decimated with duration preserved."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        resize_assets,
-    )
-
-    bmp = _make_bmp([[(90, 90, 90)] * 4 for _ in range(4)])  # 4x4 constant
-    png = _make_png([[(10, 20, 30)] * 6 for _ in range(6)], 2, [0] * 6)
-    pcm = (np.sin(np.arange(4000) / 20) * 9000).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(pcm.tobytes())
-    wav = buf.getvalue()
-
-    assets = spark.createDataFrame(
-        [
-            (1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
-            (2, "image/png", png, {"n_bytes": len(png), "source": "t"}),
-            (3, "audio/wav", wav, {"n_bytes": len(wav), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    out = {
-        r["asset_id"]: r
-        for r in resize_assets(
-            assets, target_bytes=2000, real_decoder=True
-        ).collect()
-    }
-
-    # 4x4x3 = 48 bytes already fits 2000 -> no upsampling, same pixels
-    p1 = bytes(out[1]["payload"])
-    assert out[1]["media_type"] == "image/x-portable-pixmap"
-    assert p1.startswith(b"P6\n4 4\n255\n")
-    assert set(p1.split(b"255\n", 1)[1]) == {90}  # BGR->RGB of a constant
-
-    # 6x6 PNG -> PNM, still 6x6 (108 bytes fit), RGB order preserved
-    p2 = bytes(out[2]["payload"])
-    assert p2.startswith(b"P6\n6 6\n255\n")
-    assert p2.split(b"255\n", 1)[1][:3] == bytes([10, 20, 30])
-
-    # image genuinely shrinks when over budget: 6x6 -> 2x2 under 12 bytes
-    small = {
-        r["asset_id"]: r
-        for r in resize_assets(
-            assets.filter("asset_id = 2"), target_bytes=12, real_decoder=True
-        ).collect()
-    }
-    assert bytes(small[2]["payload"]).startswith(b"P6\n2 2\n255\n")
-
-    # WAV: 8000 bytes of PCM -> k=4 decimation, frame rate 8000->2000,
-    # duration 0.5 s preserved
-    with wave.open(io.BytesIO(bytes(out[3]["payload"]))) as r:
-        assert r.getframerate() == 2000
-        assert r.getnframes() == 1000
-        kept = np.frombuffer(r.readframes(1000), dtype="<i2")
-    assert np.array_equal(kept, pcm[::4])
-
-
-def test_read_binary_assets_lands_real_media(spark, tmp_path):
-    """The binaryFile landing scan → asset schema → real decoder, end to
-    end: files on disk come back as typed assets whose payloads genuinely
-    decode; the size cap prunes oversized files at the source."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        ASSET_SCHEMA,
-        decode_features,
-    )
-    from inbev_data_engineering_case_spark.sources.readers import (
-        read_binary_assets,
-    )
-
-    bmp = _make_bmp([[(9, 9, 9), (9, 9, 9)]])
-    y4m = _make_y4m(2, 2, lumas=[10, 20])
-    (tmp_path / "a.bmp").write_bytes(bmp)
-    (tmp_path / "b.y4m").write_bytes(y4m)
-    (tmp_path / "huge.bin").write_bytes(b"\0" * 4096)
-
-    assets = read_binary_assets(spark, str(tmp_path), max_bytes=2048)
-    # same names/types as the asset contract (nullability flags differ:
-    # source-derived columns are conservatively nullable)
-    assert assets.schema.simpleString() == ASSET_SCHEMA.simpleString()
-    rows = {r["media_type"]: r for r in assets.collect()}
-    assert set(rows) == {"image/bmp", "video/x-y4m"}  # huge.bin pruned
-    assert bytes(rows["image/bmp"]["payload"]) == bmp
-    assert rows["video/x-y4m"]["meta"]["n_bytes"] == len(y4m)
-    assert rows["image/bmp"]["meta"]["source"].endswith("a.bmp")
-
-    feats = {
-        r["media_type"]: r["feature"]
-        for r in decode_features(assets, real_decoder=True).collect()
-    }
-    assert feats["image/bmp"] == [2.0, 1.0, 24.0, 9.0]
-    assert feats["video/x-y4m"] == [2.0, 2.0, 2.0, 15.0]
-
-    # asset ids are a pure function of the path: stable across re-listing
-    ids_a = sorted(r["asset_id"] for r in assets.collect())
-    ids_b = sorted(
-        r["asset_id"]
-        for r in read_binary_assets(spark, str(tmp_path), max_bytes=2048).collect()
-    )
-    assert ids_a == ids_b
 
 
 def test_train_ivf_centroids_rejects_huge_k(spark):
@@ -2629,30 +2453,36 @@ def test_hot_bucket_guard_simhash_star_links(spark):
 
 
 def test_decode_errors_dead_letter_not_raise(spark):
-    """A codec-bound (JPEG, mp4) asset must survive as a flagged row
-    — null features, decode_ok=false, message in `error` — instead of
-    killing the job; strict=True restores the raise. Neither format has
-    a native decoder, so both refuse with NotImplementedError and the
-    row is dead-lettered, never raised."""
+    """A codec-bound (JPEG, mp4, FLAC, YUV4MPEG2) asset must survive as a
+    flagged row — null features, decode_ok=false, message in `error`,
+    reason `decoder_gap` — instead of killing the job; strict=True
+    restores the raise. None of these formats has a native decoder, so
+    each refuses with NotImplementedError and the row is dead-lettered,
+    never raised."""
     import pytest as _pytest
     from pyspark.errors import PythonException
 
     from inbev_data_engineering_case_spark.operators.multimodal import (
         decode_features,
-        resize_assets,
-        sample_frames,
     )
-
-    img_err = "NotImplementedError"
-    vid_err = "NotImplementedError"
 
     bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
     jpeg = b"\xff\xd8\xff\xe0 not decodable"
+    # a well-formed one-frame FLAC stream: STREAMINFO (16 samples, 8 kHz,
+    # mono, 16-bit) plus one constant-zero frame
+    flac = bytes.fromhex(
+        "664c6143800000220010001000000000000001f400f00000001070bc8f4b72a8"
+        "6921468bf8e8441dce51fff8700800000f37000000dcda"
+    )
+    # a well-formed 2x2 C420 YUV4MPEG2 stream with one frame
+    y4m = b"YUV4MPEG2 W2 H2 F25:1 C420\nFRAME\n" + bytes(6)
     assets = spark.createDataFrame(
         [
             (1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
             (2, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"}),
             (3, "video/mp4", b"\x00\x00\x00 ftyp", {"n_bytes": 8, "source": "t"}),
+            (4, "audio/flac", flac, {"n_bytes": len(flac), "source": "t"}),
+            (5, "video/x-y4m", y4m, {"n_bytes": len(y4m), "source": "t"}),
         ],
         "asset_id long, media_type string, payload binary, "
         "meta struct<n_bytes:long, source:string>",
@@ -2664,24 +2494,12 @@ def test_decode_errors_dead_letter_not_raise(spark):
     }
     assert feats[1]["decode_ok"] and feats[1]["error"] is None
     assert feats[1]["feature"] == [2.0, 1.0, 24.0, 7.5]
-    for bad, expect in ((2, img_err), (3, vid_err)):
+    for bad in (2, 3, 4, 5):
         assert not feats[bad]["decode_ok"]
+        assert feats[bad]["reason"] == "decoder_gap"
         assert feats[bad]["checksum"] is None
         assert feats[bad]["feature"] is None
-        assert expect in feats[bad]["error"]
-
-    resized = {
-        r["asset_id"]: r
-        for r in resize_assets(assets, 2000, real_decoder=True).collect()
-    }
-    assert resized[1]["decode_ok"]
-    assert not resized[2]["decode_ok"]
-    assert bytes(resized[2]["payload"]) == jpeg  # original kept for retry
-
-    frames = sample_frames(assets, real_decoder=True).collect()
-    bad_rows = [r for r in frames if not r["decode_ok"]]
-    assert {r["asset_id"] for r in bad_rows} == {3}  # only video demuxes
-    assert bad_rows[0]["frame_idx"] == -1 and bad_rows[0]["frame"] is None
+        assert "NotImplementedError" in feats[bad]["error"]
 
     with _pytest.raises(PythonException, match="Error"):
         decode_features(assets, real_decoder=True, strict=True).collect()
@@ -2801,7 +2619,8 @@ def test_image_dhash_perceptual_near_dup(spark):
     resolution (2x nearest upsample) hashes identically (hamming 0); a
     slightly-edited copy lands within the hamming radius; an unrelated
     image does not pair; undecodable payloads (a non-PNM image, a PNM
-    with a truncated raster or a malformed header) dead-letter."""
+    with a truncated raster or a malformed header, including a non-space
+    byte after maxval) dead-letter."""
     import numpy as np
     from pyspark.errors import PythonException
 
@@ -2830,6 +2649,8 @@ def test_image_dhash_perceptual_near_dup(spark):
             (5, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
             (6, ppm, bytearray(_make_pnm(base)[:-1])),
             (7, ppm, bytearray(b"P6\n18 x16\n255\n" + base.tobytes())),
+            # maxval must be followed by exactly one whitespace byte
+            (8, "image/x-portable-graymap", bytearray(b"P5 2 1 255X\x01\x02")),
         ],
         "asset_id long, media_type string, payload binary",
     )
@@ -2839,9 +2660,10 @@ def test_image_dhash_perceptual_near_dup(spark):
     assert "NotImplementedError" in hashes[5]["error"]
     assert hashes[6]["decode_ok"] is False
     assert "PNM raster truncated" in hashes[6]["error"]
-    assert hashes[7]["decode_ok"] is False
-    assert "malformed PNM header" in hashes[7]["error"]
-    assert all(hashes[i]["dhash"] is None for i in (5, 6, 7))
+    for i in (7, 8):
+        assert hashes[i]["decode_ok"] is False
+        assert "malformed PNM header" in hashes[i]["error"]
+    assert all(hashes[i]["dhash"] is None for i in (5, 6, 7, 8))
     with pytest.raises(PythonException, match="NotImplementedError"):
         image_dhash(assets.filter(F.col("asset_id") == 5), strict=True).collect()
 
