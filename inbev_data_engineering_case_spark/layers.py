@@ -279,8 +279,7 @@ def advance_snapshot(
     keep_snapshots: int | None = None,
 ) -> str:
     """Advance a delta-maintained snapshot chain by one generation — the
-    one place the text/ANN index updaters, the state streams and the
-    backfills publish through.
+    one place the classifier counts streams publish through.
 
     ``parent_snap`` is the snapshot path the writer READ (None for the
     first generation ever). The expected parent and the next run id both
@@ -337,30 +336,6 @@ def commit_snapshot_with_retry(
     )
 
 
-def link_parquet_files(src_dir: str, dst_dir: str) -> int:
-    """Hard-link every data file of a parquet directory into ``dst_dir``
-    (markers and hidden files skipped): byte-zero reuse of an existing
-    generation's files inside a new staged snapshot. Part-file names
-    carry task UUIDs, so linked and freshly written files cannot
-    collide.
-
-    Filesystems without hard-link support (NFS exports with links
-    disabled, FUSE object-store mounts — EPERM/ENOTSUP/EXDEV) fall
-    back to a byte copy per file: the delta append/compaction paths
-    then work anywhere ``commit_snapshot``'s rename protocol does,
-    just without the zero-byte reuse."""
-    os.makedirs(dst_dir, exist_ok=True)
-    n = 0
-    for name in os.listdir(src_dir):
-        if name.startswith(("_", ".")):
-            continue
-        _link_or_copy(
-            os.path.join(src_dir, name), os.path.join(dst_dir, name)
-        )
-        n += 1
-    return n
-
-
 def _link_or_copy(src: str, dst: str) -> None:
     """Hard-link ``src`` to ``dst``, falling back to a byte copy on
     capability errors. Filesystems report missing hard-link support
@@ -370,8 +345,8 @@ def _link_or_copy(src: str, dst: str) -> None:
     instead of allowlisting capability ones: EEXIST is a double-staged
     destination and ENOENT/ENOTDIR/EISDIR are path mistakes — those
     stay loud failures rather than a silent copy-over; everything
-    else degrades to copy2, keeping the docstring promise that the
-    staging paths work anywhere the rename protocol does."""
+    else degrades to copy2, so ``delete_rows``' staged rewrite works
+    anywhere the rename protocol does, just without zero-byte reuse."""
     import errno
     import shutil
 

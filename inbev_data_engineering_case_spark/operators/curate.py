@@ -682,7 +682,7 @@ def unpack_halo_meta(hmeta: DataFrame, fn: str) -> tuple:
         raise ValueError(
             f"{fn}: the stored halo meta table is empty — the"
             " geometry guard cannot run; rebuild the halo state"
-            " (backfill_halo_tables, or a fresh state_dir)"
+            " from the full corpus into a fresh state_dir"
         )
     geo = row.asDict()
     if geo.get("num_hashes") is None:
@@ -691,7 +691,7 @@ def unpack_halo_meta(hmeta: DataFrame, fn: str) -> tuple:
             " num_hashes — it predates the full-geometry contract, so"
             " a restart with a different banding hash count would"
             " silently mix pair-graph geometries; rebuild the halo"
-            " state (backfill_halo_tables, or a fresh state_dir)"
+            " state from the full corpus into a fresh state_dir"
         )
     return (
         int(geo["max_hops"]),
@@ -830,13 +830,12 @@ def curate_incremental(
     ``stored_halo`` + ``halo_benchmark`` (both or neither) plug the
     maintained CONTAMINATION-HALO state into the keep decision — the
     ``stored_components`` pattern for the halo guard: pass
-    ``(stored_pairs, stored_dist)`` or — the stream's shape —
-    ``(stored_pairs, stored_dist, hmeta)`` as
-    ``read_corpus_artifacts(with_halo=True)`` returns it; with the
-    ``hmeta`` row present, a walk/banding geometry mismatch against
-    this call's effective ``(halo_hops, decontaminate_ngram,
-    near_dup_threshold, shingle, num_hashes)`` REFUSES up front (the
-    maintaining stream's discipline — without it the caller owns
+    ``(stored_pairs, stored_dist)`` or ``(stored_pairs, stored_dist,
+    hmeta)``, where ``hmeta`` is the 1-row geometry table
+    (``unpack_halo_meta``'s shape); with the ``hmeta`` row present, a
+    walk/banding geometry mismatch against this call's effective
+    ``(halo_hops, decontaminate_ngram, near_dup_threshold, shingle,
+    num_hashes)`` REFUSES up front (without it the caller owns
     geometry agreement). Today's
     direct flags come from ``decontaminate.contamination_report``
     over the scored-eligible DELTA (the batch halo mode's spot — a
@@ -1085,7 +1084,6 @@ def advance_corpus_artifacts(
     delta_ids: DataFrame | None = None,
     stored_components: DataFrame | None = None,
     delta_pairs: DataFrame | None = None,
-    kept_sigs: DataFrame | None = None,
     kept_comps: DataFrame | None = None,
 ) -> tuple[DataFrame, ...]:
     """The post-run step of the daily-crawl loop: advance the stored
@@ -1185,15 +1183,8 @@ def advance_corpus_artifacts(
             how="left_anti",
         )
 
-    # kept_sigs: the delta's signatures precomputed by a caller that
-    # also needs them for the pair delta (the stream's components
-    # branch) — the shingle+hash pass is paid once, not twice. Must be
-    # minhash_signatures output over exactly kept_delta with the same
-    # geometry.
     sigs = old_sigs.unionByName(
-        kept_sigs
-        if kept_sigs is not None
-        else minhash_signatures(
+        minhash_signatures(
             kept_delta, text_col, id_col, num_hashes, shingle_words
         )
     )
@@ -1209,7 +1200,7 @@ def advance_corpus_artifacts(
         # (curate_incremental(artifacts_out=...)["components"]) — the
         # contracted delta closure runs once, not twice. Must be
         # dedup_components_incremental output over exactly
-        # (stored_components, delta_pairs) — the kept_sigs contract.
+        # (stored_components, delta_pairs).
         comps = (
             kept_comps
             if kept_comps is not None
@@ -1633,7 +1624,6 @@ def incremental_minhash_pairs(
     band_size: int = DEFAULT_BAND_SIZE,
     shingle_words: int = DEFAULT_SHINGLE_WORDS,
     threshold: float = 0.5,
-    new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against itself AND against an existing
     corpus represented only by its stored signature table (id, sig) —
@@ -1646,28 +1636,17 @@ def incremental_minhash_pairs(
     yields no (x, x) self-pair: the stored-vs-new join filters id equality.
     Banding matches ``minhash_dedup_pairs``; the candidate join shuffles on
     band keys, and when ``stored_sigs`` reads from a table bucketed by id
-    the signature fetch itself was already exchange-free.
-
-    ``new_sigs`` (default None) supplies the new batch's signatures
-    precomputed — when a caller already hashed the batch for the sig
-    artifact advance (``run_stream_artifact_update``'s components
-    branch), the compute-bound shingle+hash pass is not paid twice.
-    Must be ``minhash_signatures`` output over exactly ``new_docs``
-    with the SAME (num_hashes, shingle_words) geometry as
-    ``stored_sigs``, and the CALLER owns its materialization (it
-    feeds both banding branches — pass it pinned, e.g. through
-    ``session.materialize``, or its lineage re-runs per branch)."""
-    if new_sigs is None:
-        # parallelism guard like minhash_dedup_pairs: a small delta
-        # arriving as 1-2 scan splits would pin the compute-bound
-        # shingle+hash stage to 1-2 cores
-        new_sigs = materialize(
-            minhash_signatures(
-                _ensure_parallelism(new_docs), text_col, id_col,
-                num_hashes, shingle_words,
-            ),
-            eager=False,
-        )
+    the signature fetch itself was already exchange-free."""
+    # parallelism guard like minhash_dedup_pairs: a small delta arriving
+    # as 1-2 scan splits would pin the compute-bound shingle+hash stage
+    # to 1-2 cores; the cut feeds both banding branches
+    new_sigs = materialize(
+        minhash_signatures(
+            _ensure_parallelism(new_docs), text_col, id_col,
+            num_hashes, shingle_words,
+        ),
+        eager=False,
+    )
 
     def banded(sigs: DataFrame) -> DataFrame:
         return sigs.select(

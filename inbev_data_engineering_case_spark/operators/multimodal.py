@@ -1032,9 +1032,9 @@ def image_near_dup_pairs(
     popcount(XOR) ≤ ``max_hamming``. ``max_bucket_size`` engages the
     dedup hot-bucket guard (star-link to the min-id representative) for
     corpora with massively-reposted images; default None — image dHash
-    buckets are far sparser than text templates. ``hashes`` is the
-    ``kept_sigs`` precedent: a caller that also needs the dHash table
-    (q_image_dedup returns it beside the pairs) passes ``image_dhash``
+    buckets are far sparser than text templates. ``hashes``: a caller
+    that also needs the dHash table (q_image_dedup returns it beside
+    the pairs) passes ``image_dhash``
     output over exactly these assets and the decode pass — the
     dominant cost — runs once, not twice."""
     from inbev_data_engineering_case_spark.operators.dedup import (

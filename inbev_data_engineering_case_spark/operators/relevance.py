@@ -527,9 +527,7 @@ def build_text_index(
     query's ``term IN (...)`` pushed filter skips whole files — the
     "bucket the index by term at scale" claim made physical (the
     ``zorder_compact`` discipline applied to the inverted index; the
-    file-stats test proves the disjoint spans). Delta files appended
-    later by ``update_text_index`` carry their own (wider) stats;
-    re-cluster on periodic rebuild.
+    file-stats test proves the disjoint spans).
     """
     from inbev_data_engineering_case_spark.layers import (
         commit_snapshot_with_retry,
@@ -556,8 +554,7 @@ def build_text_index(
             .agg(F.sum("tf").alias("dl"))
         )
         write_parquet(doclen, f"{staging}/doclen")
-        # N = indexed documents (one doclen row per doc) — the same
-        # definition update_text_index maintains from partials. A
+        # N = indexed documents (one doclen row per doc). A
         # NULL-text doc would produce NO tf/doclen rows and silently
         # shift every idf away from the scan path and the oracle
         # (which count ALL docs), so indexability is ENFORCED, not
@@ -652,199 +649,3 @@ def bm25_from_index(
     doc_len = read_parquet(spark, f"{snap}/doclen")
     stats = read_parquet(spark, f"{snap}/stats")
     return _bm25_rank(tf, doc_len, stats, id_col, k, k1, b)
-
-
-def update_text_index(
-    spark,
-    index_dir: str,
-    changed_docs: DataFrame,
-    deleted_ids: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_snapshots: int | None = 2,
-) -> dict[str, int | str]:
-    """Delta maintenance for ``build_text_index`` output — the
-    daily-crawl composition the curation loop uses
-    (``curate.curate_incremental`` decides WHAT changed; this applies
-    it to the serving index): only ``changed_docs`` re-tokenize, the
-    stored tf/doclen partials merge, and stats recompute from the
-    merged doclen partials — never from raw text. Published through
-    ``layers.advance_snapshot`` from the snapshot the delta was
-    computed against, so a concurrent refresh cannot silently lose
-    this delta (the loser raises ``SnapshotConflictError``; recompute
-    against the new latest and retry).
-
-    Two physical paths, chosen by what the delta touches:
-
-    - **append** (new docs only — the common crawl case): the previous
-      generation's tf/doclen part files HARD-LINK into the staged
-      snapshot (zero bytes copied, audit-visible via inode identity)
-      and the delta writes alongside them as extra part files — total
-      work is delta-sized plus a doclen-sized stats aggregate;
-    - **merge** (changed or deleted docs): stale rows for the touched
-      ids anti-join out of the stored tables and the delta unions in —
-      a copy-through rewrite with NO re-tokenization of history; at
-      100 TB keep tf term-bucketed so the rewrite is bucket-local.
-
-    Returns audit metadata incl. which path ran (``mode``) and the
-    published snapshot path.
-    """
-    from inbev_data_engineering_case_spark.layers import (
-        advance_snapshot,
-        link_parquet_files,
-    )
-
-    # the commit pins its expected parent to THIS path (advance_snapshot),
-    # so an interleaved refresh makes it raise instead of losing a delta
-    parent_snap = resolve_text_index(index_dir)
-
-    toks = changed_docs.select(
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-    )
-    delta_tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    delta_doclen = delta_tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-
-    touched = changed_docs.select(id_col)
-    if deleted_ids is not None:
-        touched = touched.unionByName(deleted_ids.select(id_col))
-    prev_doclen = read_parquet(spark, f"{parent_snap}/doclen")
-    # one doc-id-column pass over the doc-sized doclen table decides the
-    # physical path; pure-new deltas (overlap 0, no deletes) take the
-    # link+append path and never touch stored bytes
-    overlap = (
-        prev_doclen.join(touched, id_col, "left_semi").limit(1).count()
-    )
-    append_only = overlap == 0 and deleted_ids is None
-
-    def write_fn(staging: str) -> None:
-        if append_only:
-            link_parquet_files(f"{parent_snap}/tf", f"{staging}/tf")
-            link_parquet_files(
-                f"{parent_snap}/doclen", f"{staging}/doclen"
-            )
-            delta_tf.write.mode("append").parquet(f"{staging}/tf")
-            delta_doclen.write.mode("append").parquet(
-                f"{staging}/doclen"
-            )
-        else:
-            prev_tf = read_parquet(spark, f"{parent_snap}/tf")
-            merged_tf = prev_tf.join(
-                touched, id_col, "left_anti"
-            ).unionByName(delta_tf)
-            write_parquet(merged_tf, f"{staging}/tf")
-            merged_doclen = prev_doclen.join(
-                touched, id_col, "left_anti"
-            ).unionByName(delta_doclen)
-            write_parquet(merged_doclen, f"{staging}/doclen")
-        # stats recompute from the MERGED doclen partials (doc-sized),
-        # never from raw text: N is the doclen row count and avgdl its
-        # mean — the same definition build_text_index writes, so delta
-        # maintenance and full rebuild agree exactly. The delta's own
-        # indexability is enforced like the full build's (history was
-        # validated when ITS generation published):
-        d_docs = changed_docs.agg(
-            F.count("*").alias("_ndrows"),
-            F.countDistinct(id_col).alias("_ndd"),
-        )
-        d_idx = delta_doclen.agg(F.count("*").alias("_ndi"))
-        stats = (
-            read_parquet(spark, f"{staging}/doclen")
-            .agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
-            .join(F.broadcast(d_docs))
-            .join(F.broadcast(d_idx))
-            .select(
-                F.when(
-                    F.col("_ndrows") != F.col("_ndd"),
-                    F.raise_error(
-                        F.concat(
-                            F.lit("update_text_index: "),
-                            (F.col("_ndrows") - F.col("_ndd")).cast(
-                                "string"
-                            ),
-                            F.lit(
-                                " duplicate doc id row(s) in the "
-                                "delta — dedupe per id before "
-                                "updating"
-                            ),
-                        )
-                    ).cast("bigint"),
-                )
-                .when(
-                    F.col("_ndd") != F.col("_ndi"),
-                    F.raise_error(
-                        F.concat(
-                            F.lit("update_text_index: "),
-                            (F.col("_ndd") - F.col("_ndi")).cast("string"),
-                            F.lit(
-                                " changed document(s) produced no "
-                                "index rows (NULL text) — filter "
-                                "them out before updating"
-                            ),
-                        )
-                    ).cast("bigint"),
-                )
-                .otherwise(F.col("_n"))
-                .alias("_n"),
-                "_avgdl",
-            )
-        )
-        write_parquet(stats, f"{staging}/stats")
-
-    snap = advance_snapshot(
-        index_dir, TEXT_INDEX_PREFIX, parent_snap, write_fn, keep_snapshots
-    )
-    return {
-        "mode": "append" if append_only else "merge",
-        "snapshot": snap,
-        "tf_rows": read_parquet(spark, f"{snap}/tf").count(),
-        "doclen_rows": read_parquet(spark, f"{snap}/doclen").count(),
-        "stats_rows": 1,
-    }
-
-
-def compact_text_index(
-    spark,
-    index_dir: str,
-    cluster_by_term: int = 8,
-    keep_snapshots: int | None = 2,
-) -> dict[str, int | str]:
-    """Periodic re-clustering of a delta-maintained index — the
-    maintenance step the daily loop schedules weekly: days of
-    ``update_text_index`` appends leave ``tf`` as the original
-    clustered files PLUS small wide-span delta files whose min/max
-    stats prune nothing. This rewrites ``tf`` as ``cluster_by_term``
-    term-range-sorted files (disjoint spans again) WITHOUT
-    re-tokenizing anything — it reads the stored tf rows, never
-    document text — and carries doclen/stats through as hard links
-    (their content is term-order-independent). Published as a new
-    committed snapshot through the same atomic protocol; query results
-    are identical before and after by construction (same rows, new
-    file layout).
-    """
-    from inbev_data_engineering_case_spark.layers import (
-        advance_snapshot,
-        link_parquet_files,
-    )
-
-    if cluster_by_term < 1:
-        raise ValueError("compact_text_index: cluster_by_term must be >= 1")
-    parent_snap = resolve_text_index(index_dir)
-    tf = read_parquet(spark, f"{parent_snap}/tf")
-
-    def write_fn(staging: str) -> None:
-        write_parquet(
-            tf.repartitionByRange(cluster_by_term, "term")
-            .sortWithinPartitions("term"),
-            f"{staging}/tf",
-        )
-        link_parquet_files(f"{parent_snap}/doclen", f"{staging}/doclen")
-        link_parquet_files(f"{parent_snap}/stats", f"{staging}/stats")
-
-    snap = advance_snapshot(
-        index_dir, TEXT_INDEX_PREFIX, parent_snap, write_fn, keep_snapshots
-    )
-    return {
-        "snapshot": snap,
-        "tf_rows": read_parquet(spark, f"{snap}/tf").count(),
-    }

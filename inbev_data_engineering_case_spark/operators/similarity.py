@@ -1296,131 +1296,6 @@ def build_ann_index(
     }
 
 
-def update_ann_index(
-    spark,
-    index_dir: str,
-    changed_vectors: DataFrame,
-    deleted_ids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_snapshots: int | None = 2,
-) -> dict[str, int | str]:
-    """Delta maintenance for ``build_ann_index`` output — the daily
-    ingest composition (``update_text_index``'s contract applied to
-    vectors): only ``changed_vectors`` assign cells and PQ-encode,
-    against the STORED centroids and codebook (the standard IVF append
-    discipline — the coarse/fine model stays fixed between rebuilds,
-    so stored codes remain comparable and the probe path is
-    untouched); the cells/codes partials merge; centroids, codebook,
-    and meta carry forward unchanged. Published via
-    ``layers.advance_snapshot`` from the generation the delta was
-    computed against.
-
-    Physical paths, chosen like the text twin: a pure-new delta
-    HARD-LINKS the previous generation's cells/codes part files into
-    the staged snapshot (zero bytes rewritten) and appends delta part
-    files beside them; changed or deleted ids take the copy-through
-    merge (anti-join + union — bucket-local when ``cells/`` is
-    bucketed by cent_id). Model drift (a corpus whose distribution
-    outgrows the frozen centroids) is a REBUILD, not an update — the
-    same trade FAISS documents for IVF add_with_ids.
-
-    Returns audit metadata incl. which path ran (``mode``) and the
-    published snapshot path.
-    """
-    from inbev_data_engineering_case_spark.layers import (
-        advance_snapshot,
-        link_parquet_files,
-    )
-
-    # the commit pins its expected parent to THIS path (advance_snapshot),
-    # so an interleaved refresh makes it raise instead of losing a delta
-    parent_snap = resolve_ann_index(index_dir)
-    meta = read_parquet(spark, f"{parent_snap}/meta").collect()[0]
-    m, k = int(meta["m"]), int(meta["k"])
-    cents = read_parquet(spark, f"{parent_snap}/centroids")
-    book = read_parquet(spark, f"{parent_snap}/codebook")
-
-    delta_cells = (
-        ivf_assign(
-            changed_vectors.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("cvec"),
-            ),
-            cents,
-            n_probe=1,
-            id_col="neighbor_id",
-            vec_col="cvec",
-        )
-        .select("neighbor_id", "cent_id")
-        # duplicate ids WITHIN the delta would append twin cells/codes
-        # rows on both physical paths — same fail-loud guard as the
-        # build (a delta id matching a STORED id is the normal update
-        # case and anti-joins out, so only intra-delta dups can raise)
-        .join(F.broadcast(_unique_id_guard(changed_vectors, id_col,
-                                           "update_ann_index")))
-        .select(
-            "neighbor_id",
-            (F.col("cent_id") + F.col("_ids_ok")).alias("cent_id"),
-        )
-    )
-    delta_codes = pq_encode(
-        changed_vectors, book, m, k, id_col, vec_col
-    ).withColumnRenamed(id_col, "neighbor_id")
-
-    touched = changed_vectors.select(
-        F.col(id_col).alias("neighbor_id")
-    )
-    if deleted_ids is not None:
-        touched = touched.unionByName(
-            deleted_ids.select(F.col(id_col).alias("neighbor_id"))
-        )
-    prev_cells = read_parquet(spark, f"{parent_snap}/cells")
-    overlap = (
-        prev_cells.join(touched, "neighbor_id", "left_semi")
-        .limit(1)
-        .count()
-    )
-    append_only = overlap == 0 and deleted_ids is None
-
-    def write_fn(staging: str) -> None:
-        if append_only:
-            link_parquet_files(f"{parent_snap}/cells", f"{staging}/cells")
-            link_parquet_files(f"{parent_snap}/codes", f"{staging}/codes")
-            delta_cells.write.mode("append").parquet(f"{staging}/cells")
-            delta_codes.write.mode("append").parquet(f"{staging}/codes")
-        else:
-            write_parquet(
-                prev_cells.join(
-                    touched, "neighbor_id", "left_anti"
-                ).unionByName(delta_cells),
-                f"{staging}/cells",
-            )
-            write_parquet(
-                read_parquet(spark, f"{parent_snap}/codes").join(
-                    touched, "neighbor_id", "left_anti"
-                ).unionByName(delta_codes),
-                f"{staging}/codes",
-            )
-        # the model tables carry forward byte-identical (hard links):
-        # the update contract is "same model, fresher corpus"
-        link_parquet_files(
-            f"{parent_snap}/centroids", f"{staging}/centroids"
-        )
-        link_parquet_files(f"{parent_snap}/codebook", f"{staging}/codebook")
-        link_parquet_files(f"{parent_snap}/meta", f"{staging}/meta")
-
-    snap = advance_snapshot(
-        index_dir, ANN_INDEX_PREFIX, parent_snap, write_fn, keep_snapshots
-    )
-    return {
-        "mode": "append" if append_only else "merge",
-        "snapshot": snap,
-        "cells_rows": read_parquet(spark, f"{snap}/cells").count(),
-        "codes_rows": read_parquet(spark, f"{snap}/codes").count(),
-    }
-
-
 def ann_from_index(
     spark,
     index_dir: str,

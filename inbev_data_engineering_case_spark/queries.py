@@ -4098,7 +4098,7 @@ def _image_dedup_oracle(max_hamming: int = 6, bucket_bits: int = 12) -> str:
     "computes the IDENTICAL 64-bit hash from the text bytes "
     "(two's-complement into signed BIGINT — the oracle int discipline "
     "— verified bit-equal against the decode path). Decode pass paid "
-    "ONCE (hashes= feeds the pair join, the kept_sigs precedent). "
+    "ONCE (hashes= feeds the pair join). "
     "Scale: bucket-local self-join, never all-pairs; hot-bucket "
     "star-link guard available (max_bucket_size). Late-r15 tail debut "
     "(family cover: q_frame_sample pins the Arrow decode plumbing "

@@ -11,6 +11,11 @@ on the standard readStream → transform → writeStream shape:
   ``applyInPandasWithState`` — per-user session accumulation with a
   processing-timeout flush, the canonical "operator Spark lacks, built on
   the state-store API" example.
+- ``run_stream_classifier_update`` / ``run_stream_multiclass_update`` ⇔
+  ``classify.train_bow_counts`` / ``multiclass_bow_counts``: the module's
+  snapshot-chain writers — each micro-batch folds its counts into the
+  stored table and publishes one generation through
+  ``layers.advance_snapshot``.
 
 Scale notes: streaming aggregations shuffle on (window, keys) exactly like
 their batch twins; state lives in the state store partitioned the same way,
@@ -997,81 +1002,6 @@ def stream_drift_partials(
     )
 
 
-def run_stream_index_update(
-    docs_stream: DataFrame,
-    index_dir: str,
-    checkpoint: str,
-    timeout: int = 300,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_snapshots: int | None = 2,
-) -> dict[str, int]:
-    """Streaming maintenance of the SERVING text index: each arriving
-    micro-batch of new/changed documents applies to the committed
-    ``build_text_index`` snapshot chain through ``update_text_index`` —
-    the curation loop's index stays current with the crawl instead of
-    waiting for a nightly rebuild, and readers keep resolving committed
-    generations mid-stream (every batch publishes atomically).
-
-    Replay idempotence WITHOUT a dedup marker: ``update_text_index`` is
-    a keyed MERGE (a doc's stale tf/doclen rows anti-join out before
-    its re-tokenized rows union in), so a REPLAYED batch — crash
-    between the index commit and the checkpoint write — re-applies to
-    the exact same final contents, just as one more snapshot
-    generation (``merge_upsert_snapshot``'s argument, applied to the
-    index). Duplicate ids WITHIN a batch collapse via dropDuplicates
-    on the key first (an at-least-once source may re-deliver a doc
-    into the same batch; for conflicting texts under one id in one
-    batch the survivor is arbitrary — feed a keyed, deduped stream for
-    deterministic results). NULL-text docs are DROPPED per batch
-    rather than raised: the batch operator's fail-loud indexability
-    guard would otherwise turn one bad doc into a permanently
-    replaying failed stream — quarantine upstream if unindexable docs
-    need accounting.
-
-    One writer per (index_dir, checkpoint): concurrent batch writers
-    would conflict on ``expected_parent`` (the loser raises
-    ``SnapshotConflictError`` rather than losing a delta — rebuilds
-    belong in a quiet window). Returns ``query_metrics``.
-
-    ``keep_snapshots`` passes through to ``update_text_index``: the
-    stream publishes ONE generation per micro-batch, so the default
-    of 2 prunes a resolved snapshot out from under a serving reader's
-    lazy scan after just two batches (FileNotFoundError mid-scan).
-    For serving deployments set it above the number of batches that
-    can land within the longest reader's lifetime, or ``None`` to
-    keep all and compact offline (``prune_snapshots``' own caveat).
-    """
-    from inbev_data_engineering_case_spark.operators.relevance import (
-        update_text_index,
-    )
-
-    spark = docs_stream.sparkSession
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # cut the micro-batch ONCE: the delta update runs several
-        # actions over it (overlap probe, tf/doclen/stats writes,
-        # audits). NULL-text docs drop here rather than meet
-        # update_text_index's fail-loud indexability guard, which is
-        # right for a batch caller who can fix the input but a poison
-        # pill inside a replaying stream (the doc simply isn't
-        # searchable; route a quarantine stream upstream if those docs
-        # need accounting).
-        batch = _cut_nonempty(batch_df, id_col, text_col)
-        if batch is None:
-            return
-        update_text_index(spark, index_dir, batch, id_col=id_col,
-                          text_col=text_col,
-                          keep_snapshots=keep_snapshots)
-
-    return _drain(
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint),
-        timeout,
-        f"index-update stream to {index_dir}",
-    )
-
-
 def _parent_snapshot(state_dir: str, prefix: str) -> str | None:
     """The latest committed ``prefix`` snapshot under ``state_dir``, or
     None before the first commit."""
@@ -1081,999 +1011,6 @@ def _parent_snapshot(state_dir: str, prefix: str) -> str | None:
         return latest_snapshot(state_dir, prefix)
     except FileNotFoundError:  # first generation ever
         return None
-
-
-def _publish(
-    state_dir: str,
-    prefix: str,
-    parent_snap: str | None,
-    tables: dict[str, Any],
-    keep_snapshots: int | None = None,
-) -> str:
-    """Publish ``tables`` as the generation after ``parent_snap`` through
-    ``layers.advance_snapshot``: each DataFrame is written as a parquet
-    table under its name, any other value as a JSON file (the counts
-    streams' ``meta.json`` sidecar). One rename publishes them all, so a
-    crash never leaves two tables at different generations."""
-    from inbev_data_engineering_case_spark.layers import advance_snapshot
-
-    def write_all(staging: str) -> None:
-        os.makedirs(staging)
-        for name, table in tables.items():
-            path = os.path.join(staging, name)
-            if isinstance(table, DataFrame):
-                write_parquet(table, path)
-            else:
-                with open(path, "w") as f:
-                    json.dump(table, f)
-
-    return advance_snapshot(
-        state_dir, prefix, parent_snap, write_all, keep_snapshots
-    )
-
-
-def _run_state_stream(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    timeout: int,
-    prefix: str,
-    advance,
-    keep_snapshots: int | None,
-    what: str,
-) -> dict[str, int]:
-    """The state streams' one loop (artifact, embedding and both count
-    streams). Per micro-batch: resolve the parent snapshot, then
-    ``advance(batch_df, batch_id, parent_snap)`` — which runs the
-    stream's guards, cuts the batch (``_cut_nonempty``) and returns the
-    named tables of the next generation, or None to commit nothing (an
-    empty or replayed batch) — then ``_publish`` them from that parent.
-    The commit's expected parent is the snapshot the batch READ, so an
-    interleaved writer makes it raise ``SnapshotConflictError`` instead
-    of silently losing a delta. One writer per ``(state_dir,
-    checkpoint)``; one generation per micro-batch, pruned to
-    ``keep_snapshots`` (None keeps all). Returns ``query_metrics``."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        parent_snap = _parent_snapshot(state_dir, prefix)
-        tables = advance(batch_df, batch_id, parent_snap)
-        if tables is not None:
-            _publish(state_dir, prefix, parent_snap, tables, keep_snapshots)
-
-    return _drain(
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint),
-        timeout,
-        f"{what} to {state_dir}",
-    )
-
-
-CORPUS_ARTIFACT_PREFIX = "corpusart"
-
-
-def read_corpus_artifacts(
-    spark: SparkSession,
-    state_dir: str,
-    with_grams: bool = False,
-    with_components: bool = False,
-    with_halo: bool = False,
-):
-    """``(signatures, fingerprints)`` — plus the containment gram
-    table when ``with_grams=True``, plus the connected-components
-    label table when ``with_components=True``, plus the halo state
-    ``(hpairs, hdist, hmeta)`` when ``with_halo=True`` (in that order)
-    — from the latest committed corpus-artifact snapshot (the set
-    ``run_stream_artifact_update`` maintains): signatures as
-    ``(id, sig)``, fingerprints as ``(fp, keep_id)``, grams as
-    ``build_gram_table`` output, components as ``(node, comp)``, halo
-    as the ``(id_a, id_b)`` edge artifact + ``(node, dist)`` distance
-    table — exactly the stored-state inputs ``curate_incremental``,
-    ``advance_corpus_artifacts``, ``incremental_containment_pairs``,
-    and ``advance_halo_artifacts`` consume. Raises
-    ``FileNotFoundError`` when no snapshot has ever committed, and a
-    clear error when grams/components/halo are requested from a
-    stream that was not maintaining them."""
-    from inbev_data_engineering_case_spark.layers import latest_snapshot
-
-    snap = latest_snapshot(state_dir, CORPUS_ARTIFACT_PREFIX)
-    out = (
-        read_parquet(spark, os.path.join(snap, "sigs")),
-        read_parquet(spark, os.path.join(snap, "fps")),
-    )
-    if with_grams:
-        gram_dir = os.path.join(snap, "grams")
-        if not os.path.isdir(gram_dir):
-            raise FileNotFoundError(
-                f"no gram table in snapshot {snap} — the maintaining "
-                "stream ran with gram_n=None; backfill once with "
-                "backfill_gram_table(corpus, state_dir), then re-run "
-                "the stream with gram_n set to keep maintaining it"
-            )
-        out = (*out, read_parquet(spark, gram_dir))
-    if with_components:
-        comps_dir = os.path.join(snap, "comps")
-        if not os.path.isdir(comps_dir):
-            raise FileNotFoundError(
-                f"no comps table in snapshot {snap} — the maintaining "
-                "stream ran with components=False; backfill once with "
-                "backfill_components_table(corpus, state_dir), then "
-                "re-run the stream with components=True to keep "
-                "maintaining it"
-            )
-        out = (*out, read_parquet(spark, comps_dir))
-    if with_halo:
-        hdist_dir = os.path.join(snap, "hdist")
-        if not os.path.isdir(hdist_dir):
-            raise FileNotFoundError(
-                f"no halo tables in snapshot {snap} — the maintaining "
-                "stream ran without halo_benchmark; backfill once "
-                "with backfill_halo_tables(corpus, state_dir, "
-                "benchmark), then re-run the stream with "
-                "halo_benchmark set to keep maintaining them"
-            )
-        # the hmeta geometry row rides along so downstream consumers
-        # (curate_incremental stored_halo=) can refuse a mismatch the
-        # same way the maintaining stream does
-        out = (
-            *out,
-            read_parquet(spark, os.path.join(snap, "hpairs")),
-            read_parquet(spark, hdist_dir),
-            read_parquet(spark, os.path.join(snap, "hmeta")),
-        )
-    return out
-
-
-def _backfill_open(
-    corpus: DataFrame,
-    state_dir: str,
-    fn_name: str,
-    marker: str,
-    marker_what: str,
-    resume_hint: str,
-    id_col: str,
-    coverage_consequence: str,
-) -> tuple[str, dict[str, DataFrame]]:
-    """The one-time backfills' shared scaffold (grams / components /
-    halo — one definition, so a guard fix lands in all three): resolve
-    the latest snapshot, refuse if it already carries ``marker``, read
-    EVERY parent table so the new generation carries the whole set
-    forward (a backfill that rewrote only sigs/fps would silently shed
-    a sibling artifact), and enforce the full-corpus-coverage guard on
-    the stored sig ids. Returns ``(snap, tables)``."""
-    from inbev_data_engineering_case_spark.layers import latest_snapshot
-
-    spark = corpus.sparkSession
-    snap = latest_snapshot(state_dir, CORPUS_ARTIFACT_PREFIX)
-    if os.path.isdir(os.path.join(snap, marker)):
-        raise ValueError(
-            f"snapshot {snap} already carries {marker_what} — nothing"
-            f" to backfill; {resume_hint}"
-        )
-    tables = {
-        name: read_parquet(spark, os.path.join(snap, name))
-        for name in sorted(os.listdir(snap))
-        if os.path.isdir(os.path.join(snap, name))
-    }
-    missing = (
-        tables["sigs"]
-        .select(F.col("id"))
-        .distinct()
-        .join(
-            corpus.select(F.col(id_col).cast("long").alias("id")),
-            on="id",
-            how="left_anti",
-        )
-        .count()
-    )
-    if missing:
-        raise ValueError(
-            f"{fn_name}: {missing} stored document id(s) are"
-            f" missing from the supplied corpus — {coverage_consequence};"
-            " pass the FULL stored corpus text"
-        )
-    return snap, tables
-
-
-def _stored_sig_pair_kw(
-    sigs: DataFrame,
-    fn_name: str,
-    num_hashes: int | None,
-    shingle_words: int | None,
-) -> dict:
-    """Derive the pair-graph hash geometry from the stored sig rows
-    (``size(sig)``) and refuse an explicit mismatch — a pair graph
-    from a different geometry than the one the stream maintains would
-    break the union-parity contract. ``shingle_words`` is NOT recorded
-    in the sig values and stays the caller's contract to match."""
-    shead = sigs.select(F.size("sig").alias("_n")).first()
-    stored_hashes = None if shead is None else int(shead["_n"])
-    if (
-        stored_hashes is not None
-        and num_hashes is not None
-        and num_hashes != stored_hashes
-    ):
-        raise ValueError(
-            f"{fn_name}: stored sigs carry"
-            f" num_hashes={stored_hashes} but this backfill is"
-            f" configured num_hashes={num_hashes} — match the"
-            " geometry (or omit num_hashes to derive it)"
-        )
-    pair_kw = {}
-    if stored_hashes is not None:
-        pair_kw["num_hashes"] = stored_hashes
-    elif num_hashes is not None:
-        pair_kw["num_hashes"] = num_hashes
-    if shingle_words is not None:
-        pair_kw["shingle_words"] = shingle_words
-    return pair_kw
-
-
-def backfill_gram_table(
-    corpus: DataFrame,
-    state_dir: str,
-    gram_n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    gram_portable: bool = True,
-) -> str:
-    """One-time gram-table backfill for a corpus-artifact lineage that
-    was maintained WITHOUT ``gram_n``: builds ``build_gram_table``
-    output over the full stored corpus's text and commits it as the
-    ``grams`` table of a NEW snapshot generation alongside the parent's
-    sigs/fps — atomically, through the same optimistic
-    ``layers.advance_snapshot`` the stream uses, so a concurrently-advancing
-    stream loses the race loudly (``SnapshotConflictError``) instead of
-    interleaving. After the backfill, restart the stream with
-    ``gram_n`` set (and the SAME ``gram_portable``) and it advances the
-    grams incrementally from there.
-
-    ``corpus`` must carry the text of every stored document — the
-    whole reason the stream refuses to seed grams mid-lineage is that
-    a partial table makes containment pairs against pre-upgrade docs
-    silently vanish, so this guard is load-bearing: any stored sig id
-    missing from ``corpus`` raises. (Append-mode lineages keep an
-    UPDATED doc's old-text sig rows; old text that no longer exists
-    anywhere cannot be re-grammed — the same append-only memory caveat
-    ``advance_corpus_artifacts`` documents. The guard keys on ids.)
-
-    Returns the committed snapshot path. One corpus scan + one
-    pair of parent-table rewrites — a one-time cost, never part of the
-    steady-state loop."""
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        build_gram_table,
-    )
-
-    snap, tables = _backfill_open(
-        corpus,
-        state_dir,
-        "backfill_gram_table",
-        marker="grams",
-        marker_what="a grams table",
-        resume_hint="run the stream with gram_n set to keep"
-        " maintaining it",
-        id_col=id_col,
-        coverage_consequence="a partial gram table would silently drop"
-        " containment pairs against those docs",
-    )
-    tables["grams"] = build_gram_table(
-        corpus, gram_n, id_col, text_col, gram_portable
-    ).dropDuplicates([id_col, "gram_h"])
-    return _publish(state_dir, CORPUS_ARTIFACT_PREFIX, snap, tables)
-
-
-def backfill_components_table(
-    corpus: DataFrame,
-    state_dir: str,
-    near_dup_threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int | None = None,
-    shingle_words: int | None = None,
-) -> str:
-    """One-time connected-components backfill for a corpus-artifact
-    lineage that was maintained WITHOUT ``components=True``: computes
-    the near-dup pair graph over the full stored corpus
-    (``dedup.minhash_dedup_pairs`` at ``near_dup_threshold``) and the
-    CONVERGED label closure, committing it as the ``comps`` table of a
-    NEW snapshot generation alongside the parent's sigs/fps (and
-    grams, when present) — atomically, through the same optimistic
-    ``layers.advance_snapshot`` the stream uses. After the backfill, restart
-    the stream with ``components=True`` (and the same banding
-    geometry) and it advances the labels incrementally from there.
-
-    Convergence matters here: a stored label must BE the minimum node
-    id of its component — that is what makes
-    ``dedup_components_incremental``'s contraction correct — so this
-    runs ``require_convergence=True``. The same full-corpus-coverage
-    guard as the gram backfill applies: any stored sig id missing from
-    ``corpus`` raises (a label table that missed history's edges would
-    silently mislabel every future merge through a historical
-    cluster).
-
-    Returns the committed snapshot path. One corpus banding pass +
-    one closure — a one-time cost, never part of the steady-state
-    loop."""
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        dedup_components,
-        minhash_dedup_pairs,
-    )
-
-    snap, tables = _backfill_open(
-        corpus,
-        state_dir,
-        "backfill_components_table",
-        marker="comps",
-        marker_what="a comps table",
-        resume_hint="run the stream with components=True to keep"
-        " maintaining it",
-        id_col=id_col,
-        coverage_consequence="a label table that missed history's"
-        " edges would silently mislabel future merges",
-    )
-    pair_kw = _stored_sig_pair_kw(
-        tables["sigs"], "backfill_components_table",
-        num_hashes, shingle_words,
-    )
-    tables["comps"] = dedup_components(
-        minhash_dedup_pairs(
-            corpus, text_col, id_col,
-            threshold=near_dup_threshold, **pair_kw,
-        ),
-        require_convergence=True,
-    )
-    return _publish(state_dir, CORPUS_ARTIFACT_PREFIX, snap, tables)
-
-
-def backfill_halo_tables(
-    corpus: DataFrame,
-    state_dir: str,
-    benchmark: DataFrame,
-    max_hops: int = 2,
-    ngram: int = 8,
-    near_dup_threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int | None = None,
-    shingle_words: int | None = None,
-) -> str:
-    """One-time contamination-halo backfill for a corpus-artifact
-    lineage that was maintained WITHOUT ``halo_benchmark``: computes
-    the near-dup pair graph over the full stored corpus, flags it
-    against ``benchmark`` (``decontaminate.contamination_report`` at
-    ``ngram``), walks the batch multi-source BFS to ``max_hops``, and
-    commits ``hpairs``/``hdist``/``hmeta`` as a NEW snapshot
-    generation alongside the parent's tables — atomically, through
-    the same optimistic ``layers.advance_snapshot`` the stream uses. After
-    the backfill, restart the stream with ``halo_benchmark`` (and the
-    same geometry — the ``hmeta`` row records ``max_hops``, ``ngram``,
-    ``near_dup_threshold``, the effective shingle size, AND the
-    effective banding hash count ``num_hashes``, and the stream
-    refuses a mismatch on any of them).
-
-    Same guards as the components backfill (one shared scaffold): the
-    full-corpus-coverage check, the stored-sig geometry derivation
-    (``num_hashes`` defaults to ``size(sig)``, explicit mismatch
-    raises), and the already-present refusal; every parent table is
-    carried forward. Returns the committed snapshot path."""
-    from inbev_data_engineering_case_spark.operators.decontaminate import (
-        contamination_report,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        DEFAULT_NUM_HASHES,
-        DEFAULT_SHINGLE_WORDS,
-        minhash_dedup_pairs,
-    )
-    from inbev_data_engineering_case_spark.operators.graph import (
-        multi_source_bfs,
-    )
-
-    spark = corpus.sparkSession
-    snap, tables = _backfill_open(
-        corpus,
-        state_dir,
-        "backfill_halo_tables",
-        marker="hdist",
-        marker_what="halo tables",
-        resume_hint="run the stream with halo_benchmark to keep"
-        " maintaining them",
-        id_col=id_col,
-        coverage_consequence="halo state that missed history's edges"
-        " would silently under-reach",
-    )
-    pair_kw = _stored_sig_pair_kw(
-        tables["sigs"], "backfill_halo_tables", num_hashes, shingle_words
-    )
-    # two consumers (the BFS walk and the parquet write) — pay the
-    # full-corpus banding pass once
-    hpairs = materialize(
-        minhash_dedup_pairs(
-            corpus, text_col, id_col,
-            threshold=near_dup_threshold, **pair_kw,
-        )
-        .select("id_a", "id_b"),
-        eager=True,
-    )
-    seeds = contamination_report(
-        corpus, benchmark, n=ngram, id_col=id_col, text_col=text_col
-    ).select(id_col)
-    tables["hpairs"] = hpairs
-    tables["hdist"] = multi_source_bfs(
-        hpairs, seeds, max_hops=max_hops,
-        src_col="id_a", dst_col="id_b",
-    )
-    tables["hmeta"] = spark.createDataFrame(
-        [(
-            int(max_hops),
-            int(ngram),
-            float(near_dup_threshold),
-            int(pair_kw.get("shingle_words", DEFAULT_SHINGLE_WORDS)),
-            int(pair_kw.get("num_hashes", DEFAULT_NUM_HASHES)),
-        )],
-        "max_hops int, ngram int, threshold double, shingle_words int,"
-        " num_hashes int",
-    )
-    return _publish(state_dir, CORPUS_ARTIFACT_PREFIX, snap, tables)
-
-
-def run_stream_artifact_update(
-    docs_stream: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    timeout: int = 300,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "append",
-    num_hashes: int | None = None,
-    shingle_words: int | None = None,
-    keep_snapshots: int | None = None,
-    gram_n: int | None = None,
-    gram_portable: bool = True,
-    components: bool = False,
-    near_dup_threshold: float = 0.5,
-    halo_benchmark: DataFrame | None = None,
-    halo_hops: int = 2,
-    halo_ngram: int = 8,
-) -> dict[str, int]:
-    """Streaming maintenance of the DEDUP STATE the daily-crawl loop
-    reads: each micro-batch of kept documents advances the stored
-    minhash-signature and fingerprint tables through
-    ``curate.advance_corpus_artifacts``, publishing BOTH under one
-    atomic snapshot generation — so tomorrow's
-    ``curate_incremental`` (or the next micro-batch) dedups against
-    everything emitted so far without ever re-hashing history, and a
-    crash can never leave the two tables at different generations.
-
-    Replay idempotence without a marker: a REPLAYED batch (crash
-    between the snapshot commit and the checkpoint write) re-applies
-    to the exact same final contents — fingerprints dedup on
-    ``(fp, keep_id)`` inside ``advance_corpus_artifacts`` and
-    signatures dedup on ``(id, sig)`` here (same id + same text ⇒ same
-    sig row; same id + NEW text is genuinely new state and appends
-    under ``mode='append'`` / replaces under ``'replace'``, exactly as
-    the batch operator defines). Duplicate ids within a batch collapse
-    via ``dropDuplicates`` on the key first; NULL-text docs are
-    DROPPED per batch (the index-updater's poison-pill rationale: one
-    bad doc must not turn into a permanently replaying failed batch).
-
-    Snapshot discipline (``_run_state_stream``, the loop the embedding
-    and count streams share): each generation publishes through
-    ``layers.advance_snapshot`` from the snapshot path the batch READ,
-    so an interleaved writer makes the commit raise
-    ``SnapshotConflictError`` instead of silently losing a delta. One
-    writer per ``(state_dir, checkpoint)``; the stream publishes one
-    generation per micro-batch, so ``keep_snapshots`` follows
-    ``run_stream_index_update``'s serving contract (None = keep all).
-
-    ``gram_n`` (default None = off) additionally maintains the
-    containment gram table (``build_gram_table`` output, the stored
-    state ``incremental_containment_pairs`` joins a new crawl
-    against) in the SAME atomic snapshot — with it, every
-    signature-backed dedup family's stored state advances from the
-    stream: minhash sigs, exact fingerprints, and containment grams,
-    all at one consistent generation. Gram rows dedup on
-    ``(id, gram_h)`` for replay idempotence (a re-applied batch's
-    grams are identical); under ``mode='replace'`` a changed doc's
-    stale gram rows anti-join out first. ``gram_portable`` follows
-    ``build_gram_table``'s hash-kind contract and rides the state.
-
-    ``components=True`` additionally maintains the connected-
-    components LABEL table (``(node, comp)`` — the near-dup cluster
-    membership of everything ever emitted) in the same atomic
-    snapshot: each batch's pair delta
-    (``curate.incremental_minhash_pairs`` against the parent sigs at
-    ``near_dup_threshold``) contracts through the stored labels via
-    ``dedup.dedup_components_incremental`` — the closure runs on the
-    batch-sized meta-graph, never the full pair graph, and the result
-    is row-identical to re-closing the union graph (the operator's
-    parity contract). Replay idempotence is structural: a re-applied
-    batch's pairs are already reflected in the labels, so the
-    contraction maps every edge endpoint into its own component and
-    the relabel is a no-op. Like the gram table, enabling components
-    on an existing lineage requires a one-time
-    ``backfill_components_table`` (a label table that missed
-    history's edges would silently mislabel every future merge
-    through a historical cluster). The label table is append-only
-    graph memory regardless of ``mode`` — un-knowing an edge would
-    take a full re-closure, so ``'replace'`` never sheds label rows.
-
-    ``halo_benchmark`` (default None = off) additionally maintains
-    the CONTAMINATION-HALO state pair in the same atomic snapshot —
-    the last daily artifact that only had a batch advance: per batch,
-    the day's direct flags (``decontaminate.contamination_report``
-    over the batch against the broadcast benchmark at ``halo_ngram``)
-    and the SAME pair delta the components branch bands (one hashing
-    pass when both are on) feed ``curate.advance_halo_artifacts`` —
-    the stored ``hpairs`` edge artifact grows by a distinct union and
-    the stored ``hdist`` distance table relaxes change-sized
-    (``graph.multi_source_bfs_incremental``), row-identical to the
-    from-scratch BFS over the union graph + union seeds (the
-    operator's parity contract; chained-parity-tested). A 1-row
-    ``hmeta`` table rides the state with the full walk/banding
-    geometry ``(max_hops, ngram, near_dup_threshold, shingle_words,
-    num_hashes)`` and a resume with different values RAISES before
-    commit (a dist table mixes reaches — or the pair artifact mixes
-    graph geometries — silently otherwise; the gram-geometry
-    discipline); independently, every resume checks the stored sig
-    rows' ``size(sig)`` against the configured ``num_hashes`` so even
-    a halo-less lineage refuses a banding-hash-count change. Disabling a
-    maintained artifact is refused as loudly as enabling one
-    mid-lineage: a restart missing ``gram_n``/``components``/
-    ``halo_benchmark`` on a lineage that carries the corresponding
-    table raises instead of silently shedding append-only state.
-    Enabling the halo on an existing lineage requires the one-time
-    ``backfill_halo_tables`` (state seeded mid-lineage would miss
-    every historical edge and flag). Replay idempotence is
-    structural: a re-applied batch's edges are already in the
-    distinct union and its flags already hold their minimal
-    distances, so the relaxation is a no-op. Like the labels, halo
-    state is append-only graph memory regardless of ``mode`` (an
-    emitted document's contamination never un-happens). Halo state is
-    externally pinned by q_daily_loop, which composes the identical
-    ``advance_halo_artifacts`` with a union-parity oracle in the
-    driver window.
-
-    Returns ``query_metrics``.
-    """
-    from inbev_data_engineering_case_spark.operators.curate import (
-        advance_corpus_artifacts,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        DEFAULT_NUM_HASHES,
-        DEFAULT_SHINGLE_WORDS,
-        build_gram_table,
-    )
-
-    spark = docs_stream.sparkSession
-    adv_kw = {}
-    if num_hashes is not None:
-        adv_kw["num_hashes"] = num_hashes
-    if shingle_words is not None:
-        adv_kw["shingle_words"] = shingle_words
-    # the EFFECTIVE banding hash count this stream signs/bands with
-    # (the operators' default when the param is omitted) — guarded
-    # per batch against the stored sig rows' size(sig), so a resume
-    # with a different count refuses instead of silently appending
-    # mixed-geometry signatures that match nothing historical
-    eff_num_hashes = (
-        int(num_hashes) if num_hashes is not None else DEFAULT_NUM_HASHES
-    )
-    if halo_benchmark is not None:
-        # the EFFECTIVE halo geometry this stream would band/walk
-        # with — recorded in hmeta on every commit and compared
-        # against the stored row before any commit
-        halo_geo = (
-            int(halo_hops),
-            int(halo_ngram),
-            float(near_dup_threshold),
-            int(shingle_words or DEFAULT_SHINGLE_WORDS),
-            eff_num_hashes,
-        )
-
-    def advance(batch_df: DataFrame, batch_id: int, parent_snap):
-        batch = _cut_nonempty(batch_df, id_col, text_col)
-        if batch is None:
-            return None
-        stored_grams = None
-        stored_comps = None
-        stored_hpairs = None
-        stored_hdist = None
-        if parent_snap is not None:
-            stored_sigs = read_parquet(
-                spark, os.path.join(parent_snap, "sigs")
-            )
-            stored_fps = read_parquet(
-                spark, os.path.join(parent_snap, "fps")
-            )
-            # signature-geometry refusal (the gram/comps/halo guards'
-            # sibling — previously only a caller contract): stored
-            # sig rows carry their hash count as size(sig), so a
-            # resume configured with a different num_hashes is caught
-            # BEFORE it appends signatures that band in a different
-            # space (they would silently match nothing historical)
-            shead = stored_sigs.select(F.size("sig").alias("_n")).first()
-            if shead is not None and int(shead["_n"]) != eff_num_hashes:
-                raise ValueError(
-                    "run_stream_artifact_update: stored sigs carry"
-                    f" num_hashes={int(shead['_n'])} but this stream"
-                    f" is configured num_hashes={eff_num_hashes} — a"
-                    " silent mismatch would append mixed-geometry"
-                    " signatures and band a different pair graph;"
-                    " match the geometry or start a fresh state_dir"
-                )
-            if gram_n is not None:
-                grams_dir = os.path.join(parent_snap, "grams")
-                if not os.path.isdir(grams_dir):
-                    # seeding the gram table from this batch onward
-                    # would permanently omit every historical doc's
-                    # grams while read_corpus_artifacts(with_grams=
-                    # True) succeeded as if complete — containment
-                    # pairs against pre-upgrade docs would silently
-                    # vanish. Require an explicit backfill instead.
-                    raise ValueError(
-                        "run_stream_artifact_update: gram_n is set but"
-                        f" the parent snapshot {parent_snap} has no"
-                        " grams table — enabling gram maintenance on"
-                        " an existing stream needs a one-time"
-                        " backfill: run backfill_gram_table(corpus,"
-                        " state_dir) over the FULL stored corpus (it"
-                        " commits the grams alongside the stored"
-                        " sigs/fps in one snapshot), then restart the"
-                        " stream (or start a fresh state_dir)"
-                    )
-                stored_grams = read_parquet(spark, grams_dir)
-                # geometry refusal before commit (the embedding/
-                # classifier streams' discipline): build_gram_table
-                # rides (n, portable) as state columns, and a resume
-                # with different geometry would union mixed-space
-                # rows — old-geometry docs then silently match
-                # nothing in future containment joins
-                ghead = stored_grams.select("n", "portable").first()
-                if ghead is not None and (
-                    ghead["n"] != gram_n
-                    or ghead["portable"] != gram_portable
-                ):
-                    raise ValueError(
-                        "run_stream_artifact_update: stored gram table"
-                        f" was built with n={ghead['n']},"
-                        f" portable={ghead['portable']} but this stream"
-                        f" is configured gram_n={gram_n},"
-                        f" gram_portable={gram_portable} — a silent"
-                        " mismatch would leave historical docs"
-                        " unmatched in every future containment join;"
-                        " match the geometry or rebuild via"
-                        " backfill_gram_table on a fresh state_dir"
-                    )
-            if components:
-                comps_dir = os.path.join(parent_snap, "comps")
-                if not os.path.isdir(comps_dir):
-                    # same reasoning as the gram guard: a label table
-                    # seeded mid-lineage misses every historical edge,
-                    # so a future batch merging through a historical
-                    # cluster would silently take the wrong label —
-                    # require the explicit one-time backfill instead
-                    raise ValueError(
-                        "run_stream_artifact_update: components=True"
-                        f" but the parent snapshot {parent_snap} has"
-                        " no comps table — enabling label maintenance"
-                        " on an existing stream needs a one-time"
-                        " backfill: run backfill_components_table("
-                        "corpus, state_dir) over the FULL stored"
-                        " corpus (it commits the labels alongside the"
-                        " stored sigs/fps in one snapshot), then"
-                        " restart the stream (or start a fresh"
-                        " state_dir)"
-                    )
-                stored_comps = read_parquet(spark, comps_dir)
-            if halo_benchmark is not None:
-                hdist_dir = os.path.join(parent_snap, "hdist")
-                if not os.path.isdir(hdist_dir):
-                    # same reasoning as the gram/comps guards: halo
-                    # state seeded mid-lineage misses every historical
-                    # edge and flag — a later near-dup of an old
-                    # contaminated doc would silently stay out of the
-                    # dist table. Require the explicit backfill.
-                    raise ValueError(
-                        "run_stream_artifact_update: halo_benchmark is"
-                        f" set but the parent snapshot {parent_snap}"
-                        " has no halo tables — enabling halo"
-                        " maintenance on an existing stream needs a"
-                        " one-time backfill: run backfill_halo_tables("
-                        "corpus, state_dir, benchmark) over the FULL"
-                        " stored corpus, then restart the stream (or"
-                        " start a fresh state_dir)"
-                    )
-                stored_hpairs = read_parquet(
-                    spark, os.path.join(parent_snap, "hpairs")
-                )
-                stored_hdist = read_parquet(spark, hdist_dir)
-                from inbev_data_engineering_case_spark.operators.curate import (  # noqa: E501
-                    unpack_halo_meta,
-                )
-
-                stored_geo = unpack_halo_meta(
-                    read_parquet(spark, os.path.join(parent_snap, "hmeta")),
-                    "run_stream_artifact_update",
-                )
-                if stored_geo != halo_geo:
-                    raise ValueError(
-                        "run_stream_artifact_update: stored halo state"
-                        " was built with (max_hops, ngram, threshold,"
-                        " shingle_words,"
-                        f" num_hashes)={stored_geo} but this stream"
-                        f" is configured {halo_geo} — a silent"
-                        " mismatch would mix reaches (or pair-graph"
-                        " geometries) in the append-only state; match"
-                        " the geometry or rebuild via"
-                        " backfill_halo_tables on a fresh state_dir"
-                    )
-            # DISABLING a maintained artifact must be as loud as
-            # enabling one: a restart without the option would write
-            # the next generation without its table, silently shedding
-            # append-only graph memory that can only be recovered by a
-            # full-corpus backfill
-            for opt_off, table, flag in (
-                (gram_n is None, "grams", "gram_n"),
-                (not components, "comps", "components=True"),
-                (halo_benchmark is None, "hdist", "halo_benchmark"),
-            ):
-                if opt_off and os.path.isdir(
-                    os.path.join(parent_snap, table)
-                ):
-                    raise ValueError(
-                        "run_stream_artifact_update: the parent"
-                        f" snapshot {parent_snap} carries a {table}"
-                        f" table but this stream runs without {flag} —"
-                        " committing a generation without it would"
-                        " silently shed append-only state that only a"
-                        " full-corpus backfill can rebuild; pass"
-                        f" {flag} (or deliberately start a fresh"
-                        " state_dir)"
-                    )
-        else:  # first generation ever
-            stored_sigs = spark.createDataFrame(
-                [], "id long, sig array<bigint>"
-            )
-            stored_fps = spark.createDataFrame([], "fp long, keep_id long")
-            if components:
-                stored_comps = spark.createDataFrame(
-                    [], "node long, comp long"
-                )
-            if halo_benchmark is not None:
-                stored_hpairs = spark.createDataFrame(
-                    [], "id_a long, id_b long"
-                )
-                stored_hdist = spark.createDataFrame(
-                    [], "node long, dist int"
-                )
-        batch_sigs = None
-        if components or halo_benchmark is not None:
-            # the batch is hashed ONCE: these signatures feed both the
-            # sig-artifact advance and the pair delta below. The
-            # parallelism guard matters here exactly as in the pairs
-            # path it replaces — a 1-2-split micro-batch would pin the
-            # compute-bound shingle+hash stage to 1-2 cores
-            from inbev_data_engineering_case_spark.operators.dedup import (
-                _ensure_parallelism,
-                minhash_signatures,
-            )
-
-            batch_sigs = materialize(
-                minhash_signatures(
-                    _ensure_parallelism(batch), text_col, id_col, **adv_kw
-                ),
-                eager=True,
-            )
-        sigs, fps = advance_corpus_artifacts(
-            batch, stored_sigs, stored_fps,
-            text_col=text_col, id_col=id_col, mode=mode,
-            kept_sigs=batch_sigs, **adv_kw,
-        )
-        # replay safety for append mode: an identical re-applied batch
-        # contributes only rows that already exist — drop them here
-        # (fps already dedup on (fp, keep_id) inside the operator)
-        tables = {"sigs": sigs.dropDuplicates(["id", "sig"]), "fps": fps}
-        if gram_n is not None:
-            new_grams = build_gram_table(
-                batch, gram_n, id_col, text_col, gram_portable
-            )
-            if stored_grams is None:
-                grams = new_grams
-            else:
-                old = stored_grams
-                if mode == "replace":
-                    old = old.join(
-                        batch.select(F.col(id_col)), id_col, "left_anti"
-                    )
-                grams = old.unionByName(new_grams)
-            tables["grams"] = grams.dropDuplicates([id_col, "gram_h"])
-        if components or halo_benchmark is not None:
-            from inbev_data_engineering_case_spark.operators.curate import (
-                incremental_minhash_pairs,
-            )
-
-            # the batch's pair delta against the PARENT sigs (the
-            # batch's own sigs are not in them yet; on a replay they
-            # are, and the self-pair guard + distinct make the pair
-            # set identical either way — the idempotence argument in
-            # the docstring). new_sigs reuses the one hashing pass
-            # already paid for the sig advance above; the label
-            # contraction and the halo advance consume the SAME delta.
-            pairs = incremental_minhash_pairs(
-                batch,
-                stored_sigs,
-                text_col=text_col,
-                id_col=id_col,
-                threshold=near_dup_threshold,
-                new_sigs=batch_sigs,
-                **adv_kw,
-            )
-            # the iterative consumers (the label contraction's closure
-            # loop, the BFS relaxation's two eagerly-truncated edge
-            # reads) each re-evaluate their input per reference —
-            # materialize the delta-sized table once, unconditionally
-            pairs = materialize(pairs, eager=True)
-        if components:
-            from inbev_data_engineering_case_spark.operators.dedup import (
-                dedup_components_incremental,
-            )
-
-            tables["comps"] = dedup_components_incremental(
-                stored_comps, pairs
-            )
-        if halo_benchmark is not None:
-            from inbev_data_engineering_case_spark.operators.curate import (
-                advance_halo_artifacts,
-            )
-            from inbev_data_engineering_case_spark.operators.decontaminate import (  # noqa: E501
-                contamination_report,
-            )
-
-            new_seeds = contamination_report(
-                batch,
-                halo_benchmark,
-                n=halo_ngram,
-                id_col=id_col,
-                text_col=text_col,
-            ).select(id_col)
-            tables["hpairs"], tables["hdist"] = advance_halo_artifacts(
-                stored_hpairs,
-                stored_hdist,
-                pairs,
-                new_seeds,
-                max_hops=halo_hops,
-            )
-            tables["hmeta"] = spark.createDataFrame(
-                [halo_geo],
-                "max_hops int, ngram int, threshold double,"
-                " shingle_words int, num_hashes int",
-            )
-        return tables
-
-    return _run_state_stream(
-        docs_stream, state_dir, checkpoint, timeout,
-        CORPUS_ARTIFACT_PREFIX, advance, keep_snapshots,
-        "artifact-update stream",
-    )
-
-
-EMBEDDING_ARTIFACT_PREFIX = "embart"
-
-
-def read_embedding_artifacts(spark: SparkSession, state_dir: str):
-    """``(vectors, buckets)`` — the NORMALIZED sign-LSH state pair
-    (``build_embedding_sig_tables_normalized`` shape) from the latest
-    committed embedding-artifact snapshot, exactly what
-    ``incremental_embedding_near_dup_normalized`` consumes. Raises
-    ``FileNotFoundError`` when no snapshot has ever committed."""
-    from inbev_data_engineering_case_spark.layers import latest_snapshot
-
-    snap = latest_snapshot(state_dir, EMBEDDING_ARTIFACT_PREFIX)
-    return (
-        read_parquet(spark, os.path.join(snap, "vectors")),
-        read_parquet(spark, os.path.join(snap, "buckets")),
-    )
-
-
-def run_stream_embedding_update(
-    emb_stream: DataFrame,
-    state_dir: str,
-    checkpoint: str,
-    timeout: int = 300,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "append",
-    num_planes: int = 8,
-    n_probes: int = 1,
-    keep_snapshots: int | None = None,
-) -> dict[str, int]:
-    """Streaming maintenance of the EMBEDDING dedup state — the last
-    signature-backed family whose stored tables weren't
-    stream-advanced (``run_stream_artifact_update`` covers minhash
-    sigs, exact fingerprints, and containment grams): each micro-batch
-    of vectors hashes through
-    ``build_embedding_sig_tables_normalized`` and advances the
-    NORMALIZED ``(vectors, buckets)`` pair, publishing both under one
-    atomic snapshot generation — so the next crawl's
-    ``incremental_embedding_near_dup_normalized`` runs against
-    everything streamed so far without ever re-hashing history, and a
-    crash can never leave the two tables at different generations.
-
-    The disciplines — and the loop, ``_run_state_stream`` — are
-    ``run_stream_artifact_update``'s:
-    replay idempotence without a marker (vectors dedup on ``(id, v)``,
-    buckets on their full row — a re-applied batch recreates identical
-    rows; a same-id different-vector row is genuinely new state under
-    ``'append'`` and replaces under ``'replace'``, the batch
-    operator's delete+insert contract); duplicate ids within a batch
-    collapse first; NULL-vector rows drop per batch (the poison-pill
-    rationale); each generation publishes from the snapshot actually
-    READ (the TOCTOU rule — an interleaved writer raises
-    ``SnapshotConflictError`` instead of losing a delta). The build
-    geometry rides the bucket rows; resuming a stream with DIFFERENT
-    ``num_planes``/``n_probes`` than the stored state raises before
-    anything commits (a silent mismatch would mis-bucket every stored
-    row and lose recall with no error — the CMS wrong-geometry
-    discipline).
-
-    Returns ``query_metrics``.
-    """
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        build_embedding_sig_tables_normalized,
-    )
-
-    if mode not in ("append", "replace"):
-        # the artifact twin gets this check from advance_corpus_
-        # artifacts; a typo'd mode here would otherwise silently run
-        # as append and accumulate stale rows for re-embedded docs
-        raise ValueError(
-            f"run_stream_embedding_update: mode must be 'append' or"
-            f" 'replace', got {mode!r}"
-        )
-
-    spark = emb_stream.sparkSession
-
-    def advance(batch_df: DataFrame, batch_id: int, parent_snap):
-        batch = _cut_nonempty(batch_df, id_col, vec_col)
-        if batch is None:
-            return None
-        vectors, buckets = build_embedding_sig_tables_normalized(
-            batch, num_planes, n_probes, id_col, vec_col
-        )
-        if parent_snap is not None:
-            old_v = read_parquet(spark, os.path.join(parent_snap, "vectors"))
-            old_b = read_parquet(spark, os.path.join(parent_snap, "buckets"))
-            head = old_b.select("num_planes", "n_probes").first()
-            if head is not None and (
-                head["num_planes"] != num_planes
-                or head["n_probes"] != n_probes
-            ):
-                raise ValueError(
-                    "run_stream_embedding_update: stored state was built"
-                    f" with num_planes={head['num_planes']},"
-                    f" n_probes={head['n_probes']} but this stream is"
-                    f" configured num_planes={num_planes},"
-                    f" n_probes={n_probes} — a silent mismatch would"
-                    " mis-bucket every stored row; rebuild the state or"
-                    " match the geometry"
-                )
-            if mode == "replace":
-                ids = batch.select(F.col(id_col).alias("id"))
-                old_v = old_v.join(ids, "id", "left_anti")
-                old_b = old_b.join(ids, "id", "left_anti")
-            vectors = old_v.unionByName(vectors)
-            buckets = old_b.unionByName(buckets)
-        # replay safety: a re-applied batch contributes only rows that
-        # already exist — drop them here
-        return {
-            "vectors": vectors.dropDuplicates(["id", "v"]),
-            "buckets": buckets.dropDuplicates(["seed", "id", "bucket"]),
-        }
-
-    return _run_state_stream(
-        emb_stream, state_dir, checkpoint, timeout,
-        EMBEDDING_ARTIFACT_PREFIX, advance, keep_snapshots,
-        "embedding-artifact stream",
-    )
 
 
 CLASSIFIER_ARTIFACT_PREFIX = "clfart"
@@ -2112,39 +1049,34 @@ def run_stream_classifier_update(
     one atomic snapshot generation per batch — so the
     scoring model re-derives from the latest snapshot at any time
     (``bow_weights_from_counts``, model-sized) while historical text
-    is never re-tokenized. The last signature-backed artifact family
-    to go stream-maintained, joining minhash sigs, fingerprints,
-    containment grams, and the embedding pair.
+    is never re-tokenized.
 
-    Replay discipline DIFFERS from the other artifact streams and is
-    the reason for the ``meta.json`` sidecar: counts are ADDITIVE, so a
-    replayed batch (crash between snapshot commit and checkpoint write)
-    cannot be made idempotent by row-level dedup — re-merging would
-    double-count every token. Each snapshot therefore records the
-    ``batch_id`` that produced it — together with the CHECKPOINT
-    string (as passed, verbatim — keep one stable spelling across
-    runs), which is thereby part of the state's lineage, and
+    The ``meta.json`` sidecar carries the replay discipline: counts are
+    ADDITIVE, so a replayed batch (crash between snapshot commit and
+    checkpoint write) cannot be made idempotent by row-level dedup —
+    re-merging would double-count every token. Each snapshot therefore
+    records the ``batch_id`` that produced it — together with the
+    CHECKPOINT string (as passed, verbatim — keep one stable spelling
+    across runs), which is thereby part of the state's lineage, and
     ``n_buckets`` — in a ``meta.json`` file beside ``counts``, published
-    by the same atomic rename. The guards read that file on the
-    driver, so they launch no Spark job: a replayed batch is skipped
-    before its input is even cut. A batch at or below the recorded id
-    under the SAME checkpoint is SKIPPED (its counts are already folded in); a
-    DIFFERENT checkpoint against existing state RAISES, because a
-    fresh checkpoint restarts batch ids at 0 and the skip guard would
-    otherwise silently drop genuinely new batches (the other artifact
-    streams tolerate checkpoint swaps only because their states dedup
-    on natural keys, which additive counts cannot). Keep one
-    checkpoint for the life of the ``state_dir``; ``availableNow``
-    re-runs through it pick up exactly the new files. Duplicate ids
-    within a batch collapse first; NULL-text/label rows drop per
-    batch (poison-pill rationale).
+    by the same atomic rename. The guards read that file on the driver,
+    so they launch no Spark job: a replayed batch is skipped before its
+    input is even cut. A batch at or below the recorded id under the
+    SAME checkpoint is SKIPPED (its counts are already folded in); a
+    DIFFERENT checkpoint against existing state RAISES, because a fresh
+    checkpoint restarts batch ids at 0 and the skip guard would
+    otherwise silently drop genuinely new batches (a state that dedups
+    on natural keys could tolerate a checkpoint swap; additive counts
+    cannot). Keep one checkpoint for the life of the ``state_dir``;
+    ``availableNow`` re-runs through it pick up exactly the new files.
+    Duplicate ids within a batch collapse first; NULL-text/label rows
+    drop per batch (poison-pill rationale).
 
-    Geometry refusal before commit (the embedding stream's
-    discipline): ``n_buckets`` defaults to the sidecar's value
-    when state exists (``classify.DEFAULT_N_BUCKETS`` on the first
-    generation); passing a different explicit value raises — a silent
-    mismatch would hash every future token into the wrong space. A
-    state dir whose latest snapshot has no ``meta.json`` (the older
+    Geometry refusal before commit: ``n_buckets`` defaults to the
+    sidecar's value when state exists (``classify.DEFAULT_N_BUCKETS`` on
+    the first generation); passing a different explicit value raises — a
+    silent mismatch would hash every future token into the wrong space.
+    A state dir whose latest snapshot has no ``meta.json`` (the older
     ``meta`` parquet layout) raises ``ValueError`` naming the dir.
 
     One-class batches are fine at the counts level (the priors row
@@ -2215,22 +1147,30 @@ def _run_stream_counts_update(
     n_buckets: int | None,
     keep_snapshots: int | None,
 ) -> dict[str, int]:
-    """The additive-count artifact streams' ONE guard chain (binary and
+    """The additive-count artifact streams' ONE loop (binary and
     multiclass twins delegate here, so checkpoint lineage, replay skip
-    and geometry refusal are defined once), run on ``_run_state_stream``.
-    Per batch: checkpoint-lineage refusal → geometry refusal → replay
-    skip, all read from the parent snapshot's ``meta.json`` sidecar (a
-    file read, no Spark job, so a replayed batch launches none) →
-    null-filter + per-batch id dedup, cut once with its row count
-    observed (an empty batch stops here) → train-on-batch → additive
-    merge → one snapshot holding ``counts`` and the sidecar."""
+    and geometry refusal are defined once). Per micro-batch: resolve the
+    parent snapshot → checkpoint-lineage refusal → geometry refusal →
+    replay skip, all read from the parent snapshot's ``meta.json``
+    sidecar (a file read, no Spark job, so a replayed batch launches
+    none) → null-filter + per-batch id dedup, cut once with its row
+    count observed (an empty batch stops here) → train-on-batch →
+    additive merge → one snapshot holding ``counts`` and the sidecar,
+    published through ``layers.advance_snapshot`` from the snapshot the
+    batch READ, so an interleaved writer makes it raise
+    ``SnapshotConflictError`` instead of silently losing a delta. One
+    writer per ``(state_dir, checkpoint)``; one generation per
+    micro-batch, pruned to ``keep_snapshots`` (None keeps all). Returns
+    ``query_metrics``."""
+    from inbev_data_engineering_case_spark.layers import advance_snapshot
     from inbev_data_engineering_case_spark.operators.classify import (
         DEFAULT_N_BUCKETS,
     )
 
     spark = labeled_stream.sparkSession
 
-    def advance(batch_df: DataFrame, batch_id: int, parent_snap):
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        parent_snap = _parent_snapshot(state_dir, prefix)
         # the RAW checkpoint string is the lineage key: abspath would
         # make it cwd-dependent for relative paths and mangle URI
         # checkpoints (s3a://...), spuriously refusing valid resumes.
@@ -2267,31 +1207,43 @@ def _run_stream_counts_update(
                     " state_dir"
                 )
             if batch_id <= meta["batch_id"]:
-                return None  # replayed: its counts are already folded in
+                return  # replayed: its counts are already folded in
             stored = read_parquet(
                 spark, os.path.join(parent_snap, "counts")
             )
         # id nulls are legal to the hash; text/label nulls are not
         batch = _cut_nonempty(batch_df, id_col, text_col, label_col)
         if batch is None:
-            return None
+            return
         delta = train(batch, buckets)
-        return {
-            "counts": merge(stored, delta) if stored is not None else delta,
-            COUNTS_META: {
-                "batch_id": int(batch_id),
-                "checkpoint": checkpoint,
-                "n_buckets": buckets,
-            },
+        counts = merge(stored, delta) if stored is not None else delta
+        sidecar = {
+            "batch_id": int(batch_id),
+            "checkpoint": checkpoint,
+            "n_buckets": buckets,
         }
+
+        def write_all(staging: str) -> None:
+            # one rename publishes both, so a crash never leaves the
+            # counts and their sidecar at different generations
+            os.makedirs(staging)
+            write_parquet(counts, os.path.join(staging, "counts"))
+            with open(os.path.join(staging, COUNTS_META), "w") as f:
+                json.dump(sidecar, f)
+
+        advance_snapshot(
+            state_dir, prefix, parent_snap, write_all, keep_snapshots
+        )
 
     # refuse an older-layout state dir before the stream starts
     parent_snap = _parent_snapshot(state_dir, prefix)
     if parent_snap is not None:
         _counts_meta(parent_snap, state_dir, fn_name)
-    return _run_state_stream(
-        labeled_stream, state_dir, checkpoint, timeout, prefix, advance,
-        keep_snapshots, f"counts-artifact stream ({prefix})",
+    return _drain(
+        labeled_stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint),
+        timeout,
+        f"counts-artifact stream ({prefix}) to {state_dir}",
     )
 
 

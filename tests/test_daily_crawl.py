@@ -141,100 +141,6 @@ def test_two_day_crawl_table_mode_delta_sized(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
-def test_daily_crawl_feeds_the_serving_index_delta_sized(spark, tmp_path):
-    """The composition the r6 VERDICT asked for: curate_incremental
-    decides WHAT survives day 2, update_text_index applies exactly that
-    delta to the SERVING index — only the kept delta re-tokenizes, day
-    1's tf/doclen part files hard-link through (inode-verified), and
-    the updated index answers BM25 queries identically to a full
-    rebuild over the whole kept corpus."""
-    import os
-
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_corpus,
-        curate_incremental,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        exact_dedup,
-        minhash_signatures,
-    )
-    from inbev_data_engineering_case_spark.operators.relevance import (
-        bm25_from_index,
-        build_text_index,
-        resolve_text_index,
-        update_text_index,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-    )
-    kept1 = curate_corpus(docs)
-    kept1.write.parquet(str(tmp_path / "corpus_day1"))
-    kept1 = spark.read.parquet(str(tmp_path / "corpus_day1"))
-    stored_sigs = minhash_signatures(kept1.select("doc_id", "text"))
-    stored_fps = exact_dedup(kept1.select("doc_id", "text"))
-
-    idx = str(tmp_path / "serving_index")
-    build_text_index(kept1.select("doc_id", "text"), idx)
-    snap1 = resolve_text_index(idx)
-    inodes1 = {
-        f: os.stat(os.path.join(snap1, "tf", f)).st_ino
-        for f in os.listdir(os.path.join(snap1, "tf"))
-        if not f.startswith(("_", "."))
-    }
-
-    # day-2 crawl: fresh word-reversed docs (survive curation) plus an
-    # exact dup of a kept doc (dropped by the stored fingerprints)
-    base = kept1.orderBy("doc_id").limit(11).select("doc_id", "text")
-    fresh = base.limit(10).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.array_join(F.reverse(F.split("text", r"\s+")), " ").alias("text"),
-    )
-    dup = base.orderBy(F.col("doc_id").desc()).limit(1).select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"), "text"
-    )
-    snap2 = docs.unionByName(fresh).unionByName(dup)
-    kept2 = curate_incremental(docs, snap2, stored_sigs, stored_fps)
-    kept2_ids = {r["doc_id"] for r in kept2.select("doc_id").collect()}
-    assert kept2_ids and all(i >= 1_000_000 and i < 3_000_000 for i in kept2_ids)
-
-    # the curated delta IS the index delta — pure-new ids, append path
-    audit = update_text_index(
-        spark, idx, kept2.select("doc_id", "text")
-    )
-    assert audit["mode"] == "append"
-    snap2_dir = resolve_text_index(idx)
-    inodes2 = {
-        f: os.stat(os.path.join(snap2_dir, "tf", f)).st_ino
-        for f in os.listdir(os.path.join(snap2_dir, "tf"))
-        if not f.startswith(("_", "."))
-    }
-    for f, ino in inodes1.items():
-        assert inodes2[f] == ino  # day-1 tokenization reused byte-for-byte
-
-    rebuild_dir = str(tmp_path / "rebuild_index")
-    build_text_index(
-        kept1.select("doc_id", "text").unionByName(
-            kept2.select("doc_id", "text")
-        ),
-        rebuild_dir,
-    )
-    key = lambda r: tuple(r)  # noqa: E731
-    for terms in (["data", "spark"], ["the", "and"]):
-        got = sorted(
-            map(key, bm25_from_index(spark, idx, terms, k=10).collect())
-        )
-        want = sorted(
-            map(
-                key,
-                bm25_from_index(spark, rebuild_dir, terms, k=10).collect(),
-            )
-        )
-        assert got == want
-
-
 _EN = "the quick brown fox jumps over the lazy dog in the sunny park"
 
 

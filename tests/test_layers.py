@@ -494,41 +494,35 @@ def test_advance_snapshot_refuses_a_stale_parent(tmp_path):
     assert not [n for n in os.listdir(base) if n.startswith(".staging")]
 
 
-def test_link_parquet_files_falls_back_to_copy(tmp_path, monkeypatch):
+def test_link_or_copy_falls_back_to_copy(tmp_path, monkeypatch):
     """Filesystems without hard-link support (FUSE object-store mounts,
-    NFS with links disabled) raise OSError from os.link; the delta
-    append/compaction paths must then degrade to a byte copy rather
-    than fail where commit_snapshot's rename protocol itself works.
-    Simulated by making os.link raise EPERM."""
+    NFS with links disabled) raise OSError from os.link; delete_rows'
+    staged rewrite must then degrade to a byte copy rather than fail
+    where commit_snapshot's rename protocol itself works. Simulated by
+    making os.link raise EPERM."""
     import errno
 
-    from inbev_data_engineering_case_spark.layers import link_parquet_files
+    from inbev_data_engineering_case_spark.layers import _link_or_copy
 
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "part-000.parquet").write_bytes(b"payload")
-    (src / "_SUCCESS").write_bytes(b"")
-    (src / ".hidden").write_bytes(b"x")
+    src = tmp_path / "part-000.parquet"
+    src.write_bytes(b"payload")
 
     def deny_link(a, b, **kw):
         raise OSError(errno.EPERM, "hard links not supported")
 
     monkeypatch.setattr(os, "link", deny_link)
-    dst = tmp_path / "dst"
-    n = link_parquet_files(str(src), str(dst))
-    assert n == 1  # markers and hidden files still skipped
-    assert (dst / "part-000.parquet").read_bytes() == b"payload"
+    dst = tmp_path / "copied.parquet"
+    _link_or_copy(str(src), str(dst))
+    assert dst.read_bytes() == b"payload"
     # copies, not links: distinct inodes
-    assert (
-        os.stat(dst / "part-000.parquet").st_ino
-        != os.stat(src / "part-000.parquet").st_ino
-    )
+    assert os.stat(dst).st_ino != os.stat(src).st_ino
 
     # EEXIST is NOT a capability gap — a double-staged destination is
     # a staging bug and must stay a loud failure, not a silent
     # copy-over (the fallback is restricted to the no-link errnos)
     monkeypatch.undo()
-    dst2 = tmp_path / "dst2"
-    link_parquet_files(str(src), str(dst2))
+    linked = tmp_path / "linked.parquet"
+    _link_or_copy(str(src), str(linked))
+    assert os.stat(linked).st_ino == os.stat(src).st_ino
     with pytest.raises(OSError):
-        link_parquet_files(str(src), str(dst2))
+        _link_or_copy(str(src), str(linked))

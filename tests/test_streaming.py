@@ -760,108 +760,6 @@ def test_stream_cms_partials_bit_identical_and_replay_safe(spark, tmp_path):
     assert sorted(map(tuple, spark.read.parquet(sink).collect())) == first
 
 
-@pytest.mark.slow
-def test_stream_index_update_keeps_serving_index_current(spark, tmp_path):
-    """The serving text index maintained FROM THE DOCUMENT STREAM: two
-    micro-batches of new/changed docs apply through update_text_index
-    (each publishing an atomic committed generation), the drained index
-    equals a full rebuild of the final corpus, and RE-APPLYING the last
-    batch (the crash-between-commit-and-checkpoint replay) changes
-    nothing — the keyed merge makes replay idempotent without a
-    marker."""
-    from inbev_data_engineering_case_spark.operators.relevance import (
-        bm25_from_index,
-        build_text_index,
-        update_text_index,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        run_stream_index_update,
-    )
-
-    idx = str(tmp_path / "serving_index")
-    day0 = spark.createDataFrame(
-        [(0, "spark shuffles data"), (1, "zebra crossing ahead")],
-        "doc_id long, text string",
-    )
-    build_text_index(day0, idx)
-
-    src = str(tmp_path / "doc_feed")
-    batch1 = spark.createDataFrame(
-        [(2, "spark tuning guide")], "doc_id long, text string"
-    )
-    batch2 = spark.createDataFrame(
-        # doc 1 CHANGES content; doc 3 is new; doc 3 re-delivered in
-        # the same batch (at-least-once source) collapses via the
-        # keyed dedup; doc 9's NULL text must DROP, not poison the
-        # stream into a permanently replaying failed batch
-        [(1, "updated zebra text"), (3, "cluster spark facts"),
-         (3, "cluster spark facts"), (9, None)],
-        "doc_id long, text string",
-    )
-    batch1.coalesce(1).write.parquet(src)
-    batch2.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    # keep_snapshots=None (the serving setting): one generation per
-    # micro-batch must RETAIN — the default of 2 would prune a resolved
-    # snapshot out from under a serving reader after just two batches,
-    # so the passthrough is part of the operator's contract
-    metrics = run_stream_index_update(
-        stream, idx, str(tmp_path / "ckpt"), keep_snapshots=None
-    )
-    assert metrics["input_rows"] == 5  # incl. the dropped NULL-text doc
-    import os as _os
-
-    gens = [d for d in _os.listdir(idx) if d.startswith("textindex_")]
-    assert len(gens) == 3  # initial build + one per micro-batch, unpruned
-
-    final = spark.createDataFrame(
-        [
-            (0, "spark shuffles data"),
-            (1, "updated zebra text"),
-            (2, "spark tuning guide"),
-            (3, "cluster spark facts"),
-        ],
-        "doc_id long, text string",
-    )
-    rebuild = str(tmp_path / "rebuild")
-    build_text_index(final, rebuild)
-    key = lambda r: tuple(r)  # noqa: E731
-    want = sorted(
-        map(
-            key,
-            bm25_from_index(
-                spark, rebuild, ["spark", "zebra"], k=10
-            ).collect(),
-        )
-    )
-    got = sorted(
-        map(
-            key,
-            bm25_from_index(spark, idx, ["spark", "zebra"], k=10).collect(),
-        )
-    )
-    assert got == want
-    # replay the final batch by hand (as apply_batch would see it:
-    # NULL-text filtered, keyed-deduped): same final answers
-    update_text_index(
-        spark,
-        idx,
-        batch2.filter("text is not null").dropDuplicates(["doc_id"]),
-    )
-    replayed = sorted(
-        map(
-            key,
-            bm25_from_index(spark, idx, ["spark", "zebra"], k=10).collect(),
-        )
-    )
-    assert replayed == want
-
-
 def test_lateness_metrics_report_watermark_drops(spark, tmp_path):
     """Deliberately-late fixture through the dedup operator: batch 0
     advances the watermark past the late rows in batches 1 and 2. The
@@ -1170,444 +1068,6 @@ def test_stream_drift_partials_merge_equals_batch(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_stream_artifact_update_maintains_dedup_state(spark, tmp_path):
-    """The dedup state (minhash signature + fingerprint tables)
-    maintained FROM THE DOCUMENT STREAM: two micro-batches advance the
-    pair through advance_corpus_artifacts, BOTH tables publish under
-    one atomic snapshot per batch, the drained state equals the batch
-    operator applied sequentially, and replaying the whole feed from a
-    fresh checkpoint (the crash-between-commit-and-checkpoint case)
-    changes nothing."""
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.operators.curate import (
-        advance_corpus_artifacts,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        read_corpus_artifacts,
-        run_stream_artifact_update,
-    )
-
-    state = str(tmp_path / "artifacts")
-    src = str(tmp_path / "doc_feed")
-    batch1 = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog today"),
-         (1, "an entirely different second document about rivers")],
-        "doc_id long, text string",
-    )
-    batch2 = spark.createDataFrame(
-        # doc 3 new; doc 3 re-delivered same text (at-least-once)
-        # collapses; doc 9 NULL text drops, not poisons
-        [(3, "a third document that arrives on day two with news"),
-         (3, "a third document that arrives on day two with news"),
-         (9, None)],
-        "doc_id long, text string",
-    )
-    batch1.coalesce(1).write.parquet(src)
-    batch2.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    metrics = run_stream_artifact_update(
-        stream, state, str(tmp_path / "ckpt")
-    )
-    assert metrics["input_rows"] == 5
-    sigs, fps = read_corpus_artifacts(spark, state)
-
-    # batch twin: the same two advances applied sequentially from empty
-    empty_sigs = spark.createDataFrame([], "id long, sig array<bigint>")
-    empty_fps = spark.createDataFrame([], "fp long, keep_id long")
-    s1, f1 = advance_corpus_artifacts(batch1, empty_sigs, empty_fps)
-    clean2 = batch2.filter(F.col("text").isNotNull()).dropDuplicates(
-        ["doc_id"]
-    )
-    s2, f2 = advance_corpus_artifacts(clean2, s1, f1)
-    key = lambda r: tuple(  # noqa: E731
-        tuple(v) if isinstance(v, list) else v for v in r
-    )
-    want_sigs = sorted(map(key, s2.collect()))
-    want_fps = sorted(map(key, f2.collect()))
-    assert sorted(map(key, sigs.collect())) == want_sigs
-    assert sorted(map(key, fps.collect())) == want_fps
-
-    # both tables live in ONE snapshot generation per batch (a crash
-    # can't leave sigs and fps at different generations)
-    import os as _os
-
-    gens = sorted(
-        d for d in _os.listdir(state) if d.startswith("corpusart_")
-    )
-    assert len(gens) == 2
-    for g in gens:
-        assert _os.path.isdir(_os.path.join(state, g, "sigs"))
-        assert _os.path.isdir(_os.path.join(state, g, "fps"))
-
-    # full replay from a fresh checkpoint: every batch re-applies to
-    # the same final contents (no dup signature rows, no dup fps)
-    stream2 = (
-        spark.readStream.schema(batch1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    run_stream_artifact_update(stream2, state, str(tmp_path / "ckpt2"))
-    sigs_r, fps_r = read_corpus_artifacts(spark, state)
-    assert sorted(map(key, sigs_r.collect())) == want_sigs
-    assert sorted(map(key, fps_r.collect())) == want_fps
-
-    # the loop closes: the STREAM-maintained pair feeds the batch
-    # daily-crawl pipeline directly — a day-3 crawl whose first doc
-    # exactly duplicates streamed doc 0 and whose second is new must
-    # curate to exactly the new doc, identically to feeding the
-    # hand-built batch artifacts
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_incremental,
-    )
-
-    day2 = batch1.unionByName(clean2)
-    day3 = day2.unionByName(
-        spark.createDataFrame(
-            [(7, "the quick brown fox jumps over the lazy dog today"),
-             (8, "a genuinely new fourth document closing the loop")],
-            "doc_id long, text string",
-        )
-    )
-
-    def kept_ids(sig_df, fp_df):
-        return sorted(
-            r["doc_id"]
-            for r in curate_incremental(
-                day2, day3, sig_df, fp_df, min_quality=0.0
-            ).collect()
-        )
-
-    streamed = kept_ids(sigs_r, fps_r)
-    assert streamed == kept_ids(s2, f2) == [8]  # 7 is an exact dup of 0
-
-
-@pytest.mark.slow
-def test_stream_artifact_update_maintains_gram_table(spark, tmp_path):
-    """gram_n= extends the streamed dedup state with the containment
-    gram table, in the SAME atomic snapshot as sigs/fps: the drained
-    table equals build_gram_table over every streamed doc, a replay
-    from a fresh checkpoint changes nothing, and the streamed state
-    feeds incremental_containment_pairs directly — a day-3 fragment
-    of a streamed doc surfaces as contained without re-tokenizing
-    history."""
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        build_gram_table,
-        containment_pairs,
-        incremental_containment_pairs,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        read_corpus_artifacts,
-        run_stream_artifact_update,
-    )
-
-    state = str(tmp_path / "artifacts")
-    src = str(tmp_path / "doc_feed")
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 40)
-        .localCheckpoint(eager=True)
-    )
-    b1 = docs.filter(F.col("doc_id") < 20)
-    b2 = docs.filter(F.col("doc_id") >= 20)
-    b1.coalesce(1).write.parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    run_stream_artifact_update(
-        stream(), state, str(tmp_path / "ckpt"), gram_n=4
-    )
-    _sigs, _fps, grams = read_corpus_artifacts(
-        spark, state, with_grams=True
-    )
-    key = lambda r: tuple(r)  # noqa: E731
-    want = sorted(map(key, build_gram_table(docs, n=4).collect()))
-    assert sorted(map(key, grams.collect())) == want
-
-    # replay from a fresh checkpoint: identical final table
-    run_stream_artifact_update(
-        stream(), state, str(tmp_path / "ckpt2"), gram_n=4
-    )
-    _s, _f, grams_r = read_corpus_artifacts(spark, state, with_grams=True)
-    assert sorted(map(key, grams_r.collect())) == want
-
-    # the streamed gram state feeds the containment delta directly:
-    # a new crawl carrying a 40%-prefix fragment of doc 0 must surface
-    # as contained, matching the full-batch run filtered to new pairs
-    from inbev_data_engineering_case_spark.functions import tokens
-
-    frag = docs.filter(F.col("doc_id") == 0).select(
-        F.lit(900000).alias("doc_id"),
-        F.array_join(
-            F.slice(
-                tokens(F.col("text")),
-                1,
-                20,
-            ),
-            " ",
-        ).alias("text"),
-    )
-    kw = dict(n=4, threshold_ppm=800_000, max_gram_df=100)
-    got = sorted(map(key, incremental_containment_pairs(
-        grams, frag, **kw).collect()))
-    full = containment_pairs(docs.unionByName(frag), **kw)
-    want_pairs = sorted(map(key, full.filter(
-        (F.col("contained_id") == 900000)
-        | (F.col("container_id") == 900000)
-    ).collect()))
-    assert got == want_pairs and got
-
-
-def test_stream_artifact_update_gram_upgrade_requires_backfill(
-    spark, tmp_path
-):
-    """Enabling gram_n on a stream whose existing snapshots lack a
-    grams table must raise with backfill guidance, not quietly seed
-    the gram table from the current batch onward — that state would
-    permanently omit historical docs' grams while read_corpus_
-    artifacts(with_grams=True) succeeded as if complete, silently
-    missing containment pairs with pre-upgrade documents."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.streaming.events import (
-        run_stream_artifact_update,
-    )
-
-    state = str(tmp_path / "artifacts")
-    src = str(tmp_path / "doc_feed")
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 20)
-        .localCheckpoint(eager=True)
-    )
-    docs.coalesce(1).write.parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    # generation 1: no gram maintenance — snapshot has sigs/fps only
-    run_stream_artifact_update(stream(), state, str(tmp_path / "ckpt"))
-    # flipping gram_n on against that state must refuse loudly,
-    # naming the backfill utility
-    with pytest.raises(Exception, match="backfill_gram_table"):
-        run_stream_artifact_update(
-            stream(), state, str(tmp_path / "ckpt2"), gram_n=4
-        )
-
-
-def test_backfill_gram_table_closes_the_upgrade_path(spark, tmp_path):
-    """backfill_gram_table: the one-time upgrade the gram trap points
-    to — grams over the FULL stored corpus commit atomically alongside
-    the parent's sigs/fps as a new generation; a partial corpus raises
-    (the silent-missing-pairs hazard the trap exists for); an
-    already-grammed lineage raises; and the stream then resumes WITH
-    gram_n, advancing the backfilled table incrementally."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        build_gram_table,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        backfill_gram_table,
-        read_corpus_artifacts,
-        run_stream_artifact_update,
-    )
-
-    state = str(tmp_path / "artifacts")
-    src = str(tmp_path / "doc_feed")
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 20)
-        .localCheckpoint(eager=True)
-    )
-    docs.coalesce(1).write.parquet(src)
-
-    def stream(path=src):
-        return (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-
-    # gram-less lineage
-    run_stream_artifact_update(stream(), state, str(tmp_path / "ckpt"))
-
-    # partial corpus: refuse — a partial gram table would silently
-    # drop containment pairs against the missing docs
-    with pytest.raises(ValueError, match="missing"):
-        backfill_gram_table(docs.filter(F.col("doc_id") < 5), state,
-                            gram_n=4)
-
-    snap = backfill_gram_table(docs, state, gram_n=4)
-    assert "corpusart" in snap
-    sigs, fps, grams = read_corpus_artifacts(spark, state, with_grams=True)
-    want = sorted(
-        map(tuple, build_gram_table(docs, 4, "doc_id", "text").collect())
-    )
-    assert sorted(map(tuple, grams.collect())) == want
-
-    # idempotence guard: a second backfill has nothing to do
-    with pytest.raises(ValueError, match="already"):
-        backfill_gram_table(docs, state, gram_n=4)
-
-    # resuming with DIFFERENT gram geometry is refused before commit —
-    # a silent mismatch would leave historical docs unmatched in every
-    # future containment join
-    more = docs.select(
-        (F.col("doc_id") + 100).alias("doc_id"),
-        F.concat("text", F.lit(" anew")).alias("text"),
-    ).localCheckpoint(eager=True)
-    src2 = str(tmp_path / "doc_feed2")
-    more.coalesce(1).write.parquet(src2)
-    with pytest.raises(Exception, match="geometry"):
-        run_stream_artifact_update(
-            stream(src2), state, str(tmp_path / "ckpt_badgeom"), gram_n=5
-        )
-    with pytest.raises(Exception, match="geometry"):
-        run_stream_artifact_update(
-            stream(src2), state, str(tmp_path / "ckpt_badgeom2"),
-            gram_n=4, gram_portable=False,
-        )
-
-    # the stream now resumes WITH gram_n and advances the grams
-    run_stream_artifact_update(
-        stream(src2), state, str(tmp_path / "ckpt3"), gram_n=4
-    )
-    _, _, grams2 = read_corpus_artifacts(spark, state, with_grams=True)
-    want2 = sorted(
-        map(
-            tuple,
-            build_gram_table(
-                docs.unionByName(more), 4, "doc_id", "text"
-            ).collect(),
-        )
-    )
-    assert sorted(map(tuple, grams2.collect())) == want2
-
-
-@pytest.mark.slow
-def test_stream_embedding_update_maintains_normalized_state(
-    spark, tmp_path
-):
-    """Streaming maintenance of the embedding dedup state: a two-batch
-    drain equals build_embedding_sig_tables_normalized over every
-    streamed vector, published atomically as one (vectors, buckets)
-    snapshot generation; a replay from a fresh checkpoint changes
-    nothing; the streamed state feeds
-    incremental_embedding_near_dup_normalized directly (matching the
-    full recompute filtered to new-involving pairs); and resuming with
-    different geometry raises before anything commits."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        build_embedding_sig_tables_normalized,
-        embedding_near_dup_pairs,
-        incremental_embedding_near_dup_normalized,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        read_embedding_artifacts,
-        run_stream_embedding_update,
-    )
-
-    state = str(tmp_path / "embart")
-    src = str(tmp_path / "vec_feed")
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "embedding"
-            ),
-        )
-        .filter(F.col("vec_id") < 60)
-        .localCheckpoint(eager=True)
-    )
-    b1 = emb.filter(F.col("vec_id") < 30)
-    b2 = emb.filter(F.col("vec_id") >= 30)
-    b1.coalesce(1).write.parquet(src)
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    kw = dict(num_planes=6, n_probes=2)
-    run_stream_embedding_update(
-        stream(), state, str(tmp_path / "ckpt"), **kw
-    )
-    vectors, buckets = read_embedding_artifacts(spark, state)
-    want_v, want_b = build_embedding_sig_tables_normalized(emb, **kw)
-    key = lambda r: tuple(  # noqa: E731 — arrays → tuples for sorting
-        tuple(x) if isinstance(x, list) else x for x in r
-    )
-    assert sorted(map(key, vectors.collect())) == sorted(
-        map(key, want_v.collect())
-    )
-    assert sorted(map(key, buckets.collect())) == sorted(
-        map(key, want_b.collect())
-    )
-
-    # replay from a fresh checkpoint: identical final state
-    run_stream_embedding_update(
-        stream(), state, str(tmp_path / "ckpt2"), **kw
-    )
-    v2, b2_ = read_embedding_artifacts(spark, state)
-    assert v2.count() == vectors.count()
-    assert b2_.count() == buckets.count()
-
-    # the streamed state feeds the normalized-native delta directly
-    new = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + 500000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x * (F.lit(1) + F.lit(0.001) * ((i % 3) - 1)),
-        ).alias("embedding"),
-    )
-    got = sorted(map(tuple, incremental_embedding_near_dup_normalized(
-        v2, b2_, new, threshold=0.9, **kw).collect()))
-    full = embedding_near_dup_pairs(
-        emb.unionByName(new), threshold=0.9, **kw
-    )
-    want_pairs = sorted(map(tuple, full.filter(
-        (F.col("id_a") >= 500000) | (F.col("id_b") >= 500000)
-    ).collect()))
-    assert got == want_pairs and got
-
-    # geometry mismatch on resume refuses before committing
-    with pytest.raises(Exception, match="num_planes"):
-        run_stream_embedding_update(
-            stream(), state, str(tmp_path / "ckpt3"),
-            num_planes=8, n_probes=2,
-        )
-
-
-@pytest.mark.slow
 def test_stream_classifier_counts_maintenance(spark, tmp_path):
     """Streaming maintenance of the classifier's additive count
     statistics: a two-batch drain equals train_bow_counts over every
@@ -1902,367 +1362,6 @@ def test_stream_multiclass_counts_maintenance(spark, tmp_path):
         run_stream_multiclass_update(
             stream(), state, ckpt, n_buckets=1 << 13
         )
-
-
-@pytest.mark.slow
-def test_stream_artifact_update_maintains_components_labels(
-    spark, tmp_path
-):
-    """components=True: the connected-components label table advances
-    from the document stream in the SAME atomic snapshot as sigs/fps —
-    two micro-batches (the second near-duping the first's doc), the
-    drained labels equal the converged batch closure over the union
-    pair graph, and a full replay from a fresh checkpoint changes
-    nothing (the contraction of already-reflected edges is a no-op)."""
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        dedup_components,
-        minhash_dedup_pairs,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        read_corpus_artifacts,
-        run_stream_artifact_update,
-    )
-
-    state = str(tmp_path / "artifacts")
-    src = str(tmp_path / "doc_feed")
-    t1 = (
-        "the quick brown fox jumps over the lazy dog near the barn "
-        "while the farmer watches from the porch in the evening"
-    )
-    batch1 = spark.createDataFrame(
-        [(1, t1),
-         (3, "an entirely different second document about rivers and "
-             "the bridges that the engineers built across the valley")],
-        "doc_id long, text string",
-    )
-    batch2 = spark.createDataFrame(
-        # 11 near-dups 1 (cross-batch pair edge); 13 fresh
-        [(11, t1 + " tonight"),
-         (13, "a third unrelated page on the orchards and the apples "
-              "that the children gather in the baskets every autumn")],
-        "doc_id long, text string",
-    )
-    batch1.coalesce(1).write.parquet(src)
-    batch2.coalesce(1).write.mode("append").parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(batch1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    run_stream_artifact_update(
-        stream(), state, str(tmp_path / "ckpt"), components=True
-    )
-    sigs, fps, comps = read_corpus_artifacts(
-        spark, state, with_components=True
-    )
-    got = {(r["node"], r["comp"]) for r in comps.collect()}
-    want = {
-        (r["node"], r["comp"])
-        for r in dedup_components(
-            minhash_dedup_pairs(batch1.unionByName(batch2)),
-            require_convergence=True,
-        ).collect()
-    }
-    assert got == want
-    assert (1, 1) in got and (11, 1) in got  # the cross-batch cluster
-
-    # every generation carries the labels beside sigs/fps
-    import os as _os
-
-    gens = sorted(
-        d for d in _os.listdir(state) if d.startswith("corpusart_")
-    )
-    assert len(gens) == 2
-    for g in gens:
-        assert _os.path.isdir(_os.path.join(state, g, "comps"))
-
-    # full replay: idempotent (re-applied pairs relabel nothing)
-    run_stream_artifact_update(
-        stream(), state, str(tmp_path / "ckpt2"), components=True
-    )
-    _, _, comps_r = read_corpus_artifacts(
-        spark, state, with_components=True
-    )
-    assert {(r["node"], r["comp"]) for r in comps_r.collect()} == want
-
-
-@pytest.mark.slow
-def test_stream_components_upgrade_requires_backfill_and_closes(
-    spark, tmp_path
-):
-    """Enabling components=True on an existing label-less lineage must
-    raise naming backfill_components_table; the backfill commits the
-    converged full-corpus closure beside the parent's sigs/fps (a
-    partial corpus raises; an already-labeled lineage raises); and the
-    stream then resumes WITH components=True, advancing the
-    backfilled labels incrementally."""
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        dedup_components,
-        minhash_dedup_pairs,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        backfill_components_table,
-        read_corpus_artifacts,
-        run_stream_artifact_update,
-    )
-
-    state = str(tmp_path / "artifacts")
-    src = str(tmp_path / "doc_feed")
-    t1 = (
-        "the quick brown fox jumps over the lazy dog near the barn "
-        "while the farmer watches from the porch in the evening"
-    )
-    batch1 = spark.createDataFrame(
-        [(1, t1), (2, t1 + " quietly")],
-        "doc_id long, text string",
-    )
-    batch1.coalesce(1).write.parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(batch1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    # generation 1: labels off
-    run_stream_artifact_update(stream(), state, str(tmp_path / "c1"))
-    with pytest.raises(Exception, match="backfill_components_table"):
-        run_stream_artifact_update(
-            stream(), state, str(tmp_path / "c2"), components=True
-        )
-
-    # reader refuses too
-    with pytest.raises(FileNotFoundError, match="comps"):
-        read_corpus_artifacts(spark, state, with_components=True)
-
-    # partial corpus raises; the full one commits
-    with pytest.raises(ValueError, match="FULL stored corpus"):
-        backfill_components_table(batch1.filter("doc_id = 1"), state)
-    backfill_components_table(batch1, state)
-    with pytest.raises(ValueError, match="already carries"):
-        backfill_components_table(batch1, state)
-    _, _, comps0 = read_corpus_artifacts(
-        spark, state, with_components=True
-    )
-    assert {(r["node"], r["comp"]) for r in comps0.collect()} == {
-        (1, 1), (2, 1),
-    }
-
-    # resume with components=True: a new batch near-duping doc 1 joins
-    # cluster 1 through the backfilled labels
-    batch2 = spark.createDataFrame(
-        [(9, t1 + " again")], "doc_id long, text string"
-    )
-    batch2.coalesce(1).write.mode("append").parquet(src)
-    run_stream_artifact_update(
-        stream(), state, str(tmp_path / "c3"), components=True
-    )
-    _, _, comps1 = read_corpus_artifacts(
-        spark, state, with_components=True
-    )
-    got = {(r["node"], r["comp"]) for r in comps1.collect()}
-    want = {
-        (r["node"], r["comp"])
-        for r in dedup_components(
-            minhash_dedup_pairs(batch1.unionByName(batch2)),
-            require_convergence=True,
-        ).collect()
-    }
-    assert got == want and (9, 1) in got
-
-
-@pytest.mark.slow
-def test_stream_artifact_update_maintains_halo_state(spark, tmp_path):
-    """halo_benchmark=: the contamination-halo state pair advances
-    from the document stream in the SAME atomic snapshot as
-    sigs/fps/comps, from the SAME pair delta the label contraction
-    consumes — two micro-batches (a flagged doc + its near-dup, then
-    a 2-hop paraphrase and a fresh re-quote), the drained state
-    equals the from-scratch pair graph + BFS over the union corpus,
-    a geometry mismatch on resume raises, enabling halo on an
-    existing lineage demands backfill_halo_tables, and the backfilled
-    lineage advances change-sized from there."""
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.decontaminate import (
-        contamination_report,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        minhash_dedup_pairs,
-    )
-    from inbev_data_engineering_case_spark.operators.graph import (
-        multi_source_bfs,
-    )
-    from inbev_data_engineering_case_spark.streaming.events import (
-        backfill_halo_tables,
-        read_corpus_artifacts,
-        run_stream_artifact_update,
-    )
-
-    bench_text = (
-        "this exact benchmark passage with its very specific wording "
-        "must never appear inside any document of the training corpus"
-    )
-    bench = spark.createDataFrame([(900, bench_text)],
-                                  "doc_id long, text string")
-    batch1 = spark.createDataFrame(
-        [(1, bench_text),
-         (2, bench_text + " with a small harmless tail added"),
-         (3, "an entirely different second document about rivers and "
-             "the bridges that the engineers built across the valley")],
-        "doc_id long, text string",
-    )
-    batch2 = spark.createDataFrame(
-        # 11 near-dups 2 (2-hop chain via the flagged near-dup);
-        # 13 fresh and clean
-        [(11, bench_text + " with a small harmless tail added twice"),
-         (13, "a third unrelated page on the orchards and the apples "
-              "that the children gather in the baskets every autumn")],
-        "doc_id long, text string",
-    )
-    union = batch1.unionByName(batch2)
-
-    def want_state():
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in minhash_dedup_pairs(union).collect()
-        }
-        dist = {
-            (r["node"], r["dist"])
-            for r in multi_source_bfs(
-                minhash_dedup_pairs(union).select("id_a", "id_b"),
-                contamination_report(union, bench).select("doc_id"),
-                max_hops=2,
-                src_col="id_a",
-                dst_col="id_b",
-            ).collect()
-        }
-        return pairs, dist
-
-    # ---- fresh lineage: halo + components from generation one, the
-    # shared-pair-delta path
-    state = str(tmp_path / "artifacts")
-    src = str(tmp_path / "doc_feed")
-    batch1.coalesce(1).write.parquet(src)
-    batch2.coalesce(1).write.mode("append").parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(batch1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    run_stream_artifact_update(
-        stream(), state, str(tmp_path / "ckpt"),
-        components=True, halo_benchmark=bench,
-    )
-    _, _, comps, hpairs, hdist, hmeta = read_corpus_artifacts(
-        spark, state, with_components=True, with_halo=True
-    )
-    hrow = hmeta.first()
-    assert hrow["max_hops"] == 2
-    # the full banding geometry rides the meta row — num_hashes too
-    # (the stream ran at the operators' default)
-    assert hrow["num_hashes"] == 8
-    want_pairs, want_dist = want_state()
-    assert {
-        (r["id_a"], r["id_b"]) for r in hpairs.collect()
-    } == want_pairs
-    got_dist = {(r["node"], r["dist"]) for r in hdist.collect()}
-    assert got_dist == want_dist
-    # the 2-hop chain reached 11 through the flagged near-dup; clean
-    # docs stay out
-    nodes = {n for n, _ in got_dist}
-    assert {1, 2, 11} <= nodes and 3 not in nodes and 13 not in nodes
-
-    # geometry mismatch on resume: loud refusal before commit
-    batch2.limit(1).select(
-        (F.col("doc_id") + 9000).alias("doc_id"), "text"
-    ).coalesce(1).write.mode("append").parquet(src)
-    with pytest.raises(Exception, match="max_hops"):
-        run_stream_artifact_update(
-            stream(), state, str(tmp_path / "ckpt"),
-            components=True, halo_benchmark=bench, halo_hops=3,
-        )
-
-    # DISABLING a maintained artifact is refused as loudly as
-    # enabling one mid-lineage: the lineage carries hdist, so a
-    # restart without halo_benchmark must raise, not silently shed
-    import time as _t
-
-    for _ in range(100):
-        if not spark.streams.active:
-            break
-        _t.sleep(0.1)
-    with pytest.raises(Exception, match="silently shed"):
-        run_stream_artifact_update(
-            stream(), state, str(tmp_path / "ckpt_shed"),
-            components=True,
-        )
-
-    # a banding-hash-count change refuses too — the stored sig rows
-    # carry their geometry as size(sig), and a resume at a different
-    # num_hashes would append signatures that band a different pair
-    # graph (the sig-geometry guard, independent of the hmeta row)
-    with pytest.raises(Exception, match="num_hashes=16"):
-        run_stream_artifact_update(
-            stream(), state, str(tmp_path / "ckpt_nh"),
-            components=True, halo_benchmark=bench, num_hashes=16,
-        )
-
-    # ---- existing halo-less lineage: enabling demands the backfill
-    import time
-
-    for _ in range(100):
-        if not spark.streams.active:
-            break
-        time.sleep(0.1)
-    state2 = str(tmp_path / "artifacts2")
-    src2 = str(tmp_path / "doc_feed2")
-    batch1.coalesce(1).write.parquet(src2)
-
-    def stream2():
-        return (
-            spark.readStream.schema(batch1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src2)
-        )
-
-    run_stream_artifact_update(stream2(), state2, str(tmp_path / "c2"))
-    # a fresh checkpoint replays batch1 — the upgrade guard must fire
-    # on the very first (replayed) batch, before anything commits
-    with pytest.raises(Exception, match="backfill_halo_tables"):
-        run_stream_artifact_update(
-            stream2(), state2, str(tmp_path / "c2_fresh"),
-            halo_benchmark=bench,
-        )
-    # partial corpus refused; full corpus commits beside sigs/fps
-    with pytest.raises(ValueError, match="FULL stored corpus"):
-        backfill_halo_tables(batch1.limit(1), state2, bench)
-    backfill_halo_tables(batch1, state2, bench)
-    with pytest.raises(ValueError, match="already carries halo"):
-        backfill_halo_tables(batch1, state2, bench)
-    # the stream resumes with halo on, advancing change-sized
-    batch2.coalesce(1).write.mode("append").parquet(src2)
-    run_stream_artifact_update(
-        stream2(), state2, str(tmp_path / "c2"), halo_benchmark=bench
-    )
-    _, _, hpairs2, hdist2, _ = read_corpus_artifacts(
-        spark, state2, with_halo=True
-    )
-    assert {
-        (r["id_a"], r["id_b"]) for r in hpairs2.collect()
-    } == want_pairs
-    assert {
-        (r["node"], r["dist"]) for r in hdist2.collect()
-    } == want_dist
 
 
 @pytest.mark.parametrize("policy", ["local", "checkpoint_dir"])

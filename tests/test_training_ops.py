@@ -1870,220 +1870,6 @@ def test_ann_index_roundtrip_identical_to_direct_path(spark, tmp_path):
     assert len(snaps) == 2  # retention (default 2) pruned the first
 
 
-@pytest.mark.slow
-def test_ann_index_delta_update_two_day_loop(spark, tmp_path):
-    """The daily vector-ingest loop: day 2's NEW vectors assign cells
-    and PQ-encode against the STORED model (centroids/codebook frozen
-    between rebuilds — the IVF append discipline), day 1's cells/codes
-    part files ride into the new snapshot as HARD LINKS (inode
-    identity: zero bytes rewritten), and probing the updated index is
-    identical to the direct IVF-PQ compute over day1+day2 with the
-    same model. A changed+deleted delta routes to the merge path with
-    the same parity."""
-    import os
-
-    from inbev_data_engineering_case_spark.operators.similarity import (
-        ann_from_index,
-        ann_ivf_pq_topk,
-        build_ann_index,
-        pq_sampled_codebook,
-        resolve_ann_index,
-        update_ann_index,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select("vec_id", "embedding")
-    day1 = emb.filter(F.col("vec_id") < 150)
-    day2 = emb.filter(
-        (F.col("vec_id") >= 150) & (F.col("vec_id") < 200)
-    )
-    qs = emb.filter(F.col("vec_id") < 5)
-    # the frozen model: day-1 deterministic centroids + day-1 codebook
-    cents = day1.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cv")
-    )
-    book = pq_sampled_codebook(day1, m=4, k=8)
-    idx = str(tmp_path / "annindex")
-    build_ann_index(
-        day1, idx, n_centroids=8, m=4, k=8, centroids=cents, codebook=book
-    )
-    snap1 = resolve_ann_index(idx)
-    inodes1 = {
-        f: os.stat(os.path.join(snap1, "codes", f)).st_ino
-        for f in os.listdir(os.path.join(snap1, "codes"))
-        if not f.startswith(("_", "."))
-    }
-    audit = update_ann_index(spark, idx, day2)
-    assert audit["mode"] == "append"
-    assert audit["cells_rows"] == 200 and audit["codes_rows"] == 800
-    snap2 = resolve_ann_index(idx)
-    inodes2 = {
-        f: os.stat(os.path.join(snap2, "codes", f)).st_ino
-        for f in os.listdir(os.path.join(snap2, "codes"))
-        if not f.startswith(("_", "."))
-    }
-    for f, ino in inodes1.items():
-        assert inodes2[f] == ino  # day-1 files hard-linked, not copied
-    key = lambda r: tuple(r)  # noqa: E731
-    indexed = sorted(
-        map(
-            tuple,
-            ann_from_index(spark, idx, qs, k_neighbors=5, n_probe=2).collect(),
-        )
-    )
-    direct = sorted(
-        map(
-            key,
-            ann_ivf_pq_topk(
-                day1.unionByName(day2),
-                qs,
-                k_neighbors=5,
-                n_probe=2,
-                m=4,
-                k=8,
-                centroids=cents,
-                codebook=book,
-            ).collect(),
-        )
-    )
-    assert indexed == direct and len(indexed) == 25
-
-    # merge path: re-embed one vector, delete another; parity against
-    # direct compute over the final corpus with the same frozen model
-    changed = day1.filter(F.col("vec_id") == 120).select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: (x * F.lit(-1.0)).cast("float")
-        ).alias("embedding"),
-    )
-    deleted = spark.createDataFrame([(121,)], "vec_id long")
-    audit2 = update_ann_index(spark, idx, changed, deleted_ids=deleted)
-    assert audit2["mode"] == "merge"
-    assert audit2["cells_rows"] == 199  # 121 gone, 120 replaced
-    final = (
-        day1.filter(~F.col("vec_id").isin(120, 121))
-        .unionByName(day2)
-        .unionByName(changed)
-    )
-    indexed2 = sorted(
-        map(
-            key,
-            ann_from_index(spark, idx, qs, k_neighbors=5, n_probe=2).collect(),
-        )
-    )
-    direct2 = sorted(
-        map(
-            key,
-            ann_ivf_pq_topk(
-                final, qs, k_neighbors=5, n_probe=2, m=4, k=8,
-                centroids=cents, codebook=book,
-            ).collect(),
-        )
-    )
-    assert indexed2 == direct2
-
-
-@pytest.mark.slow
-def test_ann_index_update_equals_rebuild_property(spark):
-    """Hypothesis property (the text-index twin): for ANY day-1 vector
-    set and ANY delta mix (new + changed + deleted ids), update_ann_index
-    against the FROZEN day-1 model produces cells/codes contents
-    identical to a full rebuild of the final corpus with the same
-    model — whichever physical path (append/merge) the delta routes
-    to."""
-    import shutil
-    import tempfile
-
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from inbev_data_engineering_case_spark.operators.similarity import (
-        build_ann_index,
-        pq_sampled_codebook,
-        resolve_ann_index,
-        update_ann_index,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .filter(F.col("vec_id") < 60)
-        .localCheckpoint(eager=True)
-    )
-    base = emb.filter(F.col("vec_id") < 40)
-    cents = base.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cv")
-    )
-    book = pq_sampled_codebook(base, m=4, k=8)
-
-    @settings(
-        max_examples=3,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(
-        n_new=st.integers(0, 10),
-        changed_ids=st.lists(
-            st.integers(10, 39), unique=True, max_size=4
-        ),
-        deleted_ids=st.lists(
-            st.integers(10, 39), unique=True, max_size=4
-        ),
-    )
-    def prop(n_new, changed_ids, deleted_ids):
-        deleted_ids = [i for i in deleted_ids if i not in changed_ids]
-        new = emb.filter(
-            (F.col("vec_id") >= 40) & (F.col("vec_id") < 40 + n_new)
-        )
-        changed = emb.filter(F.col("vec_id").isin(changed_ids)).select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: (x * F.lit(-1.0)).cast("float")
-            ).alias("embedding"),
-        ) if changed_ids else new.limit(0)
-        delta = changed.unionByName(new)
-        deleted = (
-            spark.createDataFrame(
-                [(i,) for i in deleted_ids], "vec_id long"
-            )
-            if deleted_ids
-            else None
-        )
-        root = tempfile.mkdtemp(prefix="annprop_")
-        try:
-            idx = f"{root}/idx"
-            build_ann_index(
-                base, idx, n_centroids=4, m=4, k=8,
-                centroids=cents, codebook=book,
-            )
-            update_ann_index(spark, idx, delta, deleted_ids=deleted)
-            final = (
-                base.join(delta.select("vec_id"), "vec_id", "left_anti")
-                .unionByName(delta)
-            )
-            if deleted is not None:
-                final = final.join(deleted, "vec_id", "left_anti")
-            rb = f"{root}/rebuild"
-            build_ann_index(
-                final, rb, n_centroids=4, m=4, k=8,
-                centroids=cents, codebook=book,
-            )
-            s_upd, s_rb = resolve_ann_index(idx), resolve_ann_index(rb)
-            for table in ("cells", "codes"):
-                got = sorted(
-                    map(tuple, spark.read.parquet(f"{s_upd}/{table}").collect())
-                )
-                want = sorted(
-                    map(tuple, spark.read.parquet(f"{s_rb}/{table}").collect())
-                )
-                assert got == want, (table, len(got), len(want))
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-
-    prop()
-
-
 def test_train_pq_codebooks_deterministic_and_usable(spark):
     from inbev_data_engineering_case_spark.operators.similarity import (
         pq_encode,
@@ -3766,172 +3552,16 @@ def test_text_index_term_clustering_gives_disjoint_file_spans(
     )
 
 
-def test_text_index_compaction_reclusters_without_retokenizing(
-    spark, tmp_path
-):
-    """Weekly maintenance for the delta-maintained index: after appends
-    leave wide-span delta files, compact_text_index rewrites tf as N
-    disjoint term-range files FROM THE STORED ROWS (no document text is
-    read), hard-links doclen/stats through unchanged (inode identity),
-    and query results are identical across the compaction."""
-    import os
-
-    from inbev_data_engineering_case_spark.operators.relevance import (
-        bm25_from_index,
-        build_text_index,
-        compact_text_index,
-        resolve_text_index,
-        update_text_index,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    idx = str(tmp_path / "index")
-    build_text_index(docs.filter("doc_id < 400"), idx)
-    update_text_index(
-        spark, idx, docs.filter("doc_id >= 400")
-    )
-    before = resolve_text_index(idx)
-    key = lambda r: tuple(r)  # noqa: E731
-    want = sorted(
-        map(key, bm25_from_index(spark, idx, ["data", "the"], k=10).collect())
-    )
-    doclen_inodes = {
-        f: os.stat(os.path.join(before, "doclen", f)).st_ino
-        for f in os.listdir(os.path.join(before, "doclen"))
-        if not f.startswith(("_", "."))
-    }
-    compact_text_index(spark, idx, cluster_by_term=8)
-    snap = resolve_text_index(idx)
-    assert snap != before
-    tf_dir = os.path.join(snap, "tf")
-    spans = sorted(
-        spark.read.parquet(os.path.join(tf_dir, f))
-        .selectExpr("min(term)", "max(term)")
-        .first()
-        for f in os.listdir(tf_dir)
-        if f.endswith(".parquet")
-    )
-    assert len(spans) == 8
-    assert all(
-        prev_hi <= lo for (_, prev_hi), (lo, _) in zip(spans, spans[1:])
-    )
-    for f, ino in doclen_inodes.items():
-        assert (
-            os.stat(os.path.join(snap, "doclen", f)).st_ino == ino
-        )  # carried through as links, not rewritten
-    got = sorted(
-        map(key, bm25_from_index(spark, idx, ["data", "the"], k=10).collect())
-    )
-    assert got == want
-
-
-@pytest.mark.slow
-def test_index_update_equals_rebuild_property(spark):
-    """Hypothesis property: for ANY day-1 corpus and ANY day-2 delta
-    (new docs + changed docs + deletes, in any mix hypothesis picks),
-    update_text_index over the delta produces tf/doclen/stats contents
-    IDENTICAL to a full rebuild of the final corpus — the delta path
-    can never drift from the rebuild it stands in for, whichever
-    physical path (append/merge) it routes to."""
-    import shutil
-    import tempfile
-
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from inbev_data_engineering_case_spark.operators.relevance import (
-        build_text_index,
-        resolve_text_index,
-        update_text_index,
-    )
-
-    words = st.lists(
-        st.sampled_from(["alpha", "beta", "gamma", "delta", "eps"]),
-        min_size=1,
-        max_size=8,
-    ).map(" ".join)
-
-    @settings(
-        max_examples=4,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(
-        day1=st.lists(words, min_size=1, max_size=5),
-        new=st.lists(words, min_size=0, max_size=3),
-        data=st.data(),
-    )
-    def prop(day1, new, data):
-        n1 = len(day1)
-        changed_ids = data.draw(
-            st.lists(
-                st.integers(0, n1 - 1), unique=True, max_size=n1
-            )
-        )
-        # delete from the unchanged day-1 ids; when none remain, a
-        # not-in-corpus id exercises the delete-absent no-op instead
-        deletable = sorted(set(range(n1)) - set(changed_ids))
-        deleted_ids = data.draw(
-            st.lists(st.sampled_from(deletable or [10**6]), unique=True)
-        )
-        d1 = spark.createDataFrame(
-            list(enumerate(day1)), "doc_id long, text string"
-        )
-        changed = spark.createDataFrame(
-            [(i, data.draw(words)) for i in changed_ids]
-            + [(n1 + j, t) for j, t in enumerate(new)],
-            "doc_id long, text string",
-        ) if (changed_ids or new) else d1.limit(0)
-        deleted = (
-            spark.createDataFrame(
-                [(i,) for i in deleted_ids], "doc_id long"
-            )
-            if deleted_ids
-            else None
-        )
-        root = tempfile.mkdtemp(prefix="idxprop_")
-        try:
-            idx = f"{root}/idx"
-            build_text_index(d1, idx)
-            update_text_index(spark, idx, changed, deleted_ids=deleted)
-            final = (
-                d1.join(changed.select("doc_id"), "doc_id", "left_anti")
-                .unionByName(changed)
-            )
-            if deleted is not None:
-                final = final.join(deleted, "doc_id", "left_anti")
-            rb = f"{root}/rebuild"
-            build_text_index(final, rb)
-            s_upd, s_rb = resolve_text_index(idx), resolve_text_index(rb)
-            for table in ("tf", "doclen", "stats"):
-                got = sorted(
-                    map(tuple, spark.read.parquet(f"{s_upd}/{table}").collect())
-                )
-                want = sorted(
-                    map(tuple, spark.read.parquet(f"{s_rb}/{table}").collect())
-                )
-                assert got == want, (table, got, want)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-
-    prop()
-
-
 def test_text_index_refuses_unindexable_documents(spark, tmp_path):
     """A NULL-text document produces no tf/doclen rows; silently
     excluding it would shift N (and every idf) away from the scan path
     and the shared oracle, so the build FAILS LOUDLY inside the stats
-    job instead — nothing publishes, and the caller is told to filter.
-    The delta updater enforces the same on its changed docs."""
+    job instead — nothing publishes, and the caller is told to filter."""
     import pytest as _pytest
-    from py4j.protocol import Py4JJavaError
 
     from inbev_data_engineering_case_spark.operators.relevance import (
         build_text_index,
         resolve_text_index,
-        update_text_index,
     )
 
     docs = spark.createDataFrame(
@@ -3942,15 +3572,9 @@ def test_text_index_refuses_unindexable_documents(spark, tmp_path):
         build_text_index(docs, idx)
     with _pytest.raises(FileNotFoundError):
         resolve_text_index(idx)  # the torn build never published
-    # a clean build, then a NULL-text delta: same loud refusal
+    # the filtered build publishes
     build_text_index(docs.filter("text is not null"), idx)
-    good = resolve_text_index(idx)
-    delta = spark.createDataFrame(
-        [(2, None)], "doc_id long, text string"
-    )
-    with _pytest.raises((Exception, Py4JJavaError), match="produced no"):
-        update_text_index(spark, idx, delta)
-    assert resolve_text_index(idx) == good  # generation unchanged
+    resolve_text_index(idx)
     # duplicate ids get their OWN diagnosis (their term counts would
     # merge into one corrupted tf entry) — never blamed on NULL text
     dup = spark.createDataFrame(
@@ -3958,134 +3582,6 @@ def test_text_index_refuses_unindexable_documents(spark, tmp_path):
     )
     with _pytest.raises(Exception, match="duplicate doc id"):
         build_text_index(dup, str(tmp_path / "dupidx"))
-    with _pytest.raises((Exception, Py4JJavaError), match="duplicate doc id"):
-        update_text_index(spark, idx, dup)
-    assert resolve_text_index(idx) == good
-
-
-def test_text_index_delta_update_two_day_loop(spark, tmp_path):
-    """The daily-crawl index loop: day 2 publishes a NEW committed
-    snapshot from DELTA-SIZED work — only the new docs tokenize, day
-    1's tf/doclen part files ride into the new snapshot as HARD LINKS
-    (inode identity: zero bytes rewritten), and stats recompute from
-    the merged doclen partials. The updated index is query-identical
-    to a full rebuild over day1+day2."""
-    import os
-
-    from inbev_data_engineering_case_spark.operators.relevance import (
-        bm25_from_index,
-        build_text_index,
-        resolve_text_index,
-        update_text_index,
-    )
-
-    day1 = spark.createDataFrame(
-        [
-            (0, "spark shuffles data across the cluster"),
-            (1, "spark spark spark tuning"),
-        ],
-        "doc_id long, text string",
-    )
-    day2 = spark.createDataFrame(
-        [(2, "a zebra walked into the cluster")],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "index")
-    build_text_index(day1, idx)
-    snap1 = resolve_text_index(idx)
-    inodes1 = {
-        f: os.stat(os.path.join(snap1, "tf", f)).st_ino
-        for f in os.listdir(os.path.join(snap1, "tf"))
-        if not f.startswith(("_", "."))
-    }
-    audit = update_text_index(spark, idx, day2)
-    assert audit["mode"] == "append"
-    snap2 = resolve_text_index(idx)
-    assert snap2 != snap1
-    # delta-sized work, proven physically: every day-1 tf part file is
-    # the SAME inode inside the new snapshot (hard link, not a copy)
-    inodes2 = {
-        f: os.stat(os.path.join(snap2, "tf", f)).st_ino
-        for f in os.listdir(os.path.join(snap2, "tf"))
-        if not f.startswith(("_", "."))
-    }
-    assert set(inodes1) <= set(inodes2)  # old files present + new delta files
-    for f, ino in inodes1.items():
-        assert inodes2[f] == ino
-    # parity vs full rebuild: identical query answers and stats
-    rebuild_dir = str(tmp_path / "rebuild")
-    build_text_index(day1.unionByName(day2), rebuild_dir)
-    key = lambda r: tuple(r)  # noqa: E731
-    got = sorted(
-        map(key, bm25_from_index(spark, idx, ["spark", "zebra"], k=4).collect())
-    )
-    want = sorted(
-        map(
-            key,
-            bm25_from_index(
-                spark, rebuild_dir, ["spark", "zebra"], k=4
-            ).collect(),
-        )
-    )
-    assert got == want and len(got) == 3
-    stats_got = spark.read.parquet(f"{snap2}/stats").collect()
-    stats_want = spark.read.parquet(
-        f"{resolve_text_index(rebuild_dir)}/stats"
-    ).collect()
-    assert stats_got == stats_want
-
-
-@pytest.mark.slow
-def test_text_index_delta_update_merge_path_on_changed_doc(spark, tmp_path):
-    """A CHANGED document routes to the merge path: its stale tf/doclen
-    rows anti-join out, the re-tokenized rows union in, and the result
-    is query- and stats-identical to a full rebuild of the final
-    corpus. Deletes ride the same path."""
-    from inbev_data_engineering_case_spark.operators.relevance import (
-        bm25_from_index,
-        build_text_index,
-        resolve_text_index,
-        update_text_index,
-    )
-
-    v1 = spark.createDataFrame(
-        [(0, "spark tuning"), (1, "zebra herd"), (2, "doomed doc")],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "index")
-    build_text_index(v1, idx)
-    changed = spark.createDataFrame(
-        [(0, "spark spark cluster")], "doc_id long, text string"
-    )
-    deleted = spark.createDataFrame([(2,)], "doc_id long")
-    audit = update_text_index(spark, idx, changed, deleted_ids=deleted)
-    assert audit["mode"] == "merge"
-    final = spark.createDataFrame(
-        [(0, "spark spark cluster"), (1, "zebra herd")],
-        "doc_id long, text string",
-    )
-    rebuild_dir = str(tmp_path / "rebuild")
-    build_text_index(final, rebuild_dir)
-    key = lambda r: tuple(r)  # noqa: E731
-    got = sorted(
-        map(key, bm25_from_index(spark, idx, ["spark", "zebra"], k=4).collect())
-    )
-    want = sorted(
-        map(
-            key,
-            bm25_from_index(
-                spark, rebuild_dir, ["spark", "zebra"], k=4
-            ).collect(),
-        )
-    )
-    assert got == want and len(got) == 2
-    snap = resolve_text_index(idx)
-    assert spark.read.parquet(f"{snap}/stats").collect() == (
-        spark.read.parquet(
-            f"{resolve_text_index(rebuild_dir)}/stats"
-        ).collect()
-    )
-    assert audit["doclen_rows"] == 2  # doc 2 fully gone
 
 
 def test_rrf_fuse_order_invariant_and_monotone(spark):
@@ -4329,16 +3825,14 @@ def test_dedup_spans_zero_length_token_array_cannot_step_negative(spark):
 
 
 def test_ann_index_duplicate_ids_fail_loudly(spark, tmp_path):
-    """A duplicate vec_id in the corpus (or within a delta) would write
-    duplicate cells/codes rows and surface as duplicated neighbor
-    candidates in top-k — the ANN index must refuse it the way
-    build_text_index refuses duplicate doc ids: an in-plan raise inside
-    the build job, so staging never publishes. A delta id that matches
-    a STORED id is the normal update case and must keep working."""
+    """A duplicate vec_id in the corpus would write duplicate
+    cells/codes rows and surface as duplicated neighbor candidates in
+    top-k — the ANN index must refuse it the way build_text_index
+    refuses duplicate doc ids: an in-plan raise inside the build job,
+    so staging never publishes."""
     from inbev_data_engineering_case_spark.operators.similarity import (
         build_ann_index,
         resolve_ann_index,
-        update_ann_index,
     )
 
     emb = spark.read.parquet(
@@ -4353,18 +3847,9 @@ def test_ann_index_duplicate_ids_fail_loudly(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         resolve_ann_index(idx)  # the failed build published nothing
 
-    build_ann_index(base, idx, n_centroids=8, m=4, k=8)
-    delta = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 110)
-    )
-    with pytest.raises(Exception, match="duplicate vec_id"):
-        update_ann_index(
-            spark, idx, delta.unionByName(delta.limit(1))
-        )
-    # a changed id that exists in the store is an UPDATE, not a dup:
-    changed = base.filter(F.col("vec_id") == 3).unionByName(delta)
-    audit = update_ann_index(spark, idx, changed)
-    assert audit["mode"] == "merge" and audit["cells_rows"] == 110
+    audit = build_ann_index(base, idx, n_centroids=8, m=4, k=8)
+    assert audit["snapshot"] == resolve_ann_index(idx)
+    assert audit["cells_rows"] == base.count()
 
 
 @pytest.mark.slow
