@@ -53,7 +53,10 @@ from inbev_data_engineering_case_spark.operators.textops import (
     fingerprint,
     normalize_for_fingerprint,
 )
-from inbev_data_engineering_case_spark.session import materialize
+from inbev_data_engineering_case_spark.session import (
+    broadcast_if_small,
+    materialize,
+)
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
@@ -575,19 +578,6 @@ def simhash(text: Column | str, bits: int = 60) -> Column:
     return simhash_from_hashes(token_hashes(text), bits)
 
 
-# Per-round label tables at/below this row count take an explicit
-# broadcast hint in the components loop (r16, guide §3.1 — "pick the
-# join strategy deliberately"): a localCheckpoint-backed relation has no
-# size statistics, so the planner sort-merge-joins a 5k-row label table
-# against the edge list EVERY round; the loop, uniquely, KNOWS the exact
-# node count from its own convergence aggregate, so below the limit the
-# hop and jump joins broadcast the label side (the edge list — the big
-# side at scale — is never shuffled per round) and above it the plan is
-# byte-identical to before. 2M (node, comp) rows ≈ 32 MB framed — half
-# the session's 64 MB autoBroadcastJoinThreshold.
-COMPONENTS_BROADCAST_NODE_LIMIT = 2_000_000
-
-
 def dedup_components_with_stats(
     pairs: DataFrame,
     max_iter: int = 25,
@@ -702,18 +692,14 @@ def dedup_components_with_stats(
         return row["s"], row["n"]
 
     prev_sum, n_nodes = label_sum(labels)
-    # Deliberate join strategy (guide §3.1): below the limit the label
-    # side of the hop and jump joins is broadcast — the checkpointed
-    # relation carries no stats, so the planner would otherwise
-    # sort-merge-join it against the edge list every round. The node
-    # count is EXACT (measured by the init aggregate), so the gate is
-    # data-adaptive: a billion-node production graph keeps the shuffle
-    # joins untouched.
-    small = n_nodes is not None and n_nodes <= COMPONENTS_BROADCAST_NODE_LIMIT
-
-    def maybe_broadcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
+    # Deliberate join strategy (guide §3.1): below the session's
+    # broadcast row limit the label side of the hop and jump joins is
+    # broadcast — the checkpointed relation carries no stats, so the
+    # planner would otherwise sort-merge-join it against the edge list
+    # every round. The node count is EXACT (measured by the init
+    # aggregate, constant across rounds), so the gate is data-adaptive:
+    # a billion-node production graph, or a session with broadcasting
+    # switched off, keeps the shuffle joins untouched.
     rounds = 0
     # convergence is OBSERVED, not inferred: the loop must execute one
     # no-change round to know labels are minimal. require_convergence
@@ -729,7 +715,7 @@ def dedup_components_with_stats(
         # hop: min label over self ∪ neighbors, as ONE join + aggregate
         # (self-loops supply the self term). Lazy cut, materialized by
         # this round's sum — the only action the round pays.
-        lab = maybe_broadcast(labels)
+        lab = broadcast_if_small(labels, n_nodes)
         neighbor_min = materialize(
             edges.join(lab, edges["src"] == lab["node"])
             .select(F.col("dst").alias("node"), "comp")
@@ -752,10 +738,11 @@ def dedup_components_with_stats(
         # Both references read neighbor_min's just-materialized blocks;
         # the jumped cut itself stays lazy and is computed exactly once
         # by the NEXT round's sum (where the hop references it once).
-        jump_to = maybe_broadcast(
+        jump_to = broadcast_if_small(
             neighbor_min.select(
                 F.col("node").alias("jnode"), F.col("comp").alias("jcomp")
-            )
+            ),
+            n_nodes,
         )
         jumped = materialize(
             neighbor_min.join(

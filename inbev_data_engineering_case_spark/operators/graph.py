@@ -39,7 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from inbev_data_engineering_case_spark.session import materialize
+from inbev_data_engineering_case_spark.session import (
+    broadcast_if_small,
+    materialize,
+)
 
 
 def pagerank(
@@ -300,21 +303,10 @@ def multi_source_bfs(
     # Deliberate join strategy (guide §3.1, the components loop's gate):
     # the frontier and visited tables are checkpoint-backed (no size
     # stats), but the loop MEASURES their exact row counts with the
-    # actions it already pays — below the limit the frontier side of the
-    # adjacency join and the visited side of the anti-join broadcast, so
-    # the (at scale, huge) edge table is never shuffled per hop; above
-    # it the shuffle plans are untouched.
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        COMPONENTS_BROADCAST_NODE_LIMIT,
-    )
-
-    def maybe_broadcast(df: DataFrame, n: int | None) -> DataFrame:
-        return (
-            F.broadcast(df)
-            if n is not None and n <= COMPONENTS_BROADCAST_NODE_LIMIT
-            else df
-        )
-
+    # actions it already pays — within the session's broadcast row limit
+    # the frontier side of the adjacency join and the visited side of
+    # the anti-join broadcast, so the (at scale, huge) edge table is
+    # never shuffled per hop; above it the shuffle plans are untouched.
     seed_col = seeds.columns[0]
     dist = materialize(
         seeds.select(F.col(seed_col).cast("long").alias("node"))
@@ -327,7 +319,7 @@ def multi_source_bfs(
     dist_n = frontier_n = dist.count()
     frontier = dist.select("node")
     for hop in range(1, max_hops + 1):
-        f = maybe_broadcast(frontier, frontier_n)
+        f = broadcast_if_small(frontier, frontier_n)
         reached = (
             sym.join(f, f["node"] == sym["src"])
             .select(F.col("dst").alias("node"))
@@ -335,7 +327,7 @@ def multi_source_bfs(
         )
         new = materialize(
             reached.join(
-                maybe_broadcast(dist.select("node"), dist_n),
+                broadcast_if_small(dist.select("node"), dist_n),
                 on="node",
                 how="left_anti",
             ).withColumn("dist", F.lit(hop)),

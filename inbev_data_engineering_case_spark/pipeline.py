@@ -16,7 +16,9 @@ per stage — SURVEY.md §4.3-5).
 from __future__ import annotations
 
 import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -49,13 +51,30 @@ class PipelineResult:
 def run_ingest(
     spark: SparkSession, source: PagedRestSource, bronze_dir: str, run_id: str
 ) -> str:
-    """API → bronze. The raw zone stays CSV-per-page for audit parity with the
-    reference (OP-02); at scale the same DataFrame could land as parquet by
-    passing fmt='parquet'."""
+    """API → bronze, validated before visible. The raw zone stays
+    CSV-per-page for audit parity with the reference (OP-02).
+
+    The page fetch runs inside the CSV write's own job, which lands in a
+    hidden staging dir (``_resolve_snapshot`` only sees ``brewery_data_*``
+    folders). The source's completeness check then reads the page count
+    that job observed, and only a complete landing is renamed into place,
+    replacing an earlier snapshot of the same run id. Any failure removes
+    the staging dir, so an incomplete fetch never becomes the latest
+    bronze snapshot."""
     path = layers.snapshot_path(bronze_dir, run_id)
-    df = source.to_dataframe(spark)
-    df.write.mode("overwrite").option("header", True).csv(path)
+    staging = os.path.join(
+        bronze_dir, f".staging_{os.path.basename(path)}_{uuid.uuid4().hex[:8]}"
+    )
+    try:
+        source.to_dataframe(spark).write.option("header", True).csv(staging)
+        source.check_complete()
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(staging, path)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     return path
+
 
 def run_silver(
     spark: SparkSession, bronze_dir: str, silver_dir: str, run_id: str

@@ -29,6 +29,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Tuned for the local[N] test harness; on a cluster these are overridden by
 # spark-submit conf. Kept here as the single place that states intent.
@@ -80,9 +81,9 @@ def get_spark(
 
 def materialize(df: DataFrame, *, eager: bool) -> DataFrame:
     """Cut ``df``'s lineage: compute it once and share it with every
-    downstream consumer. Every operator that shares an intermediate, every
-    iterative loop and the REST completeness check go through here, so the
-    cluster-safety trade is one deployment setting, not a per-call knob.
+    downstream consumer. Every operator that shares an intermediate and
+    every iterative loop go through here, so the cluster-safety trade is
+    one deployment setting, not a per-call knob.
 
     The policy follows the session's checkpoint dir:
 
@@ -113,6 +114,34 @@ def materialize(df: DataFrame, *, eager: bool) -> DataFrame:
     scratch_table_paths(spark).append(target)
     # the known schema spares the read-back a footer-inference job
     return spark.read.schema(df.schema).parquet(target)
+
+
+# Ceiling of ``broadcast_if_small``: 2M (node, label) long pairs ≈ 32 MB
+# framed, half the 64 MB ``autoBroadcastJoinThreshold`` set above.
+BROADCAST_ROW_LIMIT = 2_000_000
+
+
+def broadcast_if_small(df: DataFrame, n_rows: int | None) -> DataFrame:
+    """``F.broadcast(df)`` when its exact row count ``n_rows`` (measured by
+    the caller's own actions) is within ``min(BROADCAST_ROW_LIMIT,
+    autoBroadcastJoinThreshold // 32)`` — 32 bytes is the framed size of
+    a two-long row — else ``df`` unchanged, and always unchanged when the
+    threshold is negative (broadcasting switched off). For
+    checkpoint-backed frames, which carry no size statistics for the
+    planner to decide from; a hint bypasses the threshold, so this is
+    where the session's setting is honoured. Reads the conf; runs no
+    job."""
+    threshold = int(
+        df.sparkSession._jsparkSession.sessionState().conf()
+        .autoBroadcastJoinThreshold()
+    )
+    if (
+        n_rows is not None
+        and threshold >= 0
+        and n_rows <= min(BROADCAST_ROW_LIMIT, threshold // 32)
+    ):
+        return F.broadcast(df)
+    return df
 
 
 def scratch_table_paths(spark: SparkSession) -> list[str]:

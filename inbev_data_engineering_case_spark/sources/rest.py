@@ -14,22 +14,23 @@ transport for the real Open Brewery DB API is provided but constructed only
 on demand (import-guarded; the library is not required for the engine).
 
 Ingestion-completeness invariant (reference README.md:84): pages fetched must
-equal ⌈total/per_page⌉ — enforced in ``to_dataframe`` by an observed count of
-non-empty pages, read from the materialization's own job (no extra action),
-turning the reference's "should always" prose into an assert.
+equal ⌈total/per_page⌉. ``to_dataframe`` returns the lazy fetch with an
+observed count of non-empty pages attached, so the caller's one action (the
+bronze write) runs the fetch exactly once and carries the count in its own
+job; ``check_complete`` then reads it, turning the reference's "should
+always" prose into an assert before the landing is published. A page range
+that cannot reach the expected total is refused before any fetch.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from inbev_data_engineering_case_spark.session import materialize
 
 Transport = Callable[[int], list[dict]]
 
@@ -58,7 +59,13 @@ def open_brewery_db_transport(
 class PagedRestSource:
     """Parallel paginated source: ``n_pages`` fetches distributed over
     executors, rows typed under ``schema``. Missing JSON keys become nulls
-    (the reference's positional ``dict.get`` extraction, ref :74-76).
+    (the reference's positional ``dict.get`` extraction, ref :74-76), so
+    every output field is nullable whatever ``schema`` declares: the raw
+    zone keeps what the API sent and the silver cleanse judges it.
+
+    With ``expected_total`` set, ``to_dataframe`` attaches the page-count
+    observation and the caller runs ONE action over the frame (each
+    action re-invokes the transport), then calls ``check_complete``.
     """
 
     transport: Transport
@@ -66,12 +73,33 @@ class PagedRestSource:
     n_pages: int
     per_page: int
     expected_total: int | None = None
+    _pages: Observation | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    def _want_pages(self) -> int:
+        return -(-self.expected_total // self.per_page)
 
     def to_dataframe(self, spark: SparkSession) -> DataFrame:
+        """The lazy fetch: runs no Spark job. Each action over the result
+        calls the transport once per page."""
+        if self.expected_total is not None and self.n_pages < self._want_pages():
+            raise RuntimeError(
+                f"ingestion incomplete: {self.n_pages} pages can hold at most "
+                f"{self.n_pages * self.per_page} records, expected "
+                f"{self._want_pages()} pages (total={self.expected_total}, "
+                f"per_page={self.per_page})"
+            )
         transport = self.transport
         names = [f.name for f in self.schema.fields]
         out_schema = T.StructType(
-            [T.StructField("__page", T.LongType(), True), *self.schema.fields]
+            [
+                T.StructField("__page", T.LongType(), True),
+                *(
+                    T.StructField(f.name, f.dataType, True, f.metadata)
+                    for f in self.schema.fields
+                ),
+            ]
         )
 
         def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -98,30 +126,30 @@ class PagedRestSource:
             min(self.n_pages, spark.sparkContext.defaultParallelism),
         )
         df = pages.mapInPandas(fetch_pages, schema=out_schema)
-
+        self._pages = None
         if self.expected_total is not None:
-            # README.md:84 invariant, asserted for real: every page must have
-            # produced rows and the page count must cover expected_total.
-            # Materialize FIRST (eager cut truncates lineage), so the
-            # invariant check and every downstream action read the same
-            # single fetch — an unmaterialized plan would re-invoke the
-            # transport per action, and against a live mutable API the
-            # validated data would not be the data returned. The page count
-            # is an observed metric of that materialization's own job: each
-            # page id is in exactly one input row and the fetch stage is the
-            # result stage, so the count is exact and costs no extra job.
-            # With a checkpoint dir set the fetch lands in a durable scratch
-            # table; without one it stays on executor-local blocks.
-            fetched = Observation("rest_pages")
-            df = materialize(
-                df.observe(fetched, F.count("__page").alias("pages")), eager=True
-            )
-            got_pages = fetched.get["pages"]
-            want_pages = -(-self.expected_total // self.per_page)
-            if got_pages != want_pages:
-                raise RuntimeError(
-                    f"ingestion incomplete: fetched {got_pages} pages, "
-                    f"expected {want_pages} (total={self.expected_total}, "
-                    f"per_page={self.per_page})"
-                )
+            # Each page id is in exactly one input row and nothing
+            # shuffles, so the count observed by the caller's action is
+            # exact and costs no extra job.
+            self._pages = Observation("rest_pages")
+            df = df.observe(self._pages, F.count("__page").alias("pages"))
         return df.drop("__page")
+
+    def check_complete(self) -> None:
+        """README.md:84 invariant, asserted for real: every page produced
+        rows and the page count covers ``expected_total``. Reads the count
+        the caller's action observed; call it after that action, before
+        publishing what it wrote (``Observation.get`` blocks until an
+        action has run)."""
+        if self.expected_total is None:
+            return
+        if self._pages is None:
+            raise RuntimeError("check_complete called before to_dataframe")
+        got_pages = self._pages.get["pages"]
+        want_pages = self._want_pages()
+        if got_pages != want_pages:
+            raise RuntimeError(
+                f"ingestion incomplete: fetched {got_pages} pages, "
+                f"expected {want_pages} (total={self.expected_total}, "
+                f"per_page={self.per_page})"
+            )

@@ -158,11 +158,11 @@ def test_publish_view_lists_like_catalog_without_a_job(spark):
 
 def test_pipeline_stage_job_budget(spark, tmp_path):
     """Per-stage Spark job budget of a REST-sourced run under the default
-    (executor-local) materialize policy: ingest 2 (the eager fetch cut,
-    which also carries the page-count metric, and the CSV write), silver 2,
-    gold 3 (aggregate and write). Jobs that do no data work — a page-id
-    shuffle, a completeness query, a footer probe, a catalog listing — fail
-    this budget."""
+    (executor-local) materialize policy: ingest 1 (the CSV write, which
+    runs the page fetch and carries the page-count metric), silver 2,
+    gold 3 (aggregate and write). Jobs that do no data work — a fetch cut,
+    a page-id shuffle, a completeness query, a footer probe, a catalog
+    listing — fail this budget."""
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
 
@@ -196,9 +196,41 @@ def test_pipeline_stage_job_budget(spark, tmp_path):
             jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert jobs["ingest"] <= 2, jobs
+    assert jobs["ingest"] <= 1, jobs
     assert jobs["silver"] <= 2, jobs
     assert jobs["gold"] <= 3, jobs
     gold_path, _ = out["gold"]
+    gold = spark.read.parquet(gold_path).agg(F.sum("brewery_count"))
+    assert gold.first()[0] == 6
+
+
+def test_rest_ingest_keeps_records_with_null_required_keys(spark, tmp_path):
+    """The source turns missing JSON keys into nulls, including keys the
+    bronze schema declares required: the raw zone keeps the record, and
+    every stage downstream counts it."""
+
+    def transport(page: int) -> list[dict]:
+        records = [
+            {
+                "id": f"{page}-{i}", "name": f"brew {page} {i}",
+                "brewery_type": "micro", "city": "wien", "state": "wien",
+                "country": "Austria",
+            }
+            for i in range(2)
+        ]
+        if page == 0:
+            records[0]["city"] = None
+            del records[1]["state"]
+        return records
+
+    source = PagedRestSource(
+        transport=transport, schema=BREWERY_BRONZE, n_pages=3, per_page=2,
+        expected_total=6,
+    )
+    dirs = {d: str(tmp_path / d) for d in ("bronze", "silver", "gold")}
+    run_id = "2024-01-01-00-00"
+    run_ingest(spark, source, dirs["bronze"], run_id)
+    run_silver(spark, dirs["bronze"], dirs["silver"], run_id)
+    gold_path, _ = run_gold(spark, dirs["silver"], dirs["gold"], run_id)
     gold = spark.read.parquet(gold_path).agg(F.sum("brewery_count"))
     assert gold.first()[0] == 6

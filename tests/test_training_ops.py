@@ -203,6 +203,58 @@ def test_dedup_components_chain_and_singleton(spark):
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 7: 5, 9: 5}
 
 
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _with_threshold(spark, value, fn):
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, value)
+    try:
+        return fn()
+    finally:
+        spark.conf.set(THRESHOLD, old)
+
+
+def test_broadcast_row_limit_follows_the_session_threshold(spark):
+    """A broadcast hint bypasses autoBroadcastJoinThreshold, so the
+    iterative loops' row gate derives from it: the 2M-row ceiling at the
+    64 MB session default, threshold/32 rows below it, no hint at -1."""
+    from inbev_data_engineering_case_spark.session import broadcast_if_small
+
+    assert spark.conf.get(THRESHOLD) == str(64 * 1024 * 1024)
+    df = spark.range(10)
+
+    def hinted(counts):
+        plans = (
+            broadcast_if_small(df, n)._jdf.queryExecution().analyzed().toString()
+            for n in counts
+        )
+        return ["broadcast" in plan.lower() for plan in plans]
+
+    assert hinted([2_000_000, 2_000_001, None]) == [True, False, False]
+    assert _with_threshold(
+        spark, "1MB", lambda: hinted([32_768, 32_769])
+    ) == [True, False]
+    assert _with_threshold(spark, "-1", lambda: hinted([0, 10])) == [False, False]
+
+
+def test_dedup_components_match_with_broadcast_disabled(spark):
+    from inbev_data_engineering_case_spark.operators.dedup import (
+        dedup_components,
+    )
+
+    # a long chain with a branch (needs pointer jumping), a short
+    # chain and a star
+    edges = [(i, i + 1) for i in range(1, 40)] + [(100, 101), (101, 99)]
+    edges += [(200, j) for j in range(201, 210)] + [(7, 300)]
+    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+
+    def labels():
+        return sorted(tuple(r) for r in dedup_components(pairs).collect())
+
+    assert _with_threshold(spark, "-1", labels) == labels()
+
+
 def test_ann_ivf_is_subset_of_exact(spark):
     import random
 
