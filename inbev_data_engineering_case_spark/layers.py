@@ -10,12 +10,12 @@ full-reload snapshot semantics with idempotent overwrite and a natural
 retry/recovery joint (SURVEY.md §1.1, §3.4).
 
 Scale notes (100 TB design point):
-- ``write_layer`` takes a ``target_file_mb`` hint and repartitions by the
-  partition keys so each Hive partition is written by few tasks — the
-  reference's ``partitionBy('country','state')`` over default shuffle
-  partitions sprays hundreds of tiny files (SURVEY.md §4.3-2). Repartitioning
-  by the partition columns routes each partition's rows to one task; AQE
-  handles residual skew.
+- ``write_layer`` repartitions by the partition keys so each Hive
+  partition is written by one task — the reference's
+  ``partitionBy('country','state')`` over default shuffle partitions sprays
+  hundreds of tiny files (SURVEY.md §4.3-2). The price is that a hot
+  partition is written by a single task: AQE does not split skew in a
+  ``repartition(cols)`` shuffle.
 - Run-ids are caller-supplied (no wall-clock in library code) so runs are
   deterministic and replayable.
 """
@@ -395,8 +395,10 @@ def write_layer(
     """OP-06/OP-07: partitioned columnar sink.
 
     Repartitions by the partition keys first so each Hive partition is
-    produced by a single task (small-file fix, SURVEY.md §4.3-2). With AQE
-    enabled, skewed partitions are still split at runtime.
+    produced by a single task (small-file fix, SURVEY.md §4.3-2). AQE does
+    not split a skewed partition of this shuffle (it splits skew only in
+    ``rebalance`` shuffles), so a hot key is one file written by one task.
+    Spark drops this repartition when ``df`` is already so partitioned.
     """
     writer = df
     if partition_keys:

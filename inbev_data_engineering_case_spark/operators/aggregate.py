@@ -1,5 +1,6 @@
-"""Aggregation operators: the reference's group-count (OP-17) generalized,
-plus the money-safe aggregate family the extension queries use.
+"""Aggregation operators: the money-safe aggregate family the extension
+queries use (the reference's group-count, OP-17, is
+``operators.medallion.silver_to_gold``).
 
 Scale notes:
 - Every groupBy here compiles to partial+final HashAggregate — map-side
@@ -22,11 +23,6 @@ from inbev_data_engineering_case_spark.functions import (
     dsum,
     xsum,
 )
-
-
-def group_count(df: DataFrame, keys: list[str], alias: str = "cnt") -> DataFrame:
-    """OP-17 generalized: count rows per key tuple."""
-    return df.groupBy(*keys).agg(F.count("*").alias(alias))
 
 
 def pricing_summary(lineitem: DataFrame, ship_before: str) -> DataFrame:

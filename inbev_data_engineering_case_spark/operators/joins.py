@@ -11,8 +11,8 @@ realistic gold view needs them, and they are where 100 TB plans live or die:
 - **Fact-fact joins shuffle on the join key** (sort-merge under Catalyst);
   AQE's skew-join splitting handles hot keys at runtime. For repeated
   fact-fact joins on the same key, pre-bucketing both sides on that key
-  removes the shuffle entirely (see ``layers.write_layer``'s repartition
-  hook); at 100 TB that is the single biggest cost lever.
+  (``DataFrameWriter.bucketBy`` into a table) removes the shuffle entirely;
+  at 100 TB that is the single biggest cost lever.
 """
 
 from __future__ import annotations

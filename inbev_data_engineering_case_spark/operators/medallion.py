@@ -3,9 +3,10 @@ bronze→silver cleansing (OP-10..OP-16) and silver→gold aggregation (OP-17).
 
 Each function is ``DataFrame -> DataFrame`` — pure logical-plan construction.
 Catalyst collapses the chained projections into a single Project over the
-scan (CollapseProject), prunes unread columns into the scan, and plans the
-gold aggregate as partial+final HashAggregate around the pipeline's only
-shuffle (SURVEY.md §3.2-3.3, §4.2).
+scan (CollapseProject) and prunes unread columns into the scan (SURVEY.md
+§3.2-3.3, §4.2). Silver and gold each run one exchange: silver's write
+repartitions by (country, state); gold clusters its input by country
+(``pipeline.run_gold``), which serves both the aggregate and the write.
 """
 
 from __future__ import annotations
@@ -54,8 +55,10 @@ def bronze_to_silver(bronze: DataFrame, cast_coordinates: bool = True) -> DataFr
 
 def silver_to_gold(silver: DataFrame) -> DataFrame:
     """OP-17, the flagship query: breweries per (type, country, state)
-    (reference gold_data_aggregation.py:49-50). One shuffle; partial
-    aggregation halves it map-side."""
+    (reference gold_data_aggregation.py:49-50). Over an input already
+    hash-partitioned on any subset of the keys (the pipeline clusters by
+    country) it plans no exchange of its own; otherwise one, after a
+    map-side partial aggregate."""
     return silver.groupBy("brewery_type", "country", "state").agg(
         F.count("*").alias("brewery_count")
     )

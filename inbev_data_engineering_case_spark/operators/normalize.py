@@ -123,15 +123,6 @@ def clean_text(c: Column | str) -> Column:
     return fold_accents(strip_connector_punctuation(c))
 
 
-def normalize_key(c: Column | str) -> Column:
-    """The full silver cleansing chain for a location key column
-    (trim/lower/dash → clean_text), the composition the reference applies to
-    city/state/country (ref :94-110). Mojibake rules are column-specific so
-    they are applied separately via ``repair_mojibake``.
-    """
-    return clean_text(normalize_location(c))
-
-
 def accent_fold_sql_literals() -> tuple[str, str]:
     """The (matching, replace) table as single-quoted SQL string literals,
     for generating the DuckDB oracle of ``fold_accents``."""

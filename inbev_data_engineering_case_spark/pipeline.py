@@ -96,7 +96,10 @@ def run_gold(
     # The pinned schema skips the footer-inference job and keeps partition
     # values typed as silver wrote them (``state=01`` stays the string '01').
     silver = spark.read.schema(BREWERY_SILVER).parquet(silver_path)
-    gold = silver_to_gold(silver)
+    # One exchange: hash(country) satisfies the group-by, and the write's
+    # own repartition by country is dropped as redundant. It carries pruned
+    # silver rows, not partial aggregates; a country meets in one task.
+    gold = silver_to_gold(silver.repartition(*GOLD_PARTITION_KEYS))
     views = layers.publish_view(spark, gold, "brewery_counts")
     out = layers.snapshot_path(gold_dir, run_id)
     layers.write_layer(gold, out, GOLD_PARTITION_KEYS)

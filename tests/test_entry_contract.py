@@ -188,7 +188,6 @@ def test_every_package_module_is_reachable():
 # the next deletion candidates. The set may only shrink.
 _KNOWN_UNREACHED = {
     "layers.snapshot_as_of",
-    "operators.aggregate.group_count",
     "operators.bpe._apply_merge",
     "operators.dedup.lsh_candidate_pairs",
     "operators.dedup.signature_similarity",
@@ -196,7 +195,6 @@ _KNOWN_UNREACHED = {
     "operators.joins.broadcast_dims",
     "operators.joins.star_denormalize",
     "operators.multimodal.image_near_dup_keep",
-    "operators.normalize.normalize_key",
     "operators.sample.mixture_budgets",
     "operators.sample.sample_predicate",
     "operators.scd._changed",

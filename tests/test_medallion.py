@@ -160,8 +160,9 @@ def test_pipeline_stage_job_budget(spark, tmp_path):
     """Per-stage Spark job budget of a REST-sourced run under the default
     (executor-local) materialize policy: ingest 1 (the CSV write, which
     runs the page fetch and carries the page-count metric), silver 2,
-    gold 3 (aggregate and write). Jobs that do no data work — a fetch cut,
-    a page-id shuffle, a completeness query, a footer probe, a catalog
+    gold 2 (one exchange by country feeds both the aggregate and the
+    write). Jobs that do no data work — a fetch cut, a page-id shuffle, a
+    second gold exchange, a completeness query, a footer probe, a catalog
     listing — fail this budget."""
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
@@ -198,10 +199,59 @@ def test_pipeline_stage_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert jobs["ingest"] <= 1, jobs
     assert jobs["silver"] <= 2, jobs
-    assert jobs["gold"] <= 3, jobs
+    assert jobs["gold"] <= 2, jobs
     gold_path, _ = out["gold"]
     gold = spark.read.parquet(gold_path).agg(F.sum("brewery_count"))
     assert gold.first()[0] == 6
+
+
+def _data_files_per_leaf(root: str) -> dict[str, int]:
+    """Parquet data files in each leaf partition directory under ``root``,
+    keyed by the partition path relative to ``root``."""
+    return {
+        os.path.relpath(d, root): sum(f.endswith(".parquet") for f in files)
+        for d, subdirs, files in os.walk(root)
+        if not subdirs and d != root
+    }
+
+
+def test_layer_writes_keep_one_file_per_partition(spark, tmp_path):
+    """The small-file contract of a REST-sourced pass: every silver
+    ``country=/state=`` and every gold ``country=`` directory holds
+    exactly one data file, also when a gold country spans several
+    aggregate groups, and gold counts every record."""
+
+    def transport(page: int) -> list[dict]:
+        return [
+            {
+                "id": f"{page}-{i}", "name": f"brew {page} {i}",
+                "brewery_type": "micro" if page % 2 else "brewpub",
+                "city": "x", "state": f"state {i // 2 % 2}",
+                "country": "Austria" if i % 2 else "Brazil",
+            }
+            for i in range(8)
+        ]
+
+    source = PagedRestSource(
+        transport=transport, schema=BREWERY_BRONZE, n_pages=4, per_page=8,
+        expected_total=32,
+    )
+    dirs = {d: str(tmp_path / d) for d in ("bronze", "silver", "gold")}
+    run_id = "2024-01-01-00-00"
+    run_ingest(spark, source, dirs["bronze"], run_id)
+    silver_path = run_silver(spark, dirs["bronze"], dirs["silver"], run_id)
+    gold_path, _ = run_gold(spark, dirs["silver"], dirs["gold"], run_id)
+
+    silver_files = _data_files_per_leaf(silver_path)
+    assert len(silver_files) == 4, silver_files
+    assert all(p.count("=") == 2 for p in silver_files), silver_files
+    assert set(silver_files.values()) == {1}, silver_files
+    gold_files = _data_files_per_leaf(gold_path)
+    assert sorted(gold_files) == ["country=austria", "country=brazil"]
+    assert set(gold_files.values()) == {1}, gold_files
+    gold = spark.read.parquet(gold_path)
+    assert gold.count() == 8  # 2 types x 2 countries x 2 states
+    assert gold.agg(F.sum("brewery_count")).first()[0] == 32
 
 
 def test_rest_ingest_keeps_records_with_null_required_keys(spark, tmp_path):
