@@ -11,9 +11,8 @@ with the operators a large-scale (100 TB design point) training-data pipeline
 needs: joins, window functions, event-time windowing, deduplication
 (exact/MinHash-LSH/SimHash/n-gram-Jaccard), embedding similarity search,
 text analysis, and multimodal-column plumbing (binary payload columns with
-a text stand-in featurizer, byte-chunk frame sampling, perceptual image
-near-dup, and opt-in stdlib decoders for the lossless image formats and
-WAV; video and every other codec-bound payload dead-letter).
+a text stand-in featurizer, byte-chunk frame sampling, and perceptual
+image near-dup over binary PNM; every other image payload dead-letters).
 
 Modules
 -------

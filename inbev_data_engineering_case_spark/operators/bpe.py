@@ -101,11 +101,6 @@ def _apply_merges(
     return vocab_syms.mapInPandas(apply, schema=schema)
 
 
-def _apply_merge(vocab_syms: DataFrame, left: str, right: str) -> DataFrame:
-    """Single-rule convenience wrapper over ``_apply_merges``."""
-    return _apply_merges(vocab_syms, [(left, right)])
-
-
 def _select_batch(
     ranked_pairs: list, k: int
 ) -> list[tuple[str, str]]:

@@ -123,14 +123,8 @@ def curate_corpus(
     id_col: str = "doc_id",
     benchmark: DataFrame | None = None,
     decontaminate_ngram: int = 8,
-    min_avg_logprob: float | None = None,
-    strip_html: bool = False,
-    corpus_embeddings: DataFrame | None = None,
-    benchmark_embeddings: DataFrame | None = None,
-    semantic_threshold: float = 0.9,
     max_docs_per_source: int | None = None,
     source_col: str = "source",
-    cap_presalt: int | None = None,
     bloom_prefilter_bits: int | str | None = None,
     split_weights: dict[str, float] | None = None,
     split_salt: str = "split",
@@ -139,29 +133,11 @@ def curate_corpus(
     classifier_model: DataFrame | None = None,
     min_score_micro: int = 0,
     halo_hops: int | None = None,
-    token_budget: int | dict[str, int] | None = None,
-    asset_near_dup: DataFrame | None = None,
-    asset_max_hamming: int = 6,
-    asset_bucket_bits: int = 12,
 ) -> DataFrame:
     """Full curation pass returning the kept documents with their curation
     metadata (lang, quality). Survivor policy is deterministic end to end:
     exact dedup keeps min id per fingerprint; near-dup clusters keep the
     component id (= min doc id in the cluster).
-
-    ``asset_near_dup`` (default None = off) is the IMAGE-side near-dup
-    gate a multimodal corpus needs beside the text one: pass the asset
-    table (``asset_id`` aligned with ``id_col``, ``media_type``,
-    ``payload``) and every document whose image is a non-survivor of
-    its perceptual-hash cluster drops in the same pass
-    (``multimodal.image_near_dup_keep``: dHash → Hamming-bucketed
-    pairs at ``asset_max_hamming``/``asset_bucket_bits`` → components
-    → min-id survivor — the text survivor policy applied to pixels).
-    The gate runs right after the cheap lang/quality predicate, so a
-    dropped asset's text is never n-gram-hashed or banded; kept set is
-    identical to curating only the asset-surviving documents
-    (parity-tested). The decode cost is per-ASSET, one Arrow pass,
-    independent of the text pipeline's scans.
 
     ``split_weights`` (default None = off) appends a leakage-safe
     train/val/test ``split`` column. With ``split_threshold=None`` the
@@ -193,25 +169,10 @@ def curate_corpus(
     materialization barrier, so the n-gram pass still happens exactly
     once.
 
-    ``min_avg_logprob`` (default None = off) adds the bigram-LM
-    perplexity filter (``relevance.bigram_lm_scores``) at the same spot:
-    documents whose mean bigram logprob under the corpus-trained model
-    falls below the threshold are dropped (gibberish/word-salad pruning).
-    The LM trains on the already-filtered eligible set — the standard
-    ordering, so junk the cheap filters caught doesn't pollute the model.
-
     The scored-eligible corpus and the near-dedup signature table are
     shared across their consumers through ``session.materialize``: the
     cluster-safe swap (parquet scratch table instead of executor-local
     blocks) is the session's checkpoint dir, not a code edit.
-
-    ``strip_html=True`` prepends the crawl-extraction stage
-    (``textops.html_to_text``): raw page markup is reduced to prose
-    BEFORE any scoring/hashing, so lang-ID, quality, n-grams, and dedup
-    fingerprints all see text, not tags (markup inflates token counts
-    and makes every templated page a near-dup of every other). A pure
-    codegen'd rewrite folded into the same first corpus scan — no extra
-    pass.
 
     ``max_docs_per_source`` (default None = off) appends the
     RefinedWeb §3.1-style domain cap (``sample.cap_per_source``) as
@@ -222,13 +183,12 @@ def curate_corpus(
     reuses the pipeline's one-pass quality score (``quality_col`` —
     no second tokenization scan); the kept set is identical to
     standalone ``cap_per_source`` over the deduped corpus
-    (identity-tested). ``cap_presalt`` forwards the hot-domain
-    two-phase bound. When capping, ``source_col`` is carried through
+    (identity-tested). When capping, ``source_col`` is carried through
     the scoring projection and appears in the output.
 
     ``bloom_prefilter_bits`` (default None = off) routes the three
-    id-keyed keep-joins (LM keep list, exact-dedup survivors, cap
-    winners) through ``joins.bloom_semi_join`` AND the near-dedup
+    id-keyed keep-joins (classifier keep list, exact-dedup survivors,
+    cap winners) through ``joins.bloom_semi_join`` AND the near-dedup
     drop-join through ``joins.bloom_anti_join``: the corpus side
     probes a compact bitmap before the exact join, so when the
     keep/drop list is too big to broadcast, the corpus-side shuffle
@@ -240,7 +200,7 @@ def curate_corpus(
     automatically (``joins.bloom_filter_build``).
 
     ``classifier_model`` (default None = off) adds a model-based
-    quality gate at the LM filter's spot: every eligible document is
+    quality gate after the cheap predicates: every eligible document is
     scored against the trained hashed-BOW model
     (``classify.score_bow_classifier`` — a ``train_bow_classifier``/
     ``bow_weights_from_counts`` table) and kept iff ``score_micro >=
@@ -269,29 +229,6 @@ def curate_corpus(
     standalone ``decontaminate(halo_hops=..., pair_edges=...)`` chain
     over the same graph (parity-tested).
 
-    ``token_budget`` (default None = off) caps the curated corpus's
-    total CHARACTER MASS (the repo's token proxy) as the stage after
-    the per-source cap: the kept set is the maximal quality-ordered
-    prefix of the survivors within the budget
-    (``sample.select_within_budget`` — quality DESC, id ASC, exact
-    integer boundary, no global sort), so curation emits a budgeted
-    corpus in the same pass. Ordered after the cap BY DESIGN (quota
-    first, then spend — a budget applied before the cap could spend
-    on documents the cap then drops) and before the split (select,
-    then split — the standard ordering, and the split's provable
-    identity survives filtering to a subset of survivors). Reuses the
-    pipeline's one-pass quality score; identical to standalone
-    ``select_within_budget`` over the unbudgeted output
-    (parity-tested). A DICT spends PER STRATUM instead — ``{"code":
-    30_000_000_000, "forums": 10_000_000_000}`` keyed by
-    ``source_col`` (carried through the scoring projection and the
-    output, the cap stage's discipline; strata without a budget are
-    excluded, the ``select_within_budget_by_stratum`` contract) —
-    identical to the standalone by-stratum selection over the
-    unbudgeted output (parity-tested). Deriving the dict FROM a
-    target mixture is ``sample.mixture_budgets``' job; the composed
-    single-pass form stays ``sample.select_mixture_within_budget``.
-
     ``bloom_prefilter_bits="auto"`` gates each join on plan-stats
     selectivity (``joins.auto_bloom_bits``): the prefilter engages
     only when the key list exceeds the broadcast threshold AND the
@@ -301,53 +238,21 @@ def curate_corpus(
     runs never pay the bitmap build the r10 bench measured at 13%;
     at the 100 TB design point both gates flip on. ``"auto"`` is the
     recommended production setting."""
-    if strip_html:
-        from inbev_data_engineering_case_spark.operators.textops import (
-            html_to_text,
-        )
-
-        documents = documents.withColumn(text_col, html_to_text(text_col))
     # score_documents: one tokenization pass for lang + quality (the
     # standalone expressions would re-split the text per reference);
-    # the cap and per-stratum budget stages need the source column,
-    # carried as a pure projection passthrough
-    needs_source = max_docs_per_source is not None or isinstance(
-        token_budget, dict
-    )
+    # the cap stage needs the source column, carried as a pure
+    # projection passthrough
     scored = score_documents(
         documents,
         text_col,
         id_col,
-        extra_cols=((source_col,) if needs_source else ()),
+        extra_cols=(
+            (source_col,) if max_docs_per_source is not None else ()
+        ),
     )
     eligible = scored.filter(
         F.col("lang").isin(*languages) & (F.col("quality") >= min_quality)
     )
-    if asset_near_dup is not None:
-        from inbev_data_engineering_case_spark.operators.dedup import (
-            dedup_components,
-        )
-        from inbev_data_engineering_case_spark.operators.multimodal import (
-            image_near_dup_pairs,
-        )
-
-        # image near-dup LOSERS (asset_id space == id_col space) drop;
-        # docs with no asset row — or an undecodable one — are never
-        # touched. Same drop image_near_dup_keep applies standalone
-        # (the composition is identity-tested against it).
-        asset_pairs = image_near_dup_pairs(
-            asset_near_dup,
-            max_hamming=asset_max_hamming,
-            bucket_bits=asset_bucket_bits,
-        )
-        asset_drop = (
-            dedup_components(asset_pairs.select("id_a", "id_b"))
-            .filter(F.col("node") != F.col("comp"))
-            .select(F.col("node").alias(id_col))
-        )
-        eligible = _drop_anti(
-            eligible, asset_drop, id_col, bloom_prefilter_bits
-        )
     if halo_hops is not None and benchmark is None:
         raise ValueError(
             "curate_corpus: halo_hops requires benchmark (the halo"
@@ -370,53 +275,27 @@ def curate_corpus(
             # halo mode: flags are computed HERE (on the same
             # lang/quality-eligible corpus the plain stage would drop
             # from — a contaminated document later removed by the
-            # LM/classifier filters still seeds its halo) but the drop
-            # is deferred past the dedup chain, so flagged documents
+            # classifier filter still seeds its halo) but the drop is
+            # deferred past the dedup chain, so flagged documents
             # appear as nodes in the pipeline's own pair graph. The
             # report is a second consumer of `eligible` — materialize
-            # first (the classifier/LM stages' discipline).
+            # first (the classifier stage's discipline).
             eligible = materialize(eligible, eager=False)
             pre_materialized = True
             halo_seeds = contamination_report(
                 eligible, benchmark, n=decontaminate_ngram,
                 id_col=id_col, text_col=text_col,
             ).select(id_col)
-    if benchmark_embeddings is not None:
-        # semantic complement of the n-gram stage: drop docs whose
-        # embedding sits within cosine `semantic_threshold` of an eval
-        # vector (paraphrased leaks share no 8-gram). corpus_embeddings
-        # maps vec_id onto the documents' id_col; the flagged set is
-        # eval-sized, so this is one more broadcast anti-join on the
-        # same single corpus pass.
-        if corpus_embeddings is None:
-            raise ValueError(
-                "benchmark_embeddings requires corpus_embeddings "
-                "(vec_id-aligned with the documents' id column)"
-            )
-        from inbev_data_engineering_case_spark.operators.decontaminate import (
-            semantic_decontaminate,
-        )
-
-        eligible = semantic_decontaminate(
-            eligible,
-            corpus_embeddings,
-            benchmark_embeddings,
-            threshold=semantic_threshold,
-            doc_id_col=id_col,
-        )
-        pre_materialized = False  # reassigned: new plan on top
     if classifier_model is not None:
         from inbev_data_engineering_case_spark.operators.classify import (
             score_bow_classifier,
         )
 
-        # model-based quality gate at the same spot as the LM filter
-        # (after the cheap predicates, before the dedup chain): score
-        # against the TRAINED hashed-BOW model (``classify.py`` —
-        # weights broadcast, exact integer scores) and keep documents
-        # at or above ``min_score_micro``. Scoring + the keep-join
-        # read `eligible` twice — materialize first, the LM stage's
-        # discipline.
+        # model-based quality gate (after the cheap predicates, before
+        # the dedup chain): score against the TRAINED hashed-BOW model
+        # (``classify.py`` — weights broadcast, exact integer scores)
+        # and keep documents at or above ``min_score_micro``. Scoring
+        # + the keep-join read `eligible` twice — materialize first.
         eligible = materialize(eligible, eager=False)
         keep_clf = (
             score_bow_classifier(
@@ -430,24 +309,6 @@ def curate_corpus(
         )
         eligible = _keep_semi(
             eligible, keep_clf, id_col, bloom_prefilter_bits
-        )
-        pre_materialized = False
-    if min_avg_logprob is not None:
-        from inbev_data_engineering_case_spark.operators.relevance import (
-            bigram_lm_scores,
-        )
-
-        # LM training + scoring reads `eligible` several times (bigram
-        # counts, unigram counts, vocab, scoring join) — materialize
-        # first so those are table reads, not repeated corpus scans.
-        eligible = materialize(eligible, eager=False)
-        keep_lm = (
-            bigram_lm_scores(eligible, id_col=id_col, text_col=text_col)
-            .filter(F.col("avg_logprob") >= min_avg_logprob)
-            .select(id_col)
-        )
-        eligible = _keep_semi(
-            eligible, keep_lm, id_col, bloom_prefilter_bits
         )
         pre_materialized = False
     # Three downstream consumers read `eligible` (exact-dedup keep list,
@@ -513,42 +374,9 @@ def curate_corpus(
             group_col=source_col,
             id_col=id_col,
             text_col=text_col,
-            presalt=cap_presalt,
             quality_col="quality",
         ).select(id_col)
         final = _keep_semi(final, kept, id_col, bloom_prefilter_bits)
-    if token_budget is not None:
-        from inbev_data_engineering_case_spark.operators.sample import (
-            select_within_budget,
-            select_within_budget_by_stratum,
-        )
-
-        # budget stage: quota first (above), then spend; the cost is
-        # the surviving text's character mass, computed in-row on the
-        # already-materialized survivors — never a second corpus scan.
-        # A dict spends PER STRATUM ("30B of code, 10B of forums" —
-        # keyed by source_col, carried through the scoring projection
-        # for it); an int is the global spend.
-        costed = final.withColumn(
-            "_tb_cost", F.length(text_col).cast("bigint")
-        )
-        if isinstance(token_budget, dict):
-            final = select_within_budget_by_stratum(
-                costed,
-                source_col,
-                token_budget,
-                cost_col="_tb_cost",
-                quality_col="quality",
-                id_col=id_col,
-            ).drop("_tb_cost")
-        else:
-            final = select_within_budget(
-                costed,
-                token_budget,
-                cost_col="_tb_cost",
-                quality_col="quality",
-                id_col=id_col,
-            ).drop("_tb_cost")
     if split_weights is not None:
         # No clobber guard needed here: the scoring projection already
         # reduced the frame to (id, text, lang, quality[, source]), so
@@ -667,41 +495,6 @@ def _dedup_chain(
     return after_exact, final, split_clusters, dedup_pairs
 
 
-def unpack_halo_meta(hmeta: DataFrame, fn: str) -> tuple:
-    """Unpack the 1-row halo geometry table into the canonical
-    ``(max_hops, ngram, threshold, shingle_words, num_hashes)`` tuple,
-    refusing loudly (the guard family's contract) instead of letting a
-    malformed state surface as an opaque ``TypeError``/``KeyError``:
-    an EMPTY hmeta table (hand-assembled or corrupted snapshot) and a
-    pre-``num_hashes`` row (written before the banding-hash count was
-    recorded — a restart with a different ``num_hashes`` would band a
-    different pair graph while passing the old 4-field check) both
-    raise actionable ``ValueError``s."""
-    row = hmeta.first()
-    if row is None:
-        raise ValueError(
-            f"{fn}: the stored halo meta table is empty — the"
-            " geometry guard cannot run; rebuild the halo state"
-            " from the full corpus into a fresh state_dir"
-        )
-    geo = row.asDict()
-    if geo.get("num_hashes") is None:
-        raise ValueError(
-            f"{fn}: the stored halo meta row does not record"
-            " num_hashes — it predates the full-geometry contract, so"
-            " a restart with a different banding hash count would"
-            " silently mix pair-graph geometries; rebuild the halo"
-            " state from the full corpus into a fresh state_dir"
-        )
-    return (
-        int(geo["max_hops"]),
-        int(geo["ngram"]),
-        float(geo["threshold"]),
-        int(geo["shingle_words"]),
-        int(geo["num_hashes"]),
-    )
-
-
 def curate_incremental(
     old_snapshot: DataFrame,
     new_snapshot: DataFrame,
@@ -712,15 +505,8 @@ def curate_incremental(
     near_dup_threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bloom_prefilter_bits: int | str | None = None,
-    classifier_model: DataFrame | None = None,
-    min_score_micro: int = 0,
     stored_components: DataFrame | None = None,
     artifacts_out: dict | None = None,
-    stored_halo: tuple[DataFrame, DataFrame] | None = None,
-    halo_benchmark: DataFrame | None = None,
-    halo_hops: int = 2,
-    decontaminate_ngram: int = 8,
     token_budget: int | dict[str, int] | None = None,
     source_col: str = "source",
 ) -> DataFrame:
@@ -732,12 +518,12 @@ def curate_incremental(
     corpus advances as ``kept ∪ result`` (and the signature/fingerprint
     tables as their unions with the delta's).
 
-    ``token_budget`` (default None = off) is the batch pipeline's spend
-    stage applied to TODAY'S delta: after every drop (dedup, halo), the
-    surviving delta spends the day's budget on its best rows — an int
-    spends globally (``sample.select_within_budget``), a dict spends
-    per ``source_col`` stratum (``select_within_budget_by_stratum``,
-    exact int64 boundary discipline, no global sort), with ``source_col``
+    ``token_budget`` (default None = off) is the spend stage applied to
+    TODAY'S delta: after every dedup drop, the surviving delta spends
+    the day's budget on its best rows — an int spends globally
+    (``sample.select_within_budget``), a dict spends per
+    ``source_col`` stratum (``select_within_budget_by_stratum``, exact
+    int64 boundary discipline, no global sort), with ``source_col``
     carried through the scoring projection only when needed. The cost
     is the survivors' in-row character mass — never a second corpus
     scan. Spend is the LAST stage, so a daily loop caps "today's
@@ -773,17 +559,7 @@ def curate_incremental(
     kept corpus; ``stored_fps`` any table with the kept corpus's ``fp``
     fingerprint column (``exact_dedup`` output works as-is). An updated
     doc re-enters curation under its (unchanged) id; the self-pair guard
-    keeps it from matching its own stale stored signature.
-    ``bloom_prefilter_bits`` (int | "auto" | None) engages the same
-    drop-join prefilter as the batch pipeline on the final near-dup
-    drop join (see ``curate_corpus``). ``classifier_model`` /
-    ``min_score_micro`` apply the batch pipeline's learned quality
-    gate to the DELTA: the stored model (typically advanced through
-    ``classify.merge_bow_counts`` on labeled batches) scores only the
-    delta's eligible documents — history is neither re-scored nor
-    re-read, and score exactness (integer micro-units) makes the
-    threshold decision identical to what the batch pipeline would
-    take on the same text. Advance the
+    keeps it from matching its own stale stored signature. Advance the
     stored artifact tables after each run with
     ``advance_corpus_artifacts`` — mode ``"append"`` keeps an updated
     doc's old rows (append-only emission semantics, the default) and
@@ -825,68 +601,15 @@ def curate_incremental(
     frame ``advance_corpus_artifacts`` would rebuild), so the
     production loop hands it back as ``kept_comps=`` and the
     contracted delta closure runs once per day, not twice
-    (parity-tested: reused == recomputed).
-
-    ``stored_halo`` + ``halo_benchmark`` (both or neither) plug the
-    maintained CONTAMINATION-HALO state into the keep decision — the
-    ``stored_components`` pattern for the halo guard: pass
-    ``(stored_pairs, stored_dist)`` or ``(stored_pairs, stored_dist,
-    hmeta)``, where ``hmeta`` is the 1-row geometry table
-    (``unpack_halo_meta``'s shape); with the ``hmeta`` row present, a
-    walk/banding geometry mismatch against this call's effective
-    ``(halo_hops, decontaminate_ngram, near_dup_threshold, shingle,
-    num_hashes)`` REFUSES up front (without it the caller owns
-    geometry agreement). Today's
-    direct flags come from ``decontaminate.contamination_report``
-    over the scored-eligible DELTA (the batch halo mode's spot — a
-    contaminated doc later dropped by dedup still seeds its halo),
-    the state advances over the SAME banded pair delta the dedup
-    stages consume (``advance_halo_artifacts`` — one banding pass),
-    and every delta survivor within ``halo_hops`` of ANY flag ever
-    raised (history's memory plus today's) is dropped. The advanced
-    state lands in ``artifacts_out["halo_pairs"]`` /
-    ``artifacts_out["halo_dist"]`` when a dict is passed — persist
-    them as the next day's ``stored_halo``. Row-identical to the
-    manual chain (plain ``curate_incremental`` → report → advance →
-    anti-join the updated dist; parity-tested)."""
+    (parity-tested: reused == recomputed)."""
     from inbev_data_engineering_case_spark.layers import snapshot_diff
     from inbev_data_engineering_case_spark.operators.textops import (
         fingerprint,
     )
 
-    if (stored_halo is None) != (halo_benchmark is None):
-        raise ValueError(
-            "curate_incremental: stored_halo and halo_benchmark come"
-            " together — the guard drops against history's memory AND"
-            " today's flags (pass both or neither)"
-        )
-    if stored_halo is not None and len(stored_halo) == 3:
-        from inbev_data_engineering_case_spark.operators.dedup import (
-            DEFAULT_NUM_HASHES,
-            DEFAULT_SHINGLE_WORDS,
-        )
-
-        stored_geo = unpack_halo_meta(stored_halo[2], "curate_incremental")
-        my_geo = (
-            int(halo_hops),
-            int(decontaminate_ngram),
-            float(near_dup_threshold),
-            DEFAULT_SHINGLE_WORDS,  # this pipeline bands at defaults
-            DEFAULT_NUM_HASHES,
-        )
-        if stored_geo != my_geo:
-            raise ValueError(
-                "curate_incremental: stored halo state was built with"
-                " (max_hops, ngram, threshold, shingle_words,"
-                f" num_hashes)={stored_geo} but this run is"
-                f" configured {my_geo} — a silent mismatch would mix"
-                " reaches (or pair-graph geometries) in the advanced"
-                " state; match the geometry or rebuild the halo state"
-            )
-        stored_halo = stored_halo[:2]
     # a dict budget spends per source stratum — carry source_col
-    # through the projection chain only then (the batch pipeline's
-    # needs_source discipline; an int budget never pays the column)
+    # through the projection chain only then (an int budget never pays
+    # the column)
     needs_source = isinstance(token_budget, dict)
     if needs_source and source_col not in new_snapshot.columns:
         raise ValueError(
@@ -915,40 +638,6 @@ def curate_incremental(
         ),
         eager=False,
     )
-    halo_seeds = None
-    if halo_benchmark is not None:
-        from inbev_data_engineering_case_spark.operators.decontaminate import (  # noqa: E501
-            contamination_report,
-        )
-
-        # flags at the batch halo mode's spot — the lang/quality-
-        # eligible delta, BEFORE the classifier/dedup gates, so a
-        # contaminated doc those gates drop still seeds its halo;
-        # `eligible` is materialized above, so the report is a table
-        # re-read, not a second scoring pass
-        halo_seeds = contamination_report(
-            eligible, halo_benchmark, n=decontaminate_ngram,
-            id_col=id_col, text_col=text_col,
-        ).select(id_col)
-    if classifier_model is not None:
-        from inbev_data_engineering_case_spark.operators.classify import (
-            score_bow_classifier,
-        )
-
-        keep_clf = (
-            score_bow_classifier(
-                eligible.select(id_col, text_col),
-                classifier_model,
-                text_col=text_col,
-                id_col=id_col,
-            )
-            .filter(F.col("score_micro") >= min_score_micro)
-            .select(id_col)
-        )
-        eligible = materialize(
-            _keep_semi(eligible, keep_clf, id_col, bloom_prefilter_bits),
-            eager=False,
-        )
 
     # exact dedup: against the stored corpus (anti-join on the 8-byte
     # fingerprint — the fp table is tiny next to the corpus text and
@@ -976,13 +665,12 @@ def curate_incremental(
         id_col=id_col,
         threshold=near_dup_threshold,
     )
-    if artifacts_out is not None or halo_benchmark is not None:
-        # further consumers (the artifact advance, the halo walk) will
-        # read the pair table beside the drop decision — 24-byte rows,
-        # materialize once (the _dedup_chain discipline)
+    if artifacts_out is not None:
+        # the artifact advance will read the pair table beside the
+        # drop decision — 24-byte rows, materialize once (the
+        # _dedup_chain discipline)
         pairs = materialize(pairs, eager=False)
-        if artifacts_out is not None:
-            artifacts_out["pairs"] = pairs
+        artifacts_out["pairs"] = pairs
     if stored_components is None:
         clusters = dedup_components(pairs)
         drop = clusters.filter(F.col("node") != F.col("comp")).select(
@@ -1015,40 +703,16 @@ def curate_incremental(
             )
             .select(F.col("node").alias(id_col))
         )
-    # same prefilter family as the batch pipeline's drop join;
-    # `eligible` is materialized above (dual-consumer requirement)
-    kept = _drop_anti(eligible, drop, id_col, bloom_prefilter_bits)
-    if halo_benchmark is not None:
-        # advance the halo memory over the SAME pair delta the dedup
-        # stages consumed, then drop every survivor within halo_hops
-        # of any flag ever raised — history's stored reach plus
-        # today's (the batch halo_hops stage, fed from storage)
-        stored_pairs, stored_dist = stored_halo
-        hpairs, hdist = advance_halo_artifacts(
-            stored_pairs, stored_dist, pairs, halo_seeds,
-            max_hops=halo_hops,
-        )
-        if artifacts_out is not None:
-            # persist as tomorrow's stored_halo (the advance is
-            # computed once — the drop below reads the same frames)
-            artifacts_out["halo_pairs"] = hpairs
-            artifacts_out["halo_dist"] = hdist
-        kept = _drop_anti(
-            kept,
-            hdist.select(F.col("node").alias(id_col)),
-            id_col,
-            bloom_prefilter_bits,
-        )
+    kept = eligible.join(drop, on=id_col, how="left_anti")
     if token_budget is not None:
         from inbev_data_engineering_case_spark.operators.sample import (
             select_within_budget,
             select_within_budget_by_stratum,
         )
 
-        # spend stage LAST (the batch pipeline's order): every drop —
-        # dedup, halo — has already happened, so duplicates and
-        # contaminated docs cannot consume budget; cost is the
-        # surviving delta's in-row character mass
+        # spend stage LAST: every dedup drop has already happened, so
+        # duplicates cannot consume budget; cost is the surviving
+        # delta's in-row character mass
         costed = kept.withColumn(
             "_tb_cost", F.length(text_col).cast("bigint")
         )

@@ -320,30 +320,3 @@ def semantic_contamination(
     if n_probes > 1:  # a pair caught by several probes reports once
         pairs = pairs.dropDuplicates(["corpus_id", "bench_id"])
     return pairs
-
-
-def semantic_decontaminate(
-    documents: DataFrame,
-    corpus_emb: DataFrame,
-    bench_emb: DataFrame,
-    threshold: float = 0.9,
-    num_planes: int = 8,
-    n_probes: int = 1,
-    doc_id_col: str = "doc_id",
-    emb_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Drop documents whose embedding sits within cosine ``threshold``
-    of any benchmark vector (``corpus_emb`` maps ``emb_id_col`` onto the
-    documents' ``doc_id_col``). The flagged-id set is benchmark-sized or
-    smaller, so the final anti-join broadcasts — the corpus is scanned
-    once and never shuffled, mirroring ``decontaminate``."""
-    flagged = (
-        semantic_contamination(
-            corpus_emb, bench_emb, threshold, num_planes, n_probes,
-            emb_id_col, vec_col,
-        )
-        .select(F.col("corpus_id").alias(doc_id_col))
-        .distinct()
-    )
-    return documents.join(F.broadcast(flagged), doc_id_col, "left_anti")

@@ -6,7 +6,7 @@ Scale design (the point of each implementation):
 - **Exact** (``exact_dedup``): groupBy on a 64-bit content fingerprint, not
   the full text — the shuffle carries 8 bytes + the surviving key per row
   instead of whole documents. Partial aggregation dedups map-side first.
-- **MinHash+LSH** (``minhash_signatures`` → ``lsh_candidate_pairs``): the
+- **MinHash+LSH** (``minhash_signatures`` → ``minhash_dedup_pairs``): the
   classic shingle → K minhashes → band → bucket-join pipeline. All-pairs
   comparison is O(n²) and impossible at 100 TB; LSH banding reduces it to
   pairs that share a band bucket, i.e. expected-similar pairs only. The
@@ -295,54 +295,6 @@ def _band_keys(sig_col: str, band_size: int) -> Column:
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    band_size: int = DEFAULT_BAND_SIZE,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """Band the signatures and self-join on (band_index, band_key):
-    (id_a, id_b) candidate pairs with id_a < id_b, deduplicated.
-
-    The band key is the concatenation of the band's signature slots; the
-    join shuffles on it (uniform-hash-distributed — skew only arises from
-    genuinely identical band slices, which ``max_bucket_size`` guards: see
-    ``_split_hot_buckets``). Pairs sharing ≥1 band survive — the standard
-    LSH recall/precision dial via band_size."""
-    bands = signatures.select(
-        "id",
-        F.posexplode(_band_keys("sig", band_size)).alias(
-            "band_idx", "band_key"
-        ),
-    )
-    if max_bucket_size is not None:
-        cold, hot = _split_hot_buckets(
-            bands, ["band_idx", "band_key"], max_bucket_size
-        )
-    else:
-        cold, hot = bands, None
-    a = cold.alias("a")
-    b = cold.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    if hot is not None:
-        reps = hot.groupBy("band_idx", "band_key").agg(
-            F.min("id").alias("rep_id")
-        )
-        star = (
-            hot.join(reps, ["band_idx", "band_key"])
-            .filter(F.col("id") != F.col("rep_id"))
-            .select(
-                F.col("rep_id").alias("id_a"), F.col("id").alias("id_b")
-            )
-        )
-        pairs = pairs.unionByName(star)
-    return pairs.distinct()
-
-
 def signature_similarity(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
     """Estimated Jaccard = fraction of equal minhash slots, joined back onto
     candidate pairs. Two broadcast-able joins when the signature table of
@@ -388,7 +340,7 @@ def minhash_dedup_pairs(
     The signature array rides along through the band explode and the
     self-join, so the (expensive) shingle+hash subtree is evaluated exactly
     once and the similarity needs no join back onto the signature table —
-    the naive compose (``lsh_candidate_pairs`` + ``signature_similarity``)
+    the naive compose (band join, then ``signature_similarity``)
     evaluates signatures three times. The shuffle key is still the band
     key; each row just carries ``num_hashes`` extra longs (~64 bytes).
 

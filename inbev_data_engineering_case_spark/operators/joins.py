@@ -5,9 +5,7 @@ and denormalizes instead (reference README.md:46; SURVEY.md §2.6) — but any
 realistic gold view needs them, and they are where 100 TB plans live or die:
 
 - **Dimension joins broadcast.** region/nation/customer-sized sides are sent
-  to every executor; the fact table never shuffles. ``broadcast_dims``
-  applies the hint explicitly rather than trusting the size estimate, so the
-  plan survives statistics going stale.
+  to every executor; the fact table never shuffles.
 - **Fact-fact joins shuffle on the join key** (sort-merge under Catalyst);
   AQE's skew-join splitting handles hot keys at runtime. For repeated
   fact-fact joins on the same key, pre-bucketing both sides on that key
@@ -18,7 +16,6 @@ realistic gold view needs them, and they are where 100 TB plans live or die:
 from __future__ import annotations
 
 import logging
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,30 +23,6 @@ from pyspark.sql import functions as F
 from inbev_data_engineering_case_spark.session import materialize
 
 _log = logging.getLogger(__name__)
-
-
-def broadcast_dims(fact: DataFrame, dims: list[tuple[DataFrame, str]]) -> DataFrame:
-    """Join ``fact`` against each (dim, key) with an explicit broadcast hint —
-    zero shuffles on the fact side."""
-    return reduce(
-        lambda acc, dim_key: acc.join(F.broadcast(dim_key[0]), on=dim_key[1]),
-        dims,
-        fact,
-    )
-
-
-def star_denormalize(
-    customer: DataFrame, nation: DataFrame, region: DataFrame
-) -> DataFrame:
-    """customer enriched with nation/region names — the denormalized view the
-    reference's gold layer implies. Both dims broadcast."""
-    return (
-        customer.join(
-            F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"]
-        )
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .drop("n_nationkey", "n_regionkey", "r_regionkey")
-    )
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:

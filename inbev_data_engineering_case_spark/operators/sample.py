@@ -27,15 +27,6 @@ from inbev_data_engineering_case_spark.session import materialize
 SAMPLE_BUCKETS = 1_000_000
 
 
-def sample_predicate(
-    id_col: Column | str, fraction: float, salt: int = 0
-) -> Column:
-    """Deterministic Bernoulli membership: true for ~``fraction`` of ids.
-    Different ``salt`` values draw independent samples."""
-    bucket = portable_hash64(id_col, seed=salt) % SAMPLE_BUCKETS
-    return bucket < int(fraction * SAMPLE_BUCKETS)
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,
@@ -218,7 +209,7 @@ def select_within_budget(
     membership through the single boundary window. Quality scores are
     continuous expressions here, so levels are tiny in practice; a
     constant-scored corpus should be selected by hash instead
-    (``sample_predicate``).
+    (``stratified_sample``).
 
     Costs must be non-negative and non-NULL — a NULL or negative cost
     would silently corrupt every cumulative sum after it, so both
@@ -794,7 +785,7 @@ def mixture_sample(
     """The corpus resampled to the target mixture: broadcast the (tiny)
     per-stratum rate table onto the corpus and keep rows whose
     deterministic id-hash bucket falls under the stratum's rate — the same
-    hash-Bernoulli membership as ``sample_predicate``, so the subset is a
+    hash-Bernoulli membership as ``stratified_sample``, so the subset is a
     pure function of (ids, weights, salt): stable across retries, AQE
     re-plans, and cluster sizes. The corpus itself never shuffles.
     ``weight_col`` switches the targeted composition from rows to
@@ -888,7 +879,6 @@ def cap_per_source(
     group_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    presalt: int | None = None,
     quality_col: str | None = None,
 ) -> DataFrame:
     """Per-source quota enforcement — the RefinedWeb/C4-style domain cap
@@ -903,15 +893,7 @@ def cap_per_source(
     documents.
 
     Scale shape: one hash exchange on ``group_col`` + a per-group rank
-    window. A pathologically hot domain (one source with 1e9 pages)
-    makes that window's partition the straggler; ``presalt=S`` bounds
-    it with a TWO-PHASE cap: phase one ranks within ``(source,
-    hash(id) % S)`` and keeps ``max_docs`` per salt bucket — a strict
-    superset of the final winners, since any true top-``max_docs``
-    document is outranked by at most ``max_docs − 1`` others in its
-    own bucket — so the exact phase-two window sees at most
-    ``S · max_docs`` rows per source. Pure hash salting, no RNG;
-    result identical to the direct form (identity-tested).
+    window.
 
     ``quality_col`` names an ALREADY-COMPUTED quality column to rank
     by (still rounded to 6 decimals here) instead of re-running
@@ -923,17 +905,12 @@ def cap_per_source(
     """
     from pyspark.sql.window import Window
 
-    from inbev_data_engineering_case_spark.functions import (
-        portable_hash64,
-    )
     from inbev_data_engineering_case_spark.operators.textops import (
         quality_score,
     )
 
     if max_docs < 1:
         raise ValueError("cap_per_source: max_docs must be >= 1")
-    if presalt is not None and presalt < 1:
-        raise ValueError("cap_per_source: presalt must be >= 1")
     qexpr = (
         F.col(quality_col)
         if quality_col is not None
@@ -944,16 +921,6 @@ def cap_per_source(
         F.col(group_col),
         F.round(qexpr, 6).alias("quality_r"),
     )
-    if presalt:
-        wpre = Window.partitionBy(
-            group_col,
-            F.pmod(portable_hash64(F.col(id_col).cast("string")), F.lit(presalt)),
-        ).orderBy(F.col("quality_r").desc(), F.col(id_col).asc())
-        scored = (
-            scored.withColumn("_pre", F.row_number().over(wpre))
-            .filter(F.col("_pre") <= max_docs)
-            .drop("_pre")
-        )
     w = Window.partitionBy(group_col).orderBy(
         F.col("quality_r").desc(), F.col(id_col).asc()
     )

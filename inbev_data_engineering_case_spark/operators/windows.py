@@ -70,20 +70,3 @@ def sliding_window_agg(
         .withColumn("window_end", F.col("w.end"))
         .drop("w")
     )
-
-
-def running_total(
-    df: DataFrame,
-    partition_keys: list[str],
-    order_col: str,
-    value: Column,
-    alias: str = "running_total",
-) -> DataFrame:
-    """Cumulative sum within partition by order — rows-unbounded-preceding
-    frame."""
-    w = (
-        Window.partitionBy(*partition_keys)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(alias, F.sum(value).over(w))

@@ -3977,8 +3977,7 @@ _SQL_BYTESUM = (
     doc="multimodal plumbing: documents' text bytes stand in for media "
     "payloads (binary column + typed metadata struct); features extracted "
     "through Arrow-batched mapInPandas by a deterministic byte-sum "
-    "stand-in featurizer (operators/multimodal.py; its opt-in stdlib "
-    "decoders are not SQL-reproducible, so the oracle checks the stand-in). "
+    "stand-in featurizer (operators/multimodal.py). "
     "Oracle valid because the fixture corpus is pure ASCII (byte == char).",
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4099,12 +4098,10 @@ def _image_dedup_oracle(max_hamming: int = 6, bucket_bits: int = 12) -> str:
     "(two's-complement into signed BIGINT — the oracle int discipline "
     "— verified bit-equal against the decode path). Decode pass paid "
     "ONCE (hashes= feeds the pair join). "
-    "Scale: bucket-local self-join, never all-pairs; hot-bucket "
-    "star-link guard available (max_bucket_size). Late-r15 tail debut "
-    "(family cover: q_frame_sample pins the Arrow decode plumbing "
-    "in-window, q_dedup_components the pairs→closure→survivor "
-    "machinery); the asset_near_dup= curation gate is "
-    "composition-parity-tested in tests/test_training_ops.py.",
+    "Scale: bucket-local self-join, never all-pairs. Late-r15 tail "
+    "debut (family cover: q_frame_sample pins the Arrow decode "
+    "plumbing in-window, q_dedup_components the "
+    "pairs→closure→survivor machinery).",
 )
 def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inbev_data_engineering_case_spark.operators.dedup import (
@@ -8222,11 +8219,7 @@ def _source_cap_oracle(max_docs: int = 10) -> str:
     "deterministic (quality rounded to 6 decimals DESC, doc_id ASC — "
     "the TF-IDF tie discipline), so the cap boundary cannot flip "
     "between engines or retries. One hash exchange on source + a "
-    "per-group rank window; a pathologically hot domain is bounded by "
-    "the presalt two-phase cap (phase one keeps max_docs per "
-    "(source, hash salt) bucket — a proven superset of the winners — "
-    "so the exact window sees ≤ S·max_docs rows/source; "
-    "identity-tested against the direct form). Late-r7 tail debut "
+    "per-group rank window. Late-r7 tail debut "
     "(family cover: q_quality_score's scoring machinery + "
     "q_window_events' per-key rank windows, both in-window).",
 )
@@ -8704,7 +8697,7 @@ _FAMILY_STAND_INS: dict[str, tuple[str, ...]] = {
     # pinned in-window by q_ann_indexed, which probes the SAME
     # composition from the materialized model (identity-tested):
     "q_ann_pq": ("q_ann_indexed",),
-    "q_html_strip": ("q_curate_corpus",),  # curate composes strip_html
+    "q_html_strip": ("q_clean_text",),  # rewrite chains
     # rewired r12 (q_pii_scrub demoted): the sequential rewrite-chain
     # machinery stays in-window via q_clean_text:
     "q_url_normalize": ("q_clean_text",),  # rewrite chains
@@ -8901,8 +8894,7 @@ _FAMILY_STAND_INS: dict[str, tuple[str, ...]] = {
     # entry's stand-in chain references), and name in-window
     # same-family cover:
     # per-source quota caps: q_curate_capped COMPOSES cap_per_source as
-    # curate_corpus's final stage (the presalt two-phase bound runs
-    # in-window verbatim), and mixture sampling pins the
+    # curate_corpus's final stage, and mixture sampling pins the
     # hash-deterministic membership family:
     # rewired r12 (q_curate_capped demoted): the curation composition
     # stays in-window via q_curate_corpus, the hash-deterministic

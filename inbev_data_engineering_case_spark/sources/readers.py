@@ -30,19 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-STAR_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 def read_bronze_csv(
     spark: SparkSession, path_glob: str, schema: T.StructType
@@ -247,11 +234,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     pushdown, column pruning all apply); supported so ORC-resident lakes
     can be consumed without conversion."""
     return spark.read.orc(path)
-
-
-def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All synthetic tables as DataFrames keyed by name (TESTDATA.md)."""
-    return {t: read_parquet_table(spark, sf_dir, t) for t in STAR_TABLES}
 
 
 def read_parquet_evolving(

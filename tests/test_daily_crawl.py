@@ -633,199 +633,6 @@ def test_daily_loop_full_artifact_set_chained(spark):
 
 
 @pytest.mark.slow
-def test_curate_incremental_stored_halo_guard(spark):
-    """stored_halo= plugs the maintained contamination-halo memory
-    into the daily keep decision (the stored_components pattern):
-    row-identical to the manual chain (plain curate_incremental →
-    flags over the eligible delta → advance_halo_artifacts over the
-    same pair table → anti-join the updated dist), the flag riding a
-    HIGHER-id near-dup copy drops the clean representative dedup
-    keeps (the q_curate_halo fixture's load-bearing case, here
-    incremental), an UPDATED doc whose id carries stored reach is
-    dropped even with clean new text (emitted contamination never
-    un-happens), the advanced state lands in artifacts_out, and
-    mismatched options raise."""
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.curate import (
-        advance_halo_artifacts,
-        curate_incremental,
-    )
-    from inbev_data_engineering_case_spark.operators.decontaminate import (
-        contamination_report,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        exact_dedup,
-        minhash_dedup_pairs,
-        minhash_signatures,
-    )
-    from inbev_data_engineering_case_spark.operators.graph import (
-        multi_source_bfs,
-    )
-
-    bench_text = (
-        "this exact benchmark passage with its very specific wording "
-        "must never appear inside any document of the training corpus"
-    )
-    bench = _docs(spark, [(900, bench_text)])
-    clean_x = (
-        "a fully original essay about the quiet harbor and the boats "
-        "that the fishers mend on the long pier every morning"
-    )
-    day0 = _docs(spark, [
-        (1, bench_text),
-        (2, bench_text + " with a small harmless tail added"),
-        (3, "a completely different tale about the river and the old "
-            "boat that the fisherman kept near the house"),
-    ])
-    sigs = minhash_signatures(day0.select("doc_id", "text"))
-    fps = exact_dedup(day0.select("doc_id", "text"))
-    stored_pairs = minhash_dedup_pairs(day0).select("id_a", "id_b")
-    stored_dist = multi_source_bfs(
-        stored_pairs,
-        contamination_report(day0, bench).select("doc_id"),
-        max_hops=2, src_col="id_a", dst_col="id_b",
-    ).localCheckpoint(eager=True)
-    assert {r["node"] for r in stored_dist.collect()} == {1, 2}
-
-    # day 1: doc 2 UPDATED to clean fresh text (no flags, no
-    # near-dups — only its stored reach can drop it); 30 clean, 31 =
-    # 30's near-dup CARRYING the flag (higher id: dedup keeps 30,
-    # only the halo can drop it); 23 clean and fresh
-    delta_rows = [
-        (2, "an entirely rewritten page about mountain weather and "
-            "the slow clouds that drift over the ridge at dusk"),
-        (23, "a brand new clean report on the harvest and the carts "
-             "that the farmers drive along the dusty road to market"),
-        (30, clean_x),
-        (31, clean_x + " " + bench_text),
-    ]
-    new = day0.filter(F.col("doc_id") != 2).unionByName(
-        _docs(spark, delta_rows)
-    )
-    out: dict = {}
-    composed = curate_incremental(
-        day0, new, sigs, fps, min_quality=0.0,
-        stored_halo=(stored_pairs, stored_dist),
-        halo_benchmark=bench,
-        artifacts_out=out,
-    )
-    composed_ids = sorted(r["doc_id"] for r in composed.collect())
-
-    # manual chain over the same machinery
-    out2: dict = {}
-    plain = curate_incremental(
-        day0, new, sigs, fps, min_quality=0.0, artifacts_out=out2
-    )
-    plain_ids = sorted(r["doc_id"] for r in plain.collect())
-    delta_eligible = _docs(spark, delta_rows)  # all eligible at q>=0
-    seeds = contamination_report(
-        delta_eligible, bench
-    ).select("doc_id")
-    hpairs, hdist = advance_halo_artifacts(
-        stored_pairs, stored_dist, out2["pairs"], seeds, max_hops=2
-    )
-    want_ids = sorted(
-        set(plain_ids)
-        - {r["node"] for r in hdist.collect()}
-    )
-    assert composed_ids == want_ids
-
-    # the load-bearing drops: dedup kept 30 (31 carried the flag) and
-    # the rewritten doc 2 (clean text) — only the halo removes them;
-    # the genuinely clean fresh doc survives
-    assert 30 in plain_ids and 2 in plain_ids
-    assert 30 not in composed_ids and 2 not in composed_ids
-    assert 31 not in composed_ids  # flagged (and a near-dup)
-    assert 23 in composed_ids
-
-    # advanced state deposited, identical to the manual advance
-    assert {
-        (r["id_a"], r["id_b"]) for r in out["halo_pairs"].collect()
-    } == {(r["id_a"], r["id_b"]) for r in hpairs.collect()}
-    assert {
-        (r["node"], r["dist"]) for r in out["halo_dist"].collect()
-    } == {(r["node"], r["dist"]) for r in hdist.collect()}
-
-    # options come together — BOTH directions
-    with pytest.raises(ValueError, match="come together"):
-        curate_incremental(
-            day0, new, sigs, fps,
-            stored_halo=(stored_pairs, stored_dist),
-        )
-    with pytest.raises(ValueError, match="come together"):
-        curate_incremental(day0, new, sigs, fps, halo_benchmark=bench)
-
-    # the stream's 3-tuple shape (with the hmeta geometry row):
-    # matching geometry selects identically to the bare pair; a
-    # mismatched row refuses up front (the maintaining stream's
-    # discipline carried into the consumer)
-    hmeta_ok = spark.createDataFrame(
-        [(2, 8, 0.5, 3, 8)],
-        "max_hops int, ngram int, threshold double, shingle_words int,"
-        " num_hashes int",
-    )
-    with_meta = sorted(
-        r["doc_id"]
-        for r in curate_incremental(
-            day0, new, sigs, fps, min_quality=0.0,
-            stored_halo=(stored_pairs, stored_dist, hmeta_ok),
-            halo_benchmark=bench,
-        ).collect()
-    )
-    assert with_meta == composed_ids
-    hmeta_bad = spark.createDataFrame(
-        [(3, 13, 0.5, 3, 8)],
-        "max_hops int, ngram int, threshold double, shingle_words int,"
-        " num_hashes int",
-    )
-    with pytest.raises(ValueError, match="geometry"):
-        curate_incremental(
-            day0, new, sigs, fps, min_quality=0.0,
-            stored_halo=(stored_pairs, stored_dist, hmeta_bad),
-            halo_benchmark=bench,
-        )
-    # a num_hashes-only mismatch refuses too — the banded pair graph
-    # is shaped by the hash count even when the walk geometry agrees
-    hmeta_hashes = spark.createDataFrame(
-        [(2, 8, 0.5, 3, 16)],
-        "max_hops int, ngram int, threshold double, shingle_words int,"
-        " num_hashes int",
-    )
-    with pytest.raises(ValueError, match="geometry"):
-        curate_incremental(
-            day0, new, sigs, fps, min_quality=0.0,
-            stored_halo=(stored_pairs, stored_dist, hmeta_hashes),
-            halo_benchmark=bench,
-        )
-    # malformed meta states refuse LOUDLY, not with an opaque
-    # TypeError: an empty hmeta table, and a pre-num_hashes 4-field
-    # row (which would otherwise pass the old geometry check while a
-    # different hash count bands a different pair graph)
-    hmeta_empty = spark.createDataFrame(
-        [],
-        "max_hops int, ngram int, threshold double, shingle_words int,"
-        " num_hashes int",
-    )
-    with pytest.raises(ValueError, match="empty"):
-        curate_incremental(
-            day0, new, sigs, fps, min_quality=0.0,
-            stored_halo=(stored_pairs, stored_dist, hmeta_empty),
-            halo_benchmark=bench,
-        )
-    hmeta_legacy = spark.createDataFrame(
-        [(2, 8, 0.5, 3)],
-        "max_hops int, ngram int, threshold double, shingle_words int",
-    )
-    with pytest.raises(ValueError, match="num_hashes"):
-        curate_incremental(
-            day0, new, sigs, fps, min_quality=0.0,
-            stored_halo=(stored_pairs, stored_dist, hmeta_legacy),
-            halo_benchmark=bench,
-        )
-
-
-@pytest.mark.slow
 def test_curate_incremental_token_budget_chained_two_day(spark):
     """r15 VERDICT ask #3: the daily loop spends "today's token budget
     on today's best survivors" in ONE pass — curate_incremental grew

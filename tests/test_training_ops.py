@@ -157,16 +157,6 @@ def test_multimodal_plumbing(spark, docs):
     assert feats[1]["checksum"] == sum(payload) % 1_000_003
     assert feats[1]["feature"][0] == float(len(payload))
 
-    # the real (stdlib) decoder path also runs on text assets: crc32
-    # checksum instead of the fake's byte-sum
-    import zlib
-
-    real = {
-        r["asset_id"]: r
-        for r in decode_features(assets, real_decoder=True).collect()
-    }
-    assert real[1]["checksum"] == zlib.crc32(payload) % 1_000_003
-
 
 def test_sample_frames_is_one_to_many(spark, docs):
     documents = docs.withColumn("source", F.lit("unit")).withColumn(
@@ -476,321 +466,6 @@ def test_materialize_scratch_table_one_job_per_cut(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setCheckpointDir(None)
-
-
-def test_stdlib_real_decoder_wav_end_to_end(spark):
-    import io
-    import wave
-    import zlib
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-        decode_features,
-    )
-
-    def make_wav(freq_hz: int, seconds: float, framerate: int = 8000) -> bytes:
-        t = np.arange(int(framerate * seconds)) / framerate
-        pcm = (np.sin(2 * np.pi * freq_hz * t) * 12000).astype("<i2")
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(framerate)
-            w.writeframes(pcm.tobytes())
-        return buf.getvalue()
-
-    wav_a, wav_b = make_wav(440, 0.5), make_wav(220, 0.25)
-    blob = b"not media, just bytes" * 3
-    assets = spark.createDataFrame(
-        [
-            (1, "audio/wav", wav_a, {"n_bytes": len(wav_a), "source": "t"}),
-            (2, "audio/wav", wav_b, {"n_bytes": len(wav_b), "source": "t"}),
-            (3, "application/octet-stream", blob,
-             {"n_bytes": len(blob), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    out = {
-        r["asset_id"]: r
-        for r in decode_features(assets, real_decoder=True).collect()
-    }
-    # WAV really decoded: duration, framerate, channels from the container,
-    # mean |amplitude| from the PCM frames (sine of amp A -> mean 2A/pi)
-    dur, fr, nch, mean_abs = out[1]["feature"]
-    assert (dur, fr, nch) == (0.5, 8000.0, 1.0)
-    assert abs(mean_abs - 12000 * 2 / 3.14159) < 200
-    assert out[2]["feature"][0] == 0.25
-    # opaque binary: crc32 checksum + zlib compressibility
-    assert out[3]["checksum"] == zlib.crc32(blob) % 1_000_003
-    assert 0.0 < out[3]["feature"][1] < 1.0  # repetitive text compresses
-
-    # compressed images / video remain the honest stub: PIL/ffmpeg absent
-    import pytest as _pytest
-
-    with _pytest.raises(
-        NotImplementedError, match="requires a codec library"
-    ):
-        _stdlib_featurize("image/png", b"\x89PNG")
-    with _pytest.raises(NotImplementedError, match="ffmpeg"):
-        _stdlib_featurize("video/mp4", b"\x00\x00\x00 ftypisom")
-
-
-def _make_bmp(
-    pixels_bgr: list[list[tuple[int, int, int]]], top_down: bool = False
-) -> bytes:
-    """Assemble a 24bpp BI_RGB BMP from a row-major pixel grid (stored
-    bottom-up unless top_down, matching the format)."""
-    import struct
-
-    height, width = len(pixels_bgr), len(pixels_bgr[0])
-    row_stride = ((width * 3 + 3) // 4) * 4
-    raster = b""
-    rows = pixels_bgr if top_down else list(reversed(pixels_bgr))
-    for row in rows:
-        raw = b"".join(bytes(px) for px in row)
-        raster += raw.ljust(row_stride, b"\xAA")  # junk padding on purpose
-    hdr_h = -height if top_down else height
-    info = struct.pack("<IiiHHIIiiII", 40, width, hdr_h, 1, 24, 0,
-                       len(raster), 2835, 2835, 0, 0)
-    file_hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(raster), 0, 0, 54)
-    return file_hdr + info + raster
-
-
-def test_stdlib_image_decoders():
-    """BMP and binary-PNM decode natively: dimensions, mean pixel, and a
-    padding-insensitive crc32 — no PIL involved."""
-    import zlib
-
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-    )
-
-    # 2x3 BMP, known bytes: mean over the UNPADDED raster only
-    grid = [
-        [(0, 0, 0), (255, 255, 255), (10, 20, 30)],
-        [(100, 110, 120), (1, 2, 3), (200, 210, 220)],
-    ]
-    flat = [b for row in grid for px in row for b in px]
-    want_mean = sum(flat) / len(flat)
-    checksum, feat = _stdlib_featurize("image/bmp", _make_bmp(grid))
-    assert feat == [3.0, 2.0, 24.0, want_mean]
-
-    # top-down variant: same pixels, same mean, same dimensions
-    _, feat_td = _stdlib_featurize("image/bmp", _make_bmp(grid, top_down=True))
-    assert feat_td[:3] == [3.0, 2.0, 24.0] and feat_td[3] == want_mean
-
-    # P6 PPM with a header comment; checksum is crc32 of the raster
-    raster = bytes(range(2 * 2 * 3))
-    ppm = b"P6\n# a comment\n2 2\n255\n" + raster
-    checksum, feat = _stdlib_featurize("image/x-portable-pixmap", ppm)
-    assert feat == [2.0, 2.0, 3.0, sum(raster) / len(raster)]
-    assert checksum == zlib.crc32(raster) % 1_000_003
-
-    # P5 PGM, dispatched on magic even under a generic media type
-    pgm = b"P5 3 1 255 " + bytes([0, 128, 255])
-    _, feat = _stdlib_featurize("image/anything", pgm)
-    assert feat == [3.0, 1.0, 1.0, (0 + 128 + 255) / 3]
-
-    # malformed payloads fail loud, not wrong
-    with _pytest.raises(ValueError, match="truncated"):
-        _stdlib_featurize("image/bmp", _make_bmp(grid)[:-4])
-    with _pytest.raises(ValueError, match="maxval"):
-        _stdlib_featurize("image/x-portable-pixmap", b"P6 1 1 65535 \x00\x00")
-
-
-def test_stdlib_image_decode_through_spark(spark):
-    """The BMP branch through the real mapInPandas path (not just the inner
-    function): q_multimodal_features' plumbing with real_decoder=True."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        decode_features,
-    )
-
-    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
-    assets = spark.createDataFrame(
-        [(1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    row = decode_features(assets, real_decoder=True).collect()[0]
-    assert row["feature"] == [2.0, 1.0, 24.0, 7.5]
-
-
-def _make_png(rows, color_type, filters, palette=None) -> bytes:
-    """Assemble a real PNG: per-row forward filtering (the encoder side of
-    the spec's five filters, so the decoder's unfilter paths all get
-    exercised), zlib-compressed scanlines, CRC'd chunks."""
-    import struct
-    import zlib
-
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-
-    def px_bytes(px):
-        return bytes([px]) if isinstance(px, int) else bytes(px)
-
-    raw_rows = [b"".join(px_bytes(px) for px in row) for row in rows]
-    bpp, stride = channels, len(raw_rows[0])
-    prev = bytes(stride)
-    scan = b""
-    for raw, f in zip(raw_rows, filters):
-        if f == 0:
-            filt = raw
-        elif f == 1:  # Sub
-            filt = bytes(
-                (raw[x] - (raw[x - bpp] if x >= bpp else 0)) & 0xFF
-                for x in range(stride)
-            )
-        elif f == 2:  # Up
-            filt = bytes((raw[x] - prev[x]) & 0xFF for x in range(stride))
-        elif f == 3:  # Average
-            filt = bytes(
-                (raw[x] - (((raw[x - bpp] if x >= bpp else 0) + prev[x]) >> 1))
-                & 0xFF
-                for x in range(stride)
-            )
-        else:  # Paeth
-            filt = b""
-            for x in range(stride):
-                a = raw[x - bpp] if x >= bpp else 0
-                b_ = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                p = a + b_ - c
-                pa, pb, pc = abs(p - a), abs(p - b_), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b_ if pb <= pc else c)
-                filt += bytes([(raw[x] - pred) & 0xFF])
-        scan += bytes([f]) + filt
-        prev = raw
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", stride // channels, len(rows), 8,
-                       color_type, 0, 0, 0)
-    body = chunk(b"IHDR", ihdr)
-    if palette is not None:
-        body += chunk(b"PLTE", bytes(v for rgb in palette for v in rgb))
-    body += chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
-    return b"\x89PNG\r\n\x1a\n" + body
-
-
-def test_stdlib_png_decoder():
-    """PNG decodes for real — zlib inflate + all five unfilter paths; the
-    fingerprint is over decoded pixels, so two encodings of the same image
-    (different filter choices) hash identically."""
-    import zlib
-
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-    )
-
-    # 3x5 RGB gradient: filters None/Sub/Up on one encoding, Avg/Paeth/Sub
-    # on another — identical decoded raster, identical checksum
-    rows = [
-        [((r * 40 + c * 31) % 256, (r * 7 + c * 11) % 256, (r + c * 90) % 256)
-         for c in range(5)]
-        for r in range(3)
-    ]
-    flat = [v for row in rows for px in row for v in px]
-    want_mean = sum(flat) / len(flat)
-    want_crc = zlib.crc32(bytes(flat)) % 1_000_003
-    enc_a = _make_png(rows, color_type=2, filters=[0, 1, 2])
-    enc_b = _make_png(rows, color_type=2, filters=[3, 4, 1])
-    for enc in (enc_a, enc_b):
-        checksum, feat = _stdlib_featurize("image/png", enc)
-        assert feat == [5.0, 3.0, 3.0, want_mean]
-        assert checksum == want_crc
-    assert enc_a != enc_b  # genuinely different byte streams
-
-    # grayscale with Paeth + RGBA with Average: channel counts flow through
-    gray = [[10, 200, 30], [250, 5, 128]]
-    _, feat = _stdlib_featurize("image/png", _make_png(gray, 0, [4, 4]))
-    assert feat == [3.0, 2.0, 1.0, (10 + 200 + 30 + 250 + 5 + 128) / 6]
-    rgba = [[(1, 2, 3, 255), (9, 8, 7, 0)]]
-    _, feat = _stdlib_featurize("image/png", _make_png(rgba, 6, [3]))
-    assert feat[:3] == [2.0, 1.0, 4.0]
-
-    # palette expands through PLTE before the stats
-    pal = [(255, 0, 0), (0, 255, 0)]
-    png_p = _make_png([[0, 1], [1, 0]], 3, [0, 2], palette=pal)
-    checksum, feat = _stdlib_featurize("image/png", png_p)
-    assert feat == [2.0, 2.0, 3.0, 510 / 6.0]
-    expanded = bytes([255, 0, 0, 0, 255, 0, 0, 255, 0, 255, 0, 0])
-    assert checksum == zlib.crc32(expanded) % 1_000_003
-
-    # malformed/unsupported fail loud (cut reaches into the IDAT data;
-    # a clipped IEND alone is tolerated, as it should be)
-    with _pytest.raises(ValueError, match="truncated"):
-        _stdlib_featurize("image/png", enc_a[:-17])
-    import struct as _struct
-
-    bad_depth = bytearray(_make_png(gray, 0, [0, 0]))
-    bad_depth[24] = 16  # IHDR bit_depth byte
-    bad_depth[29:33] = _struct.pack(
-        ">I", zlib.crc32(bytes(bad_depth[12:29]))
-    )
-    with _pytest.raises(ValueError, match="bit_depth"):
-        _stdlib_featurize("image/png", bytes(bad_depth))
-    # JPEG is codec-bound: no native decoder ships, so even a corrupt
-    # stream is a capability gap (NotImplementedError -> decoder_gap)
-    with _pytest.raises(
-        NotImplementedError, match="requires a codec library"
-    ):
-        _stdlib_featurize("image/jpeg", b"\xff\xd8\xff\xe0 not decodable")
-
-
-def test_png_roundtrip_property():
-    """Encoder(test)→decoder(engine) round-trip under hypothesis: any pixel
-    grid, any per-row filter choice, any supported channel count must
-    decode back to exactly the input pixels — the unfilter math (incl. the
-    sequential Average/Paeth paths) is bit-exact, not approximately right."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _png_decode,
-    )
-
-    @settings(max_examples=30, deadline=None)
-    @given(data=st.data())
-    def check(data):
-        h = data.draw(st.integers(1, 5))
-        w = data.draw(st.integers(1, 5))
-        color_type, ch = data.draw(
-            st.sampled_from([(0, 1), (2, 3), (6, 4)])
-        )
-        px = data.draw(
-            st.lists(
-                st.lists(
-                    st.tuples(*([st.integers(0, 255)] * ch)),
-                    min_size=w, max_size=w,
-                ),
-                min_size=h, max_size=h,
-            )
-        )
-        rows = [[p[0] for p in row] for row in px] if ch == 1 else px
-        filters = data.draw(
-            st.lists(st.integers(0, 4), min_size=h, max_size=h)
-        )
-        decoded, channels = _png_decode(_make_png(rows, color_type, filters))
-        assert channels == ch
-        want = np.array(
-            [[list(p) for p in row] for row in px], dtype=np.uint8
-        )
-        assert np.array_equal(decoded, want)
-
-    check()
 
 
 def test_train_ivf_centroids_rejects_huge_k(spark):
@@ -2290,96 +1965,6 @@ def test_hot_bucket_guard_simhash_star_links(spark):
     assert all(r["id_a"] == 0 and r["hamming"] == 0 for r in pairs)
 
 
-def test_decode_errors_dead_letter_not_raise(spark):
-    """A codec-bound (JPEG, mp4, FLAC, YUV4MPEG2) asset must survive as a
-    flagged row — null features, decode_ok=false, message in `error`,
-    reason `decoder_gap` — instead of killing the job; strict=True
-    restores the raise. None of these formats has a native decoder, so
-    each refuses with NotImplementedError and the row is dead-lettered,
-    never raised."""
-    import pytest as _pytest
-    from pyspark.errors import PythonException
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        decode_features,
-    )
-
-    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
-    jpeg = b"\xff\xd8\xff\xe0 not decodable"
-    # a well-formed one-frame FLAC stream: STREAMINFO (16 samples, 8 kHz,
-    # mono, 16-bit) plus one constant-zero frame
-    flac = bytes.fromhex(
-        "664c6143800000220010001000000000000001f400f00000001070bc8f4b72a8"
-        "6921468bf8e8441dce51fff8700800000f37000000dcda"
-    )
-    # a well-formed 2x2 C420 YUV4MPEG2 stream with one frame
-    y4m = b"YUV4MPEG2 W2 H2 F25:1 C420\nFRAME\n" + bytes(6)
-    assets = spark.createDataFrame(
-        [
-            (1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
-            (2, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"}),
-            (3, "video/mp4", b"\x00\x00\x00 ftyp", {"n_bytes": 8, "source": "t"}),
-            (4, "audio/flac", flac, {"n_bytes": len(flac), "source": "t"}),
-            (5, "video/x-y4m", y4m, {"n_bytes": len(y4m), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-
-    feats = {
-        r["asset_id"]: r
-        for r in decode_features(assets, real_decoder=True).collect()
-    }
-    assert feats[1]["decode_ok"] and feats[1]["error"] is None
-    assert feats[1]["feature"] == [2.0, 1.0, 24.0, 7.5]
-    for bad in (2, 3, 4, 5):
-        assert not feats[bad]["decode_ok"]
-        assert feats[bad]["reason"] == "decoder_gap"
-        assert feats[bad]["checksum"] is None
-        assert feats[bad]["feature"] is None
-        assert "NotImplementedError" in feats[bad]["error"]
-
-    with _pytest.raises(PythonException, match="Error"):
-        decode_features(assets, real_decoder=True, strict=True).collect()
-
-
-def test_paletted_bmp_matches_paletted_png_fingerprint(spark):
-    """Cross-encoding parity: the same image stored as a paletted (8-bpp)
-    BMP and a paletted PNG must produce identical checksum and mean —
-    both normalize through their color tables to the same RGB raster."""
-    import struct
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-    )
-
-    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
-    idx_rows = [[0, 1, 2], [2, 1, 0]]
-
-    # 8bpp BMP: color table of BGRA entries right after the 40-byte info
-    # header, palette-index raster stored bottom-up with row padding
-    table = b"".join(bytes([b_, g, r, 0]) for r, g, b_ in pal)
-    stride = ((3 + 3) // 4) * 4
-    raster = b"".join(
-        bytes(row).ljust(stride, b"\xAA") for row in reversed(idx_rows)
-    )
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, 3, 2, 1, 8, 0, len(raster), 2835, 2835, len(pal), 0
-    )
-    off = 14 + 40 + len(table)
-    bmp = (
-        struct.pack("<2sIHHI", b"BM", off + len(raster), 0, 0, off)
-        + info + table + raster
-    )
-    png = _make_png(idx_rows, 3, [0, 0], palette=pal)
-
-    bmp_crc, bmp_feat = _stdlib_featurize("image/bmp", bmp)
-    png_crc, png_feat = _stdlib_featurize("image/png", png)
-    assert bmp_crc == png_crc
-    assert bmp_feat[3] == png_feat[3]  # identical mean over expanded RGB
-    assert bmp_feat[:2] == png_feat[:2] == [3.0, 2.0]
-
-
 @pytest.mark.slow
 def test_batched_bpe_cuts_rounds_and_stays_valid(spark):
     """Batched BPE learns K pairwise-disjoint merges per Spark round:
@@ -2460,7 +2045,6 @@ def test_image_dhash_perceptual_near_dup(spark):
     with a truncated raster or a malformed header, including a non-space
     byte after maxval) dead-letter."""
     import numpy as np
-    from pyspark.errors import PythonException
 
     from inbev_data_engineering_case_spark.operators.multimodal import (
         _dhash64,
@@ -2502,8 +2086,6 @@ def test_image_dhash_perceptual_near_dup(spark):
         assert hashes[i]["decode_ok"] is False
         assert "malformed PNM header" in hashes[i]["error"]
     assert all(hashes[i]["dhash"] is None for i in (5, 6, 7, 8))
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        image_dhash(assets.filter(F.col("asset_id") == 5), strict=True).collect()
 
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
@@ -2514,77 +2096,6 @@ def test_image_dhash_perceptual_near_dup(spark):
     assert pairs.get((1, 2)) == 0  # resolution-invariant exact match
     assert (1, 3) in pairs and pairs[(1, 3)] <= 6  # edited copy found
     assert not any(4 in p for p in pairs)  # unrelated image stays out
-
-
-def test_curate_corpus_asset_near_dup_gate(spark):
-    """r14 VERDICT ask #2: the asset_near_dup= curation gate drops
-    image near-dup LOSERS in the same pass — composition parity with
-    (a) standalone image_near_dup_keep deciding the survivors and (b)
-    curating only the asset-surviving documents. Text-only documents
-    (no asset row) and undecodable assets are never touched."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_corpus,
-    )
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        image_near_dup_keep,
-    )
-
-    texts = {
-        1: "a completely different tale about the river and the old "
-           "boat that the fisherman kept near the house by the shore",
-        2: "the cats sleep on the warm stones by the garden wall all "
-           "day and the dogs watch them from the porch in the shade",
-        3: "a brand new page about the markets and the traders who "
-           "walk the long road to the city every morning at dawn",
-        4: "short fresh note about the quiet harbor lighthouse and the "
-           "keeper who climbs the spiral stairs at dusk every evening",
-    }
-    docs = spark.createDataFrame(
-        sorted(texts.items()), "doc_id long, text string"
-    )
-
-    rng = np.random.RandomState(11)
-    base = rng.randint(0, 256, size=(16, 18, 3)).astype("uint8")
-    edited = base.copy()
-    edited[0, 0] = [255, 255, 255]
-
-    # doc 2's image near-dups doc 1's (texts are unrelated — the gate
-    # is pixel-space, not text-space); doc 3's asset is undecodable
-    # junk (dead-letter → survives the gate); doc 4 is text-only
-    assets = spark.createDataFrame(
-        [
-            (1, "image/x-portable-pixmap", bytearray(_make_pnm(base))),
-            (2, "image/x-portable-pixmap", bytearray(_make_pnm(edited))),
-            (3, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
-        ],
-        "asset_id long, media_type string, payload binary",
-    )
-
-    gated = sorted(
-        r["doc_id"]
-        for r in curate_corpus(
-            docs, min_quality=0.0,
-            asset_near_dup=assets, asset_bucket_bits=4,
-        ).collect()
-    )
-    assert gated == [1, 3, 4]  # 2's image lost its cluster; 3, 4 kept
-
-    # (a) standalone keep decides the same survivors
-    kept_assets = sorted(
-        r["asset_id"]
-        for r in image_near_dup_keep(assets, bucket_bits=4).collect()
-    )
-    assert kept_assets == [1, 3]
-
-    # (b) identical to curating only the asset-surviving documents
-    survivor_docs = docs.filter(F.col("doc_id") != 2)
-    want = sorted(
-        r["doc_id"]
-        for r in curate_corpus(survivor_docs, min_quality=0.0).collect()
-    )
-    assert gated == want
 
 
 def test_bigram_lm_scores_typical_text_higher(spark):
@@ -2612,412 +2123,6 @@ def test_bigram_lm_scores_typical_text_higher(spark):
         for r in bigram_lm_scores(docs.repartition(7)).collect()
     }
     assert again == {k: v["sum_lp_micro"] for k, v in rows.items()}
-
-
-def test_curate_corpus_perplexity_stage(spark):
-    """min_avg_logprob drops the gibberish doc the cheap filters keep,
-    and default-off leaves curate_corpus output unchanged."""
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_corpus,
-    )
-
-    natural = "the cat sat on the mat and the dog sat on the rug"
-    docs = spark.createDataFrame(
-        [(i, natural + f" extra{i}") for i in range(6)]
-        + [(20, "the zq the xv the jk the wp the lm the qn the aa the bb")],
-        "doc_id long, text string",
-    )
-    base_ids = {
-        r["doc_id"]
-        for r in curate_corpus(
-            docs, languages=("en",), min_quality=0.0, near_dup_threshold=0.9
-        ).collect()
-    }
-    assert 20 in base_ids  # survives lang/quality (stopword-heavy)
-
-    filtered_ids = {
-        r["doc_id"]
-        for r in curate_corpus(
-            docs,
-            languages=("en",),
-            min_quality=0.0,
-            near_dup_threshold=0.9,
-            min_avg_logprob=-2.5,
-        ).collect()
-    }
-    assert 20 not in filtered_ids  # rare bigrams: -2.9 vs -1.55 typical
-    assert filtered_ids  # natural docs survive
-    assert filtered_ids <= base_ids
-
-
-def test_curate_corpus_strip_html_stage(spark):
-    """strip_html=True reduces page markup to prose BEFORE scoring and
-    dedup: an HTML-wrapped copy of a kept doc becomes its exact dup (the
-    markup would otherwise make fingerprints differ), and a markup-heavy
-    junk page is judged on its stripped text, not its tags."""
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_corpus,
-    )
-
-    en = (
-        "the quick brown fox jumps over the lazy dog and it is a fine day "
-        "for that in the sun with a friend of the family"
-    )
-    rows = [
-        (1, en),
-        (2, f"<html><body><p>{en}</p><script>var x=1;</script></body></html>"),
-        # markup-only page: strips to almost nothing -> quality-dropped
-        (3, "<div><span></span></div><script>a=1</script>"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    kept = curate_corpus(
-        docs, min_quality=0.3, near_dup_threshold=0.5, strip_html=True
-    )
-    ids = sorted(r["doc_id"] for r in kept.collect())
-    # doc 2 collapses to an exact dup of doc 1 (min-id survivor wins)
-    assert ids == [1]
-    # the stripping is what makes it EXACT: raw fingerprints differ
-    # (markup in the hash), stripped fingerprints are identical
-    from inbev_data_engineering_case_spark.operators.textops import (
-        fingerprint,
-        html_to_text,
-    )
-
-    fps = docs.select(
-        "doc_id",
-        fingerprint("text").alias("raw_fp"),
-        fingerprint(html_to_text("text")).alias("stripped_fp"),
-    ).collect()
-    by_id = {r["doc_id"]: r for r in fps}
-    assert by_id[1]["raw_fp"] != by_id[2]["raw_fp"]
-    assert by_id[1]["stripped_fp"] == by_id[2]["stripped_fp"]
-
-
-def _make_gif(idx_rows, palette, interlaced=False, animated_tail=False):
-    """Minimal GIF89a encoder for tests: global color table padded to 4
-    entries (min LZW code size 2), raster emitted with a CLEAR code
-    before every pixel code (the classic 'uncompressed GIF' technique —
-    valid LZW, dictionary never grows), optional interlace flag with
-    rows pre-shuffled into pass order, optional second image block to
-    exercise first-frame semantics."""
-    import struct
-
-    h = len(idx_rows)
-    w = len(idx_rows[0])
-    pal = list(palette) + [(0, 0, 0)] * (4 - len(palette))
-    gct = b"".join(bytes(c) for c in pal)
-    header = b"GIF89a" + struct.pack("<HH", w, h) + bytes([0x80 | 0x01, 0, 0])
-    # rows in stream order: interlaced GIFs store pass 1 (rows 0,8,..),
-    # pass 2 (4,12,..), pass 3 (2,6,..), pass 4 (odd rows)
-    rows = idx_rows
-    if interlaced:
-        order = (
-            list(range(0, h, 8)) + list(range(4, h, 8))
-            + list(range(2, h, 4)) + list(range(1, h, 2))
-        )
-        rows = [idx_rows[r] for r in order]
-    min_code, clear, eoi = 2, 4, 5
-    bits, nbits = [], 3  # code size = min_code + 1
-    for px in (p for row in rows for p in row):
-        for code in (clear, px):
-            for b in range(nbits):
-                bits.append((code >> b) & 1)
-    for b in range(nbits):
-        bits.append((eoi >> b) & 1)
-    while len(bits) % 8:
-        bits.append(0)
-    data = bytes(
-        sum(bit << i for i, bit in enumerate(bits[k : k + 8]))
-        for k in range(0, len(bits), 8)
-    )
-    blocks = b"".join(
-        bytes([len(data[i : i + 255])]) + data[i : i + 255]
-        for i in range(0, len(data), 255)
-    )
-    img = (
-        b"\x2C" + struct.pack("<HHHH", 0, 0, w, h)
-        + bytes([0x40 if interlaced else 0])
-        + bytes([min_code]) + blocks + b"\x00"
-    )
-    # a graphic-control extension before the image (block-skip coverage)
-    ext = b"\x21\xF9\x04\x00\x00\x00\x00\x00"
-    tail = img if animated_tail else b""
-    return header + gct + ext + img + tail + b"\x3B"
-
-
-def test_stdlib_gif_decoder_known_answer():
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
-    idx_rows = [[0, 1, 2], [2, 1, 0]]
-    pixels = _gif_decode_pixels(_make_gif(idx_rows, pal))
-    want = np.array([[pal[i] for i in row] for row in idx_rows], np.uint8)
-    assert pixels.shape == (2, 3, 3)
-    assert (pixels == want).all()
-
-
-def test_gif_interlace_and_first_frame():
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(10, 0, 0), (0, 20, 0), (0, 0, 30), (40, 40, 40)]
-    idx_rows = [[r % 4] * 2 for r in range(5)]  # 5 rows -> 4 passes used
-    plain = _gif_decode_pixels(_make_gif(idx_rows, pal))
-    inter = _gif_decode_pixels(_make_gif(idx_rows, pal, interlaced=True))
-    assert (plain == inter).all()  # deinterlace restores row order
-    # animated: first frame decoded, trailer frames ignored
-    anim = _gif_decode_pixels(_make_gif(idx_rows, pal, animated_tail=True))
-    assert (anim == plain).all()
-    want = np.array([[pal[r % 4]] * 2 for r in range(5)], np.uint8)
-    assert (plain == want).all()
-
-
-def test_gif_matches_paletted_png_fingerprint():
-    """Cross-encoding parity, extended to GIF: the same paletted image as
-    GIF and paletted PNG checksums identically over the expanded RGB
-    raster (the encoding-invariance contract of _featurize_bmp)."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-    )
-
-    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
-    idx_rows = [[0, 1, 2], [2, 1, 0]]
-    gif_crc, gif_feat = _stdlib_featurize(
-        "image/gif", _make_gif(idx_rows, pal)
-    )
-    png_crc, png_feat = _stdlib_featurize(
-        "image/png", _make_png(idx_rows, 3, [0, 0], palette=pal)
-    )
-    assert gif_crc == png_crc
-    assert gif_feat[:2] == png_feat[:2] == [3.0, 2.0]
-    assert gif_feat[3] == png_feat[3]
-
-
-def test_gif_corrupt_stream_raises():
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(1, 2, 3)]
-    good = _make_gif([[0, 0], [0, 0]], pal)
-    with pytest.raises(ValueError):
-        _gif_decode_pixels(good[:20])  # truncated mid-stream
-    with pytest.raises(ValueError):
-        _gif_decode_pixels(b"GIF89a" + b"\x00" * 5)  # header truncated
-
-
-def test_gif_lzw_roundtrip_with_real_compression():
-    """The clear-per-pixel fixtures above never grow the LZW dictionary;
-    this encodes rasters with the REAL GIF LZW algorithm (growing
-    dictionary, variable code width, KwK self-reference on repeats) and
-    round-trips them through the decoder."""
-    import random
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_lzw_decode,
-    )
-
-    def lzw_encode(indices, min_code_size):
-        clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-        out_bits = []
-        code_size = min_code_size + 1
-
-        def emit(code):
-            for b in range(code_size):
-                out_bits.append((code >> b) & 1)
-
-        table = {bytes([i]): i for i in range(clear)}
-        next_code = eoi + 1
-        emit(clear)
-        cur = b""
-        for px in indices:
-            nxt = cur + bytes([px])
-            if nxt in table:
-                cur = nxt
-                continue
-            emit(table[cur])
-            table[nxt] = next_code
-            next_code += 1
-            # encoder widens AFTER assigning the code that fills the
-            # current width (mirror of the decoder's bump condition)
-            if next_code == (1 << code_size) + 1 and code_size < 12:
-                code_size += 1
-            cur = bytes([px])
-        if cur:
-            emit(table[cur])
-        emit(eoi)
-        while len(out_bits) % 8:
-            out_bits.append(0)
-        return bytes(
-            sum(bit << i for i, bit in enumerate(out_bits[k : k + 8]))
-            for k in range(0, len(out_bits), 8)
-        )
-
-    rng = random.Random(7)
-    for trial, min_code in [(0, 2), (1, 4), (2, 8)]:
-        n_colors = 1 << min_code
-        # runs of repeats force the KwK case; enough pixels to force
-        # several code-width bumps
-        indices = []
-        while len(indices) < 4000:
-            indices += [rng.randrange(n_colors)] * rng.randint(1, 9)
-        indices = indices[:4000]
-        data = lzw_encode(indices, min_code)
-        got = _gif_lzw_decode(data, min_code, len(indices))
-        assert list(got) == indices, f"trial {trial} mismatch"
-
-
-def test_gif_decoder_matches_pil_when_available():
-    """Cross-implementation check against a REAL encoder: PIL-written
-    GIFs (its LZW, its palette layout) must decode to PIL's own pixel
-    answer. Skips where PIL is absent (this container); runs anywhere it
-    exists."""
-    import io
-
-    import numpy as np
-    import pytest
-
-    image_mod = pytest.importorskip("PIL.Image")
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    rng = np.random.default_rng(11)
-    rgb = rng.integers(0, 255, size=(13, 17, 3), dtype=np.uint8)
-    im = image_mod.fromarray(rgb, "RGB").convert(
-        "P", palette=image_mod.Palette.ADAPTIVE
-    )
-    buf = io.BytesIO()
-    im.save(buf, format="GIF")
-    payload = buf.getvalue()
-    want = np.asarray(im.convert("RGB"))
-    got = _gif_decode_pixels(payload)
-    assert got.shape == want.shape
-    assert (got == want).all()
-
-
-def test_semantic_decontaminate_drops_paraphrase_neighbors(spark):
-    """A corpus vector nearly parallel to a benchmark vector is flagged
-    and its document dropped; orthogonal vectors survive. The n-gram
-    check would miss this entirely (no shared text)."""
-    from inbev_data_engineering_case_spark.operators.decontaminate import (
-        semantic_contamination,
-        semantic_decontaminate,
-    )
-
-    d = 8
-    e = lambda i: [0.0] * i + [1.0] + [0.0] * (d - i - 1)  # noqa: E731
-    bench = spark.createDataFrame(
-        [(900, e(0)), (901, e(1))], "vec_id long, embedding array<double>"
-    )
-    near = [0.999] + [0.001] * (d - 1)  # cosine ~0.9999 to e(0)
-    corpus_emb = spark.createDataFrame(
-        [(1, near), (2, e(4)), (3, e(5))],
-        "vec_id long, embedding array<double>",
-    )
-    pairs = semantic_contamination(corpus_emb, bench, threshold=0.9).collect()
-    assert {(r["corpus_id"], r["bench_id"]) for r in pairs} == {(1, 900)}
-    assert pairs[0]["sim"] > 0.99
-
-    docs = spark.createDataFrame(
-        [(1, "paraphrased eval question"), (2, "clean"), (3, "clean too")],
-        "doc_id long, text string",
-    )
-    kept = semantic_decontaminate(docs, corpus_emb, bench, threshold=0.9)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [2, 3]
-
-
-def test_curate_corpus_semantic_stage(spark):
-    """The optional semantic-decontamination stage inside curate_corpus:
-    a doc whose embedding neighbors an eval vector is dropped even
-    though its TEXT shares nothing with the benchmark."""
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_corpus,
-    )
-
-    en1 = (
-        "the quick brown fox jumps over the lazy dog and it is a fine day "
-        "for that in the sun with a friend of the family"
-    )
-    en2 = (
-        "a completely different english text about the history of bridges "
-        "and the people that built them in the old days of iron and stone"
-    )
-    docs = spark.createDataFrame([(1, en1), (2, en2)], ["doc_id", "text"])
-    d = 8
-    e = lambda i: [0.0] * i + [1.0] + [0.0] * (d - i - 1)  # noqa: E731
-    corpus_emb = spark.createDataFrame(
-        [(1, [0.999] + [0.001] * (d - 1)), (2, e(4))],
-        "vec_id long, embedding array<double>",
-    )
-    bench_emb = spark.createDataFrame(
-        [(900, e(0))], "vec_id long, embedding array<double>"
-    )
-    kept = curate_corpus(
-        docs,
-        min_quality=0.3,
-        near_dup_threshold=0.5,
-        corpus_embeddings=corpus_emb,
-        benchmark_embeddings=bench_emb,
-    )
-    assert sorted(r["doc_id"] for r in kept.collect()) == [2]
-    # guard: benchmark embeddings without the corpus mapping is an error
-    import pytest
-
-    with pytest.raises(ValueError, match="corpus_embeddings"):
-        curate_corpus(docs, benchmark_embeddings=bench_emb)
-
-
-def test_gif_depth_reflects_actual_color_table():
-    """Depth regression: the reported bit depth comes from the color
-    table the frame USED, not the logical-screen packed bits (which are
-    meaningless for local tables / unset global flags)."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _featurize_gif,
-    )
-
-    pal4 = [(1, 2, 3), (4, 5, 6), (7, 8, 9), (10, 11, 12)]
-    _, feat = _featurize_gif(_make_gif([[0, 1], [2, 3]], pal4))
-    assert feat[2] == 2.0  # 4-entry table -> 2-bit indices
-
-
-def test_gif_offset_frame_composes_onto_logical_screen():
-    """A first frame that is a sub-rectangle of the logical screen must
-    compose at its (left, top) offset over the background color — like
-    PIL — so dimensions and checksums stay encoding-invariant."""
-    import struct
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    # 4x3 logical screen, 2x1 frame at (1, 1); bg index 1
-    pal = [(10, 20, 30), (200, 200, 200), (1, 2, 3), (4, 5, 6)]
-    base = _make_gif([[0, 2]], pal)  # reuse the encoder's blocks
-    # patch: header screen 4x3, bg=1; image descriptor left=1, top=1
-    patched = bytearray(base)
-    struct.pack_into("<HH", patched, 6, 4, 3)
-    patched[11] = 1
-    img_off = patched.index(0x2C)
-    struct.pack_into("<HH", patched, img_off + 1, 1, 1)
-    pixels = _gif_decode_pixels(bytes(patched))
-    assert pixels.shape == (3, 4, 3)
-    bg = np.array(pal[1], np.uint8)
-    assert (pixels[0, 0] == bg).all() and (pixels[2, 3] == bg).all()
-    assert (pixels[1, 1] == np.array(pal[0], np.uint8)).all()
-    assert (pixels[1, 2] == np.array(pal[2], np.uint8)).all()
 
 
 def test_weighted_sample_scales_with_weight(spark):
@@ -3048,31 +2153,6 @@ def test_weighted_sample_scales_with_weight(spark):
         r["doc_id"] for r in weighted_sample(df, 300, "w", salt=1).collect()
     ]
     assert other != ids
-
-
-def test_gif_declared_screen_bounds_are_enforced():
-    """A tiny payload declaring a huge logical screen must dead-letter,
-    not allocate a multi-GB canvas; an overhanging frame is corrupt."""
-    import struct
-
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(1, 2, 3)]
-    base = bytearray(_make_gif([[0, 0]], pal))
-    struct.pack_into("<HH", base, 6, 65535, 65535)  # 12.9 GB canvas claim
-    with pytest.raises(ValueError, match="64M-pixel"):
-        _gif_decode_pixels(bytes(base))
-
-    overhang = bytearray(_make_gif([[0, 0]], pal))
-    struct.pack_into("<HH", overhang, 6, 2, 1)  # screen 2x1
-    img_off = overhang.index(0x2C)
-    struct.pack_into("<HH", overhang, img_off + 1, 1, 0)  # frame at left=1
-    with pytest.raises(ValueError, match="overhangs"):
-        _gif_decode_pixels(bytes(overhang))
 
 
 def test_weighted_sample_excludes_null_ids(spark):
@@ -3257,33 +2337,6 @@ def test_curation_drift_flags_injected_collapse(spark):
         for r in out
         if r["stage"] == "input"
     )
-
-
-def test_gif_frame_declared_bounds_checked_before_decode():
-    """The 64M-pixel bound and overhang check run BEFORE the LZW decode
-    and palette expansion — a descriptor-declared huge frame must
-    dead-letter without allocating its raster, and a frame larger than
-    the screen at (0,0) is just as corrupt as a shifted one."""
-    import struct
-
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(1, 2, 3)]
-    huge_frame = bytearray(_make_gif([[0, 0]], pal))
-    struct.pack_into("<HH", huge_frame, 6, 65535, 65535)  # screen claim
-    img_off = huge_frame.index(0x2C)
-    struct.pack_into("<HH", huge_frame, img_off + 5, 65535, 65535)  # frame
-    with pytest.raises(ValueError, match="64M-pixel"):
-        _gif_decode_pixels(bytes(huge_frame))
-
-    origin_overhang = bytearray(_make_gif([[0, 0]], pal))  # frame 2x1
-    struct.pack_into("<HH", origin_overhang, 6, 1, 1)  # screen 1x1
-    with pytest.raises(ValueError, match="overhangs"):
-        _gif_decode_pixels(bytes(origin_overhang))
 
 
 def test_bm25_ranks_rare_term_and_length_norm(spark):
@@ -3659,11 +2712,9 @@ def test_rrf_fuse_order_invariant_and_monotone(spark):
 
 
 def test_cap_per_source_keeps_best_and_presalt_is_identity(spark):
-    """Domain caps: exactly max_docs survive per source, the survivors
-    are the HIGHEST-quality ones with a deterministic boundary, and
-    the presalt two-phase form (the hot-domain bound) returns the
-    IDENTICAL result — phase one's per-salt-bucket cap is a proven
-    superset of the winners."""
+    """Domain caps: exactly max_docs survive per source, and the
+    survivors are the HIGHEST-quality ones with a deterministic
+    boundary."""
     from inbev_data_engineering_case_spark.operators.sample import (
         cap_per_source,
     )
@@ -3704,19 +2755,6 @@ def test_cap_per_source_keeps_best_and_presalt_is_identity(spark):
         for r in sorted(by_src[one_src], key=lambda r: r["src_rank"])
     ]
     assert got_ids == want_ids
-    # presalt two-phase identity, across salt counts
-    key = lambda r: tuple(r)  # noqa: E731
-    direct = sorted(map(key, kept))
-    for s in (1, 3, 16):
-        assert (
-            sorted(
-                map(
-                    key,
-                    cap_per_source(docs, max_docs=5, presalt=s).collect(),
-                )
-            )
-            == direct
-        )
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="max_docs"):
@@ -3950,138 +2988,16 @@ def test_curate_capped_mode_identity_with_standalone_cap(spark):
     slow = sorted(map(key, cap_per_source(sourced, max_docs=3).collect()))
     assert fast == slow
 
-    # presalt forwards through the composition unchanged
-    presalted = sorted(
-        r["doc_id"]
-        for r in curate_corpus(
-            docs, max_docs_per_source=3, cap_presalt=4
-        ).collect()
-    )
-    assert presalted == composed_ids
-
     # a capped source really is capped at 3
     per_src = composed.groupBy("source").count().collect()
     assert per_src and all(r["count"] <= 3 for r in per_src)
 
 
 @pytest.mark.slow
-def test_curate_token_budget_identity_with_standalone_selection(spark):
-    """curate_corpus(token_budget=) composes select_within_budget as
-    the stage after the per-source cap: the composed kept set must be
-    IDENTICAL to running standalone select_within_budget (character
-    cost, pipeline quality) over the unbudgeted curation output, the
-    budget must bind (strictly fewer survivors than unbudgeted, total
-    kept mass within budget), it must stack with the cap (quota first,
-    then spend), and the split assigns on the budgeted set."""
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_corpus,
-    )
-    from inbev_data_engineering_case_spark.operators.sample import (
-        select_within_budget,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text", "source")
-
-    unbudgeted = curate_corpus(docs)
-    total = unbudgeted.agg(
-        F.sum(F.length("text")).alias("t")
-    ).first()["t"]
-    budget = int(total) // 2
-
-    composed = curate_corpus(docs, token_budget=budget)
-    assert composed.columns == unbudgeted.columns
-    composed_rows = composed.collect()
-    composed_ids = sorted(r["doc_id"] for r in composed_rows)
-    standalone_ids = sorted(
-        r["doc_id"]
-        for r in select_within_budget(
-            unbudgeted.withColumn(
-                "_tb_cost", F.length("text").cast("bigint")
-            ),
-            budget,
-            cost_col="_tb_cost",
-            quality_col="quality",
-        ).collect()
-    )
-    assert composed_ids == standalone_ids and composed_ids
-    # the budget binds and is respected
-    assert len(composed_ids) < unbudgeted.count()
-    assert sum(len(r["text"]) for r in composed_rows) <= budget
-
-    # stacks with the cap: quota first, then spend — the budgeted
-    # capped set is the standalone selection over the capped output
-    capped = curate_corpus(docs, max_docs_per_source=3)
-    both = sorted(
-        r["doc_id"]
-        for r in curate_corpus(
-            docs, max_docs_per_source=3, token_budget=budget
-        ).collect()
-    )
-    want_both = sorted(
-        r["doc_id"]
-        for r in select_within_budget(
-            capped.withColumn(
-                "_tb_cost", F.length("text").cast("bigint")
-            ),
-            budget,
-            cost_col="_tb_cost",
-            quality_col="quality",
-        ).collect()
-    )
-    assert both == want_both
-    # the cap's quota still holds inside the composed run
-    assert set(both) <= {r["doc_id"] for r in capped.collect()}
-
-    # split composes after the budget: same kept ids, split column on
-    split_out = curate_corpus(
-        docs,
-        token_budget=budget,
-        split_weights={"train": 0.9, "val": 0.1},
-    )
-    assert "split" in split_out.columns
-    assert (
-        sorted(r["doc_id"] for r in split_out.collect()) == composed_ids
-    )
-
-    # the DICT form spends per stratum, keyed by source (carried
-    # through the scoring projection like the cap stage's): identical
-    # to the standalone by-stratum selection over the unbudgeted
-    # sourced output, and unbudgeted sources are excluded
-    from inbev_data_engineering_case_spark.operators.sample import (
-        select_within_budget_by_stratum,
-    )
-
-    srcs = sorted(
-        r["source"] for r in docs.select("source").distinct().collect()
-    )
-    per_src = {srcs[0]: budget // 4, srcs[1]: budget // 8}
-    strat_out = curate_corpus(docs, token_budget=per_src)
-    assert "source" in strat_out.columns
-    sourced = curate_corpus(docs, max_docs_per_source=10**9)  # carry source
-    want_strat = sorted(
-        r["doc_id"]
-        for r in select_within_budget_by_stratum(
-            sourced.withColumn(
-                "_tb_cost", F.length("text").cast("bigint")
-            ),
-            "source",
-            per_src,
-            cost_col="_tb_cost",
-            quality_col="quality",
-        ).collect()
-    )
-    got_strat = sorted(r["doc_id"] for r in strat_out.collect())
-    assert got_strat == want_strat and got_strat
-    assert {r["source"] for r in strat_out.collect()} <= set(per_src)
-
-
-@pytest.mark.slow
 def test_curate_corpus_bloom_prefilter_identity(spark):
-    """bloom_prefilter_bits routes the three id-keyed keep-joins (LM
-    keep list, exact-dedup survivors, cap winners) through the
-    Bloom-prefiltered exact semi join AND the near-dedup drop-join
+    """bloom_prefilter_bits routes the id-keyed keep-joins (exact-dedup
+    survivors, cap winners) through the Bloom-prefiltered exact semi
+    join AND the near-dedup drop-join
     through the prefiltered anti join — the kept rows must be
     HASH-IDENTICAL to the plain pipeline at any bit count, including a
     deliberately tiny (high-fp) filter: false positives die in the
@@ -4100,8 +3016,7 @@ def test_curate_corpus_bloom_prefilter_identity(spark):
     def frame(bits):
         return curate_corpus(
             docs,
-            min_avg_logprob=-12.0,  # exercises the LM keep-join too
-            max_docs_per_source=3,  # and the cap winners join
+            max_docs_per_source=3,  # exercises the cap winners join
             bloom_prefilter_bits=bits,
         )
 
@@ -4184,70 +3099,6 @@ def test_bow_classifier_learns_and_guards(spark):
         score_bow_classifier(
             empty, model.filter(F.col("bucket") >= 0)
         )
-
-
-@pytest.mark.slow
-def test_curate_incremental_classifier_gate(spark):
-    """curate_incremental's learned quality gate scores only the
-    DELTA's eligible docs against the stored model: the gated kept
-    set is a subset of the ungated one, every gated survivor clears
-    the threshold, and the gate demonstrably bites."""
-    from inbev_data_engineering_case_spark.operators.classify import (
-        score_bow_classifier,
-        train_bow_classifier,
-    )
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_incremental,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        exact_dedup,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    model = train_bow_classifier(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text", (F.col("lang") == "en").alias("label")),
-        n_buckets=1 << 14,
-    )
-    old = docs.filter(F.col("doc_id") < 100)
-    new = old.unionByName(
-        docs.filter(F.col("doc_id") >= 100).select(
-            (F.col("doc_id") + 700000).alias("doc_id"), "text"
-        )
-    )
-    sigs = minhash_signatures(old, "text", "doc_id")
-    fps = exact_dedup(old, "text", "doc_id")
-    thresh = -8_000_000
-
-    plain = {
-        r["doc_id"]
-        for r in curate_incremental(old, new, sigs, fps).collect()
-    }
-    gated = {
-        r["doc_id"]
-        for r in curate_incremental(
-            old, new, sigs, fps,
-            classifier_model=model, min_score_micro=thresh,
-        ).collect()
-    }
-    assert gated and gated < plain  # bites, and strictly a subset
-    kept_scores = {
-        r["doc_id"]: r["score_micro"]
-        for r in score_bow_classifier(
-            new.join(
-                spark.createDataFrame(
-                    [(i,) for i in gated], "doc_id long"
-                ),
-                "doc_id",
-                "left_semi",
-            ),
-            model,
-        ).collect()
-    }
-    assert all(s >= thresh for s in kept_scores.values())
 
 
 def test_bow_classifier_incremental_counts_parity(spark):
@@ -4563,48 +3414,6 @@ def test_auto_bloom_bits_gates(spark):
         assert got_semi == want_semi
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-@pytest.mark.slow
-def test_curate_incremental_bloom_drop_identity(spark):
-    """curate_incremental's final near-dup drop join accepts the same
-    prefilter family: forced bits must be row-identical to the plain
-    pipeline (the q_curate_bloom discipline, delta form)."""
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.operators.curate import (
-        curate_incremental,
-    )
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        exact_dedup,
-        minhash_signatures,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    old = docs.filter(F.col("doc_id") < 200)
-    new = old.unionByName(
-        docs.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 500000).alias("doc_id"),
-            F.concat("text", F.lit(" tail")).alias("text"),
-        )
-    )
-    sigs = minhash_signatures(old, "text", "doc_id")
-    fps = exact_dedup(old, "text", "doc_id")
-
-    def run(bits):
-        return sorted(
-            tuple(r)
-            for r in curate_incremental(
-                old, new, sigs, fps, bloom_prefilter_bits=bits
-            ).collect()
-        )
-
-    plain = run(None)
-    assert plain
-    assert run(1 << 16) == plain
-    assert run("auto") == plain
 
 
 def test_containment_portable_false_same_pairs(spark):
