@@ -27,11 +27,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from inbev_data_engineering_case_spark.sources.readers import (
-    read_parquet,
-    write_parquet,
-)
-
 SNAPSHOT_PREFIX = "brewery_data"
 SUCCESS_MARKER = "_SUCCESS"
 
@@ -116,10 +111,9 @@ def snapshot_as_of(
     ``snapshot_path``); same ``_SUCCESS``/data gates as
     ``latest_snapshot`` (one shared walk, ``_resolve_snapshot``), so an
     uncommitted write can never be selected by a historical read either.
-    With ``zorder_compact``'s rewrites this is the poor-man's Delta time
-    travel: reproduce any day's gold numbers, or pin a training run's
-    input to the snapshot it started from while the daily pipeline keeps
-    publishing."""
+    This is the poor-man's Delta time travel: reproduce any day's gold
+    numbers, or pin a training run's input to the snapshot it started
+    from while the daily pipeline keeps publishing."""
     path = _resolve_snapshot(
         base_dir,
         prefix,
@@ -336,33 +330,6 @@ def commit_snapshot_with_retry(
     )
 
 
-def _link_or_copy(src: str, dst: str) -> None:
-    """Hard-link ``src`` to ``dst``, falling back to a byte copy on
-    capability errors. Filesystems report missing hard-link support
-    with a zoo of errnos (EPERM, ENOTSUP, EXDEV, but also EINVAL on
-    FAT-backed mounts and ENOSYS on some SMB/NFS exports), so the
-    fallback DENYLISTS the errnos that always mean a caller bug
-    instead of allowlisting capability ones: EEXIST is a double-staged
-    destination and ENOENT/ENOTDIR/EISDIR are path mistakes — those
-    stay loud failures rather than a silent copy-over; everything
-    else degrades to copy2, so ``delete_rows``' staged rewrite works
-    anywhere the rename protocol does, just without zero-byte reuse."""
-    import errno
-    import shutil
-
-    try:
-        os.link(src, dst)
-    except OSError as e:
-        if e.errno in (
-            errno.EEXIST,
-            errno.ENOENT,
-            errno.ENOTDIR,
-            errno.EISDIR,
-        ):
-            raise
-        shutil.copy2(src, dst)
-
-
 def prune_snapshots(base_dir: str, prefix: str, keep: int) -> None:
     """Drop all but the newest ``keep`` committed snapshots — bounds
     disk growth across repeated rebuilds of a derived artifact.
@@ -416,61 +383,6 @@ def write_layer(
         open(marker, "w").close()
 
 
-def dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes under a path via the Hadoop FileSystem API — works for
-    any scheme Spark can read (file://, hdfs://, s3a://), no driver-side
-    os.walk that would break off-local-disk."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.getContentSummary(jpath).getLength()
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files; returns the file
-    count. The operational fix for the 100 TB failure mode streaming and
-    per-partition sinks create — millions of KB-sized files whose
-    open/list overhead dwarfs the scan (every NameNode/S3-LIST call is a
-    file, every task starts with a footer read).
-
-    With ``sort_cols``, rows are range-partitioned and sorted within each
-    output file on those columns — parquet then records tight min/max
-    stats per row group, so later range predicates on the sort key prune
-    whole files (poor-man's clustering; same intent as Delta OPTIMIZE
-    ZORDER on one dimension).
-
-    ``dst`` must differ from ``src``: overwrite-in-place would delete the
-    input mid-read. Swap via the snapshot/latest_snapshot contract."""
-    import math
-
-    def norm(p: str) -> str:
-        # abspath would mangle URI schemes (s3a://...); normalize local
-        # paths only, trim trailing slashes on the rest
-        return p.rstrip("/") if "://" in p else os.path.abspath(p)
-
-    if norm(dst) == norm(src):
-        raise ValueError("compact_parquet: dst must differ from src")
-    n_files = max(
-        1, math.ceil(dir_bytes(spark, src) / target_file_bytes)
-    )
-    df = read_parquet(spark, src)
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.repartition(n_files)
-    write_parquet(out, dst, "overwrite")
-    return n_files
-
-
 def add_zorder_key(
     df: DataFrame,
     dims: list[str],
@@ -504,37 +416,6 @@ def add_zorder_key(
         .withColumn(key_col, bit_interleave(buckets, bits))
         .drop(*drop)
     )
-
-
-def zorder_compact(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    dims: list[str],
-    bits: int = 16,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Multi-dimensional clustering rewrite (the intent of Delta
-    OPTIMIZE ZORDER): range-partition and sort the table by its Morton
-    key, so parquet min/max stats stay tight on EVERY interleaved
-    dimension and a selective predicate on any of them prunes whole
-    files — ``compact_parquet``'s single-key clustering covers one
-    dimension; this covers d of them at ~2^d coarser granularity per
-    dim. Returns the output file count."""
-    import math
-
-    if os.path.abspath(dst) == os.path.abspath(src):
-        raise ValueError("zorder_compact: dst must differ from src")
-    n_files = max(1, math.ceil(dir_bytes(spark, src) / target_file_bytes))
-    df = add_zorder_key(read_parquet(spark, src), dims, bits)
-    write_parquet(
-        df.repartitionByRange(n_files, "zkey")
-        .sortWithinPartitions("zkey")
-        .drop("zkey"),
-        dst,
-        "overwrite",
-    )
-    return n_files
 
 
 def snapshot_diff(
@@ -588,136 +469,3 @@ def publish_view(spark: SparkSession, df: DataFrame, name: str) -> list[str]:
     collected without a Spark job; ``listTables`` runs jobs to collect it."""
     df.createOrReplaceGlobalTempView(name)
     return [r.tableName for r in spark.sql("SHOW TABLES IN global_temp").collect()]
-
-
-def delete_rows(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    key_col: str,
-    keys: list,
-) -> dict:
-    """Surgical (GDPR-style) key deletion: publish a new snapshot in
-    which only the files that CAN contain a target key are rewritten —
-    every other file is hard-linked (fallback: copied) byte-identical.
-
-    At 100 TB this is the difference between a full-table rewrite and
-    touching a handful of files: each parquet footer's min/max stats for
-    ``key_col`` are checked against the sorted key list (files without
-    stats are conservatively rewritten), so on a table clustered by the
-    key (``compact_parquet(sort_cols=...)`` / ``zorder_compact``) a
-    deletion request for k users rewrites O(k) files. The rewrite path
-    itself is one Spark filter job over just the affected files; the
-    output lands in ``dst`` next to the linked files and gets a
-    ``_SUCCESS`` marker, so ``latest_snapshot`` / ``snapshot_as_of``
-    publish-gating applies unchanged (the source snapshot stays intact
-    for time travel — deletes COMPACT history only when old snapshots
-    are retired).
-
-    Returns ``{"files_total", "files_rewritten", "rows_deleted"}``.
-
-    Replay-safe: the snapshot is assembled in a scratch directory and
-    published with one atomic rename — a retried job after a mid-run
-    crash finds either no ``dst`` (and rebuilds from scratch; stale
-    scratch dirs are reaped first) or the complete published snapshot
-    (and fails fast on the rename instead of appending duplicates).
-    """
-    import bisect
-    import glob
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    # validate the request before ANY filesystem work: an empty key list
-    # would reach .isin() with zero arguments (analysis error after the
-    # scratch dir exists), and a None key would make sorted() raise on
-    # the mixed-type compare — and can never match anyway (NULL-keyed
-    # rows are explicitly preserved below)
-    keys = list(keys)
-    if not keys:
-        raise ValueError("delete_rows: keys is empty — nothing to delete")
-    if any(k is None for k in keys):
-        raise ValueError(
-            "delete_rows: keys contains None — NULL keys never match a "
-            "deletion request (NULL-keyed rows are preserved); drop them "
-            "from the request"
-        )
-
-    # a trailing slash would break the atomic rename publish (ENOENT on
-    # Linux for a nonexistent "dir/" rename target)
-    dst = dst.rstrip("/")
-    if os.path.abspath(dst) == os.path.abspath(src):
-        raise ValueError("delete_rows: dst must differ from src")
-    if os.path.exists(dst):
-        raise FileExistsError(
-            f"delete_rows: {dst} already exists — snapshots are immutable "
-            "(a completed run published it; point a retry at a new dst or "
-            "remove the old snapshot explicitly)"
-        )
-    files = sorted(glob.glob(os.path.join(src, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {src}")
-    key_list = sorted(set(keys))
-    file_rows: dict[str, int] = {}
-
-    def may_contain(path: str) -> bool:
-        md = pq.ParquetFile(path).metadata
-        file_rows[path] = md.num_rows  # cache: no second footer read
-        for rg in range(md.num_row_groups):
-            group = md.row_group(rg)
-            stats = None
-            for ci in range(group.num_columns):
-                col = group.column(ci)
-                if col.path_in_schema == key_col:
-                    stats = col.statistics
-                    break
-            if stats is None or not stats.has_min_max:
-                return True  # no stats -> must assume it matches
-            lo, hi = stats.min, stats.max
-            i = bisect.bisect_left(key_list, lo)
-            if i < len(key_list) and key_list[i] <= hi:
-                return True
-        return False
-
-    touched = [f for f in files if may_contain(f)]
-    touched_set = set(touched)
-    untouched = [f for f in files if f not in touched_set]
-
-    # build in a scratch dir; publish with one atomic rename at the end
-    building = dst + "._building"
-    shutil.rmtree(building, ignore_errors=True)  # reap a crashed attempt
-    os.makedirs(building)
-    for f in untouched:
-        _link_or_copy(f, os.path.join(building, os.path.basename(f)))
-
-    rows_deleted = 0
-    if touched:
-        before = sum(file_rows[f] for f in touched)
-        # NULL-safe: ~isin(...) is NULL (dropped by filter) for NULL
-        # keys, which would silently delete every anonymous row in a
-        # rewritten file — keep NULL-keyed rows explicitly
-        kept = read_parquet(spark, *touched).filter(
-            ~F.col(key_col).isin(*key_list) | F.col(key_col).isNull()
-        )
-        tmp = dst + "._delete_tmp"
-        kept.write.mode("overwrite").parquet(tmp)
-        after = 0
-        for i, f in enumerate(
-            sorted(glob.glob(os.path.join(tmp, "*.parquet")))
-        ):
-            after += pq.ParquetFile(f).metadata.num_rows
-            os.replace(
-                f,
-                os.path.join(
-                    building, f"rewrite-{i:05d}-{os.path.basename(f)}"
-                ),
-            )
-        shutil.rmtree(tmp, ignore_errors=True)
-        rows_deleted = before - after
-    open(os.path.join(building, SUCCESS_MARKER), "w").close()
-    os.rename(building, dst)  # atomic publish
-    return {
-        "files_total": len(files),
-        "files_rewritten": len(touched),
-        "rows_deleted": rows_deleted,
-    }

@@ -226,7 +226,7 @@ def curate_corpus(
     but near-dup twins a flagged document shadowed in dedup are
     dropped with their representative (they are 1-hop contaminated by
     construction — the halo at >= 1 makes that principled). Equals the
-    standalone ``decontaminate(halo_hops=..., pair_edges=...)`` chain
+    composed ``contamination_report`` → ``graph.multi_source_bfs`` chain
     over the same graph (parity-tested).
 
     ``bloom_prefilter_bits="auto"`` gates each join on plan-stats
@@ -507,7 +507,7 @@ def curate_incremental(
     id_col: str = "doc_id",
     stored_components: DataFrame | None = None,
     artifacts_out: dict | None = None,
-    token_budget: int | dict[str, int] | None = None,
+    token_budget: dict[str, int] | None = None,
     source_col: str = "source",
 ) -> DataFrame:
     """The composed daily-crawl pipeline: diff a new snapshot against the
@@ -520,11 +520,10 @@ def curate_incremental(
 
     ``token_budget`` (default None = off) is the spend stage applied to
     TODAY'S delta: after every dedup drop, the surviving delta spends
-    the day's budget on its best rows — an int spends globally
-    (``sample.select_within_budget``), a dict spends per
-    ``source_col`` stratum (``select_within_budget_by_stratum``, exact
-    int64 boundary discipline, no global sort), with ``source_col``
-    carried through the scoring projection only when needed. The cost
+    each ``source_col`` stratum's budget on its best rows
+    (``sample.select_within_budget_by_stratum``, exact int64 boundary
+    discipline, no global sort), with ``source_col`` carried through the
+    scoring projection only when a budget is set. The cost
     is the survivors' in-row character mass — never a second corpus
     scan. Spend is the LAST stage, so a daily loop caps "today's
     emission" in one pass (identity-tested against the standalone
@@ -607,30 +606,25 @@ def curate_incremental(
         fingerprint,
     )
 
-    # a dict budget spends per source stratum — carry source_col
-    # through the projection chain only then (an int budget never pays
-    # the column)
-    needs_source = isinstance(token_budget, dict)
-    if needs_source and source_col not in new_snapshot.columns:
+    # the budget spends per source stratum — carry source_col through
+    # the projection chain only then
+    extra_cols = () if token_budget is None else (source_col,)
+    if extra_cols and source_col not in new_snapshot.columns:
         raise ValueError(
             f"curate_incremental: token_budget is per-stratum but the"
             f" new snapshot has no {source_col!r} column — pass"
-            " source_col or use an int (global) budget"
+            " source_col"
         )
     changed = snapshot_diff(
         old_snapshot.select(id_col, text_col),
         new_snapshot.select(id_col, text_col),
         key_cols=[id_col],
     ).filter(F.col("change") != "delete")
-    delta_cols = [id_col, text_col] + ([source_col] if needs_source else [])
-    delta = new_snapshot.select(*delta_cols).join(
+    delta = new_snapshot.select(id_col, text_col, *extra_cols).join(
         changed.select(id_col), on=id_col, how="left_semi"
     )
 
-    scored = score_documents(
-        delta, text_col, id_col,
-        extra_cols=((source_col,) if needs_source else ()),
-    )
+    scored = score_documents(delta, text_col, id_col, extra_cols=extra_cols)
     eligible = materialize(
         scored.filter(
             F.col("lang").isin(*languages)
@@ -706,7 +700,6 @@ def curate_incremental(
     kept = eligible.join(drop, on=id_col, how="left_anti")
     if token_budget is not None:
         from inbev_data_engineering_case_spark.operators.sample import (
-            select_within_budget,
             select_within_budget_by_stratum,
         )
 
@@ -716,23 +709,14 @@ def curate_incremental(
         costed = kept.withColumn(
             "_tb_cost", F.length(text_col).cast("bigint")
         )
-        if needs_source:
-            kept = select_within_budget_by_stratum(
-                costed,
-                source_col,
-                token_budget,
-                cost_col="_tb_cost",
-                quality_col="quality",
-                id_col=id_col,
-            ).drop("_tb_cost")
-        else:
-            kept = select_within_budget(
-                costed,
-                token_budget,
-                cost_col="_tb_cost",
-                quality_col="quality",
-                id_col=id_col,
-            ).drop("_tb_cost")
+        kept = select_within_budget_by_stratum(
+            costed,
+            source_col,
+            token_budget,
+            cost_col="_tb_cost",
+            quality_col="quality",
+            id_col=id_col,
+        ).drop("_tb_cost")
     return kept
 
 

@@ -214,50 +214,15 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     portable: bool = True,
-    halo_hops: int | None = None,
-    pair_edges: DataFrame | None = None,
 ) -> DataFrame:
     """The corpus with contaminated documents removed: left-anti join
     against the contamination report. The report is tiny (flagged docs
     only), so the anti join broadcasts and the corpus passes through
-    without a shuffle.
-
-    ``halo_hops`` (default None = off) extends the drop set
-    TRANSITIVELY: the direct n-gram flags seed a multi-source BFS over
-    ``pair_edges`` (a near-dup pair graph, first two columns = the
-    undirected edge endpoints — ``dedup.minhash_dedup_pairs`` output
-    works as-is), and every document within ``halo_hops`` near-dup
-    hops of a flagged one is dropped too — the guard a direct overlap
-    check misses: a paraphrase of a contaminated document shares no
-    8-gram with the benchmark but sits one pair-edge away from a
-    document that does. Scale shape: the BFS frontier is
-    contamination-neighborhood-sized (``graph.multi_source_bfs`` —
-    one frontier-adjacency equi-join per hop), and the final anti join
-    still broadcasts the halo-extended flag set. Inside
-    ``curate_corpus`` the pair graph is the pipeline's OWN (one pairs
-    computation); standalone callers pass their pair table here."""
+    without a shuffle. ``curate_corpus(halo_hops=...)`` extends the drop
+    set transitively over the pipeline's own near-dup pair graph."""
     flagged = contamination_report(
         documents, benchmark, n, id_col, text_col, portable
     ).select(id_col)
-    if halo_hops is not None:
-        if pair_edges is None:
-            raise ValueError(
-                "decontaminate: halo_hops requires pair_edges (a"
-                " near-dup pair graph to walk — e.g."
-                " dedup.minhash_dedup_pairs output)"
-            )
-        from inbev_data_engineering_case_spark.operators.graph import (
-            multi_source_bfs,
-        )
-
-        src_c, dst_c = pair_edges.columns[:2]
-        flagged = multi_source_bfs(
-            pair_edges,
-            flagged,
-            max_hops=halo_hops,
-            src_col=src_c,
-            dst_col=dst_c,
-        ).select(F.col("node").alias(id_col))
     return documents.join(F.broadcast(flagged), id_col, "left_anti")
 
 

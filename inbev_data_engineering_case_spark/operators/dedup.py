@@ -17,15 +17,16 @@ Scale design (the point of each implementation):
   (huge LSH buckets → the join degenerates toward all-pairs), while word
   shingles keep the random-pair Jaccard near zero. One md5 per shingle,
   then k affine mixes, instead of k md5 passes over every shingle.
-- **SimHash** (``simhash``): one 60-bit signature per document via bitwise
-  majority vote over token hashes; near-dup test is popcount(XOR) ≤ d.
-  Pure per-row compute, no shuffle; candidate pairing buckets on the high
-  bits so the self-join never goes all-pairs. 60 bits (not 64) because the
-  portable hash family is 15 hex nibbles — the widest value that parses as
-  a signed BIGINT in every oracle engine — so bits 60-63 of any token hash
-  are always zero and could never vote; 60 is the full usable width, and
-  keeping signatures below 2^60 also keeps every shift/sum sign-free in
-  both engines (DuckDB raises on ``1::BIGINT << 63``).
+- **SimHash** (``simhash_from_hashes``): one 60-bit signature per document
+  via bitwise majority vote over token hashes; near-dup test is
+  popcount(XOR) ≤ d. Pure per-row compute, no shuffle; candidate pairing
+  buckets on the high bits so the self-join never goes all-pairs. 60 bits
+  (not 64) because the portable hash family is 15 hex nibbles — the widest
+  value that parses as a signed BIGINT in every oracle engine — so bits
+  60-63 of any token hash are always zero and could never vote; 60 is the
+  full usable width, and keeping signatures below 2^60 also keeps every
+  shift/sum sign-free in both engines (DuckDB raises on
+  ``1::BIGINT << 63``).
 - **n-gram Jaccard** (``jaccard_similarity``): exact set similarity used to
   *verify* LSH candidates (cheap, because candidates are few).
 
@@ -143,20 +144,19 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
 
 
 def _split_hot_buckets(
-    rows: DataFrame,
-    keys: list[str],
-    max_bucket_size: int,
+    rows: DataFrame, keys: list[str]
 ) -> tuple[DataFrame, DataFrame | None]:
-    """Split bucketed rows into (cold, hot) by per-bucket row count;
-    ``hot`` is None on the (common) empty fast path so callers keep the
-    exact unguarded plan.
+    """Split bucketed rows into (cold, hot) by per-bucket row count
+    against ``DEFAULT_MAX_BUCKET_SIZE`` (read per call); ``hot`` is None
+    on the (common) empty fast path so callers keep the exact unguarded
+    plan.
 
     The count is a groupBy with map-side partial aggregation (the exchange
     carries one row per distinct bucket per map task, never the data), and
     only buckets ABOVE the cap survive the filter — by construction at most
-    ``total_rows / max_bucket_size`` of them, so the key table is tiny and
-    AQE broadcasts the flagging join: the data rows themselves are never
-    shuffled to be classified.
+    ``total_rows / DEFAULT_MAX_BUCKET_SIZE`` of them, so the key table is
+    tiny and AQE broadcasts the flagging join: the data rows themselves
+    are never shuffled to be classified.
 
     Hot-bucket handling downstream is **star-linking**: every member pairs
     with the bucket's min-id representative only (n-1 pairs instead of
@@ -186,7 +186,7 @@ def _split_hot_buckets(
     counts = (
         rows.groupBy(*keys)
         .agg(F.count("*").alias("_bucket_n"))
-        .filter(F.col("_bucket_n") > max_bucket_size)
+        .filter(F.col("_bucket_n") > DEFAULT_MAX_BUCKET_SIZE)
     )
     if counts.isEmpty():
         return rows, None
@@ -328,11 +328,7 @@ def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
     threshold: float = 0.5,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded candidates →
     signature-similarity filter ≥ threshold.
@@ -342,7 +338,8 @@ def minhash_dedup_pairs(
     once and the similarity needs no join back onto the signature table —
     the naive compose (band join, then ``signature_similarity``)
     evaluates signatures three times. The shuffle key is still the band
-    key; each row just carries ``num_hashes`` extra longs (~64 bytes).
+    key; each row just carries ``DEFAULT_NUM_HASHES`` extra longs (~64
+    bytes).
 
     Similarity is computed and thresholded BEFORE the pair-dedup
     ``distinct``: the estimate is a pure function of the pair, so the
@@ -351,24 +348,27 @@ def minhash_dedup_pairs(
     sub-threshold candidates never enter that shuffle at all — at 100 TB
     the band join's output is the biggest intermediate in the pipeline.
 
-    ``max_bucket_size`` is the hot-bucket guard (see ``_split_hot_buckets``):
-    band buckets above the cap star-link to their min-id representative
+    The hot-bucket guard (``_split_hot_buckets``): band buckets above
+    ``DEFAULT_MAX_BUCKET_SIZE`` star-link to their min-id representative
     instead of all-pairs joining, bounding any single bucket's cost to
-    linear. Star pairs pass the SAME signature-similarity threshold. None
-    disables the guard (exact parity with the unguarded pipeline).
+    linear. Star pairs pass the SAME signature-similarity threshold.
 
     The signature table is shared between the self-join's sides through
     ``session.materialize``."""
     sigs = materialize(
         minhash_signatures(
-            _ensure_parallelism(df), text_col, id_col, num_hashes, shingle_words
+            _ensure_parallelism(df),
+            text_col,
+            id_col,
+            DEFAULT_NUM_HASHES,
+            DEFAULT_SHINGLE_WORDS,
         ),
         eager=False,
     )
     bands = sigs.select(
         "id",
         "sig",
-        F.posexplode(_band_keys("sig", band_size)).alias(
+        F.posexplode(_band_keys("sig", DEFAULT_BAND_SIZE)).alias(
             "band_idx", "band_key"
         ),
     )
@@ -383,12 +383,7 @@ def minhash_dedup_pairs(
             f" eq -> eq)) / size({sig_a})"
         )
 
-    if max_bucket_size is not None:
-        cold, hot = _split_hot_buckets(
-            bands, ["band_idx", "band_key"], max_bucket_size,
-        )
-    else:
-        cold, hot = bands, None
+    cold, hot = _split_hot_buckets(bands, ["band_idx", "band_key"])
     a, b = cold.alias("a"), cold.alias("b")
     pairs = a.join(
         b,
@@ -519,15 +514,6 @@ def simhash_from_hashes(hashes: Column | str, bits: int = 60) -> Column:
             F.element_at(votes, b + 1) > 0, F.lit(1 << b).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return out
-
-
-def simhash(text: Column | str, bits: int = 60) -> Column:
-    """SimHash signature of a text column (see ``simhash_from_hashes``).
-    Prefer the two-step form (project ``token_hashes`` first) in pipelines —
-    as a single inline expression the `votes` subtree references the token
-    hashing once, so this is safe, but the two-step form keeps the md5 work
-    visible and shareable."""
-    return simhash_from_hashes(token_hashes(text), bits)
 
 
 def dedup_components_with_stats(
@@ -835,7 +821,6 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probes: int = 1,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Embedding-cosine near-dup: (id_a, id_b, sim) for same-sign-LSH-bucket
     pairs with cosine ≥ threshold. The bucket equi-join keeps the pair space
@@ -849,7 +834,7 @@ def embedding_near_dup_pairs(
     (a near-zero hyperplane dot flips a bit) is almost surely caught by
     another.
 
-    ``max_bucket_size`` is the hot-bucket guard (``_split_hot_buckets``):
+    The hot-bucket guard (``_split_hot_buckets``):
     embedding collapse (many identical vectors — e.g. an encoder's output
     for empty/boilerplate inputs) concentrates one bucket; above the cap
     the bucket star-links to its min-id representative with the same
@@ -877,12 +862,7 @@ def embedding_near_dup_pairs(
             ),
             eager=False,
         )
-        if max_bucket_size is not None:
-            cold, hot = _split_hot_buckets(
-                sigs, ["bucket"], max_bucket_size
-            )
-        else:
-            cold, hot = sigs, None
+        cold, hot = _split_hot_buckets(sigs, ["bucket"])
         a, b = cold.alias("a"), cold.alias("b")
         sim = F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
         probe = a.join(
@@ -1064,7 +1044,6 @@ def incremental_embedding_near_dup_normalized(
     n_probes: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Daily-crawl embedding near-dup — the delta form of
     ``embedding_near_dup_pairs``: only the NEW vectors hash; the
@@ -1125,12 +1104,7 @@ def incremental_embedding_near_dup_normalized(
             ),
             eager=False,
         )
-        if max_bucket_size is not None:
-            cold, hot = _split_hot_buckets(
-                rows, ["bucket"], max_bucket_size
-            )
-        else:
-            cold, hot = rows, None
+        cold, hot = _split_hot_buckets(rows, ["bucket"])
         new_cold = cold.join(new_ids, "id", "left_semi")
         stored_cold = cold.join(new_ids, "id", "left_anti")
         pair_cols = [
@@ -1188,7 +1162,6 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     bits: int = 60,
     bucket_bits: int = 8,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: bucket on the top ``bucket_bits`` bits
     (signature bits ``bits-bucket_bits``..``bits-1``, so the self-join is
@@ -1196,7 +1169,7 @@ def simhash_near_pairs(
     Note the bucket prefilter trades recall for scale exactly like LSH
     banding: 8 bucket bits → 256-way candidate split at any ``bits``.
 
-    ``max_bucket_size`` is the hot-bucket guard (``_split_hot_buckets``):
+    The hot-bucket guard (``_split_hot_buckets``):
     identical templates concentrate in ONE SimHash bucket (their top bits
     are equal by construction); above the cap the bucket star-links to its
     min-id representative, with the same popcount ≤ max_hamming verify."""
@@ -1208,12 +1181,7 @@ def simhash_near_pairs(
         .withColumn("bucket", F.shiftright("sh", bits - bucket_bits)),
         eager=False,
     )
-    if max_bucket_size is not None:
-        cold, hot = _split_hot_buckets(
-            sigs, ["bucket"], max_bucket_size
-        )
-    else:
-        cold, hot = sigs, None
+    cold, hot = _split_hot_buckets(sigs, ["bucket"])
     a, b = cold.alias("a"), cold.alias("b")
     hamming = F.bit_count(
         F.col("a.sh").bitwiseXOR(F.col("b.sh"))
@@ -1286,7 +1254,6 @@ def incremental_simhash_near_pairs(
     max_hamming: int = 3,
     bits: int = 60,
     bucket_bits: int = 8,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Daily-crawl SimHash near-dup — the delta form of
     ``simhash_near_pairs``: only the NEW crawl tokenizes and hashes;
@@ -1327,12 +1294,7 @@ def incremental_simhash_near_pairs(
         eager=False,
     )
     new_ids = new_docs.select(F.col(id_col).alias("id"))
-    if max_bucket_size is not None:
-        cold, hot = _split_hot_buckets(
-            sigs, ["bucket"], max_bucket_size
-        )
-    else:
-        cold, hot = sigs, None
+    cold, hot = _split_hot_buckets(sigs, ["bucket"])
     new_cold = cold.join(new_ids, "id", "left_semi")
     stored_cold = cold.join(new_ids, "id", "left_anti")
     hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))

@@ -52,20 +52,14 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = None,
-    checkpoint_every: int | None = None,
     redistribute_dangling: bool = False,
-    unit: int = 1_000_000,
 ) -> DataFrame:
     """Weighted PageRank over an edge list, exact integer-ppm.
 
-    ``r₀(v) = unit div N``; each iteration::
+    ``r₀(v) = 1e6 div N``; each iteration::
 
         contrib(v) = Σ_{(u,v)∈E} (r(u) · wppm(u,v)) div 1e6
-        r'(v)      = ((1e6 − d)·(unit div 1e6)) div N
-                     + (d · contrib(v)) div 1e6
-
-    (at the default ``unit = 1e6`` the base term reduces to the
-    oracle replay's ``(1e6 − d) div N`` exactly);
+        r'(v)      = (1e6 − d) div N + (d · contrib(v)) div 1e6
 
     with ``wppm(u,v) = (w(u,v) · 1e6) div Σ_x w(u,x)`` precomputed once
     and ``d = damping_ppm``. Every division is an explicit int64 floor
@@ -84,30 +78,18 @@ def pagerank(
     broadcast — no driver action, oracle replay still exact.
 
     ``weight_col=None`` treats every edge as weight 1 (parallel edges
-    still sum). Returns ``(node, rank_ppm)`` scaled in ``unit``.
+    still sum). Returns ``(node, rank_ppm)``.
 
-    RESOLUTION — ``unit`` must be >> N: ranks live on an integer grid
-    of ``unit`` steps, so at ``unit=1e6`` a 100k-node graph quantizes
-    every rank to a handful of steps and per-edge floor loss dominates
-    the mass budget (measured: ranks collapse to ~1 step each and the
-    teleport redistribution becomes a no-op — ``dm div N`` floors to
-    0). Raise ``unit`` for large graphs (multiples of 1e6 up to 1e12:
-    ``r·wppm ≤ unit·1e6 ≤ 9.2e18`` keeps every product inside int64;
-    ``tools/graph_scale_probe.py`` demonstrates 1e12 at 100k nodes).
-    The default 1e6 keeps the catalog oracles' replay byte-identical.
+    RESOLUTION — ranks live on an integer grid of 1e6 steps, so N must
+    stay well below 1e6: on a 100k-node graph every rank quantizes to a
+    handful of steps and per-edge floor loss dominates the mass budget
+    (ranks collapse to ~1 step each and the teleport redistribution
+    becomes a no-op — ``dm div N`` floors to 0).
     """
     if n_iter < 0:
         raise ValueError("pagerank: n_iter must be >= 0")
     if not 0 <= damping_ppm <= 1_000_000:
         raise ValueError("pagerank: damping_ppm must be in [0, 1e6]")
-    if not (
-        1_000_000 <= unit <= 1_000_000_000_000 and unit % 1_000_000 == 0
-    ):
-        raise ValueError(
-            "pagerank: unit must be a multiple of 1e6 in [1e6, 1e12] — "
-            "the upper bound keeps r*wppm inside int64, the multiple "
-            "keeps the damped-base division exact"
-        )
     w = (
         F.col(weight_col).cast("bigint")
         if weight_col is not None
@@ -155,28 +137,19 @@ def pagerank(
         else None
     )
     if n_iter >= 2:
-        # materialize the loop-invariant side once (independent of the
-        # rank-lineage knob): every iteration references wppm and nodes,
-        # and without this each action re-derives them from the raw
-        # edges (a groupBy + join + distinct per iteration per
-        # reference) — measured 61s/48s/29s for plain / rank-only
-        # checkpoint / full materialization at 16 iterations on the
-        # probe graph (tools/graph_scale_probe.py)
+        # materialize the loop-invariant side once: every iteration
+        # references wppm and nodes, and without this each action
+        # re-derives them from the raw edges (a groupBy + join +
+        # distinct per iteration per reference)
         wppm = materialize(wppm, eager=True)
         nodes = materialize(nodes, eager=True)
         if dang is not None:
             dang = materialize(dang, eager=True)
     n_agg = nodes.agg(F.count("*").alias("_n"))
     ranks = nodes.join(F.broadcast(n_agg)).select(
-        "node", F.expr(f"{unit} div _n").alias("r")
+        "node", F.expr("1000000 div _n").alias("r")
     )
-    # (1e6 - d) ppm of the unit, exactly: unit is a multiple of 1e6, so
-    # this reduces to the oracle's (1e6 - d) div N at unit=1e6. The
-    # product is folded in PYTHON (<= 1e12, a bigint literal) — inline
-    # int literals would multiply as 32-bit and overflow under ANSI
-    base = F.expr(
-        f"{(1_000_000 - damping_ppm) * (unit // 1_000_000)} div _n"
-    )
+    base = F.expr(f"{1_000_000 - damping_ppm} div _n")
     for i in range(n_iter):
         if dang is not None and i > 0 and i % 2 == 0:
             # the teleport variant reads the previous rank table TWICE
@@ -232,8 +205,6 @@ def pagerank(
                     )
                 ).alias("r"),
             )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            ranks = materialize(ranks, eager=True)
     return ranks.select("node", F.col("r").alias("rank_ppm"))
 
 

@@ -526,7 +526,6 @@ def build_text_index(
     parquet min/max term stats cover a DISJOINT term range and a
     query's ``term IN (...)`` pushed filter skips whole files — the
     "bucket the index by term at scale" claim made physical (the
-    ``zorder_compact`` discipline applied to the inverted index; the
     file-stats test proves the disjoint spans).
     """
     from inbev_data_engineering_case_spark.layers import (

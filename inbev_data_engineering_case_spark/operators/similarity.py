@@ -804,10 +804,9 @@ def pq_sampled_codebook(
     """``(subspace, code, cv)`` — k codewords per subspace, sliced from k
     hash-sampled corpus rows (the k smallest ``portable_hash64(id, seed)``;
     codes 0..k-1 in hash order). A deterministic, engine-replayable
-    codebook: the statistical upgrade is Lloyd refinement per subspace
-    (``train_pq_codebooks``), the plumbing is identical. The k-row seed
-    pick is a TakeOrdered (no global sort); the codebook is model-sized
-    (m·k rows) and broadcasts everywhere it is consumed."""
+    codebook. The k-row seed pick is a TakeOrdered (no global sort); the
+    codebook is model-sized (m·k rows) and broadcasts everywhere it is
+    consumed."""
     from pyspark.sql import Window
 
     from inbev_data_engineering_case_spark.functions import portable_hash64
@@ -837,43 +836,6 @@ def pq_sampled_codebook(
             )
         ).alias("sc"),
     ).select("sc.subspace", "code", "sc.cv")
-
-
-def train_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd-refined PQ codebooks: per subspace, the existing IVF trainer
-    runs on the sliced sub-vectors (same distributed recenter shape —
-    the shuffle carries only the k×(d/m) model). Deterministic for the
-    same reasons the IVF trainer is (first-k init, rounded means).
-    Returns the same ``(subspace, code, cv)`` schema as
-    ``pq_sampled_codebook`` — drop-in for ``pq_encode``/``pq_adc_topk``;
-    note codes here are cell ids surviving Lloyd (may be < k)."""
-    books = []
-    for s in range(m):
-        sliced = corpus.select(
-            F.col(id_col),
-            _pq_subvec(F.col(vec_col), s, m).alias("_sv"),
-        )
-        cents = train_ivf_centroids(
-            sliced, n_centroids=k, n_iter=n_iter, id_col=id_col, vec_col="_sv"
-        )
-        books.append(
-            cents.select(
-                F.lit(s).alias("subspace"),
-                F.col("cent_id").cast("int").alias("code"),
-                F.col("cv"),
-            )
-        )
-    out = books[0]
-    for b in books[1:]:
-        out = out.unionByName(b)
-    return out
 
 
 def pq_encode(
@@ -1040,8 +1002,8 @@ def ann_ivf_pq_topk(
 
     ``centroids``/``codebook`` default to the deterministic layouts
     (first-N cells, hash-sampled codewords) that the SQL oracle replays
-    exactly; pass ``train_ivf_centroids`` / ``train_pq_codebooks``
-    output for the Lloyd-refined production variants."""
+    exactly; pass ``train_ivf_centroids`` output for the Lloyd-refined
+    cells."""
     cents = (
         centroids
         if centroids is not None
@@ -1217,11 +1179,10 @@ def build_ann_index(
 
     Training and assignment run once here; ``ann_from_index`` answers
     every subsequent query batch from the stored model with per-query
-    cost decoupled from training/encoding (measured by
-    ``tools/ann_index_probe.py``). ``centroids``/``codebook`` default
-    to the deterministic layouts the SQL oracle replays exactly; pass
-    ``train_ivf_centroids`` / ``train_pq_codebooks`` output for the
-    Lloyd-refined production variants — probing is agnostic.
+    cost decoupled from training/encoding. ``centroids``/``codebook``
+    default to the deterministic layouts the SQL oracle replays exactly;
+    pass ``train_ivf_centroids`` output for the Lloyd-refined cells —
+    probing is agnostic.
 
     Publication is ATOMIC via ``layers.commit_snapshot`` (flock +
     expected-parent), the ``build_text_index`` discipline: all five

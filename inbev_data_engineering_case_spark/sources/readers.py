@@ -1,9 +1,8 @@
 """Typed readers (OP-03/04/05) over the lake and the synthetic star schema.
 
-CSV and JSON reads take an explicit schema: inferring one is an extra full
-pass and a type-drift hazard (SURVEY.md §4.3-3). They use PERMISSIVE mode
-with a corrupt-record column, so bad rows are quarantined, not dropped
-silently.
+CSV reads take an explicit schema: inferring one is an extra full pass and
+a type-drift hazard (SURVEY.md §4.3-3). They use PERMISSIVE mode with a
+corrupt-record column, so bad rows are quarantined, not dropped silently.
 
 Parquet carries its schema in the file footers, and Spark reads one footer
 in a job of its own each time a table is opened without a schema. Every
@@ -209,83 +208,3 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pin_event_confs(spark)
     return surface_event_ts(read_parquet(spark, f"{sf_dir}/events.parquet"))
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """JSON-lines scan with explicit schema (no sampling pass) and corrupt-
-    record quarantine — the landing format for most document/event feeds.
-    Unlike parquet, JSON scans can't prune columns at the parser level, so
-    at scale JSONL is a bronze-only format: convert to parquet in silver."""
-    schema_with_corrupt = T.StructType(
-        [*schema.fields, T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    return spark.read.json(
-        path,
-        schema=schema_with_corrupt,
-        mode="PERMISSIVE",
-        columnNameOfCorruptRecord="_corrupt_record",
-    )
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — columnar like parquet (vectorized read, predicate
-    pushdown, column pruning all apply); supported so ORC-resident lakes
-    can be consumed without conversion."""
-    return spark.read.orc(path)
-
-
-def read_parquet_evolving(
-    spark: SparkSession,
-    paths: list[str],
-    expected_schema,
-    strict_types: bool = False,
-):
-    """Schema-evolution-tolerant parquet read: reconcile a set of
-    snapshot directories written at DIFFERENT times (a crawl that grew a
-    column, a source that dropped one) onto ``expected_schema``.
-
-    - columns missing from the files arrive as typed nulls;
-    - extra file columns are dropped (column pruning means they are
-      never even read);
-    - matching columns are cast to the expected type (``try_cast``
-      unless ``strict_types=True`` — ANSI mode makes a bad cast a job
-      failure, the quarantine-vs-fail trade the CSV reader documents).
-
-    Returns ``(df, report)`` where ``report`` lists per-path extra and
-    missing column names — the drift log a daily pipeline alerts on.
-    ``mergeSchema`` is deliberately NOT used: it unions schemas at
-    footer-read time (one listing pass per file) and still fails on type
-    conflicts; projecting each path onto the expected schema reads only
-    the expected columns and makes the drift explicit instead of silent.
-    """
-    if not paths:
-        raise ValueError(
-            "read_parquet_evolving: no paths — an empty snapshot manifest "
-            "should be handled by the caller, not read as an empty table"
-        )
-    report: list[dict] = []
-    parts = []
-    expected = {f.name: f.dataType for f in expected_schema.fields}
-    for path in paths:
-        df = read_parquet(spark, path)
-        have = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))
-        extra = sorted(set(have) - set(expected))
-        missing = sorted(set(expected) - set(have))
-        report.append({"path": path, "extra": extra, "missing": missing})
-        cols = []
-        for name, dtype in expected.items():
-            if name not in have:
-                cols.append(F.lit(None).cast(dtype).alias(name))
-            elif have[name] == dtype:
-                cols.append(F.col(name))
-            elif strict_types:
-                cols.append(F.col(name).cast(dtype).alias(name))
-            else:
-                cols.append(F.col(name).try_cast(dtype).alias(name))
-        parts.append(df.select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out, report

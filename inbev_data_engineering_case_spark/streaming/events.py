@@ -228,43 +228,6 @@ def run_stream_to_table(
     )
 
 
-def run_stream_to_parquet_idempotent(
-    out: DataFrame, path: str, checkpoint: str, timeout: int = 300
-) -> dict[str, int]:
-    """Drain a streaming DataFrame into parquet with replay-safe writes:
-    each micro-batch lands in its own ``batch_id=<id>`` directory in
-    overwrite mode, via ``foreachBatch``.
-
-    This is the standard exactly-once recipe for sinks without
-    transactions: if the job dies between writing a batch and committing
-    the checkpoint offset, the replayed batch REWRITES the same directory
-    instead of appending duplicates — write idempotency + checkpointed
-    offsets = effectively-once output. (With a transactional sink — Delta,
-    Kafka EOS — use the native writer instead; this is the escape hatch
-    for plain object-store parquet.) Readers see the union of batch
-    directories; the ``batch_id`` partition column also gives downstream
-    incremental consumers a cursor.
-
-    For APPEND-shaped streams (projections/filters — e.g. cleansed event
-    landing). Watermarked aggregations run here under append semantics
-    too: a window's row lands only in the batch where the watermark
-    passes it, so drain-style single runs emit nothing — aggregations
-    want the memory/complete harness (``run_stream_to_table``) or a
-    merge-capable sink. Returns ``query_metrics`` for the drained
-    query."""
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{path}/batch_id={batch_id}"
-        )
-
-    return _drain(
-        out.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint),
-        timeout,
-        f"stream to {path}",
-    )
-
-
 def stream_tumbling_counts(
     events: DataFrame,
     window: str = "1 hour",
@@ -809,8 +772,7 @@ def run_stream_upsert_parquet(
     the stream-static enrich side), not fact tables; at fact scale use a
     transactional sink's native MERGE. The rewrite itself is one
     broadcast-or-shuffle anti-join keyed like the stream, and snapshots
-    double as a per-batch history for debugging/time travel (compact old
-    ones with ``layers.compact_parquet``).
+    double as a per-batch history for debugging/time travel.
 
     One writer per (base_dir, checkpoint): the checkpoint makes restarts
     of THIS query replay-idempotent, but a second concurrent query over

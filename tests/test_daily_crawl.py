@@ -638,10 +638,10 @@ def test_curate_incremental_token_budget_chained_two_day(spark):
     on today's best survivors" in ONE pass — curate_incremental grew
     the batch pipeline's ``token_budget=`` spend stage, applied LAST
     (after the dedup/halo drops). Pinned against the standalone
-    composition (plain incremental → select_within_budget[_by_stratum]
-    over the same survivors) for both budget shapes, then CHAINED: day
-    2 curates against artifacts advanced from day 1's post-budget kept
-    set — a budget-dropped doc was never emitted, so its day-2 twin is
+    composition (plain incremental → select_within_budget_by_stratum
+    over the same survivors), then CHAINED: day 2 curates against
+    artifacts advanced from day 1's post-budget kept set — a
+    budget-dropped doc was never emitted, so its day-2 twin is
     legitimately new and must survive."""
     from inbev_data_engineering_case_spark.operators.curate import (
         advance_corpus_artifacts,
@@ -653,7 +653,6 @@ def test_curate_incremental_token_budget_chained_two_day(spark):
         minhash_signatures,
     )
     from inbev_data_engineering_case_spark.operators.sample import (
-        select_within_budget,
         select_within_budget_by_stratum,
     )
     from pyspark.sql import functions as F
@@ -686,30 +685,8 @@ def test_curate_incremental_token_budget_chained_two_day(spark):
     plain_ids = sorted(r["doc_id"] for r in plain1.collect())
     assert plain_ids == [13, 15, 17]
 
-    # global (int) budget: parity vs the standalone spend composition
-    budget = 250
-    budgeted1 = curate_incremental(
-        day0, snap1, sigs, fps, min_quality=0.0, token_budget=budget
-    )
-    want = sorted(
-        r["doc_id"]
-        for r in select_within_budget(
-            plain1.withColumn(
-                "_c", F.length("text").cast("bigint")
-            ),
-            budget,
-            cost_col="_c",
-            quality_col="quality",
-            id_col="doc_id",
-        ).collect()
-    )
-    got = sorted(r["doc_id"] for r in budgeted1.collect())
-    assert got == want and 0 < len(got) < len(plain_ids)
-    # output schema unchanged — the staging cost column never leaks
-    assert budgeted1.columns == plain1.columns
-
-    # per-stratum (dict) budget: source carried through the scoring
-    # projection only for this shape, spend parity per stratum
+    # per-stratum budget: source carried through the scoring
+    # projection, spend parity per stratum
     snap1_src = snap1.withColumn(
         "source",
         F.when(F.col("doc_id") % 4 == 1, F.lit("web"))
@@ -738,11 +715,12 @@ def test_curate_incremental_token_budget_chained_two_day(spark):
             id_col="doc_id",
         ).collect()
     )
-    assert sorted(r["doc_id"] for r in strat.collect()) == want_strat
-    assert "source" in strat.columns
-    # int budget never pays the source column
-    assert "source" not in budgeted1.columns
-    # dict budget against a source-less snapshot refuses loudly
+    got = sorted(r["doc_id"] for r in strat.collect())
+    assert got == want_strat and 0 < len(got) < len(plain_ids)
+    # output schema: the scored columns plus source — the staging cost
+    # column never leaks
+    assert strat.columns == plain1.columns + ["source"]
+    # a budget against a source-less snapshot refuses loudly
     import pytest
 
     with pytest.raises(ValueError, match="source"):
@@ -755,14 +733,16 @@ def test_curate_incremental_token_budget_chained_two_day(spark):
     dropped = sorted(set(plain_ids) - set(got))
     assert dropped, "budget must have dropped at least one survivor"
     sigs1, fps1 = advance_corpus_artifacts(
-        budgeted1.select("doc_id", "text"), sigs, fps
+        strat.select("doc_id", "text"), sigs, fps
     )
     drop_text = {r["doc_id"]: r["text"] for r in plain1.collect()}[
         dropped[0]
     ]
     d2 = [(21, drop_text + " returning")]
-    snap2 = snap1.unionByName(_docs(spark, d2))
+    snap2 = snap1_src.unionByName(
+        _docs(spark, d2).withColumn("source", F.lit("web"))
+    )
     kept2 = curate_incremental(
-        snap1, snap2, sigs1, fps1, min_quality=0.0, token_budget=budget
+        snap1_src, snap2, sigs1, fps1, min_quality=0.0, token_budget=sbud
     )
     assert sorted(r["doc_id"] for r in kept2.collect()) == [21]

@@ -193,9 +193,6 @@ _KNOWN_UNREACHED = {
     "operators.sample.mixture_budgets",
     "operators.scd._changed",
     "operators.scd.scd2_merge",
-    "sources.readers.read_jsonl",
-    "sources.readers.read_orc",
-    "sources.readers.read_parquet_evolving",
     "sources.rest.open_brewery_db_transport",
 }
 
@@ -209,7 +206,6 @@ _KNOWN_UNPASSED = {
     "layers.commit_snapshot_with_retry.attempts",
     "layers.write_layer.fmt",
     "layers.write_layer.mode",
-    "layers.zorder_compact.bits",
     "operators.asof.range_join_bands.hi",
     "operators.asof.range_join_bands.lo",
     "operators.bpe.bpe_tokenize.cache_size",
@@ -251,8 +247,6 @@ _KNOWN_UNPASSED = {
     "operators.curate.leakage_safe_split.weights",
     "operators.decontaminate.boilerplate_report.broadcast_hot",
     "operators.decontaminate.boilerplate_report.portable",
-    "operators.decontaminate.decontaminate.halo_hops",
-    "operators.decontaminate.decontaminate.pair_edges",
     "operators.decontaminate.decontaminate.portable",
     "operators.decontaminate.semantic_contamination.n_probes",
     "operators.decontaminate.semantic_contamination.num_planes",
@@ -261,15 +255,12 @@ _KNOWN_UNPASSED = {
     "operators.dedup.dedup_spans.broadcast_hot",
     "operators.dedup.dedup_spans.max_docs",
     "operators.dedup.dedup_spans.span_tokens",
-    "operators.dedup.embedding_near_dup_pairs.max_bucket_size",
     "operators.dedup.embedding_near_dup_pairs.n_probes",
     "operators.dedup.embedding_near_dup_pairs.num_planes",
     "operators.dedup.incremental_containment_pairs.broadcast_hot",
     "operators.dedup.incremental_containment_pairs.portable",
-    "operators.dedup.incremental_embedding_near_dup_normalized.max_bucket_size",
     "operators.dedup.incremental_embedding_near_dup_normalized.n_probes",
     "operators.dedup.incremental_embedding_near_dup_normalized.num_planes",
-    "operators.dedup.incremental_simhash_near_pairs.max_bucket_size",
     "operators.dedup.jaccard_similarity.shingle",
     "operators.funnel.attribution_report.conversion_type",
     "operators.funnel.attribution_report.touch_types",
@@ -403,7 +394,6 @@ _KNOWN_UNPASSED = {
     "streaming.events.run_stream_classifier_update.timeout",
     "streaming.events.run_stream_multiclass_update.keep_snapshots",
     "streaming.events.run_stream_multiclass_update.timeout",
-    "streaming.events.run_stream_to_parquet_idempotent.timeout",
     "streaming.events.run_stream_to_table.timeout",
     "streaming.events.run_stream_upsert_parquet.timeout",
     "streaming.events.stream_click_view_join.max_gap",
@@ -438,14 +428,14 @@ def _names_in(node: ast.AST) -> set[str]:
 def _reachability() -> tuple[dict[str, ast.FunctionDef], set[str], list]:
     """Walk the package's name graph from its roots: a top-level def of
     an entry module, a name used in ``__spark_entry__.py``,
-    ``bench.py``, ``perfbench/*.py`` or ``tools/*.py``, or a
+    ``perfbench/*.py`` or ``tools/*.py``, or a
     module-level statement (decorators and default values included),
     following the ``Name`` and ``Attribute`` names in reached bodies.
     Returns every top-level package function as ``"module.name" ->
     def``, the set of reached bare names, and the parsed root files
     (every package module plus the scripts above). Tests are not roots:
-    a function only tests call is code no catalog query, pipeline stage
-    or bench line runs."""
+    a function only tests call is code no catalog query, pipeline stage,
+    benchmark workload or tool runs."""
     root = _REPO / _PKG
     bodies: dict[str, list[ast.AST]] = {}  # top-level def name -> defs
     functions = {}  # "module.name" -> def
@@ -476,13 +466,11 @@ def _reachability() -> tuple[dict[str, ast.FunctionDef], set[str], list]:
                 used |= _names_in(expr)
     for path in [
         _REPO / "__spark_entry__.py",
-        _REPO / "bench.py",
         *sorted((_REPO / "perfbench").glob("*.py")),
         *sorted((_REPO / "tools").glob("*.py")),
     ]:
-        if path.exists():
-            trees.append(ast.parse(path.read_text()))
-            used |= _names_in(trees[-1])
+        trees.append(ast.parse(path.read_text()))
+        used |= _names_in(trees[-1])
 
     reached, todo = set(), list(used)
     while todo:
@@ -563,7 +551,7 @@ def _unpassed_parameters() -> set[str]:
 
 def test_every_defaulted_parameter_is_passed():
     """Static (no Spark): a defaulted parameter that no catalog query,
-    pipeline stage, bench line or tool passes is a branch only tests
+    pipeline stage, benchmark workload or tool passes is a branch only tests
     reach (``_unpassed_parameters``). The ``_KNOWN_UNPASSED`` ratchet
     fails both ways, so it can only shrink: delete the parameter and
     its branch, or drop its name once a root passes it."""

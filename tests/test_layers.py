@@ -61,55 +61,6 @@ def test_write_layer_partitions_and_success(spark, tmp_path):
     assert back.count() == 3
 
 
-def test_compact_parquet_reduces_files_and_keeps_rows(spark, tmp_path):
-    from inbev_data_engineering_case_spark.layers import (
-        compact_parquet,
-        dir_bytes,
-    )
-
-    src = str(tmp_path / "fragmented")
-    df = spark.range(10_000).selectExpr("id", "id % 7 AS k")
-    df.repartition(64).write.parquet(src)  # the streaming-sink failure mode
-    n_small = len(
-        [f for f in os.listdir(src) if f.endswith(".parquet")]
-    )
-    assert n_small == 64
-
-    dst = str(tmp_path / "compacted")
-    total = dir_bytes(spark, src)
-    n = compact_parquet(spark, src, dst, target_file_bytes=total // 2)
-    files = [f for f in os.listdir(dst) if f.endswith(".parquet")]
-    assert len(files) == n <= 3  # ceil(total / (total//2)) = 2 (3 on rounding)
-    back = spark.read.parquet(dst)
-    assert back.count() == 10_000
-    assert back.selectExpr("sum(id)").first()[0] == df.selectExpr(
-        "sum(id)"
-    ).first()[0]
-
-    # sorted variant: each output file covers a disjoint id range -> later
-    # range predicates prune whole files via parquet min/max stats
-    dst2 = str(tmp_path / "clustered")
-    n2 = compact_parquet(
-        spark, src, dst2, target_file_bytes=total // 2, sort_cols=["id"]
-    )
-    per_file = [
-        (spark.read.parquet(f"{dst2}/{f}").selectExpr(
-            "min(id)", "max(id)"
-        ).first())
-        for f in os.listdir(dst2) if f.endswith(".parquet")
-    ]
-    spans = sorted((lo, hi) for lo, hi in per_file)
-    assert all(
-        prev_hi < lo for (_, prev_hi), (lo, _) in zip(spans, spans[1:])
-    )
-    assert n2 == len(spans)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="dst must differ"):
-        compact_parquet(spark, src, src)
-
-
 def test_snapshot_diff_cdc_known_answer(spark):
     from inbev_data_engineering_case_spark.layers import snapshot_diff
 
@@ -157,137 +108,6 @@ def test_snapshot_as_of_time_travel(tmp_path):
     # before the first commit: nothing existed
     with pytest.raises(FileNotFoundError):
         snapshot_as_of(str(tmp_path), "2023-12-31-23-59")
-
-
-def test_delete_rows_rewrites_only_matching_files(spark, tmp_path):
-    """Surgical delete: on a key-clustered table, deleting a few keys
-    rewrites only the file(s) whose min/max span them — the other files
-    land byte-identical (hard-linked), the keys are gone, and everything
-    else survives."""
-    import filecmp
-    import glob
-
-    from inbev_data_engineering_case_spark.layers import (
-        compact_parquet,
-        delete_rows,
-    )
-
-    df = spark.range(0, 1000).selectExpr(
-        "id AS user_id", "id * 2 AS value"
-    )
-    raw = str(tmp_path / "raw")
-    df.write.parquet(raw)
-    src = str(tmp_path / "clustered")
-    # tiny target -> several files, disjoint user_id spans per file
-    compact_parquet(spark, raw, src, target_file_bytes=4096,
-                    sort_cols=["user_id"])
-    files_before = sorted(glob.glob(src + "/*.parquet"))
-    assert len(files_before) > 2
-
-    dst = str(tmp_path / "deleted")
-    stats = delete_rows(spark, src, dst, "user_id", [3, 7])
-    assert stats["rows_deleted"] == 2
-    assert stats["files_total"] == len(files_before)
-    # keys 3 and 7 sit in the low span: one file rewritten (maybe two if
-    # a span boundary splits them), the rest linked byte-identical
-    assert stats["files_rewritten"] < len(files_before)
-    linked = [
-        f for f in glob.glob(dst + "/*.parquet")
-        if not os.path.basename(f).startswith("rewrite-")
-    ]
-    assert linked, "expected untouched files to be carried over"
-    for f in linked:
-        twin = os.path.join(src, os.path.basename(f))
-        assert filecmp.cmp(f, twin, shallow=False)
-
-    out = spark.read.parquet(dst)
-    assert out.count() == 998
-    assert out.filter("user_id IN (3, 7)").count() == 0
-    # remaining data intact, not just counts
-    assert out.agg({"value": "sum"}).first()[0] == sum(
-        i * 2 for i in range(1000) if i not in (3, 7)
-    )
-
-
-def test_delete_rows_preserves_null_keyed_rows(spark, tmp_path):
-    """NULL-safety regression: ~isin() is NULL for NULL keys, which a
-    filter drops — anonymous rows in a rewritten file must survive a
-    delete that doesn't name them."""
-    from inbev_data_engineering_case_spark.layers import delete_rows
-
-    df = spark.createDataFrame(
-        [(1, 10), (2, 20), (None, 30), (None, 40), (7, 70)],
-        "user_id long, value long",
-    )
-    src = str(tmp_path / "src")
-    df.coalesce(1).write.parquet(src)
-    dst = str(tmp_path / "dst")
-    stats = delete_rows(spark, src, dst, "user_id", [7])
-    assert stats["rows_deleted"] == 1
-    out = spark.read.parquet(dst)
-    assert out.count() == 4
-    assert out.filter("user_id IS NULL").count() == 2
-
-
-def test_delete_rows_refuses_replay_into_published_snapshot(spark, tmp_path):
-    """Replay safety: a retry into an already-published dst must fail
-    fast instead of appending duplicate rewrite files; a crashed
-    attempt's scratch dir is reaped and rebuilt."""
-    from inbev_data_engineering_case_spark.layers import delete_rows
-
-    src = str(tmp_path / "src")
-    spark.range(0, 100).selectExpr("id AS user_id").coalesce(1).write.parquet(
-        src
-    )
-    dst = str(tmp_path / "dst")
-    # simulate a crashed earlier attempt: stale scratch dir exists
-    os.makedirs(dst + "._building")
-    open(dst + "._building/leftover.parquet", "w").close()
-    stats = delete_rows(spark, src, dst, "user_id", [5])
-    assert stats["rows_deleted"] == 1
-    out = spark.read.parquet(dst)
-    assert out.count() == 99  # stale scratch reaped, not included
-    # second run into the published snapshot: refuse, leave it intact
-    with pytest.raises(FileExistsError):
-        delete_rows(spark, src, dst, "user_id", [5])
-    assert spark.read.parquet(dst).count() == 99
-
-
-def test_delete_rows_accepts_trailing_slash_dst(spark, tmp_path):
-    from inbev_data_engineering_case_spark.layers import delete_rows
-
-    src = str(tmp_path / "src")
-    spark.range(0, 50).selectExpr("id AS user_id").coalesce(1).write.parquet(
-        src
-    )
-    dst = str(tmp_path / "out") + "/"  # trailing slash must not break publish
-    stats = delete_rows(spark, src, dst, "user_id", [1])
-    assert stats["rows_deleted"] == 1
-    assert spark.read.parquet(dst).count() == 49
-
-
-def test_delete_rows_rejects_empty_and_null_keys(spark, tmp_path):
-    """Empty / None-bearing key lists fail up front with a clear error,
-    before any scratch directory is created — not deep inside Spark with
-    a zero-arg isin() analysis error or a mixed-type sorted() TypeError."""
-    import os
-
-    import pytest
-
-    from inbev_data_engineering_case_spark.layers import delete_rows
-
-    src = str(tmp_path / "src")
-    spark.range(0, 10).selectExpr("id AS user_id").coalesce(1).write.parquet(
-        src
-    )
-    dst = str(tmp_path / "out")
-    with pytest.raises(ValueError, match="empty"):
-        delete_rows(spark, src, dst, "user_id", [])
-    with pytest.raises(ValueError, match="None"):
-        delete_rows(spark, src, dst, "user_id", [3, None])
-    # no scratch or partial output left behind by the rejected requests
-    assert not os.path.exists(dst)
-    assert not os.path.exists(dst + "._building")
 
 
 # ---------------------------------------------------------------------------
@@ -492,37 +312,3 @@ def test_advance_snapshot_refuses_a_stale_parent(tmp_path):
     with open(os.path.join(newer, "ids.txt")) as f:
         assert f.read() == "2"
     assert not [n for n in os.listdir(base) if n.startswith(".staging")]
-
-
-def test_link_or_copy_falls_back_to_copy(tmp_path, monkeypatch):
-    """Filesystems without hard-link support (FUSE object-store mounts,
-    NFS with links disabled) raise OSError from os.link; delete_rows'
-    staged rewrite must then degrade to a byte copy rather than fail
-    where commit_snapshot's rename protocol itself works. Simulated by
-    making os.link raise EPERM."""
-    import errno
-
-    from inbev_data_engineering_case_spark.layers import _link_or_copy
-
-    src = tmp_path / "part-000.parquet"
-    src.write_bytes(b"payload")
-
-    def deny_link(a, b, **kw):
-        raise OSError(errno.EPERM, "hard links not supported")
-
-    monkeypatch.setattr(os, "link", deny_link)
-    dst = tmp_path / "copied.parquet"
-    _link_or_copy(str(src), str(dst))
-    assert dst.read_bytes() == b"payload"
-    # copies, not links: distinct inodes
-    assert os.stat(dst).st_ino != os.stat(src).st_ino
-
-    # EEXIST is NOT a capability gap — a double-staged destination is
-    # a staging bug and must stay a loud failure, not a silent
-    # copy-over (the fallback is restricted to the no-link errnos)
-    monkeypatch.undo()
-    linked = tmp_path / "linked.parquet"
-    _link_or_copy(str(src), str(linked))
-    assert os.stat(linked).st_ino == os.stat(src).st_ino
-    with pytest.raises(OSError):
-        _link_or_copy(str(src), str(linked))

@@ -54,73 +54,6 @@ def test_non_partition_filter_pushes_to_scan(spark, partitioned_events):
     assert "PushedFilters: [IsNotNull(user_id), EqualTo(user_id,3)]" in plan, plan
 
 
-def test_zorder_compact_tightens_file_stats_on_both_dims(spark, tmp_path):
-    """Z-order clustering: after zorder_compact on (o_custkey, cents),
-    each file's min/max bounding box covers a small corner of the key
-    space on BOTH dimensions, where a plain (unsorted) compaction's
-    files each span ~the whole range — the property parquet row-group
-    pruning monetizes for selective predicates on either column."""
-    from inbev_data_engineering_case_spark.layers import zorder_compact
-
-    src = str(tmp_path / "orders_src")
-    base = (
-        spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-    )
-    # scatter rows so the naive layout has no accidental clustering
-    base.repartition(4).write.parquet(src)
-    plain_dst = str(tmp_path / "plain")
-    z_dst = str(tmp_path / "zordered")
-    total = sum(
-        f.stat().st_size
-        for f in __import__("pathlib").Path(src).glob("*.parquet")
-    )
-    target = max(1, total // 8)  # ~8 output files each way
-
-    from inbev_data_engineering_case_spark.layers import compact_parquet
-
-    n_plain = compact_parquet(spark, src, plain_dst, target_file_bytes=target)
-    n_z = zorder_compact(
-        spark, src, z_dst, ["o_custkey", "cents"], target_file_bytes=target
-    )
-    assert n_plain == n_z > 2
-
-    def mean_span_fraction(path):
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(
-                (F.max("o_custkey") - F.min("o_custkey")).alias("s1"),
-                (F.max("cents") - F.min("cents")).alias("s2"),
-            )
-            .collect()
-        )
-        g = spark.read.parquet(path).agg(
-            (F.max("o_custkey") - F.min("o_custkey")).alias("g1"),
-            (F.max("cents") - F.min("cents")).alias("g2"),
-        ).collect()[0]
-        f1 = sum(r["s1"] / g["g1"] for r in per_file) / len(per_file)
-        f2 = sum(r["s2"] / g["g2"] for r in per_file) / len(per_file)
-        return f1, f2
-
-    p1, p2 = mean_span_fraction(plain_dst)
-    z1, z2 = mean_span_fraction(z_dst)
-    # plain files span essentially the full range on both dims
-    assert p1 > 0.8 and p2 > 0.8, (p1, p2)
-    # z-ordered files cover a strictly smaller box on BOTH dims at once
-    assert z1 < 0.6 * p1, (z1, p1)
-    assert z2 < 0.6 * p2, (z2, p2)
-    # row parity
-    assert (
-        spark.read.parquet(z_dst).count()
-        == spark.read.parquet(src).count()
-    )
-
-
 def test_morton_key_properties(spark):
     """Morton key invariants (hypothesis over random int grids): the key
     is monotone in each dimension with the other fixed at equal buckets,

@@ -598,8 +598,8 @@ def test_runtime_bloom_filter_prunes_probe_side(spark):
     shuffle reducer): with the engagement thresholds lowered to fixture
     scan sizes — at 100 TB the defaults engage unaided — Spark injects
     might_contain() on the probe side BEFORE its exchange, so
-    non-matching fact rows die map-side. tools/bloom_probe.py measures
-    the row reduction (~80% on this join)."""
+    non-matching fact rows die map-side (a probe measured ~80% of the
+    probe-side rows pruned on this join)."""
     from pyspark.sql import functions as F
 
     confs = {

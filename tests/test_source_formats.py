@@ -1,5 +1,6 @@
-"""Source-format coverage: JSONL and ORC round-trips preserve the documents
-table exactly; JSONL quarantines corrupt records instead of dropping them."""
+"""Source-format coverage for the parquet read path: the events reader
+adapts to the timestamp encoding, and the schema memo re-infers exactly
+when a file or a conf changes."""
 
 from __future__ import annotations
 
@@ -163,109 +164,3 @@ def test_snapshot_read_after_commit_launches_no_job(spark, tmp_path):
     inferred = read_parquet(spark, parted).schema
     df, jobs = _jobs_in(spark, lambda: read_parquet(spark, parted))
     assert jobs == 0 and df.schema == inferred
-
-from pyspark.sql import functions as F
-
-from inbev_data_engineering_case_spark.sources.readers import (
-    read_jsonl,
-    read_orc,
-    read_parquet_table,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-def _docs(spark):
-    return read_parquet_table(spark, SF, "documents")
-
-
-def test_jsonl_round_trip(spark, tmp_path):
-    docs = _docs(spark)
-    path = str(tmp_path / "docs_jsonl")
-    docs.write.json(path)
-    back = read_jsonl(spark, path, docs.schema).drop("_corrupt_record")
-    assert back.schema == docs.schema
-    assert back.exceptAll(docs).count() == 0
-    assert docs.exceptAll(back).count() == 0
-
-
-def test_jsonl_quarantines_corrupt_records(spark, tmp_path):
-    docs = _docs(spark)
-    path = str(tmp_path / "docs_bad")
-    docs.write.json(path)
-    (tmp_path / "docs_bad" / "bad.json").write_text(
-        '{"doc_id": 1, "text": "ok"}\n{not json at all\n'
-    )
-    # Spark disallows queries touching ONLY _corrupt_record on raw JSON
-    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — cache the
-    # parsed result first, as its own error message prescribes.
-    back = read_jsonl(spark, str(path), docs.schema).cache()
-    try:
-        bad = back.filter(F.col("_corrupt_record").isNotNull())
-        assert bad.count() == 1
-        assert "not json" in bad.first()["_corrupt_record"]
-        good = back.filter(F.col("_corrupt_record").isNull())
-        assert good.count() == docs.count() + 1
-    finally:
-        back.unpersist()
-
-
-def test_orc_round_trip(spark, tmp_path):
-    docs = _docs(spark)
-    path = str(tmp_path / "docs_orc")
-    docs.write.orc(path)
-    back = read_orc(spark, path)
-    assert back.schema == docs.schema
-    assert back.exceptAll(docs).count() == 0
-    assert docs.exceptAll(back).count() == 0
-
-
-def test_read_parquet_evolving_reconciles_drift(spark, tmp_path):
-    """Two snapshots with drifted schemas (grown column, dropped column,
-    widened type) reconcile onto the expected schema: missing -> typed
-    nulls, extra -> dropped, type drift -> try_cast; the report names
-    the drift per path."""
-    from pyspark.sql import types as T
-
-    from inbev_data_engineering_case_spark.sources.readers import (
-        read_parquet_evolving,
-    )
-
-    old = str(tmp_path / "day1")
-    new = str(tmp_path / "day2")
-    spark.createDataFrame(
-        [(1, "a", 10)], "id long, name string, score int"
-    ).write.parquet(old)
-    # day2: dropped `score`, added `lang`, `id` arrives as string
-    spark.createDataFrame(
-        [("2", "b", "en")], "id string, name string, lang string"
-    ).write.parquet(new)
-
-    expected = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("score", T.IntegerType()),
-        ]
-    )
-    df, report = read_parquet_evolving(spark, [old, new], expected)
-    assert [f.dataType for f in df.schema.fields] == [
-        T.LongType(), T.StringType(), T.IntegerType()
-    ]
-    rows = {r["id"]: r for r in df.collect()}
-    assert rows[1]["score"] == 10
-    assert rows[2]["score"] is None  # missing column -> typed null
-    assert rows[2]["name"] == "b"
-    by_path = {r["path"]: r for r in report}
-    assert by_path[old] == {"path": old, "extra": [], "missing": []}
-    assert by_path[new]["extra"] == ["lang"]
-    assert by_path[new]["missing"] == ["score"]
-
-    # a malformed value under try_cast lands as null, not a job failure
-    bad = str(tmp_path / "bad")
-    spark.createDataFrame(
-        [("not-a-number", "c")], "id string, name string"
-    ).write.parquet(bad)
-    df2, _ = read_parquet_evolving(spark, [bad], expected)
-    row = df2.first()
-    assert row["id"] is None and row["name"] == "c"

@@ -249,63 +249,6 @@ def test_advance_session_properties():
     run()
 
 
-def test_foreachbatch_parquet_sink_is_replay_safe(spark, event_dir, tmp_path):
-    from inbev_data_engineering_case_spark.streaming.events import (
-        run_stream_to_parquet_idempotent,
-    )
-
-    schema = spark.read.parquet(event_dir).schema
-    stream = spark.readStream.schema(schema).parquet(event_dir)
-    # append-shaped stream (cleansed event landing) — the recipe's use case
-    out = stream.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    run_stream_to_parquet_idempotent(out, sink, ckpt)
-    first = sorted(
-        tuple(r)
-        for r in spark.read.parquet(sink).drop("batch_id").collect()
-    )
-    batch_rows = sorted(
-        tuple(r)
-        for r in spark.read.parquet(event_dir)
-        .filter(F.col("event_type") == "click")
-        .select("event_id", "user_id", "ts", "value")
-        .collect()
-    )
-    assert first == batch_rows and len(first) == 4
-
-    # drain again with the same checkpoint: offsets are committed, so no
-    # new batch runs and nothing is duplicated
-    stream2 = spark.readStream.schema(schema).parquet(event_dir)
-    out2 = stream2.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    run_stream_to_parquet_idempotent(out2, sink, ckpt)
-    again = sorted(
-        tuple(r)
-        for r in spark.read.parquet(sink).drop("batch_id").collect()
-    )
-    assert again == first
-
-    # simulate the crash window (batch written, checkpoint offset NOT
-    # committed -> the batch replays): re-writing the same batch id
-    # overwrites its directory instead of appending duplicates
-    batch0 = spark.read.parquet(f"{sink}/batch_id=0")
-    rows, schema0 = batch0.collect(), batch0.schema  # materialize first:
-    # can't lazily read and overwrite the same directory
-    spark.createDataFrame(rows, schema0).write.mode("overwrite").parquet(
-        f"{sink}/batch_id=0"
-    )
-    after_replay = sorted(
-        tuple(r)
-        for r in spark.read.parquet(sink).drop("batch_id").collect()
-    )
-    assert after_replay == first
-
-
 def test_stream_dedup_crash_recovery_exactly_once(spark, tmp_path):
     """Crash-recovery, not just batch replay: the dedup query FAILS after
     its sink write but before the checkpoint commit (the real crash
@@ -685,16 +628,13 @@ def test_stream_cms_partials_bit_identical_and_replay_safe(spark, tmp_path):
     """Append-mode CMS maintenance: only watermark-closed buckets emit
     (bounded state), every landed (bucket, r, c, cnt) row is IDENTICAL
     to the batch-built partial — exact counts over deterministic
-    hashes, so the identity is bitwise, not statistical — estimates
-    from streamed partials match estimates from batch partials, and a
-    REPLAYED drain through the idempotent parquet sink leaves the
-    partial table unchanged."""
+    hashes, so the identity is bitwise, not statistical — and estimates
+    from streamed partials match estimates from batch partials."""
     from inbev_data_engineering_case_spark.operators.sketches import (
         cms_estimate,
         cms_partials,
     )
     from inbev_data_engineering_case_spark.streaming.events import (
-        run_stream_to_parquet_idempotent,
         stream_cms_partials,
     )
 
@@ -745,19 +685,6 @@ def test_stream_cms_partials_bit_identical_and_replay_safe(spark, tmp_path):
     }
     assert est[1] >= 3  # one-sided guarantee holds through the stream
     assert est[4] >= 2  # present in both closed days
-
-    # replay safety: drain through the idempotent parquet sink twice
-    # (second start reuses the checkpoint -> no new batches, same rows)
-    sink = str(tmp_path / "cms_sink")
-    ckpt = str(tmp_path / "cms_ckpt")
-    out2 = stream_cms_partials(
-        spark.readStream.schema(df.schema).parquet(src),
-        watermark="2 hours",
-    )
-    run_stream_to_parquet_idempotent(out2, sink, ckpt)
-    first = sorted(map(tuple, spark.read.parquet(sink).collect()))
-    run_stream_to_parquet_idempotent(out2, sink, ckpt)
-    assert sorted(map(tuple, spark.read.parquet(sink).collect())) == first
 
 
 def test_lateness_metrics_report_watermark_drops(spark, tmp_path):

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.operators.dedup import (
+    DEFAULT_MAX_BUCKET_SIZE,
     exact_dedup,
     jaccard_similarity,
     minhash_dedup_pairs,
@@ -403,13 +404,12 @@ def test_lineage_cuts_checkpoint_dir_identical_and_rounds(spark, tmp_path):
                 map(tuple, multi_source_bfs(edges, seeds).collect())
             ),
             # n_iter >= 2 cuts the loop invariants, the teleport variant
-            # cuts every other iteration, checkpoint_every cuts ranks
+            # cuts every other iteration
             "pagerank": sorted(
                 map(
                     tuple,
                     pagerank(
-                        edges, n_iter=5, checkpoint_every=2,
-                        redistribute_dangling=True,
+                        edges, n_iter=5, redistribute_dangling=True
                     ).collect(),
                 )
             ),
@@ -1597,26 +1597,6 @@ def test_ann_index_roundtrip_identical_to_direct_path(spark, tmp_path):
     assert len(snaps) == 2  # retention (default 2) pruned the first
 
 
-def test_train_pq_codebooks_deterministic_and_usable(spark):
-    from inbev_data_engineering_case_spark.operators.similarity import (
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).filter(F.col("vec_id") < 100)
-    m, k = 2, 4
-    book = train_pq_codebooks(emb, m=m, k=k, n_iter=1)
-    rows = sorted(map(tuple, book.collect()))
-    again = sorted(map(tuple, train_pq_codebooks(emb, m=m, k=k, n_iter=1).collect()))
-    assert rows == again  # rounded means -> bit-identical retrain
-    assert {r[0] for r in rows} == set(range(m))
-
-    codes = pq_encode(emb, book, m=m, k=k)
-    assert codes.count() == emb.count() * m
-
-
 def test_mixture_sample_hits_target_composition(spark):
     """Data-mixing resampling: the achieved output composition tracks the
     target weights, the scarcest stratum binds (its rate is ~1), rates are
@@ -1899,7 +1879,14 @@ def test_incremental_minhash_recrawl_overlap(spark):
     assert len(rows) == 1 and rows[0]["est_jaccard"] >= 0.5
 
 
-def test_hot_bucket_guard_bounds_pair_counts(spark):
+# the hot-bucket cap every guarded dedup operator reads per call
+_CAP = (
+    "inbev_data_engineering_case_spark.operators.dedup."
+    "DEFAULT_MAX_BUCKET_SIZE"
+)
+
+
+def test_hot_bucket_guard_bounds_pair_counts(spark, monkeypatch):
     """Degenerate template-heavy corpus: every doc shares one long
     boilerplate prefix + a unique tail, so (uncapped) every band bucket
     holds the whole corpus and the self-join goes quadratic. With the cap,
@@ -1918,8 +1905,9 @@ def test_hot_bucket_guard_bounds_pair_counts(spark):
             "text"
         ),
     )
-    uncapped = minhash_dedup_pairs(docs, max_bucket_size=None).count()
-    capped_df = minhash_dedup_pairs(docs, max_bucket_size=50)
+    uncapped = minhash_dedup_pairs(docs).count()  # n is below the cap
+    monkeypatch.setattr(_CAP, 50)
+    capped_df = minhash_dedup_pairs(docs)
     capped = capped_df.count()
     assert uncapped >= n * (n - 1) // 2  # quadratic blow-up is real
     assert capped <= 2 * n  # star pairs: linear in bucket size
@@ -1929,25 +1917,26 @@ def test_hot_bucket_guard_bounds_pair_counts(spark):
     assert comps.count() == n
 
 
-def test_hot_bucket_guard_is_identity_below_cap(spark, docs):
+def test_hot_bucket_guard_is_identity_below_cap(spark, docs, monkeypatch):
     """On a corpus whose buckets all sit below the cap, the guarded and
     unguarded pipelines are row-identical — the guard only changes hot
     buckets (this also covers the driver fixtures, where the default cap
     never engages and oracle parity is exact)."""
+    import sys
+
     rows = lambda df: sorted(map(tuple, df.collect()))
-    assert rows(minhash_dedup_pairs(docs, max_bucket_size=None)) == rows(
-        minhash_dedup_pairs(docs, max_bucket_size=10_000)
-    )
-    assert rows(
-        simhash_near_pairs(docs, max_hamming=6, bucket_bits=1,
-                           max_bucket_size=None)
-    ) == rows(
-        simhash_near_pairs(docs, max_hamming=6, bucket_bits=1,
-                           max_bucket_size=10_000)
-    )
+    guarded = [
+        rows(minhash_dedup_pairs(docs)),
+        rows(simhash_near_pairs(docs, max_hamming=6, bucket_bits=1)),
+    ]
+    monkeypatch.setattr(_CAP, sys.maxsize)  # no bucket can go hot
+    assert guarded == [
+        rows(minhash_dedup_pairs(docs)),
+        rows(simhash_near_pairs(docs, max_hamming=6, bucket_bits=1)),
+    ]
 
 
-def test_hot_bucket_guard_simhash_star_links(spark):
+def test_hot_bucket_guard_simhash_star_links(spark, monkeypatch):
     """Identical texts share one SimHash bucket AND signature; with a cap
     below the group size the bucket emits exactly n-1 star pairs at
     hamming 0."""
@@ -1958,9 +1947,8 @@ def test_hot_bucket_guard_simhash_star_links(spark):
             "text"
         ),
     )
-    pairs = simhash_near_pairs(
-        docs, max_hamming=3, bucket_bits=4, max_bucket_size=10
-    ).collect()
+    monkeypatch.setattr(_CAP, 10)
+    pairs = simhash_near_pairs(docs, max_hamming=3, bucket_bits=4).collect()
     assert len(pairs) == n - 1
     assert all(r["id_a"] == 0 and r["hamming"] == 0 for r in pairs)
 
@@ -3593,7 +3581,7 @@ def test_distribution_drift_approx_cuts_within_gk_rank_error(spark):
 
 
 @pytest.mark.slow
-def test_incremental_embedding_near_dup_full_batch_parity(spark):
+def test_incremental_embedding_near_dup_full_batch_parity(spark, monkeypatch):
     """incremental_embedding_near_dup_normalized(stored (vectors,
     buckets), new vectors) must return EXACTLY the
     embedding_near_dup_pairs(stored ∪ new) rows involving a new vector —
@@ -3631,12 +3619,13 @@ def test_incremental_embedding_near_dup_full_batch_parity(spark):
     ).select(F.col("id").alias("vec_id"), "embedding")
     new = near.unionByName(flood)
 
-    for kw in (
-        dict(threshold=0.9, num_planes=8, n_probes=1, max_bucket_size=10),
-        dict(threshold=0.9, num_planes=6, n_probes=2, max_bucket_size=10),
-        dict(threshold=0.9, num_planes=8, n_probes=1,
-             max_bucket_size=None),
+    for cap, kw in (
+        (10, dict(threshold=0.9, num_planes=8, n_probes=1)),
+        (10, dict(threshold=0.9, num_planes=6, n_probes=2)),
+        (DEFAULT_MAX_BUCKET_SIZE, dict(threshold=0.9, num_planes=8,
+                                       n_probes=1)),
     ):
+        monkeypatch.setattr(_CAP, cap)
         full = embedding_near_dup_pairs(stored.unionByName(new), **kw)
         want = sorted(
             map(
@@ -3657,7 +3646,7 @@ def test_incremental_embedding_near_dup_full_batch_parity(spark):
                 ).collect(),
             )
         )
-        assert got == want and got, kw
+        assert got == want and got, (cap, kw)
 
 
 def test_embedding_sig_table_normalized_storage_parity(spark):
@@ -3704,7 +3693,7 @@ def test_embedding_sig_table_normalized_storage_parity(spark):
     assert len(want) == 3 * stored.count()
 
 
-def test_incremental_simhash_full_batch_parity(spark):
+def test_incremental_simhash_full_batch_parity(spark, monkeypatch):
     """incremental_simhash_near_pairs(stored sig table, new crawl)
     must return EXACTLY the simhash_near_pairs(stored ∪ new) rows
     involving a new document — including when identical templates
@@ -3734,11 +3723,12 @@ def test_incremental_simhash_full_batch_parity(spark):
         ),
     )
     new = near.unionByName(flood)
-    for kw in (
-        dict(max_hamming=6, bits=60, bucket_bits=8, max_bucket_size=8),
-        dict(max_hamming=6, bits=60, bucket_bits=8, max_bucket_size=None),
-        dict(max_hamming=3, bits=48, bucket_bits=6, max_bucket_size=8),
+    for cap, kw in (
+        (8, dict(max_hamming=6, bits=60, bucket_bits=8)),
+        (DEFAULT_MAX_BUCKET_SIZE, dict(max_hamming=6, bits=60, bucket_bits=8)),
+        (8, dict(max_hamming=3, bits=48, bucket_bits=6)),
     ):
+        monkeypatch.setattr(_CAP, cap)
         build_kw = dict(bits=kw["bits"], bucket_bits=kw["bucket_bits"])
         full = simhash_near_pairs(docs.unionByName(new), **kw)
         want = sorted(
@@ -3757,7 +3747,7 @@ def test_incremental_simhash_full_batch_parity(spark):
                 ).collect(),
             )
         )
-        assert got == want and got, kw
+        assert got == want and got, (cap, kw)
 
 
 def test_incremental_state_geometry_guards_raise_in_plan(spark):
@@ -3835,7 +3825,7 @@ def test_incremental_state_geometry_guards_raise_in_plan(spark):
 
 
 @pytest.mark.slow
-def test_incremental_embedding_normalized_native_parity(spark):
+def test_incremental_embedding_normalized_native_parity(spark, monkeypatch):
     """incremental_embedding_near_dup_normalized consumes the
     (vectors, buckets) pair directly — vectors joining only for
     candidates — and must return EXACTLY the
@@ -3884,10 +3874,11 @@ def test_incremental_embedding_normalized_native_parity(spark):
     vectors, buckets = build_embedding_sig_tables_normalized(
         stored, num_planes=6, n_probes=3
     )
-    # with and without the hot guard (the cold-only plan)
-    for max_bucket_size in (10, None):
-        kw = dict(threshold=0.9, num_planes=6, n_probes=3,
-                  max_bucket_size=max_bucket_size)
+    # with the hot guard engaged, and at the default cap (the cold-only
+    # plan)
+    kw = dict(threshold=0.9, num_planes=6, n_probes=3)
+    for cap in (10, DEFAULT_MAX_BUCKET_SIZE):
+        monkeypatch.setattr(_CAP, cap)
         want = sorted(
             t
             for t in map(tuple, embedding_near_dup_pairs(
@@ -3896,7 +3887,7 @@ def test_incremental_embedding_normalized_native_parity(spark):
         )
         got = sorted(map(tuple, incremental_embedding_near_dup_normalized(
             vectors, buckets, new, **kw).collect()))
-        assert got == want and got, kw
+        assert got == want and got, cap
     # geometry mismatch raises in-plan
     import pytest
 
@@ -4424,66 +4415,6 @@ def test_curate_corpus_halo_composed_parity(spark):
         ).collect()
     )
     assert got == want
-
-
-def test_decontaminate_halo_standalone(spark):
-    """decontaminate(halo_hops=k, pair_edges=...): the drop set extends
-    transitively over the supplied pair graph; halo_hops without
-    pair_edges is refused; halo_hops=0 equals the plain direct drop."""
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.decontaminate import (
-        decontaminate,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.createDataFrame(
-        [
-            (1, base + " contaminated tail one two three four five six"),
-            (2, base + " paraphrased tail one two three four five six"),
-            (3, base + " another body entirely different words here now"),
-            (4, "totally unrelated text with none of those words at all"),
-        ],
-        "doc_id long, text string",
-    )
-    # benchmark shares an 8-gram ONLY with doc 1
-    bench = spark.createDataFrame(
-        [("contaminated tail one two three four five six",)],
-        "text string",
-    )
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3)], "src long, dst long"
-    )
-
-    plain = {r["doc_id"] for r in decontaminate(docs, bench).collect()}
-    assert plain == {2, 3, 4}
-
-    hop0 = {
-        r["doc_id"]
-        for r in decontaminate(
-            docs, bench, halo_hops=0, pair_edges=edges
-        ).collect()
-    }
-    assert hop0 == plain
-
-    hop1 = {
-        r["doc_id"]
-        for r in decontaminate(
-            docs, bench, halo_hops=1, pair_edges=edges
-        ).collect()
-    }
-    assert hop1 == {3, 4}
-
-    hop2 = {
-        r["doc_id"]
-        for r in decontaminate(
-            docs, bench, halo_hops=2, pair_edges=edges
-        ).collect()
-    }
-    assert hop2 == {4}
-
-    with pytest.raises(ValueError, match="pair_edges"):
-        decontaminate(docs, bench, halo_hops=1)
 
 
 @pytest.mark.slow
