@@ -24,11 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.operators.dedup import (
-    DEFAULT_BAND_SIZE,
     DEFAULT_NUM_HASHES,
     DEFAULT_SHINGLE_WORDS,
-    _band_keys,
+    _MINHASH_EST,
+    _bucket_pairs,
     _ensure_parallelism,
+    _minhash_bands,
     dedup_components,
     dedup_components_incremental,
     exact_dedup,
@@ -1268,85 +1269,39 @@ def incremental_minhash_pairs(
     stored_sigs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_size: int = DEFAULT_BAND_SIZE,
-    shingle_words: int = DEFAULT_SHINGLE_WORDS,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Near-dup pairs of a NEW batch against itself AND against an existing
     corpus represented only by its stored signature table (id, sig) —
     yesterday's corpus text is never re-read or re-hashed.
 
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b — the same
-    least/greatest canonical orientation ``minhash_dedup_pairs`` emits, so
-    incremental output unions cleanly with historical pair tables. A doc
-    re-crawled verbatim (same id in ``stored_sigs`` and the new batch)
-    yields no (x, x) self-pair: the stored-vs-new join filters id equality.
-    Banding matches ``minhash_dedup_pairs``; the candidate join shuffles on
-    band keys, and when ``stored_sigs`` reads from a table bucketed by id
-    the signature fetch itself was already exchange-free."""
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b — exactly the
+    ``minhash_dedup_pairs(stored ∪ new)`` rows that touch a new doc: the
+    banded candidates come from ``_bucket_pairs``' delta mode, whose
+    hot-bucket guard and min-id star representatives evaluate over the
+    combined band population. A doc re-crawled verbatim (same id in
+    ``stored_sigs`` and the new batch) yields no (x, x) self-pair, and
+    stored-vs-new pairs come out canonical whichever side holds the
+    smaller id. When ``stored_sigs`` reads from a table bucketed by id
+    the signature fetch itself is exchange-free."""
     # parallelism guard like minhash_dedup_pairs: a small delta arriving
     # as 1-2 scan splits would pin the compute-bound shingle+hash stage
-    # to 1-2 cores; the cut feeds both banding branches
+    # to 1-2 cores
     new_sigs = materialize(
-        minhash_signatures(
-            _ensure_parallelism(new_docs), text_col, id_col,
-            num_hashes, shingle_words,
-        ),
+        minhash_signatures(_ensure_parallelism(new_docs), text_col, id_col),
         eager=False,
     )
-
-    def banded(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "id",
-            "sig",
-            F.posexplode(_band_keys("sig", band_size)).alias(
-                "band_idx", "band_key"
-            ),
-        )
-
-    new_bands = banded(new_sigs)
-    stored_bands = banded(stored_sigs)
-    matches = F.size(
-        F.filter(
-            F.zip_with("a.sig", "b.sig", lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-
-    def score(joined: DataFrame) -> DataFrame:
-        # least/greatest canonicalizes stored-vs-new pairs whose stored id
-        # exceeds the new id; est_jaccard is symmetric so order is free
-        return joined.select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
-            (matches / F.size("a.sig")).alias("est_jaccard"),
-        ).filter(F.col("est_jaccard") >= threshold)
-
-    # new-vs-stored: stored docs never pair with each other (already done);
-    # id inequality drops (x, x) self-pairs from re-crawled docs
-    vs_stored = score(
-        stored_bands.alias("a").join(
-            new_bands.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-    )
-    # new-vs-new: the ordinary self-join on the new batch only
-    vs_new = score(
-        new_bands.alias("a").join(
-            new_bands.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-    )
-    # ONE distinct over the union instead of one per branch: dedups
-    # multi-band repeats AND the stored∩new overlap (a re-crawled doc makes
-    # the same canonical pair appear in both branches); the exchange carries
-    # only thresholded 24-byte rows
-    return vs_stored.unionByName(vs_new).distinct()
+    sigs = stored_sigs.select("id", "sig", F.lit(False).alias("_new"))
+    sigs = sigs.unionByName(new_sigs.withColumn("_new", F.lit(True)))
+    # ONE distinct over both directed joins: dedups multi-band repeats
+    # AND a re-crawled doc's pair found on both its stored and new row
+    return _bucket_pairs(
+        _minhash_bands(sigs),
+        ["band_idx", "band_key"],
+        F.expr(_MINHASH_EST).alias("est_jaccard"),
+        F.col("est_jaccard") >= threshold,
+        delta=True,
+    ).distinct()
 
 
 def curation_report(

@@ -29,6 +29,11 @@ Scale design (the point of each implementation):
   ``1::BIGINT << 63``).
 - **n-gram Jaccard** (``jaccard_similarity``): exact set similarity used to
   *verify* LSH candidates (cheap, because candidates are few).
+- **Bucketed pairs** (``_bucket_pairs``): the one candidate kernel under
+  the MinHash, SimHash and sign-LSH families and their delta twins —
+  hot-bucket split, cold self-join on the bucket with ``a.id < b.id``,
+  min-id star links for hot buckets, and the directed delta joins. Each
+  family supplies only its signature rows and its verify expression.
 
 All hashes are the portable md5-based ``portable_hash64`` so each operator
 has an exact DuckDB oracle; for engine-internal-only runs ``F.xxhash64``
@@ -36,6 +41,8 @@ would be ~3× faster and is a one-line swap.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -68,7 +75,7 @@ DEFAULT_SHINGLE_WORDS = 3
 # documents into ONE band key or SimHash bucket, making the bucket-local
 # join quadratic in that bucket — the one way LSH degenerates back toward
 # all-pairs at 100 TB. Buckets above the cap switch to star-linking (see
-# ``_split_hot_buckets``). 10k² /2 = 5e7 comparisons is the most any
+# ``_bucket_pairs``). 10k² /2 = 5e7 comparisons is the most any
 # single bucket may cost before the fallback engages.
 DEFAULT_MAX_BUCKET_SIZE = 10_000
 
@@ -143,60 +150,86 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def _split_hot_buckets(
-    rows: DataFrame, keys: list[str]
-) -> tuple[DataFrame, DataFrame | None]:
-    """Split bucketed rows into (cold, hot) by per-bucket row count
-    against ``DEFAULT_MAX_BUCKET_SIZE`` (read per call); ``hot`` is None
-    on the (common) empty fast path so callers keep the exact unguarded
-    plan.
+def _bucket_pairs(
+    rows: DataFrame,
+    bucket_cols: list[str],
+    score: Column | None = None,
+    keep: Column | None = None,
+    delta: bool = False,
+) -> DataFrame:
+    """Pairs of ``rows`` that share a bucket, as ``(id_a, id_b[, score])``
+    with ``id_a < id_b``, filtered by ``keep``. ``rows`` carry ``id``,
+    the ``bucket_cols`` and the value columns the aliased ``score``
+    Column reads as ``a.<col>``/``b.<col>`` (no ``score``: id-only
+    pairs); ``keep`` is a predicate over the output columns.
 
-    The count is a groupBy with map-side partial aggregation (the exchange
-    carries one row per distinct bucket per map task, never the data), and
-    only buckets ABOVE the cap survive the filter — by construction at most
-    ``total_rows / DEFAULT_MAX_BUCKET_SIZE`` of them, so the key table is
-    tiny and AQE broadcasts the flagging join: the data rows themselves
-    are never shuffled to be classified.
+    **Hot buckets.** Buckets above ``DEFAULT_MAX_BUCKET_SIZE`` (read per
+    call) star-link: each member pairs only with the bucket's min-id
+    representative (n-1 pairs, not n(n-1)/2) under the same verify.
+    Every member still reaches the representative, so components of
+    true-duplicate buckets, which hot buckets overwhelmingly are, are
+    unchanged; a pair similar to each other but not to the
+    representative is missed in that bucket. The common case of no hot
+    bucket costs one probe — ``isEmpty`` over a map-side-partial
+    per-bucket count — and keeps the exact unguarded self-join plan;
+    only oversized buckets materialize the tiny hot-key table and the
+    flagged rows every join side then shares.
 
-    Hot-bucket handling downstream is **star-linking**: every member pairs
-    with the bucket's min-id representative only (n-1 pairs instead of
-    n(n-1)/2), then passes the same exact similarity verification as a
-    cold pair. This is the published-practice fallback for template-heavy
-    corpora: connectivity is preserved (every member reachable through the
-    representative, so connected-components grouping is unchanged for
-    buckets of true duplicates — which is what hot buckets overwhelmingly
-    are), while the pair count per bucket drops from quadratic to linear.
-    The recall trade: a pair similar to each other but NOT to the
-    representative inside a hot bucket is missed in that bucket (it can
-    still surface from any other band/bucket it shares)."""
-    # The common case is ZERO hot buckets, and the guard must cost almost
-    # nothing there: probe the (normally empty) hot-keys aggregate with
-    # isEmpty — ONE extra job running just the count aggregate, map-side
-    # partial so the exchange carries one row per distinct bucket per
-    # task, take(1)-bounded on the read side, and NO materialization (in
-    # a session with a checkpoint dir an unconditional materialize would
-    # write a scratch parquet table per banded join just to discover it
-    # is empty). When empty, return the rows untouched so the downstream
-    # self-join keeps the exact unguarded plan (no flag join on either
-    # side, no empty star branch). Only corpora that actually have
-    # oversized buckets materialize: the counts once (recomputing the
-    # cheap aggregate the probe already ran, rather than persisting on
-    # the off chance), then the flagged table once so its 4 consumers
-    # (both join sides, hot, reps) share one evaluation.
+    **Delta mode** (``delta=True``): rows carry a boolean ``_new`` and
+    only pairs touching a new row form, as two directed joins — new ×
+    all and stored × new, both ``a.id < b.id`` — for the cold rows and
+    for (representative × member) star links alike. The split and the
+    representatives see the combined population, so the output is
+    exactly the full-batch pairs that touch a new row; a stored id
+    re-crawled as new never pairs with itself."""
+    values = [c for c in rows.columns if c not in {"id", "_new", *bucket_cols}]
     counts = (
-        rows.groupBy(*keys)
+        rows.groupBy(*bucket_cols)
         .agg(F.count("*").alias("_bucket_n"))
         .filter(F.col("_bucket_n") > DEFAULT_MAX_BUCKET_SIZE)
     )
-    if counts.isEmpty():
-        return rows, None
-    counts = materialize(counts, eager=False)
-    flagged = materialize(
-        rows.join(counts, keys, "left"), eager=False
-    )
-    cold = flagged.filter(F.col("_bucket_n").isNull()).drop("_bucket_n")
-    hot = flagged.filter(F.col("_bucket_n").isNotNull()).drop("_bucket_n")
-    return cold, hot
+    hot = None
+    if not counts.isEmpty():
+        flagged = materialize(
+            rows.join(materialize(counts, eager=False), bucket_cols, "left"),
+            eager=False,
+        )
+        rows = flagged.filter(F.col("_bucket_n").isNull()).drop("_bucket_n")
+        hot = flagged.filter(F.col("_bucket_n").isNotNull()).drop("_bucket_n")
+    out = [F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")]
+    if score is not None:
+        out.append(score)
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols]
+    on = reduce(lambda x, y: x & y, on) & (F.col("a.id") < F.col("b.id"))
+
+    def join(a: DataFrame, b: DataFrame) -> DataFrame:
+        return a.alias("a").join(b.alias("b"), on).select(*out)
+
+    def pairs(a: DataFrame, b: DataFrame) -> DataFrame:
+        if not delta:
+            return join(a, b)
+        new = F.col("_new")
+        return join(a.filter(new), b).unionByName(
+            join(a.filter(~new), b.filter(new))
+        )
+
+    result = pairs(rows, rows)
+    if hot is not None:
+        # one representative row per hot bucket: partial min/min_by map-side,
+        # so the skewed bucket never concentrates on one reducer; the tiny
+        # table then broadcasts back onto the hot rows
+        reps = [F.min("id").alias("id")]
+        reps += [F.min_by(c, "id").alias(c) for c in values]
+        if delta:
+            reps.append(
+                F.min(F.when(F.col("_new"), F.col("id")))
+                .eqNullSafe(F.min("id"))
+                .alias("_new")
+            )
+        result = result.unionByName(
+            pairs(hot.groupBy(*bucket_cols).agg(*reps), hot)
+        )
+    return result if keep is None else result.filter(keep)
 
 
 def exact_dedup(
@@ -221,13 +254,6 @@ def shingle_set(text: Column | str, n: int = DEFAULT_SHINGLE) -> Column:
     return F.array_distinct(char_ngrams(normalize_for_fingerprint(text), n))
 
 
-def word_shingle_set(
-    text: Column | str, n: int = DEFAULT_SHINGLE_WORDS
-) -> Column:
-    """Distinct word n-gram shingles of the normalized text."""
-    return F.array_distinct(word_ngrams(normalize_for_fingerprint(text), n))
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -245,8 +271,8 @@ def minhash_signatures(
     projection so the shingling itself also runs once, not per k.
 
     Both projections are built as SQL text and parsed with one
-    ``selectExpr`` each (r16 optimization round, the ``signlsh``/
-    ``simhash`` discipline): the Column-API form paid ~0.3s of py4j tree
+    ``selectExpr`` each, as ``signlsh`` and ``simhash`` are: the
+    Column-API form paid ~0.3s of py4j tree
     construction per plan build — every run of every minhash consumer —
     for the identical parsed tree (same CASE/transform shingle shape,
     same conv/md5 hash chain, same int literals; value parity pinned by
@@ -278,50 +304,25 @@ def minhash_signatures(
     return hashed.selectExpr("id", f"{sig} AS sig")
 
 
-def _band_keys(sig_col: str, band_size: int) -> Column:
-    """array<string> of band keys: each is the ':'-joined slots of one
-    ``band_size``-wide slice of the signature. One ``F.expr`` parse of
-    the identical tree (r16 — the minhash_signatures discipline;
-    ``sig_col`` is an unqualified column name by the string-fast-path
-    contract)."""
-    from inbev_data_engineering_case_spark.functions import sql_ident
-
-    sig = sql_ident(sig_col)
-    return F.expr(
-        f"transform(sequence(0, CAST(floor(size({sig}) / {band_size})"
-        f" AS INT) - 1), b -> concat_ws(':',"
-        f" CAST(slice({sig}, b * {band_size} + 1, {band_size})"
-        " AS ARRAY<STRING>)))"
-    )
+# Estimated Jaccard of a banded candidate pair: the fraction of equal
+# minhash slots, as raw IEEE division (bit-identical across engines).
+_MINHASH_EST = (
+    "size(filter(zip_with(a.sig, b.sig, (x, y) -> x = y), eq -> eq))"
+    " / size(a.sig)"
+)
 
 
-def signature_similarity(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
-    """Estimated Jaccard = fraction of equal minhash slots, joined back onto
-    candidate pairs. Two broadcast-able joins when the signature table of
-    the candidate ids is small; otherwise shuffle joins on id."""
-    sig_a = signatures.select(
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
+def _minhash_bands(sigs: DataFrame) -> DataFrame:
+    """``sigs`` with one row per LSH band: ``band_idx`` and ``band_key``,
+    the ':'-joined slots of one ``DEFAULT_BAND_SIZE``-wide slice of
+    ``sig``. The band keys are one ``F.expr`` parse."""
+    keys = F.expr(
+        "transform(sequence(0, CAST(floor(size(sig) / "
+        f"{DEFAULT_BAND_SIZE}) AS INT) - 1), b -> concat_ws(':',"
+        f" CAST(slice(sig, b * {DEFAULT_BAND_SIZE} + 1,"
+        f" {DEFAULT_BAND_SIZE}) AS ARRAY<STRING>)))"
     )
-    sig_b = signatures.select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b")
-    )
-    matches = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    return (
-        pairs.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # raw IEEE division (k / num_hashes): bit-identical across
-            # engines; round() tie rules are not
-            (matches / F.size("sig_a")).alias("est_jaccard"),
-        )
-    )
+    return sigs.select("*", F.posexplode(keys).alias("band_idx", "band_key"))
 
 
 def minhash_dedup_pairs(
@@ -330,16 +331,15 @@ def minhash_dedup_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signatures → banded candidates →
-    signature-similarity filter ≥ threshold.
+    """Full MinHash-LSH near-dup pipeline: signatures → banded candidates
+    (``_bucket_pairs`` on ``(band_idx, band_key)``) → signature-similarity
+    filter ≥ threshold.
 
     The signature array rides along through the band explode and the
     self-join, so the (expensive) shingle+hash subtree is evaluated exactly
-    once and the similarity needs no join back onto the signature table —
-    the naive compose (band join, then ``signature_similarity``)
-    evaluates signatures three times. The shuffle key is still the band
-    key; each row just carries ``DEFAULT_NUM_HASHES`` extra longs (~64
-    bytes).
+    once and the similarity needs no join back onto the signature table.
+    The shuffle key is still the band key; each row just carries
+    ``DEFAULT_NUM_HASHES`` extra longs (~64 bytes).
 
     Similarity is computed and thresholded BEFORE the pair-dedup
     ``distinct``: the estimate is a pure function of the pair, so the
@@ -348,73 +348,18 @@ def minhash_dedup_pairs(
     sub-threshold candidates never enter that shuffle at all — at 100 TB
     the band join's output is the biggest intermediate in the pipeline.
 
-    The hot-bucket guard (``_split_hot_buckets``): band buckets above
-    ``DEFAULT_MAX_BUCKET_SIZE`` star-link to their min-id representative
-    instead of all-pairs joining, bounding any single bucket's cost to
-    linear. Star pairs pass the SAME signature-similarity threshold.
-
     The signature table is shared between the self-join's sides through
     ``session.materialize``."""
     sigs = materialize(
-        minhash_signatures(
-            _ensure_parallelism(df),
-            text_col,
-            id_col,
-            DEFAULT_NUM_HASHES,
-            DEFAULT_SHINGLE_WORDS,
-        ),
+        minhash_signatures(_ensure_parallelism(df), text_col, id_col),
         eager=False,
     )
-    bands = sigs.select(
-        "id",
-        "sig",
-        F.posexplode(_band_keys("sig", DEFAULT_BAND_SIZE)).alias(
-            "band_idx", "band_key"
-        ),
-    )
-
-    def est(sig_a: str, sig_b: str) -> Column:
-        # raw IEEE division: bit-identical across engines. One F.expr
-        # parse of the identical zip_with/filter tree (r16); the names
-        # are the local join aliases, so qualified refs parse exactly
-        # as the F.col forms resolved.
-        return F.expr(
-            f"size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y),"
-            f" eq -> eq)) / size({sig_a})"
-        )
-
-    cold, hot = _split_hot_buckets(bands, ["band_idx", "band_key"])
-    a, b = cold.alias("a"), cold.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        est("a.sig", "b.sig").alias("est_jaccard"),
-    )
-    if hot is not None:
-        # one (rep_id, rep_sig) row per hot bucket: partial min/min_by
-        # aggregation map-side, so the skewed bucket never concentrates on
-        # one reducer; the tiny rep table then AQE-broadcasts back onto the
-        # hot rows — the hot data itself is never reshuffled
-        reps = hot.groupBy("band_idx", "band_key").agg(
-            F.min("id").alias("rep_id"),
-            F.min_by("sig", "id").alias("rep_sig"),
-        )
-        star = (
-            hot.join(reps, ["band_idx", "band_key"])
-            .filter(F.col("id") != F.col("rep_id"))
-            .select(
-                F.col("rep_id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                est("rep_sig", "sig").alias("est_jaccard"),
-            )
-        )
-        pairs = pairs.unionByName(star)
-    return pairs.filter(F.col("est_jaccard") >= threshold).distinct()
+    return _bucket_pairs(
+        _minhash_bands(sigs),
+        ["band_idx", "band_key"],
+        F.expr(_MINHASH_EST).alias("est_jaccard"),
+        F.col("est_jaccard") >= threshold,
+    ).distinct()
 
 
 def jaccard_similarity(
@@ -450,11 +395,11 @@ def token_hashes(text: Column | str) -> Column:
     return F.transform(toks, lambda t: portable_hash64(t))
 
 
-def simhash_from_hashes(hashes: Column | str, bits: int = 60) -> Column:
-    """SimHash signature from a token-hash array column: bit b of the
-    output is the sign of the majority vote of bit b over all hashes.
-    One array aggregate with an array<long> vote accumulator — a single
-    pass over the tokens regardless of ``bits``.
+def simhash_from_hashes(hashes: str, bits: int = 60) -> Column:
+    """SimHash signature from the token-hash array column named
+    ``hashes``: bit b of the output is the sign of the majority vote of
+    bit b over all hashes. One array aggregate with an array<long> vote
+    accumulator — a single pass over the tokens regardless of ``bits``.
 
     Default 60 bits = the full width of ``portable_hash64`` (see module
     docstring): at billions of documents a 32-bit signature
@@ -462,58 +407,31 @@ def simhash_from_hashes(hashes: Column | str, bits: int = 60) -> Column:
     than 60 is impossible for this hash family — those hash bits are
     never set, so their majority vote is constant.
 
-    With a string column name the expression is built as ONE ``F.expr``
-    parse (r15 wave 3): the Column-API form cost 0.89s of py4j
-    round-trips per plan build (60 mask literals + a 60-term sum chain,
-    each term re-referencing the votes subtree), while the SQL form
-    parses in milliseconds and references the votes array exactly once
-    (bit-for-bit identical: integer votes, same per-bit majority rule,
-    NULL token arrays still hash to 0 via the explicit coalesce —
-    parity-tested against the Column path). The string form treats the
-    name as one UNQUALIFIED top-level column — it is backtick-quoted as
-    a single identifier, so a dotted name is NOT resolved as a struct
-    field or alias-qualified path the way ``F.col`` would (r15 ADVICE);
-    pass a Column for nested references."""
-    if isinstance(hashes, str):
-        h = "`" + hashes.replace("`", "``") + "`"
-        masks_sql = ",".join(f"{1 << b}L" for b in range(bits))
-        votes_sql = (
-            f"aggregate({h}, array_repeat(CAST(0 AS BIGINT), {bits}),"
-            f" (acc, hh) -> zip_with(acc, transform(array({masks_sql}),"
-            " m -> CASE WHEN (hh & m) != 0 THEN CAST(1 AS BIGINT)"
-            " ELSE CAST(-1 AS BIGINT) END), (a, v) -> a + v))"
-        )
-        return F.expr(
-            f"coalesce(aggregate(zip_with({votes_sql},"
-            f" sequence(0, {bits - 1}),"
-            " (v, b) -> CASE WHEN v > 0 THEN"
-            " shiftleft(CAST(1 AS BIGINT), b)"
-            " ELSE CAST(0 AS BIGINT) END),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x),"
-            " CAST(0 AS BIGINT))"
-        )
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                masks,
-                lambda m: F.when(
-                    h.bitwiseAND(m) != 0, F.lit(1).cast("long")
-                ).otherwise(F.lit(-1).cast("long")),
-            ),
-            lambda a, v: a + v,
-        ),
+    The expression is ONE ``F.expr`` parse: a Column-API tree cost 0.89s
+    of py4j round-trips per plan build (60 mask literals + a 60-term sum
+    chain, each term re-referencing the votes subtree), while the SQL
+    form parses in milliseconds and references the votes array exactly
+    once. NULL token arrays hash to 0 via the explicit coalesce.
+    ``hashes`` is one UNQUALIFIED top-level column: it is
+    backtick-quoted as a single identifier, so a dotted name is not
+    resolved as a struct field or alias-qualified path."""
+    h = "`" + hashes.replace("`", "``") + "`"
+    masks_sql = ",".join(f"{1 << b}L" for b in range(bits))
+    votes_sql = (
+        f"aggregate({h}, array_repeat(CAST(0 AS BIGINT), {bits}),"
+        f" (acc, hh) -> zip_with(acc, transform(array({masks_sql}),"
+        " m -> CASE WHEN (hh & m) != 0 THEN CAST(1 AS BIGINT)"
+        " ELSE CAST(-1 AS BIGINT) END), (a, v) -> a + v))"
     )
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out + F.when(
-            F.element_at(votes, b + 1) > 0, F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return out
+    return F.expr(
+        f"coalesce(aggregate(zip_with({votes_sql},"
+        f" sequence(0, {bits - 1}),"
+        " (v, b) -> CASE WHEN v > 0 THEN"
+        " shiftleft(CAST(1 AS BIGINT), b)"
+        " ELSE CAST(0 AS BIGINT) END),"
+        " CAST(0 AS BIGINT), (acc, x) -> acc + x),"
+        " CAST(0 AS BIGINT))"
+    )
 
 
 def dedup_components_with_stats(
@@ -544,24 +462,23 @@ def dedup_components_with_stats(
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    # NOTE (r15 A/B): pre-partitioning this checkpoint on the hop-join
+    # NOTE (measured A/B): pre-partitioning this checkpoint on the hop-join
     # key (`.repartition("src")`, to spare the per-round edge shuffle)
     # measured a 1.5× LOSS on the curate lines — the fixed-width
     # repartition defeats AQE's size-adaptive coalescing and every
     # round then runs at full task width over a small table. The
     # distinct()'s own partitioning + AQE sizing is the faster shape.
     #
-    # r16 restructure — ONE action per round instead of two, with every
-    # cut LAZY and materialized by the convergence aggregate the loop
-    # already pays (the r15 ``materialize(eager=)`` contract,
-    # applied everywhere by making every intermediate single-reference
-    # at materialization time):
+    # ONE action per round, with every cut LAZY and materialized by
+    # the convergence aggregate the loop already pays (the
+    # ``materialize(eager=)`` contract, applied everywhere by making
+    # every intermediate single-reference at materialization time):
     #
     # - SELF-LOOPS are unioned into the (symmetrized, deduped) edge
     #   list. The hop then reads ``min(src-label) grouped by dst`` in
     #   one join — the old ``... unionByName(labels)`` self-term, which
     #   referenced the lazily-cut labels TWICE in one plan (the exact
-    #   shape the r15 A/B measured as a 2× recompute loss under AQE),
+    #   shape an A/B measured as a 2× recompute loss under AQE),
     #   becomes the self-loop rows instead: same row volume into the
     #   aggregate, labels referenced ONCE.
     # - The convergence sum runs on the HOP output (neighbor_min), not
@@ -595,7 +512,7 @@ def dedup_components_with_stats(
         .distinct(),
         eager=False,
     )
-    # Fused first propagation (r15 optimization round): under identity
+    # Fused first propagation: under identity
     # labels, round 1's neighbor-min is a pure function of the edge list
     # — nm1(v) = min(v, min neighbors(v)) — one join-free aggregate
     # instead of a full first round. With self-loops in the edge list
@@ -663,9 +580,9 @@ def dedup_components_with_stats(
         )
         cur_sum, _ = label_sum(neighbor_min)
         if cur_sum == prev_sum:
-            # hop fixed point: the jump is the identity (see the r16
-            # restructure note above) — neighbor_min IS the converged
-            # minimal labeling, already materialized by the sum.
+            # hop fixed point: the jump is the identity (see the
+            # one-action-per-round note above) — neighbor_min IS the
+            # converged minimal labeling, already materialized by the sum.
             labels = neighbor_min
             converged = True
             break
@@ -814,6 +731,27 @@ def dedup_components_incremental(
     return updated_old.unionByName(new_labeled)
 
 
+def _probe_buckets(
+    emb: DataFrame, vec_col: str, num_planes: int, n_probes: int
+) -> Column:
+    """``(seed, bucket)`` rows, one per probe: the posexplode of the
+    ``n_probes`` sign-LSH buckets of ``vec_col`` under seeds
+    ``0..n_probes-1``. The plane weights are plan literals sized by a
+    memoized 1-row dim probe: bit-identical buckets, and the per-row cost
+    drops from planes·d md5 hashes to plain multiplications."""
+    from inbev_data_engineering_case_spark.operators.similarity import (
+        _vec_dim,
+        signlsh_bucket,
+    )
+
+    dim = _vec_dim(emb, vec_col)
+    buckets = [
+        signlsh_bucket(vec_col, num_planes, seed=seed, dim=dim)
+        for seed in range(n_probes)
+    ]
+    return F.posexplode(F.array(*buckets)).alias("seed", "bucket")
+
+
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.9,
@@ -829,74 +767,33 @@ def embedding_near_dup_pairs(
     same side of most hyperplanes.
 
     ``n_probes > 1`` raises recall at proportional cost: the corpus is
-    re-bucketed under additional independent hyperplane seeds, candidate
-    pairs are unioned and deduplicated — a pair missed by one bucketing
-    (a near-zero hyperplane dot flips a bit) is almost surely caught by
-    another.
+    re-bucketed under additional independent hyperplane seeds, stacked
+    under a ``seed`` bucket column so every probe shares one cut, one
+    hot-bucket probe and one bucket join, and the pairs are deduplicated
+    across probes — a pair missed by one bucketing (a near-zero
+    hyperplane dot flips a bit) is almost surely caught by another.
 
-    The hot-bucket guard (``_split_hot_buckets``):
-    embedding collapse (many identical vectors — e.g. an encoder's output
-    for empty/boilerplate inputs) concentrates one bucket; above the cap
-    the bucket star-links to its min-id representative with the same
-    cosine ≥ threshold verify."""
+    Hot buckets (``_bucket_pairs``): embedding collapse (many identical
+    vectors — e.g. an encoder's output for empty/boilerplate inputs)
+    concentrates one bucket; above the cap the bucket star-links to its
+    min-id representative with the same cosine ≥ threshold verify."""
     from inbev_data_engineering_case_spark.functions import cosine
-    from inbev_data_engineering_case_spark.operators.similarity import (
-        _vec_dim,
-        signlsh_bucket,
-    )
 
-    base = _ensure_parallelism(emb)
-    # literal plane weights via a 1-row dim probe (r15): bit-identical
-    # buckets, per-row cost drops from planes·d md5 hashes to plain
-    # multiplications
-    dim = _vec_dim(emb, vec_col)
-    per_probe = []
-    for seed in range(n_probes):
-        sigs = materialize(
-            base.select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).alias("v"),
-                signlsh_bucket(
-                    vec_col, num_planes, seed=seed, dim=dim
-                ).alias("bucket"),
-            ),
-            eager=False,
-        )
-        cold, hot = _split_hot_buckets(sigs, ["bucket"])
-        a, b = cold.alias("a"), cold.alias("b")
-        sim = F.round(cosine(F.col("a.v"), F.col("b.v")), 6)
-        probe = a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            sim.alias("sim"),
-        )
-        if hot is not None:
-            reps = hot.groupBy("bucket").agg(
-                F.min("id").alias("rep_id"),
-                F.min_by("v", "id").alias("rep_v"),
-            )
-            star_sim = F.round(cosine(F.col("rep_v"), F.col("v")), 6)
-            star = (
-                hot.join(reps, ["bucket"])
-                .filter(F.col("id") != F.col("rep_id"))
-                .select(
-                    F.col("rep_id").alias("id_a"),
-                    F.col("id").alias("id_b"),
-                    star_sim.alias("sim"),
-                )
-            )
-            probe = probe.unionByName(star)
-        per_probe.append(probe)
-    pairs = per_probe[0]
-    for p in per_probe[1:]:
-        pairs = pairs.unionByName(p)
-    if n_probes > 1:
-        pairs = pairs.distinct()  # sim is identical across probes
-    return pairs.filter(F.col("sim") >= threshold)
+    rows = materialize(
+        _ensure_parallelism(emb).select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("v"),
+            _probe_buckets(emb, vec_col, num_planes, n_probes),
+        ),
+        eager=False,
+    )
+    pairs = _bucket_pairs(
+        rows,
+        ["seed", "bucket"],
+        F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("sim"),
+        F.col("sim") >= threshold,
+    )
+    return pairs.distinct() if n_probes > 1 else pairs
 
 
 def _geometry_guarded(df, expected: dict[str, int], carrier: str, op: str):
@@ -943,46 +840,6 @@ def _geometry_guarded(df, expected: dict[str, int], carrier: str, op: str):
     )
 
 
-def _delta_star_links(
-    hot, new_ids, value_col: str | None = None, measure=None,
-    out_name: str | None = None,
-):
-    """Star links of COMBINED-population hot buckets that touch a new
-    row — the shared hot-bucket tail of the incremental simhash and
-    embedding twins. The representative is the combined min id (so a
-    bucket that goes hot only with the delta splits exactly as the
-    full recompute would), and "touches new" is an OR over two ids —
-    expressed as two equi left-joins against a marker frame, never an
-    OR-condition join (which would plan as a nested loop).
-    ``measure(rep_val, val)`` over ``value_col`` produces the emitted
-    similarity/distance column named ``out_name``; without a
-    ``value_col`` the links are id-only ``(id_a, id_b)``."""
-    aggs = [F.min("id").alias("rep_id")]
-    out = [F.col("rep_id").alias("id_a"), F.col("id").alias("id_b")]
-    if value_col is not None:
-        aggs.append(F.min_by(value_col, "id").alias("_rep_val"))
-        out.append(
-            measure(F.col("_rep_val"), F.col(value_col)).alias(out_name)
-        )
-    reps = hot.groupBy("bucket").agg(*aggs)
-    marks = new_ids.withColumn("_new", F.lit(True))
-    hot_m = hot.join(marks, "id", "left").withColumnRenamed(
-        "_new", "_member_new"
-    )
-    reps_m = reps.join(
-        marks.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-    ).withColumnRenamed("_new", "_rep_new")
-    return (
-        hot_m.join(reps_m, ["bucket"])
-        .filter(F.col("id") != F.col("rep_id"))
-        .filter(
-            F.col("_member_new").isNotNull()
-            | F.col("_rep_new").isNotNull()
-        )
-        .select(*out)
-    )
-
-
 def build_embedding_sig_tables_normalized(
     emb: DataFrame,
     num_planes: int = 8,
@@ -1008,30 +865,15 @@ def build_embedding_sig_tables_normalized(
     ~``n_probes``× as probes grow. Persist the bucket table bucketed by
     ``(seed, bucket)`` at scale so the daily delta join is
     bucket-local."""
-    from inbev_data_engineering_case_spark.operators.similarity import (
-        _vec_dim,
-        signlsh_bucket,
-    )
-
     vectors = emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     )
-    dim = _vec_dim(emb, vec_col)  # literal plane weights (r15)
-    per = [
-        emb.select(
-            F.lit(seed).alias("seed"),
-            F.col(id_col).alias("id"),
-            signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
-            ).alias("bucket"),
-            F.lit(num_planes).alias("num_planes"),
-            F.lit(n_probes).alias("n_probes"),
-        )
-        for seed in range(n_probes)
-    ]
-    buckets = per[0]
-    for p in per[1:]:
-        buckets = buckets.unionByName(p)
+    buckets = emb.select(
+        F.col(id_col).alias("id"),
+        _probe_buckets(emb, vec_col, num_planes, n_probes),
+        F.lit(num_planes).alias("num_planes"),
+        F.lit(n_probes).alias("n_probes"),
+    ).select("seed", "id", "bucket", "num_planes", "n_probes")
     return vectors, buckets
 
 
@@ -1061,15 +903,13 @@ def incremental_embedding_near_dup_normalized(
     vector are the full batch's new-free rows and are excluded by
     definition).
 
-    Candidates form on 16-byte ``(id, bucket)`` rows per probe, dedup
-    across probes id-only, and the ``(id, v)`` table joins in exactly
-    twice (side a, side b) for the surviving pairs. Measured on the
-    sf0.1 embeddings fixture at n_probes=3 (UI REST stage metrics):
-    5.1 MB shuffle-written by a plan that carries the vector through
-    every per-seed bucket exchange vs ~0.04 MB here (~120× less) — at
-    this candidate count the deferred id-keyed vector joins broadcast
-    instead of shuffling at all; at cluster scale they are two
-    exchanges whose pair side is candidate-sized.
+    Candidates form in ``_bucket_pairs``' delta mode on ``(seed, id,
+    bucket)`` rows, every probe stacked under the ``seed`` bucket column
+    (one cut, one hot-bucket probe), dedup across probes id-only, and
+    the ``(id, v)`` table joins in exactly twice (side a, side b) for
+    the surviving pairs: on the sf0.1 embeddings fixture at n_probes=3
+    a plan carrying the vector through the bucket exchange
+    shuffle-wrote 5.1 MB against ~0.04 MB here.
 
     Ids must be disjoint between stored and new (a re-embedded doc is
     delete + insert, ``curate_incremental``'s contract). A stored
@@ -1080,11 +920,10 @@ def incremental_embedding_near_dup_normalized(
     """
     from inbev_data_engineering_case_spark.functions import cosine
 
-    new_ids = new_emb.select(F.col(id_col).alias("id"))
-    new_vectors, new_b = build_embedding_sig_tables_normalized(
+    new_vectors, new_buckets = build_embedding_sig_tables_normalized(
         new_emb, num_planes, n_probes, id_col, vec_col
     )
-    stored_guarded = stored_buckets.select(
+    stored = stored_buckets.select(
         "seed",
         "id",
         _geometry_guarded(
@@ -1093,64 +932,31 @@ def incremental_embedding_near_dup_normalized(
             "bucket",
             "incremental_embedding_near_dup_normalized",
         ),
+        F.lit(False).alias("_new"),
     )
-    per_probe = []
-    for seed in range(n_probes):
-        rows = materialize(
-            stored_guarded.filter(F.col("seed") == seed)
-            .select("id", "bucket")
-            .unionByName(
-                new_b.filter(F.col("seed") == seed).select("id", "bucket")
-            ),
-            eager=False,
-        )
-        cold, hot = _split_hot_buckets(rows, ["bucket"])
-        new_cold = cold.join(new_ids, "id", "left_semi")
-        stored_cold = cold.join(new_ids, "id", "left_anti")
-        pair_cols = [
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-        ]
-        p1 = new_cold.alias("a").join(
-            cold.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(*pair_cols)
-        p2 = stored_cold.alias("a").join(
-            new_cold.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(*pair_cols)
-        probe = p1.unionByName(p2)
-        if hot is not None:
-            # id-only: the similarity is deferred to the vector join
-            star = _delta_star_links(hot, new_ids)
-            probe = probe.unionByName(star)
-        per_probe.append(probe)
-    pairs = per_probe[0]
-    for p in per_probe[1:]:
-        pairs = pairs.unionByName(p)
+    rows = materialize(
+        stored.unionByName(
+            new_buckets.select(
+                "seed", "id", "bucket", F.lit(True).alias("_new")
+            )
+        ),
+        eager=False,
+    )
+    # id-only: the similarity is deferred to the vector join
+    pairs = _bucket_pairs(rows, ["seed", "bucket"], delta=True)
     if n_probes > 1:
         # id-only dedup: sim is deterministic per pair, so deduping
         # before the vector join equals a post-sim distinct — minus
         # candidate-count × vector bytes
         pairs = pairs.distinct()
-    all_vecs = stored_vectors.unionByName(new_vectors)
-    sim = F.round(cosine(F.col("_va"), F.col("_vb")), 6)
+    vecs = stored_vectors.unionByName(new_vectors)
+    va = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("_va"))
+    vb = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("_vb"))
+    sim = F.round(cosine(F.col("_va"), F.col("_vb")), 6).alias("sim")
     return (
-        pairs.join(
-            all_vecs.select(
-                F.col("id").alias("id_a"), F.col("v").alias("_va")
-            ),
-            "id_a",
-        )
-        .join(
-            all_vecs.select(
-                F.col("id").alias("id_b"), F.col("v").alias("_vb")
-            ),
-            "id_b",
-        )
-        .select("id_a", "id_b", sim.alias("sim"))
+        pairs.join(va, "id_a")
+        .join(vb, "id_b")
+        .select("id_a", "id_b", sim)
         .filter(F.col("sim") >= threshold)
     )
 
@@ -1169,56 +975,22 @@ def simhash_near_pairs(
     Note the bucket prefilter trades recall for scale exactly like LSH
     banding: 8 bucket bits → 256-way candidate split at any ``bits``.
 
-    The hot-bucket guard (``_split_hot_buckets``):
-    identical templates concentrate in ONE SimHash bucket (their top bits
+    Candidates and hot buckets come from ``_bucket_pairs``: identical
+    templates concentrate in ONE SimHash bucket (their top bits
     are equal by construction); above the cap the bucket star-links to its
     min-id representative, with the same popcount ≤ max_hamming verify."""
-    hashed = _ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), token_hashes(text_col).alias("th")
-    )
     sigs = materialize(
-        hashed.select("id", simhash_from_hashes("th", bits).alias("sh"))
-        .withColumn("bucket", F.shiftright("sh", bits - bucket_bits)),
+        build_simhash_table(
+            _ensure_parallelism(df), text_col, id_col, bits, bucket_bits
+        ).select("id", "sh", "bucket"),
         eager=False,
     )
-    cold, hot = _split_hot_buckets(sigs, ["bucket"])
-    a, b = cold.alias("a"), cold.alias("b")
-    hamming = F.bit_count(
-        F.col("a.sh").bitwiseXOR(F.col("b.sh"))
+    return _bucket_pairs(
+        sigs,
+        ["bucket"],
+        F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
+        F.col("hamming") <= max_hamming,
     )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(hamming <= max_hamming)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-    )
-    if hot is not None:
-        reps = hot.groupBy("bucket").agg(
-            F.min("id").alias("rep_id"),
-            F.min_by("sh", "id").alias("rep_sh"),
-        )
-        star_hamming = F.bit_count(
-            F.col("rep_sh").bitwiseXOR(F.col("sh"))
-        )
-        star = (
-            hot.join(reps, ["bucket"])
-            .filter(F.col("id") != F.col("rep_id"))
-            .filter(star_hamming <= max_hamming)
-            .select(
-                F.col("rep_id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                star_hamming.alias("hamming"),
-            )
-        )
-        pairs = pairs.unionByName(star)
-    return pairs
 
 
 def build_simhash_table(
@@ -1264,7 +1036,8 @@ def incremental_simhash_near_pairs(
 
     Returns exactly the ``simhash_near_pairs(stored ∪ new)`` rows in
     which at least one side is new (full-batch parity,
-    identity-tested): the hot-bucket guard and min-id star
+    identity-tested): ``_bucket_pairs``' delta mode forms only pairs
+    that touch a new row, and its hot-bucket guard and min-id star
     representative evaluate over the COMBINED bucket population, so a
     bucket that goes hot only once the crawl lands splits precisely
     as the full recompute would. Ids must be disjoint between stored
@@ -1273,13 +1046,7 @@ def incremental_simhash_near_pairs(
     geometry columns ride the state): a silent mismatch would shift
     every stored bucket and lose recall without any error.
     """
-    new_sigs = materialize(
-        build_simhash_table(
-            new_docs, text_col, id_col, bits, bucket_bits
-        ).select("id", "sh", "bucket"),
-        eager=False,
-    )
-    stored_guarded = stored_sigs.select(
+    stored = stored_sigs.select(
         "id",
         _geometry_guarded(
             stored_sigs,
@@ -1288,51 +1055,18 @@ def incremental_simhash_near_pairs(
             "incremental_simhash_near_pairs",
         ),
         "bucket",
+        F.lit(False).alias("_new"),
     )
-    sigs = materialize(
-        stored_guarded.select("id", "sh", "bucket").unionByName(new_sigs),
-        eager=False,
+    new = build_simhash_table(
+        new_docs, text_col, id_col, bits, bucket_bits
+    ).select("id", "sh", "bucket", F.lit(True).alias("_new"))
+    return _bucket_pairs(
+        materialize(stored.unionByName(new), eager=False),
+        ["bucket"],
+        F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"),
+        F.col("hamming") <= max_hamming,
+        delta=True,
     )
-    new_ids = new_docs.select(F.col(id_col).alias("id"))
-    cold, hot = _split_hot_buckets(sigs, ["bucket"])
-    new_cold = cold.join(new_ids, "id", "left_semi")
-    stored_cold = cold.join(new_ids, "id", "left_anti")
-    hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    pair_cols = [
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        hamming.alias("hamming"),
-    ]
-    cond = lambda: (  # noqa: E731
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") < F.col("b.id"))
-    )
-    # a new (covers new-new and new<stored), then stored<new — the
-    # incremental direction split: no pair double-counts, no
-    # stored-stored candidate ever forms
-    p1 = (
-        new_cold.alias("a")
-        .join(cold.alias("b"), cond())
-        .filter(hamming <= max_hamming)
-        .select(*pair_cols)
-    )
-    p2 = (
-        stored_cold.alias("a")
-        .join(new_cold.alias("b"), cond())
-        .filter(hamming <= max_hamming)
-        .select(*pair_cols)
-    )
-    pairs = p1.unionByName(p2)
-    if hot is not None:
-        star = _delta_star_links(
-            hot,
-            new_ids,
-            "sh",
-            lambda r, s: F.bit_count(r.bitwiseXOR(s)),
-            "hamming",
-        ).filter(F.col("hamming") <= max_hamming)
-        pairs = pairs.unionByName(star)
-    return pairs
 
 
 def dedup_spans(
@@ -1477,7 +1211,7 @@ def build_gram_table(
     # the gram pass is compute-bound per row (tokenize → windows → md5
     # per gram) — inherit the signature stages' parallelism guard so a
     # 1-2-split input file doesn't pin it to 1-2 cores (no-op at
-    # cluster scan sizes; r15 optimization round, guide §2).
+    # cluster scan sizes).
     # ``parallelism_guard=False`` is for DELTA callers
     # (incremental_containment_pairs): a daily-crawl fragment filtered
     # out of a big table looks like the full scan to the file-metadata
@@ -1706,7 +1440,7 @@ def containment_pairs(
         # sides) — materialize it once so the hot-gram aggregation and
         # the anti-join run a single time instead of once per consumer
         # (measured 3 duplicate hot-count+anti subtrees in the executed
-        # plan before this; r15 optimization round). The anti-join
+        # plan without the cut). The anti-join
         # shape itself lives in _informative_grams so the plan locks
         # can still assert it (materialization replaces the subtree
         # with an RDD scan in the final plan).

@@ -60,53 +60,6 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_pair):
 
 
 @pytest.mark.slow
-def test_bucketed_signature_table_verify_join(spark):
-    """DEPLOYMENT.md's signature-table claim, concretely: minhash
-    signatures materialized as a table BUCKETED BY id mean the recurring
-    verify-join (candidate pairs back onto signatures) needs no exchange
-    on the signature side — only the (small) pair side shuffles into the
-    bucket layout. At 100 TB the signature table is the big side; its
-    shuffle is the one worth deleting."""
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.operators.dedup import (
-        minhash_signatures,
-        signature_similarity,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sigs = minhash_signatures(docs)
-    spark.sql("DROP TABLE IF EXISTS t_sigs_b")
-    (
-        sigs.write.bucketBy(8, "id")
-        .sortBy("id")
-        .format("parquet")
-        .mode("overwrite")
-        .saveAsTable("t_sigs_b")
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        stored = spark.table("t_sigs_b")
-        pairs = spark.createDataFrame(
-            [(1, 2), (3, 4), (10, 11)], ["id_a", "id_b"]
-        )
-        sim = signature_similarity(pairs, stored)
-        plan = sim._jdf.queryExecution().executedPlan().toString()
-        # the signature scans carry their bucket layout: no Exchange may
-        # feed a scan of t_sigs_b (the pair side is allowed to shuffle)
-        for section in plan.split("FileScan")[1:]:
-            head = section.splitlines()[0]
-            assert "Bucketed: true" in head or "t_sigs_b" not in head, head
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        assert n_exchanges <= 2, plan  # only the tiny pair side, per join
-        assert sim.count() == 3
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_sigs_b")
-
-
-@pytest.mark.slow
 def test_bloom_semi_join_identity_and_no_false_negatives(spark):
     """bloom_semi_join must be EXACTLY the plain left-semi join (false
     positives die in the real join), the prefilter must be a superset

@@ -188,8 +188,6 @@ def test_every_package_module_is_reachable():
 # the next deletion candidates. The set may only shrink.
 _KNOWN_UNREACHED = {
     "layers.snapshot_as_of",
-    "operators.dedup.signature_similarity",
-    "operators.dedup.word_shingle_set",
     "operators.sample.mixture_budgets",
     "operators.scd._changed",
     "operators.scd.scd2_merge",
@@ -238,9 +236,6 @@ _KNOWN_UNPASSED = {
     "operators.curate.incremental_leakage_split.max_iter",
     "operators.curate.incremental_leakage_split.salt",
     "operators.curate.incremental_leakage_split.weights",
-    "operators.curate.incremental_minhash_pairs.band_size",
-    "operators.curate.incremental_minhash_pairs.num_hashes",
-    "operators.curate.incremental_minhash_pairs.shingle_words",
     "operators.curate.leakage_safe_split.buckets",
     "operators.curate.leakage_safe_split.max_iter",
     "operators.curate.leakage_safe_split.salt",

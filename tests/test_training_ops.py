@@ -601,6 +601,35 @@ def test_vec_dim_memo_tracks_a_rewritten_path(spark, tmp_path):
     assert _vec_dim(spark.read.parquet(path), "embedding") == 5
 
 
+def test_vec_dim_memo_tracks_a_same_name_rewrite(spark, tmp_path):
+    """The dim memo must not survive a rewrite that keeps the data file's
+    NAME: the plans and the input file lists are equal, so only the
+    file's size and mtime tell the 5-dim part file from the 3-dim one."""
+    import os
+    import shutil
+
+    from inbev_data_engineering_case_spark.operators.similarity import (
+        _vec_dim,
+    )
+
+    def write(path: str, dim: int) -> str:
+        spark.createDataFrame(
+            [(j, [float(j + i) for i in range(dim)]) for j in range(4)],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+        (part,) = [n for n in os.listdir(path) if n.startswith("part-")]
+        return part
+
+    path, other = str(tmp_path / "vecs"), str(tmp_path / "other")
+    part = write(path, 3)
+    assert _vec_dim(spark.read.parquet(path), "embedding") == 3
+    shutil.copyfile(
+        os.path.join(other, write(other, 5)), os.path.join(path, part)
+    )
+    os.remove(os.path.join(path, f".{part}.crc"))
+    assert _vec_dim(spark.read.parquet(path), "embedding") == 5
+
+
 def test_ann_multiprobe_provably_adds_known_neighbor(spark):
     """Deterministic synthetic fixture where the second probe PROVABLY
     contributes: a neighbor in a different seed-0 bucket than the query
@@ -787,11 +816,20 @@ def test_minhash_signatures_expr_parity(spark):
         MH_RANGE,
         minhash_mixers,
         portable_hash64,
+        word_ngrams,
     )
     from inbev_data_engineering_case_spark.operators.dedup import (
         minhash_signatures,
-        word_shingle_set,
     )
+    from inbev_data_engineering_case_spark.operators.textops import (
+        normalize_for_fingerprint,
+    )
+
+    def word_shingle_set(text_col, n):
+        # distinct word n-gram shingles of the normalized text
+        return F.array_distinct(
+            word_ngrams(normalize_for_fingerprint(text_col), n)
+        )
 
     def column_form(df, text_col="text", id_col="doc_id", num_hashes=8,
                     shingle_words=3):
@@ -3748,6 +3786,59 @@ def test_incremental_simhash_full_batch_parity(spark, monkeypatch):
             )
         )
         assert got == want and got, (cap, kw)
+
+
+def test_incremental_minhash_full_batch_parity(spark, monkeypatch):
+    """incremental_minhash_pairs(new crawl, stored signatures) must
+    return EXACTLY the minhash_dedup_pairs(stored ∪ new) rows involving
+    a new document — including when identical templates flood every
+    band bucket past the hot cap only once the delta lands (the
+    combined-population guard star-links them to the combined min id
+    instead of pairing them all-against-all)."""
+    from inbev_data_engineering_case_spark.operators.curate import (
+        incremental_minhash_pairs,
+    )
+    from inbev_data_engineering_case_spark.operators.dedup import (
+        minhash_signatures,
+    )
+
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    near = docs.filter(F.col("doc_id") % 4 == 0).select(
+        (F.col("doc_id") + 200000).alias("doc_id"),
+        F.concat("text", F.lit(" the end")).alias("text"),
+    )
+    # identical templates: same text → same signature → same band keys
+    flood = spark.range(300000, 300015).select(
+        F.col("id").alias("doc_id"),
+        F.lit("the very same template text repeated verbatim").alias(
+            "text"
+        ),
+    )
+    new = near.unionByName(flood)
+    for cap in (8, DEFAULT_MAX_BUCKET_SIZE):
+        monkeypatch.setattr(_CAP, cap)
+        full = minhash_dedup_pairs(docs.unionByName(new))
+        want = sorted(
+            map(
+                tuple,
+                full.filter(
+                    (F.col("id_a") >= 200000) | (F.col("id_b") >= 200000)
+                ).collect(),
+            )
+        )
+        got = sorted(
+            map(
+                tuple,
+                incremental_minhash_pairs(
+                    new, minhash_signatures(docs)
+                ).collect(),
+            )
+        )
+        assert got == want and got, cap
 
 
 def test_incremental_state_geometry_guards_raise_in_plan(spark):
